@@ -432,8 +432,6 @@ def test_no_unbounded_driver_collect_in_package_source():
         ("operators/similarity.py", ".limit(max_queries + 1).collect()"),
         # maintained codebook state: n_cells x dim rows (16x64)
         ("streaming/codebook_maintenance.py", "bounded model state"),
-        # dedup-before-fetch candidate cap: one max() row
-        ("sources/http.py", 'F.max(F.size("candidates"))'),
         # CLI endpoints materialize small reports by design
         ("__main__.py", ".collect()"),
     ]
@@ -453,6 +451,34 @@ def test_no_unbounded_driver_collect_in_package_source():
     assert not offenders, (
         "unadjudicated .collect() in package source (bounded? add to the "
         f"allowlist with a justification): {offenders}")
+
+
+def test_resolve_offline_plan_two_kernels_broadcast_cache(spark):
+    """resolve_offline = assign(attach_candidates(nt), cache) keeps the plan
+    of the unsplit stage: exactly two Python kernels (qdict, ladder) and a
+    broadcast cache join on the query string. In the executed plan the
+    qdict kernel runs once (its window exchange is reused) and the ladder
+    kernel feeds both the probe branch and the join-back branch."""
+    import re
+
+    from wde_spark.plans.resolve import resolve_offline
+    from wde_spark.sources.cache import CACHE_SCHEMA
+
+    nt = spark.createDataFrame(
+        [("C1", 0, 0, "C1_e1", "ADANSON (Michel)", "botaniste. 1727-1806"),
+         ("C1", 1, 0, "C1_e2", "le même.", "")],
+        "catalogue_id string, item_pos int, row_pos int, xml_id string, "
+        "name string, trait string")
+    cache = spark.createDataFrame(
+        [("a", "adanson", "Q1", "t", "s", True)], CACHE_SCHEMA)
+    df = resolve_offline(nt, cache)
+    df.collect()  # finalize AQE
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    kernels = re.findall(r"MapInPandas (\w+)\(", plan)
+    assert sorted(set(kernels)) == ["_candidates_batch", "_qdict_batch"]
+    assert kernels.count("_qdict_batch") == 1
+    assert kernels.count("_candidates_batch") == 2
+    assert re.search(r"BroadcastHashJoin \[qstr#\d+\], \[qstr#\d+\]", plan)
 
 
 def test_segment_parallel_split_decode_stays_narrow(spark):

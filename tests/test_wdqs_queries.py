@@ -14,7 +14,7 @@ from wde_spark.sources.wdqs import config_queries
 
 REF = "/root/reference"
 
-pytestmark = pytest.mark.skipif(
+needs_reference = pytest.mark.skipif(
     not os.path.isdir(os.path.join(REF, "script")),
     reason="reference tree not available")
 
@@ -35,6 +35,7 @@ def ref_sparql():
     sys.path.remove(REF)
 
 
+@needs_reference
 def test_config_queries_match_reference(ref_sparql):
     for qid in ("Q535", "Q42"):
         captured: list[str] = []
@@ -56,14 +57,18 @@ def test_reference_bugs_reproduced():
     assert "wdt:P570 ?deathplace" in q1       # death-date property kept
 
 
-def test_enrich_live_offline_replay(spark):
+def test_enrich_live_offline_replay(spark, tmp_path):
     """enrich_live over a canned fetcher: the 4-query grid is fetched per
-    QID, resume-filtered, and normalized into the enrichment store."""
-    import json as _json
-
+    QID, resume-filtered, and normalized into the enrichment store. Each
+    query is sent exactly once: 4 fetcher calls per new QID, counted
+    through a log file (the fetcher runs in Python worker processes)."""
     from wde_spark.sources.wdqs import enrich_live
 
+    log_path = str(tmp_path / "sparql.log")
+
     def fake_fetch(query: str) -> dict:
+        with open(log_path, "a", encoding="utf-8") as fh:
+            fh.write(" ".join(query.split()) + "\n")
         # echo a single binding naming which query index ran, derived from a
         # var unique to each query text
         marker = ("instance" if "?instance" in query else
@@ -81,3 +86,8 @@ def test_enrich_live_offline_replay(spark):
         m = dict(r.enrichment)
         assert m == {"instance": ["v-instance"], "educ": ["v-educ"],
                      "title": ["v-title"], "viafID": ["v-viafID"]}
+    with open(log_path, encoding="utf-8") as fh:
+        sent = fh.read().splitlines()
+    want = [" ".join(q.split()) for qid in ("Q1", "Q2")
+            for q in config_queries(qid)]
+    assert sorted(sent) == sorted(want)

@@ -15,6 +15,8 @@ chosen to also be the right default on a real cluster:
   which Spark's vectorized parquet reader refuses by default; the catalog
   converts the raw long back to a microsecond timestamp (matching DuckDB's
   own ns→µs truncation).
+- driver heap capped at half the host's RAM (`default_driver_memory`), so a
+  long-lived session is not OOM-killed on a small host.
 """
 
 from __future__ import annotations
@@ -22,6 +24,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """48g, or half the host's physical memory if that is less. G1 grows
+    the heap toward its maximum instead of collecting, and a long-lived
+    session's heap that reaches the host's RAM gets the JVM killed by the
+    kernel's OOM killer; the other half is left for off-heap buffers and
+    the Python workers."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{max(1024, min(48 * 1024, phys // 2**21))}m"
 
 
 def get_session(
@@ -45,7 +60,8 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

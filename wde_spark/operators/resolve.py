@@ -15,15 +15,12 @@ per row*, so
     4. keep the best-ranked hit per row with a row_number window.
 
 Two shuffles total for the whole corpus, instead of |corpus| × |ladder|
-sequential probes. For live-API mode, `iterative_resolve` preserves the
-reference's early-exit economy: resolve rank-0 candidates for everyone,
-anti-join the hits, try rank-1 for the misses, ... — each wave is one batch
-join, and no row issues a candidate later than its first hit.
+sequential probes. Live-API mode keeps the reference's early-exit economy
+instead (no row fetches a candidate later than its first hit); its wave
+loop is sources/http.resolve_live.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -52,31 +49,6 @@ def resolve_ladder(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def iterative_resolve(
-    rows: DataFrame,
-    candidates_col: Column,
-    probe: Callable[[DataFrame], DataFrame],
-    row_key: str,
-    max_rank: int,
-) -> DataFrame:
-    """Live-mode ladder: wave r probes only rows unresolved after wave r-1.
-    `probe` maps a DataFrame with a `candidate` column to the subset that
-    hit (same column + result columns) — e.g. an HTTP mapPartitions batch.
-    Preserves the reference's early-exit API economy while still batching
-    every wave."""
-    cand = rows.select(
-        F.col(row_key), F.posexplode(candidates_col).alias("rank", "candidate")
-    )
-    resolved = None
-    for r in range(max_rank):
-        wave = cand.filter(F.col("rank") == r)
-        if resolved is not None:
-            wave = wave.join(resolved.select(row_key), row_key, "left_anti")
-        hits = probe(wave)
-        resolved = hits if resolved is None else resolved.unionByName(hits)
-    return resolved
 
 
 def certitude(matched_params: Column, has_date: Column) -> Column:

@@ -15,8 +15,10 @@ loop with (SURVEY.md §2.8, §4):
 
 Two shuffles total (cache join + rank window) for the entire corpus vs
 |corpus| × |ladder| sequential probes. The cache is broadcast when small.
-Live-API mode reuses operators/resolve.iterative_resolve at the same spot
-the cache join sits; everything else is unchanged.
+The plan is `assign(attach_candidates(nametable), cache)`. Live-API mode
+(sources/http.resolve_live) runs the same two halves and fills the cache
+between them: its wave loop fetches each missing rung once, then `assign`
+computes the final answer over the merged cache.
 """
 
 from __future__ import annotations
@@ -108,19 +110,12 @@ def attach_qdicts(nametable: DataFrame) -> DataFrame:
     return out.drop("__q")
 
 
-def resolve_offline(nametable: DataFrame, cache: DataFrame,
-                    broadcast_cache: bool = True,
-                    certitude_source: str = "cache") -> DataFrame:
-    """Offline stage `-i`: every ladder candidate joins the cache table at
-    once; the best-ranked hit per row wins (J2 + W2). Returns the 7-column
-    nametable_out (S4 shape, itemtoid.py:331-333) plus ordering columns.
-
-    certitude_source: 'cache' replays the certitude recorded when the
-    query was originally fetched (byte-parity with the reference's cache
-    files); 'computed' rescores with Q3 from this run's qdict — required in
-    live mode, where fresh fetches carry no recorded certitude."""
+def attach_candidates(nametable: DataFrame) -> DataFrame:
+    """qdict per row, the `le même` carry-forward and the ladder kernel:
+    the nametable plus `candidates` (the ladder, in probe order) and
+    `cand_certs` (Q3 certitude of each rung)."""
     qd = attach_qdicts(nametable)
-    with_cands = qd.mapInPandas(
+    return qd.mapInPandas(
         _candidates_batch,
         schema=T.StructType(
             list(qd.schema.fields)
@@ -129,6 +124,27 @@ def resolve_offline(nametable: DataFrame, cache: DataFrame,
         ),
     )
 
+
+def resolve_offline(nametable: DataFrame, cache: DataFrame,
+                    broadcast_cache: bool = True,
+                    certitude_source: str = "cache") -> DataFrame:
+    """Offline stage `-i`: every ladder candidate joins the cache table at
+    once; the best-ranked hit per row wins (J2 + W2). Returns the 7-column
+    nametable_out (S4 shape, itemtoid.py:331-333) plus ordering columns.
+    `certitude_source` as in `assign`."""
+    return assign(attach_candidates(nametable), cache, broadcast_cache,
+                  certitude_source)
+
+
+def assign(with_cands: DataFrame, cache: DataFrame,
+           broadcast_cache: bool = True,
+           certitude_source: str = "cache") -> DataFrame:
+    """The cache join and best-rank window over `attach_candidates` rows.
+
+    certitude_source: 'cache' replays the certitude recorded when the
+    query was originally fetched (byte-parity with the reference's cache
+    files); 'computed' rescores with Q3 from this run's qdict — required in
+    live mode, where fresh fetches carry no recorded certitude."""
     key = ["catalogue_id", "item_pos", "row_pos"]
     cand = with_cands.select(
         *key, F.posexplode("candidates").alias("rank", "qstr")

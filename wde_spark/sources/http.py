@@ -6,17 +6,21 @@ list=search&srlimit=1, gzip, custom UA, certitude scoring) and
 script/sparql.py:19-92 (SPARQLWrapper against query.wikidata.org, JSON with
 XML fallback).
 
-Spark shape (SURVEY.md §2.10): the network boundary is a `mapPartitions`
-client —
-- queries are **deduplicated and cache-anti-joined before any fetch**
-  (strictly better than the reference, which memoizes but never batches);
-- one HTTP session per partition, reused across rows, with a politeness
-  delay (API etiquette) — parallelism is capped by partition count, so
-  `repartition(n_workers)` IS the rate limiter;
-- every fetched row comes back as a normal DataFrame row and is merged
-  into the cache table (sources/cache.upsert), so a re-run touches the
-  network only for misses (the reference's resume semantics, P1, with no
-  log files).
+Spark shape (SURVEY.md §2.10) of live resolution (`resolve_live`):
+- the ladders are computed once; one query annotates each distinct ladder
+  with the cache state of every rung (broadcast cache join);
+- ONE `mapInPandas` task runs the whole wave loop over those ladders. A
+  wave's fetch set depends on what every ladder found in earlier waves, and
+  fetching each query once needs dedup across the corpus, so the loop has
+  one coordinator; it runs in an executor, so no ladder or cache row is
+  collected, and costs a fixed number of Spark jobs however many waves it
+  runs;
+- each wave fetches its distinct misses on `n_workers` threads, each call
+  paying the fetcher's politeness delay (API etiquette) — `n_workers` IS
+  the rate limiter;
+- the task emits only the fetched rows, which are merged into the cache
+  table (sources/cache.upsert) once, so a re-run touches the network only
+  for misses (the reference's resume semantics, P1, with no log files).
 
 Offline by default: tests and the driver environment have no network;
 `fetch_fn` is injectable, and `offline_fetcher` replays from a cache
@@ -26,12 +30,13 @@ table. The stdlib `urllib` client is used (no third-party HTTP dep).
 from __future__ import annotations
 
 import json
+import sys
 import time
 import urllib.parse
 import urllib.request
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cache import CACHE_SCHEMA
@@ -104,82 +109,81 @@ def offline_fetcher(cache_rows: dict[str, tuple]) -> FetchFn:
     return fetch
 
 
-def fetch_search_results(queries: DataFrame, fetch_fn: FetchFn,
-                         qstr_col: str = "qstr",
-                         n_workers: int = 4) -> DataFrame:
-    """Fetch search results for every *distinct* query string, from
-    `n_workers` concurrent partitions (the parallelism/politeness knob).
-    Returns rows in the cache-table schema, certitude left false — score
-    it with functions.classify.certitude against the query's qdict."""
-    distinct = queries.select(qstr_col).distinct().repartition(n_workers)
+def _wave_loop(fetch_fn: FetchFn, n_workers: int):
+    """mapInPandas kernel over (candidates, cached) ladder rows, all in one
+    task: wave r takes rung r of every ladder not yet retired, fetches the
+    distinct rungs no cache entry or earlier wave answered, and retires the
+    ladders whose rung r is a non-empty hit. Yields the fetched rows in
+    the cache-table schema, certitude false (rescored by the caller)."""
+    from concurrent.futures import ThreadPoolExecutor
 
-    def work(rows: Iterator[Row]) -> Iterator[Row]:
-        for r in rows:
-            qstr = r[qstr_col]
-            out = fetch_fn(qstr)
-            yield Row(part=qstr[:1], qstr=qstr, qid=out["qid"],
-                      title=out["title"], snippet=out["snippet"], cert=False)
+    import pandas as pd
 
-    return queries.sparkSession.createDataFrame(
-        distinct.rdd.mapPartitions(work), CACHE_SCHEMA)
+    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ladders, known = [], {}
+        for pdf in it:
+            ladders.extend(pdf["candidates"])
+            for cached in pdf["cached"]:
+                for c in cached:
+                    known[c["qstr"]] = known.get(c["qstr"], False) or c["hit"]
+        # A fetch thread gives up the interpreter only where it blocks
+        # (network, politeness sleep), never preemptively, so a fetcher's
+        # own Python state (counters, accumulators) needs no lock.
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1000.0)
+        try:
+            with ThreadPoolExecutor(max_workers=n_workers) as pool:
+                rank = 0
+                while ladders:
+                    misses = sorted({ld[rank] for ld in ladders}
+                                    - known.keys())
+                    out = list(pool.map(fetch_fn, misses))
+                    for qstr, o in zip(misses, out):
+                        known[qstr] = o["qid"] != ""
+                    if misses:
+                        yield pd.DataFrame(
+                            out, columns=["qid", "title", "snippet"]).assign(
+                            part=[q[:1] for q in misses], qstr=misses,
+                            cert=False)
+                    rank += 1
+                    ladders = [ld for ld in ladders
+                               if len(ld) > rank and not known[ld[rank - 1]]]
+        finally:
+            sys.setswitchinterval(interval)
+
+    return kernel
 
 
 def resolve_live(nametable: DataFrame, cache: DataFrame,
-                 fetch_fn: FetchFn, max_waves: int | None = None,
+                 fetch_fn: FetchFn,
                  n_workers: int = 4) -> tuple[DataFrame, DataFrame]:
     """Live stage `-i`: wave-by-wave ladder descent preserving the
-    reference's early-exit API economy (SURVEY.md §4) —
+    reference's early-exit API economy (SURVEY.md §4) — wave r tries the
+    rank-r candidate of every row still unresolved, cache first, then one
+    deduplicated fetch of the misses; hits (qid != '') retire their row.
+    No query is fetched twice and no row fetches a candidate later than its
+    first hit. A failed loop task re-runs the whole loop.
 
-        wave r: rows still unresolved try their rank-r candidate:
-                cache join first, then ONE batched fetch for the misses;
-                hits (qid != '') retire their row.
-
-    Each wave is a join + an anti-join + a bounded fetch; no row ever
-    fetches a candidate later than its first hit. Returns
-    (resolved DataFrame in nametable_out shape, updated cache table)."""
-    from ..plans.resolve import attach_qdicts, resolve_offline
+    Returns (resolved DataFrame in nametable_out shape, updated cache
+    table)."""
+    from ..plans.resolve import assign, attach_candidates
     from .cache import upsert
 
-    qd = attach_qdicts(nametable)
-    from ..plans.resolve import _candidates_batch  # same kernel as offline
-    from pyspark.sql import types as T
-
-    with_cands = qd.mapInPandas(
-        _candidates_batch,
-        schema=T.StructType(
-            list(qd.schema.fields)
-            + [T.StructField("candidates", T.ArrayType(T.StringType())),
-               T.StructField("cand_certs", T.ArrayType(T.BooleanType()))]),
+    cands = attach_candidates(nametable).localCheckpoint(eager=True)
+    state = cache.select(
+        "qstr", (F.coalesce("qid", F.lit("")) != "").alias("hit"))
+    annotated = (
+        cands.select("candidates").filter(F.size("candidates") > 0)
+        .distinct()
+        .select("candidates", F.explode("candidates").alias("qstr"))
+        .join(F.broadcast(state), "qstr", "left")
+        .groupBy("candidates")
+        .agg(F.collect_list(F.when(F.col("hit").isNotNull(),
+                                   F.struct("qstr", "hit"))).alias("cached"))
     )
-    n_ranks = max_waves or (with_cands.agg(
-        F.max(F.size("candidates"))).collect()[0][0] or 0)
-
-    key = ["catalogue_id", "item_pos", "row_pos"]
-    remaining = with_cands.select(*key, "candidates")
-    cur_cache = cache
-    for rank in range(n_ranks):
-        wave = (
-            remaining.select(
-                *key,
-                F.try_element_at("candidates", F.lit(rank + 1)).alias("qstr"))
-            .filter(F.col("qstr").isNotNull())
-        )
-        misses = (
-            wave.select("qstr").distinct()
-            .join(cur_cache.select("qstr"), "qstr", "left_anti")
-        )
-        fetched = fetch_search_results(misses, fetch_fn, n_workers=n_workers)
-        # localCheckpoint: the loop would otherwise stack one join lineage
-        # per wave onto every later plan
-        cur_cache = upsert(cur_cache, fetched).localCheckpoint(eager=True)
-        hits = wave.join(cur_cache.filter(F.col("qid") != ""), "qstr") \
-            .select(*key)
-        remaining = remaining.join(hits, key, "left_anti") \
-            .localCheckpoint(eager=True)
-        if remaining.isEmpty():
-            break
-    # with the cache now covering every candidate any unresolved row can
-    # reach, the offline plan computes the final assignment in one pass;
-    # certitude is rescored (fresh fetches carry no recorded certitude)
-    return resolve_offline(nametable, cur_cache,
-                           certitude_source="computed"), cur_cache
+    fetched = annotated.coalesce(1).mapInPandas(
+        _wave_loop(fetch_fn, n_workers), CACHE_SCHEMA,
+    ).localCheckpoint(eager=True)
+    new_cache = upsert(cache, fetched)
+    # certitude is rescored: fresh fetches carry no recorded certitude
+    return assign(cands, new_cache, certitude_source="computed"), new_cache

@@ -181,5 +181,8 @@ def enrich_live(qids: DataFrame, fetch_fn: FetchFn,
     if done is not None:
         todo = todo.join(done.select(F.col(qid_col).alias("qid")),
                          "qid", "left_anti")
-    raw = fetch_enrichment(todo, fetch_fn, n_workers=n_workers)
+    # enrich_offline scans its input twice (values and var universe):
+    # materialize the fetched documents once so each query is sent once
+    raw = fetch_enrichment(todo, fetch_fn, n_workers=n_workers) \
+        .localCheckpoint(eager=True)
     return enrich_offline(raw)
