@@ -83,40 +83,6 @@ def test_pq_adc_topk_agrees_with_pq_ann_candidates(spark):
     assert adc == viaann and len(adc) == 5
 
 
-def test_pq_bootstrap_crash_redo(spark, tmp_path):
-    """A crash between writing codebooks.json and completing the v0 codes
-    parquet must not poison the index: restart sees no v0 _SUCCESS marker,
-    redoes the deterministic bootstrap (overwriting the stale codebook),
-    and the maintained index still matches the batch encode."""
-    import json as _json
-
-    init = spark.createDataFrame(_vecs(range(40)), SCHEMA)
-    rows = _vecs(range(100, 110))
-    src = tmp_path / "vecs"
-    spark.createDataFrame(rows, SCHEMA).coalesce(1) \
-        .write.mode("overwrite").parquet(str(src / "f0.parquet"))
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "*.parquet"))
-    )
-    target, ckpt = str(tmp_path / "index"), str(tmp_path / "ckpt")
-    # simulate the crash window: codebook file exists, v0 incomplete
-    os.makedirs(os.path.join(target, "v0", "codes"), exist_ok=True)
-    with open(os.path.join(target, "codebooks.json"), "w") as f:
-        _json.dump([], f)  # stale/partial content — must be overwritten
-
-    streaming_pq_index_maintain(stream, init, target, ckpt, m=4, k_codes=8)
-    from wde_spark.streaming.embedding_admission import read_codebooks
-    books = read_codebooks(target)
-    assert books and len(books) == 4  # retrained, not the stale []
-    got = read_codes(spark, target)
-    batch_codes = SIM.pq_encode(
-        spark.createDataFrame(_vecs(range(40)) + rows, SCHEMA), books)
-    assert got.exceptAll(batch_codes).unionAll(
-        batch_codes.exceptAll(got)).count() == 0
-
-
 def test_pq_query_luts_raises_on_oversized_query_side(spark):
     """`_pq_query_luts` materializes the probe set on the driver; that is
     bounded by contract (probe sets are model-sized). A corpus-sized query

@@ -272,9 +272,9 @@ def test_version_ledger_on_non_local_scheme(spark, tmp_path):
     code path an hdfs:// or s3a:// deployment exercises."""
     import pytest as _pytest
 
-    from wde_spark.streaming.cdc import latest_version_dir
     from wde_spark.streaming.versions import (
-        compact_versions, read_version, version_history)
+        compact_versions, latest_version_dir, read_version,
+        version_history)
 
     spark.sparkContext._jsc.hadoopConfiguration().set(
         "fs.viewfs.mounttable.wdetest.link./ledger",
@@ -311,36 +311,6 @@ def test_increment_chain_of_batches(spark):
     r2 = I.dedup_increment(corpus1, spark.createDataFrame(b2, SCHEMA), r1.state)
     final = (_kept_ids(corpus1) - _kept_ids(r2.revoked)) | _kept_ids(r2.kept)
     assert final == _full(spark, CORPUS + BATCH)
-
-
-def test_admission_bootstrap_crash_redo(spark, tmp_path):
-    """A crash mid-bootstrap (v0 directory present but missing the fp/
-    bands tables) must not poison the stream: restart detects the
-    incomplete v0 via the _SUCCESS markers and redoes the deterministic
-    bootstrap instead of skipping it."""
-    import os
-
-    from wde_spark.streaming.dedup_admission import (
-        read_corpus, streaming_dedup_admission)
-
-    corpus0 = D.dedup_corpus(spark.createDataFrame(CORPUS, SCHEMA))
-    target, ckpt = str(tmp_path / "corpus"), str(tmp_path / "ckpt")
-    # simulate the crash window: corpus table landed, fp/bands did not
-    corpus0.write.mode("overwrite").parquet(
-        os.path.join(target, "v0", "corpus"))
-    assert os.path.exists(os.path.join(target, "v0"))
-
-    src = tmp_path / "docs"
-    spark.createDataFrame(BATCH, SCHEMA).coalesce(1) \
-        .write.mode("overwrite").parquet(str(src / "f0.parquet"))
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "*.parquet"))
-    )
-    streaming_dedup_admission(stream, corpus0, target, ckpt)
-    assert _kept_ids(read_corpus(spark, target)) == _full(
-        spark, CORPUS + BATCH)
 
 
 def test_streaming_drift_maintainer_matches_drift_history(spark, tmp_path):

@@ -60,7 +60,7 @@ def _state_rows(spark, target, version):
 
 def test_composition_equals_manual_folds(spark, tmp_path):
     from wde_spark.streaming.codebook_maintenance import (
-        _batch_cell_sums, _state_centroids)
+        _batch_cell_sums, _centroids_from_state)
 
     emb = _emb(spark)
     target = _run_stream(spark, emb, tmp_path, "comp")
@@ -69,7 +69,7 @@ def test_composition_equals_manual_folds(spark, tmp_path):
     got2 = _state_rows(spark, target, 2)
 
     st0 = spark.read.parquet(os.path.join(target, "state", "v0"))
-    cents0 = _state_centroids(spark, target, 0)
+    cents0 = _centroids_from_state(st0)
     s1 = _batch_cell_sums(emb.filter(F.col("vec_id") % 10 == 0), cents0)
     want1 = sorted(
         (r["cell"], r["d"], r["n"] + (r["n_add"] or 0),
@@ -77,8 +77,8 @@ def test_composition_equals_manual_folds(spark, tmp_path):
         for r in st0.join(s1, ["cell", "d"], "left").collect())
     assert got1 == want1
 
-    cents1 = _state_centroids(spark, target, 1)
     st1 = spark.read.parquet(os.path.join(target, "state", "v1"))
+    cents1 = _centroids_from_state(st1)
     s2 = _batch_cell_sums(emb.filter(F.col("vec_id") % 10 == 5), cents1)
     want2 = sorted(
         (r["cell"], r["d"], r["n"] + (r["n_add"] or 0),
@@ -112,14 +112,14 @@ def test_counts_conserve_and_grow(spark, tmp_path):
 
 def test_replay_idempotent(spark, tmp_path):
     from wde_spark.streaming.codebook_maintenance import (
-        _batch_cell_sums, _state_centroids)
+        _batch_cell_sums, _centroids_from_state)
 
     emb = _emb(spark)
     target = _run_stream(spark, emb, tmp_path, "replay")
     got1 = _state_rows(spark, target, 1)
     # re-derive v1 from v0 exactly as a foreachBatch replay would
     st0 = spark.read.parquet(os.path.join(target, "state", "v0"))
-    cents0 = _state_centroids(spark, target, 0)
+    cents0 = _centroids_from_state(st0)
     s1 = _batch_cell_sums(emb.filter(F.col("vec_id") % 10 == 0), cents0)
     redo = sorted(
         (r["cell"], r["d"], r["n"] + (r["n_add"] or 0),

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -56,10 +57,12 @@ def main() -> None:
     runs = []
     for b in range(n_batches):
         # min over 2 reps per side: one-off GC/AQE jitter at these sizes
-        # is larger than the signal (the ledger rewrite is idempotent,
-        # so re-applying the same batch is safe by contract)
+        # is larger than the signal. A step whose version landed is a
+        # no-op, so each rep first drops v{b+1} to time a real step.
         sec_maint, sec_rebuild, n_sched, n_rebuild = 1e9, 1e9, -1, -2
         for _ in range(2):
+            shutil.rmtree(os.path.join(target, f"v{b + 1}"),
+                          ignore_errors=True)
             t0 = time.time()
             batch = (spark.read
                      .parquet(os.path.join(feed, f"b{b}.parquet"))

@@ -4,7 +4,8 @@ Runs every `queries()` entry on Spark and its `oracle_sql()` on DuckDB at
 the given scale factor, then compares: row count, column-name set, and an
 order-insensitive value multiset (doubles compared to 9 significant digits
 to catch real mismatches while tolerating representation noise — the driver
-hashes exactly, so we ALSO report exact-hash status).
+hashes exactly, so we ALSO report exact-hash status). A PASS line prints
+the exact-repr digest, so two runs can be compared digest by digest.
 
 Usage: python tools/verify_local.py [sf_dir] [query ...]
 """
@@ -114,7 +115,8 @@ def main():
             print(f"FAIL  {name}: " + "; ".join(str(p) for p in problems))
             n_fail += 1
         else:
-            print(f"PASS  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+            print(f"PASS  {name}: {len(srows)} rows sha={hs} "
+                  f"[{time.time()-t0:.1f}s]")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     spark.stop()

@@ -32,7 +32,3 @@ def load(name: str):
         raise KeyError(name)
     with open(os.path.join(_DIR, f"{name}.json"), encoding="utf-8") as f:
         return json.load(f)
-
-
-def load_all() -> dict:
-    return {n: load(n) for n in TABLE_NAMES}

@@ -1021,45 +1021,3 @@ def dedup_weights(docs: DataFrame, edges: DataFrame,
             .alias("weight"),
         )
     )
-
-
-def component_best(docs: DataFrame, edges: DataFrame,
-                   score_col: str = "n_chars",
-                   id_col: str = "doc_id") -> DataFrame:
-    """Quality-aware dedup retention: instead of keeping the MIN-id member
-    of each near-duplicate class (the `connected_components` convention),
-    keep the BEST one by a quality score — the retention policy real
-    curation pipelines want ("of these 40 mirrored copies, keep the
-    longest / most fluent one", cf. RefinedWeb's keep-longest rule).
-
-    Returns the full canonicalization map: one row per document with
-    (id, component, canon_id, is_canon) where canon_id is the member with
-    the highest score (ties: lowest id) of the doc's near-dup component;
-    singletons are their own canon. Downstream `filter(is_canon)` is the
-    kept corpus; the map itself is the provenance record redirecting
-    dropped docs to their surviving representative.
-
-    One left join onto the component labels (components exist only for
-    docs that appear in an edge; COALESCE makes every singleton its own
-    component) + one per-component window — partitions are
-    component-sized, never corpus-sized."""
-    from . import graph as G
-
-    comps = G.connected_components(edges)
-    joined = (
-        docs.select(F.col(id_col), F.col(score_col))
-        .join(comps.withColumnRenamed("node", id_col), id_col, "left")
-        .withColumn(
-            "component",
-            F.coalesce(F.col("component"), F.col(id_col)).cast("long"))
-    )
-    w = Window.partitionBy("component").orderBy(
-        F.col(score_col).desc(), F.col(id_col))
-    return (
-        joined.select(
-            id_col,
-            "component",
-            F.first(F.col(id_col)).over(w).cast("long").alias("canon_id"),
-            (F.row_number().over(w) == 1).alias("is_canon"),
-        )
-    )

@@ -49,9 +49,3 @@ def resolve_ladder(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def certitude(matched_params: Column, has_date: Column) -> Column:
-    """Q3 — the reference's confidence rule (script/itemtoid.py:54-113):
-    certain iff >=4 query parameters matched or a date matched."""
-    return (matched_params >= 4) | has_date

@@ -259,68 +259,3 @@ def tfidf_topk(docs: DataFrame, k: int = 3, text_col: str = "text",
         .select(id_col, "term", F.col("tf").cast("long").alias("tf"),
                 "score", "rnk")
     )
-
-
-def ngram_diversity(docs: DataFrame, group_col: str = "source", n: int = 2,
-                    text_col: str = "text") -> DataFrame:
-    """Corpus diversity analytics per group: n-gram type-token ratio and
-    unigram Shannon entropy — the "is this source a boilerplate farm?"
-    signal that per-document stats (`repetition_stats`, within-doc) and
-    cross-source overlap (`corpus_overlap`, between-group) both miss:
-    a source whose documents each look clean but collectively reuse the
-    same n-grams shows a collapsed TTR / entropy here.
-
-    Returns one row per group: (group, n_ngrams, n_distinct, ttr,
-    unigram_entropy). TTR = distinct/total n-grams; entropy uses the
-    exact integer identity H = ln(N) - (1/N)·Σ c·ln(c) over unigram
-    counts c, rounded to 6 (sums of integer counts are exact; the single
-    ln/divide per term follows the house ROUND discipline).
-
-    Plan: one tokenize feeds the n-gram slice (array windows, like
-    `duplicate_spans`) and the unigram counts; two hash aggregations on
-    (group, gram) / (group, token) — bounded by vocabulary, never by
-    corpus size — then one tiny per-group join. Docs with < n tokens
-    contribute no n-grams (and still count toward unigrams)."""
-    toks = docs.select(
-        F.col(group_col).alias("grp"), tokens(F.col(text_col)).alias("t"))
-
-    grams = toks.select(
-        "grp",
-        F.explode(
-            F.when(
-                F.size("t") >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - (n - 1)),
-                    lambda i: F.concat_ws(" ", F.slice("t", i, n)),
-                ),
-            ).otherwise(F.array())
-        ).alias("g"),
-    )
-    gstats = (
-        grams.groupBy("grp", "g").agg(F.count("*").alias("c"))
-        .groupBy("grp")
-        .agg(F.sum("c").cast("long").alias("n_ngrams"),
-             F.count("*").cast("long").alias("n_distinct"))
-        .withColumn(
-            "ttr", F.round(F.col("n_distinct") / F.col("n_ngrams"), 6))
-    )
-
-    uni = (
-        toks.select("grp", F.explode("t").alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("grp", "w").agg(F.count("*").alias("c"))
-        .groupBy("grp")
-        .agg(F.sum("c").cast("double").alias("nt"),
-             F.sum(F.col("c") * F.log(F.col("c").cast("double")))
-             .alias("clc"))
-        .select(
-            "grp",
-            F.round(F.log("nt") - F.col("clc") / F.col("nt"), 6)
-            .alias("unigram_entropy"),
-        )
-    )
-    return (
-        gstats.join(uni, "grp")
-        .select(F.col("grp").alias(group_col), "n_ngrams", "n_distinct",
-                "ttr", "unigram_entropy")
-    )

@@ -53,14 +53,3 @@ def quality_metrics(scored: DataFrame, pred: str = "wd_id",
         F.round(F.col("cert_false_positive") / F.col("total"), 3).alias("certitude_false"),
         "total", "found_ids", "no_id_found",
     )
-
-
-def empty_trait_ratio(df: DataFrame, trait: str = "trait") -> DataFrame:
-    """A8 — proportion of rows with a blank trait
-    (itemtoid_test.py:299-325's representativeness check)."""
-    return df.agg(
-        F.round(
-            F.avg(F.when(F.trim(F.col(trait)) == "", 1.0).otherwise(0.0)), 3
-        ).alias("empty_ratio"),
-        F.count("*").alias("total"),
-    )

@@ -79,19 +79,6 @@ def read_query_cache(spark: SparkSession, path_glob: str) -> DataFrame:
     return spark.createDataFrame(raw.rdd.mapPartitions(decode), CACHE_SCHEMA)
 
 
-def write_query_cache(df: DataFrame, path: str) -> None:
-    """S5 sink — persist a cache table partitioned by first character of the
-    key (the reference's `idqueried_{c}` layout), parquet-backed so future
-    probes partition-prune on `part`."""
-    (
-        df.withColumn("part", F.substring("qstr", 1, 1))
-        .repartition("part")
-        .write.mode("overwrite")
-        .partitionBy("part")
-        .parquet(path)
-    )
-
-
 def synthetic_cache(queries: DataFrame, hit_rate: float,
                     seed: str = "dummy", qstr_col: str = "qstr") -> DataFrame:
     """Reference `makedummy` (script/itemtoid_test.py:23-58) generalized: a

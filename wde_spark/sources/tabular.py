@@ -108,16 +108,6 @@ def write_tsv_compat(df: DataFrame, path: str, order_by: list[str],
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def read_id_list(spark: SparkSession, path: str,
-                 col_name: str = "id") -> DataFrame:
-    """S6 — whitespace-separated ID file → single-column table."""
-    return (
-        spark.read.text(path)
-        .select(F.explode(F.split(F.col("value"), r"\s+")).alias(col_name))
-        .filter(F.col(col_name) != "")
-    )
-
-
 def write_id_list(df: DataFrame, col_name: str, path: str) -> None:
     """S6 sink — one ID per line."""
     df.select(F.col(col_name).cast("string").alias("value")) \

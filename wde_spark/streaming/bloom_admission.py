@@ -10,10 +10,10 @@ The Bloom bit set is a mergeable sketch in the same sense as the HLL
 registers (`streaming/sketch_maintenance.py`): the filter of a union is
 the bitwise OR of the filters, and in the relational encoding (one row per
 SET bit) that OR is `UNION ... DISTINCT` — associative, commutative, and
-IDEMPOTENT. Idempotence buys stronger replay safety than the counter
-sketches get for free: re-merging an already-applied batch after a
-foreachBatch replay changes NOTHING (x OR x = x), so the copy-on-write
-version ledger here is belt-and-braces rather than load-bearing.
+IDEMPOTENT. Idempotence alone does not make the sink replay-safe: a
+replay that re-read the newest version would overwrite the directory it
+reads. Replay safety comes from `versions.versioned_step`, which makes a
+replayed batch whose version landed a no-op.
 
 Equivalence contract (pinned in `tests/test_streaming_bloom.py`): the
 maintained set after N micro-batches is row-identical to the one-shot set
@@ -27,10 +27,6 @@ passes the full n_seeds-bit membership test. Bloom false positives can
 only over-reject (quarantine a clean doc for exact re-check downstream),
 never under-reject — the safe direction for decontamination.
 
-Same COW version-directory layout as `streaming/cdc.py`: deterministic
-content + fixed version name per batch_id → idempotent under
-foreachBatch's at-least-once replay.
-
 At 100 TB: the stored state is ≤ min(n_seeds·|benchmark shingles|, m_bits)
 bigint rows (≤ m_bits rows ~ 8 MB at 2^20 regardless of benchmark growth);
 each micro-batch merge shuffles only that state; the corpus-side admission
@@ -39,14 +35,12 @@ is one broadcast join of the bit table — the corpus never shuffles.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.curation import bloom_bit
 from ..operators.dedup import distinct_shingle_table
-from .cdc import latest_version_dir
+from .versions import latest_version_dir, run_foreach_batch, versioned_step
 
 M_BITS_DEFAULT = 1 << 20
 N_SEEDS_DEFAULT = 4
@@ -83,31 +77,20 @@ def streaming_bloom_maintain(
     """Run the benchmark stream to completion (availableNow — static test
     input), maintaining the Bloom bit-set table under `target_dir` as COW
     versions. Merge = UNION DISTINCT of bit rows (the relational bitwise
-    OR), so replayed batches are no-ops by idempotence."""
-    os.makedirs(target_dir, exist_ok=True)
+    OR)."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = batch_bloom_bits(batch, text_col, id_col, shingle_k,
-                                 m_bits, n_seeds)
-        try:
-            cur = spark.read.parquet(latest_version_dir(target_dir))
-            merged = cur.unionByName(fresh).distinct()
-        except FileNotFoundError:
-            merged = fresh
-        out = os.path.join(target_dir, f"v{batch_id + 1}")
-        merged.write.mode("overwrite").parquet(out)
+        def step(prev, out: str) -> None:
+            bits = batch_bloom_bits(batch, text_col, id_col, shingle_k,
+                                    m_bits, n_seeds)
+            if prev is not None:
+                bits = batch.sparkSession.read.parquet(prev) \
+                    .unionByName(bits).distinct()
+            bits.write.mode("overwrite").parquet(out)
 
-    q = (
-        bench_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+        versioned_step(target_dir, batch_id, step)
+
+    run_foreach_batch(bench_stream, _apply, checkpoint_dir)
 
 
 def read_bloom_bits(spark, target_dir: str) -> DataFrame:

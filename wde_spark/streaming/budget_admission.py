@@ -26,9 +26,7 @@ from the one-shot mixture's single global prefix, and why both forms
 ship). The oracle replays the recursion unrolled per batch: batch 0's
 prefix, its per-source spent, then batch 1's prefix offset by it.
 
-Batch-aligned COW reads (v{batch_id} -> v{batch_id+1}) make each step a
-pure function of (previous version, batch): idempotent under
-foreachBatch's at-least-once replay.
+Each step is a `versions.versioned_step` (v{batch_id} -> v{batch_id+1}).
 
 At 100 TB: per batch, one window partitioned by source over the BATCH
 (batch-sized partitions; split by hash sub-bucket first if a single
@@ -38,12 +36,10 @@ spent table, and one ledger append. The corpus is never rescanned.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .cdc import latest_version_dir
+from .versions import latest_version_dir, run_foreach_batch, versioned_step
 
 
 def _budget_col(budgets: dict, default: int):
@@ -60,38 +56,35 @@ def apply_budget_batch(batch: DataFrame, batch_id: int, target_dir: str,
     """One admission step: hash-order the batch within each source,
     offset by the stored per-source spent totals, keep rows while the
     inclusive running total fits the budget, append as v{batch_id+1}."""
-    spark = batch.sparkSession
-    prev = os.path.join(target_dir, f"v{batch_id}")
-    if os.path.exists(os.path.join(prev, "_SUCCESS")):
-        ledger = spark.read.parquet(prev)
-        spent = ledger.groupBy("source").agg(
-            F.max("cum_tokens").alias("_spent"))
-    else:
-        ledger = None
-        spent = None
     hx = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
     w = (Window.partitionBy("source").orderBy("_hx", id_col)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cand = batch.withColumn("_hx", hx)
-    if spent is not None:
-        cand = cand.join(F.broadcast(spent), "source", "left") \
-            .withColumn("_spent", F.coalesce(F.col("_spent"), F.lit(0)))
-    else:
-        cand = cand.withColumn("_spent", F.lit(0))
-    admitted = (
-        cand.withColumn("cum_tokens",
-                        (F.col("_spent") + F.sum("n_tok").over(w))
-                        .cast("long"))
-        .filter(F.col("cum_tokens")
-                <= _budget_col(budgets, default_budget))
-        .select(id_col, "source", F.col("n_tok").cast("long"),
-                "cum_tokens",
-                F.lit(batch_id).cast("int").alias("arrived_batch"))
-    )
-    merged = ledger.unionByName(admitted) if ledger is not None \
-        else admitted
-    out = os.path.join(target_dir, f"v{batch_id + 1}")
-    merged.write.mode("overwrite").parquet(out)
+
+    def step(prev, out: str) -> None:
+        cand = batch.withColumn("_hx", hx)
+        if prev is not None:
+            ledger = batch.sparkSession.read.parquet(prev)
+            spent = ledger.groupBy("source").agg(
+                F.max("cum_tokens").alias("_spent"))
+            cand = cand.join(F.broadcast(spent), "source", "left") \
+                .withColumn("_spent", F.coalesce(F.col("_spent"), F.lit(0)))
+        else:
+            cand = cand.withColumn("_spent", F.lit(0))
+        admitted = (
+            cand.withColumn("cum_tokens",
+                            (F.col("_spent") + F.sum("n_tok").over(w))
+                            .cast("long"))
+            .filter(F.col("cum_tokens")
+                    <= _budget_col(budgets, default_budget))
+            .select(id_col, "source", F.col("n_tok").cast("long"),
+                    "cum_tokens",
+                    F.lit(batch_id).cast("int").alias("arrived_batch"))
+        )
+        if prev is not None:
+            admitted = ledger.unionByName(admitted)
+        admitted.write.mode("overwrite").parquet(out)
+
+    versioned_step(target_dir, batch_id, step)
 
 
 def streaming_budget_maintain(
@@ -106,22 +99,12 @@ def streaming_budget_maintain(
     """Run the (id, source, n_tok) stream to completion (availableNow —
     static test input), maintaining the admission ledger under
     `target_dir` as COW versions."""
-    os.makedirs(target_dir, exist_ok=True)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_budget_batch(batch, batch_id, target_dir, budgets,
                            default_budget, id_col, salt)
 
-    q = (
-        doc_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    run_foreach_batch(doc_stream, _apply, checkpoint_dir)
 
 
 def read_admitted(spark, target_dir: str) -> DataFrame:

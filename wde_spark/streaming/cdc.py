@@ -7,13 +7,10 @@ with the broadcast MERGE (`operators/relational.py::merge_changeset`)
 through `foreachBatch` — Spark's idiom for sinks with merge semantics the
 built-in sinks don't cover.
 
-Snapshot layout is copy-on-write: each batch writes a NEW version directory
-`v{batch_id+1}` derived from the latest existing version, never mutating a
-version in place. Replaying a batch after a crash rewrites the same version
-directory with the same content (the merge is deterministic), so the sink is
-idempotent — exactly-once effect on top of foreachBatch's at-least-once
-delivery, the same ledger-of-immutable-versions idea the table formats
-(Delta/Iceberg) scale up.
+Snapshot layout is copy-on-write: batch b merges onto version `v{b}` and
+commits `v{b+1}` through `versions.versioned_step`, never mutating a
+version in place; a replayed batch whose version already landed is a
+no-op (see there for the commit rule).
 
 At 100 TB the merge inside each batch is the broadcast left join + union —
 the snapshot is scanned once per batch and never shuffled; compaction of
@@ -22,23 +19,11 @@ old versions is a directory delete.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from ..operators.relational import merge_changeset
-
-
-def latest_version_dir(target_dir: str, spark=None) -> str:
-    # routed through the version ledger's filesystem abstraction: plain
-    # local paths stay on os.listdir, scheme'd paths (hdfs://, s3a://)
-    # go through the Hadoop FileSystem API
-    from .versions import _join, version_history
-
-    versions = version_history(target_dir, spark)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions under {target_dir}")
-    return _join(target_dir, f"v{max(versions)}")
+from .versions import (bootstrap, latest_version_dir, run_foreach_batch,
+                       versioned_step)
 
 
 def read_snapshot(spark, target_dir: str) -> DataFrame:
@@ -53,31 +38,17 @@ def streaming_cdc_apply(
     checkpoint_dir: str,
 ) -> None:
     """Run the change stream to completion (static test input), applying
-    each micro-batch onto the latest snapshot version. `changes_stream`
+    each micro-batch onto the previous snapshot version. `changes_stream`
     carries `key`, `op` ('I'|'U'|'D') and the snapshot's non-key columns."""
-    os.makedirs(target_dir, exist_ok=True)
-    v0 = os.path.join(target_dir, "v0")
-    if not os.path.exists(v0):
-        init_snapshot.write.mode("overwrite").parquet(v0)
-
+    bootstrap(target_dir, init_snapshot.write.mode("overwrite").parquet)
     cols = init_snapshot.columns
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        cur = spark.read.parquet(latest_version_dir(target_dir))
-        out = os.path.join(target_dir, f"v{batch_id + 1}")
-        # deterministic content + fixed version name per batch_id →
-        # idempotent under foreachBatch replay
-        merge_changeset(cur, batch, key).select(*cols) \
-            .write.mode("overwrite").parquet(out)
+        def step(prev: str, out: str) -> None:
+            cur = batch.sparkSession.read.parquet(prev)
+            merge_changeset(cur, batch, key).select(*cols) \
+                .write.mode("overwrite").parquet(out)
 
-    q = (
-        changes_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+        versioned_step(target_dir, batch_id, step)
+
+    run_foreach_batch(changes_stream, _apply, checkpoint_dir)

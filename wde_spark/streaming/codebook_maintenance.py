@@ -24,9 +24,8 @@ bit-for-bit out of the same building blocks the IVF family uses: seed →
 2 Lloyd rounds on the init slice → per-batch assign-under-current +
 cumulative-sum centroid refresh.
 
-Replay contract: the offset state is read at `v{batch_id}` and written
-at `v{batch_id + 1}` with deterministic content (`export_admission.py`'s
-discipline), so foreachBatch re-runs rewrite identical bytes.
+Each batch is a `versions.versioned_step` over `state/`
+(`v{batch_id}` -> `v{batch_id + 1}`).
 
 At 100 TB: state is n_cells × dim rows (16 × 64 = 1024 — model-sized,
 never corpus-sized); per batch ONE argmin pass over the batch plus a
@@ -45,30 +44,11 @@ from pyspark.sql import functions as F
 from ..operators.similarity import (_as_double, _normalize,
                                     _probe_cells_udf,
                                     train_ivf_centroids)
+from .versions import (bootstrap, latest_version_dir, run_foreach_batch,
+                       versioned_step)
 
 N_CELLS_DEFAULT = 16
 DIM = 64
-
-
-def _state_dir(target_dir: str, n: int) -> str:
-    return os.path.join(target_dir, "state", f"v{n}")
-
-
-def _state_centroids(spark, target_dir: str, version: int) -> list:
-    """Current centroids from a state version: s/n running mean, bootstrap
-    fallback for empty cells. 1024 rows -> a 16x64 driver-side model
-    (bounded codebook state: n_cells x dim rows, the k-means collect
-    pattern)."""
-    st = spark.read.parquet(_state_dir(target_dir, version))
-    rows = st.select(
-        "cell", "d",
-        F.when(F.col("n") > 0, F.col("s") / F.col("n"))
-        .otherwise(F.col("boot")).alias("m"),
-    ).collect()  # n_cells x dim rows: bounded model state, never corpus
-    cells = {}
-    for r in rows:
-        cells.setdefault(int(r["cell"]), {})[int(r["d"])] = float(r["m"])
-    return [[cells[c][d] for d in range(DIM)] for c in sorted(cells)]
 
 
 def _batch_cell_sums(batch: DataFrame, cents: list,
@@ -88,6 +68,30 @@ def _batch_cell_sums(batch: DataFrame, cents: list,
     )
 
 
+def _state0(init_emb: DataFrame, n_cells: int, iters: int,
+            vec_col: str) -> DataFrame:
+    """State 0 on the init slice: per (cell, d) the member count,
+    coordinate sum, and bootstrap centroid coordinate."""
+    spark = init_emb.sparkSession
+    cents = train_ivf_centroids(init_emb, n_cells=n_cells, iters=iters)
+    if not cents:  # empty/unusable init slice: an empty codebook is the
+        # honest state 0 (later batches copy it forward)
+        return spark.createDataFrame(
+            [], "cell int, d int, n long, s double, boot double")
+    boot = spark.createDataFrame(
+        [(c, d, float(cents[c][d]))
+         for c in range(len(cents)) for d in range(DIM)],
+        "cell int, d int, boot double")
+    sums = _batch_cell_sums(init_emb, cents, vec_col)
+    return (
+        boot.join(sums, ["cell", "d"], "left")
+        .select("cell", "d",
+                F.coalesce("n_add", F.lit(0)).cast("long").alias("n"),
+                F.coalesce("s_add", F.lit(0.0)).alias("s"),
+                "boot")
+    )
+
+
 def bootstrap_codebook_v0(init_emb: DataFrame, target_dir: str,
                           n_cells: int = N_CELLS_DEFAULT,
                           iters: int = 2,
@@ -97,31 +101,12 @@ def bootstrap_codebook_v0(init_emb: DataFrame, target_dir: str,
     assign the init slice under it, and write state v0: per (cell, d)
     the member count, coordinate sum, and the bootstrap centroid
     coordinate (the empty-cell fallback)."""
-    if os.path.exists(os.path.join(_state_dir(target_dir, 0), "_SUCCESS")):
-        return
-    spark = init_emb.sparkSession
-    cents = train_ivf_centroids(init_emb, n_cells=n_cells, iters=iters)
-    if not cents:  # empty/unusable init slice: an empty codebook is the
-        # honest v0 (later batches copy it forward; see _apply)
-        spark.createDataFrame(
-            [], "cell int, d int, n long, s double, boot double"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            _state_dir(target_dir, 0))
-        return
-    boot = spark.createDataFrame(
-        [(c, d, float(cents[c][d]))
-         for c in range(len(cents)) for d in range(DIM)],
-        "cell int, d int, boot double")
-    sums = _batch_cell_sums(init_emb, cents, vec_col)
-    state0 = (
-        boot.join(sums, ["cell", "d"], "left")
-        .select("cell", "d",
-                F.coalesce("n_add", F.lit(0)).cast("long").alias("n"),
-                F.coalesce("s_add", F.lit(0.0)).alias("s"),
-                "boot")
-    )
-    state0.coalesce(1).write.mode("overwrite").parquet(
-        _state_dir(target_dir, 0))
+
+    def write_v0(out: str) -> None:
+        _state0(init_emb, n_cells, iters, vec_col) \
+            .coalesce(1).write.mode("overwrite").parquet(out)
+
+    bootstrap(os.path.join(target_dir, "state"), write_v0)
 
 
 def streaming_codebook_maintain(emb_stream: DataFrame, target_dir: str,
@@ -133,38 +118,27 @@ def streaming_codebook_maintain(emb_stream: DataFrame, target_dir: str,
     arrival; the update is pure (n, s) addition."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
-        cents = _state_centroids(sp, target_dir, batch_id)
-        st = sp.read.parquet(_state_dir(target_dir, batch_id))
-        if not cents:  # empty codebook (empty bootstrap slice): nothing
-            # to assign against — carry the state forward unchanged so
-            # the COW version ledger stays contiguous
-            st.coalesce(1).write.mode("overwrite").parquet(
-                _state_dir(target_dir, batch_id + 1))
-            return
-        sums = _batch_cell_sums(batch, cents, vec_col)
-        nxt = (
-            st.join(sums, ["cell", "d"], "left")
-            .select("cell", "d",
-                    (F.col("n") + F.coalesce("n_add", F.lit(0)))
-                    .cast("long").alias("n"),
-                    (F.col("s") + F.coalesce("s_add", F.lit(0.0)))
-                    .alias("s"),
-                    "boot")
-        )
-        nxt.coalesce(1).write.mode("overwrite").parquet(
-            _state_dir(target_dir, batch_id + 1))
+        def step(prev: str, out: str) -> None:
+            st = batch.sparkSession.read.parquet(prev)
+            cents = _centroids_from_state(st)
+            if cents:
+                sums = _batch_cell_sums(batch, cents, vec_col)
+                st = (
+                    st.join(sums, ["cell", "d"], "left")
+                    .select("cell", "d",
+                            (F.col("n") + F.coalesce("n_add", F.lit(0)))
+                            .cast("long").alias("n"),
+                            (F.col("s") + F.coalesce("s_add", F.lit(0.0)))
+                            .alias("s"),
+                            "boot")
+                )
+            # an empty codebook (empty bootstrap slice) has nothing to
+            # assign against: the state is carried forward unchanged
+            st.coalesce(1).write.mode("overwrite").parquet(out)
 
-    q = (
-        emb_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+        versioned_step(os.path.join(target_dir, "state"), batch_id, step)
+
+    run_foreach_batch(emb_stream, _apply, checkpoint_dir)
 
 
 def _centroids_from_state(st: DataFrame) -> list:
@@ -195,26 +169,8 @@ def bootstrap_codebook_delta(init_emb: DataFrame, target_dir: str,
     # b0 away, so "b0 exists" is NOT the bootstrapped test
     if ledger_entries(ledger):
         return
-    spark = init_emb.sparkSession
-    cents = train_ivf_centroids(init_emb, n_cells=n_cells, iters=iters)
-    if not cents:
-        write_base(spark.createDataFrame(
-            [], "cell int, d int, n long, s double, boot double"
-        ).coalesce(1), ledger, 0)
-        return
-    boot = spark.createDataFrame(
-        [(c, d, float(cents[c][d]))
-         for c in range(len(cents)) for d in range(DIM)],
-        "cell int, d int, boot double")
-    sums = _batch_cell_sums(init_emb, cents, vec_col)
-    state0 = (
-        boot.join(sums, ["cell", "d"], "left")
-        .select("cell", "d",
-                F.coalesce("n_add", F.lit(0)).cast("long").alias("n"),
-                F.coalesce("s_add", F.lit(0.0)).alias("s"),
-                "boot")
-    )
-    write_base(state0.coalesce(1), ledger, 0)
+    write_base(_state0(init_emb, n_cells, iters, vec_col).coalesce(1),
+               ledger, 0)
 
 
 def streaming_codebook_maintain_delta(emb_stream: DataFrame,
@@ -273,16 +229,7 @@ def streaming_codebook_maintain_delta(emb_stream: DataFrame,
             maybe_compact(sp, ledger, ["cell", "d"],
                           max_entries=auto_compact)
 
-    q = (
-        emb_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    run_foreach_batch(emb_stream, _apply, checkpoint_dir)
 
 
 def read_codebook_merged(spark, target_dir: str) -> DataFrame:
@@ -306,10 +253,8 @@ def read_codebook(spark, target_dir: str) -> DataFrame:
     """The latest maintained codebook: (cell, d, n, m) — member count and
     running-mean centroid coordinate (bootstrap coordinate for cells no
     vector has joined)."""
-    from .versions import version_history
-
-    hist = version_history(os.path.join(target_dir, "state"), spark)
-    st = spark.read.parquet(_state_dir(target_dir, hist[-1]))
+    st = spark.read.parquet(
+        latest_version_dir(os.path.join(target_dir, "state"), spark))
     return st.select(
         "cell", "d", "n",
         F.when(F.col("n") > 0, F.col("s") / F.col("n"))

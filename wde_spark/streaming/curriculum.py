@@ -19,20 +19,15 @@ after ANY batch is row-identical to one-shot `curriculum_order` over
 the union of those batches — the schedule is always the one a full
 rebuild would produce, at ledger-append cost.
 
-Same COW version-directory layout as the other maintained families;
-batch-aligned reads (v{batch_id} -> v{batch_id+1}) make each step a
-pure function of (previous version, batch) and therefore idempotent
-under foreachBatch's at-least-once replay.
+Each step is a `versions.versioned_step` (v{batch_id} -> v{batch_id+1}).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cdc import latest_version_dir
+from .versions import latest_version_dir, run_foreach_batch, versioned_step
 
 
 def apply_curriculum_batch(batch: DataFrame, batch_id: int,
@@ -40,24 +35,22 @@ def apply_curriculum_batch(batch: DataFrame, batch_id: int,
                            bucket_col: str = "bucket",
                            extra_cols: tuple = ()) -> None:
     """One maintenance step: append the arriving (id, bucket[, extra])
-    rows to v{batch_id}'s ledger as v{batch_id + 1}. Missing
-    v{batch_id} == first batch == empty ledger. `extra_cols` carries
+    rows to v{batch_id}'s ledger as v{batch_id + 1}. `extra_cols` carries
     additional arrival-time columns (e.g. n_tok for maintained pacing)
     — still metadata-sized, never text."""
-    spark = batch.sparkSession
     fresh = batch.select(
         F.col(id_col),
         F.col(bucket_col).cast("long").alias(bucket_col),
         *[F.col(c) for c in extra_cols],
         F.lit(batch_id).cast("int").alias("arrived_batch"),
     )
-    prev = os.path.join(target_dir, f"v{batch_id}")
-    if os.path.exists(os.path.join(prev, "_SUCCESS")):
-        merged = spark.read.parquet(prev).unionByName(fresh)
-    else:
-        merged = fresh
-    out = os.path.join(target_dir, f"v{batch_id + 1}")
-    merged.write.mode("overwrite").parquet(out)
+
+    def step(prev, out: str) -> None:
+        merged = fresh if prev is None else \
+            batch.sparkSession.read.parquet(prev).unionByName(fresh)
+        merged.write.mode("overwrite").parquet(out)
+
+    versioned_step(target_dir, batch_id, step)
 
 
 def streaming_curriculum_maintain(
@@ -73,22 +66,12 @@ def streaming_curriculum_maintain(
     `target_dir` as COW versions. The caller computes the bucket (and
     any extra arrival-time columns, e.g. n_tok) ON the stream so
     document bytes are read exactly once, at arrival."""
-    os.makedirs(target_dir, exist_ok=True)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_curriculum_batch(batch, batch_id, target_dir, id_col,
                                bucket_col, extra_cols)
 
-    q = (
-        doc_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    run_foreach_batch(doc_stream, _apply, checkpoint_dir)
 
 
 def read_curriculum(spark, target_dir: str, n_stages: int = 3,

@@ -7,17 +7,9 @@ corpus via `operators/incremental.dedup_increment` — exact dups dropped
 (or dethroning their corpus twin on smaller id), near-dups clustered with
 the corpus classes they touch, novel docs appended — and the corpus plus
 its dedup state (fingerprint + LSH band tables) roll forward together as
-copy-on-write versions, the same immutable-ledger idiom as
-`streaming/cdc.py`.
-
-Crash/replay contract: each batch reads version `v{batch_id}` and writes
-`v{batch_id+1}` with deterministic content, so replaying a batch after a
-crash REWRITES the same version with the same bytes (admission is not
-algebraically idempotent — re-admitting admitted docs would collide with
-their own ids — so the KLL-style read-the-previous-version discipline,
-not blind latest-version reads, is what makes replay safe; see
-`streaming/sketch_maintenance.streaming_quantile_maintain` for the same
-reasoning).
+copy-on-write versions through `versions.versioned_step` (admission is
+not algebraically idempotent — re-admitting admitted docs would collide
+with their own ids — so replay safety rests on that step's commit rule).
 
 At 100 TB: the per-batch work is `dedup_increment`'s contract — state
 tables stream past broadcast batch keys, corpus text is read only for
@@ -34,11 +26,8 @@ import os
 from pyspark.sql import DataFrame
 
 from ..operators.incremental import DedupState, dedup_increment
-from .cdc import latest_version_dir
-
-
-def _version_dir(target_dir: str, n: int) -> str:
-    return os.path.join(target_dir, f"v{n}")
+from .versions import (bootstrap, latest_version_dir, read_batch_ledger,
+                       run_foreach_batch, versioned_step)
 
 
 def read_corpus(spark, target_dir: str) -> DataFrame:
@@ -72,10 +61,10 @@ def streaming_dedup_admission(
     append-only ledger under `drift_dir/b{batch_id}` — the per-batch
     "did this admission shift what the corpus is made of?" number a
     quality dashboard plots live, instead of recomputing
-    `drift_history` from scratch. Same idempotence as the quality
-    monitor: both versions are immutable COW snapshots, so a replayed
-    batch rewrites the same ledger row with the same bytes. The rows are
-    pinned equal to `drift_history` over the finished ledger in tests."""
+    `drift_history` from scratch. The row is written inside the batch's
+    versioned step, so it is complete whenever version n+1 is. The rows
+    are pinned equal to `drift_history` over the finished ledger in
+    tests."""
     bootstrap_v0(init_corpus, target_dir, text_col, id_col, num_hashes,
                  bands, shingle_k)
 
@@ -84,86 +73,81 @@ def streaming_dedup_admission(
                      num_hashes, bands, shingle_k, threshold, max_bucket,
                      drift_dir)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def _admit_batch(batch: DataFrame, batch_id: int, target_dir: str,
                  text_col: str, id_col: str, num_hashes: int,
                  bands: int | str, shingle_k: int, threshold: float,
                  max_bucket: int | None,
-                 drift_dir: str | None = None) -> None:
+                 drift_dir: str | None = None, gate=None) -> None:
     """One admission step v{batch_id} → v{batch_id+1} (read previous
     version, `dedup_increment`, write next version, optional drift row)
-    — shared by `streaming_dedup_admission` and the LM-gated admission
-    (`lm_admission.py`), so a gating policy composes in FRONT of
-    admission instead of forking the version-ledger discipline."""
+    — shared by `streaming_dedup_admission` and the LM/DSIR/NB-gated
+    admissions, so a gating policy composes in FRONT of admission
+    instead of forking the version-ledger discipline. `gate(batch,
+    batch_id)`
+    writes the gate's own ledgers and returns the documents to admit;
+    it runs inside the versioned step, so its ledgers are complete
+    whenever the version is."""
     spark = batch.sparkSession
-    prev = _version_dir(target_dir, batch_id)
-    corpus = spark.read.parquet(os.path.join(prev, "corpus"))
-    state = DedupState(
-        fingerprints=spark.read.parquet(os.path.join(prev, "fp")),
-        bands=spark.read.parquet(os.path.join(prev, "bands")),
-    )
-    res = dedup_increment(corpus, batch, state, text_col, id_col,
-                          num_hashes, bands, shingle_k, threshold,
-                          max_bucket)
-    out = _version_dir(target_dir, batch_id + 1)
-    corpus.join(res.revoked, id_col, "left_anti") \
-        .unionByName(res.kept) \
-        .write.mode("overwrite").parquet(os.path.join(out, "corpus"))
-    res.state.fingerprints.write.mode("overwrite").parquet(
-        os.path.join(out, "fp"))
-    res.state.bands.write.mode("overwrite").parquet(
-        os.path.join(out, "bands"))
-    if drift_dir is not None:
-        from pyspark.sql import functions as F
 
-        from ..operators.drift import corpus_divergence, term_distribution
+    def step(prev: str, out: str) -> None:
+        docs = batch if gate is None else gate(batch, batch_id)
+        corpus = spark.read.parquet(os.path.join(prev, "corpus"))
+        state = DedupState(
+            fingerprints=spark.read.parquet(os.path.join(prev, "fp")),
+            bands=spark.read.parquet(os.path.join(prev, "bands")),
+        )
+        res = dedup_increment(corpus, docs, state, text_col, id_col,
+                              num_hashes, bands, shingle_k, threshold,
+                              max_bucket)
+        corpus.join(res.revoked, id_col, "left_anti") \
+            .unionByName(res.kept) \
+            .write.mode("overwrite").parquet(os.path.join(out, "corpus"))
+        res.state.fingerprints.write.mode("overwrite").parquet(
+            os.path.join(out, "fp"))
+        res.state.bands.write.mode("overwrite").parquet(
+            os.path.join(out, "bands"))
+        if drift_dir is not None:
+            from pyspark.sql import functions as F
 
-        # read the version just WRITTEN (not res.kept) so the row is
-        # a pure function of two immutable snapshots — replay-safe
-        new_corpus = spark.read.parquet(os.path.join(out, "corpus"))
-        corpus_divergence(
-            term_distribution(corpus, text_col),
-            term_distribution(new_corpus, text_col),
-        ).select(
-            F.lit(batch_id).cast("long").alias("from_version"),
-            F.lit(batch_id + 1).cast("long").alias("to_version"),
-            "jsd", "l1", "n_terms_a", "n_terms_b", "n_terms_common",
-        ).write.mode("overwrite").parquet(
-            os.path.join(drift_dir, f"b{batch_id}"))
+            from ..operators.drift import corpus_divergence, term_distribution
+
+            # read the version just WRITTEN (not res.kept) so the row is
+            # a pure function of two immutable snapshots
+            new_corpus = spark.read.parquet(os.path.join(out, "corpus"))
+            corpus_divergence(
+                term_distribution(corpus, text_col),
+                term_distribution(new_corpus, text_col),
+            ).select(
+                F.lit(batch_id).cast("long").alias("from_version"),
+                F.lit(batch_id + 1).cast("long").alias("to_version"),
+                "jsd", "l1", "n_terms_a", "n_terms_b", "n_terms_common",
+            ).write.mode("overwrite").parquet(
+                os.path.join(drift_dir, f"b{batch_id}"))
+
+    versioned_step(target_dir, batch_id, step)
 
 
 def bootstrap_v0(init_corpus: DataFrame, target_dir: str, text_col: str,
                  id_col: str, num_hashes: int, bands: int | str,
                  shingle_k: int) -> None:
-    """Idempotent-by-redo v0 bootstrap (corpus + dedup state), shared by
-    both admission entry points. A crash mid-bootstrap leaves v0 without
-    all three _SUCCESS markers and the next start rebuilds all of it
-    (deterministic inputs ⇒ identical bytes)."""
+    """v0 bootstrap (corpus + dedup state), shared by all admission entry
+    points; a crash before its commit leaves no v0, and the next start
+    rebuilds all of it."""
     from ..operators.incremental import dedup_state
 
-    os.makedirs(target_dir, exist_ok=True)
-    v0 = _version_dir(target_dir, 0)
-    complete = all(
-        os.path.exists(os.path.join(v0, sub, "_SUCCESS"))
-        for sub in ("corpus", "fp", "bands"))
-    if complete:
-        return
-    init_corpus.write.mode("overwrite").parquet(os.path.join(v0, "corpus"))
-    st = dedup_state(init_corpus, text_col, id_col, num_hashes, bands,
-                     shingle_k)
-    st.fingerprints.write.mode("overwrite").parquet(os.path.join(v0, "fp"))
-    st.bands.write.mode("overwrite").parquet(os.path.join(v0, "bands"))
+    def write_v0(out: str) -> None:
+        init_corpus.write.mode("overwrite").parquet(
+            os.path.join(out, "corpus"))
+        st = dedup_state(init_corpus, text_col, id_col, num_hashes, bands,
+                         shingle_k)
+        st.fingerprints.write.mode("overwrite").parquet(
+            os.path.join(out, "fp"))
+        st.bands.write.mode("overwrite").parquet(os.path.join(out, "bands"))
+
+    bootstrap(target_dir, write_v0)
 
 
 _PARAMS_FILE = "_dedup_params.json"
@@ -294,16 +278,7 @@ def streaming_dedup_admission_delta(
                               os.path.join(target_dir, sub), keys,
                               max_entries=auto_compact)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def _admit_batch_delta(batch: DataFrame, batch_id: int, target_dir: str,
@@ -385,16 +360,8 @@ def read_corpus_merged(spark, target_dir: str,
 def read_drift(spark, drift_dir: str) -> DataFrame:
     """The drift ledger written by the maintainer: (from_version,
     to_version, jsd, l1, n_terms_a, n_terms_b, n_terms_common), one row
-    per admission batch. Empty-ledger probe follows
-    `quality_monitor.read_metrics` (glob only for local paths)."""
-    import glob
-
-    from .versions import _is_uri
-
-    if not _is_uri(drift_dir) and \
-            not glob.glob(os.path.join(drift_dir, "b*")):
-        return spark.createDataFrame(
-            [], "from_version long, to_version long, jsd double, "
-                "l1 double, n_terms_a long, n_terms_b long, "
-                "n_terms_common long")
-    return spark.read.parquet(os.path.join(drift_dir, "b*"))
+    per admission batch."""
+    return read_batch_ledger(
+        spark, drift_dir,
+        "from_version long, to_version long, jsd double, l1 double, "
+        "n_terms_a long, n_terms_b long, n_terms_common long")

@@ -14,11 +14,10 @@ The batch query form (`queries_ext.dsir_sample_documents`) does Gumbel
 TOP-K — a global budget, which does not compose over unbounded streams;
 the streaming form gates on the RATIO THRESHOLD instead (keep what is at
 least `cutoff` nats more target-like than raw), which is per-document
-and therefore batching-invariant: the whole composition keeps the
-admission path's replay contract (a replayed batch rewrites the same
-corpus version and quarantine directory with the same bytes), and
-streaming ≡ batch is pinnable — the final corpus equals a flat dedup
-over init ∪ {docs with ratio >= cutoff}.
+and therefore batching-invariant: the gate runs inside the admission's
+versioned step, so the composition keeps the admission path's replay
+contract, and streaming ≡ batch is pinnable — the final corpus equals a
+flat dedup over init ∪ {docs with ratio >= cutoff}.
 
 At 100 TB: scoring is one bigram explode + four broadcast LM joins per
 batch (`dsir_logratio`), strictly cheaper than the dedup verification it
@@ -35,6 +34,7 @@ from pyspark.sql import functions as F
 from ..operators.dsir import dsir_logratio, shared_vocab
 from ..operators.lm_score import train_bigram_lm
 from .dedup_admission import _admit_batch, bootstrap_v0
+from .versions import read_batch_ledger, run_foreach_batch
 
 
 def streaming_dsir_dedup_admission(
@@ -77,43 +77,29 @@ def streaming_dsir_dedup_admission(
             train_bigram_lm(corpus, text_col, id_col, vocab=vocab0) \
                 .write.mode("overwrite").parquet(lm_dir)
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
+    def gate(batch: DataFrame, batch_id: int) -> DataFrame:
         spark = batch.sparkSession
-        t_lm = spark.read.parquet(t_dir)
-        r_lm = spark.read.parquet(r_dir)
-        vocab = spark.read.parquet(v_dir)
-        ratios = dsir_logratio(batch, t_lm, r_lm, text_col, id_col,
-                               vocab=vocab)
-        ok_ids = ratios.filter(F.col("log_ratio") >= cutoff).select(id_col)
+        ratios = dsir_logratio(batch, spark.read.parquet(t_dir),
+                               spark.read.parquet(r_dir), text_col,
+                               id_col, vocab=spark.read.parquet(v_dir))
+        ok_ids = ratios.filter(F.col("log_ratio") >= cutoff) \
+            .select(id_col)
         ratios.join(ok_ids, id_col, "left_anti") \
             .write.mode("overwrite").parquet(
                 os.path.join(quarantine_dir, f"b{batch_id}"))
-        admitted = batch.join(ok_ids, id_col, "left_semi")
-        _admit_batch(admitted, batch_id, target_dir, text_col, id_col,
-                     num_hashes, bands, shingle_k, threshold, max_bucket,
-                     drift_dir)
+        return batch.join(ok_ids, id_col, "left_semi")
 
-    q = (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        _admit_batch(batch, batch_id, target_dir, text_col, id_col,
+                     num_hashes, bands, shingle_k, threshold, max_bucket,
+                     drift_dir, gate)
+
+    run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def read_quarantine(spark, quarantine_dir: str) -> DataFrame:
     """The quarantine ledger: (id, n_bigrams, log_ratio) per rejected
     document, one immutable directory per batch."""
-    import glob
-
-    from .versions import _is_uri
-
-    if not _is_uri(quarantine_dir) and \
-            not glob.glob(os.path.join(quarantine_dir, "b*")):
-        return spark.createDataFrame(
-            [], "doc_id long, n_bigrams long, log_ratio double")
-    return spark.read.parquet(os.path.join(quarantine_dir, "b*"))
+    return read_batch_ledger(
+        spark, quarantine_dir,
+        "doc_id long, n_bigrams long, log_ratio double")

@@ -9,10 +9,8 @@ copy-on-write versions. Queries run ADC-only against the maintained codes
 (`operators/similarity.pq_adc_topk`) — they never touch float vectors, so
 the float column can be cold storage.
 
-Replay contract: encoding with a frozen codebook is deterministic and
-row-local, and each batch reads version `v{batch_id}` and writes
-`v{batch_id+1}`, so a crash replay rewrites the same version with the
-same bytes (the same discipline as `streaming/dedup_admission.py`).
+Encoding with a frozen codebook is deterministic and row-local; each
+batch is a `versions.versioned_step` (`v{batch_id}` -> `v{batch_id+1}`).
 
 Index size arithmetic at scale: 1024-dim float32 = 4 KB/vector; PQ-64
 codes = 64 B/vector — a 10-billion-vector index is ~640 GB of codes, a
@@ -27,7 +25,8 @@ import os
 from pyspark.sql import DataFrame
 
 from ..operators.similarity import pq_adc_topk, pq_encode, train_pq_codebooks
-from .cdc import latest_version_dir
+from .versions import (bootstrap, latest_version_dir, run_foreach_batch,
+                       versioned_step)
 
 
 def _codebook_path(target_dir: str) -> str:
@@ -105,8 +104,8 @@ def streaming_pq_index_maintain_delta(
 
     os.makedirs(target_dir, exist_ok=True)
     ledger = os.path.join(target_dir, "codes")
-    # bootstrap idempotent-by-redo, same discipline as the COW twin;
-    # "any ledger entry" is the completed test (compaction may fold b0)
+    # bootstrap idempotent-by-redo; "any ledger entry" is the completed
+    # test (compaction may fold b0)
     complete = (os.path.exists(_codebook_path(target_dir))
                 and bool(ledger_entries(ledger)))
     if not complete:
@@ -126,16 +125,7 @@ def streaming_pq_index_maintain_delta(
             maybe_compact(batch.sparkSession, ledger, [id_col],
                           max_entries=auto_compact)
 
-    q = (
-        vec_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    run_foreach_batch(vec_stream, _apply, checkpoint_dir)
 
 
 def streaming_pq_index_maintain(
@@ -153,42 +143,27 @@ def streaming_pq_index_maintain(
     input), maintaining the PQ codes table under `target_dir`. Bootstrap
     trains the codebook tensor on `init_items` once (deterministic
     per-sub-space k-means) and encodes them as v0; every micro-batch is
-    encoded with that frozen codebook and appended."""
-    os.makedirs(target_dir, exist_ok=True)
-    v0 = os.path.join(target_dir, "v0", "codes")
-    # Bootstrap is idempotent-by-redo: complete iff BOTH the codebook file
-    # and v0's _SUCCESS marker exist; a crash between the two (or mid
-    # parquet write) triggers a full redo, which is deterministic
-    # (md5-seeded k-means) so replay rewrites identical bytes. Checking
-    # only the v0 directory would let a partial bootstrap poison every
-    # subsequent batch.
-    complete = (os.path.exists(_codebook_path(target_dir))
-                and os.path.exists(os.path.join(v0, "_SUCCESS")))
-    if not complete:
+    encoded with that frozen codebook and appended. The codebook file
+    is written before `v0` commits, so a committed `v0` implies it."""
+
+    def write_v0(out: str) -> None:
         books = train_pq_codebooks(init_items, m, k_codes, iters, id_col,
                                    vec_col)
         with open(_codebook_path(target_dir), "w") as f:
             json.dump(books, f)
         pq_encode(init_items, books, id_col, vec_col) \
-            .write.mode("overwrite").parquet(v0)
+            .write.mode("overwrite").parquet(os.path.join(out, "codes"))
 
+    bootstrap(target_dir, write_v0)
     books = read_codebooks(target_dir)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prev = os.path.join(target_dir, f"v{batch_id}", "codes")
-        cur = spark.read.parquet(prev)
-        out = os.path.join(target_dir, f"v{batch_id + 1}", "codes")
-        cur.unionByName(pq_encode(batch, books, id_col, vec_col)) \
-            .write.mode("overwrite").parquet(out)
+        def step(prev: str, out: str) -> None:
+            cur = batch.sparkSession.read.parquet(
+                os.path.join(prev, "codes"))
+            cur.unionByName(pq_encode(batch, books, id_col, vec_col)) \
+                .write.mode("overwrite").parquet(os.path.join(out, "codes"))
 
-    q = (
-        vec_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+        versioned_step(target_dir, batch_id, step)
+
+    run_foreach_batch(vec_stream, _apply, checkpoint_dir)

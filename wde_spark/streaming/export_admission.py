@@ -8,11 +8,9 @@ are never rewritten — the last partial shard fills, then new shards
 open; the manifest ledger is the reproducible record of exactly which
 document landed at which (shard, position).
 
-Replay contract: foreachBatch re-runs rewrite the same manifest and
-metadata directories with the same bytes (ranking is salted-hash
-deterministic and the offset comes from the PREVIOUS version's
-metadata, not from mutable state), so the exactly-once effect holds
-like the other maintainers (`dedup_admission`, `substr_admission`).
+Ranking is salted-hash deterministic and the offset comes from the
+PREVIOUS metadata version; each batch is a `versions.versioned_step`
+over `meta/`, with the manifest written inside the step.
 
 At 100 TB: per batch this is the two-phase ranking of the BATCH only
 (one bucket-count collect of 256 rows + one bucket-partitioned window)
@@ -28,10 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.layout import export_shards, shard_manifest_increment
-
-
-def _meta_dir(target_dir: str, n: int) -> str:
-    return os.path.join(target_dir, "meta", f"v{n}")
+from .versions import bootstrap, run_foreach_batch, versioned_step
 
 
 def _manifest_dir(target_dir: str, n: int) -> str:
@@ -43,14 +38,16 @@ def bootstrap_manifest_v0(init_docs: DataFrame, target_dir: str,
                           id_col: str = "doc_id") -> None:
     """Rank the initial corpus (batch 0 of the arrival order) and write
     manifest b0 + metadata v0 (the running total)."""
-    if os.path.exists(os.path.join(_meta_dir(target_dir, 0), "_SUCCESS")):
-        return
     spark = init_docs.sparkSession
-    m0 = export_shards(init_docs.select(id_col), docs_per_shard, id_col)
-    m0.write.mode("overwrite").parquet(_manifest_dir(target_dir, 0))
-    n0 = spark.read.parquet(_manifest_dir(target_dir, 0)).count()
-    spark.createDataFrame([(n0,)], "n_total long") \
-        .write.mode("overwrite").parquet(_meta_dir(target_dir, 0))
+
+    def write_v0(out: str) -> None:
+        m0 = export_shards(init_docs.select(id_col), docs_per_shard, id_col)
+        m0.write.mode("overwrite").parquet(_manifest_dir(target_dir, 0))
+        n0 = spark.read.parquet(_manifest_dir(target_dir, 0)).count()
+        spark.createDataFrame([(n0,)], "n_total long") \
+            .write.mode("overwrite").parquet(out)
+
+    bootstrap(os.path.join(target_dir, "meta"), write_v0)
 
 
 def streaming_shard_manifest(docs_stream: DataFrame,
@@ -64,28 +61,22 @@ def streaming_shard_manifest(docs_stream: DataFrame,
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        n_so_far = spark.read.parquet(
-            _meta_dir(target_dir, batch_id)).collect()[0]["n_total"]
-        inc = shard_manifest_increment(
-            int(n_so_far), batch.select(id_col), docs_per_shard, id_col)
-        inc.write.mode("overwrite").parquet(
-            _manifest_dir(target_dir, batch_id + 1))
-        n_new = spark.read.parquet(
-            _manifest_dir(target_dir, batch_id + 1)).count()
-        spark.createDataFrame([(int(n_so_far) + n_new,)], "n_total long") \
-            .write.mode("overwrite").parquet(
-                _meta_dir(target_dir, batch_id + 1))
 
-    q = (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+        def step(prev: str, out: str) -> None:
+            n_so_far = spark.read.parquet(prev).collect()[0]["n_total"]
+            inc = shard_manifest_increment(
+                int(n_so_far), batch.select(id_col), docs_per_shard, id_col)
+            inc.write.mode("overwrite").parquet(
+                _manifest_dir(target_dir, batch_id + 1))
+            n_new = spark.read.parquet(
+                _manifest_dir(target_dir, batch_id + 1)).count()
+            spark.createDataFrame([(int(n_so_far) + n_new,)],
+                                  "n_total long") \
+                .write.mode("overwrite").parquet(out)
+
+        versioned_step(os.path.join(target_dir, "meta"), batch_id, step)
+
+    run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def read_manifest(spark, target_dir: str) -> DataFrame:

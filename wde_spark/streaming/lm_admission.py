@@ -5,15 +5,16 @@ cutoff are QUARANTINED at admission (written to an append-only ledger
 with their scores, for audit/reprocessing — never silently dropped), and
 the survivors flow into the standard deduplicating corpus admission
 (`dedup_admission._admit_batch`: same COW version ledger, same
-`dedup_increment` semantics, optional drift maintainer).
+`dedup_increment` semantics, optional drift maintainer). The gate runs
+inside the admission's versioned step, so a batch's quarantine ledger is
+complete whenever its corpus version is.
 
 The LM is FROZEN at bootstrap (trained once on the init corpus and
 persisted as a parquet table) — scoring is then a pure per-document
 function, so the gate is batching-invariant and the whole composition
-keeps the admission path's replay contract: a replayed batch rewrites the
-same corpus version and the same quarantine ledger directory with the
-same bytes. Streaming ≡ batch is pinned in tests: the final corpus
-equals a flat `dedup_corpus` re-run over init ∪ {docs scoring >= cutoff}.
+keeps the admission path's replay contract. Streaming ≡ batch is pinned
+in tests: the final corpus equals a flat `dedup_corpus` re-run over
+init ∪ {docs scoring >= cutoff}.
 
 At 100 TB: scoring a batch is one bigram explode + one join against the
 LM (broadcast while the LM fits, shuffle on w1 otherwise — see
@@ -31,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..operators.lm_score import lm_quality, train_bigram_lm
 from .dedup_admission import _admit_batch, bootstrap_v0
+from .versions import read_batch_ledger, run_foreach_batch
 
 
 def streaming_lm_dedup_admission(
@@ -62,40 +64,27 @@ def streaming_lm_dedup_admission(
         train_bigram_lm(init_corpus, text_col, id_col) \
             .write.mode("overwrite").parquet(lm_dir)
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        lm = spark.read.parquet(lm_dir)
+    def gate(batch: DataFrame, batch_id: int) -> DataFrame:
+        lm = batch.sparkSession.read.parquet(lm_dir)
         scores = lm_quality(batch, lm, text_col, id_col)
-        ok_ids = scores.filter(F.col("avg_logp") >= cutoff).select(id_col)
+        ok_ids = scores.filter(F.col("avg_logp") >= cutoff) \
+            .select(id_col)
         scores.join(ok_ids, id_col, "left_anti") \
             .write.mode("overwrite").parquet(
                 os.path.join(quarantine_dir, f"b{batch_id}"))
-        admitted = batch.join(ok_ids, id_col, "left_semi")
-        _admit_batch(admitted, batch_id, target_dir, text_col, id_col,
-                     num_hashes, bands, shingle_k, threshold, max_bucket,
-                     drift_dir)
+        return batch.join(ok_ids, id_col, "left_semi")
 
-    q = (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        _admit_batch(batch, batch_id, target_dir, text_col, id_col,
+                     num_hashes, bands, shingle_k, threshold, max_bucket,
+                     drift_dir, gate)
+
+    run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def read_quarantine(spark, quarantine_dir: str) -> DataFrame:
     """The quarantine ledger: (id, n_bigrams, avg_logp) per rejected
     document, one immutable directory per batch."""
-    import glob
-
-    from .versions import _is_uri
-
-    if not _is_uri(quarantine_dir) and \
-            not glob.glob(os.path.join(quarantine_dir, "b*")):
-        return spark.createDataFrame(
-            [], "doc_id long, n_bigrams long, avg_logp double")
-    return spark.read.parquet(os.path.join(quarantine_dir, "b*"))
+    return read_batch_ledger(
+        spark, quarantine_dir,
+        "doc_id long, n_bigrams long, avg_logp double")

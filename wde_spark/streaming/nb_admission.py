@@ -12,8 +12,9 @@ survivors flow into the standard deduplicating corpus admission
 `dedup_increment` semantics).
 
 Because the model is frozen, classification is a pure per-document
-function — the gate is batching-invariant, so the composition keeps the
-admission path's replay contract, and streaming ≡ batch is pinnable: the
+function — the gate is batching-invariant; it runs inside the
+admission's versioned step, so the composition keeps the admission
+path's replay contract, and streaming ≡ batch is pinnable: the
 final corpus equals a flat `dedup_corpus` re-run over
 init ∪ {batch docs predicted in keep_labels}.
 
@@ -34,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..operators.classifier import nb_classify, train_naive_bayes
 from .dedup_admission import _admit_batch, bootstrap_v0
+from .versions import read_batch_ledger, run_foreach_batch
 
 
 def streaming_nb_dedup_admission(
@@ -75,11 +77,10 @@ def streaming_nb_dedup_admission(
         priors.write.mode("overwrite").parquet(p_dir)
     ledger_dir = os.path.join(target_dir, "predictions")
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
+    def gate(batch: DataFrame, batch_id: int) -> DataFrame:
         spark = batch.sparkSession
-        model = spark.read.parquet(m_dir)
-        priors = spark.read.parquet(p_dir)
-        preds = nb_classify(batch, model, priors, text_col, id_col)
+        preds = nb_classify(batch, spark.read.parquet(m_dir),
+                            spark.read.parquet(p_dir), text_col, id_col)
         preds.write.mode("overwrite").parquet(
             os.path.join(ledger_dir, f"b{batch_id}"))
         ok_ids = preds.filter(F.col("pred_label").isin(keep_labels)) \
@@ -87,34 +88,19 @@ def streaming_nb_dedup_admission(
         preds.join(ok_ids, id_col, "left_anti") \
             .write.mode("overwrite").parquet(
                 os.path.join(quarantine_dir, f"b{batch_id}"))
-        admitted = batch.join(ok_ids, id_col, "left_semi")
-        _admit_batch(admitted, batch_id, target_dir, text_col, id_col,
-                     num_hashes, bands, shingle_k, threshold, max_bucket,
-                     drift_dir)
+        return batch.join(ok_ids, id_col, "left_semi")
 
-    q = (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        _admit_batch(batch, batch_id, target_dir, text_col, id_col,
+                     num_hashes, bands, shingle_k, threshold, max_bucket,
+                     drift_dir, gate)
+
+    run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def read_predictions(spark, target_dir: str) -> DataFrame:
     """The prediction ledger: (id, pred_label, score, margin) per scored
     document, one immutable directory per batch."""
-    import glob
-
-    from .versions import _is_uri
-
-    ledger_dir = os.path.join(target_dir, "predictions")
-    if not _is_uri(ledger_dir) and \
-            not glob.glob(os.path.join(ledger_dir, "b*")):
-        return spark.createDataFrame(
-            [], "doc_id long, pred_label string, score double, "
-                "margin double")
-    return spark.read.parquet(os.path.join(ledger_dir, "b*"))
+    return read_batch_ledger(
+        spark, os.path.join(target_dir, "predictions"),
+        "doc_id long, pred_label string, score double, margin double")

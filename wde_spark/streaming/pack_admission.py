@@ -25,12 +25,11 @@ most the open capacity of the batch's bins — and the gain is that the
 fold stays bit-replayable in SQL: the driver oracle runs the recursive-CTE
 FFD replay per (bucket, batch) and offsets bin ids by a window sum.
 
-Replay contract: like `streaming/export_admission.py`, the offset comes
-from the PREVIOUS version's metadata (read at `v{batch_id}`, written at
-`v{batch_id+1}`) and the in-batch fold is deterministic (salted-md5
-buckets, weight-desc/id-asc order), so a foreachBatch replay rewrites the
-same manifest and metadata bytes — exactly-once effect without a
-transactional sink.
+Like `streaming/export_admission.py`, the offset comes from the PREVIOUS
+metadata version and the in-batch fold is deterministic (salted-md5
+buckets, weight-desc/id-asc order); each batch is a
+`versions.versioned_step` over `meta/`, with the manifest written inside
+the step.
 
 At 100 TB: per batch this is ONE shuffle of the batch on the bucket key
 into the grouped Arrow fold, plus an n_buckets-row broadcast join and an
@@ -46,10 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.layout import ffd_pack
-
-
-def _meta_dir(target_dir: str, n: int) -> str:
-    return os.path.join(target_dir, "meta", f"v{n}")
+from .versions import bootstrap, run_foreach_batch, versioned_step
 
 
 def _manifest_dir(target_dir: str, n: int) -> str:
@@ -79,12 +75,13 @@ def ffd_pack_increment(offsets: DataFrame, batch: DataFrame, seq_len: int,
 def bootstrap_pack_meta_v0(spark, target_dir: str,
                            n_buckets: int = 8) -> None:
     """Write metadata v0: zero bins in every bucket."""
-    if os.path.exists(os.path.join(_meta_dir(target_dir, 0), "_SUCCESS")):
-        return
-    spark.createDataFrame([(b, 0) for b in range(n_buckets)],
-                          "bucket long, bins_so_far long") \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(_meta_dir(target_dir, 0))
+
+    def write_v0(out: str) -> None:
+        spark.createDataFrame([(b, 0) for b in range(n_buckets)],
+                              "bucket long, bins_so_far long") \
+            .coalesce(1).write.mode("overwrite").parquet(out)
+
+    bootstrap(os.path.join(target_dir, "meta"), write_v0)
 
 
 def streaming_ffd_manifest(docs_stream: DataFrame, target_dir: str,
@@ -102,37 +99,31 @@ def streaming_ffd_manifest(docs_stream: DataFrame, target_dir: str,
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         sp = batch.sparkSession
-        off = sp.read.parquet(_meta_dir(target_dir, batch_id))
-        inc = ffd_pack_increment(off, batch, seq_len, weight_col,
-                                 id_col, salt, n_buckets) \
-            .withColumn("batch_no", F.lit(batch_id).cast("long"))
-        inc.write.mode("overwrite").parquet(
-            _manifest_dir(target_dir, batch_id))
-        written = sp.read.parquet(_manifest_dir(target_dir, batch_id))
-        new_tops = written.groupBy("bucket").agg(
-            F.max("bin_id").alias("_top"))
-        nxt = (
-            off.join(new_tops, "bucket", "left")
-            .select(
-                "bucket",
-                F.greatest(F.col("bins_so_far"),
-                           F.coalesce("_top", F.lit(0)))
-                .cast("long").alias("bins_so_far"),
-            )
-        )
-        nxt.coalesce(1).write.mode("overwrite").parquet(
-            _meta_dir(target_dir, batch_id + 1))
 
-    q = (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+        def step(prev: str, out: str) -> None:
+            off = sp.read.parquet(prev)
+            inc = ffd_pack_increment(off, batch, seq_len, weight_col,
+                                     id_col, salt, n_buckets) \
+                .withColumn("batch_no", F.lit(batch_id).cast("long"))
+            inc.write.mode("overwrite").parquet(
+                _manifest_dir(target_dir, batch_id))
+            written = sp.read.parquet(_manifest_dir(target_dir, batch_id))
+            new_tops = written.groupBy("bucket").agg(
+                F.max("bin_id").alias("_top"))
+            nxt = (
+                off.join(new_tops, "bucket", "left")
+                .select(
+                    "bucket",
+                    F.greatest(F.col("bins_so_far"),
+                               F.coalesce("_top", F.lit(0)))
+                    .cast("long").alias("bins_so_far"),
+                )
+            )
+            nxt.coalesce(1).write.mode("overwrite").parquet(out)
+
+        versioned_step(os.path.join(target_dir, "meta"), batch_id, step)
+
+    run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def read_pack_manifest(spark, target_dir: str) -> DataFrame:

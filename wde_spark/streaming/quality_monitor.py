@@ -24,26 +24,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.quality import Check, run_expectations
+from .versions import read_batch_ledger, run_foreach_batch
 
 
 def read_metrics(spark, target_dir: str) -> DataFrame:
     """The full metrics ledger: (batch_id, check, violations, total, ok).
     A ledger with zero completed batches (empty stream, or a monitor that
-    has not run yet) is a valid state and returns an empty table rather
-    than a path-not-found analysis error. The glob empty-ledger probe is
-    local-filesystem-only, so it runs only for plain paths; a scheme'd
-    ledger (hdfs://, s3a://) falls through to the Spark read — the same
-    URI split `versions._is_uri` applies everywhere else in the ledger
-    stack."""
-    import glob
-
-    from .versions import _is_uri
-
-    if not _is_uri(target_dir) and not glob.glob(os.path.join(target_dir, "b*")):
-        return spark.createDataFrame(
-            [], "batch_id long, check string, violations long, "
-                "total long, ok boolean")
-    return spark.read.parquet(os.path.join(target_dir, "b*"))
+    has not run yet) reads as an empty table."""
+    return read_batch_ledger(
+        spark, target_dir,
+        "batch_id long, check string, violations long, total long, "
+        "ok boolean")
 
 
 def streaming_quality_monitor(
@@ -64,13 +55,4 @@ def streaming_quality_monitor(
             .select("batch_id", "check", "violations", "total", "ok") \
             .write.mode("overwrite").parquet(out)
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    run_foreach_batch(stream, _apply, checkpoint_dir)

@@ -24,9 +24,7 @@ to one-shot `rendezvous_shard` at the final size — and `n_moves` counts
 exactly the growth steps (after the doc's arrival) where consecutive
 map sizes disagree, which a SQL oracle replays per doc.
 
-Same COW version-directory layout as the other admission families:
-deterministic content + fixed version name per batch_id → idempotent
-under foreachBatch's at-least-once replay.
+Each step is a `versions.versioned_step` (v{batch_id} -> v{batch_id+1}).
 
 At 100 TB: the state is one row per doc (the routing table IS the
 product), each growth step rewrites only rows + a per-row argmax — no
@@ -37,13 +35,11 @@ executor must perform.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.layout import rendezvous_shard
-from .cdc import latest_version_dir
+from .versions import latest_version_dir, run_foreach_batch, versioned_step
 
 BASE_SHARDS_DEFAULT = 6
 MAX_SHARDS = 64  # HRW plan-size limit: rendezvous_shard unrolls one
@@ -59,16 +55,7 @@ def apply_shard_batch(
     salt: str = "hrw",
 ) -> None:
     """One maintenance step: migrate v{batch_id} to the grown map and
-    append the arriving docs as v{batch_id + 1}.
-
-    Reads the batch-aligned previous version, NOT latest: under
-    foreachBatch at-least-once replay, batch b can re-run after v{b+1}
-    was already written — latest would then double-count batch b's own
-    rows (and overwrite the path being read). Missing v{batch_id} ==
-    first batch == empty prior table, matching the
-    embedding_admission/sketch_maintenance pattern, so a replayed step
-    is a pure function of (v{batch_id}, batch) and idempotent."""
-    spark = batch.sparkSession
+    append the arriving docs as v{batch_id + 1}."""
     n_new = base_shards + batch_id + 1
     if n_new > MAX_SHARDS:
         raise ValueError(
@@ -83,22 +70,23 @@ def apply_shard_batch(
         F.lit(batch_id).cast("int").alias("arrived_batch"),
         F.lit(0).cast("int").alias("n_moves"),
     )
-    prev = os.path.join(target_dir, f"v{batch_id}")
-    if os.path.exists(os.path.join(prev, "_SUCCESS")):
-        cur = spark.read.parquet(prev)
-        resh = rendezvous_shard(id_col, n_new, salt)
-        migrated = cur.select(
-            id_col,
-            resh.alias("shard"),
-            "arrived_batch",
-            (F.col("n_moves")
-             + (resh != F.col("shard")).cast("int")).alias("n_moves"),
-        )
-        merged = migrated.unionByName(fresh)
-    else:
+
+    def step(prev, out: str) -> None:
         merged = fresh
-    out = os.path.join(target_dir, f"v{batch_id + 1}")
-    merged.write.mode("overwrite").parquet(out)
+        if prev is not None:
+            cur = batch.sparkSession.read.parquet(prev)
+            resh = rendezvous_shard(id_col, n_new, salt)
+            migrated = cur.select(
+                id_col,
+                resh.alias("shard"),
+                "arrived_batch",
+                (F.col("n_moves")
+                 + (resh != F.col("shard")).cast("int")).alias("n_moves"),
+            )
+            merged = migrated.unionByName(fresh)
+        merged.write.mode("overwrite").parquet(out)
+
+    versioned_step(target_dir, batch_id, step)
 
 
 def streaming_shard_maintain(
@@ -112,22 +100,12 @@ def streaming_shard_maintain(
     """Run the doc stream to completion (availableNow — static test
     input), maintaining the routing table under `target_dir` as COW
     versions; the map size when batch b lands is base_shards + b + 1."""
-    os.makedirs(target_dir, exist_ok=True)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_shard_batch(batch, batch_id, target_dir, id_col,
                           base_shards, salt)
 
-    q = (
-        doc_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    run_foreach_batch(doc_stream, _apply, checkpoint_dir)
 
 
 def read_routing(spark, target_dir: str) -> DataFrame:

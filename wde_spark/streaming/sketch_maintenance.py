@@ -13,19 +13,35 @@ table is NOT an approximation of the batch pipeline: it is bit-for-bit the
 same sketch state the one-shot batch aggregation would produce, proven in
 `tests/test_streaming_sketches.py`.
 
-Same copy-on-write version-directory layout as `streaming/cdc.py`:
-deterministic content + fixed version name per batch_id → idempotent under
-foreachBatch's at-least-once replay.
+Copy-on-write versions through `versions.versioned_step`: batch b merges
+onto `v{b}` and commits `v{b+1}`; a replayed batch is a no-op.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .cdc import latest_version_dir
+from .versions import latest_version_dir, run_foreach_batch, versioned_step
+
+
+def _maintain(stream: DataFrame, group_cols: list[str], sketch: Column,
+              merge, target_dir: str, checkpoint_dir: str) -> None:
+    """Fold each batch's per-group `sketch` into the stored table with the
+    `merge` aggregate (sketch column -> merged sketch column)."""
+
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        def step(prev, out: str) -> None:
+            fresh = batch.groupBy(*group_cols).agg(sketch)
+            if prev is not None:
+                fresh = (batch.sparkSession.read.parquet(prev)
+                         .unionByName(fresh).groupBy(*group_cols)
+                         .agg(merge))
+            fresh.write.mode("overwrite").parquet(out)
+
+        versioned_step(target_dir, batch_id, step)
+
+    run_foreach_batch(stream, _apply, checkpoint_dir)
 
 
 def streaming_sketch_maintain(
@@ -38,36 +54,11 @@ def streaming_sketch_maintain(
 ) -> None:
     """Run the stream to completion (availableNow — static test input),
     maintaining one HLL sketch row per group under `target_dir`."""
-    os.makedirs(target_dir, exist_ok=True)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = batch.groupBy(*group_cols).agg(
-            F.hll_sketch_agg(F.col(value_col), F.lit(lg_k))
-            .alias("distinct_sketch"))
-        try:
-            cur = spark.read.parquet(latest_version_dir(target_dir))
-            merged = (
-                cur.unionByName(fresh)
-                .groupBy(*group_cols)
-                .agg(F.hll_union_agg("distinct_sketch")
-                     .alias("distinct_sketch"))
-            )
-        except FileNotFoundError:
-            merged = fresh
-        out = os.path.join(target_dir, f"v{batch_id + 1}")
-        merged.write.mode("overwrite").parquet(out)
-
-    q = (
-        events_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    _maintain(events_stream, group_cols,
+              F.hll_sketch_agg(F.col(value_col), F.lit(lg_k))
+              .alias("distinct_sketch"),
+              F.hll_union_agg("distinct_sketch").alias("distinct_sketch"),
+              target_dir, checkpoint_dir)
 
 
 def read_estimates(spark, target_dir: str, group_cols: list[str]) -> DataFrame:
@@ -91,41 +82,15 @@ def streaming_quantile_maintain(
     One honesty caveat the HLL form does not have: KLL merge is exact in
     RANK GUARANTEE but not idempotent — re-merging the same batch inserts
     its items twice, (slightly) re-weighting the compactors. The
-    copy-on-write version naming (same batch_id → same version dir,
-    derived from the PREVIOUS version) is what makes replay safe here,
-    not the algebra; `tests/test_streaming_sketches.py` covers the
-    replay-by-rewrite path."""
-    os.makedirs(target_dir, exist_ok=True)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = batch.groupBy(*group_cols).agg(
-            F.kll_sketch_agg_double(F.col(value_col).cast("double"),
-                                    F.lit(k)).alias("quantile_sketch"))
-        prev = os.path.join(target_dir, f"v{batch_id}")
-        if os.path.exists(prev):
-            cur = spark.read.parquet(prev)
-            merged = (
-                cur.unionByName(fresh)
-                .groupBy(*group_cols)
-                .agg(F.kll_merge_agg_double("quantile_sketch")
-                     .alias("quantile_sketch"))
-            )
-        else:
-            merged = fresh
-        out = os.path.join(target_dir, f"v{batch_id + 1}")
-        merged.write.mode("overwrite").parquet(out)
-
-    q = (
-        events_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    copy-on-write step (`versions.versioned_step`: a replayed batch whose
+    version landed is a no-op) is what makes replay safe here, not the
+    algebra; `tests/test_streaming_sketches.py` covers the replay path."""
+    _maintain(events_stream, group_cols,
+              F.kll_sketch_agg_double(F.col(value_col).cast("double"),
+                                      F.lit(k)).alias("quantile_sketch"),
+              F.kll_merge_agg_double("quantile_sketch")
+              .alias("quantile_sketch"),
+              target_dir, checkpoint_dir)
 
 
 def read_quantiles(spark, target_dir: str, group_cols: list[str],

@@ -7,10 +7,8 @@ and the batch's spans land in an append-only per-batch ledger — the live
 "what boilerplate did today's crawl re-import?" feed a training-data
 pipeline tails, instead of re-running the corpus-wide job.
 
-Version/replay discipline is `dedup_admission`'s: batch b reads state
-version v{b} and writes v{b+1} plus spans ledger `b{b}`, every output a
-pure function of two immutable inputs (the COW state snapshot and the
-batch), so a crash-replayed batch rewrites the same bytes. Spans of
+Batch b is a `versions.versioned_step`: it reads state version v{b} and
+writes v{b+1} plus spans ledger `b{b}`. Spans of
 PRIOR documents are immutable by `substr_increment`'s declared
 asymmetry — history is never edited, which is exactly what makes the
 ledger append-only.
@@ -29,19 +27,20 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.dedup import substr_increment, substr_state
-
-
-def _version_dir(target_dir: str, n: int) -> str:
-    return os.path.join(target_dir, f"v{n}")
+from .versions import (bootstrap, read_version, run_foreach_batch,
+                       versioned_step)
 
 
 def bootstrap_substr_v0(init_corpus: DataFrame, target_dir: str,
                         k: int = 16, text_col: str = "text",
                         id_col: str = "doc_id") -> None:
     """One full scan of the initial corpus → v0 window-count state."""
-    substr_state(init_corpus, k, text_col, id_col) \
-        .write.mode("overwrite") \
-        .parquet(os.path.join(_version_dir(target_dir, 0), "state"))
+
+    def write_v0(out: str) -> None:
+        substr_state(init_corpus, k, text_col, id_col) \
+            .write.mode("overwrite").parquet(os.path.join(out, "state"))
+
+    bootstrap(target_dir, write_v0)
 
 
 def streaming_substr_maintain(docs_stream: DataFrame,
@@ -55,29 +54,22 @@ def streaming_substr_maintain(docs_stream: DataFrame,
     bootstrap_substr_v0(init_corpus, target_dir, k, text_col, id_col)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        state = spark.read.parquet(
-            os.path.join(_version_dir(target_dir, batch_id), "state"))
-        spans, new_state = substr_increment(
-            state, batch, k, min_count, text_col, id_col)
-        new_state.write.mode("overwrite").parquet(
-            os.path.join(_version_dir(target_dir, batch_id + 1), "state"))
-        spans.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            id_col, "span_start", "span_end", "n_windows",
-        ).write.mode("overwrite").parquet(
-            os.path.join(target_dir, "spans", f"b{batch_id}"))
+        def step(prev: str, out: str) -> None:
+            state = batch.sparkSession.read.parquet(
+                os.path.join(prev, "state"))
+            spans, new_state = substr_increment(
+                state, batch, k, min_count, text_col, id_col)
+            new_state.write.mode("overwrite").parquet(
+                os.path.join(out, "state"))
+            spans.select(
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                id_col, "span_start", "span_end", "n_windows",
+            ).write.mode("overwrite").parquet(
+                os.path.join(target_dir, "spans", f"b{batch_id}"))
 
-    q = (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+        versioned_step(target_dir, batch_id, step)
+
+    run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def read_spans(spark, target_dir: str) -> DataFrame:
@@ -87,5 +79,4 @@ def read_spans(spark, target_dir: str) -> DataFrame:
 
 def read_state(spark, target_dir: str, version: int) -> DataFrame:
     """Time-travel read of a state version."""
-    return spark.read.parquet(
-        os.path.join(_version_dir(target_dir, version), "state"))
+    return read_version(spark, target_dir, version, "state")

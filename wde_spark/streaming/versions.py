@@ -1,27 +1,54 @@
-"""Version-ledger utilities for the copy-on-write snapshot directories the
-streaming sinks maintain (`cdc.py`, `sketch_maintenance.py`,
-`dedup_admission.py`, `embedding_admission.py`): every batch writes an
-immutable `v{n}` directory, so the ledger gives three things a table
-format gives — time travel (read any past version), history, and
-compaction (drop old versions; each version is self-contained, so
-compaction is a directory delete, never a rewrite).
+"""The one module that knows how a streaming version is named, committed
+and read.
 
-Filesystem abstraction: plain local paths use `os`/`shutil` directly (no
-JVM round-trip); any path with a URI scheme (`hdfs://…`, `s3a://…`,
-`file:///…`) routes through the Hadoop FileSystem API via the session's
-JVM — listing, existence checks, and recursive deletes all go through
-`org.apache.hadoop.fs.FileSystem`, so time travel and compaction work
-against whatever object store the cluster's Hadoop conf can reach. The
-`spark` argument is only required for scheme'd paths (falls back to the
-active session); local-path behavior is byte-for-byte what it was.
+Every copy-on-write sink (`cdc`, `sketch_maintenance` HLL and KLL,
+`bloom_admission`, `budget_admission`, `curriculum`, `shard_migration`,
+`dedup_admission` and the `lm_`/`dsir_`/`nb_admission` gates in front of
+it, `embedding_admission`, `substr_admission`, `export_admission`,
+`pack_admission` and `codebook_maintenance`) rolls its state forward as
+immutable `v{n}` directories through `versioned_step`, and bootstraps
+`v0` through `bootstrap`. A version is written into a staging directory
+`_v{n}.stage-<unique>` and published by one `os.rename`, so a `v{n}`
+directory only ever appears complete:
+
+  * a replayed batch whose version already landed is a no-op, which
+    makes the sinks exactly-once on top of foreachBatch's at-least-once
+    delivery;
+  * a crash before the rename leaves only a staging directory, which
+    `version_history` and Spark's readers both ignore (leading `_`), and
+    the restart recomputes the batch from the same `v{batch_id}`;
+  * the side ledgers a step writes (`manifest/b*`, `spans/b*`,
+    quarantine, drift) are written before the rename, so "`v{n}`
+    exists" implies they are complete. An uncommitted batch's side
+    ledger entry may be visible until the restart rewrites it with the
+    same bytes.
+
+This is the commit rule of table formats such as Delta Lake: a version
+is published only once it is complete. The ledger gives what a table
+format gives: time travel (read any past version), history, and
+compaction (each version is self-contained, so dropping old versions is
+a directory delete, never a rewrite). Version writes are local-filesystem
+renames; the merge-on-read delta ledgers (`compaction.py`) have their own
+commit protocol.
+
+Filesystem abstraction for the readers: plain local paths use
+`os`/`shutil` directly (no JVM round-trip); any path with a URI scheme
+(`hdfs://…`, `s3a://…`, `file:///…`) routes through the Hadoop
+FileSystem API via the session's JVM — listing, existence checks, and
+recursive deletes all go through `org.apache.hadoop.fs.FileSystem`, so
+time travel and compaction work against whatever object store the
+cluster's Hadoop conf can reach. The `spark` argument is only required
+for scheme'd paths (falls back to the active session).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import posixpath
 import re
 import shutil
+import uuid
 
 _SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*:/")
 
@@ -70,6 +97,14 @@ def version_history(target_dir: str, spark=None) -> list[int]:
                   if n.startswith("v") and n[1:].isdigit())
 
 
+def latest_version_dir(target_dir: str, spark=None) -> str:
+    """The newest version directory under `target_dir`."""
+    versions = version_history(target_dir, spark)
+    if not versions:
+        raise FileNotFoundError(f"no snapshot versions under {target_dir}")
+    return _join(target_dir, f"v{max(versions)}")
+
+
 def version_dir(target_dir: str, n: int, spark=None) -> str:
     d = _join(target_dir, f"v{n}")
     if _is_uri(target_dir):
@@ -110,3 +145,74 @@ def compact_versions(target_dir: str, keep_last: int = 2,
         for n in drop:
             shutil.rmtree(_join(target_dir, f"v{n}"))
     return drop
+
+
+def _commit(stage: str, target_dir: str, n: int) -> None:
+    """Publish a complete staging directory as `v{n}` and drop the staging
+    directories earlier crashed attempts at `v{n}` left behind."""
+    os.rename(stage, os.path.join(target_dir, f"v{n}"))
+    for stale in glob.glob(os.path.join(target_dir, f"_v{n}.stage-*")):
+        shutil.rmtree(stale, ignore_errors=True)
+
+
+def _write_version(target_dir: str, n: int, write) -> None:
+    os.makedirs(target_dir, exist_ok=True)
+    stage = os.path.join(target_dir, f"_v{n}.stage-{uuid.uuid4().hex}")
+    write(stage)
+    _commit(stage, target_dir, n)
+
+
+def bootstrap(target_dir: str, write_v0) -> None:
+    """Write `v0` with `write_v0(out)` unless it is already committed. A
+    crash before the commit leaves no `v0`, so the next start redoes the
+    whole bootstrap."""
+    if not os.path.isdir(os.path.join(target_dir, "v0")):
+        _write_version(target_dir, 0, write_v0)
+
+
+def versioned_step(target_dir: str, batch_id: int, step) -> None:
+    """One copy-on-write batch step `v{batch_id}` -> `v{batch_id + 1}`.
+
+    Returns without running anything when `v{batch_id + 1}` already
+    exists: the batch's effect has landed, so a replay is a no-op.
+    Otherwise calls `step(prev, out)`, where `prev` is `v{batch_id}` and
+    `out` a staging directory, then commits `out` as `v{batch_id + 1}`.
+    `prev` is None only for batch 0 of a sink with no bootstrap; for any
+    other batch a missing `v{batch_id}` raises, so lost state is never
+    read as empty."""
+    if os.path.isdir(os.path.join(target_dir, f"v{batch_id + 1}")):
+        return
+    prev = os.path.join(target_dir, f"v{batch_id}")
+    if not os.path.isdir(prev):
+        if batch_id:
+            raise FileNotFoundError(
+                f"version v{batch_id} not found under {target_dir}; "
+                f"batch {batch_id} needs it as its previous version")
+        prev = None
+    _write_version(target_dir, batch_id + 1, lambda out: step(prev, out))
+
+
+def run_foreach_batch(stream, apply, checkpoint_dir: str) -> None:
+    """Run `stream` to completion (availableNow) with `apply(batch,
+    batch_id)` as its foreachBatch sink."""
+    q = (
+        stream.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+
+
+def read_batch_ledger(spark, ledger_dir: str, empty_schema: str):
+    """Every `b{n}` directory of an append-only per-batch ledger. A ledger
+    with no batch yet is a valid state and reads as an empty frame of
+    `empty_schema`. The glob probe is local-only, so a scheme'd ledger
+    (hdfs://, s3a://) goes straight to the Spark read."""
+    if not _is_uri(ledger_dir) and \
+            not glob.glob(os.path.join(ledger_dir, "b*")):
+        return spark.createDataFrame([], empty_schema)
+    return spark.read.parquet(_join(ledger_dir, "b*"))
