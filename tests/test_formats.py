@@ -192,6 +192,35 @@ def test_qoi_null_routes():
         encode_qoi(bad, channels=3)                     # 3ch needs opaque
 
 
+def test_qoi_decode_memory_bounded():
+    """A run-only payload of ~17 KB decodes to 4 MB of pixels. The
+    decoder's peak allocation must stay within 3x the output, so the
+    64M-pixel cap bounds a hostile payload's memory near its decoded
+    size."""
+    import struct
+    import tracemalloc
+
+    import numpy as np
+
+    from wde_spark.operators.qoi_codec import decode_qoi
+
+    w = h = 1024
+    runs, rest = divmod(w * h, 62)
+    payload = (b"qoif" + struct.pack(">II", w, h) + bytes((4, 0))
+               + b"\xFD" * runs + bytes((0xC0 | (rest - 1),))
+               + b"\x00" * 7 + b"\x01")
+    tracemalloc.start()
+    try:
+        out = decode_qoi(payload)
+        _cur, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert out is not None and out[:2] == (w, h)
+    assert np.array_equal(out[2][0, 0], [0, 0, 0, 255])
+    assert (out[2] == out[2][0, 0]).all()
+    assert peak <= 3 * out[2].nbytes, (peak, out[2].nbytes)
+
+
 def test_attach_qoi_stats_dispatch(spark):
     import numpy as np
 

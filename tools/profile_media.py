@@ -44,18 +44,9 @@ def run_pair(name: str, attach, stats, docs: pd.DataFrame,
 
 def kernels():
     """(name, attach_kernel, stats_kernel) triples mirroring the headline
-    media queries. Kernels are extracted by calling the operator builders'
-    inner functions via a stub: we re-implement the pairing by importing
-    the module-level pieces the operators close over."""
+    media queries; `FakeDF` captures the kernel that `_map_rows` builds."""
     from wde_spark.operators import multimodal as M
 
-    # Recreate the inner kernels by invoking the public operators on a
-    # sentinel object is not possible without Spark; instead the operators
-    # keep their kernels as closures. We rebuild them through a tiny shim
-    # DataFrame-free path: each attach_/stats_ function is called with a
-    # DuckTyped frame? Simplest robust approach: copy the zip-loop bodies
-    # by calling the module functions that ARE importable (codecs) the way
-    # the kernels do. To avoid drift we instead monkeypatch mapInPandas.
     class FakeDF:
         def __init__(self):
             self.kernel = None

@@ -94,13 +94,9 @@ def quant_table(quality: int) -> np.ndarray:
     return np.clip(q, 1, 255)
 
 
-@functools.lru_cache(maxsize=None)
 def _canonical_codes(bits, vals):
     """Canonical Huffman code assignment per T.81 C.2: returns
-    {symbol: (code, length)}. Cached — bits/vals are the fixed Annex-K
-    tuples for the encoder (2 tables ever) and parsed header tuples for
-    any decoder that wants it, so rebuilding the dict per image was pure
-    per-row overhead in the Arrow kernels."""
+    {symbol: (code, length)}."""
     out = {}
     code = 0
     k = 0
@@ -111,6 +107,12 @@ def _canonical_codes(bits, vals):
             k += 1
         code <<= 1
     return out
+
+
+# The encoders use only the two fixed Annex-K tables, so their code dicts
+# are built once, at import.
+_DC_CODES = _canonical_codes(_DC_BITS, _DC_VALS)
+_AC_CODES = _canonical_codes(_AC_BITS, _AC_VALS)
 
 
 class _BitWriter:
@@ -278,8 +280,6 @@ def encode_jpeg_gray(pixels: np.ndarray, quality: int = 50) -> bytes:
     assert h > 0 and w > 0
     arr = np.pad(arr, ((0, -h % 8), (0, -w % 8)), mode="edge")
     q = quant_table(quality)
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
     bw = _BitWriter()
     # gather blocks in scan order (by, bx), batch the DCT+quantize
     blocks = (arr.reshape(arr.shape[0] // 8, 8, arr.shape[1] // 8, 8)
@@ -287,7 +287,7 @@ def encode_jpeg_gray(pixels: np.ndarray, quality: int = 50) -> bytes:
     zzmat, last = _fdct_quant_blocks(blocks, q)
     prev_dc = 0
     for zz, ln in zip(zzmat.tolist(), last):
-        prev_dc = _encode_block_zz(zz, ln, dc_codes, ac_codes, bw, prev_dc)
+        prev_dc = _encode_block_zz(zz, ln, _DC_CODES, _AC_CODES, bw, prev_dc)
     return _headers(q, h, w, 1) + bw.flush() + b"\xFF\xD9"
 
 
@@ -328,8 +328,6 @@ def encode_jpeg_rgb(pixels: np.ndarray, quality: int = 50) -> bytes:
     ycc = rgb_to_ycbcr(arr)
     ycc = np.pad(ycc, ((0, -h % 8), (0, -w % 8), (0, 0)), mode="edge")
     q = quant_table(quality)
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
     bw = _BitWriter()
     # gather blocks in scan order (by, bx, c) — one MCU = one block per
     # component — and batch the DCT+quantize across all of them
@@ -339,7 +337,7 @@ def encode_jpeg_rgb(pixels: np.ndarray, quality: int = 50) -> bytes:
     prev = [0, 0, 0]
     for i, (zz, ln) in enumerate(zip(zzmat.tolist(), last)):
         c = i % 3
-        prev[c] = _encode_block_zz(zz, ln, dc_codes, ac_codes, bw, prev[c])
+        prev[c] = _encode_block_zz(zz, ln, _DC_CODES, _AC_CODES, bw, prev[c])
     return _headers(q, h, w, 3) + bw.flush() + b"\xFF\xD9"
 
 
@@ -374,8 +372,6 @@ def encode_jpeg_420(pixels: np.ndarray, quality: int = 50,
     cb_pl = subsample_420(ycc[:, :, 1])
     cr_pl = subsample_420(ycc[:, :, 2])
     q = quant_table(quality)
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
     bw = _BitWriter()
     n_mcu_x = ycc.shape[1] // 16
     n_mcu_y = ycc.shape[0] // 16
@@ -399,7 +395,7 @@ def encode_jpeg_420(pixels: np.ndarray, quality: int = 50,
         for b in range(6):
             c = comp_of[b]
             prev[c] = _encode_block_zz(zz_rows[base + b], last[base + b],
-                                       dc_codes, ac_codes, bw, prev[c])
+                                       _DC_CODES, _AC_CODES, bw, prev[c])
         if restart and (mcu_i + 1) % restart == 0 and mcu_i + 1 < total:
             bw.marker(0xD0 + rst)
             rst = (rst + 1) % 8

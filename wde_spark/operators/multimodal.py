@@ -12,6 +12,11 @@ Design for 100 TB:
 - frame sampling EXPLODES rows — the kernel emits frames incrementally per
   batch so a long video never materializes all frames in memory at once.
 
+Every row-local kernel is built by `_map_rows` from a plain function of
+one input row that returns that row's output tuples; the `attach_*`
+fixtures go through `_attach`, which feeds each doc's id and utf-8 text
+bytes to a payload synth.
+
 Codec status: the IMAGE modality has a REAL codec — a dependency-free PNG
 implementation (`operators/png_codec.py`, stdlib zlib + numpy; 8-bit,
 gray/RGB/RGBA/palette, all five scanline filters) used by
@@ -32,12 +37,30 @@ to productionize that tier.
 from __future__ import annotations
 
 import hashlib
+import struct
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .avi_codec import decode_avi, encode_avi, encode_avi_rle8
+from .bmp_codec import decode_bmp, encode_bmp, is_bmp
+from .gif_codec import (decode_gif, decode_gif_frames, encode_gif,
+                        encode_gif_animated, is_gif)
+from .jpeg_codec import (_parse_scan_params, decode_jpeg_gray,
+                         decode_jpeg_rgb, decode_restart_segment,
+                         encode_jpeg_420, encode_jpeg_gray, encode_jpeg_rgb,
+                         is_jpeg, jpeg_n_components, reassemble_segments,
+                         split_restart_segments, ycbcr_to_rgb)
+from .png_codec import (decode_png, encode_png, encode_png_auto,
+                        encode_png_palette, is_png)
+from .qoi_codec import decode_qoi, encode_qoi, is_qoi
+from .tiff_codec import decode_tiff, encode_tiff, is_tiff
+from .wav_codec import (decode_wav, encode_wav, encode_wav_adpcm,
+                        encode_wav_g711)
 
 FRAME_BYTES = 1024  # stub "frame" granularity for the video kind
 
@@ -61,6 +84,60 @@ def _fp_decimal(flat) -> str:
             b"-".join([_DEC_U8[v] for v in flat.tolist()])).hexdigest()
     return hashlib.md5(
         "-".join(map(str, flat.tolist())).encode()).hexdigest()
+
+
+def _sum_fp(arr) -> tuple[int, str]:
+    """(int64 sum, `_fp_decimal`) of every value of `arr`, row-major."""
+    flat = arr.reshape(-1)
+    return int(flat.sum(dtype="int64")), _fp_decimal(flat)
+
+
+def _map_rows(df: DataFrame, cols: list[str], schema: T.StructType,
+              fn) -> DataFrame:
+    """`df`'s `cols` through one Arrow-batched Python stage: `fn(*row)`
+    returns the output tuples (none, one or many) of one input row, and
+    each input batch yields one `schema` batch. Row-local, zero shuffle."""
+    names = schema.fieldNames()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [out for row in zip(*(pdf[c] for c in cols))
+                    for out in fn(*row)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(kernel, schema=schema)
+
+
+MEDIA_SCHEMA = T.StructType([
+    T.StructField("media_id", T.LongType()),
+    T.StructField("payload", T.BinaryType()),
+])
+
+
+def _attach(docs: DataFrame, id_col: str, text_col: str, synth) -> DataFrame:
+    """(media_id, payload) per doc, payload = `synth(doc_id, utf8)` over
+    the utf-8 bytes of the text (b"" when NULL)."""
+    return _map_rows(
+        docs, [id_col, text_col], MEDIA_SCHEMA,
+        lambda mid, text: [(mid, synth(mid, (text or "").encode("utf-8")))])
+
+
+def _tile(data: bytes, idx, shape) -> np.ndarray:
+    """The text-derived pixel rule: pixel k = byte (idx[k] mod L) of the
+    text, all zeros when the text is empty."""
+    if not data:
+        return np.zeros(shape, dtype=np.uint8)
+    b = np.frombuffer(data, dtype=np.uint8)
+    return b[idx % len(data)].reshape(shape)
+
+
+def _palette16(j) -> np.ndarray:
+    """The 16-colour map of the indexed fixtures: index j -> RGBA
+    ((19j)%256, (37j)%256, (53j)%256, 0 if j = 0 else 255)."""
+    jj = j.astype(np.uint16)
+    return np.dstack([(jj * 19) % 256, (jj * 37) % 256, (jj * 53) % 256,
+                      np.where(j == 0, 0, 255)]).astype(np.uint8)
+
 
 MEDIA_META_TYPE = T.StructType([
     T.StructField("width", T.IntegerType()),
@@ -123,24 +200,18 @@ def frame_sample(media: DataFrame, every: int = 4,
     payload; images/audio pass through as a single frame 0. Row-local,
     streaming per Arrow batch."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for mid, kind, payload in zip(
-                    pdf["media_id"], pdf["kind"], pdf["payload"]):
-                payload = bytes(payload)
-                if kind == "video":
-                    n_frames = (len(payload) + frame_bytes - 1) // frame_bytes
-                    for fi in range(0, n_frames, every):
-                        fb = _decode_frame(payload, fi * frame_bytes, frame_bytes)
-                        out.append((mid, kind, fi, fb, len(fb)))
-                else:
-                    out.append((mid, kind, 0, payload, len(payload)))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in FRAME_SCHEMA.fields])
+    def row(mid, kind, payload):
+        payload = bytes(payload)
+        if kind != "video":
+            yield mid, kind, 0, payload, len(payload)
+            return
+        n_frames = (len(payload) + frame_bytes - 1) // frame_bytes
+        for fi in range(0, n_frames, every):
+            fb = _decode_frame(payload, fi * frame_bytes, frame_bytes)
+            yield mid, kind, fi, fb, len(fb)
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        kernel, schema=FRAME_SCHEMA)
+    return _map_rows(media, ["media_id", "kind", "payload"], FRAME_SCHEMA,
+                     row)
 
 
 def extract_features(media: DataFrame, n_buckets: int = 8,
@@ -158,36 +229,24 @@ def extract_features(media: DataFrame, n_buckets: int = 8,
     unchanged, so the byte-histogram oracle over the text corpora is
     untouched. n_bytes stays the TRANSPORT size either way (the dedup /
     layout planners key on bytes stored, not bytes decoded)."""
-    import numpy as np
-
-    from .png_codec import decode_png, is_png
-
     shift = 8 - n_buckets.bit_length() + 1
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                    pdf["media_id"], pdf["kind"], pdf["payload"]):
-                payload = bytes(payload)
-                n = len(payload)
-                b = None
-                if decode_images and kind == "image" and is_png(payload):
-                    decoded = decode_png(payload)
-                    if decoded is not None:
-                        b = decoded[3].reshape(-1)
-                if b is None:
-                    b = np.frombuffer(payload, dtype=np.uint8)
-                hist = np.bincount(b >> shift,
-                                   minlength=n_buckets)[:n_buckets]
-                feat = (hist / max(int(b.size), 1)).astype(float).tolist()
-                n_frames = (n + FRAME_BYTES - 1) // FRAME_BYTES
-                rows.append((mid, kind, n, n_frames, feat))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
+    def row(mid, kind, payload):
+        payload = bytes(payload)
+        n = len(payload)
+        b = None
+        if decode_images and kind == "image" and is_png(payload):
+            decoded = decode_png(payload)
+            if decoded is not None:
+                b = decoded[3].reshape(-1)
+        if b is None:
+            b = np.frombuffer(payload, dtype=np.uint8)
+        hist = np.bincount(b >> shift, minlength=n_buckets)[:n_buckets]
+        feat = (hist / max(int(b.size), 1)).astype(float).tolist()
+        return [(mid, kind, n, (n + FRAME_BYTES - 1) // FRAME_BYTES, feat)]
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        kernel, schema=FEATURE_SCHEMA)
+    return _map_rows(media, ["media_id", "kind", "payload"], FEATURE_SCHEMA,
+                     row)
 
 
 def resize_meta(media: DataFrame, max_w: int = 256, max_h: int = 256) -> DataFrame:
@@ -227,27 +286,17 @@ def audio_chunks(media: DataFrame, window: int = 2048,
     its chunks at once."""
     assert hop > 0 and window >= hop
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                n = len(payload)
-                ci = 0
-                for start in range(0, max(n, 1), hop):
-                    cb = _decode_frame(payload, start, window)
-                    out.append((mid, ci, start, cb, len(cb)))
-                    ci += 1
-                    if start + window >= n:
-                        break
-            yield pd.DataFrame(
-                out, columns=[f.name for f in CHUNK_SCHEMA.fields])
+    def row(mid, payload):
+        payload = bytes(payload)
+        n = len(payload)
+        for ci, start in enumerate(range(0, max(n, 1), hop)):
+            cb = _decode_frame(payload, start, window)
+            yield mid, ci, start, cb, len(cb)
+            if start + window >= n:
+                break
 
-    return (
-        media.filter(F.col("kind") == "audio")
-        .select("media_id", "payload")
-        .mapInPandas(kernel, schema=CHUNK_SCHEMA)
-    )
+    return _map_rows(media.filter(F.col("kind") == "audio"),
+                     ["media_id", "payload"], CHUNK_SCHEMA, row)
 
 
 def frame_run_spans(frames: DataFrame, k: int = 3,
@@ -321,6 +370,28 @@ THUMB_STATS_SCHEMA = T.StructType([
     T.StructField("px_fp", T.StringType()),
 ])
 
+PIXEL_FP_SCHEMA = T.StructType([
+    T.StructField("media_id", T.LongType()),
+    T.StructField("width", T.IntegerType()),
+    T.StructField("height", T.IntegerType()),
+    T.StructField("px_fp", T.StringType()),
+    T.StructField("byte_fp", T.StringType()),
+])
+
+ENERGY_SCHEMA = T.StructType([
+    T.StructField("media_id", T.LongType()),
+    T.StructField("win_idx", T.IntegerType()),
+    T.StructField("n_frames", T.IntegerType()),
+    T.StructField("abs_sum", T.LongType()),
+])
+
+
+def _png_gray(data: bytes, filter_type: int) -> bytes:
+    n = len(data)
+    w, h = n % 24 + 8, n % 16 + 8
+    return encode_png(_tile(data, np.arange(w * h), (h, w)),
+                      filter_type=filter_type)
+
 
 def attach_images(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text",
@@ -338,28 +409,8 @@ def attach_images(docs: DataFrame, id_col: str = "doc_id",
     unchanged, but byte-identical texts now yield byte-DIFFERENT payloads
     across filter choices, the re-encoded-duplicate situation
     pixel-fingerprint dedup exists to catch."""
-    import numpy as np
-
-    from .png_codec import encode_png
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                w, h = n % 24 + 8, n % 16 + 8
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    px = b[(np.arange(w * h) % n)].reshape(h, w)
-                else:
-                    px = np.zeros((h, w), dtype=np.uint8)
-                ft = int(mid) % 5 if vary_filters else 0
-                rows.append((mid, encode_png(px, filter_type=ft)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+    return _attach(docs, id_col, text_col, lambda mid, data: _png_gray(
+        data, int(mid) % 5 if vary_filters else 0))
 
 
 def image_pixel_fingerprints(media: DataFrame) -> DataFrame:
@@ -371,31 +422,17 @@ def image_pixel_fingerprints(media: DataFrame) -> DataFrame:
     the codec cannot decode are dropped (they fall back to byte-level
     dedup upstream). Row-local Arrow kernel; the downstream dedup is one
     hash aggregate on px_fp — tier-1 dedup shape at any scale."""
-    import hashlib
 
-    from .png_codec import decode_png
+    def row(mid, payload):
+        payload = bytes(payload)
+        decoded = decode_png(payload)
+        if decoded is None:
+            return []
+        w, h, _ch, px = decoded
+        return [(mid, w, h, _fp_decimal(px.reshape(-1)),
+                 hashlib.md5(payload).hexdigest())]
 
-    schema = ("media_id long, width int, height int, "
-              "px_fp string, byte_fp string")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                decoded = decode_png(payload)
-                if decoded is None:
-                    continue
-                w, h, _ch, px = decoded
-                flat = px.reshape(-1)
-                px_fp = _fp_decimal(flat)
-                rows.append((mid, w, h, px_fp,
-                             hashlib.md5(payload).hexdigest()))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "px_fp", "byte_fp"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=schema)
+    return _map_rows(media, ["media_id", "payload"], PIXEL_FP_SCHEMA, row)
 
 
 def audio_energy_windows(media: DataFrame, window: int = 256) -> DataFrame:
@@ -405,37 +442,24 @@ def audio_energy_windows(media: DataFrame, window: int = 256) -> DataFrame:
     absolute amplitude across channels (the VAD/silence-trim primitive).
     Undecodable payloads drop. Row-local; emits ceil(n/window) rows per
     recording incrementally per Arrow batch."""
-    import numpy as np
-
-    from .wav_codec import decode_wav
-
     assert window > 0
-    schema = ("media_id long, win_idx int, n_frames int, abs_sum long")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                decoded = decode_wav(bytes(payload))
-                if decoded is None:
-                    continue
-                _rate, _ch, bits, samples = decoded
-                s = samples.astype(np.int64)
-                if bits == 8:
-                    s -= 128  # 8-bit PCM is unsigned, 128-centered:
-                    # amplitude is the excursion from 128, so raw abs
-                    # would score silence as full-scale energy
-                a = np.abs(s).sum(axis=1)
-                n = a.shape[0]
-                for wi in range(0, (n + window - 1) // window):
-                    seg = a[wi * window: (wi + 1) * window]
-                    rows.append((mid, wi, int(seg.shape[0]),
-                                 int(seg.sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "win_idx", "n_frames", "abs_sum"])
+    def row(mid, payload):
+        decoded = decode_wav(bytes(payload))
+        if decoded is None:
+            return
+        _rate, _ch, bits, samples = decoded
+        s = samples.astype(np.int64)
+        if bits == 8:
+            s -= 128  # 8-bit PCM is unsigned, 128-centered:
+            # amplitude is the excursion from 128, so raw abs
+            # would score silence as full-scale energy
+        a = np.abs(s).sum(axis=1)
+        for wi in range(0, (a.shape[0] + window - 1) // window):
+            seg = a[wi * window: (wi + 1) * window]
+            yield mid, wi, int(seg.shape[0]), int(seg.sum())
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=schema)
+    return _map_rows(media, ["media_id", "payload"], ENERGY_SCHEMA, row)
 
 
 def resize_images(media: DataFrame, max_w: int = 8,
@@ -449,37 +473,26 @@ def resize_images(media: DataFrame, max_w: int = 8,
     (thumb NULL, dims -1) rather than crash — the `decode_png` contract.
     Row-local, zero shuffle; at 100 TB this is the classic
     embarrassingly-parallel media transform."""
-    import numpy as np
 
-    from .png_codec import decode_png, encode_png_auto
+    def row(mid, payload):
+        decoded = decode_png(bytes(payload))
+        if decoded is None:
+            return [(mid, -1, -1, -1, -1, None)]
+        w, h, _ch, px = decoded
+        scale = min(max_w / w, max_h / h, 1.0)
+        # floor can hit 0 on extreme aspect ratios — a thumbnail
+        # is never smaller than 1px (the oracle mirrors this)
+        tw = max(1, int(w * scale))
+        th = max(1, int(h * scale))
+        ys = (np.arange(th) * h) // th
+        xs = (np.arange(tw) * w) // tw
+        # tier-selecting re-encode: indexed color when exactly
+        # representable (the transport win), truecolor otherwise —
+        # decoded pixels are identical either way, so every
+        # fingerprint oracle is tier-agnostic
+        return [(mid, w, h, tw, th, encode_png_auto(px[ys][:, xs]))]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                decoded = decode_png(bytes(payload))
-                if decoded is None:
-                    rows.append((mid, -1, -1, -1, -1, None))
-                    continue
-                w, h, _ch, px = decoded
-                scale = min(max_w / w, max_h / h, 1.0)
-                # floor can hit 0 on extreme aspect ratios — a thumbnail
-                # is never smaller than 1px (the oracle mirrors this)
-                tw = max(1, int(w * scale))
-                th = max(1, int(h * scale))
-                ys = (np.arange(th) * h) // th
-                xs = (np.arange(tw) * w) // tw
-                thumb = px[ys][:, xs]
-                # tier-selecting re-encode: indexed color when exactly
-                # representable (the transport win), truecolor otherwise —
-                # decoded pixels are identical either way, so every
-                # fingerprint oracle is tier-agnostic
-                rows.append((mid, w, h, tw, th, encode_png_auto(thumb)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in THUMB_SCHEMA.fields])
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=THUMB_SCHEMA)
+    return _map_rows(media, ["media_id", "payload"], THUMB_SCHEMA, row)
 
 
 def thumbnail_stats(thumbs: DataFrame) -> DataFrame:
@@ -490,27 +503,16 @@ def thumbnail_stats(thumbs: DataFrame) -> DataFrame:
     wrong decoder, or a wrong resample all break the fingerprint a SQL
     oracle predicts from the source text alone."""
 
-    from .png_codec import decode_png
+    def row(mid, sw, sh, tw, th, thumb):
+        if thumb is None:
+            return []
+        decoded = decode_png(bytes(thumb))
+        assert decoded is not None, "own encoder must round-trip"
+        w, h, _ch, px = decoded
+        return [(mid, int(sw), int(sh), w, h, *_sum_fp(px))]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, sw, sh, tw, th, thumb in zip(
-                    pdf["media_id"], pdf["src_w"], pdf["src_h"],
-                    pdf["width"], pdf["height"], pdf["thumb"]):
-                if thumb is None:
-                    continue
-                decoded = decode_png(bytes(thumb))
-                assert decoded is not None, "own encoder must round-trip"
-                w, h, _ch, px = decoded
-                flat = px.reshape(-1)
-                fp = _fp_decimal(flat)
-                rows.append((mid, int(sw), int(sh), w, h,
-                             int(flat.sum()), fp))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in THUMB_STATS_SCHEMA.fields])
-
-    return thumbs.mapInPandas(kernel, schema=THUMB_STATS_SCHEMA)
+    return _map_rows(thumbs, THUMB_SCHEMA.fieldNames(), THUMB_STATS_SCHEMA,
+                     row)
 
 
 AUDIO_STATS_SCHEMA = T.StructType([
@@ -524,6 +526,13 @@ AUDIO_STATS_SCHEMA = T.StructType([
 ])
 
 
+def _wav_pcm16(mid, data: bytes) -> bytes:
+    if data:
+        b = np.frombuffer(data, dtype=np.uint8)
+        return encode_wav((b.astype(np.int16) - 128) * 256, 16000)
+    return encode_wav(np.zeros(64, dtype=np.int16), 16000)
+
+
 def attach_audio(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
     """Deterministic REAL-WAV media table: each doc's text bytes become a
@@ -531,25 +540,7 @@ def attach_audio(docs: DataFrame, id_col: str = "doc_id",
     samples when the text is empty), containerized by
     `wav_codec.encode_wav`. Decodable audio whose every sample a SQL
     oracle predicts from the text — the audio twin of `attach_images`."""
-    import numpy as np
-
-    from .wav_codec import encode_wav
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                if data:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    samples = (b.astype(np.int16) - 128) * 256
-                else:
-                    samples = np.zeros(64, dtype=np.int16)
-                rows.append((mid, encode_wav(samples, 16000)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+    return _attach(docs, id_col, text_col, _wav_pcm16)
 
 
 def audio_sample_stats(media: DataFrame) -> DataFrame:
@@ -561,25 +552,14 @@ def audio_sample_stats(media: DataFrame) -> DataFrame:
     parallel media transform; at 100 TB the decode cost scales with
     bytes, never with row joins."""
 
-    from .wav_codec import decode_wav
+    def row(mid, payload):
+        decoded = decode_wav(bytes(payload))
+        if decoded is None:
+            return []
+        rate, ch, bits, samples = decoded
+        return [(mid, rate, ch, bits, samples.shape[0], *_sum_fp(samples))]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                decoded = decode_wav(bytes(payload))
-                if decoded is None:
-                    continue
-                rate, ch, bits, samples = decoded
-                flat = samples.reshape(-1)
-                fp = _fp_decimal(flat)
-                rows.append((mid, rate, ch, bits, samples.shape[0],
-                             int(flat.sum(dtype="int64")), fp))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_STATS_SCHEMA.fields])
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=AUDIO_STATS_SCHEMA)
+    return _map_rows(media, ["media_id", "payload"], AUDIO_STATS_SCHEMA, row)
 
 
 RGBA_STATS_SCHEMA = T.StructType([
@@ -591,6 +571,14 @@ RGBA_STATS_SCHEMA = T.StructType([
     T.StructField("n_transparent", T.LongType()),
     T.StructField("px_fp", T.StringType()),
 ])
+
+
+def _png_palette(mid, data: bytes) -> bytes:
+    n = len(data)
+    w, h = n % 24 + 8, n % 16 + 8
+    rgba = _palette16(_tile(data, np.arange(w * h), (h, w)) % 16)
+    return encode_png_palette(rgba[:, :, :3], alpha=rgba[:, :, 3],
+                              filter_type=int(mid) % 5)
 
 
 def attach_palette_images(docs: DataFrame, id_col: str = "doc_id",
@@ -605,33 +593,15 @@ def attach_palette_images(docs: DataFrame, id_col: str = "doc_id",
     Every decoded RGBA value is a pure function of the text, so the SQL
     oracle predicts the whole image — the palette tier's encode AND the
     tRNS alpha expansion become hash-checked surface."""
-    import numpy as np
+    return _attach(docs, id_col, text_col, _png_palette)
 
-    from .png_codec import encode_png_palette
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                w, h = n % 24 + 8, n % 16 + 8
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    j = (b[(np.arange(w * h) % n)] % 16).reshape(h, w)
-                else:
-                    j = np.zeros((h, w), dtype=np.uint8)
-                jj = j.astype(np.uint16)
-                px = np.dstack([(jj * 19) % 256, (jj * 37) % 256,
-                                (jj * 53) % 256]).astype(np.uint8)
-                alpha = np.where(j == 0, 0, 255).astype(np.uint8)
-                ft = int(mid) % 5
-                rows.append((mid, encode_png_palette(px, alpha=alpha,
-                                                     filter_type=ft)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _wav_adpcm(mid, data: bytes) -> bytes:
+    n = len(data)
+    pred = (data[0] - 128) * 256 if n >= 1 else 0
+    index = data[1] % 89 if n >= 2 else 0
+    dat = _tile(data, np.arange(64), 64).tobytes()
+    return encode_wav_adpcm([(pred, index, dat)], 8000)
 
 
 def attach_audio_adpcm(docs: DataFrame, id_col: str = "doc_id",
@@ -644,29 +614,22 @@ def attach_audio_adpcm(docs: DataFrame, id_col: str = "doc_id",
     step-table state machine. Every decoded sample is a pure function
     of the text that a recursive-CTE SQL oracle replays nibble by
     nibble."""
-    import numpy as np
+    return _attach(docs, id_col, text_col, _wav_adpcm)
 
-    from .wav_codec import encode_wav_adpcm
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                pred = (data[0] - 128) * 256 if n >= 1 else 0
-                index = data[1] % 89 if n >= 2 else 0
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    dat = bytes(b[np.arange(64) % n])
-                else:
-                    dat = b"\x00" * 64
-                rows.append((mid, encode_wav_adpcm(
-                    [(pred, index, dat)], 8000)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _bmp(mid, data: bytes) -> bytes:
+    n = len(data)
+    w, h = n % 18 + 5, n % 13 + 5
+    v = _tile(data, 3 * np.arange(w * h), (h, w))
+    tier = int(mid) % 3
+    if tier == 0:
+        return encode_bmp(v)
+    if tier == 2:
+        return encode_bmp(v, rle=True)
+    vv = v.astype(np.uint16)
+    rgb = np.dstack([vv % 256, (vv + 91) % 256,
+                     (vv + 182) % 256]).astype(np.uint8)
+    return encode_bmp(rgb, top_down=bool(int(mid) % 2))
 
 
 def attach_bmps(docs: DataFrame, id_col: str = "doc_id",
@@ -684,38 +647,20 @@ def attach_bmps(docs: DataFrame, id_col: str = "doc_id",
     Every decoded RGB value is a pure function of the text the SQL
     oracle predicts — header parsing, palette expansion, BGR order,
     both row orders, stride padding, and RLE all hash-checked."""
-    import numpy as np
+    return _attach(docs, id_col, text_col, _bmp)
 
-    from .bmp_codec import encode_bmp
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                w, h = n % 18 + 5, n % 13 + 5
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    v = b[(3 * np.arange(w * h)) % n].reshape(h, w)
-                else:
-                    v = np.zeros((h, w), dtype=np.uint8)
-                tier = int(mid) % 3
-                if tier == 0:
-                    payload = encode_bmp(v)
-                elif tier == 1:
-                    vv = v.astype(np.uint16)
-                    rgb = np.dstack([vv % 256, (vv + 91) % 256,
-                                     (vv + 182) % 256]).astype(np.uint8)
-                    payload = encode_bmp(
-                        rgb, top_down=bool(int(mid) % 2))
-                else:
-                    payload = encode_bmp(v, rle=True)
-                rows.append((mid, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _tiff(mid, data: bytes) -> bytes:
+    n = len(data)
+    w, h = n % 17 + 4, n % 11 + 4
+    v = _tile(data, 5 * np.arange(w * h), (h, w))
+    big = int(mid) % 4 in (2, 3)
+    if int(mid) % 2 == 0:
+        return encode_tiff((v // 64) * 64, big=big)
+    vv = v.astype(np.uint16)
+    rgb = np.dstack([vv % 256, (vv + 77) % 256,
+                     (vv + 154) % 256]).astype(np.uint8)
+    return encode_tiff(rgb, big=big)
 
 
 def attach_tiffs(docs: DataFrame, id_col: str = "doc_id",
@@ -738,35 +683,15 @@ def attach_tiffs(docs: DataFrame, id_col: str = "doc_id",
     PackBits is lossless, so every decoded RGB value is a pure function
     of the text the SQL oracle predicts — IFD parsing, per-row coder
     restarts, repeat and literal packets all hash-checked."""
-    import numpy as np
+    return _attach(docs, id_col, text_col, _tiff)
 
-    from .tiff_codec import encode_tiff
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                w, h = n % 17 + 4, n % 11 + 4
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    v = b[(5 * np.arange(w * h)) % n].reshape(h, w)
-                else:
-                    v = np.zeros((h, w), dtype=np.uint8)
-                big = int(mid) % 4 in (2, 3)
-                if int(mid) % 2 == 0:
-                    payload = encode_tiff((v // 64) * 64, big=big)
-                else:
-                    vv = v.astype(np.uint16)
-                    rgb = np.dstack([vv % 256, (vv + 77) % 256,
-                                     (vv + 154) % 256]).astype(np.uint8)
-                    payload = encode_tiff(rgb, big=big)
-                rows.append((mid, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _jpeg_gray(mid, data: bytes) -> bytes:
+    n = len(data)
+    wb, hb = n % 6 + 2, n % 4 + 2
+    tiles = _tile(data, np.arange(wb * hb), (hb, wb))
+    return encode_jpeg_gray(np.kron(tiles, np.ones((8, 8), np.uint8)),
+                            quality=50)
 
 
 def attach_jpegs(docs: DataFrame, id_col: str = "doc_id",
@@ -781,28 +706,16 @@ def attach_jpegs(docs: DataFrame, id_col: str = "doc_id",
     canonical Huffman, DC DPCM across tiles, byte stuffing — runs on
     production data. General-content (AC) behavior is property-tested
     with bounded error in tests/test_formats.py."""
-    import numpy as np
+    return _attach(docs, id_col, text_col, _jpeg_gray)
 
-    from .jpeg_codec import encode_jpeg_gray
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                wb, hb = n % 6 + 2, n % 4 + 2
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    tiles = b[np.arange(wb * hb) % n].reshape(hb, wb)
-                else:
-                    tiles = np.zeros((hb, wb), dtype=np.uint8)
-                img = np.kron(tiles, np.ones((8, 8), np.uint8))
-                rows.append((mid, encode_jpeg_gray(img, quality=50)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _jpeg_rgb(mid, data: bytes) -> bytes:
+    n = len(data)
+    wb, hb = n % 5 + 2, n % 3 + 2
+    t = np.arange(wb * hb)[:, None] + np.arange(3)
+    tiles = _tile(data, t, (hb, wb, 3))
+    return encode_jpeg_rgb(np.kron(tiles, np.ones((8, 8, 1), np.uint8)),
+                           quality=50)
 
 
 def attach_jpegs_color(docs: DataFrame, id_col: str = "doc_id",
@@ -815,31 +728,16 @@ def attach_jpegs_color(docs: DataFrame, id_col: str = "doc_id",
     predictors. Every decoded RGB value is the composition
     ycbcr_to_rgb(dequant(quant(rgb_to_ycbcr(v)))) of pure integer
     formulas the SQL oracle replays exactly."""
-    import numpy as np
+    return _attach(docs, id_col, text_col, _jpeg_rgb)
 
-    from .jpeg_codec import encode_jpeg_rgb
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                wb, hb = n % 5 + 2, n % 3 + 2
-                t = np.arange(wb * hb)
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    tiles = np.stack(
-                        [b[t % n], b[(t + 1) % n], b[(t + 2) % n]],
-                        axis=1).reshape(hb, wb, 3)
-                else:
-                    tiles = np.zeros((hb, wb, 3), dtype=np.uint8)
-                img = np.kron(tiles, np.ones((8, 8, 1), np.uint8))
-                rows.append((mid, encode_jpeg_rgb(img, quality=50)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _jpeg_420(data: bytes, restart: int) -> bytes:
+    n = len(data)
+    wb, hb = n % 4 + 1, n % 3 + 1
+    t = np.arange(wb * hb)[:, None] + 3 * np.arange(3)
+    tiles = _tile(data, t, (hb, wb, 3))
+    return encode_jpeg_420(np.kron(tiles, np.ones((16, 16, 1), np.uint8)),
+                           quality=50, restart=restart)
 
 
 def attach_jpegs_420(docs: DataFrame, id_col: str = "doc_id",
@@ -853,32 +751,23 @@ def attach_jpegs_420(docs: DataFrame, id_col: str = "doc_id",
     unchanged through the 2x2 chroma subsample, so the decoded pixels
     follow the same integer formula chain as the 4:4:4 tier and the
     SQL oracle predicts every value."""
-    import numpy as np
+    return _attach(docs, id_col, text_col,
+                   lambda mid, data: _jpeg_420(data, int(mid) % 3))
 
-    from .jpeg_codec import encode_jpeg_420
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                wb, hb = n % 4 + 1, n % 3 + 1
-                t = np.arange(wb * hb)
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    tiles = np.stack(
-                        [b[t % n], b[(t + 3) % n], b[(t + 6) % n]],
-                        axis=1).reshape(hb, wb, 3)
-                else:
-                    tiles = np.zeros((hb, wb, 3), dtype=np.uint8)
-                img = np.kron(tiles, np.ones((16, 16, 1), np.uint8))
-                rows.append((mid, encode_jpeg_420(
-                    img, quality=50, restart=int(mid) % 3)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _qoi(mid, data: bytes) -> bytes:
+    n = len(data)
+    w, h = n % 21 + 4, n % 15 + 4
+    p = np.arange(w * h)
+    r = _tile(data, p // 4, w * h).astype(np.uint16)
+    g = (r + p % 3) % 256
+    bl = (r + 2 * (p % 5)) % 256
+    if int(mid) % 2 == 0:
+        a = np.full(w * h, 255, dtype=np.uint16)
+    else:
+        a = np.where(r % 7 == 0, 0, 255).astype(np.uint16)
+    return encode_qoi(np.stack([r, g, bl, a], axis=1).astype(
+        np.uint8).reshape(h, w, 4))
 
 
 def attach_qoi(docs: DataFrame, id_col: str = "doc_id",
@@ -892,36 +781,14 @@ def attach_qoi(docs: DataFrame, id_col: str = "doc_id",
     (RGBA literals + index recalls). Every decoded RGBA value is a pure
     function of the text the SQL oracle predicts — whatever op sequence
     the greedy encoder chose."""
-    import numpy as np
+    return _attach(docs, id_col, text_col, _qoi)
 
-    from .qoi_codec import encode_qoi
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                w, h = n % 21 + 4, n % 15 + 4
-                p = np.arange(w * h)
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    r = b[(p // 4) % n].astype(np.uint16)
-                else:
-                    r = np.zeros(w * h, dtype=np.uint16)
-                g = (r + p % 3) % 256
-                bl = (r + 2 * (p % 5)) % 256
-                if int(mid) % 2 == 0:
-                    a = np.full(w * h, 255, dtype=np.uint16)
-                else:
-                    a = np.where(r % 7 == 0, 0, 255).astype(np.uint16)
-                rgba = np.stack([r, g, bl, a], axis=1).astype(
-                    np.uint8).reshape(h, w, 4)
-                rows.append((mid, encode_qoi(rgba)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _gif(mid, data: bytes) -> bytes:
+    n = len(data)
+    w, h = n % 20 + 6, n % 14 + 6
+    j = _tile(data, np.arange(w * h), (h, w)) % 16
+    return encode_gif(_palette16(j), interlace=bool(int(mid) % 2))
 
 
 def attach_gifs(docs: DataFrame, id_col: str = "doc_id",
@@ -935,32 +802,20 @@ def attach_gifs(docs: DataFrame, id_col: str = "doc_id",
     LZW compressor (`gif_codec.encode_gif`) means the decoder's
     dictionary-growth path runs on every row. Every decoded RGBA value
     is a pure function of the text the SQL oracle predicts."""
-    import numpy as np
+    return _attach(docs, id_col, text_col, _gif)
 
-    from .gif_codec import encode_gif
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                w, h = n % 20 + 6, n % 14 + 6
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    j = (b[(np.arange(w * h) % n)] % 16).reshape(h, w)
-                else:
-                    j = np.zeros((h, w), dtype=np.uint8)
-                jj = j.astype(np.uint16)
-                rgba = np.dstack([
-                    (jj * 19) % 256, (jj * 37) % 256, (jj * 53) % 256,
-                    np.where(j == 0, 0, 255)]).astype(np.uint8)
-                rows.append((mid, encode_gif(
-                    rgba, interlace=bool(int(mid) % 2))))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _gif_animated(mid, data: bytes) -> bytes:
+    n = len(data)
+    W, H, nf = n % 16 + 10, n % 12 + 10, n % 3 + 2
+    patches = []
+    for g in range(nf):
+        left, top = (3 * g) % (W - 3), (2 * g) % (H - 3)
+        iw = min(W - left, n % 7 + 3)
+        ih = min(H - top, n % 5 + 3)
+        j = _tile(data, np.arange(iw * ih) + 11 * g, (ih, iw)) % 16
+        patches.append((left, top, _palette16(j), 1))
+    return encode_gif_animated(patches, W, H, interlace_odd=True)
 
 
 def attach_animated_gifs(docs: DataFrame, id_col: str = "doc_id",
@@ -975,38 +830,7 @@ def attach_animated_gifs(docs: DataFrame, id_col: str = "doc_id",
     disposal 1 (leave) — the compositing the SQL oracle replays as
     "latest covering non-transparent patch wins"; disposal 2/3 are
     pinned by unit tests. Odd frames are stored interlaced."""
-    import numpy as np
-
-    from .gif_codec import encode_gif_animated
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                W, H, nf = n % 16 + 10, n % 12 + 10, n % 3 + 2
-                b = (np.frombuffer(data, dtype=np.uint8)
-                     if n else None)
-                patches = []
-                for g in range(nf):
-                    left, top = (3 * g) % (W - 3), (2 * g) % (H - 3)
-                    iw = min(W - left, n % 7 + 3)
-                    ih = min(H - top, n % 5 + 3)
-                    p = np.arange(iw * ih)
-                    j = ((b[(p + 11 * g) % n] % 16) if b is not None
-                         else np.zeros(iw * ih, np.uint8)).reshape(
-                             ih, iw).astype(np.uint16)
-                    rgba = np.dstack([
-                        (j * 19) % 256, (j * 37) % 256, (j * 53) % 256,
-                        np.where(j == 0, 0, 255)]).astype(np.uint8)
-                    patches.append((left, top, rgba, 1))
-                rows.append((mid, encode_gif_animated(
-                    patches, W, H, interlace_odd=True)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+    return _attach(docs, id_col, text_col, _gif_animated)
 
 
 ANIM_STATS_SCHEMA = T.StructType([
@@ -1026,26 +850,54 @@ def animation_frame_stats(media: DataFrame) -> DataFrame:
     the row-major RGBA decimal values). Undecodable payloads drop.
     Row-local Arrow kernel emitting one row per frame."""
 
-    from .gif_codec import decode_gif_frames
+    def row(mid, payload):
+        decoded = decode_gif_frames(bytes(payload))
+        if decoded is None:
+            return []
+        w, h, frames = decoded
+        return [(mid, fi, w, h, *_sum_fp(frames[fi]))
+                for fi in range(frames.shape[0])]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                decoded = decode_gif_frames(bytes(payload))
-                if decoded is None:
-                    continue
-                w, h, frames = decoded
-                for fi in range(frames.shape[0]):
-                    flat = frames[fi].reshape(-1)
-                    fp = _fp_decimal(flat)
-                    rows.append((mid, fi, w, h,
-                                 int(flat.sum(dtype="int64")), fp))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ANIM_STATS_SCHEMA.fields])
+    return _map_rows(media, ["media_id", "payload"], ANIM_STATS_SCHEMA, row)
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=ANIM_STATS_SCHEMA)
+
+# Sniffed image containers: (magic test, decoder, decoded channels); each
+# decoder returns (w, h, (h, w, channels) pixels) or None.
+_IMAGE_CODECS = (
+    (is_gif, decode_gif, 4),
+    (is_bmp, decode_bmp, 3),
+    (is_tiff, decode_tiff, 3),
+    (is_qoi, decode_qoi, 4),
+)
+
+
+def _decode_image(raw: bytes):
+    """(w, h, channels, (h, w, channels) pixels) of a sniffed image
+    payload — PNG when no other magic matches — or None."""
+    if is_jpeg(raw):
+        # dispatch on the SOF component count BEFORE any scan decode —
+        # otherwise every color file pays the full gray entropy decode
+        # just to be rejected
+        nc = jpeg_n_components(raw)
+        if nc == 1:
+            j = decode_jpeg_gray(raw)
+            return None if j is None else (j[0], j[1], 1, j[2][:, :, None])
+        if nc == 3:
+            j3 = decode_jpeg_rgb(raw)
+            return None if j3 is None else (j3[0], j3[1], 3, j3[2])
+        return None
+    for is_x, decode_x, ch in _IMAGE_CODECS:
+        if is_x(raw):
+            d = decode_x(raw)
+            return None if d is None else (d[0], d[1], ch, d[2])
+    return decode_png(raw)
+
+
+def _rgba_row(mid, w, h, ch, px) -> tuple:
+    """One RGBA_STATS_SCHEMA row of decoded (h, w, ch) pixels."""
+    px_sum, fp = _sum_fp(px)
+    n_tr = int((px[:, :, -1] == 0).sum()) if ch in (2, 4) else 0
+    return mid, w, h, ch, px_sum, n_tr, fp
 
 
 def image_rgba_stats(media: DataFrame) -> DataFrame:
@@ -1059,65 +911,31 @@ def image_rgba_stats(media: DataFrame) -> DataFrame:
     formats. Undecodable payloads drop (the raw-byte path upstream).
     Row-local Arrow kernel, zero shuffle."""
 
-    from .bmp_codec import decode_bmp, is_bmp
-    from .gif_codec import decode_gif, is_gif
-    from .jpeg_codec import (decode_jpeg_gray, decode_jpeg_rgb, is_jpeg,
-                             jpeg_n_components)
-    from .png_codec import decode_png
-    from .qoi_codec import decode_qoi, is_qoi
-    from .tiff_codec import decode_tiff, is_tiff
+    def row(mid, payload):
+        decoded = _decode_image(bytes(payload))
+        return [] if decoded is None else [_rgba_row(mid, *decoded)]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                if is_gif(raw):
-                    g = decode_gif(raw)
-                    decoded = None if g is None else (
-                        g[0], g[1], 4, g[2])
-                elif is_bmp(raw):
-                    b = decode_bmp(raw)
-                    decoded = None if b is None else (
-                        b[0], b[1], 3, b[2])
-                elif is_tiff(raw):
-                    t = decode_tiff(raw)
-                    decoded = None if t is None else (
-                        t[0], t[1], 3, t[2])
-                elif is_qoi(raw):
-                    q = decode_qoi(raw)
-                    decoded = None if q is None else (
-                        q[0], q[1], 4, q[2])
-                elif is_jpeg(raw):
-                    # dispatch on the SOF component count BEFORE any
-                    # scan decode — otherwise every color file pays the
-                    # full gray entropy decode just to be rejected
-                    nc = jpeg_n_components(raw)
-                    if nc == 1:
-                        j = decode_jpeg_gray(raw)
-                        decoded = None if j is None else (
-                            j[0], j[1], 1, j[2][:, :, None])
-                    elif nc == 3:
-                        j3 = decode_jpeg_rgb(raw)
-                        decoded = None if j3 is None else (
-                            j3[0], j3[1], 3, j3[2])
-                    else:
-                        decoded = None
-                else:
-                    decoded = decode_png(raw)
-                if decoded is None:
-                    continue
-                w, h, ch, px = decoded
-                flat = px.reshape(-1)
-                n_tr = int((px[:, :, -1] == 0).sum()) if ch in (2, 4) else 0
-                fp = _fp_decimal(flat)
-                rows.append((mid, w, h, ch, int(flat.sum(dtype="int64")),
-                             n_tr, fp))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RGBA_STATS_SCHEMA.fields])
+    return _map_rows(media, ["media_id", "payload"], RGBA_STATS_SCHEMA, row)
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=RGBA_STATS_SCHEMA)
+
+def _wav_mixed(mid, data: bytes) -> bytes:
+    fmt = int(mid) % 3
+    b = np.frombuffer(data, dtype=np.uint8) if data else None
+    if fmt == 0:
+        s = ((b.astype(np.int16) - 128) * 256
+             if b is not None else np.zeros(64, np.int16))
+        return encode_wav(s, 16000)
+    if fmt == 1:
+        if b is not None:
+            left = (b.astype(np.int16) - 128) * 256
+            right = (((b.astype(np.int32) + 64) % 256 - 128)
+                     * 256).astype(np.int16)
+            s = np.stack([left, right], axis=1)
+        else:
+            s = np.zeros((64, 2), np.int16)
+        return encode_wav(s, 16000)
+    s = b if b is not None else np.full(64, 128, np.uint8)
+    return encode_wav(s, 8000, bits=8)
 
 
 def attach_audio_mixed(docs: DataFrame, id_col: str = "doc_id",
@@ -1134,41 +952,16 @@ def attach_audio_mixed(docs: DataFrame, id_col: str = "doc_id",
     Empty text yields 64 silent frames in the row's format (0 for 16-bit,
     128 for 8-bit). Every decoded sample is a pure function of the text,
     so SQL oracles predict energy profiles across all three formats."""
-    import numpy as np
+    return _attach(docs, id_col, text_col, _wav_mixed)
 
-    from .wav_codec import encode_wav
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                fmt = int(mid) % 3
-                if data:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                else:
-                    b = None
-                if fmt == 0:
-                    s = ((b.astype(np.int16) - 128) * 256
-                         if b is not None else np.zeros(64, np.int16))
-                    rows.append((mid, encode_wav(s, 16000)))
-                elif fmt == 1:
-                    if b is not None:
-                        left = (b.astype(np.int16) - 128) * 256
-                        right = (((b.astype(np.int32) + 64) % 256 - 128)
-                                 * 256).astype(np.int16)
-                        s = np.stack([left, right], axis=1)
-                    else:
-                        s = np.zeros((64, 2), np.int16)
-                    rows.append((mid, encode_wav(s, 16000)))
-                else:
-                    s = (b if b is not None
-                         else np.full(64, 128, np.uint8))
-                    rows.append((mid, encode_wav(s, 8000, bits=8)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _wav_g711(mid, data: bytes) -> bytes:
+    law = "mu" if int(mid) % 2 == 0 else "a"
+    if data:
+        codes = np.frombuffer(data, dtype=np.uint8)
+    else:
+        codes = np.full(64, 0xFF if law == "mu" else 0xD5, np.uint8)
+    return encode_wav_g711(codes, 8000, law)
 
 
 def attach_audio_g711(docs: DataFrame, id_col: str = "doc_id",
@@ -1181,26 +974,7 @@ def attach_audio_g711(docs: DataFrame, id_col: str = "doc_id",
     formulas exactly. Empty text yields 64 frames of the code that
     expands to the quietest level (0xFF -> 0 for mu-law, 0xD5 -> +8
     for A-law, which has no zero code)."""
-    import numpy as np
-
-    from .wav_codec import encode_wav_g711
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                law = "mu" if int(mid) % 2 == 0 else "a"
-                if data:
-                    codes = np.frombuffer(data, dtype=np.uint8)
-                else:
-                    codes = np.full(
-                        64, 0xFF if law == "mu" else 0xD5, np.uint8)
-                rows.append((mid, encode_wav_g711(codes, 8000, law)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+    return _attach(docs, id_col, text_col, _wav_g711)
 
 
 VIDEO_STATS_SCHEMA = T.StructType([
@@ -1212,6 +986,19 @@ VIDEO_STATS_SCHEMA = T.StructType([
     T.StructField("px_sum", T.LongType()),
     T.StructField("px_fp", T.StringType()),
 ])
+
+
+def _avi(mid, data: bytes) -> bytes:
+    n = len(data)
+    nf, w, h = n % 3 + 2, n % 12 + 4, n % 8 + 4
+    idx = np.arange(w * h) + 7 * np.arange(nf)[:, None]
+    v = _tile(data, idx, (nf, h, w))
+    if int(mid) % 2 == 0:
+        return encode_avi(v, fps=10)
+    vv = v.astype(np.uint16)
+    rgb = np.stack([vv % 256, (vv + 85) % 256, (vv + 170) % 256],
+                   axis=3).astype(np.uint8)
+    return encode_avi(rgb, fps=10)
 
 
 def attach_video(docs: DataFrame, id_col: str = "doc_id",
@@ -1226,39 +1013,14 @@ def attach_video(docs: DataFrame, id_col: str = "doc_id",
     is a pure function of the text, so SQL oracles predict the whole
     clip — container geometry, palette expansion, BGR ordering,
     bottom-up row flip, and stride padding all become hash-checked."""
-    import numpy as np
+    return _attach(docs, id_col, text_col, _avi)
 
-    from .avi_codec import encode_avi
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                nf, w, h = n % 3 + 2, n % 12 + 4, n % 8 + 4
-                p = np.arange(w * h)
-                vs = []
-                for f in range(nf):
-                    if n:
-                        b = np.frombuffer(data, dtype=np.uint8)
-                        vs.append(b[(p + 7 * f) % n].reshape(h, w))
-                    else:
-                        vs.append(np.zeros((h, w), dtype=np.uint8))
-                v = np.stack(vs)
-                if int(mid) % 2 == 0:
-                    payload = encode_avi(v, fps=10)
-                else:
-                    vv = v.astype(np.uint16)
-                    rgb = np.stack([vv % 256, (vv + 85) % 256,
-                                    (vv + 170) % 256],
-                                   axis=3).astype(np.uint8)
-                    payload = encode_avi(rgb, fps=10)
-                rows.append((mid, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+def _avi_rle8(mid, data: bytes) -> bytes:
+    n = len(data)
+    nf, w, h = n % 3 + 2, n % 11 + 4, n % 7 + 4
+    idx = np.arange(w * h) // 3 + 5 * np.arange(nf)[:, None]
+    return encode_avi_rle8(_tile(data, idx, (nf, h, w)), fps=10)
 
 
 def attach_video_rle(docs: DataFrame, id_col: str = "doc_id",
@@ -1272,30 +1034,7 @@ def attach_video_rle(docs: DataFrame, id_col: str = "doc_id",
     absolute/literal packets — both halves of the RLE grammar are
     exercised by production data, and every decoded RGB value is still
     a pure function of the text the SQL oracle predicts."""
-    import numpy as np
-
-    from .avi_codec import encode_avi_rle8
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                nf, w, h = n % 3 + 2, n % 11 + 4, n % 7 + 4
-                p = np.arange(w * h)
-                vs = []
-                for f in range(nf):
-                    if n:
-                        b = np.frombuffer(data, dtype=np.uint8)
-                        vs.append(b[(p // 3 + 5 * f) % n].reshape(h, w))
-                    else:
-                        vs.append(np.zeros((h, w), dtype=np.uint8))
-                rows.append((mid, encode_avi_rle8(np.stack(vs), fps=10)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+    return _attach(docs, id_col, text_col, _avi_rle8)
 
 
 def video_frame_stats(media: DataFrame) -> DataFrame:
@@ -1307,26 +1046,15 @@ def video_frame_stats(media: DataFrame) -> DataFrame:
     kernel emitting one row per frame incrementally — a long clip never
     materializes outside its own batch."""
 
-    from .avi_codec import decode_avi
+    def row(mid, payload):
+        decoded = decode_avi(bytes(payload))
+        if decoded is None:
+            return []
+        fps, w, h, frames = decoded
+        return [(mid, fi, float(fps), w, h, *_sum_fp(frames[fi]))
+                for fi in range(frames.shape[0])]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                decoded = decode_avi(bytes(payload))
-                if decoded is None:
-                    continue
-                fps, w, h, frames = decoded
-                for fi in range(frames.shape[0]):
-                    flat = frames[fi].reshape(-1)
-                    fp = _fp_decimal(flat)
-                    rows.append((mid, fi, float(fps), w, h,
-                                 int(flat.sum(dtype="int64")), fp))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_STATS_SCHEMA.fields])
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=VIDEO_STATS_SCHEMA)
+    return _map_rows(media, ["media_id", "payload"], VIDEO_STATS_SCHEMA, row)
 
 
 def decode_jpeg_restart_distributed(spark, payload: bytes,
@@ -1349,13 +1077,6 @@ def decode_jpeg_restart_distributed(spark, payload: bytes,
     cluster's default parallelism — per-task scheduling latency
     dominates when segments are small, so one task per core beats one
     task per segment."""
-    import struct
-
-    import numpy as np
-
-    from .jpeg_codec import (decode_restart_segment, reassemble_segments,
-                             split_restart_segments)
-
     sp = split_restart_segments(bytes(payload))
     if sp is None:
         return None
@@ -1433,32 +1154,8 @@ def attach_jpegs_420_dri(docs: DataFrame, id_col: str = "doc_id",
     decode surface, where splittability is the point. Same macro-tile
     pixel formula, so the same SQL oracle predicts every value (the
     interval changes the transport framing, never the pixels)."""
-    import numpy as np
-
-    from .jpeg_codec import encode_jpeg_420
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                wb, hb = n % 4 + 1, n % 3 + 1
-                t = np.arange(wb * hb)
-                if n:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    tiles = np.stack(
-                        [b[t % n], b[(t + 3) % n], b[(t + 6) % n]],
-                        axis=1).reshape(hb, wb, 3)
-                else:
-                    tiles = np.zeros((hb, wb, 3), dtype=np.uint8)
-                img = np.kron(tiles, np.ones((16, 16, 1), np.uint8))
-                rows.append((mid, encode_jpeg_420(
-                    img, quality=50, restart=int(mid) % 2 + 1)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema="media_id long, payload binary")
+    return _attach(docs, id_col, text_col,
+                   lambda mid, data: _jpeg_420(data, int(mid) % 2 + 1))
 
 
 def segment_parallel_rgba_stats(media: DataFrame) -> DataFrame:
@@ -1487,16 +1184,8 @@ def segment_parallel_rgba_stats(media: DataFrame) -> DataFrame:
     drop contract; a partial image is never reassembled. The JFIF
     header rides on seg_id 0 ONLY (not once per segment), so the
     Arrow exchange and the media_id shuffle carry it once per image."""
-    import struct
-
-    import numpy as np
-
-    from .jpeg_codec import (_parse_scan_params, decode_restart_segment,
-                             reassemble_segments, ycbcr_to_rgb)
-
     def split_kernel(batches: Iterator[pd.DataFrame]) \
             -> Iterator[pd.DataFrame]:
-        from .jpeg_codec import split_restart_segments
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -1586,10 +1275,7 @@ def segment_parallel_rgba_stats(media: DataFrame) -> DataFrame:
                 else:
                     px = planes[0][:, :, None]
                     ch = 1
-                flat = px.reshape(-1)
-                fp = _fp_decimal(flat)
-                rows.append((int(mid), w, h, ch,
-                             int(flat.sum(dtype="int64")), 0, fp))
+                rows.append(_rgba_row(int(mid), w, h, ch, px))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in RGBA_STATS_SCHEMA.fields])
 
