@@ -267,3 +267,22 @@ def test_fp_decimal_matches_naive_join():
     ]
     for flat in cases:
         assert _fp_decimal(flat) == naive(flat)
+
+
+def test_gif_and_avi_decoders_return_writable_arrays():
+    """The GIF LZW and AVI BI_RLE8 decoders hand back arrays built over a
+    bytearray, so callers may write into them (an array over `bytes` is
+    read-only and fails the first in-place edit)."""
+    import numpy as np
+
+    from wde_spark.operators.avi_codec import _decode_rle8, _rle8_frame
+    from wde_spark.operators.gif_codec import _lzw_decode, _lzw_encode
+
+    idx = (np.arange(48) % 7).astype(np.uint8)
+    lzw = _lzw_decode(_lzw_encode(idx, 3), 3, idx.size)
+    assert np.array_equal(lzw, idx) and lzw.flags.writeable
+
+    plane = (np.arange(12) % 5).astype(np.uint8).reshape(3, 4)
+    rle = _decode_rle8(_rle8_frame(plane), 4, 3)
+    assert np.array_equal(rle[::-1], plane) and rle.flags.writeable
+    lzw[0] = rle[0, 0] = 9

@@ -52,3 +52,56 @@ def test_textstats_and_curation_survive(weird_docs):
     q = {r.doc_id: r.passes_quality for r in
          TS.quality_score(weird_docs).collect()}
     assert q[2] is not True and q[3] is not True
+
+
+
+
+class _KernelGrab:
+    """Stands in for a DataFrame and returns the kernel `_map_rows` hands
+    to mapInPandas, so it can run on a pandas batch without Spark."""
+
+    def select(self, *cols):
+        return self
+
+    def mapInPandas(self, kernel, schema):
+        return kernel
+
+
+def test_attach_null_doc_id_every_family(spark):
+    """A NULL doc_id reaches the attach synths as NaN. Every one of the 17
+    `attach_*` fixtures (plus `attach_images(vary_filters=True)`, the other
+    id-dependent form) must emit a NULL media_id for it, with the payload
+    of id 0 for the same text, and leave the other rows of the batch as
+    they are without the NULL. The kernels run on the pandas batch Arrow
+    would deliver (a nullable bigint column arrives as float64 with NaN);
+    one Spark run checks the NULL media_id end to end."""
+    import pandas as pd
+
+    from wde_spark.operators import multimodal as MM
+
+    # attach_media is the JVM-side stand-in table, not a synth fixture
+    families = {n: getattr(MM, n) for n in dir(MM)
+                if n.startswith("attach_") and n != "attach_media"}
+    assert len(families) == 17
+    families["attach_images_vary_filters"] = \
+        lambda d: MM.attach_images(d, vary_filters=True)
+
+    batch = pd.DataFrame({"doc_id": [7, None, 8, 0],
+                          "text": ["seven", "same text", None, "same text"]})
+    assert batch["doc_id"].dtype == "float64"
+    alone = batch[batch["doc_id"].notna()].astype({"doc_id": "int64"})
+    for name, attach in families.items():
+        kernel = attach(_KernelGrab())
+        got = pd.concat(kernel(iter([batch])), ignore_index=True)
+        ref = pd.concat(kernel(iter([alone])), ignore_index=True)
+        null = got["media_id"].isna()
+        assert null.sum() == 1, name
+        assert got.loc[null, "payload"].item() == \
+            got.loc[got["media_id"] == 0, "payload"].item(), name
+        assert got.loc[~null, "payload"].tolist() == ref["payload"].tolist(), name
+        assert got.loc[~null, "media_id"].tolist() == [7, 8, 0], name
+
+    docs = spark.createDataFrame([(7, "seven"), (None, "same text")],
+                                 "doc_id long, text string").coalesce(1)
+    rows = MM.attach_qoi(docs).collect()
+    assert sorted(r.media_id is None for r in rows) == [False, True]

@@ -6,12 +6,22 @@ optionally cProfiling the hottest. This is guide §1 profiling for the media
 band: the Spark queries are row-local mapInPandas chains, so single-process
 kernel CPU is exactly the distributed cost divided by cores.
 
+Each family runs `PASSES` times; per phase the tool prints the median wall
+time and the median CPU seconds of this process (`time.process_time`).
+CPU time leaves out time spent waiting for a core, but not the slowdown a
+co-running job causes through shared caches and cores: with a Spark job
+running beside it on a 4-core host, three runs of the same code spread up
+to 1.46x in one phase, in CPU seconds as in wall time, and 7% in the last
+line's totals (the sums of the medians). Compare two builds on a quiet
+host, alternating. `--profile NAME` runs one cProfiled pass of one family.
+
 Usage: python tools/profile_media.py [sf_dir] [--profile NAME]
 """
 
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import time
 
@@ -27,19 +37,33 @@ def load_docs(sf_dir: str) -> pd.DataFrame:
     return t.to_pandas()
 
 
+PASSES = 3
+
+
+def _timed(kernel, batch: pd.DataFrame):
+    """(wall s, CPU s, output frame) of one kernel over one batch."""
+    w0, c0 = time.perf_counter(), time.process_time()
+    out = pd.concat(list(kernel(iter([batch]))), ignore_index=True)
+    return time.perf_counter() - w0, time.process_time() - c0, out
+
+
 def run_pair(name: str, attach, stats, docs: pd.DataFrame,
-             id_col: str = "doc_id") -> tuple[float, float, pd.DataFrame]:
-    t0 = time.time()
-    media_parts = list(attach(iter([docs])))
-    t_attach = time.time() - t0
-    media = pd.concat(media_parts, ignore_index=True)
-    t0 = time.time()
-    out_parts = list(stats(iter([media])))
-    t_stats = time.time() - t0
-    out = pd.concat(out_parts, ignore_index=True)
-    print(f"{name:32s} attach={t_attach:6.2f}s stats={t_stats:6.2f}s "
-          f"rows_out={len(out)}")
-    return t_attach, t_stats, out
+             passes: int = PASSES) -> tuple[float, float]:
+    """Print the median wall and CPU seconds of the attach and stats
+    phases over `passes` runs; returns (wall, CPU) summed over both."""
+    attach_t, stats_t = [], []
+    for _ in range(passes):
+        wall, cpu, media = _timed(attach, docs)
+        attach_t.append((wall, cpu))
+        wall, cpu, out = _timed(stats, media)
+        stats_t.append((wall, cpu))
+    med = {phase: (statistics.median(w for w, _ in t),
+                   statistics.median(c for _, c in t))
+           for phase, t in (("attach", attach_t), ("stats", stats_t))}
+    cols = "  ".join(f"{phase} wall={w:6.2f}s cpu={c:6.2f}s"
+                     for phase, (w, c) in med.items())
+    print(f"{name:16s} {cols}  rows_out={len(out)}")
+    return tuple(map(sum, zip(*med.values())))
 
 
 def kernels():
@@ -107,7 +131,9 @@ def main() -> None:
         del args[i:i + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     docs = load_docs(sf_dir)
-    print(f"{len(docs)} docs, avg text {docs['text'].str.len().mean():.0f}")
+    print(f"{len(docs)} docs, avg text {docs['text'].str.len().mean():.0f}, "
+          f"median of {PASSES} passes per phase")
+    total_wall = total_cpu = 0.0
     for name, attach, stats in kernels():
         if prof_name and name != prof_name:
             continue
@@ -118,11 +144,15 @@ def main() -> None:
             import pstats
             pr = cProfile.Profile()
             pr.enable()
-            run_pair(name, attach, stats, docs)
+            run_pair(name, attach, stats, docs, passes=1)
             pr.disable()
             pstats.Stats(pr).sort_stats("cumulative").print_stats(35)
         else:
-            run_pair(name, attach, stats, docs)
+            wall, cpu = run_pair(name, attach, stats, docs)
+            total_wall += wall
+            total_cpu += cpu
+    if not prof_name:
+        print(f"{'total':16s} wall={total_wall:6.2f}s cpu={total_cpu:6.2f}s")
 
 
 if __name__ == "__main__":

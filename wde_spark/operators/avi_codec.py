@@ -97,7 +97,7 @@ def _decode_rle8(blob: bytes, width: int, height: int):
                 return None
             x, y = 0, y + 1
         elif v == 1:  # end of bitmap
-            return np.frombuffer(b"".join(rows), dtype=np.uint8) \
+            return np.frombuffer(bytearray().join(rows), dtype=np.uint8) \
                 .reshape(height, width)
         elif v == 2:  # delta skip
             if pos + 2 > n:

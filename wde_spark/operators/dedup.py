@@ -20,8 +20,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..functions.strings import norm_compare, tokens
+from . import graph as G
+from .similarity import embedding_neardup
 
 
 def shingles(tok: Column, k: int = 3) -> Column:
@@ -168,8 +171,6 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     Observed bucket sizes on the synthetic corpus are <= 5, so the default
     cap of 64 changes nothing at test scale — it exists for the 100-TB run.
     Pass None to disable."""
-    from pyspark import StorageLevel
-
     stacked = lsh_band_table(docs, text_col, id_col, num_hashes, bands,
                              shingle_k, shingle_table)
     if max_bucket is not None:
@@ -204,6 +205,41 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     )
 
 
+def _jaccard_verify(sh: DataFrame, id_col: str, threshold: float,
+                    cand: DataFrame | None = None) -> DataFrame:
+    """The exact-Jaccard verification step of every near-dup tier, over a
+    distinct (id, sh) shingle table: (id_a, id_b, jaccard) for the pairs
+    whose Jaccard, rounded to 6 places, reaches `threshold`. With `cand`
+    (id_a, id_b) only the candidate pairs are verified; without it every
+    pair sharing a shingle is, as a shingle self-join with id_a < id_b.
+    The caller decides whether `sh` is persisted."""
+    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    if cand is None:
+        a, b = sh.alias("a"), sh.alias("b")
+        pairs = a.join(b, (F.col("a.sh") == F.col("b.sh"))
+                       & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))) \
+            .groupBy(F.col(f"a.{id_col}").alias("id_a"),
+                     F.col(f"b.{id_col}").alias("id_b"))
+    else:
+        a = sh.select(F.col(id_col).alias("id_a"), "sh")
+        b = sh.select(F.col(id_col).alias("id_b"), "sh")
+        pairs = cand.join(a, "id_a").join(b, ["id_b", "sh"]) \
+            .groupBy("id_a", "id_b")
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    return (
+        pairs.agg(F.count("*").alias("n_inter"))
+        .join(sa, "id_a").join(sb, "id_b")
+        .withColumn(
+            "jaccard",
+            F.round(F.col("n_inter") /
+                    (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def neardup_lsh_verified(docs: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id", num_hashes: int = 16,
                          bands: int | str = 4, shingle_k: int = 2,
@@ -231,8 +267,6 @@ def neardup_lsh_verified(docs: DataFrame, text_col: str = "text",
     16/4 setting), NOT the verification `threshold`: banding tuned to the
     low verification threshold would shatter into tiny bands and flood
     verification with sub-threshold candidates."""
-    from pyspark import StorageLevel
-
     if bands == "auto":
         bands, _ = lsh_params_for(target_similarity, num_hashes)
 
@@ -244,26 +278,7 @@ def neardup_lsh_verified(docs: DataFrame, text_col: str = "text",
     cand = minhash_lsh_pairs(docs, text_col, id_col, num_hashes, bands,
                              shingle_k, shingle_table=sh,
                              max_bucket=max_bucket)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("sh"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("sh"))
-    inter = (
-        cand.join(a, "id_a").join(b, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") /
-                    (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verify(sh, id_col, threshold, cand)
 
 
 def sorted_neighborhood_pairs(docs: DataFrame, text_col: str = "text",
@@ -295,8 +310,6 @@ def sorted_neighborhood_pairs(docs: DataFrame, text_col: str = "text",
         F.row_number().over(
             Window.partitionBy("blk").orderBy("norm_text", id_col)),
     ).drop("norm_text")
-    from pyspark import StorageLevel
-
     # Persist the (id, blk, rn) rank table before the neighbor equi-join
     # (r12, guide §1.2): the join's broadcast side defeats exchange
     # reuse, so without the persist the block-sort window (and the text
@@ -311,32 +324,11 @@ def sorted_neighborhood_pairs(docs: DataFrame, text_col: str = "text",
                       F.col("rn").alias("rn_b"))
     cand = a.join(b, ["blk", "rn_b"]).select("id_a", "id_b")
 
-    from pyspark import StorageLevel
-
     # consumed 3x (verification both sides + size counts) — persist, same
     # hygiene as neardup_lsh_verified
     sh = distinct_shingle_table(docs, text_col, id_col, shingle_k) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    sa_ = sh.select(F.col(id_col).alias("id_a"), F.col("sh"))
-    sb_ = sh.select(F.col(id_col).alias("id_b"), F.col("sh"))
-    inter = (
-        cand.join(sa_, "id_a").join(sb_, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sza = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    szb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sza, "id_a").join(szb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") /
-                    (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verify(sh, id_col, threshold, cand)
 
 
 def simhash(docs: DataFrame, text_col: str = "text",
@@ -491,35 +483,13 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     shingle hash) → per-pair intersection count → Jaccard from per-doc
     distinct-shingle counts. Exact but quadratic in bucket size; use after
     an LSH prefilter at scale."""
-    from pyspark import StorageLevel
-
     # shingle table consumed 3x (self-join both sides + size counts) —
     # persist so tokenize+shingle runs once, same hygiene as
     # neardup_lsh_verified (the join sides alone get ReusedExchange, the
     # size agg's different shuffle shape would otherwise rescan)
     sh = distinct_shingle_table(docs, text_col, id_col, shingle_k) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                 F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") /
-                    (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verify(sh, id_col, threshold)
 
 
 def dedup_corpus(docs: DataFrame, text_col: str = "text",
@@ -552,8 +522,6 @@ def dedup_corpus(docs: DataFrame, text_col: str = "text",
     historical constant (pinned by tests). The bucket-cap equivalence
     caveat (see `dedup_increment`) is parameterized on the RESOLVED
     banding and holds identically under chosen params."""
-    from pyspark import StorageLevel
-
     reps = exact_dedup(docs, text_col, id_col)
     # survivors feeds the whole near-dup pipeline AND the final
     # anti-join base; without the persist the input pipeline (often a
@@ -568,8 +536,6 @@ def dedup_corpus(docs: DataFrame, text_col: str = "text",
         shingle_k=shingle_k, threshold=threshold, max_bucket=max_bucket,
         target_similarity=target_similarity,
     ).select("id_a", "id_b")
-
-    from . import graph as G
 
     comps = G.connected_components(pairs)
     # drop every clustered doc that is not its class representative
@@ -603,9 +569,6 @@ def semantic_dedup(items: DataFrame, threshold: float = 0.95,
     `dedup_corpus`, so the two compose: run exact/text-LSH dedup first
     (cheaper, catches verbatim), then this over the survivors'
     embeddings. Deterministic (min-id winners, fixed hyperplanes)."""
-    from . import graph as G
-    from .similarity import embedding_neardup
-
     pairs = embedding_neardup(items, threshold, id_col, vec_col,
                               n_planes, dim, n_tables,
                               max_bucket).select("id_a", "id_b")
@@ -670,25 +633,7 @@ def dedup_recall_audit(docs: DataFrame, pipeline_pairs: DataFrame,
     )
     sub = docs.join(F.broadcast(ids), id_col, "left_semi")
     sh = distinct_shingle_table(sub, text_col, id_col, shingle_k)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "sh")
-    b = sh.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        a.join(b, ["sh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b").agg(F.count("*").alias("n_inter"))
-    )
-    truth = (
-        inter
-        .join(sizes.select(F.col(id_col).alias("id_a"),
-                           F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"),
-                           F.col("n_sh").alias("n_b")), "id_b")
-        .filter(F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b")
-                                            - F.col("n_inter")), 6)
-                >= threshold)
-        .select("id_a", "id_b")
-    )
+    truth = _jaccard_verify(sh, id_col, threshold).select("id_a", "id_b")
     found = truth.join(
         pipeline_pairs.select("id_a", "id_b").distinct(), ["id_a", "id_b"],
         "left_semi")
@@ -1004,8 +949,6 @@ def dedup_weights(docs: DataFrame, edges: DataFrame,
     (`neardup_lsh_verified`, `semantic_dedup`'s candidate tier, ...).
     Cost beyond the components fixpoint: one cluster-size aggregation
     and two left joins on the doc id."""
-    from . import graph as G
-
     comps = G.connected_components(edges) \
         .withColumnRenamed("node", id_col)
     sizes = comps.groupBy("component").agg(F.count("*").alias("_cs"))

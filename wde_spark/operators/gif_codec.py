@@ -83,7 +83,7 @@ def _lzw_decode(data: bytes, mcs: int, n_pixels: int):
         if code == eoi:
             if len(out) != n_pixels:
                 return None
-            return np.frombuffer(bytes(out), dtype=np.uint8)
+            return np.frombuffer(out, dtype=np.uint8)
         if not table:
             return None  # first code must be a clear per the spec
         if code < len(table):

@@ -54,12 +54,13 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.strings import norm_compare
 from . import graph as G
-from .dedup import distinct_shingle_table, lsh_band_table
+from .dedup import (_jaccard_verify, distinct_shingle_table, lsh_band_table,
+                    lsh_params_for)
 
 
 class DedupState(NamedTuple):
@@ -101,8 +102,6 @@ def _resolve_bands(bands: int | str, num_hashes: int,
     same default resolution `dedup_corpus` uses — state built here and a
     corpus deduped there agree on banding by construction."""
     if bands == "auto":
-        from .dedup import lsh_params_for
-
         bands, _ = lsh_params_for(target_similarity, num_hashes)
     return bands
 
@@ -209,7 +208,6 @@ def dedup_increment(corpus: DataFrame, batch: DataFrame,
         # over corpus ∪ batch would make for every bucket a pair can come
         # from. (Buckets with no batch member produce no new pairs and are
         # corpus-internal — already resolved when the corpus was built.)
-        from pyspark.sql import Window
         stacked = stacked.withColumn(
             "__bsz",
             F.count("*").over(Window.partitionBy("band_idx", "band_hash")),
@@ -235,24 +233,8 @@ def dedup_increment(corpus: DataFrame, batch: DataFrame,
     s_cand_docs = corpus.join(F.broadcast(cand_ids), id_col, "left_semi")
     sh_all = sh_b.unionByName(
         distinct_shingle_table(s_cand_docs, text_col, id_col, shingle_k))
-    sizes = sh_all.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    ja = sh_all.select(F.col(id_col).alias("id_a"), "sh")
-    jb = sh_all.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        cand.join(ja, "id_a").join(jb, ["id_b", "sh"])
-        .groupBy("id_a", "id_b").agg(F.count("*").alias("n_inter"))
-    )
-    edges = (
-        inter
-        .join(sizes.select(F.col(id_col).alias("id_a"),
-                           F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"),
-                           F.col("n_sh").alias("n_b")), "id_b")
-        .filter(F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b")
-                                            - F.col("n_inter")), 6)
-                >= threshold)
+    edges = _jaccard_verify(sh_all, id_col, threshold, cand) \
         .select("id_a", "id_b")
-    )
 
     # ---- tier 4: components over the verified edges. A batch doc adjacent
     # to two corpus docs merges their classes — min-id representative wins

@@ -116,10 +116,16 @@ MEDIA_SCHEMA = T.StructType([
 
 def _attach(docs: DataFrame, id_col: str, text_col: str, synth) -> DataFrame:
     """(media_id, payload) per doc, payload = `synth(doc_id, utf8)` over
-    the utf-8 bytes of the text (b"" when NULL)."""
-    return _map_rows(
-        docs, [id_col, text_col], MEDIA_SCHEMA,
-        lambda mid, text: [(mid, synth(mid, (text or "").encode("utf-8")))])
+    the utf-8 bytes of the text (b"" when NULL). A NULL doc_id (NaN in
+    the Arrow batch) gets the synth variant of id 0 and a NULL
+    media_id."""
+    def row(mid, text):
+        data = (text or "").encode("utf-8")
+        if pd.isna(mid):
+            return [(None, synth(0, data))]
+        return [(mid, synth(mid, data))]
+
+    return _map_rows(docs, [id_col, text_col], MEDIA_SCHEMA, row)
 
 
 def _tile(data: bytes, idx, shape) -> np.ndarray:

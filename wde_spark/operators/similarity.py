@@ -1,15 +1,40 @@
-"""Similarity search over embedding columns (`embeddings` table:
-vec_id BIGINT, embedding ARRAY<FLOAT>, label INT).
+"""Similarity search and near-duplicate detection over embedding columns
+(`embeddings` table: vec_id BIGINT, embedding ARRAY<FLOAT>, label INT).
 
-- `cosine_topk`   — brute-force exact top-k: broadcast the (small) query
-                    set, score every (query, item) pair with a JVM-side
-                    fold, window top-k. The baseline and the verifier.
-- `lsh_ann`       — random-hyperplane LSH: H deterministic hyperplanes →
-                    H-bit bucket signature → candidates share a bucket →
-                    exact re-rank within bucket. The 100-TB path: the
-                    all-pairs product is replaced by a shuffle on bucket id.
-- `embedding_neardup` — cosine near-duplicate pairs above a threshold
-                    (used as dedup tier 5).
+Operator families, each a candidate generator in front of one exact
+cosine verification step:
+
+- exact top-k       — `cosine_topk` (broadcast query set, score every
+                      pair; the baseline and the verifier) and
+                      `knn_label_propagation` (broadcast labeled seed,
+                      majority vote over the k exact neighbors).
+- hyperplane LSH    — `lsh_ann` (one table: candidates share the query's
+                      bucket) and `lsh_ann_multi` (L tables; candidates
+                      share a bucket in ANY table), over the md5
+                      `hyperplanes` family.
+- IVF               — `train_ivf_centroids` (deterministic k-means
+                      coarse quantizer) and `ivf_ann` (each query probes
+                      its `nprobe` nearest cells).
+- PQ / IVFADC       — `train_pq_codebooks`, `pq_encode` (the compressed
+                      codes index), `pq_adc_topk` (ADC-only ranking over
+                      stored codes), `pq_ann`, `ivfpq_ann` and
+                      `ivfpq_residual_ann` (ADC top `k·refine` per query,
+                      then exact re-rank).
+- near-dup pairs    — `embedding_neardup` (dedup tier 5: banded
+                      multi-table LSH candidates, cosine >= threshold),
+                      `cosine_lsh_params` (its banding), and
+                      `embedding_recall_audit` (exact all-pairs ground
+                      truth on a sample).
+- gates             — `topk_recall_gate` (recall@k as a 1-row boolean).
+
+The generators differ; the verification is shared. `_vec_side` gives each
+side of a pair join its (id, double vector, per-row l2 norm) columns,
+`_cos_sim` is the one rounded cosine over those precomputed norms, and
+`_rerank_topk` is the one NaN-safe, total-order top-k tail. The PQ paths
+add `_adc_rank` (the ADC candidate window), `_pq_rerank` (exact re-rank of
+those candidates) and `_empty_topk` (the typed empty result), and every
+broadcast-model Arrow UDF (`bucket`, `sigs`, `probe`, `assign`) is built
+by `_model_udf`.
 
 All scoring is JVM-side, no Python. Short fixed-size kernels (the
 16-lookup ADC score) unroll into plain codegen expressions — measured
@@ -25,12 +50,14 @@ and to the DuckDB oracle (which computes in double, same order).
 from __future__ import annotations
 
 import hashlib
+import math
 import struct
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 from pyspark.storagelevel import StorageLevel
 
@@ -100,6 +127,38 @@ def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
     return F.try_divide(dot(a, b, dim), l2norm(a, dim) * l2norm(b, dim))
 
 
+#: (id, vector, norm) column names of the query and the item side of a
+#: pair join; `_rerank_topk` ranks on the two ids.
+_Q = ("query_id", "qv", "qn")
+_I = ("item_id", "iv", "inorm")
+
+
+def _vec_side(df: DataFrame, id_col: str, vec_col: str,
+              names: tuple[str, str, str], dim: int | None,
+              *extra: Column, **derived) -> DataFrame:
+    """One side of a cosine pair join: `names` = (id, vector, norm) —
+    the id aliased (kept as is when the name is unchanged), `extra`
+    columns after it, the vector cast to double, then one column per
+    `derived` entry (name -> function of the vector column, e.g. an LSH
+    bucket or IVF cell), then the per-ROW l2 norm, so a vector's norm is
+    computed once, not once per pair it meets."""
+    i, v, n = names
+    idc = F.col(id_col) if i == id_col else F.col(id_col).alias(i)
+    side = df.select(idc, *extra, _as_double(F.col(vec_col)).alias(v))
+    for name, fn in derived.items():
+        side = side.withColumn(name, fn(F.col(v)))
+    return side.withColumn(n, l2norm(F.col(v), dim))
+
+
+def _cos_sim(a: str, b: str, na: str, nb: str, dim: int | None) -> Column:
+    """round(cosine, 6) AS cos_sim of vector columns `a`, `b` whose norms
+    `na`, `nb` were precomputed per row (`_vec_side`) — bit-identical to
+    the fused `cosine`: same dot, same norm subexpressions, same
+    (na * nb) multiplication order, same try_divide."""
+    return F.round(F.try_divide(dot(F.col(a), F.col(b), dim),
+                                F.col(na) * F.col(nb)), 6).alias("cos_sim")
+
+
 def _rerank_topk(scored: DataFrame, k: int,
                  extra: tuple[str, ...] = ()) -> DataFrame:
     """Shared exact re-rank tail of every similarity operator: NaN routed
@@ -113,8 +172,6 @@ def _rerank_topk(scored: DataFrame, k: int,
     tie-break or NaN-policy change has exactly one site. `extra` names
     additional `scored` columns to carry through the ranking (e.g. the
     neighbor's label in `knn_label_propagation`)."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc_nulls_last(), F.asc("item_id"))
     return (
@@ -141,21 +198,11 @@ def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 5,
     # cosine expression is 3× the tree Catalyst has to carry around).
     # Bit-identical to the fused form: same l2norm subexpression, same
     # (q_norm * i_norm) multiplication order, same try_divide.
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", l2norm(F.col("qv"), dim))
-    it = items.select(
-        F.col(id_col).alias("item_id"), _as_double(F.col(vec_col)).alias("iv")
-    ).withColumn("inorm", l2norm(F.col("iv"), dim))
+    q = _vec_side(queries, id_col, vec_col, _Q, dim)
+    it = _vec_side(items, id_col, vec_col, _I, dim)
     scored = (
         it.join(F.broadcast(q), F.col("item_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "item_id",
-            F.round(F.try_divide(dot(F.col("qv"), F.col("iv"), dim),
-                                 F.col("qn") * F.col("inorm")),
-                    6).alias("cos_sim"),
-        )
+        .select("query_id", "item_id", _cos_sim("qv", "iv", "qn", "inorm", dim))
     )
     return _rerank_topk(scored, k)
 
@@ -187,6 +234,32 @@ def _finite_matrix(v: pd.Series, dim: int):
     return idx[finite], M[finite]
 
 
+def _model_udf(spark, rtype: str, kernel, dim: int, model, bc=None):
+    """The skeleton every broadcast-model Arrow UDF shares: `model` ships
+    to executors ONCE as a broadcast (data, never plan literals, so plan
+    size is independent of model size; pass `bc` to share an existing
+    broadcast of the same model instead), rows that are NULL, not `dim`
+    wide or not fully finite map to NULL (`_finite_matrix` — a bad row
+    degrades, it does not kill the batch), and `kernel(M, model)` maps
+    the float64 matrix of the remaining rows to one output per row. The
+    UDF keeps `kernel`'s name, so plans print it, and exposes the
+    broadcast as `.bc` for callers that `unpersist()` it."""
+    if bc is None:
+        bc = spark.sparkContext.broadcast(model)
+
+    def run(v: pd.Series) -> pd.Series:
+        out = pd.Series([None] * len(v), dtype=object)
+        idx, M = _finite_matrix(v, dim)
+        if len(idx):
+            out[idx] = kernel(M, bc.value)
+        return out
+
+    run.__name__ = kernel.__name__
+    udf = pandas_udf(run, rtype)
+    udf.bc = bc
+    return udf
+
+
 def _lsh_bucket_udf(spark, planes: list[list[float]]):
     """H-bit signature (bit j = sign(dot(vec, plane_j))) computed per Arrow
     batch as one matmul against the BROADCAST hyperplane matrix — like the
@@ -195,20 +268,12 @@ def _lsh_bucket_udf(spark, planes: list[list[float]]):
     vectors map to a NULL bucket and fall out of the bucket equi-join
     instead of crashing the batch or polluting the ranking."""
     P = np.asarray(planes, dtype=np.float64)
-    bc = spark.sparkContext.broadcast(P)
 
-    @pandas_udf("string")
-    def bucket(v: pd.Series) -> pd.Series:
-        Pb = bc.value
-        out = pd.Series([None] * len(v), dtype=object)
-        idx, M = _finite_matrix(v, Pb.shape[1])
-        if len(idx):
-            bits = (M @ Pb.T) >= 0
-            out[idx] = ["".join("1" if b else "0" for b in row) for row in bits]
-        return out
+    def bucket(M, P):
+        bits = (M @ P.T) >= 0
+        return ["".join("1" if b else "0" for b in row) for row in bits]
 
-    bucket.bc = bc
-    return bucket
+    return _model_udf(spark, "string", bucket, P.shape[1], P)
 
 
 def lsh_ann(items: DataFrame, queries: DataFrame, k: int = 5,
@@ -218,26 +283,12 @@ def lsh_ann(items: DataFrame, queries: DataFrame, k: int = 5,
     re-ranked exactly. Recall < 1.0 by design; the candidate join shuffles
     on the bucket signature instead of forming the full cross product."""
     bucket = _lsh_bucket_udf(items.sparkSession, hyperplanes(dim, n_planes))
-    it = items.select(
-        F.col(id_col).alias("item_id"),
-        _as_double(F.col(vec_col)).alias("iv"),
-    ).withColumn("bucket", bucket(F.col("iv"))) \
-        .withColumn("inorm", l2norm(F.col("iv"), dim))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-    ).withColumn("bucket", bucket(F.col("qv"))) \
-        .withColumn("qn", l2norm(F.col("qv"), dim))
+    it = _vec_side(items, id_col, vec_col, _I, dim, bucket=bucket)
+    q = _vec_side(queries, id_col, vec_col, _Q, dim, bucket=bucket)
     scored = (
         it.join(F.broadcast(q), "bucket")
         .filter(F.col("item_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "item_id",
-            F.round(F.try_divide(dot(F.col("qv"), F.col("iv"), dim),
-                                 F.col("qn") * F.col("inorm")),
-                    6).alias("cos_sim"),
-        )
+        .select("query_id", "item_id", _cos_sim("qv", "iv", "qn", "inorm", dim))
     )
     return _rerank_topk(scored, k)
 
@@ -249,24 +300,14 @@ def _lsh_multi_sig_udf(spark, planes: list[list[float]], n_tables: int,
     LSH amortizes to the same Arrow pass as a single table. NULL/mis-sized/
     non-finite vectors get NULL (they fall out of the candidate join)."""
     P = np.asarray(planes, dtype=np.float64)
-    bc = spark.sparkContext.broadcast(P)
 
-    @pandas_udf("array<string>")
-    def sigs(v: pd.Series) -> pd.Series:
-        Pb = bc.value
-        out = pd.Series([None] * len(v), dtype=object)
-        idx, M = _finite_matrix(v, Pb.shape[1])
-        if len(idx):
-            bits = (M @ Pb.T) >= 0
-            weights = 1 << np.arange(bits_per_table)[::-1]
-            codes = bits.reshape(len(M), n_tables, bits_per_table) @ weights
-            out[idx] = [
-                [f"{t}:{c}" for t, c in enumerate(row)] for row in codes
-            ]
-        return out
+    def sigs(M, P):
+        bits = (M @ P.T) >= 0
+        weights = 1 << np.arange(bits_per_table)[::-1]
+        codes = bits.reshape(len(M), n_tables, bits_per_table) @ weights
+        return [[f"{t}:{c}" for t, c in enumerate(row)] for row in codes]
 
-    sigs.bc = bc
-    return sigs
+    return _model_udf(spark, "array<string>", sigs, P.shape[1], P)
 
 
 def lsh_ann_multi(items: DataFrame, queries: DataFrame, k: int = 5,
@@ -285,12 +326,8 @@ def lsh_ann_multi(items: DataFrame, queries: DataFrame, k: int = 5,
     spark = items.sparkSession
     sig = _lsh_multi_sig_udf(
         spark, hyperplanes(dim, n_planes * n_tables), n_tables, n_planes)
-    it = items.select(
-        F.col(id_col).alias("item_id"), _as_double(F.col(vec_col)).alias("iv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
+    it = _vec_side(items, id_col, vec_col, _I, dim)
+    q = _vec_side(queries, id_col, vec_col, _Q, dim)
     it_sig = it.select("item_id", F.explode(sig(F.col("iv"))).alias("tb"))
     q_sig = q.select("query_id", F.explode(sig(F.col("qv"))).alias("tb"))
     cand = (
@@ -299,15 +336,8 @@ def lsh_ann_multi(items: DataFrame, queries: DataFrame, k: int = 5,
         .select("query_id", "item_id").distinct()
     )
     scored = (
-        cand.join(it.withColumn("inorm", l2norm(F.col("iv"), dim)), "item_id")
-        .join(F.broadcast(q.withColumn("qn", l2norm(F.col("qv"), dim))),
-              "query_id")
-        .select(
-            "query_id", "item_id",
-            F.round(F.try_divide(dot(F.col("qv"), F.col("iv"), dim),
-                                 F.col("qn") * F.col("inorm")),
-                    6).alias("cos_sim"),
-        )
+        cand.join(it, "item_id").join(F.broadcast(q), "query_id")
+        .select("query_id", "item_id", _cos_sim("qv", "iv", "qn", "inorm", dim))
     )
     return _rerank_topk(scored, k)
 
@@ -353,23 +383,16 @@ def _probe_cells_udf(spark, centroids: list[list[float]], nprobe: int,
     share one broadcast across several UDFs of the same model; the
     returned UDF exposes it as `.bc` so callers that fully materialize
     their output can `bc.unpersist()`."""
-    if bc is None:
-        C = np.asarray(centroids, dtype=np.float64)
-        bc = spark.sparkContext.broadcast((C, (C * C).sum(axis=1)))
+    C = np.asarray(centroids, dtype=np.float64)
 
-    @pandas_udf("array<int>")
-    def probe(v: pd.Series) -> pd.Series:
-        Cb, c_sqb = bc.value
-        out = pd.Series([None] * len(v), dtype=object)
-        idx, M = _finite_matrix(v, Cb.shape[1])
-        if len(idx):
-            d = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ Cb.T) + c_sqb[None, :]
-            cells = np.argsort(d, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-            out[idx] = list(cells)
-        return out
+    def probe(M, model):
+        C, c_sq = model
+        d = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c_sq[None, :]
+        return list(np.argsort(d, axis=1, kind="stable")[:, :nprobe]
+                    .astype(np.int32))
 
-    probe.bc = bc
-    return probe
+    return _model_udf(spark, "array<int>", probe, C.shape[1],
+                      (C, (C * C).sum(axis=1)), bc)
 
 
 def train_ivf_centroids(items: DataFrame, n_cells: int = 16, iters: int = 2,
@@ -458,36 +481,19 @@ def ivf_ann(items: DataFrame, queries: DataFrame, k: int = 5,
     spark = items.sparkSession
     centroids = train_ivf_centroids(items, n_cells, iters, id_col, vec_col)
     if not centroids:
-        from pyspark.sql import types as T
-
-        idt = items.schema[id_col].dataType
-        return spark.createDataFrame([], T.StructType([
-            T.StructField("query_id", idt),
-            T.StructField("item_id", idt),
-            T.StructField("cos_sim", T.DoubleType()),
-            T.StructField("rnk", T.LongType()),
-        ]))
+        return _empty_topk(spark, queries, items, id_col)
     # one model broadcast shared by both assignment UDFs (query lifetime)
     assign1 = _probe_cells_udf(spark, centroids, nprobe=1)
     probe_n = _probe_cells_udf(spark, centroids, nprobe=nprobe, bc=assign1.bc)
-    it = items.select(
-        F.col(id_col).alias("item_id"), _as_double(F.col(vec_col)).alias("iv")
-    ).withColumn("cell", assign1(_normalize(F.col("iv")))[0])
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("cell", F.explode(probe_n(_normalize(F.col("qv")))))
     dim = len(centroids[0])
+    it = _vec_side(items, id_col, vec_col, _I, dim,
+                   cell=lambda v: assign1(_normalize(v))[0])
+    q = _vec_side(queries, id_col, vec_col, _Q, dim,
+                  cell=lambda v: F.explode(probe_n(_normalize(v))))
     scored = (
-        it.withColumn("inorm", l2norm(F.col("iv"), dim))
-        .join(F.broadcast(q.withColumn("qn", l2norm(F.col("qv"), dim))),
-              "cell")
+        it.join(F.broadcast(q), "cell")
         .filter(F.col("item_id") != F.col("query_id"))
-        .select(
-            "query_id", "item_id",
-            F.round(F.try_divide(dot(F.col("qv"), F.col("iv"), dim),
-                                 F.col("qn") * F.col("inorm")),
-                    6).alias("cos_sim"),
-        )
+        .select("query_id", "item_id", _cos_sim("qv", "iv", "qn", "inorm", dim))
     )
     return _rerank_topk(scored, k)
 
@@ -509,8 +515,6 @@ def cosine_lsh_params(threshold: float, n: int, target_recall: float = 0.9,
     signature-table row multiplication; if the cap binds, recall degrades
     gracefully and `embedding_recall_audit` is the instrument that sees
     it."""
-    import math
-
     if n <= 1:
         return min_bits, 1
     bits = max(min_bits, min(max_bits,
@@ -574,9 +578,7 @@ def embedding_neardup(items: DataFrame, threshold: float = 0.95,
         spark, hyperplanes(dim, bits * tables), tables, bits)
     # per-row norm precomputed before the pair join (bit-identical to the
     # fused cosine: same subexpression, same a·b multiplication order)
-    v = items.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", l2norm(F.col("v"), dim)) \
+    v = _vec_side(items, id_col, vec_col, (id_col, "v", "nrm"), dim) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     sg = v.select(F.col(id_col),
                   F.explode(sig(F.col("v"))).alias("sig"))
@@ -600,12 +602,7 @@ def embedding_neardup(items: DataFrame, threshold: float = 0.95,
                   F.col("nrm").alias("bnrm"))
     return (
         cand.join(va, "id_a").join(vb, "id_b")
-        .select(
-            "id_a", "id_b",
-            F.round(F.try_divide(dot(F.col("av"), F.col("bv"), dim),
-                                 F.col("anrm") * F.col("bnrm")),
-                    6).alias("cos_sim"),
-        )
+        .select("id_a", "id_b", _cos_sim("av", "bv", "anrm", "bnrm", dim))
         .filter(~F.isnan("cos_sim") & (F.col("cos_sim") >= threshold))
     )
 
@@ -634,18 +631,14 @@ def embedding_recall_audit(items: DataFrame, pipeline_pairs: DataFrame,
         .limit(sample)
     )
     sub = items.join(F.broadcast(ids), id_col, "left_semi")
-    v = sub.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", l2norm(F.col("v"), dim))
+    v = _vec_side(sub, id_col, vec_col, (id_col, "v", "nrm"), dim)
     a, b = v.alias("a"), v.alias("b")
     truth = (
         a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.round(F.try_divide(dot(F.col("a.v"), F.col("b.v"), dim),
-                                 F.col("a.nrm") * F.col("b.nrm")),
-                    6).alias("cos_sim"),
+            _cos_sim("a.v", "b.v", "a.nrm", "b.nrm", dim),
         )
         .filter(~F.isnan("cos_sim") & (F.col("cos_sim") >= threshold))
         .select("id_a", "id_b")
@@ -690,27 +683,19 @@ def _pq_assign_udf(spark, codebooks: list[list[list[float]]], bc=None):
     reshaped BLAS matmul; ties break to the lowest code id. NULL /
     mis-sized / non-finite vectors map to NULL codes (degrade, not
     crash)."""
-    if bc is None:
-        C = np.asarray(codebooks, dtype=np.float64)  # (M, K, d_sub)
-        bc = spark.sparkContext.broadcast((C, (C * C).sum(axis=2)))
+    C = np.asarray(codebooks, dtype=np.float64)  # (M, K, d_sub)
+    m_, _, ds = C.shape
 
-    @pandas_udf("array<int>")
-    def assign(v: pd.Series) -> pd.Series:
-        Cb, c_sq = bc.value  # (M, K, ds), (M, K)
-        M_, K_, ds = Cb.shape
-        out = pd.Series([None] * len(v), dtype=object)
-        idx, X = _finite_matrix(v, M_ * ds)
-        if len(idx):
-            S = X.reshape(len(X), M_, ds)                     # (n, M, ds)
-            # dist(n, m, k) = |s|^2 - 2 s·c + |c|^2
-            dots = np.einsum("nmd,mkd->nmk", S, Cb)
-            d = (S * S).sum(axis=2)[:, :, None] - 2.0 * dots + c_sq[None, :, :]
-            codes = np.argmin(d, axis=2).astype(np.int32)     # stable: first min
-            out[idx] = list(codes)
-        return out
+    def assign(X, model):
+        C, c_sq = model                                   # (M, K, ds), (M, K)
+        S = X.reshape(len(X), m_, ds)                     # (n, M, ds)
+        # dist(n, m, k) = |s|^2 - 2 s·c + |c|^2
+        dots = np.einsum("nmd,mkd->nmk", S, C)
+        d = (S * S).sum(axis=2)[:, :, None] - 2.0 * dots + c_sq[None, :, :]
+        return list(np.argmin(d, axis=2).astype(np.int32))  # stable: first min
 
-    assign.bc = bc
-    return assign
+    return _model_udf(spark, "array<int>", assign, m_ * ds,
+                      (C, (C * C).sum(axis=2)), bc)
 
 
 def train_pq_codebooks(items: DataFrame, m: int = 8, k_codes: int = 16,
@@ -833,8 +818,6 @@ def _pq_query_luts(spark, queries: DataFrame, books, id_col: str,
     item vectors, not crashed on in the driver-side reshape. The collect
     is limit-capped at ``max_queries``: exceeding it raises instead of
     silently becoming a driver-side bottleneck."""
-    from pyspark.sql import types as T
-
     C = np.asarray(books, dtype=np.float64)          # (M, K, ds)
     m_, _, ds = C.shape
     idt = queries.schema[id_col].dataType
@@ -867,8 +850,6 @@ def _pq_query_luts(spark, queries: DataFrame, books, id_col: str,
 def _qvec_df(spark, qrows, idt, attr: str):
     """(query_id, qv) DataFrame from collected query rows — id typed from
     the source schema, vector taken from row attribute `attr`."""
-    from pyspark.sql import types as T
-
     schema = T.StructType([
         T.StructField("query_id", idt),
         T.StructField("qv", T.ArrayType(T.DoubleType())),
@@ -881,15 +862,11 @@ def _adc_sum(codes_col: Column, lut_col: Column, m: int) -> Column:
     """Unrounded ADC lookup sum — shared by `_adc_score` (which rounds)
     and the residual path (which adds the per-cell <q, centroid> constant
     BEFORE rounding)."""
-    terms = [
+    return _sum_unrolled([
         F.element_at(F.element_at(lut_col, j + 1),
                      F.element_at(codes_col, j + 1).cast("int") + 1)
         for j in range(m)
-    ]
-    s = terms[0]
-    for t in terms[1:]:
-        s = s + t
-    return s
+    ])
 
 
 def _adc_score(codes_col: Column, lut_col: Column, m: int) -> Column:
@@ -906,6 +883,45 @@ def _adc_score(codes_col: Column, lut_col: Column, m: int) -> Column:
     order, and the fold's 0.0+x0 == x0 — so every oracle hash is
     unchanged. NULL codes arrays yield NULL sums in both forms."""
     return F.round(_adc_sum(codes_col, lut_col, m), 6)
+
+
+def _empty_topk(spark, queries: DataFrame, items: DataFrame, id_col: str,
+                score: str = "cos_sim") -> DataFrame:
+    """The typed empty result of an ANN path with no model or no usable
+    query: (query_id, item_id, `score`, rnk), each id typed from its own
+    side's schema, exactly as the non-empty path types it."""
+    return spark.createDataFrame([], T.StructType([
+        T.StructField("query_id", queries.schema[id_col].dataType),
+        T.StructField("item_id", items.schema[id_col].dataType),
+        T.StructField(score, T.DoubleType()),
+        T.StructField("rnk", T.LongType()),
+    ]))
+
+
+def _adc_rank() -> Column:
+    """The ADC candidate window: per query, row_number by approx_sim DESC,
+    item_id ASC — a total order, so the top-n candidate set is
+    deterministic."""
+    return F.row_number().over(Window.partitionBy("query_id").orderBy(
+        F.desc("approx_sim"), F.asc("item_id")))
+
+
+def _pq_rerank(spark, cand: DataFrame, it: DataFrame, qrows, idt,
+               books, k: int) -> DataFrame:
+    """Exact cosine re-rank of the (query_id, item_id) ADC candidates:
+    join back to the float item vectors `it.iv` by id and to the RAW
+    (un-normalized) query vectors, so cos_sim is bit-identical to
+    `cosine_topk` / the SQL oracle (cosine is scale-invariant
+    mathematically, but not in floating point), then `_rerank_topk`."""
+    qv = _qvec_df(spark, qrows, idt, "rv")
+    dim = len(books) * len(books[0][0])
+    scored = (
+        cand.join(it.select("item_id", "iv"), "item_id")
+        .join(F.broadcast(qv), "query_id")
+        .select("query_id", "item_id",
+                F.round(cosine(F.col("qv"), F.col("iv"), dim), 6).alias("cos_sim"))
+    )
+    return _rerank_topk(scored, k)
 
 
 def pq_adc_topk(codes: DataFrame, queries: DataFrame,
@@ -925,25 +941,16 @@ def pq_adc_topk(codes: DataFrame, queries: DataFrame,
     qrows, q_lut = (None, None) if not books else _pq_query_luts(
         spark, queries, books, id_col, vec_col)
     if q_lut is None:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame([], T.StructType([
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("item_id", codes.schema[id_col].dataType),
-            T.StructField("approx_sim", T.DoubleType()),
-            T.StructField("rnk", T.LongType()),
-        ]))
-    from pyspark.sql import Window
-
+        return _empty_topk(spark, queries, codes, id_col, "approx_sim")
     it = codes.select(F.col(id_col).alias("item_id"), "codes") \
         .filter(F.col("codes").isNotNull())
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("item_id"))
-    return (
+    approx = (
         it.join(F.broadcast(q_lut))
         .filter(F.col("item_id") != F.col("query_id"))
         .withColumn("approx_sim", _adc_score(F.col("codes"), F.col("lut"), len(books)))
-        .withColumn("rnk", F.row_number().over(wa).cast("long"))
+    )
+    return (
+        approx.withColumn("rnk", _adc_rank().cast("long"))
         .filter(F.col("rnk") <= k)
         .select("query_id", "item_id", "approx_sim", "rnk")
     )
@@ -973,15 +980,7 @@ def pq_ann(items: DataFrame, queries: DataFrame, k: int = 5, m: int = 8,
     spark = items.sparkSession
     books = train_pq_codebooks(items, m, k_codes, iters, id_col, vec_col)
     if not books:
-        from pyspark.sql import types as T
-
-        idt = items.schema[id_col].dataType
-        return spark.createDataFrame([], T.StructType([
-            T.StructField("query_id", idt),
-            T.StructField("item_id", idt),
-            T.StructField("cos_sim", T.DoubleType()),
-            T.StructField("rnk", T.LongType()),
-        ]))
+        return _empty_topk(spark, queries, items, id_col)
     assign = _pq_assign_udf(spark, books)
     it = items.select(
         F.col(id_col).alias("item_id"), _as_double(F.col(vec_col)).alias("iv")
@@ -991,42 +990,21 @@ def pq_ann(items: DataFrame, queries: DataFrame, k: int = 5, m: int = 8,
     # query set: lut[s][j] = <q_norm sub-space s, codebook[s][j]>
     qrows, q_lut = _pq_query_luts(spark, queries, books, id_col, vec_col)
     if q_lut is None:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame([], T.StructType([
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("item_id", items.schema[id_col].dataType),
-            T.StructField("cos_sim", T.DoubleType()),
-            T.StructField("rnk", T.LongType()),
-        ]))
+        return _empty_topk(spark, queries, items, id_col)
 
     approx = (
         it.join(F.broadcast(q_lut))
         .filter(F.col("item_id") != F.col("query_id"))
         .withColumn("approx_sim", _adc_score(F.col("codes"), F.col("lut"), len(books)))
     )
-    from pyspark.sql import Window
-
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("item_id"))
     cand = (
         approx.filter(F.col("codes").isNotNull())
-        .withColumn("arnk", F.row_number().over(wa))
+        .withColumn("arnk", _adc_rank())
         .filter(F.col("arnk") <= k * refine)
         .select("query_id", "item_id")
     )
-    # exact re-rank uses the RAW (un-normalized) query vectors so cos_sim is
-    # bit-identical to `cosine_topk` / the SQL oracle (cosine is scale-
-    # invariant mathematically, but not in floating point)
-    qv = _qvec_df(spark, qrows, queries.schema[id_col].dataType, "rv")
-    dim = len(books) * len(books[0][0])
-    scored = (
-        cand.join(it.select("item_id", "iv"), "item_id")
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", "item_id",
-                F.round(cosine(F.col("qv"), F.col("iv"), dim), 6).alias("cos_sim"))
-    )
-    return _rerank_topk(scored, k)
+    return _pq_rerank(spark, cand, it, qrows,
+                      queries.schema[id_col].dataType, books, k)
 
 
 def ivfpq_ann(items: DataFrame, queries: DataFrame, k: int = 5,
@@ -1052,15 +1030,7 @@ def ivfpq_ann(items: DataFrame, queries: DataFrame, k: int = 5,
     centroids = train_ivf_centroids(items, n_cells, iters, id_col, vec_col)
     books = train_pq_codebooks(items, m, k_codes, iters, id_col, vec_col)
     if not centroids or not books:
-        from pyspark.sql import types as T
-
-        idt = items.schema[id_col].dataType
-        return spark.createDataFrame([], T.StructType([
-            T.StructField("query_id", idt),
-            T.StructField("item_id", idt),
-            T.StructField("cos_sim", T.DoubleType()),
-            T.StructField("rnk", T.LongType()),
-        ]))
+        return _empty_topk(spark, queries, items, id_col)
     assign1 = _probe_cells_udf(spark, centroids, nprobe=1)
     probe_n = _probe_cells_udf(spark, centroids, nprobe=nprobe, bc=assign1.bc)
     encode = _pq_assign_udf(spark, books)
@@ -1073,20 +1043,12 @@ def ivfpq_ann(items: DataFrame, queries: DataFrame, k: int = 5,
 
     qrows, q_lut = _pq_query_luts(spark, queries, books, id_col, vec_col)
     if q_lut is None:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame([], T.StructType([
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("item_id", items.schema[id_col].dataType),
-            T.StructField("cos_sim", T.DoubleType()),
-            T.StructField("rnk", T.LongType()),
-        ]))
+        return _empty_topk(spark, queries, items, id_col)
     # per-query probed cells, from the SAME collected bounded query set
-    qn = _qvec_df(spark, qrows, queries.schema[id_col].dataType, "qv")
+    idt = queries.schema[id_col].dataType
+    qn = _qvec_df(spark, qrows, idt, "qv")
     q_cells = qn.withColumn("cell", F.explode(probe_n(F.col("qv")))) \
         .select("query_id", "cell").join(F.broadcast(q_lut), "query_id")
-
-    from pyspark.sql import Window
 
     approx = (
         it.filter(F.col("codes").isNotNull())
@@ -1094,22 +1056,9 @@ def ivfpq_ann(items: DataFrame, queries: DataFrame, k: int = 5,
         .filter(F.col("item_id") != F.col("query_id"))
         .withColumn("approx_sim", _adc_score(F.col("codes"), F.col("lut"), len(books)))
     )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("item_id"))
-    cand = (
-        approx.withColumn("arnk", F.row_number().over(wa))
-        .filter(F.col("arnk") <= k * refine)
-        .select("query_id", "item_id")
-    )
-    qv = _qvec_df(spark, qrows, queries.schema[id_col].dataType, "rv")
-    dim = len(books) * len(books[0][0])
-    scored = (
-        cand.join(it.select("item_id", "iv"), "item_id")
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", "item_id",
-                F.round(cosine(F.col("qv"), F.col("iv"), dim), 6).alias("cos_sim"))
-    )
-    return _rerank_topk(scored, k)
+    cand = approx.withColumn("arnk", _adc_rank()) \
+        .filter(F.col("arnk") <= k * refine).select("query_id", "item_id")
+    return _pq_rerank(spark, cand, it, qrows, idt, books, k)
 
 
 def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, k: int = 5,
@@ -1140,25 +1089,11 @@ def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, k: int = 5,
     candidates per query."""
     spark = items.sparkSession
     centroids = train_ivf_centroids(items, n_cells, iters, id_col, vec_col)
-
-    def _empty():
-        from pyspark.sql import types as T
-
-        idt_ = items.schema[id_col].dataType
-        return spark.createDataFrame([], T.StructType([
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("item_id", idt_),
-            T.StructField("cos_sim", T.DoubleType()),
-            T.StructField("rnk", T.LongType()),
-        ]))
-
     if not centroids:
-        return _empty()
+        return _empty_topk(spark, queries, items, id_col)
     assign1 = _probe_cells_udf(spark, centroids, nprobe=1)
     probe_n = _probe_cells_udf(spark, centroids, nprobe=nprobe,
                                bc=assign1.bc)
-    from pyspark.sql import types as T
-
     cdf = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         T.StructType([
@@ -1179,14 +1114,14 @@ def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, k: int = 5,
                       F.col("rvres").alias("v")),
         m, k_codes, iters)
     if not books:
-        return _empty()
+        return _empty_topk(spark, queries, items, id_col)
     encode = _pq_assign_udf(spark, books)
     it = it_res.withColumn("codes", encode(F.col("rvres"))) \
         .select("item_id", "iv", "cell", "codes")
 
     qrows, q_lut = _pq_query_luts(spark, queries, books, id_col, vec_col)
     if q_lut is None:
-        return _empty()
+        return _empty_topk(spark, queries, items, id_col)
     idt = queries.schema[id_col].dataType
     qn = _qvec_df(spark, qrows, idt, "qv")
     dim = len(books) * len(books[0][0])
@@ -1197,8 +1132,6 @@ def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, k: int = 5,
         .select("query_id", "cell", "qc_ip")
         .join(F.broadcast(q_lut), "query_id")
     )
-    from pyspark.sql import Window
-
     approx = (
         it.filter(F.col("codes").isNotNull())
         .join(F.broadcast(q_cells), "cell")
@@ -1209,22 +1142,9 @@ def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, k: int = 5,
                     + _adc_sum(F.col("codes"), F.col("lut"), len(books)),
                     6))
     )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("item_id"))
-    cand = (
-        approx.withColumn("arnk", F.row_number().over(wa))
-        .filter(F.col("arnk") <= k * refine)
-        .select("query_id", "item_id")
-    )
-    qv = _qvec_df(spark, qrows, idt, "rv")
-    scored = (
-        cand.join(it.select("item_id", "iv"), "item_id")
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", "item_id",
-                F.round(cosine(F.col("qv"), F.col("iv"), dim), 6)
-                .alias("cos_sim"))
-    )
-    return _rerank_topk(scored, k)
+    cand = approx.withColumn("arnk", _adc_rank()) \
+        .filter(F.col("arnk") <= k * refine).select("query_id", "item_id")
+    return _pq_rerank(spark, cand, it, qrows, idt, books, k)
 
 
 def knn_label_propagation(labeled: DataFrame, unlabeled: DataFrame,
@@ -1245,22 +1165,13 @@ def knn_label_propagation(labeled: DataFrame, unlabeled: DataFrame,
     vote rollup. At seed sizes past broadcast range, the candidate tier
     swaps to the banded-LSH / ADC paths (same pattern as every ANN
     operator here); the vote tail is unchanged."""
-    q = unlabeled.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-    ).withColumn("qn", l2norm(F.col("qv"), dim))
-    it = labeled.select(
-        F.col(id_col).alias("item_id"), F.col(label_col).alias("_lbl"),
-        _as_double(F.col(vec_col)).alias("iv"),
-    ).withColumn("inorm", l2norm(F.col("iv"), dim))
+    q = _vec_side(unlabeled, id_col, vec_col, _Q, dim)
+    it = _vec_side(labeled, id_col, vec_col, _I, dim,
+                   F.col(label_col).alias("_lbl"))
     scored = (
         q.join(F.broadcast(it), F.col("item_id") != F.col("query_id"))
-        .select(
-            "query_id", "item_id", "_lbl",
-            F.round(F.try_divide(dot(F.col("qv"), F.col("iv"), dim),
-                                 F.col("qn") * F.col("inorm")),
-                    6).alias("cos_sim"),
-        )
+        .select("query_id", "item_id", "_lbl",
+                _cos_sim("qv", "iv", "qn", "inorm", dim))
     )
     topk = _rerank_topk(scored, k, extra=("_lbl",))
     votes = topk.groupBy("query_id", "_lbl") \

@@ -1602,18 +1602,14 @@ def embedding_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor for it."""
     emb = load_table(spark, sf_dir, "embeddings", spread=True).filter(
         F.col("vec_id") % 4 == 0)
-    v = emb.select(F.col("vec_id"),
-                   F.transform("embedding", lambda x: x.cast("double")).alias("v")) \
-        .withColumn("nrm", SIM.l2norm(F.col("v"), 64))
+    v = SIM._vec_side(emb, "vec_id", "embedding", ("vec_id", "v", "nrm"), 64)
     a, b = v.alias("a"), v.alias("b")
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
             F.col("a.vec_id").alias("id_a"),
             F.col("b.vec_id").alias("id_b"),
-            F.round(F.try_divide(SIM.dot(F.col("a.v"), F.col("b.v"), 64),
-                                 F.col("a.nrm") * F.col("b.nrm")),
-                    6).alias("cos_sim"),
+            SIM._cos_sim("a.v", "b.v", "a.nrm", "b.nrm", 64),
         )
         .filter(F.col("cos_sim") >= 0.2)
     )
