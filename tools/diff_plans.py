@@ -15,6 +15,11 @@ counters are blanked:
   the order stages happen to be planned or materialized, which varies
   from run to run of the same code when a plan was partly executed
   while the DataFrame was built;
+- the directory in front of `/wde_` in a `Location:` path: the
+  registry's snapshot fixtures live under `$TMPDIR/wde_<name>_<tag>`,
+  so two captures made in different TMPDIRs print different prefixes.
+  The `wde_<name>_<tag>` part is kept, so a renamed or re-keyed
+  snapshot still shows up as a difference;
 - lambda variables `x_<n>` (also `y_<n>`, `z_<n>`): PySpark names each
   higher-order-function argument from one JVM-wide counter, so the number
   depends on how many lambdas the process built before. They are
@@ -36,6 +41,7 @@ import sys
 _IDS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+|(?<=codegen id : )\d+")
 _STAGE = re.compile(r"^\(\d+\) \w*QueryStage\b")
 _LAMBDA = re.compile(r"\b([xyz])_(\d+)\b")
+_TMPDIR = re.compile(r"(?<=file:)[^\s,\]]*(?=/wde_)")
 
 
 def normalize(text: str) -> list[str]:
@@ -54,6 +60,8 @@ def normalize(text: str) -> list[str]:
         if stage and re.fullmatch(r"Arguments: \d+", ln):
             ln = "Arguments: #"
         stage = bool(_STAGE.match(ln)) or (stage and not ln.startswith("Arguments"))
+        if ln.startswith("Location: "):
+            ln = _TMPDIR.sub("$TMPDIR", ln)
         out.append(_LAMBDA.sub(lam, _IDS.sub("#", ln)))
     return out
 

@@ -18,6 +18,7 @@ Determinism conventions (both sides, so value-hashes match exactly):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1445,66 +1446,23 @@ def _streaming_pq_index_dir(spark: SparkSession, sf_dir: str) -> str:
     arrive as two file-source micro-batches appended as copy-on-write
     versions (`streaming/embedding_admission.py`). Deterministic — a
     frozen codebook makes encoding order/batching-invariant — so the
-    built index is cacheable across runs; the cache key includes the
-    source parquet's mtime so a regenerated table rebuilds."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_pq_stream_{tag}")
-    index_dir = os.path.join(base, "index")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return index_dir
-
-    # Concurrent-safe publish: build under a PROCESS-UNIQUE staging
-    # directory, then atomically os.rename into the shared slot — two
-    # concurrent runs on the same snapshot (bench + correctness) must
-    # never rmtree each other's in-progress feed/checkpoint. The loser of
-    # the rename race discards its staging build and uses the winner's.
+    built index can be cached per snapshot
+    (`queries_ext._snapshot_dir`)."""
+    from .queries_ext import _feed_stream, _snapshot_dir
     from .streaming.embedding_admission import streaming_pq_index_maintain
 
-    if os.path.exists(base):
-        # no _COMPLETE inside: garbage from a crashed pre-staging layout
-        # (current code only ever renames a *finished* build into place)
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding")
-    feed = os.path.join(stage, "feed")
-    for i in (1, 2):
-        emb.filter(F.col("vec_id") % 3 == i).coalesce(1) \
-            .write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    from .queries_ext import _space_feed_mtimes
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_pq_index_maintain(
-        stream, emb.filter(F.col("vec_id") % 3 == 0),
-        os.path.join(stage, "index"),
-        os.path.join(stage, "ckpt"), m=16, k_codes=16, iters=2)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)  # atomic on one filesystem; fails if taken
-    except OSError:
-        if not os.path.exists(done):  # a half-built loser dir: unusable
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return index_dir
+    def build(stage: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding")
+        stream = _feed_stream(spark, stage, [
+            emb.filter(F.col("vec_id") % 3 == i) for i in (1, 2)])
+        streaming_pq_index_maintain(
+            stream, emb.filter(F.col("vec_id") % 3 == 0),
+            os.path.join(stage, "index"),
+            os.path.join(stage, "ckpt"), m=16, k_codes=16, iters=2)
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "embeddings", "wde_pq_stream", build), "index")
 
 
 @query(

@@ -22,6 +22,13 @@ string-formatted timestamps, total-order tiebreaks).
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2237,56 +2244,19 @@ def _streaming_bloom_bits_dir(spark: SparkSession, sf_dir: str) -> str:
     Bloom bit set: the doc_id%17==0 benchmark slice arrives as two
     file-source micro-batches (split by doc_id%34) through
     `streaming/bloom_admission.streaming_bloom_maintain`, each merging
-    its bits into the stored set as COW versions. Cached under a
-    process-unique staging dir + atomic rename (the
-    `_streaming_lm_corpus_dir` discipline — concurrent bench/correctness
-    runs must not clobber each other's in-progress stream)."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_bloom_adm_{tag}")
-    bits_dir = os.path.join(base, "bits")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return bits_dir
+    its bits into the stored set as COW versions."""
     from .streaming.bloom_admission import streaming_bloom_maintain
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 17 == 0)
-    feed = os.path.join(stage, "feed")
-    for i, pred in ((1, F.col("doc_id") % 34 == 0),
-                    (2, F.col("doc_id") % 34 == 17)):
-        bench.filter(pred).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(bench.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_bloom_maintain(
-        stream, os.path.join(stage, "bits"), os.path.join(stage, "ckpt"))
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return bits_dir
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        bench = docs.filter(F.col("doc_id") % 17 == 0)
+        stream = _feed_stream(spark, stage, [
+            bench.filter(F.col("doc_id") % 34 == r) for r in (0, 17)])
+        streaming_bloom_maintain(
+            stream, os.path.join(stage, "bits"), os.path.join(stage, "ckpt"))
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_bloom_adm", build), "bits")
 
 
 @query(
@@ -2863,70 +2833,28 @@ def _streaming_dedup_delta_dir(spark: SparkSession, sf_dir: str) -> str:
     as two micro-batches (%10==0 then %10==5, mtime-pinned) through
     `streaming_dedup_admission_delta` — each batch an O(batch) delta
     append (admitted upserts + revoked tombstones) instead of the COW
-    snapshot rewrite — then all three ledgers compact to single bases.
-    Same staging + atomic-rename cache as the other streaming builders."""
-    import hashlib
-    import json
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_dedup_delta_{tag}")
-    corpus_dir = os.path.join(base, "corpus")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return corpus_dir
+    snapshot rewrite — then all three ledgers compact to single bases."""
     from .operators import dedup as D
-    from .streaming.compaction import compact, read_amplification
+    from .streaming.compaction import compact
     from .streaming.dedup_admission import streaming_dedup_admission_delta
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus0 = D.dedup_corpus(docs.filter(F.col("doc_id") % 5 != 0),
-                             max_bucket=None)
-    feed = os.path.join(stage, "feed")
-    for i, pred in ((1, F.col("doc_id") % 10 == 0),
-                    (2, F.col("doc_id") % 10 == 5)):
-        docs.filter(pred).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_dedup_admission_delta(
-        stream, corpus0, os.path.join(stage, "corpus"),
-        os.path.join(stage, "ckpt"), max_bucket=None)
-    stats = {}
-    for sub, keys in (("corpus", ["doc_id"]), ("fp", ["doc_id"]),
-                      ("bands", ["doc_id", "band_idx"])):
-        ledger = os.path.join(stage, "corpus", sub)
-        pre = read_amplification(ledger)
-        res = compact(spark, ledger, keys)
-        stats[sub] = {"pre": pre, "post": read_amplification(ledger),
-                      "removed": res["removed"]}
-    with open(os.path.join(stage, "corpus", "compaction_stats.json"),
-              "w") as fh:
-        json.dump(stats, fh)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return corpus_dir
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        corpus0 = D.dedup_corpus(docs.filter(F.col("doc_id") % 5 != 0),
+                                 max_bucket=None)
+        stream = _feed_stream(spark, stage, [
+            docs.filter(F.col("doc_id") % 10 == r) for r in (0, 5)])
+        corpus = os.path.join(stage, "corpus")
+        streaming_dedup_admission_delta(
+            stream, corpus0, corpus, os.path.join(stage, "ckpt"),
+            max_bucket=None)
+        for sub, keys in (("corpus", ["doc_id"]), ("fp", ["doc_id"]),
+                          ("bands", ["doc_id", "band_idx"])):
+            compact(spark, os.path.join(corpus, sub), keys)
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_dedup_delta", build),
+        "corpus")
 
 
 @query("dedup_admission_compaction_documents", _increment_oracle())
@@ -4144,17 +4072,14 @@ _LM_GATE_CUTOFF = -3.42  # sits inside the synthetic corpus's score band
                          # provably splits the feed both ways
 
 
-import os  # noqa: E402  (used by the streaming-ledger builders below)
-
-
 def _space_feed_mtimes(feed: str) -> None:
     """Make file-source batch order deterministic. Spark's file stream
-    admits new files oldest-mtime-first, and the b1/b2 feed batches are
+    admits new files oldest-mtime-first, and the b0/b1 feed batches are
     written back-to-back — on a filesystem with second-granularity
     timestamps they can land in the same granule and flip arrival
     order, inverting the carried/arrived recursion relative to the
     oracle's doc_id-parity batching. Stamp every leaf file with a
-    strictly increasing mtime per batch index (b1 < b2 < ...)."""
+    strictly increasing mtime per batch index (b0 < b1 < ...)."""
     import time
 
     base_t = time.time() - 600.0
@@ -4168,66 +4093,102 @@ def _space_feed_mtimes(feed: str) -> None:
                 os.utime(os.path.join(root, fn), (t, t))
 
 
+def _snapshot_dir(sf_dir: str, table: str, name: str,
+                  build: Callable[[str], None]) -> str:
+    """Build a registry fixture once per parquet snapshot and return its
+    directory.
+
+    The streaming registry queries read what a stream left behind (a
+    ledger, an index, a manifest). Running the stream is the expensive
+    part, so each fixture is built once per snapshot of its input table
+    and read back from disk by every later call, in this process or
+    another. The directory is `$TMPDIR/{name}_{tag}`, where `tag` is
+    the first 12 hex digits of the md5 of `"{abspath(sf_dir)}:{mtime}"`
+    and `mtime` is the whole-second mtime of `<table>.parquet` (0 when
+    it cannot be read). The key names the data, not the code: a
+    regenerated table rebuilds, but a builder whose output changes
+    shape must take a new `name` (`wde_curric2`, `wde_doc_ledger2`),
+    and checking a code change against a warm TMPDIR compares nothing.
+
+    A directory holding `_COMPLETE` is a finished build and is returned
+    as it is. Otherwise `build(stage)` fills a staging directory private
+    to this call (`{name}_{tag}.build.*`), `_COMPLETE` is written into
+    it, and one `os.rename` publishes it, so a reader never sees a
+    half-built directory. Two processes may build the same snapshot at
+    once (a bench run next to a correctness run); they publish in turn,
+    under an exclusive lock on `{name}_{tag}.lock`, and the later one
+    finds `_COMPLETE` in place, drops its stage and returns the
+    winner's build. A directory holding `_COMPLETE` is never removed;
+    one without it (left by an older layout) is replaced, under the
+    same lock. If `build` raises, the stage is removed and the error
+    propagates.
+    """
+    try:
+        mtime = int(os.path.getmtime(os.path.join(sf_dir, f"{table}.parquet")))
+    except OSError:
+        mtime = 0
+    tag = hashlib.md5(
+        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
+    base = os.path.join(tempfile.gettempdir(), f"{name}_{tag}")
+    marker = "_COMPLETE"
+    done = os.path.join(base, marker)
+    if os.path.exists(done):
+        return base
+    stage = tempfile.mkdtemp(prefix=f"{name}_{tag}.build.")
+    try:
+        build(stage)
+        with open(os.path.join(stage, marker), "w") as fh:
+            fh.write("ok")
+        with open(f"{base}.lock", "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            if not os.path.exists(done):
+                shutil.rmtree(base, ignore_errors=True)  # stale, if any
+                os.rename(stage, base)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return base
+
+
+def _feed_stream(spark: SparkSession, stage: str,
+                 batches: list[DataFrame]) -> DataFrame:
+    """Replay `batches` as file-source micro-batches, one per trigger in
+    list order: each frame is written as one file under `stage/feed`,
+    `_space_feed_mtimes` orders the files, and the stream admits one
+    file per trigger."""
+    feed = os.path.join(stage, "feed")
+    for i, batch in enumerate(batches):
+        batch.coalesce(1).write.parquet(os.path.join(feed, f"b{i}.parquet"))
+    _space_feed_mtimes(feed)
+    return (
+        spark.readStream.schema(batches[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(feed, "*.parquet"))
+    )
+
+
 def _streaming_lm_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per parquet snapshot) an LM-GATED streamed corpus over
     the documents table and return its ledger directory: the doc_id%5!=0
     slice bootstraps the dedup'd init corpus + frozen bigram LM, the
     %5==0 slice arrives as two file-source micro-batches through
     `streaming/lm_admission.streaming_lm_dedup_admission` (below-cutoff
-    docs quarantined, survivors dedup-admitted as COW versions). Cached
-    under a process-unique staging dir + atomic rename, exactly like
-    `queries._streaming_pq_index_dir` (concurrent bench/correctness runs
-    must not clobber each other's in-progress stream)."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_lm_adm_{tag}")
-    corpus_dir = os.path.join(base, "corpus")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return corpus_dir
+    docs quarantined, survivors dedup-admitted as COW versions)."""
     from .operators import dedup as D
     from .streaming.lm_admission import streaming_lm_dedup_admission
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus0 = D.dedup_corpus(docs.filter(F.col("doc_id") % 5 != 0),
-                             max_bucket=None)
-    feed = os.path.join(stage, "feed")
-    for i, pred in ((1, F.col("doc_id") % 10 == 0),
-                    (2, F.col("doc_id") % 10 == 5)):
-        docs.filter(pred).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_lm_dedup_admission(
-        stream, corpus0, os.path.join(stage, "corpus"),
-        os.path.join(stage, "ckpt"), os.path.join(stage, "quarantine"),
-        cutoff=_LM_GATE_CUTOFF, max_bucket=None)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return corpus_dir
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        corpus0 = D.dedup_corpus(docs.filter(F.col("doc_id") % 5 != 0),
+                                 max_bucket=None)
+        stream = _feed_stream(spark, stage, [
+            docs.filter(F.col("doc_id") % 10 == r) for r in (0, 5)])
+        streaming_lm_dedup_admission(
+            stream, corpus0, os.path.join(stage, "corpus"),
+            os.path.join(stage, "ckpt"), os.path.join(stage, "quarantine"),
+            cutoff=_LM_GATE_CUTOFF, max_bucket=None)
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_lm_adm", build), "corpus")
 
 
 def _lm_gated_admission_oracle() -> str:
@@ -4284,63 +4245,28 @@ def _streaming_dsir_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     slice arrives as two file-source micro-batches through
     `streaming/dsir_admission.streaming_dsir_dedup_admission`
     (below-cutoff importance ratios quarantined, survivors
-    dedup-admitted as COW versions). Same process-unique staging +
-    atomic-rename cache as `_streaming_lm_corpus_dir`."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_dsir_adm_{tag}")
-    corpus_dir = os.path.join(base, "corpus")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return corpus_dir
+    dedup-admitted as COW versions)."""
     from .operators import dedup as D
     from .streaming.dsir_admission import streaming_dsir_dedup_admission
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    all_docs = load_table(spark, sf_dir, "documents") \
-        .select("doc_id", "text", "source")
-    docs = all_docs.select("doc_id", "text")
-    corpus0 = D.dedup_corpus(docs.filter(F.col("doc_id") % 5 != 0),
-                             max_bucket=None)
-    target = all_docs.filter((F.col("doc_id") % 5 != 0)
-                             & (F.col("source") == "src0")) \
-        .select("doc_id", "text")
-    feed = os.path.join(stage, "feed")
-    for i, pred in ((1, F.col("doc_id") % 10 == 0),
-                    (2, F.col("doc_id") % 10 == 5)):
-        docs.filter(pred).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_dsir_dedup_admission(
-        stream, corpus0, target, os.path.join(stage, "corpus"),
-        os.path.join(stage, "ckpt"), os.path.join(stage, "quarantine"),
-        cutoff=_DSIR_GATE_CUTOFF, max_bucket=None)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return corpus_dir
+    def build(stage: str) -> None:
+        all_docs = load_table(spark, sf_dir, "documents") \
+            .select("doc_id", "text", "source")
+        docs = all_docs.select("doc_id", "text")
+        corpus0 = D.dedup_corpus(docs.filter(F.col("doc_id") % 5 != 0),
+                                 max_bucket=None)
+        target = all_docs.filter((F.col("doc_id") % 5 != 0)
+                                 & (F.col("source") == "src0")) \
+            .select("doc_id", "text")
+        stream = _feed_stream(spark, stage, [
+            docs.filter(F.col("doc_id") % 10 == r) for r in (0, 5)])
+        streaming_dsir_dedup_admission(
+            stream, corpus0, target, os.path.join(stage, "corpus"),
+            os.path.join(stage, "ckpt"), os.path.join(stage, "quarantine"),
+            cutoff=_DSIR_GATE_CUTOFF, max_bucket=None)
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_dsir_adm", build), "corpus")
 
 
 def _dsir_gated_admission_oracle() -> str:
@@ -4611,62 +4537,26 @@ def _streaming_nb_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     two file-source micro-batches through
     `streaming/nb_admission.streaming_nb_dedup_admission` (docs
     predicted outside keep_labels quarantined, every prediction in the
-    per-batch ledger, survivors dedup-admitted as COW versions). Same
-    process-unique staging + atomic-rename cache as
-    `_streaming_lm_corpus_dir`."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_nb_adm_{tag}")
-    corpus_dir = os.path.join(base, "corpus")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return corpus_dir
+    per-batch ledger, survivors dedup-admitted as COW versions)."""
     from .operators import dedup as D
     from .streaming.nb_admission import streaming_nb_dedup_admission
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    all_docs = load_table(spark, sf_dir, "documents") \
-        .select("doc_id", "text", "lang")
-    docs = all_docs.select("doc_id", "text")
-    corpus0 = D.dedup_corpus(docs.filter(F.col("doc_id") % 5 != 0),
-                             max_bucket=None)
-    train = all_docs.filter(F.col("doc_id") % 5 != 0)
-    feed = os.path.join(stage, "feed")
-    for i, pred in ((1, F.col("doc_id") % 10 == 0),
-                    (2, F.col("doc_id") % 10 == 5)):
-        docs.filter(pred).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_nb_dedup_admission(
-        stream, corpus0, train, os.path.join(stage, "corpus"),
-        os.path.join(stage, "ckpt"), os.path.join(stage, "quarantine"),
-        keep_labels=_NB_KEEP_LABELS, max_bucket=None)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return corpus_dir
+    def build(stage: str) -> None:
+        all_docs = load_table(spark, sf_dir, "documents") \
+            .select("doc_id", "text", "lang")
+        docs = all_docs.select("doc_id", "text")
+        corpus0 = D.dedup_corpus(docs.filter(F.col("doc_id") % 5 != 0),
+                                 max_bucket=None)
+        train = all_docs.filter(F.col("doc_id") % 5 != 0)
+        stream = _feed_stream(spark, stage, [
+            docs.filter(F.col("doc_id") % 10 == r) for r in (0, 5)])
+        streaming_nb_dedup_admission(
+            stream, corpus0, train, os.path.join(stage, "corpus"),
+            os.path.join(stage, "ckpt"), os.path.join(stage, "quarantine"),
+            keep_labels=_NB_KEEP_LABELS, max_bucket=None)
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_nb_adm", build), "corpus")
 
 
 def _nb_gated_admission_oracle() -> str:
@@ -5339,55 +5229,20 @@ def _streaming_manifest_dir(spark: SparkSession, sf_dir: str) -> str:
     slice is ranked as batch 0 (bootstrap), the %5==0 slice arrives as
     two file-source micro-batches through
     `streaming/export_admission.streaming_shard_manifest` (append-only
-    shard coordinates continuing after the running total). Same
-    process-unique staging + atomic-rename cache as the other streaming
-    builders."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_exp_adm_{tag}")
-    out_dir = os.path.join(base, "exp")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return out_dir
+    shard coordinates continuing after the running total)."""
     from .streaming.export_admission import streaming_shard_manifest
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    init = docs.filter(F.col("doc_id") % 5 != 0)
-    feed = os.path.join(stage, "feed")
-    for i, pred in ((1, F.col("doc_id") % 10 == 0),
-                    (2, F.col("doc_id") % 10 == 5)):
-        docs.filter(pred).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_shard_manifest(stream, init, os.path.join(stage, "exp"),
-                             os.path.join(stage, "ckpt"), _MANIFEST_PER)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return out_dir
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id")
+        stream = _feed_stream(spark, stage, [
+            docs.filter(F.col("doc_id") % 10 == r) for r in (0, 5)])
+        streaming_shard_manifest(
+            stream, docs.filter(F.col("doc_id") % 5 != 0),
+            os.path.join(stage, "exp"), os.path.join(stage, "ckpt"),
+            _MANIFEST_PER)
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_exp_adm", build), "exp")
 
 
 @query(
@@ -6075,89 +5930,53 @@ def packed_bpe_sequences_documents(spark: SparkSession,
 def _streaming_sessions_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per parquet snapshot) the CLOSED-SESSION ledger of the
     applyInPandasWithState sessionizer run over the events table as two
-    chronological micro-batches, and return its directory. Same
-    process-unique staging + atomic-rename cache as the other streaming
-    builders."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "events.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_sess_adm_{tag}")
-    out_dir = os.path.join(base, "sessions")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return out_dir
+    chronological micro-batches, and return its directory."""
     from .streaming.stateful import sessionize_stateful
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    ev = load_table(spark, sf_dir, "events") \
-        .select("ts", "user_id", F.col("value").cast("double")
-                .alias("value"))
-    # two chronological halves, split DISTRIBUTEDLY: the sessionizer's
-    # closed-session ledger is invariant to WHERE a chronological split
-    # lands (state carries across micro-batches; watermark 0), so any ts
-    # boundary is a valid split. Take the median ts as ONE scalar
-    # aggregate — the only thing that reaches the driver — and write each
-    # half with a plain filter + write. No collect(), no global window:
-    # this bootstrap stays O(1) driver memory at any corpus size.
-    split_ts = ev.agg(
-        F.expr("approx_percentile(ts, 0.5, 10000)")
-    ).first()[0]
-    feed = os.path.join(stage, "feed")
-    cut = F.lit(split_ts).cast(ev.schema["ts"].dataType.simpleString())
-    halves = (ev.filter(F.col("ts") <= cut),
-              ev.filter(F.col("ts") > cut))
-    for i, h in enumerate(halves):
-        h.coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    q = (
-        sessionize_stateful(stream, gap_seconds=1800,
-                            watermark="0 seconds")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(stage, "sessions_stream"))
-        .option("checkpointLocation", os.path.join(stage, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    # the streaming sink's _spark_metadata log records ABSOLUTE staged
-    # paths, which the atomic rename would orphan — compact the ledger
-    # to a plain parquet directory first (also what a downstream batch
-    # consumer wants: no metadata-log coupling)
-    spark.read.parquet(os.path.join(stage, "sessions_stream")) \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(stage, "sessions"))
-    shutil.rmtree(os.path.join(stage, "sessions_stream"),
-                  ignore_errors=True)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return out_dir
+    def build(stage: str) -> None:
+        ev = load_table(spark, sf_dir, "events") \
+            .select("ts", "user_id", F.col("value").cast("double")
+                    .alias("value"))
+        # two chronological halves, split DISTRIBUTEDLY: the sessionizer's
+        # closed-session ledger is invariant to WHERE a chronological split
+        # lands (state carries across micro-batches; watermark 0), so any
+        # ts boundary is a valid split. Take the median ts as ONE scalar
+        # aggregate — the only thing that reaches the driver — and write
+        # each half with a plain filter + write. No collect(), no global
+        # window: this bootstrap stays O(1) driver memory at any corpus
+        # size.
+        split_ts = ev.agg(
+            F.expr("approx_percentile(ts, 0.5, 10000)")
+        ).first()[0]
+        cut = F.lit(split_ts).cast(ev.schema["ts"].dataType.simpleString())
+        stream = _feed_stream(spark, stage, [
+            ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)])
+        q = (
+            sessionize_stateful(stream, gap_seconds=1800,
+                                watermark="0 seconds")
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", os.path.join(stage, "sessions_stream"))
+            .option("checkpointLocation", os.path.join(stage, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+        # the streaming sink's _spark_metadata log records ABSOLUTE staged
+        # paths, which the publishing rename would orphan — compact the
+        # ledger to a plain parquet directory first (also what a
+        # downstream batch consumer wants: no metadata-log coupling)
+        spark.read.parquet(os.path.join(stage, "sessions_stream")) \
+            .coalesce(1).write.mode("overwrite") \
+            .parquet(os.path.join(stage, "sessions"))
+        shutil.rmtree(os.path.join(stage, "sessions_stream"),
+                      ignore_errors=True)
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "events", "wde_sess_adm", build), "sessions")
 
 
 @query(
@@ -6317,66 +6136,24 @@ def curation_pipeline_documents(spark: SparkSession,
 def _streaming_ffd_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per parquet snapshot) the sealed-bin FFD manifest of the
     documents table streamed in as three arrival batches (doc_id % 3),
-    and return its manifest directory. Same process-unique staging +
-    atomic-rename cache as the other streaming builders; feed-file
-    mtimes are pinned strictly increasing so the file source's
-    oldest-first ordering makes batch_no == doc_id % 3 deterministic."""
-    import hashlib
-    import shutil
-    import tempfile
-    import time
-
+    and return its manifest directory. The feed's spaced mtimes make
+    batch_no == doc_id % 3 deterministic."""
     from .functions.strings import tokens as _tokens
-
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_ffd_adm_{tag}")
-    man_dir = os.path.join(base, "pack", "manifest")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return man_dir
     from .streaming.pack_admission import streaming_ffd_manifest
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    d = load_table(spark, sf_dir, "documents")
-    t = d.select("doc_id", F.size(_tokens(F.col("text")))
-                 .cast("long").alias("n_tok"))
-    feed = os.path.join(stage, "feed")
-    now = time.time()
-    for i in range(3):
-        fdir = os.path.join(feed, f"b{i}.parquet")
-        t.filter(F.col("doc_id") % 3 == i).coalesce(1) \
-            .write.mode("overwrite").parquet(fdir)
-        # pin strictly-increasing mtimes on the data files so the file
-        # stream's oldest-first order equals arrival order
-        for name in os.listdir(fdir):
-            os.utime(os.path.join(fdir, name),
-                     (now - 300 + i * 60, now - 300 + i * 60))
-    stream = (
-        spark.readStream.schema(t.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_ffd_manifest(
-        stream, os.path.join(stage, "pack"), os.path.join(stage, "ckpt"),
-        seq_len=_PACK_SEQ_LEN, n_buckets=8)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return man_dir
+    def build(stage: str) -> None:
+        t = load_table(spark, sf_dir, "documents").select(
+            "doc_id", F.size(_tokens(F.col("text"))).cast("long")
+            .alias("n_tok"))
+        stream = _feed_stream(spark, stage, [
+            t.filter(F.col("doc_id") % 3 == i) for i in range(3)])
+        streaming_ffd_manifest(
+            stream, os.path.join(stage, "pack"), os.path.join(stage, "ckpt"),
+            seq_len=_PACK_SEQ_LEN, n_buckets=8)
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_ffd_adm", build),
+        "pack", "manifest")
 
 
 @query(
@@ -6903,62 +6680,24 @@ def bmp_rgb_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_budget_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per parquet snapshot) the maintained token-budget
     admission ledger: odd doc_ids arrive as micro-batch 0, even ones as
-    micro-batch 1; n_tok is computed ON the stream (text read once).
-    Same staging + atomic-rename cache as the other streaming
-    builders."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    micro-batch 1; n_tok is computed ON the stream (text read once)."""
     from .functions.strings import tokens as _tokens
-
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_budget_{tag}")
-    ledger_dir = os.path.join(base, "ledger")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return ledger_dir
     from .streaming.budget_admission import streaming_budget_maintain
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents") \
-        .select("doc_id", "source", "text")
-    feed = os.path.join(stage, "feed")
-    for i, pred in ((1, F.col("doc_id") % 2 == 1),
-                    (2, F.col("doc_id") % 2 == 0)):
-        docs.filter(pred).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-        .select("doc_id", "source",
-                F.size(_tokens(F.col("text"))).cast("long")
-                .alias("n_tok"))
-    )
-    streaming_budget_maintain(
-        stream, os.path.join(stage, "ledger"),
-        os.path.join(stage, "ckpt"), _TOKEN_BUDGET,
-        _TOKEN_BUDGET_DEFAULT)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return ledger_dir
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents") \
+            .select("doc_id", "source", "text")
+        stream = _feed_stream(spark, stage, [
+            docs.filter(F.col("doc_id") % 2 == r) for r in (1, 0)]).select(
+            "doc_id", "source",
+            F.size(_tokens(F.col("text"))).cast("long").alias("n_tok"))
+        streaming_budget_maintain(
+            stream, os.path.join(stage, "ledger"),
+            os.path.join(stage, "ckpt"), _TOKEN_BUDGET,
+            _TOKEN_BUDGET_DEFAULT)
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_budget", build), "ledger")
 
 
 _BUDGET_CASE_SQL = ("CASE source "
@@ -7084,54 +6823,18 @@ def tiff_packbits_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_shards_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per parquet snapshot) the maintained HRW routing
     table: odd doc_ids arrive as micro-batch 0 (map grows to 7), even
-    ones as micro-batch 1 (map grows to 8, migrating batch-0 docs).
-    Same staging + atomic-rename cache as the other streaming
-    builders."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_shards_{tag}")
-    route_dir = os.path.join(base, "route")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return route_dir
+    ones as micro-batch 1 (map grows to 8, migrating batch-0 docs)."""
     from .streaming.shard_migration import streaming_shard_maintain
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    feed = os.path.join(stage, "feed")
-    for i, pred in ((1, F.col("doc_id") % 2 == 1),
-                    (2, F.col("doc_id") % 2 == 0)):
-        docs.filter(pred).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_shard_maintain(
-        stream, os.path.join(stage, "route"), os.path.join(stage, "ckpt"))
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return route_dir
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id")
+        stream = _feed_stream(spark, stage, [
+            docs.filter(F.col("doc_id") % 2 == r) for r in (1, 0)])
+        streaming_shard_maintain(
+            stream, os.path.join(stage, "route"), os.path.join(stage, "ckpt"))
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_shards", build), "route")
 
 
 @query(
@@ -7355,64 +7058,27 @@ def _streaming_curriculum_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per parquet snapshot) the maintained curriculum
     ledger: odd doc_ids arrive as micro-batch 0, even ones as
     micro-batch 1; the 64-byte length bucket is computed ON the stream
-    (the only pass over text). Same staging + atomic-rename cache as
-    the other streaming builders."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    # cache key v2: the ledger schema gained n_tok (maintained pacing)
-    base = os.path.join(tempfile.gettempdir(), f"wde_curric2_{tag}")
-    ledger_dir = os.path.join(base, "ledger")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return ledger_dir
+    (the only pass over text)."""
+    from .functions.strings import tokens as _tokens
     from .streaming.curriculum import streaming_curriculum_maintain
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    feed = os.path.join(stage, "feed")
-    for i, pred in ((1, F.col("doc_id") % 2 == 1),
-                    (2, F.col("doc_id") % 2 == 0)):
-        docs.filter(pred).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    from .functions.strings import tokens as _tokens
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        stream = _feed_stream(spark, stage, [
+            docs.filter(F.col("doc_id") % 2 == r) for r in (1, 0)]).select(
+            "doc_id",
+            F.coalesce(F.floor(F.octet_length("text") / 64),
+                       F.lit(-1)).alias("bucket"),
+            # arrival-time token count: carried for maintained
+            # PACING (read_paced) — the text is read exactly once
+            F.size(_tokens(F.col("text"))).cast("long").alias("n_tok"))
+        streaming_curriculum_maintain(
+            stream, os.path.join(stage, "ledger"),
+            os.path.join(stage, "ckpt"), extra_cols=("n_tok",))
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-        .select("doc_id",
-                F.coalesce(F.floor(F.octet_length("text") / 64),
-                           F.lit(-1)).alias("bucket"),
-                # arrival-time token count: carried for maintained
-                # PACING (read_paced) — the text is read exactly once
-                F.size(_tokens(F.col("text"))).cast("long")
-                .alias("n_tok"))
-    )
-    streaming_curriculum_maintain(
-        stream, os.path.join(stage, "ledger"),
-        os.path.join(stage, "ckpt"), extra_cols=("n_tok",))
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return ledger_dir
+    # "2": the ledger schema gained n_tok (maintained pacing)
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_curric2", build), "ledger")
 
 
 @query(
@@ -8023,61 +7689,22 @@ def _streaming_codebook_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per parquet snapshot) the maintained mini-batch k-means
     codebook: the vec_id%5!=0 slice bootstraps (Lloyd x2 + state v0), the
     %5==0 slice arrives as two file-source micro-batches (%10==0 then
-    %10==5, mtime-pinned arrival order). Same staging + atomic-rename
-    cache as the other streaming builders."""
-    import hashlib
-    import shutil
-    import tempfile
-    import time
-
-    src_parquet = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_cbk_adm_{tag}")
-    cbk_dir = os.path.join(base, "cbk")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return cbk_dir
+    %10==5, mtime-pinned arrival order)."""
     from .streaming.codebook_maintenance import (bootstrap_codebook_v0,
                                                  streaming_codebook_maintain)
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    emb = load_table(spark, sf_dir, "embeddings") \
-        .select("vec_id", "embedding")
-    bootstrap_codebook_v0(emb.filter(F.col("vec_id") % 5 != 0),
-                          os.path.join(stage, "cbk"))
-    feed = os.path.join(stage, "feed")
-    now = time.time()
-    for i, pred in ((0, F.col("vec_id") % 10 == 0),
-                    (1, F.col("vec_id") % 10 == 5)):
-        fdir = os.path.join(feed, f"b{i}.parquet")
-        emb.filter(pred).coalesce(1).write.mode("overwrite").parquet(fdir)
-        for name in os.listdir(fdir):
-            os.utime(os.path.join(fdir, name),
-                     (now - 300 + i * 60, now - 300 + i * 60))
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_codebook_maintain(
-        stream, os.path.join(stage, "cbk"), os.path.join(stage, "ckpt"))
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return cbk_dir
+    def build(stage: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings") \
+            .select("vec_id", "embedding")
+        bootstrap_codebook_v0(emb.filter(F.col("vec_id") % 5 != 0),
+                              os.path.join(stage, "cbk"))
+        stream = _feed_stream(spark, stage, [
+            emb.filter(F.col("vec_id") % 10 == r) for r in (0, 5)])
+        streaming_codebook_maintain(
+            stream, os.path.join(stage, "cbk"), os.path.join(stage, "ckpt"))
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "embeddings", "wde_cbk_adm", build), "cbk")
 
 
 def _streaming_codebook_oracle() -> str:
@@ -8188,68 +7815,24 @@ def _streaming_codebook_delta_dir(spark: SparkSession, sf_dir: str) -> str:
     `_streaming_codebook_dir` (bootstrap %5!=0; micro-batches %10==0
     then %10==5), but each batch appends only its touched (cell, d)
     rows as ledger deltas; after the stream drains, `compaction.compact`
-    folds b0+d1+d2 into one base. Pre/post read-amplification lands in
-    `compaction_stats.json` (the pytest/receipt hook). Same staging +
-    atomic-rename cache as the other streaming builders."""
-    import hashlib
-    import json
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_cbk_delta_{tag}")
-    cbk_dir = os.path.join(base, "cbk")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return cbk_dir
+    folds b0+d1+d2 into one base."""
     from .streaming.codebook_maintenance import (
         bootstrap_codebook_delta, streaming_codebook_maintain_delta)
-    from .streaming.compaction import compact, read_amplification
+    from .streaming.compaction import compact
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    emb = load_table(spark, sf_dir, "embeddings") \
-        .select("vec_id", "embedding")
-    bootstrap_codebook_delta(emb.filter(F.col("vec_id") % 5 != 0),
-                             os.path.join(stage, "cbk"))
-    feed = os.path.join(stage, "feed")
-    for i, pred in ((1, F.col("vec_id") % 10 == 0),
-                    (2, F.col("vec_id") % 10 == 5)):
-        emb.filter(pred).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_codebook_maintain_delta(
-        stream, os.path.join(stage, "cbk"), os.path.join(stage, "ckpt"))
-    ledger = os.path.join(stage, "cbk", "state")
-    pre = read_amplification(ledger)
-    res = compact(spark, ledger, ["cell", "d"])
-    post = read_amplification(ledger)
-    with open(os.path.join(stage, "cbk", "compaction_stats.json"),
-              "w") as fh:
-        json.dump({"pre": pre, "post": post,
-                   "removed": res["removed"]}, fh)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return cbk_dir
+    def build(stage: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings") \
+            .select("vec_id", "embedding")
+        bootstrap_codebook_delta(emb.filter(F.col("vec_id") % 5 != 0),
+                                 os.path.join(stage, "cbk"))
+        stream = _feed_stream(spark, stage, [
+            emb.filter(F.col("vec_id") % 10 == r) for r in (0, 5)])
+        streaming_codebook_maintain_delta(
+            stream, os.path.join(stage, "cbk"), os.path.join(stage, "ckpt"))
+        compact(spark, os.path.join(stage, "cbk", "state"), ["cell", "d"])
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "embeddings", "wde_cbk_delta", build), "cbk")
 
 
 def _streaming_pq_delta_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -8258,66 +7841,24 @@ def _streaming_pq_delta_dir(spark: SparkSession, sf_dir: str) -> str:
     `queries._streaming_pq_index_dir` (init vec_id%3==0 trains the
     frozen codebook + base codes; %3==1 then %3==2 stream in), but each
     batch is a PURE code append — no ledger read — and the ledger folds
-    to one base after the stream. Same staging + atomic-rename cache as
-    the other streaming builders."""
-    import hashlib
-    import json
-    import shutil
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_pq_delta_{tag}")
-    index_dir = os.path.join(base, "index")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return index_dir
-    from .streaming.compaction import compact, read_amplification
+    to one base after the stream."""
+    from .streaming.compaction import compact
     from .streaming.embedding_admission import (
         streaming_pq_index_maintain_delta)
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    emb = load_table(spark, sf_dir, "embeddings") \
-        .select("vec_id", "embedding")
-    feed = os.path.join(stage, "feed")
-    for i in (1, 2):
-        emb.filter(F.col("vec_id") % 3 == i).coalesce(1) \
-            .write.mode("overwrite") \
-            .parquet(os.path.join(feed, f"b{i}.parquet"))
-    _space_feed_mtimes(feed)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_pq_index_maintain_delta(
-        stream, emb.filter(F.col("vec_id") % 3 == 0),
-        os.path.join(stage, "index"),
-        os.path.join(stage, "ckpt"), m=16, k_codes=16, iters=2)
-    ledger = os.path.join(stage, "index", "codes")
-    pre = read_amplification(ledger)
-    res = compact(spark, ledger, ["vec_id"])
-    with open(os.path.join(stage, "index", "compaction_stats.json"),
-              "w") as fh:
-        json.dump({"pre": pre, "post": read_amplification(ledger),
-                   "removed": res["removed"]}, fh)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return index_dir
+    def build(stage: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings") \
+            .select("vec_id", "embedding")
+        stream = _feed_stream(spark, stage, [
+            emb.filter(F.col("vec_id") % 3 == i) for i in (1, 2)])
+        streaming_pq_index_maintain_delta(
+            stream, emb.filter(F.col("vec_id") % 3 == 0),
+            os.path.join(stage, "index"),
+            os.path.join(stage, "ckpt"), m=16, k_codes=16, iters=2)
+        compact(spark, os.path.join(stage, "index", "codes"), ["vec_id"])
+
+    return os.path.join(
+        _snapshot_dir(sf_dir, "embeddings", "wde_pq_delta", build), "index")
 
 
 from .queries import ORACLE as _CORE_ORACLE  # noqa: E402  (fully built:
@@ -8442,71 +7983,39 @@ def _doc_ledger_clustered_dir(spark: SparkSession, sf_dir: str) -> str:
     data skipping + the LWW write contract), and the fold runs with
     `cluster_cols=["doc_id"]` + a small `target_file_bytes`, so the
     compacted base is range-clustered across several part-files —
-    the layout `stress_cluster_layout.py` receipts for pruning. Same
-    staging + atomic-rename cache as the other builders."""
-    import hashlib
-    import json
-    import shutil
-    import tempfile
+    the layout `stress_cluster_layout.py` receipts for pruning."""
+    from .streaming.compaction import compact, write_base, write_delta
 
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src_parquet)))
-    except OSError:
-        mtime = "0"
-    # tag carries a layout version: v2 = retained (unvacuumed) deltas
-    # for the change feed — bumping it invalidates caches built by the
-    # earlier immediate-vacuum layout
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}:v2".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"wde_doc_ledger_{tag}")
-    ledger = os.path.join(base, "ledger")
-    done = os.path.join(base, "_COMPLETE")
-    if os.path.exists(done):
-        return ledger
-    from .streaming.compaction import (compact, read_amplification,
-                                       write_base, write_delta)
+    def build(stage: str) -> None:
+        sledger = os.path.join(stage, "ledger")
+        docs = load_table(spark, sf_dir, "documents")
+        write_base(docs.filter(F.col("doc_id") % 3 == 0), sledger, 0,
+                   stats_col="doc_id", key_cols=["doc_id"])
+        write_delta(docs.filter(F.col("doc_id") % 3 == 1), sledger, 1,
+                    stats_col="doc_id", key_cols=["doc_id"])
+        upserts = docs.filter((F.col("doc_id") % 3 == 2)
+                              & (F.col("doc_id") % 10 != 7))
+        tombs = docs.filter(F.col("doc_id") % 10 == 7).select(
+            "doc_id", *[F.lit(None).cast(docs.schema[c].dataType).alias(c)
+                        for c in docs.columns if c != "doc_id"],
+            F.lit("D").alias("_op"))
+        write_delta(upserts.withColumn("_op", F.lit("U")).unionByName(tombs),
+                    sledger, 2, stats_col="doc_id", key_cols=["doc_id"])
+        # OPTIMIZE/VACUUM split: the fold lands (range reads touch only the
+        # clustered base) but the absorbed deltas stay on disk serving the
+        # change feed (`ledger_change_feed_documents`) and as_of history —
+        # the retention trade a production deployment makes for its CDC
+        # consumers
+        compact(spark, sledger, ["doc_id"],
+                vacuum_absorbed=False,
+                target_file_bytes=64 * 1024,
+                cluster_cols=["doc_id"])
 
-    if os.path.exists(base):
-        shutil.rmtree(base, ignore_errors=True)
-    stage = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    sledger = os.path.join(stage, "ledger")
-    docs = load_table(spark, sf_dir, "documents")
-    write_base(docs.filter(F.col("doc_id") % 3 == 0), sledger, 0,
-               stats_col="doc_id", key_cols=["doc_id"])
-    write_delta(docs.filter(F.col("doc_id") % 3 == 1), sledger, 1,
-                stats_col="doc_id", key_cols=["doc_id"])
-    upserts = docs.filter((F.col("doc_id") % 3 == 2)
-                          & (F.col("doc_id") % 10 != 7))
-    tombs = docs.filter(F.col("doc_id") % 10 == 7).select(
-        "doc_id", *[F.lit(None).cast(docs.schema[c].dataType).alias(c)
-                    for c in docs.columns if c != "doc_id"],
-        F.lit("D").alias("_op"))
-    write_delta(upserts.withColumn("_op", F.lit("U")).unionByName(tombs),
-                sledger, 2, stats_col="doc_id", key_cols=["doc_id"])
-    pre = read_amplification(sledger)
-    # OPTIMIZE/VACUUM split: the fold lands (range reads touch only the
-    # clustered base) but the absorbed deltas stay on disk serving the
-    # change feed (`ledger_change_feed_documents`) and as_of history —
-    # the retention trade a production deployment makes for its CDC
-    # consumers
-    res = compact(spark, sledger, ["doc_id"],
-                  vacuum_absorbed=False,
-                  target_file_bytes=64 * 1024,
-                  cluster_cols=["doc_id"])
-    with open(os.path.join(stage, "cluster_stats.json"), "w") as fh:
-        json.dump({"pre": pre, "post": read_amplification(sledger),
-                   "removed": res["removed"]}, fh)
-    with open(os.path.join(stage, "_COMPLETE"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, base)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return ledger
+    # "2": the layout retains the absorbed (unvacuumed) deltas for the
+    # change feed, unlike the earlier immediate-vacuum layout
+    return os.path.join(
+        _snapshot_dir(sf_dir, "documents", "wde_doc_ledger2", build),
+        "ledger")
 
 
 @query(

@@ -35,25 +35,35 @@ CACHE_SCHEMA = T.StructType([
 def _hadoop_safe_paths(path_glob: str) -> list[str]:
     """Hadoop `Path` rejects ':' in file names (URI scheme separator). Files
     whose basename carries unsafe characters are exposed through same-content
-    symlinks with percent-encoded names in a shadow directory."""
+    symlinks with percent-encoded names in a shadow directory, one per source
+    directory, so equal basenames in two directories never share a link. A
+    link that already points at the same file (made by an earlier or a
+    concurrent read) is reused."""
     import glob as pyglob
+    import hashlib
     import tempfile
 
     paths = sorted(pyglob.glob(path_glob))
     if not any(":" in os.path.basename(p) for p in paths):
         return [path_glob]
-    shadow = os.path.join(tempfile.gettempdir(), "wde_cache_shadow")
-    os.makedirs(shadow, exist_ok=True)
     out = []
     for p in paths:
         base = os.path.basename(p)
-        if ":" in base:
-            link = os.path.join(shadow, base.replace(":", "%3A"))
-            if not os.path.exists(link):
-                os.symlink(os.path.abspath(p), link)
-            out.append(link)
-        else:
+        if ":" not in base:
             out.append(p)
+            continue
+        target = os.path.abspath(p)
+        shadow = os.path.join(
+            tempfile.gettempdir(), "wde_cache_shadow",
+            hashlib.md5(os.path.dirname(target).encode()).hexdigest()[:12])
+        os.makedirs(shadow, exist_ok=True)
+        link = os.path.join(shadow, base.replace(":", "%3A"))
+        try:
+            os.symlink(target, link)
+        except FileExistsError:
+            if os.readlink(link) != target:
+                raise
+        out.append(link)
     return out
 
 
