@@ -558,9 +558,10 @@ def test_delta_ledger_admission_matches_cow_and_compaction(spark, tmp_path):
 def test_delta_admission_banding_params_frozen(spark, tmp_path):
     """Banding parameters are persisted at bootstrap_delta time and
     asserted on every admission: band-tombstone enumeration depends on
-    them, so driving a ledger with a different num_hashes/bands must
-    fail loudly instead of silently missing (or inventing) band_idx
-    tombstone keys."""
+    them, so driving a ledger bootstrapped with a different
+    num_hashes/bands must fail loudly instead of silently missing (or
+    inventing) band_idx tombstone keys."""
+    import json
     import os
 
     import pytest
@@ -570,17 +571,20 @@ def test_delta_admission_banding_params_frozen(spark, tmp_path):
 
     corpus0 = D.dedup_corpus(spark.createDataFrame(CORPUS, SCHEMA))
     target = str(tmp_path / "bandguard")
-    bootstrap_delta(corpus0, target, num_hashes=16, bands="auto")
-    assert os.path.exists(os.path.join(target, "_dedup_params.json"))
+    bootstrap_delta(corpus0, target)
+    params = os.path.join(target, "_dedup_params.json")
+    with open(params) as fh:
+        frozen = fh.read()
+    # a ledger on disk that was bootstrapped with other banding
+    with open(params, "w") as fh:
+        json.dump({"num_hashes": 8, "n_bands": 4, "shingle_k": 2}, fh)
     batch = spark.createDataFrame(BATCH[:2], SCHEMA)
     with pytest.raises(ValueError, match="bootstrapped"):
-        _admit_batch_delta(batch, 0, target, "text", "doc_id",
-                           num_hashes=8, bands=4, shingle_k=2,
-                           threshold=0.2, max_bucket=None)
+        _admit_batch_delta(batch, 0, target, max_bucket=None)
     # matching parameters admit cleanly
-    _admit_batch_delta(batch, 0, target, "text", "doc_id",
-                       num_hashes=16, bands="auto", shingle_k=2,
-                       threshold=0.2, max_bucket=None)
+    with open(params, "w") as fh:
+        fh.write(frozen)
+    _admit_batch_delta(batch, 0, target, max_bucket=None)
 
 
 def test_auto_compact_admission_equals_plain(spark, tmp_path):

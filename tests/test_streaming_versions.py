@@ -455,3 +455,34 @@ def test_versioned_step_prev_rules(tmp_path):
     versions.versioned_step(target, 1, step)
     assert seen == [None, os.path.join(target, "v1")]
     assert sorted(os.listdir(target)) == ["v1", "v2"]
+
+
+def test_read_batch_ledger_lists_entries(spark, tmp_path, monkeypatch):
+    """A 12-entry ledger (b0..b11, so a lexicographic and a numeric order
+    differ) reads every row, local and through a `file://` URI, and Spark
+    is never handed a glob: a `b*` path makes its streaming-sink metadata
+    probe log a FileNotFoundException on every read. A missing or empty
+    ledger reads as an empty frame of the given schema."""
+    from pyspark.sql import DataFrameReader
+
+    ledger = str(tmp_path / "ledger")
+    for n in range(12):
+        spark.createDataFrame([(n, n * 10)], "b long, v long") \
+            .write.parquet(os.path.join(ledger, f"b{n}"))
+    os.makedirs(os.path.join(ledger, "_tmp"))  # not a ledger entry
+    given = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        given.extend(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    want = [(n, n * 10) for n in range(12)]
+    for d in (ledger, "file://" + ledger):
+        got = versions.read_batch_ledger(spark, d, "b long, v long")
+        assert sorted(map(tuple, got.collect())) == want
+    assert len(given) == 24 and not any("*" in p for p in given)
+    for d in (str(tmp_path / "none"), str(tmp_path)):
+        empty = versions.read_batch_ledger(spark, d, "b long, v long")
+        assert empty.collect() == [] and empty.columns == ["b", "v"]

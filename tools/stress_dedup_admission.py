@@ -87,9 +87,9 @@ def main() -> None:
         init.write.mode("overwrite").parquet(
             os.path.join(raw_dir, "b0.parquet"))
         init = spark.read.parquet(os.path.join(raw_dir, "b0.parquet"))
-        bootstrap_v0(init, target, "text", "doc_id", 16, "auto", 2)
+        bootstrap_v0(init, target)
         target_d = os.path.join(work, "corpus_delta")
-        bootstrap_delta(init, target_d, "text", "doc_id", 16, "auto", 2)
+        bootstrap_delta(init, target_d)
 
         rows = []
         for i in range(1, n_batches + 1):
@@ -113,14 +113,12 @@ def main() -> None:
                 os.path.join(raw_dir, f"b{i}.parquet"))
 
             t0 = time.time()
-            _admit_batch(batch, i - 1, target, "text", "doc_id",
-                         16, "auto", 2, 0.2, 64)
+            _admit_batch(batch, i - 1, target, 64)
             admit_sec = time.time() - t0
             corpus_rows = read_corpus(spark, target).count()
 
             t0 = time.time()
-            _admit_batch_delta(batch, i - 1, target_d, "text", "doc_id",
-                               16, "auto", 2, 0.2, 64)
+            _admit_batch_delta(batch, i - 1, target_d, 64)
             admit_delta_sec = time.time() - t0
             # compaction cadence between committed batches: bounds the
             # ledger length every merged read (incl. the NEXT batch's

@@ -1,4 +1,4 @@
-"""Name classification → structured query record ("qdict") — SURVEY.md §2.7
+r"""Name classification → structured query record ("qdict") — SURVEY.md §2.7
 F10-F15, §2.3 J3, §2.8 Q1-Q3.
 
 Reference parity (citations into /root/reference):

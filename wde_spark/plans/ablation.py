@@ -44,15 +44,14 @@ SPECS = ["nobname_sts", "status", "dates", "function"]
 
 
 def ablation_grid(nametable: DataFrame, cache: DataFrame,
-                  truth: DataFrame,
-                  key: tuple[str, ...] = ("catalogue_id", "item_pos",
-                                          "row_pos")) -> DataFrame:
+                  truth: DataFrame) -> DataFrame:
     """Per (variant, combo): total, covered, successes, and success rates.
 
     nametable: the golden rows (catalogue_id, item_pos, row_pos, xml_id,
     name, trait). truth: key columns + `truth_id`. cache: the recorded
     query cache (qstr, qid, ...) — qid '' means a recorded empty result.
     """
+    key = ["catalogue_id", "item_pos", "row_pos"]
     qd = attach_qdicts(nametable)
 
     name_base = F.concat_ws(" ", "fname", "lname")
@@ -102,7 +101,7 @@ def ablation_grid(nametable: DataFrame, cache: DataFrame,
     #                  plus a missing cache entry would fabricate successes).
     scored = (
         cells.join(F.broadcast(hits), "q", "left")
-        .join(truth, list(key))
+        .join(truth, key)
         .select(
             "variant", "combo",
             (F.col("pred").isNotNull() & (F.col("q") != "")).alias("covered"),

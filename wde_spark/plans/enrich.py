@@ -60,19 +60,18 @@ def compare_norm(c):
     return F.regexp_replace(c, r"(^\s|\s$)", "")
 
 
-def parse_bindings(raw: DataFrame, qid: str = "qid",
-                   json_col: str = "json") -> DataFrame:
+def parse_bindings(raw: DataFrame) -> DataFrame:
     """(qid, query_idx, json) → one row per (binding, var) with the binding's
     position materialized (the dedup is order-dependent)."""
-    parsed = raw.withColumn("__doc", F.from_json(F.col(json_col), SPARQL_JSON_SCHEMA))
+    parsed = raw.withColumn("__doc", F.from_json(F.col("json"), SPARQL_JSON_SCHEMA))
     return (
         parsed.select(
-            qid, "query_idx",
+            "qid", "query_idx",
             F.col("__doc.head.vars").alias("vars"),
             F.posexplode_outer("__doc.results.bindings").alias("bind_ord", "bind"),
         )
         .select(
-            qid, "query_idx", "vars", "bind_ord",
+            "qid", "query_idx", "vars", "bind_ord",
             F.explode("vars").alias("var"),
             F.col("bind"),
         )
@@ -81,7 +80,7 @@ def parse_bindings(raw: DataFrame, qid: str = "qid",
     )
 
 
-def normalized_values(bindings: DataFrame, qid: str = "qid") -> DataFrame:
+def normalized_values(bindings: DataFrame) -> DataFrame:
     """A6 — per (qid, var): ordered, compare-normalized dedup of the WDQS
     cartesian product; keeps the first-seen cleaned form of each normal
     class. Returns (qid, var, values array<string>) including empty arrays
@@ -91,10 +90,10 @@ def normalized_values(bindings: DataFrame, qid: str = "qid") -> DataFrame:
         .withColumn("cleaned", clean_value("value"))
         .withColumn("norm", compare_norm("cleaned"))
     )
-    w = Window.partitionBy(qid, "var", "norm").orderBy("bind_ord")
+    w = Window.partitionBy("qid", "var", "norm").orderBy("bind_ord")
     first_seen = vals.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
     collected = (
-        first_seen.groupBy(qid, "var")
+        first_seen.groupBy("qid", "var")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("bind_ord", "cleaned"))),
@@ -106,28 +105,28 @@ def normalized_values(bindings: DataFrame, qid: str = "qid") -> DataFrame:
     # only materializes keys while scanning bindings) — hence the filter
     universe = (
         bindings.filter(F.col("bind_ord").isNotNull())
-        .select(qid, "var").distinct()
+        .select("qid", "var").distinct()
     )
     return (
-        universe.join(collected, [qid, "var"], "left")
+        universe.join(collected, ["qid", "var"], "left")
         .withColumn("values", F.coalesce("values", F.array().cast("array<string>")))
     )
 
 
-def enrichment_store(values: DataFrame, qid: str = "qid") -> DataFrame:
+def enrichment_store(values: DataFrame) -> DataFrame:
     """SO3 + the document-store shape: one row per QID with a
     `map<var, array<string>>` of all (deduplicated) enrichment values —
     the Spark form of `wikidata_enrichments.json` (sparql.py:410-418)."""
-    return values.groupBy(qid).agg(
+    return values.groupBy("qid").agg(
         F.map_from_entries(
             F.array_sort(F.collect_list(F.struct("var", "values")))
         ).alias("enrichment")
     )
 
 
-def enrich_offline(raw_results: DataFrame, qid: str = "qid") -> DataFrame:
+def enrich_offline(raw_results: DataFrame) -> DataFrame:
     """Full offline stage `-s` from recorded SPARQL-JSON documents."""
-    return enrichment_store(normalized_values(parse_bindings(raw_results, qid), qid), qid)
+    return enrichment_store(normalized_values(parse_bindings(raw_results)))
 
 
 def sparql_xml_to_json(xml_text: str) -> dict:

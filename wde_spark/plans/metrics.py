@@ -11,13 +11,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def quality_metrics(scored: DataFrame, pred: str = "wd_id",
-                    truth: str = "truth_id",
-                    cert: str = "wd_certitude") -> DataFrame:
-    """scored: one row per test item with predicted id, ground-truth id, and
-    certitude flag. Returns the reference's test_final record
-    (itemtoid_test.py:271-290) as a single-row DataFrame."""
-    p, t, c = F.col(pred), F.col(truth), F.col(cert)
+def quality_metrics(scored: DataFrame) -> DataFrame:
+    """scored: one row per test item with predicted id (`wd_id`),
+    ground-truth id (`truth_id`), and certitude flag (`wd_certitude`).
+    Returns the reference's test_final record (itemtoid_test.py:271-290)
+    as a single-row DataFrame."""
+    p, t, c = F.col("wd_id"), F.col("truth_id"), F.col("wd_certitude")
     one = lambda cond: F.sum(F.when(cond, 1).otherwise(0))
 
     agg = scored.agg(

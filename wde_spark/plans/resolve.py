@@ -14,7 +14,7 @@ loop with (SURVEY.md §2.8, §4):
       → left join back           [rows with no hit keep empty results]
 
 Two shuffles total (cache join + rank window) for the entire corpus vs
-|corpus| × |ladder| sequential probes. The cache is broadcast when small.
+|corpus| × |ladder| sequential probes. The cache side is broadcast.
 The plan is `assign(attach_candidates(nametable), cache)`. Live-API mode
 (sources/http.resolve_live) runs the same two halves and fills the cache
 between them: its wave loop fetches each missing rung once, then `assign`
@@ -126,18 +126,15 @@ def attach_candidates(nametable: DataFrame) -> DataFrame:
 
 
 def resolve_offline(nametable: DataFrame, cache: DataFrame,
-                    broadcast_cache: bool = True,
                     certitude_source: str = "cache") -> DataFrame:
     """Offline stage `-i`: every ladder candidate joins the cache table at
     once; the best-ranked hit per row wins (J2 + W2). Returns the 7-column
     nametable_out (S4 shape, itemtoid.py:331-333) plus ordering columns.
     `certitude_source` as in `assign`."""
-    return assign(attach_candidates(nametable), cache, broadcast_cache,
-                  certitude_source)
+    return assign(attach_candidates(nametable), cache, certitude_source)
 
 
 def assign(with_cands: DataFrame, cache: DataFrame,
-           broadcast_cache: bool = True,
            certitude_source: str = "cache") -> DataFrame:
     """The cache join and best-rank window over `attach_candidates` rows.
 
@@ -154,9 +151,7 @@ def assign(with_cands: DataFrame, cache: DataFrame,
     # only non-empty entries are probe hits.
     probe_side = cache.filter(F.col("qid") != "").select(
         "qstr", "qid", "title", "snippet", "cert")
-    if broadcast_cache:
-        probe_side = F.broadcast(probe_side)
-    hits = cand.join(probe_side, "qstr")
+    hits = cand.join(F.broadcast(probe_side), "qstr")
     w = Window.partitionBy(*key).orderBy("rank")
     best = (
         hits.withColumn("__rn", F.row_number().over(w))

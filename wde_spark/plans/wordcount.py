@@ -31,11 +31,11 @@ STOPLIST = [
 ]
 
 
-def trait_wordcount(nametable: DataFrame, trait_col: str = "trait") -> DataFrame:
+def trait_wordcount(nametable: DataFrame) -> DataFrame:
     """(word, count) over every trait, descending count."""
     words = (
         nametable.select(
-            F.explode(F.split(F.col(trait_col), r"\s+")).alias("w"))
+            F.explode(F.split(F.col("trait"), r"\s+")).alias("w"))
         .select(F.regexp_replace("w", r"\.|,|\(|\)", "").alias("w"))
         .filter(~F.col("w").isin(STOPLIST))
         .filter(F.col("w") != "")

@@ -6136,7 +6136,7 @@ def curation_pipeline_documents(spark: SparkSession,
 def _streaming_ffd_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per parquet snapshot) the sealed-bin FFD manifest of the
     documents table streamed in as three arrival batches (doc_id % 3),
-    and return its manifest directory. The feed's spaced mtimes make
+    and return its pack directory. The feed's spaced mtimes make
     batch_no == doc_id % 3 deterministic."""
     from .functions.strings import tokens as _tokens
     from .streaming.pack_admission import streaming_ffd_manifest
@@ -6152,8 +6152,7 @@ def _streaming_ffd_dir(spark: SparkSession, sf_dir: str) -> str:
             seq_len=_PACK_SEQ_LEN, n_buckets=8)
 
     return os.path.join(
-        _snapshot_dir(sf_dir, "documents", "wde_ffd_adm", build),
-        "pack", "manifest")
+        _snapshot_dir(sf_dir, "documents", "wde_ffd_adm", build), "pack")
 
 
 @query(
@@ -6240,8 +6239,9 @@ def streaming_ffd_manifest_documents(spark: SparkSession,
     doc→(bucket, bin, batch) assignment of the maintained ledger is
     hash-checked, sealing semantics included (a late small doc must NOT
     back-fill an earlier batch's bin)."""
-    man_dir = _streaming_ffd_dir(spark, sf_dir)
-    return spark.read.parquet(os.path.join(man_dir, "b*"))
+    from .streaming.pack_admission import read_pack_manifest
+
+    return read_pack_manifest(spark, _streaming_ffd_dir(spark, sf_dir))
 
 
 @query(

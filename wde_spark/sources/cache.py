@@ -90,7 +90,7 @@ def read_query_cache(spark: SparkSession, path_glob: str) -> DataFrame:
 
 
 def synthetic_cache(queries: DataFrame, hit_rate: float,
-                    seed: str = "dummy", qstr_col: str = "qstr") -> DataFrame:
+                    seed: str = "dummy") -> DataFrame:
     """Reference `makedummy` (script/itemtoid_test.py:23-58) generalized: a
     deterministic synthetic cache covering `hit_rate` of the given query
     population, for cache-miss-ratio experiments against `resolve_live`.
@@ -102,7 +102,7 @@ def synthetic_cache(queries: DataFrame, hit_rate: float,
     side effect of random key collisions. Row-local column expressions, no
     shuffle; the `part` column reproduces the reference's
     first-character file partitioning."""
-    q = F.col(qstr_col)
+    q = F.col("qstr")
     h = F.md5(F.concat(F.lit(f"{seed}|"), q))
     keep = (F.conv(F.substring(h, 1, 4), 16, 10).cast("long")
             < int(hit_rate * 0x10000))

@@ -23,24 +23,23 @@ NAMETABLE_OUT_COLS = ["tei_xml_id", "wd_id", "tei_name", "wd_name",
                       "wd_snippet", "tei_trait", "wd_certitude"]
 
 
-def read_tsv(spark: SparkSession, path: str,
-             schema: T.StructType | None = None) -> DataFrame:
+def read_tsv(spark: SparkSession, path: str) -> DataFrame:
     """S3 — header'd, quoted, tab-separated scan (the reference's
-    `csv.reader(delimiter='\\t', quotechar='"')` + header skip)."""
-    reader = (
+    `csv.reader(delimiter='\\t', quotechar='"')` + header skip), every
+    column read as a string."""
+    return (
         spark.read.option("sep", "\t").option("header", True)
         .option("quote", '"').option("multiLine", False)
+        .csv(path)
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.csv(path)
 
 
-def write_tsv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_tsv(df: DataFrame, path: str) -> None:
     """S4 — TSV sink with header. The reference appends row-by-row with a
-    header-iff-empty dance; a deterministic batch overwrite (or append of a
-    new partition directory) replaces that bookkeeping."""
-    df.write.mode(mode).option("sep", "\t").option("header", True).csv(path)
+    header-iff-empty dance; a deterministic batch overwrite replaces that
+    bookkeeping."""
+    df.write.mode("overwrite").option("sep", "\t").option("header", True) \
+        .csv(path)
 
 
 def _csv_minimal_quote(col: F.Column) -> F.Column:

@@ -30,30 +30,26 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
-                   num_buckets: int, sort_cols: list[str] | None = None,
-                   path: str | None = None, mode: str = "overwrite") -> None:
-    """Write `df` as a bucketed (optionally per-file-sorted) parquet table.
+                   num_buckets: int, path: str | None = None) -> None:
+    """Write `df` as a bucketed parquet table.
 
     Pick `num_buckets` once per warehouse and reuse it for every table
     sharing the join key — co-location only holds between EQUAL bucket
-    counts. Sorting within buckets lets sort-merge joins skip their sort
-    when files-per-bucket is 1 (write with one task per bucket for that).
+    counts.
     """
-    w = df.write.format("parquet").mode(mode) \
+    w = df.write.format("parquet").mode("overwrite") \
         .bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
-                      mode: str = "overwrite") -> None:
+def write_partitioned(df: DataFrame, path: str,
+                      partition_cols: list[str]) -> None:
     """Write path-based parquet partitioned by `partition_cols` (directory
     per value — keep cardinality bounded; a high-cardinality partition
     column creates a small-files problem, use bucketing instead)."""
-    df.write.format("parquet").mode(mode) \
+    df.write.format("parquet").mode("overwrite") \
         .partitionBy(*partition_cols).save(path)
 
 

@@ -31,7 +31,6 @@ import json
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .http import FetchFn
@@ -152,12 +151,11 @@ RAW_RESULT_SCHEMA = T.StructType([
 
 
 def fetch_enrichment(qids: DataFrame, fetch_fn: FetchFn,
-                     qid_col: str = "qid", n_workers: int = 4) -> DataFrame:
+                     n_workers: int = 4) -> DataFrame:
     """Fetch the 4-query grid for every distinct QID from `n_workers`
     partitions (the politeness/parallelism knob, S9). Returns raw
     (qid, query_idx, json) rows ready for `plans.enrich.enrich_offline`."""
-    distinct = qids.select(F.col(qid_col).alias("qid")).distinct() \
-        .repartition(n_workers)
+    distinct = qids.select("qid").distinct().repartition(n_workers)
 
     def work(rows: Iterator[Row]) -> Iterator[Row]:
         for r in rows:
@@ -170,17 +168,16 @@ def fetch_enrichment(qids: DataFrame, fetch_fn: FetchFn,
 
 
 def enrich_live(qids: DataFrame, fetch_fn: FetchFn,
-                done: DataFrame | None = None, qid_col: str = "qid",
+                done: DataFrame | None = None,
                 n_workers: int = 4) -> DataFrame:
     """Full live stage `-s`: resume-filter (P1 anti-join vs the already-
     enriched store), fetch the query grid, normalize declaratively.
     Returns the (qid, enrichment map) store rows for the NEW qids."""
     from ..plans.enrich import enrich_offline
 
-    todo = qids.select(F.col(qid_col).alias("qid")).distinct()
+    todo = qids.select("qid").distinct()
     if done is not None:
-        todo = todo.join(done.select(F.col(qid_col).alias("qid")),
-                         "qid", "left_anti")
+        todo = todo.join(done.select("qid"), "qid", "left_anti")
     # enrich_offline scans its input twice (values and var universe):
     # materialize the fetched documents once so each query is sent once
     raw = fetch_enrichment(todo, fetch_fn, n_workers=n_workers) \

@@ -46,21 +46,16 @@ M_BITS_DEFAULT = 1 << 20
 N_SEEDS_DEFAULT = 4
 
 
-def batch_bloom_bits(benchmark: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", shingle_k: int = 3,
-                     m_bits: int = M_BITS_DEFAULT,
-                     n_seeds: int = N_SEEDS_DEFAULT) -> DataFrame:
+def batch_bloom_bits(benchmark: DataFrame,
+                     m_bits: int = M_BITS_DEFAULT) -> DataFrame:
     """One benchmark slice's Bloom contribution: the DISTINCT `bit`
-    positions its k-token shingles set. Output is the relational bit-set
+    positions its 3-token shingles set. Output is the relational bit-set
     encoding shared with `decontaminate_bloom` — mergeable across slices
     by UNION DISTINCT."""
-    sh = (
-        distinct_shingle_table(benchmark, text_col, id_col, shingle_k)
-        .select("sh").distinct()
-    )
+    sh = distinct_shingle_table(benchmark).select("sh").distinct()
     return sh.select(
         F.explode(F.array(*[bloom_bit(F.col("sh"), i, m_bits)
-                            for i in range(n_seeds)])).alias("bit")
+                            for i in range(N_SEEDS_DEFAULT)])).alias("bit")
     ).distinct()
 
 
@@ -68,11 +63,7 @@ def streaming_bloom_maintain(
     bench_stream: DataFrame,
     target_dir: str,
     checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
     m_bits: int = M_BITS_DEFAULT,
-    n_seeds: int = N_SEEDS_DEFAULT,
 ) -> None:
     """Run the benchmark stream to completion (availableNow — static test
     input), maintaining the Bloom bit-set table under `target_dir` as COW
@@ -81,8 +72,7 @@ def streaming_bloom_maintain(
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         def step(prev, out: str) -> None:
-            bits = batch_bloom_bits(batch, text_col, id_col, shingle_k,
-                                    m_bits, n_seeds)
+            bits = batch_bloom_bits(batch, m_bits)
             if prev is not None:
                 bits = batch.sparkSession.read.parquet(prev) \
                     .unionByName(bits).distinct()
@@ -98,36 +88,34 @@ def read_bloom_bits(spark, target_dir: str) -> DataFrame:
     return spark.read.parquet(latest_version_dir(target_dir))
 
 
-def bloom_admission(docs: DataFrame, bits: DataFrame,
-                    text_col: str = "text", id_col: str = "doc_id",
-                    shingle_k: int = 3, m_bits: int = M_BITS_DEFAULT,
-                    n_seeds: int = N_SEEDS_DEFAULT) -> DataFrame:
-    """(id, n_bloom_candidates, admitted) against a maintained bit set:
-    a shingle is a candidate iff ALL n_seeds of its positions are present
-    (the counting-HAVING form of the all-bits test, exactly
-    `decontaminate_bloom`'s prefilter); a document is admitted iff it has
-    zero candidates. The bit table broadcasts (≤ m_bits rows); the corpus
-    never shuffles payloads, only (id, shingle) keys into the per-shingle
-    count."""
-    doc_sh = distinct_shingle_table(docs, text_col, id_col, shingle_k)
+def bloom_admission(docs: DataFrame, bits: DataFrame) -> DataFrame:
+    """(id, n_bloom_candidates, admitted) against a maintained set of
+    `M_BITS_DEFAULT` bits: a shingle is a candidate iff ALL n_seeds of its
+    positions are present (the counting-HAVING form of the all-bits test,
+    exactly `decontaminate_bloom`'s prefilter); a document is admitted iff
+    it has zero candidates. The bit table broadcasts (≤ `M_BITS_DEFAULT`
+    rows); the corpus never shuffles payloads, only (id, shingle) keys into
+    the per-shingle count."""
+    doc_sh = distinct_shingle_table(docs)
     sh_bits = doc_sh.select(
-        id_col, "sh",
-        F.posexplode(F.array(*[bloom_bit(F.col("sh"), i, m_bits)
-                               for i in range(n_seeds)])).alias("i", "bit"),
+        "doc_id", "sh",
+        F.posexplode(F.array(*[bloom_bit(F.col("sh"), i, M_BITS_DEFAULT)
+                               for i in range(N_SEEDS_DEFAULT)]))
+        .alias("i", "bit"),
     )
     cand = (
         sh_bits.join(F.broadcast(bits.select("bit")), "bit")
-        .groupBy(id_col, "sh")
+        .groupBy("doc_id", "sh")
         .agg(F.countDistinct("i").alias("_nb"))
-        .filter(F.col("_nb") == n_seeds)
+        .filter(F.col("_nb") == N_SEEDS_DEFAULT)
     )
-    counts = cand.groupBy(id_col).agg(
+    counts = cand.groupBy("doc_id").agg(
         F.count("*").alias("n_bloom_candidates"))
     return (
-        docs.select(id_col)
-        .join(counts, id_col, "left")
+        docs.select("doc_id")
+        .join(counts, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bloom_candidates", F.lit(0))
             .alias("n_bloom_candidates"),
             (F.coalesce("n_bloom_candidates", F.lit(0)) == 0)

@@ -50,14 +50,12 @@ def _budget_col(budgets: dict, default: int):
 
 
 def apply_budget_batch(batch: DataFrame, batch_id: int, target_dir: str,
-                       budgets: dict, default_budget: int,
-                       id_col: str = "doc_id",
-                       salt: str = "wde@") -> None:
+                       budgets: dict, default_budget: int) -> None:
     """One admission step: hash-order the batch within each source,
     offset by the stored per-source spent totals, keep rows while the
     inclusive running total fits the budget, append as v{batch_id+1}."""
-    hx = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    w = (Window.partitionBy("source").orderBy("_hx", id_col)
+    hx = F.md5(F.concat(F.lit("wde@"), F.col("doc_id").cast("string")))
+    w = (Window.partitionBy("source").orderBy("_hx", "doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
     def step(prev, out: str) -> None:
@@ -76,7 +74,7 @@ def apply_budget_batch(batch: DataFrame, batch_id: int, target_dir: str,
                             .cast("long"))
             .filter(F.col("cum_tokens")
                     <= _budget_col(budgets, default_budget))
-            .select(id_col, "source", F.col("n_tok").cast("long"),
+            .select("doc_id", "source", F.col("n_tok").cast("long"),
                     "cum_tokens",
                     F.lit(batch_id).cast("int").alias("arrived_batch"))
         )
@@ -93,8 +91,6 @@ def streaming_budget_maintain(
     checkpoint_dir: str,
     budgets: dict,
     default_budget: int,
-    id_col: str = "doc_id",
-    salt: str = "wde@",
 ) -> None:
     """Run the (id, source, n_tok) stream to completion (availableNow —
     static test input), maintaining the admission ledger under
@@ -102,7 +98,7 @@ def streaming_budget_maintain(
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_budget_batch(batch, batch_id, target_dir, budgets,
-                           default_budget, id_col, salt)
+                           default_budget)
 
     run_foreach_batch(doc_stream, _apply, checkpoint_dir)
 

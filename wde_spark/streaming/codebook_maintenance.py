@@ -51,13 +51,13 @@ N_CELLS_DEFAULT = 16
 DIM = 64
 
 
-def _batch_cell_sums(batch: DataFrame, cents: list,
-                     vec_col: str = "embedding") -> DataFrame:
+def _batch_cell_sums(batch: DataFrame, cents: list) -> DataFrame:
     """(cell, d, n_add, s_add) for one batch assigned under `cents` —
     one Arrow argmin pass + one hash aggregate, batch-sized."""
     spark = batch.sparkSession
     assign = _probe_cells_udf(spark, cents, nprobe=1)
-    nv = batch.select(_normalize(_as_double(F.col(vec_col))).alias("nv"))
+    nv = batch.select(
+        _normalize(_as_double(F.col("embedding"))).alias("nv"))
     a = nv.select(F.col("nv"),
                   assign(F.col("nv"))[0].cast("int").alias("cell"))
     return (
@@ -68,8 +68,7 @@ def _batch_cell_sums(batch: DataFrame, cents: list,
     )
 
 
-def _state0(init_emb: DataFrame, n_cells: int, iters: int,
-            vec_col: str) -> DataFrame:
+def _state0(init_emb: DataFrame, n_cells: int, iters: int) -> DataFrame:
     """State 0 on the init slice: per (cell, d) the member count,
     coordinate sum, and bootstrap centroid coordinate."""
     spark = init_emb.sparkSession
@@ -82,7 +81,7 @@ def _state0(init_emb: DataFrame, n_cells: int, iters: int,
         [(c, d, float(cents[c][d]))
          for c in range(len(cents)) for d in range(DIM)],
         "cell int, d int, boot double")
-    sums = _batch_cell_sums(init_emb, cents, vec_col)
+    sums = _batch_cell_sums(init_emb, cents)
     return (
         boot.join(sums, ["cell", "d"], "left")
         .select("cell", "d",
@@ -94,8 +93,7 @@ def _state0(init_emb: DataFrame, n_cells: int, iters: int,
 
 def bootstrap_codebook_v0(init_emb: DataFrame, target_dir: str,
                           n_cells: int = N_CELLS_DEFAULT,
-                          iters: int = 2,
-                          vec_col: str = "embedding") -> None:
+                          iters: int = 2) -> None:
     """Train the bootstrap codebook on the init slice
     (`train_ivf_centroids` — md5-ordered seeding, `iters` Lloyd rounds),
     assign the init slice under it, and write state v0: per (cell, d)
@@ -103,15 +101,14 @@ def bootstrap_codebook_v0(init_emb: DataFrame, target_dir: str,
     coordinate (the empty-cell fallback)."""
 
     def write_v0(out: str) -> None:
-        _state0(init_emb, n_cells, iters, vec_col) \
+        _state0(init_emb, n_cells, iters) \
             .coalesce(1).write.mode("overwrite").parquet(out)
 
     bootstrap(os.path.join(target_dir, "state"), write_v0)
 
 
 def streaming_codebook_maintain(emb_stream: DataFrame, target_dir: str,
-                                checkpoint_dir: str,
-                                vec_col: str = "embedding") -> None:
+                                checkpoint_dir: str) -> None:
     """Run the embedding stream to completion (availableNow — static test
     input), folding each micro-batch into the codebook state as COW
     versions. Assignment uses the centroids current at the batch's
@@ -122,7 +119,7 @@ def streaming_codebook_maintain(emb_stream: DataFrame, target_dir: str,
             st = batch.sparkSession.read.parquet(prev)
             cents = _centroids_from_state(st)
             if cents:
-                sums = _batch_cell_sums(batch, cents, vec_col)
+                sums = _batch_cell_sums(batch, cents)
                 st = (
                     st.join(sums, ["cell", "d"], "left")
                     .select("cell", "d",
@@ -155,10 +152,7 @@ def _centroids_from_state(st: DataFrame) -> list:
     return [[cells[c][d] for d in range(DIM)] for c in sorted(cells)]
 
 
-def bootstrap_codebook_delta(init_emb: DataFrame, target_dir: str,
-                             n_cells: int = N_CELLS_DEFAULT,
-                             iters: int = 2,
-                             vec_col: str = "embedding") -> None:
+def bootstrap_codebook_delta(init_emb: DataFrame, target_dir: str) -> None:
     """DELTA-LEDGER twin of `bootstrap_codebook_v0`: identical state-0
     arithmetic, written as ledger base `state/b0` (merge-on-read layout
     from `streaming/compaction.py`) instead of snapshot `state/v0`."""
@@ -169,14 +163,12 @@ def bootstrap_codebook_delta(init_emb: DataFrame, target_dir: str,
     # b0 away, so "b0 exists" is NOT the bootstrapped test
     if ledger_entries(ledger):
         return
-    write_base(_state0(init_emb, n_cells, iters, vec_col).coalesce(1),
-               ledger, 0)
+    write_base(_state0(init_emb, N_CELLS_DEFAULT, 2).coalesce(1), ledger, 0)
 
 
 def streaming_codebook_maintain_delta(emb_stream: DataFrame,
                                       target_dir: str,
                                       checkpoint_dir: str,
-                                      vec_col: str = "embedding",
                                       auto_compact: int | None = None) -> None:
     """DELTA-LEDGER twin of `streaming_codebook_maintain` — the
     table-format write path for maintained state that is CORPUS-sized
@@ -215,7 +207,7 @@ def streaming_codebook_maintain_delta(emb_stream: DataFrame,
                 [], "cell int, d int, n long, s double, boot double"
             ).coalesce(1), ledger, batch_id + 1)
             return
-        sums = _batch_cell_sums(batch, cents, vec_col)
+        sums = _batch_cell_sums(batch, cents)
         delta = (
             cur.join(sums, ["cell", "d"], "inner")  # touched rows only
             .select("cell", "d",

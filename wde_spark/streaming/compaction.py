@@ -84,6 +84,7 @@ from pyspark.sql.window import Window
 _ENTRY_RE = re.compile(r"^([bd])(\d+)$")
 _MANIFEST_DIR = "_manifest"
 _COMMIT_RE = re.compile(r"^c(\d{10})\.json$")
+_ZORDER_BITS = 16
 
 
 # --------------------------------------------------------------------------
@@ -240,10 +241,9 @@ def write_base(df: DataFrame, target_dir: str, seq: int,
 
 
 def write_delta(df: DataFrame, target_dir: str, seq: int,
-                op_col: str = "_op",
                 stats_col: str | None = None,
                 key_cols=None) -> None:
-    """Append the batch's changed rows at sequence `seq`. `op_col`
+    """Append the batch's changed rows at sequence `seq`. `_op`
     ('U' upsert / 'D' delete) is added as all-'U' when absent.
 
     WRITE CONTRACT: at most ONE ROW PER KEY per delta (upsert OR
@@ -256,8 +256,8 @@ def write_delta(df: DataFrame, target_dir: str, seq: int,
     range too (a delete for key k lives wherever k does). Visibility is
     manifest-commit atomic, as for `write_base`."""
     os.makedirs(target_dir, exist_ok=True)
-    if op_col not in df.columns:
-        df = df.withColumn(op_col, F.lit("U"))
+    if "_op" not in df.columns:
+        df = df.withColumn("_op", F.lit("U"))
     if key_cols:
         _assert_unique_keys(df, list(key_cols), f"delta d{seq}")
     entry = _entry_dir(target_dir, "d", seq)
@@ -400,9 +400,7 @@ def read_amplification(target_dir: str) -> dict:
 
 def maybe_compact(spark, target_dir: str, key_cols,
                   max_entries: int = 8,
-                  vacuum_mode: str = "defer",
-                  target_file_bytes: int | None = 128 * 1024 * 1024,
-                  cluster_cols=None) -> dict | None:
+                  vacuum_mode: str = "defer") -> dict | None:
     """Compaction cadence: fold the ledger iff a merged read would
     touch more than `max_entries` live entries (base + deltas). Call
     after each delta append — the maintainer's auto-OPTIMIZE. Bounds
@@ -421,33 +419,29 @@ def maybe_compact(spark, target_dir: str, key_cols,
         fold back.
       * 'immediate' — fold and vacuum in one step (no retention; the
         single-writer, no-concurrent-reader harness shape).
-      * 'never' — fold only; the deployment vacuums on its own cadence.
 
-    `target_file_bytes` / `cluster_cols` pass through to `compact`."""
-    if vacuum_mode not in ("defer", "immediate", "never"):
+    The folded base is written with `compact`'s default file size and no
+    clustering."""
+    if vacuum_mode not in ("defer", "immediate"):
         raise ValueError(f"unknown vacuum_mode {vacuum_mode!r}")
     amp = read_amplification(target_dir)
     if amp["entries"] <= max_entries:
         return None
     if vacuum_mode == "immediate":
-        return compact(spark, target_dir, key_cols, vacuum_absorbed=True,
-                       target_file_bytes=target_file_bytes,
-                       cluster_cols=cluster_cols)
+        return compact(spark, target_dir, key_cols, vacuum_absorbed=True)
     pre_live = set(plan_entries(target_dir))
-    res = compact(spark, target_dir, key_cols, vacuum_absorbed=False,
-                  target_file_bytes=target_file_bytes,
-                  cluster_cols=cluster_cols)
-    if vacuum_mode == "defer":
-        # reclaim only what OLDER folds absorbed: anything already dead
-        # before this fold ran. The entries this fold absorbed stay one
-        # more tick for in-flight readers / one-fold time travel.
-        res["removed"] = vacuum(target_dir, retain=pre_live)
+    res = compact(spark, target_dir, key_cols, vacuum_absorbed=False)
+    # reclaim only what OLDER folds absorbed: anything already dead
+    # before this fold ran. The entries this fold absorbed stay one
+    # more tick for in-flight readers / one-fold time travel.
+    res["removed"] = vacuum(target_dir, retain=pre_live)
     return res
 
 
-def _zorder_col(df: DataFrame, cols: list, bits: int = 16):
-    """A JVM-side Z-value: each column min-max-normalized to `bits`
-    bits, then bit-interleaved (two 16-bit dims -> one 32-bit key).
+def _zorder_col(df: DataFrame, cols: list):
+    """A JVM-side Z-value: each column min-max-normalized to
+    `_ZORDER_BITS` bits, then bit-interleaved (two 16-bit dims -> one
+    32-bit key).
     One O(table) agg for the mins/maxes; the interleave itself is a
     codegen'd expression, no Python in the loop."""
     aggs = []
@@ -462,11 +456,11 @@ def _zorder_col(df: DataFrame, cols: list, bits: int = 16):
         span = (hi - lo) if (hi is not None and lo is not None
                              and hi > lo) else 1.0
         v = ((F.col(c).cast("double") - F.lit(lo)) / F.lit(span)
-             * F.lit((1 << bits) - 1)).cast("long")
+             * F.lit((1 << _ZORDER_BITS) - 1)).cast("long")
         scaled.append(F.coalesce(v, F.lit(0)))
     z = F.lit(0).cast("long")
     n = len(cols)
-    for i in range(bits):
+    for i in range(_ZORDER_BITS):
         for j, v in enumerate(scaled):
             bit = F.shiftright(v, i).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, i * n + j))

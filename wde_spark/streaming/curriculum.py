@@ -31,16 +31,14 @@ from .versions import latest_version_dir, run_foreach_batch, versioned_step
 
 
 def apply_curriculum_batch(batch: DataFrame, batch_id: int,
-                           target_dir: str, id_col: str = "doc_id",
-                           bucket_col: str = "bucket",
-                           extra_cols: tuple = ()) -> None:
+                           target_dir: str, extra_cols: tuple = ()) -> None:
     """One maintenance step: append the arriving (id, bucket[, extra])
     rows to v{batch_id}'s ledger as v{batch_id + 1}. `extra_cols` carries
     additional arrival-time columns (e.g. n_tok for maintained pacing)
     — still metadata-sized, never text."""
     fresh = batch.select(
-        F.col(id_col),
-        F.col(bucket_col).cast("long").alias(bucket_col),
+        F.col("doc_id"),
+        F.col("bucket").cast("long").alias("bucket"),
         *[F.col(c) for c in extra_cols],
         F.lit(batch_id).cast("int").alias("arrived_batch"),
     )
@@ -57,8 +55,6 @@ def streaming_curriculum_maintain(
     doc_stream: DataFrame,
     target_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    bucket_col: str = "bucket",
     extra_cols: tuple = (),
 ) -> None:
     """Run the (id, bucket[, extra]) stream to completion (availableNow
@@ -68,15 +64,12 @@ def streaming_curriculum_maintain(
     document bytes are read exactly once, at arrival."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_curriculum_batch(batch, batch_id, target_dir, id_col,
-                               bucket_col, extra_cols)
+        apply_curriculum_batch(batch, batch_id, target_dir, extra_cols)
 
     run_foreach_batch(doc_stream, _apply, checkpoint_dir)
 
 
-def read_curriculum(spark, target_dir: str, n_stages: int = 3,
-                    id_col: str = "doc_id", bucket_col: str = "bucket",
-                    salt: str = "cur") -> DataFrame:
+def read_curriculum(spark, target_dir: str) -> DataFrame:
     """Materialize the CURRENT schedule from the latest ledger version:
     the exact `curriculum_order` staging (NTILE terciles over (bucket,
     id), salted in-stage shuffle, round-robin interleave) over the
@@ -85,13 +78,10 @@ def read_curriculum(spark, target_dir: str, n_stages: int = 3,
     from ..operators.sampling import curriculum_order
 
     ledger = spark.read.parquet(latest_version_dir(target_dir))
-    return curriculum_order(ledger, F.col(bucket_col),
-                            n_stages=n_stages, id_col=id_col, salt=salt)
+    return curriculum_order(ledger, F.col("bucket"))
 
 
-def read_paced(spark, target_dir: str, quotas, n_stages: int = 3,
-               id_col: str = "doc_id", bucket_col: str = "bucket",
-               tok_col: str = "n_tok", salt: str = "cur") -> DataFrame:
+def read_paced(spark, target_dir: str, quotas) -> DataFrame:
     """Maintained PACING: the per-stage token-quota phase admission
     (`sampling.curriculum_pacing`) materialized from the ledger's
     arrival-time buckets and token counts — no document bytes touched,
@@ -104,7 +94,5 @@ def read_paced(spark, target_dir: str, quotas, n_stages: int = 3,
     # provenance rides through the pacing pipeline as a passthrough
     # column (r12) — the old per-id rejoin shuffled the paced output and
     # the ledger a second time for a column every row already carried
-    return curriculum_pacing(ledger, F.col(bucket_col),
-                             F.col(tok_col), quotas,
-                             n_stages=n_stages, id_col=id_col,
-                             salt=salt, extra_cols=("arrived_batch",))
+    return curriculum_pacing(ledger, F.col("bucket"), F.col("n_tok"),
+                             quotas, extra_cols=("arrived_batch",))

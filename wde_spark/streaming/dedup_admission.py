@@ -29,6 +29,10 @@ from ..operators.incremental import DedupState, dedup_increment
 from .versions import (bootstrap, latest_version_dir, read_batch_ledger,
                        run_foreach_batch, versioned_step)
 
+# The one banding every admission ledger runs with (`dedup_corpus`'s
+# defaults): 16 hashes, S-curve bands, 2-token shingles, Jaccard 0.2.
+_NUM_HASHES, _BANDS, _SHINGLE_K, _THRESHOLD = 16, "auto", 2, 0.2
+
 
 def read_corpus(spark, target_dir: str) -> DataFrame:
     """Current admitted corpus (latest version)."""
@@ -41,19 +45,13 @@ def streaming_dedup_admission(
     init_corpus: DataFrame,
     target_dir: str,
     checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int | str = "auto",
-    shingle_k: int = 2,
-    threshold: float = 0.2,
-    max_bucket: int | None = 64,
     drift_dir: str | None = None,
 ) -> None:
     """Run the document stream to completion (availableNow — static test
     input), maintaining the deduplicated corpus + state under
-    `target_dir`. `init_corpus` must already be deduplicated with the
-    same parameters (v0 bootstrap builds its state with one full scan).
+    `target_dir` (bucket cap 64). `init_corpus` must already be
+    deduplicated with the same parameters (v0 bootstrap builds its state
+    with one full scan).
 
     `drift_dir` attaches the DRIFT MAINTAINER: after each admission
     writes version n+1, one `operators/drift.corpus_divergence` row
@@ -65,20 +63,15 @@ def streaming_dedup_admission(
     versioned step, so it is complete whenever version n+1 is. The rows
     are pinned equal to `drift_history` over the finished ledger in
     tests."""
-    bootstrap_v0(init_corpus, target_dir, text_col, id_col, num_hashes,
-                 bands, shingle_k)
+    bootstrap_v0(init_corpus, target_dir)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        _admit_batch(batch, batch_id, target_dir, text_col, id_col,
-                     num_hashes, bands, shingle_k, threshold, max_bucket,
-                     drift_dir)
+        _admit_batch(batch, batch_id, target_dir, 64, drift_dir)
 
     run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def _admit_batch(batch: DataFrame, batch_id: int, target_dir: str,
-                 text_col: str, id_col: str, num_hashes: int,
-                 bands: int | str, shingle_k: int, threshold: float,
                  max_bucket: int | None,
                  drift_dir: str | None = None, gate=None) -> None:
     """One admission step v{batch_id} → v{batch_id+1} (read previous
@@ -99,10 +92,10 @@ def _admit_batch(batch: DataFrame, batch_id: int, target_dir: str,
             fingerprints=spark.read.parquet(os.path.join(prev, "fp")),
             bands=spark.read.parquet(os.path.join(prev, "bands")),
         )
-        res = dedup_increment(corpus, docs, state, text_col, id_col,
-                              num_hashes, bands, shingle_k, threshold,
+        res = dedup_increment(corpus, docs, state, "text", "doc_id",
+                              _NUM_HASHES, _BANDS, _SHINGLE_K, _THRESHOLD,
                               max_bucket)
-        corpus.join(res.revoked, id_col, "left_anti") \
+        corpus.join(res.revoked, "doc_id", "left_anti") \
             .unionByName(res.kept) \
             .write.mode("overwrite").parquet(os.path.join(out, "corpus"))
         res.state.fingerprints.write.mode("overwrite").parquet(
@@ -118,8 +111,8 @@ def _admit_batch(batch: DataFrame, batch_id: int, target_dir: str,
             # a pure function of two immutable snapshots
             new_corpus = spark.read.parquet(os.path.join(out, "corpus"))
             corpus_divergence(
-                term_distribution(corpus, text_col),
-                term_distribution(new_corpus, text_col),
+                term_distribution(corpus),
+                term_distribution(new_corpus),
             ).select(
                 F.lit(batch_id).cast("long").alias("from_version"),
                 F.lit(batch_id + 1).cast("long").alias("to_version"),
@@ -130,9 +123,7 @@ def _admit_batch(batch: DataFrame, batch_id: int, target_dir: str,
     versioned_step(target_dir, batch_id, step)
 
 
-def bootstrap_v0(init_corpus: DataFrame, target_dir: str, text_col: str,
-                 id_col: str, num_hashes: int, bands: int | str,
-                 shingle_k: int) -> None:
+def bootstrap_v0(init_corpus: DataFrame, target_dir: str) -> None:
     """v0 bootstrap (corpus + dedup state), shared by all admission entry
     points; a crash before its commit leaves no v0, and the next start
     rebuilds all of it."""
@@ -141,8 +132,8 @@ def bootstrap_v0(init_corpus: DataFrame, target_dir: str, text_col: str,
     def write_v0(out: str) -> None:
         init_corpus.write.mode("overwrite").parquet(
             os.path.join(out, "corpus"))
-        st = dedup_state(init_corpus, text_col, id_col, num_hashes, bands,
-                         shingle_k)
+        st = dedup_state(init_corpus, "text", "doc_id", _NUM_HASHES, _BANDS,
+                         _SHINGLE_K)
         st.fingerprints.write.mode("overwrite").parquet(
             os.path.join(out, "fp"))
         st.bands.write.mode("overwrite").parquet(os.path.join(out, "bands"))
@@ -181,10 +172,7 @@ def _check_params(target_dir: str, num_hashes: int, n_bands: int,
             f"parameters are frozen at bootstrap_delta time")
 
 
-def bootstrap_delta(init_corpus: DataFrame, target_dir: str,
-                    text_col: str = "text", id_col: str = "doc_id",
-                    num_hashes: int = 16, bands: int | str = "auto",
-                    shingle_k: int = 2) -> None:
+def bootstrap_delta(init_corpus: DataFrame, target_dir: str) -> None:
     """DELTA-LEDGER twin of `bootstrap_v0`: the (already-deduplicated)
     init corpus and its dedup state land as ledger bases
     (`{target_dir}/{corpus,fp,bands}/b0`, `streaming/compaction.py`
@@ -200,19 +188,19 @@ def bootstrap_delta(init_corpus: DataFrame, target_dir: str,
     # b0 away, so "b0 exists" is NOT the bootstrapped test
     if ledger_entries(os.path.join(target_dir, "corpus")):
         return
-    st = dedup_state(init_corpus, text_col, id_col, num_hashes, bands,
-                     shingle_k)
+    st = dedup_state(init_corpus, "text", "doc_id", _NUM_HASHES, _BANDS,
+                     _SHINGLE_K)
     os.makedirs(target_dir, exist_ok=True)
     with open(_params_path(target_dir), "w") as fh:
-        json.dump({"num_hashes": num_hashes,
-                   "n_bands": _resolve_bands(bands, num_hashes, 0.7),
-                   "shingle_k": shingle_k}, fh)
+        json.dump({"num_hashes": _NUM_HASHES,
+                   "n_bands": _resolve_bands(_BANDS, _NUM_HASHES, 0.7),
+                   "shingle_k": _SHINGLE_K}, fh)
     write_base(init_corpus, os.path.join(target_dir, "corpus"), 0,
-               stats_col=id_col, key_cols=[id_col])
+               stats_col="doc_id", key_cols=["doc_id"])
     write_base(st.fingerprints, os.path.join(target_dir, "fp"), 0,
-               stats_col=id_col, key_cols=[id_col])
+               stats_col="doc_id", key_cols=["doc_id"])
     write_base(st.bands, os.path.join(target_dir, "bands"), 0,
-               stats_col=id_col, key_cols=[id_col, "band_idx"])
+               stats_col="doc_id", key_cols=["doc_id", "band_idx"])
 
 
 def streaming_dedup_admission_delta(
@@ -220,12 +208,6 @@ def streaming_dedup_admission_delta(
     init_corpus: DataFrame,
     target_dir: str,
     checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int | str = "auto",
-    shingle_k: int = 2,
-    threshold: float = 0.2,
     max_bucket: int | None = 64,
     auto_compact: int | None = None,
 ) -> None:
@@ -234,8 +216,8 @@ def streaming_dedup_admission_delta(
     (`streaming/compaction.py`), so a micro-batch writes O(batch) rows:
 
       * corpus delta: admitted rows as upserts + revoked ids as
-        tombstones (key: id_col);
-      * fingerprint delta: admitted fps + revoked tombstones (id_col);
+        tombstones (key: doc_id);
+      * fingerprint delta: admitted fps + revoked tombstones (doc_id);
       * band delta: admitted band rows + revoked tombstones, one per
         (id, band_idx) — enumerable because every doc has exactly
         `bands` band rows, so a revocation's keys are known without
@@ -262,18 +244,15 @@ def streaming_dedup_admission_delta(
     (see `streaming_codebook_maintain_delta`): the `as_of=b` entries a
     replay of the current batch would read survive until the NEXT
     fold, by which point the batch is committed."""
-    bootstrap_delta(init_corpus, target_dir, text_col, id_col,
-                    num_hashes, bands, shingle_k)
+    bootstrap_delta(init_corpus, target_dir)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        _admit_batch_delta(batch, batch_id, target_dir, text_col,
-                           id_col, num_hashes, bands, shingle_k,
-                           threshold, max_bucket)
+        _admit_batch_delta(batch, batch_id, target_dir, max_bucket)
         if auto_compact is not None:
             from .compaction import maybe_compact
 
-            for sub, keys in (("corpus", [id_col]), ("fp", [id_col]),
-                              ("bands", [id_col, "band_idx"])):
+            for sub, keys in (("corpus", ["doc_id"]), ("fp", ["doc_id"]),
+                              ("bands", ["doc_id", "band_idx"])):
                 maybe_compact(batch.sparkSession,
                               os.path.join(target_dir, sub), keys,
                               max_entries=auto_compact)
@@ -282,9 +261,6 @@ def streaming_dedup_admission_delta(
 
 
 def _admit_batch_delta(batch: DataFrame, batch_id: int, target_dir: str,
-                       text_col: str, id_col: str, num_hashes: int,
-                       bands: int | str, shingle_k: int,
-                       threshold: float,
                        max_bucket: int | None) -> None:
     """One delta-ledger admission step: read every ledger `as_of`
     batch_id, `dedup_increment`, append ledger deltas seq batch_id+1
@@ -298,63 +274,62 @@ def _admit_batch_delta(batch: DataFrame, batch_id: int, target_dir: str,
     from .compaction import read_merged, write_delta
 
     sp = batch.sparkSession
-    n_bands = _resolve_bands(bands, num_hashes, 0.7)
-    _check_params(target_dir, num_hashes, n_bands, shingle_k)
+    n_bands = _resolve_bands(_BANDS, _NUM_HASHES, 0.7)
+    _check_params(target_dir, _NUM_HASHES, n_bands, _SHINGLE_K)
     corpus = read_merged(sp, os.path.join(target_dir, "corpus"),
-                         [id_col], as_of=batch_id)
+                         ["doc_id"], as_of=batch_id)
     state = DedupState(
         fingerprints=read_merged(sp, os.path.join(target_dir, "fp"),
-                                 [id_col], as_of=batch_id),
+                                 ["doc_id"], as_of=batch_id),
         bands=read_merged(sp, os.path.join(target_dir, "bands"),
-                          [id_col, "band_idx"], as_of=batch_id),
+                          ["doc_id", "band_idx"], as_of=batch_id),
     )
-    res = dedup_increment(corpus, batch, state, text_col, id_col,
-                          num_hashes, n_bands, shingle_k, threshold,
+    res = dedup_increment(corpus, batch, state, "text", "doc_id",
+                          _NUM_HASHES, n_bands, _SHINGLE_K, _THRESHOLD,
                           max_bucket)
     kept = res.kept.localCheckpoint()  # reused by all three deltas
     revoked = res.revoked.localCheckpoint()
     seq = batch_id + 1
-    other = [f.name for f in batch.schema.fields if f.name != id_col]
+    other = [f.name for f in batch.schema.fields if f.name != "doc_id"]
     corpus_delta = kept.withColumn("_op", F.lit("U")).unionByName(
         revoked.select(
-            id_col, *[F.lit(None).cast(batch.schema[c].dataType)
+            "doc_id", *[F.lit(None).cast(batch.schema[c].dataType)
                       .alias(c) for c in other],
             F.lit("D").alias("_op")))
     write_delta(corpus_delta, os.path.join(target_dir, "corpus"), seq,
-                stats_col=id_col, key_cols=[id_col])
-    kept_ids = kept.select(id_col)
+                stats_col="doc_id", key_cols=["doc_id"])
+    kept_ids = kept.select("doc_id")
     # the increment already computed and checkpointed the batch's fp and
     # band tables — subset by kept ids instead of re-deriving shingles
-    fp_delta = (res.batch_fp.select(id_col, "fp")
-                .join(kept_ids, id_col, "left_semi")
+    fp_delta = (res.batch_fp.select("doc_id", "fp")
+                .join(kept_ids, "doc_id", "left_semi")
                 .withColumn("_op", F.lit("U"))
                 .unionByName(revoked.select(
-                    id_col, F.lit(None).cast("string").alias("fp"),
+                    "doc_id", F.lit(None).cast("string").alias("fp"),
                     F.lit("D").alias("_op"))))
     write_delta(fp_delta, os.path.join(target_dir, "fp"), seq,
-                stats_col=id_col, key_cols=[id_col])
+                stats_col="doc_id", key_cols=["doc_id"])
     band_tombs = revoked.crossJoin(
         sp.range(n_bands).select(F.col("id").cast("int")
                                  .alias("band_idx"))) \
-        .select(id_col, "band_idx",
+        .select("doc_id", "band_idx",
                 F.lit(None).cast("string").alias("band_hash"),
                 F.lit("D").alias("_op"))
     band_delta = (res.batch_bands
-                  .join(kept_ids, id_col, "left_semi")
+                  .join(kept_ids, "doc_id", "left_semi")
                   .withColumn("_op", F.lit("U"))
                   .unionByName(band_tombs))
     write_delta(band_delta, os.path.join(target_dir, "bands"), seq,
-                stats_col=id_col, key_cols=[id_col, "band_idx"])
+                stats_col="doc_id", key_cols=["doc_id", "band_idx"])
 
 
-def read_corpus_merged(spark, target_dir: str,
-                       id_col: str = "doc_id") -> DataFrame:
+def read_corpus_merged(spark, target_dir: str) -> DataFrame:
     """Current admitted corpus out of the delta ledger (merge-on-read;
     a plain base scan once compacted)."""
     from .compaction import read_merged
 
     return read_merged(spark, os.path.join(target_dir, "corpus"),
-                       [id_col])
+                       ["doc_id"])
 
 
 def read_drift(spark, drift_dir: str) -> DataFrame:

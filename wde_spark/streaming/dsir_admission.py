@@ -45,14 +45,7 @@ def streaming_dsir_dedup_admission(
     checkpoint_dir: str,
     quarantine_dir: str,
     cutoff: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int | str = "auto",
-    shingle_k: int = 2,
-    threshold: float = 0.2,
     max_bucket: int | None = 64,
-    drift_dir: str | None = None,
 ) -> None:
     """Run the document stream to completion (availableNow — static test
     input), maintaining the DSIR-gated deduplicated corpus under
@@ -60,8 +53,7 @@ def streaming_dsir_dedup_admission(
     (what you want MORE of); `init_corpus` doubles as the raw model's
     training set. Rejected docs land in `quarantine_dir/b{batch_id}` as
     (id, n_bigrams, log_ratio) rows."""
-    bootstrap_v0(init_corpus, target_dir, text_col, id_col, num_hashes,
-                 bands, shingle_k)
+    bootstrap_v0(init_corpus, target_dir)
     t_dir = os.path.join(target_dir, "lm_target")
     r_dir = os.path.join(target_dir, "lm_raw")
     v_dir = os.path.join(target_dir, "lm_vocab")
@@ -69,30 +61,27 @@ def streaming_dsir_dedup_admission(
         # SHARED vocabulary (see dsir.shared_vocab): both frozen models
         # smooth over the same event space, so the ratio measures
         # distribution preference, not model-size bias
-        shared_vocab(target_slice, init_corpus, text_col, id_col) \
+        shared_vocab(target_slice, init_corpus) \
             .write.mode("overwrite").parquet(v_dir)
     vocab0 = target_slice.sparkSession.read.parquet(v_dir)
     for lm_dir, corpus in ((t_dir, target_slice), (r_dir, init_corpus)):
         if not os.path.exists(os.path.join(lm_dir, "_SUCCESS")):
-            train_bigram_lm(corpus, text_col, id_col, vocab=vocab0) \
+            train_bigram_lm(corpus, vocab=vocab0) \
                 .write.mode("overwrite").parquet(lm_dir)
 
     def gate(batch: DataFrame, batch_id: int) -> DataFrame:
         spark = batch.sparkSession
         ratios = dsir_logratio(batch, spark.read.parquet(t_dir),
-                               spark.read.parquet(r_dir), text_col,
-                               id_col, vocab=spark.read.parquet(v_dir))
-        ok_ids = ratios.filter(F.col("log_ratio") >= cutoff) \
-            .select(id_col)
-        ratios.join(ok_ids, id_col, "left_anti") \
+                               spark.read.parquet(r_dir),
+                               vocab=spark.read.parquet(v_dir))
+        ok_ids = ratios.filter(F.col("log_ratio") >= cutoff).select("doc_id")
+        ratios.join(ok_ids, "doc_id", "left_anti") \
             .write.mode("overwrite").parquet(
                 os.path.join(quarantine_dir, f"b{batch_id}"))
-        return batch.join(ok_ids, id_col, "left_semi")
+        return batch.join(ok_ids, "doc_id", "left_semi")
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        _admit_batch(batch, batch_id, target_dir, text_col, id_col,
-                     num_hashes, bands, shingle_k, threshold, max_bucket,
-                     drift_dir, gate)
+        _admit_batch(batch, batch_id, target_dir, max_bucket, gate=gate)
 
     run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 

@@ -44,32 +44,28 @@ def read_codes(spark, target_dir: str) -> DataFrame:
         os.path.join(latest_version_dir(target_dir), "codes"))
 
 
-def ann_query(spark, target_dir: str, queries: DataFrame, k: int = 5,
-              id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
+def ann_query(spark, target_dir: str, queries: DataFrame,
+              k: int = 5) -> DataFrame:
     """ADC top-k against the maintained index — codes only, no vectors."""
     return pq_adc_topk(read_codes(spark, target_dir), queries,
-                       read_codebooks(target_dir), k, id_col, vec_col)
+                       read_codebooks(target_dir), k)
 
 
-def read_codes_merged(spark, target_dir: str,
-                      id_col: str = "vec_id") -> DataFrame:
+def read_codes_merged(spark, target_dir: str) -> DataFrame:
     """Current PQ codes out of the DELTA ledger (merge-on-read; a plain
     base scan once compacted)."""
     from .compaction import read_merged
 
     return read_merged(spark, os.path.join(target_dir, "codes"),
-                       [id_col])
+                       ["vec_id"])
 
 
 def ann_query_merged(spark, target_dir: str, queries: DataFrame,
-                     k: int = 5, id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
+                     k: int = 5) -> DataFrame:
     """ADC top-k against the delta-ledger index — same scoring as
     `ann_query`, codes via merge-on-read."""
-    return pq_adc_topk(read_codes_merged(spark, target_dir, id_col),
-                       queries, read_codebooks(target_dir), k, id_col,
-                       vec_col)
+    return pq_adc_topk(read_codes_merged(spark, target_dir), queries,
+                       read_codebooks(target_dir), k)
 
 
 def streaming_pq_index_maintain_delta(
@@ -80,9 +76,6 @@ def streaming_pq_index_maintain_delta(
     m: int = 8,
     k_codes: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    auto_compact: int | None = None,
 ) -> None:
     """DELTA-LEDGER twin of `streaming_pq_index_maintain` — the
     remaining corpus-sized COW family moved to the table-format write
@@ -95,12 +88,8 @@ def streaming_pq_index_maintain_delta(
     rewritten per batch). Queries merge-on-read (a plain base scan once
     compacted); encoding determinism gives the same replay contract as
     the COW twin, and the same batch-invariance the ADC oracle
-    replays. `auto_compact` (an entry budget) runs `maybe_compact`
-    after each append — the in-stream OPTIMIZE with the deferred-vacuum
-    cadence, safe inside an uncommitted foreachBatch (see
-    `streaming_codebook_maintain_delta`)."""
-    from .compaction import (ledger_entries, maybe_compact, write_base,
-                             write_delta)
+    replays."""
+    from .compaction import ledger_entries, write_base, write_delta
 
     os.makedirs(target_dir, exist_ok=True)
     ledger = os.path.join(target_dir, "codes")
@@ -109,21 +98,17 @@ def streaming_pq_index_maintain_delta(
     complete = (os.path.exists(_codebook_path(target_dir))
                 and bool(ledger_entries(ledger)))
     if not complete:
-        books = train_pq_codebooks(init_items, m, k_codes, iters, id_col,
-                                   vec_col)
+        books = train_pq_codebooks(init_items, m, k_codes, iters)
         with open(_codebook_path(target_dir), "w") as f:
             json.dump(books, f)
-        write_base(pq_encode(init_items, books, id_col, vec_col),
-                   ledger, 0, stats_col=id_col)
+        write_base(pq_encode(init_items, books), ledger, 0,
+                   stats_col="vec_id")
 
     books = read_codebooks(target_dir)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        write_delta(pq_encode(batch, books, id_col, vec_col), ledger,
-                    batch_id + 1, stats_col=id_col, key_cols=[id_col])
-        if auto_compact is not None:
-            maybe_compact(batch.sparkSession, ledger, [id_col],
-                          max_entries=auto_compact)
+        write_delta(pq_encode(batch, books), ledger, batch_id + 1,
+                    stats_col="vec_id", key_cols=["vec_id"])
 
     run_foreach_batch(vec_stream, _apply, checkpoint_dir)
 
@@ -136,8 +121,6 @@ def streaming_pq_index_maintain(
     m: int = 8,
     k_codes: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Run the vector stream to completion (availableNow — static test
     input), maintaining the PQ codes table under `target_dir`. Bootstrap
@@ -147,11 +130,10 @@ def streaming_pq_index_maintain(
     is written before `v0` commits, so a committed `v0` implies it."""
 
     def write_v0(out: str) -> None:
-        books = train_pq_codebooks(init_items, m, k_codes, iters, id_col,
-                                   vec_col)
+        books = train_pq_codebooks(init_items, m, k_codes, iters)
         with open(_codebook_path(target_dir), "w") as f:
             json.dump(books, f)
-        pq_encode(init_items, books, id_col, vec_col) \
+        pq_encode(init_items, books) \
             .write.mode("overwrite").parquet(os.path.join(out, "codes"))
 
     bootstrap(target_dir, write_v0)
@@ -161,7 +143,7 @@ def streaming_pq_index_maintain(
         def step(prev: str, out: str) -> None:
             cur = batch.sparkSession.read.parquet(
                 os.path.join(prev, "codes"))
-            cur.unionByName(pq_encode(batch, books, id_col, vec_col)) \
+            cur.unionByName(pq_encode(batch, books)) \
                 .write.mode("overwrite").parquet(os.path.join(out, "codes"))
 
         versioned_step(target_dir, batch_id, step)

@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.layout import export_shards, shard_manifest_increment
-from .versions import bootstrap, run_foreach_batch, versioned_step
+from .versions import (bootstrap, read_batch_ledger, run_foreach_batch,
+                       versioned_step)
 
 
 def _manifest_dir(target_dir: str, n: int) -> str:
@@ -34,14 +35,13 @@ def _manifest_dir(target_dir: str, n: int) -> str:
 
 
 def bootstrap_manifest_v0(init_docs: DataFrame, target_dir: str,
-                          docs_per_shard: int,
-                          id_col: str = "doc_id") -> None:
+                          docs_per_shard: int) -> None:
     """Rank the initial corpus (batch 0 of the arrival order) and write
     manifest b0 + metadata v0 (the running total)."""
     spark = init_docs.sparkSession
 
     def write_v0(out: str) -> None:
-        m0 = export_shards(init_docs.select(id_col), docs_per_shard, id_col)
+        m0 = export_shards(init_docs.select("doc_id"), docs_per_shard)
         m0.write.mode("overwrite").parquet(_manifest_dir(target_dir, 0))
         n0 = spark.read.parquet(_manifest_dir(target_dir, 0)).count()
         spark.createDataFrame([(n0,)], "n_total long") \
@@ -52,12 +52,12 @@ def bootstrap_manifest_v0(init_docs: DataFrame, target_dir: str,
 
 def streaming_shard_manifest(docs_stream: DataFrame,
                              init_docs: DataFrame, target_dir: str,
-                             checkpoint_dir: str, docs_per_shard: int,
-                             id_col: str = "doc_id") -> None:
+                             checkpoint_dir: str,
+                             docs_per_shard: int) -> None:
     """Run the document stream to completion (availableNow — static test
     input), maintaining per-batch manifests and COW metadata versions
     under `target_dir`."""
-    bootstrap_manifest_v0(init_docs, target_dir, docs_per_shard, id_col)
+    bootstrap_manifest_v0(init_docs, target_dir, docs_per_shard)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -65,7 +65,7 @@ def streaming_shard_manifest(docs_stream: DataFrame,
         def step(prev: str, out: str) -> None:
             n_so_far = spark.read.parquet(prev).collect()[0]["n_total"]
             inc = shard_manifest_increment(
-                int(n_so_far), batch.select(id_col), docs_per_shard, id_col)
+                int(n_so_far), batch.select("doc_id"), docs_per_shard)
             inc.write.mode("overwrite").parquet(
                 _manifest_dir(target_dir, batch_id + 1))
             n_new = spark.read.parquet(
@@ -82,4 +82,6 @@ def streaming_shard_manifest(docs_stream: DataFrame,
 def read_manifest(spark, target_dir: str) -> DataFrame:
     """The whole manifest (all batches): (id, global_rank, shard_id,
     seq_in_shard) — globally unique, contiguous ranks in arrival order."""
-    return spark.read.parquet(os.path.join(target_dir, "manifest", "b*"))
+    return read_batch_ledger(
+        spark, os.path.join(target_dir, "manifest"),
+        "doc_id long, global_rank long, shard_id long, seq_in_shard long")

@@ -42,14 +42,7 @@ def streaming_lm_dedup_admission(
     checkpoint_dir: str,
     quarantine_dir: str,
     cutoff: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int | str = "auto",
-    shingle_k: int = 2,
-    threshold: float = 0.2,
     max_bucket: int | None = 64,
-    drift_dir: str | None = None,
 ) -> None:
     """Run the document stream to completion (availableNow — static test
     input), maintaining the LM-gated deduplicated corpus under
@@ -57,27 +50,23 @@ def streaming_lm_dedup_admission(
     NULL (<2 tokens: no evidence) or < `cutoff` land in
     `quarantine_dir/b{batch_id}` as (id, n_bigrams, avg_logp) rows; the
     rest are admitted through `dedup_increment`."""
-    bootstrap_v0(init_corpus, target_dir, text_col, id_col, num_hashes,
-                 bands, shingle_k)
+    bootstrap_v0(init_corpus, target_dir)
     lm_dir = os.path.join(target_dir, "lm")
     if not os.path.exists(os.path.join(lm_dir, "_SUCCESS")):
-        train_bigram_lm(init_corpus, text_col, id_col) \
+        train_bigram_lm(init_corpus) \
             .write.mode("overwrite").parquet(lm_dir)
 
     def gate(batch: DataFrame, batch_id: int) -> DataFrame:
         lm = batch.sparkSession.read.parquet(lm_dir)
-        scores = lm_quality(batch, lm, text_col, id_col)
-        ok_ids = scores.filter(F.col("avg_logp") >= cutoff) \
-            .select(id_col)
-        scores.join(ok_ids, id_col, "left_anti") \
+        scores = lm_quality(batch, lm)
+        ok_ids = scores.filter(F.col("avg_logp") >= cutoff).select("doc_id")
+        scores.join(ok_ids, "doc_id", "left_anti") \
             .write.mode("overwrite").parquet(
                 os.path.join(quarantine_dir, f"b{batch_id}"))
-        return batch.join(ok_ids, id_col, "left_semi")
+        return batch.join(ok_ids, "doc_id", "left_semi")
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        _admit_batch(batch, batch_id, target_dir, text_col, id_col,
-                     num_hashes, bands, shingle_k, threshold, max_bucket,
-                     drift_dir, gate)
+        _admit_batch(batch, batch_id, target_dir, max_bucket, gate=gate)
 
     run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 

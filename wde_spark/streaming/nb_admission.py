@@ -46,15 +46,7 @@ def streaming_nb_dedup_admission(
     checkpoint_dir: str,
     quarantine_dir: str,
     keep_labels: list[str],
-    label_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int | str = "auto",
-    shingle_k: int = 2,
-    threshold: float = 0.2,
     max_bucket: int | None = 64,
-    drift_dir: str | None = None,
 ) -> None:
     """Run the document stream to completion (availableNow — static test
     input), maintaining the classifier-gated deduplicated corpus under
@@ -66,13 +58,11 @@ def streaming_nb_dedup_admission(
     margin); documents predicted OUTSIDE `keep_labels` additionally land
     in `quarantine_dir/b{batch_id}`; the rest are admitted through
     `dedup_increment`."""
-    bootstrap_v0(init_corpus, target_dir, text_col, id_col, num_hashes,
-                 bands, shingle_k)
+    bootstrap_v0(init_corpus, target_dir)
     m_dir = os.path.join(target_dir, "nb_model")
     p_dir = os.path.join(target_dir, "nb_priors")
     if not os.path.exists(os.path.join(p_dir, "_SUCCESS")):
-        model, priors = train_naive_bayes(train_docs, label_col, text_col,
-                                          id_col)
+        model, priors = train_naive_bayes(train_docs)
         model.write.mode("overwrite").parquet(m_dir)
         priors.write.mode("overwrite").parquet(p_dir)
     ledger_dir = os.path.join(target_dir, "predictions")
@@ -80,20 +70,18 @@ def streaming_nb_dedup_admission(
     def gate(batch: DataFrame, batch_id: int) -> DataFrame:
         spark = batch.sparkSession
         preds = nb_classify(batch, spark.read.parquet(m_dir),
-                            spark.read.parquet(p_dir), text_col, id_col)
+                            spark.read.parquet(p_dir))
         preds.write.mode("overwrite").parquet(
             os.path.join(ledger_dir, f"b{batch_id}"))
         ok_ids = preds.filter(F.col("pred_label").isin(keep_labels)) \
-            .select(id_col)
-        preds.join(ok_ids, id_col, "left_anti") \
+            .select("doc_id")
+        preds.join(ok_ids, "doc_id", "left_anti") \
             .write.mode("overwrite").parquet(
                 os.path.join(quarantine_dir, f"b{batch_id}"))
-        return batch.join(ok_ids, id_col, "left_semi")
+        return batch.join(ok_ids, "doc_id", "left_semi")
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        _admit_batch(batch, batch_id, target_dir, text_col, id_col,
-                     num_hashes, bands, shingle_k, threshold, max_bucket,
-                     drift_dir, gate)
+        _admit_batch(batch, batch_id, target_dir, max_bucket, gate=gate)
 
     run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 

@@ -45,7 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.layout import ffd_pack
-from .versions import bootstrap, run_foreach_batch, versioned_step
+from .versions import (bootstrap, read_batch_ledger, run_foreach_batch,
+                       versioned_step)
 
 
 def _manifest_dir(target_dir: str, n: int) -> str:
@@ -53,19 +54,17 @@ def _manifest_dir(target_dir: str, n: int) -> str:
 
 
 def ffd_pack_increment(offsets: DataFrame, batch: DataFrame, seq_len: int,
-                       weight_col: str = "n_tok", id_col: str = "doc_id",
-                       salt: str = "ffd",
                        n_buckets: int = 8) -> DataFrame:
     """One batch's sealed-bin FFD manifest: bucket-local FFD over the
     batch's docs (`layout.ffd_pack` — the same grouped Arrow fold), bin
     ids shifted past the `bins_so_far` ledger (`offsets`: one row per
     bucket). Buckets with no prior bins may be absent from `offsets`
     (offset 0)."""
-    local = ffd_pack(batch, seq_len, weight_col, id_col, salt, n_buckets)
+    local = ffd_pack(batch, seq_len, n_buckets=n_buckets)
     return (
         local.join(F.broadcast(offsets), "bucket", "left")
         .select(
-            id_col, "bucket", weight_col,
+            "doc_id", "bucket", "n_tok",
             (F.col("bin_id") + F.coalesce("bins_so_far", F.lit(0)))
             .cast("long").alias("bin_id"),
         )
@@ -86,8 +85,6 @@ def bootstrap_pack_meta_v0(spark, target_dir: str,
 
 def streaming_ffd_manifest(docs_stream: DataFrame, target_dir: str,
                            checkpoint_dir: str, seq_len: int,
-                           weight_col: str = "n_tok",
-                           id_col: str = "doc_id", salt: str = "ffd",
                            n_buckets: int = 8) -> None:
     """Run the document stream to completion (availableNow — static test
     input), maintaining per-batch sealed-bin manifests `manifest/b{n}`
@@ -102,8 +99,7 @@ def streaming_ffd_manifest(docs_stream: DataFrame, target_dir: str,
 
         def step(prev: str, out: str) -> None:
             off = sp.read.parquet(prev)
-            inc = ffd_pack_increment(off, batch, seq_len, weight_col,
-                                     id_col, salt, n_buckets) \
+            inc = ffd_pack_increment(off, batch, seq_len, n_buckets) \
                 .withColumn("batch_no", F.lit(batch_id).cast("long"))
             inc.write.mode("overwrite").parquet(
                 _manifest_dir(target_dir, batch_id))
@@ -130,4 +126,6 @@ def read_pack_manifest(spark, target_dir: str) -> DataFrame:
     """The whole sealed-bin manifest (all batches): (id, bucket, weight,
     bin_id, batch_no) — bin_id is absolute within its bucket and never
     rewritten once its batch commits."""
-    return spark.read.parquet(os.path.join(target_dir, "manifest", "b*"))
+    return read_batch_ledger(
+        spark, os.path.join(target_dir, "manifest"),
+        "doc_id long, bucket long, n_tok long, bin_id long, batch_no long")

@@ -50,9 +50,7 @@ def apply_shard_batch(
     batch: DataFrame,
     batch_id: int,
     target_dir: str,
-    id_col: str = "doc_id",
     base_shards: int = BASE_SHARDS_DEFAULT,
-    salt: str = "hrw",
 ) -> None:
     """One maintenance step: migrate v{batch_id} to the grown map and
     append the arriving docs as v{batch_id + 1}."""
@@ -65,8 +63,8 @@ def apply_shard_batch(
             f"the maintainer with a larger batch granularity"
         )
     fresh = batch.select(
-        F.col(id_col),
-        rendezvous_shard(id_col, n_new, salt).alias("shard"),
+        F.col("doc_id"),
+        rendezvous_shard("doc_id", n_new).alias("shard"),
         F.lit(batch_id).cast("int").alias("arrived_batch"),
         F.lit(0).cast("int").alias("n_moves"),
     )
@@ -75,9 +73,9 @@ def apply_shard_batch(
         merged = fresh
         if prev is not None:
             cur = batch.sparkSession.read.parquet(prev)
-            resh = rendezvous_shard(id_col, n_new, salt)
+            resh = rendezvous_shard("doc_id", n_new)
             migrated = cur.select(
-                id_col,
+                "doc_id",
                 resh.alias("shard"),
                 "arrived_batch",
                 (F.col("n_moves")
@@ -93,17 +91,14 @@ def streaming_shard_maintain(
     doc_stream: DataFrame,
     target_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
     base_shards: int = BASE_SHARDS_DEFAULT,
-    salt: str = "hrw",
 ) -> None:
     """Run the doc stream to completion (availableNow — static test
     input), maintaining the routing table under `target_dir` as COW
     versions; the map size when batch b lands is base_shards + b + 1."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_shard_batch(batch, batch_id, target_dir, id_col,
-                          base_shards, salt)
+        apply_shard_batch(batch, batch_id, target_dir, base_shards)
 
     run_foreach_batch(doc_stream, _apply, checkpoint_dir)
 

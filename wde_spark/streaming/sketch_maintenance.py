@@ -50,12 +50,12 @@ def streaming_sketch_maintain(
     value_col: str,
     target_dir: str,
     checkpoint_dir: str,
-    lg_k: int = 12,
 ) -> None:
     """Run the stream to completion (availableNow — static test input),
-    maintaining one HLL sketch row per group under `target_dir`."""
+    maintaining one HLL sketch row (lg_k 12) per group under
+    `target_dir`."""
     _maintain(events_stream, group_cols,
-              F.hll_sketch_agg(F.col(value_col), F.lit(lg_k))
+              F.hll_sketch_agg(F.col(value_col), F.lit(12))
               .alias("distinct_sketch"),
               F.hll_union_agg("distinct_sketch").alias("distinct_sketch"),
               target_dir, checkpoint_dir)
@@ -74,10 +74,10 @@ def streaming_quantile_maintain(
     value_col: str,
     target_dir: str,
     checkpoint_dir: str,
-    k: int = 200,
 ) -> None:
     """KLL twin of `streaming_sketch_maintain`: a continuously-maintained
-    quantile-sketch table (any percentile later, a few KB per group).
+    quantile-sketch table (k 200; any percentile later, a few KB per
+    group).
 
     One honesty caveat the HLL form does not have: KLL merge is exact in
     RANK GUARANTEE but not idempotent — re-merging the same batch inserts
@@ -87,7 +87,7 @@ def streaming_quantile_maintain(
     algebra; `tests/test_streaming_sketches.py` covers the replay path."""
     _maintain(events_stream, group_cols,
               F.kll_sketch_agg_double(F.col(value_col).cast("double"),
-                                      F.lit(k)).alias("quantile_sketch"),
+                                      F.lit(200)).alias("quantile_sketch"),
               F.kll_merge_agg_double("quantile_sketch")
               .alias("quantile_sketch"),
               target_dir, checkpoint_dir)

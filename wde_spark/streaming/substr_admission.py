@@ -27,17 +27,16 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.dedup import substr_increment, substr_state
-from .versions import (bootstrap, read_version, run_foreach_batch,
-                       versioned_step)
+from .versions import (bootstrap, read_batch_ledger, read_version,
+                       run_foreach_batch, versioned_step)
 
 
 def bootstrap_substr_v0(init_corpus: DataFrame, target_dir: str,
-                        k: int = 16, text_col: str = "text",
-                        id_col: str = "doc_id") -> None:
+                        k: int = 16) -> None:
     """One full scan of the initial corpus → v0 window-count state."""
 
     def write_v0(out: str) -> None:
-        substr_state(init_corpus, k, text_col, id_col) \
+        substr_state(init_corpus, k) \
             .write.mode("overwrite").parquet(os.path.join(out, "state"))
 
     bootstrap(target_dir, write_v0)
@@ -45,25 +44,22 @@ def bootstrap_substr_v0(init_corpus: DataFrame, target_dir: str,
 
 def streaming_substr_maintain(docs_stream: DataFrame,
                               init_corpus: DataFrame, target_dir: str,
-                              checkpoint_dir: str, k: int = 16,
-                              min_count: int = 2, text_col: str = "text",
-                              id_col: str = "doc_id") -> None:
+                              checkpoint_dir: str, k: int = 16) -> None:
     """Run the document stream to completion (availableNow — static test
     input), maintaining state versions and the per-batch spans ledger
     under `target_dir`."""
-    bootstrap_substr_v0(init_corpus, target_dir, k, text_col, id_col)
+    bootstrap_substr_v0(init_corpus, target_dir, k)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         def step(prev: str, out: str) -> None:
             state = batch.sparkSession.read.parquet(
                 os.path.join(prev, "state"))
-            spans, new_state = substr_increment(
-                state, batch, k, min_count, text_col, id_col)
+            spans, new_state = substr_increment(state, batch, k)
             new_state.write.mode("overwrite").parquet(
                 os.path.join(out, "state"))
             spans.select(
                 F.lit(batch_id).cast("long").alias("batch_id"),
-                id_col, "span_start", "span_end", "n_windows",
+                "doc_id", "span_start", "span_end", "n_windows",
             ).write.mode("overwrite").parquet(
                 os.path.join(target_dir, "spans", f"b{batch_id}"))
 
@@ -74,7 +70,10 @@ def streaming_substr_maintain(docs_stream: DataFrame,
 
 def read_spans(spark, target_dir: str) -> DataFrame:
     """The whole spans ledger (all batches)."""
-    return spark.read.parquet(os.path.join(target_dir, "spans", "b*"))
+    return read_batch_ledger(
+        spark, os.path.join(target_dir, "spans"),
+        "batch_id long, doc_id long, span_start long, span_end long, "
+        "n_windows long")
 
 
 def read_state(spark, target_dir: str, version: int) -> DataFrame:

@@ -17,11 +17,17 @@ directory only ever appears complete:
   * a crash before the rename leaves only a staging directory, which
     `version_history` and Spark's readers both ignore (leading `_`), and
     the restart recomputes the batch from the same `v{batch_id}`;
-  * the side ledgers a step writes (`manifest/b*`, `spans/b*`,
-    quarantine, drift) are written before the rename, so "`v{n}`
-    exists" implies they are complete. An uncommitted batch's side
-    ledger entry may be visible until the restart rewrites it with the
-    same bytes.
+  * the side ledgers a step writes (`manifest/b{n}`, `spans/b{n}`,
+    quarantine, predictions, drift) are written before the rename, so
+    "`v{n}` exists" implies they are complete. An uncommitted batch's
+    side ledger entry may be visible until the restart rewrites it with
+    the same bytes.
+
+Every side ledger is read by `read_batch_ledger`, which lists the `b{n}`
+directories and hands Spark that explicit path list. A `b*` glob would
+do the same work, but Spark probes a single glob path for a streaming
+sink's `_spark_metadata` directory and logs a `FileNotFoundException`
+stack trace on every read.
 
 This is the commit rule of table formats such as Delta Lake: a version
 is published only once it is complete. The ledger gives what a table
@@ -83,18 +89,24 @@ def _hadoop_fs(spark, path: str):
     return fs, jpath_cls
 
 
+def _numbered(path: str, prefix: str, spark=None) -> list[int]:
+    """Sorted `n` of the `{prefix}{n}` entries directly under `path`
+    (FileNotFoundError when `path` is missing)."""
+    if _is_uri(path):
+        fs, jpath = _hadoop_fs(spark, path)
+        root = jpath(path)
+        if not fs.exists(root):
+            raise FileNotFoundError(path)
+        names = [st.getPath().getName() for st in fs.listStatus(root)]
+    else:
+        names = os.listdir(path)
+    return sorted(int(n[1:]) for n in names
+                  if n.startswith(prefix) and n[1:].isdigit())
+
+
 def version_history(target_dir: str, spark=None) -> list[int]:
     """Sorted version numbers present under `target_dir`."""
-    if not _is_uri(target_dir):
-        return sorted(int(p[1:]) for p in os.listdir(target_dir)
-                      if p.startswith("v") and p[1:].isdigit())
-    fs, jpath = _hadoop_fs(spark, target_dir)
-    root = jpath(target_dir)
-    if not fs.exists(root):
-        raise FileNotFoundError(target_dir)
-    names = [st.getPath().getName() for st in fs.listStatus(root)]
-    return sorted(int(n[1:]) for n in names
-                  if n.startswith("v") and n[1:].isdigit())
+    return _numbered(target_dir, "v", spark)
 
 
 def latest_version_dir(target_dir: str, spark=None) -> str:
@@ -208,11 +220,14 @@ def run_foreach_batch(stream, apply, checkpoint_dir: str) -> None:
 
 
 def read_batch_ledger(spark, ledger_dir: str, empty_schema: str):
-    """Every `b{n}` directory of an append-only per-batch ledger. A ledger
-    with no batch yet is a valid state and reads as an empty frame of
-    `empty_schema`. The glob probe is local-only, so a scheme'd ledger
-    (hdfs://, s3a://) goes straight to the Spark read."""
-    if not _is_uri(ledger_dir) and \
-            not glob.glob(os.path.join(ledger_dir, "b*")):
+    """Every `b{n}` directory of an append-only per-batch ledger, listed
+    (through the Hadoop FileSystem API for a scheme'd path) and read as an
+    explicit path list. A ledger with no batch yet, or no directory yet,
+    is a valid state and reads as an empty frame of `empty_schema`."""
+    try:
+        batches = _numbered(ledger_dir, "b", spark)
+    except FileNotFoundError:
+        batches = []
+    if not batches:
         return spark.createDataFrame([], empty_schema)
-    return spark.read.parquet(_join(ledger_dir, "b*"))
+    return spark.read.parquet(*[_join(ledger_dir, f"b{n}") for n in batches])

@@ -30,6 +30,8 @@ EVENTS_SCHEMA = T.StructType([
     T.StructField("value", T.DoubleType()),
     T.StructField("props", T.StringType()),
 ])
+_WATERMARK = "2 hours"  # event-time lateness every streaming form tolerates
+_SHINGLE_K = 2  # streaming_doc_neardup's shingle width, stream and index
 
 
 def _sum_value():
@@ -46,19 +48,20 @@ def _agg(grouped):
     )
 
 
-def tumbling(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Tumbling event-time window per event_type."""
-    g = events.groupBy(F.window("ts", width).alias("win"), "event_type")
+def tumbling(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event-time window per event_type."""
+    g = events.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
     return _agg(g).select(
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type", "n_events", "sum_value", "n_users",
     )
 
 
-def sliding(events: DataFrame, width: str = "1 hour",
-            slide: str = "30 minutes") -> DataFrame:
-    """Sliding event-time window (each event lands in width/slide windows)."""
-    g = events.groupBy(F.window("ts", width, slide).alias("win"), "event_type")
+def sliding(events: DataFrame) -> DataFrame:
+    """Sliding 1-hour event-time window every 30 minutes (each event lands
+    in two windows)."""
+    g = events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"),
+                       "event_type")
     return _agg(g).select(
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type", "n_events", "sum_value", "n_users",
@@ -66,18 +69,17 @@ def sliding(events: DataFrame, width: str = "1 hour",
 
 
 def session_agg(events: DataFrame, gap_seconds: int = 1800,
-                bucketed: bool = False,
-                bucket_seconds: int = 86400) -> DataFrame:
+                bucketed: bool = False) -> DataFrame:
     """Batch sessionization: per-user sessions split on inactivity gaps,
     aggregated. Same semantics as streaming `session_window` for a static
-    input. `bucketed=True` uses the skew-proof (user, time-bucket) form
+    input. `bucketed=True` uses the skew-proof (user, 1-day bucket) form
     (`relational.sessionize_bucketed`) — identical output, bounded window
     partitions for hot keys."""
     if bucketed:
         from ..operators.relational import sessionize_bucketed
 
         s = sessionize_bucketed(events, "user_id", "ts", gap_seconds,
-                                bucket_seconds)
+                                86400)
     else:
         s = sessionize(events, "user_id", "ts", gap_seconds)
     return s.groupBy("user_id", "session_id").agg(
@@ -125,14 +127,27 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.timestamp_micros(micros))
 
 
-def streaming_tumbling(spark: SparkSession, sf_dir: str,
-                       width: str = "1 hour",
-                       watermark: str = "2 hours") -> DataFrame:
-    """readStream → watermark → tumbling agg → memory sink; returns the
-    completed result as a DataFrame (complete mode, static input)."""
-    ev = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
+def _run_to_memory(out: DataFrame, mode: str, name: str) -> DataFrame:
+    """Run the streaming query `out` over everything available into the
+    memory table `name` (output mode `mode`) and return that table."""
+    q = (
+        out.writeStream.outputMode(mode)
+        .format("memory").queryName(name).start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return out.sparkSession.sql(f"SELECT * FROM {name}")
+
+
+def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """readStream → watermark → 1-hour tumbling agg → memory sink; returns
+    the completed result as a DataFrame (complete mode, static input)."""
+    ev = read_events_stream(spark, sf_dir).withWatermark("ts", _WATERMARK)
     # no countDistinct: distinct aggregation is unsupported on streams
-    agg = ev.groupBy(F.window("ts", width).alias("win"), "event_type").agg(
+    agg = ev.groupBy(F.window("ts", "1 hour").alias("win"),
+                     "event_type").agg(
         F.count("*").alias("n_events"),
         _sum_value().alias("sum_value"),
     )
@@ -140,21 +155,10 @@ def streaming_tumbling(spark: SparkSession, sf_dir: str,
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type", "n_events", "sum_value",
     )
-    name = "wde_stream_tumbling"
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
+    return _run_to_memory(out, "complete", "wde_stream_tumbling")
 
 
-def streaming_dedup(spark: SparkSession, sf_dir: str,
-                    keys: list[str] | None = None,
-                    watermark: str = "2 hours") -> DataFrame:
+def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact deduplication — the training-pipeline dedup tier 1
     in streaming form: `dropDuplicatesWithinWatermark` keeps the first
     arrival per key and bounds the dedup state by the watermark horizon
@@ -162,30 +166,18 @@ def streaming_dedup(spark: SparkSession, sf_dir: str,
     streams don't accumulate unbounded state — the property that matters
     on a week-long 100 TB ingest).
 
-    On a static input this equals batch `dropDuplicates(keys)` up to which
-    duplicate wins; the test compares key sets and counts."""
-    ev = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
-    out = ev.dropDuplicatesWithinWatermark(keys or ["user_id", "event_type"])
-    name = "wde_stream_dedup"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
+    On a static input this equals batch `dropDuplicates` on (user_id,
+    event_type) up to which duplicate wins; the test compares key sets and
+    counts."""
+    ev = read_events_stream(spark, sf_dir).withWatermark("ts", _WATERMARK)
+    out = ev.dropDuplicatesWithinWatermark(["user_id", "event_type"])
+    return _run_to_memory(out, "append", "wde_stream_dedup")
 
 
-def streaming_interval_join(spark: SparkSession, sf_dir: str,
-                            left_type: str = "error",
-                            right_type: str = "click",
-                            window_seconds: int = 300,
-                            watermark: str = "2 hours") -> DataFrame:
+def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join with an interval condition — the streaming
-    form of operators/relational.py::range_join: for each `left_type` event,
-    the `right_type` events of the same user in [l.ts - W, l.ts).
+    form of operators/relational.py::range_join: for each `error` event,
+    the `click` events of the same user in [l.ts - 300 s, l.ts).
 
     Both sides carry watermarks and the join condition bounds event-time
     skew between them, which is what lets Spark expire buffered rows from
@@ -194,45 +186,35 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str,
     emit once both watermarks pass them."""
     left = (
         read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == left_type)
+        .filter(F.col("event_type") == "error")
         .select(
             F.col("event_id").alias("l_event_id"),
             F.col("user_id").alias("l_user"),
             F.col("ts").alias("l_ts"),
         )
-        .withWatermark("l_ts", watermark)
+        .withWatermark("l_ts", _WATERMARK)
     )
     right = (
         read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == right_type)
+        .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("r_event_id"),
             F.col("user_id").alias("r_user"),
             F.col("ts").alias("r_ts"),
         )
-        .withWatermark("r_ts", watermark)
+        .withWatermark("r_ts", _WATERMARK)
     )
-    win = F.expr(f"INTERVAL {window_seconds} SECONDS")
+    win = F.expr("INTERVAL 300 SECONDS")
     joined = left.join(
         right,
         (F.col("l_user") == F.col("r_user"))
         & (F.col("r_ts") >= F.col("l_ts") - win)
         & (F.col("r_ts") < F.col("l_ts")),
     ).select("l_event_id", "r_event_id", "l_user")
-    name = "wde_stream_interval_join"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
+    return _run_to_memory(joined, "append", "wde_stream_interval_join")
 
 
-def streaming_static_enrich(spark: SparkSession, sf_dir: str,
-                            watermark: str = "2 hours") -> DataFrame:
+def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast enrichment: the event stream joined to a
     static dimension (per-type totals from the batch table). The static
     side broadcasts; the stream never shuffles — the standard shape for
@@ -243,30 +225,20 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str,
         load_table(spark, sf_dir, "events")
         .groupBy("event_type").agg(F.count("*").alias("type_total"))
     )
-    ev = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
+    ev = read_events_stream(spark, sf_dir).withWatermark("ts", _WATERMARK)
     out = ev.join(F.broadcast(dim), "event_type").select(
         "event_id", "event_type", "type_total"
     )
-    name = "wde_stream_static_enrich"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
+    return _run_to_memory(out, "append", "wde_stream_static_enrich")
 
 
-def streaming_session(spark: SparkSession, sf_dir: str,
-                      gap: str = "30 minutes",
-                      watermark: str = "2 hours") -> DataFrame:
-    """Native streaming session_window aggregation (complete per-user
-    sessions on a static input)."""
-    ev = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
+def streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Native streaming session_window aggregation with a 30-minute gap
+    (complete per-user sessions on a static input)."""
+    ev = read_events_stream(spark, sf_dir).withWatermark("ts", _WATERMARK)
     agg = (
-        ev.groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        ev.groupBy(F.session_window("ts", "30 minutes").alias("win"),
+                   "user_id")
         .agg(F.count("*").alias("n_events"),
              _sum_value().alias("sum_value"))
     )
@@ -276,21 +248,11 @@ def streaming_session(spark: SparkSession, sf_dir: str,
         F.date_format("win.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
         "n_events", "sum_value",
     )
-    name = "wde_stream_session"
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
+    return _run_to_memory(out, "complete", "wde_stream_session")
 
 
 def streaming_doc_neardup(spark: SparkSession, docs_dir: str,
-                          index_docs: DataFrame,
-                          shingle_k: int = 2) -> DataFrame:
+                          index_docs: DataFrame) -> DataFrame:
     """The document dedup tier in STREAMING form — new documents arrive as
     a stream, and each is (a) exact-deduplicated against the stream itself
     and (b) flagged against a STATIC near-dup index of the existing corpus:
@@ -317,7 +279,7 @@ def streaming_doc_neardup(spark: SparkSession, docs_dir: str,
 
     # static index: (band_idx, band_hash, doc_id), built with the batch code
     idx_sig = minhash_signatures(index_docs, num_hashes=16,
-                                 shingle_k=shingle_k)
+                                 shingle_k=_SHINGLE_K)
     rpb = 4
     band_cols = [
         F.md5(F.concat_ws("|", *[F.col(f"mh_{b * rpb + r}")
@@ -347,10 +309,10 @@ def streaming_doc_neardup(spark: SparkSession, docs_dir: str,
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     n = F.size(toks)
     sh = F.when(
-        n >= shingle_k,
+        n >= _SHINGLE_K,
         F.array_distinct(F.transform(
-            F.sequence(F.lit(0), n - shingle_k),
-            lambda i: F.array_join(F.slice(toks, i + 1, shingle_k), " "),
+            F.sequence(F.lit(0), n - _SHINGLE_K),
+            lambda i: F.array_join(F.slice(toks, i + 1, _SHINGLE_K), " "),
         )),
     ).otherwise(F.array(F.array_join(toks, " ")))
     # Same affine family as batch minhash_signatures: digest each shingle
@@ -389,13 +351,4 @@ def streaming_doc_neardup(spark: SparkSession, docs_dir: str,
             F.when(F.col("index_doc_id").isNotNull(), 1).otherwise(0)
         ).alias("matched_index_docs"))
     )
-    name = "wde_stream_neardup"
-    q = (
-        joined.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
+    return _run_to_memory(joined, "complete", "wde_stream_neardup")
