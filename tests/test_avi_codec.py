@@ -141,7 +141,7 @@ def test_rle8_roundtrip_families(kind):
     else:
         g = np.repeat(rng.randint(0, 256, (2, 6, 1), dtype=np.uint8),
                       9, axis=2)
-    fps, w, h, fr = decode_avi(encode_avi_rle8(g, fps=10))
+    fps, w, h, fr = decode_avi(encode_avi_rle8(g))
     assert (fps, w, h) == (10.0, 9, 6)
     for c in range(3):
         assert (fr[:, :, :, c] == g).all()

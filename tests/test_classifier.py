@@ -26,7 +26,7 @@ TRAIN = [
 @pytest.fixture(scope="module")
 def nb(spark):
     model, priors = C.train_naive_bayes(
-        spark.createDataFrame(TRAIN, SCHEMA), k=0.5)
+        spark.createDataFrame(TRAIN, SCHEMA))
     return model.cache(), priors.cache()
 
 
@@ -121,7 +121,7 @@ def test_overlap_exact_values(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
     got = {(r.grp_a, r.grp_b): r
-           for r in D.corpus_overlap(docs, "source", 3).collect()}
+           for r in D.corpus_overlap(docs).collect()}
     ab = got[("A", "B")]
     assert (ab.n_a, ab.n_b, ab.n_inter) == (3, 4, 2)
     assert math.isclose(ab.jaccard, round(2 / 5, 6))
@@ -135,7 +135,7 @@ def test_overlap_exact_values(spark):
 def test_overlap_short_docs_use_whole_text_shingle(spark):
     rows = [(1, "A", "hi there"), (2, "B", "hi there")]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    r = D.corpus_overlap(docs, "source", 3).collect()[0]
+    r = D.corpus_overlap(docs).collect()[0]
     assert (r.n_a, r.n_b, r.n_inter, r.jaccard) == (1, 1, 1, 1.0)
 
 
@@ -173,7 +173,7 @@ def test_bloom_no_false_negatives_and_prunes(spark):
 
     big = spark.range(0, 5000).select(F.col("id").alias("k"))
     small = spark.range(0, 5000, 50).select(F.col("id").alias("k"))  # 100 keys
-    bits = B.bloom_build(small, "k", m=4096, h=3)
+    bits = B.bloom_build(small, "k", m=4096)
     cand = B.bloom_prefilter(big, bits, "k", m=4096)
     n_cand = cand.count()
     truth = {r.k for r in big.join(small, "k", "left_semi").collect()}
@@ -181,7 +181,7 @@ def test_bloom_no_false_negatives_and_prunes(spark):
     assert truth <= got_cand            # no false negatives, ever
     assert n_cand < 1000                # pruned >80% of the big side
     exact = {r.k for r in
-             B.bloom_semi_join(big, small, "k", m=4096, h=3).collect()}
+             B.bloom_semi_join(big, small, "k", m=4096).collect()}
     assert exact == truth               # end result == plain semi-join
 
 

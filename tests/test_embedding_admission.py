@@ -94,11 +94,10 @@ def test_pq_query_luts_raises_on_oversized_query_side(spark):
     books = SIM.train_pq_codebooks(items, m=4, k_codes=8)
     big = spark.createDataFrame(_vecs(range(25)), SCHEMA)
     with pytest.raises(ValueError, match="max_queries"):
-        SIM._pq_query_luts(spark, big, books, "vec_id", "embedding",
+        SIM._pq_query_luts(spark, big, books,
                            max_queries=10)
     # within the cap: works exactly as before
-    qrows, q_lut = SIM._pq_query_luts(spark, big, books, "vec_id",
-                                      "embedding", max_queries=25)
+    qrows, q_lut = SIM._pq_query_luts(spark, big, books, max_queries=25)
     assert len(qrows) == 25 and q_lut.count() == 25
 
 

@@ -253,7 +253,7 @@ def test_version_ledger_time_travel_and_compaction(spark, tmp_path):
     assert v0_ids == _kept_ids(corpus0)
     final_before = _kept_ids(read_corpus(spark, target))
 
-    dropped = compact_versions(target, keep_last=2)
+    dropped = compact_versions(target)
     assert dropped == [0]
     assert version_history(target) == [1, 2]
     assert _kept_ids(read_corpus(spark, target)) == final_before
@@ -289,7 +289,7 @@ def test_version_ledger_on_non_local_scheme(spark, tmp_path):
     v0 = {r.doc_id for r in read_version(spark, target, 0, "corpus").collect()}
     assert v0 == {r[0] for r in CORPUS[:2]}
 
-    dropped = compact_versions(target, keep_last=2, spark=spark)
+    dropped = compact_versions(target, spark=spark)
     assert dropped == [0]
     assert version_history(target, spark) == [1, 2]
     with _pytest.raises(FileNotFoundError):

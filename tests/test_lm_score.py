@@ -21,7 +21,7 @@ SCHEMA = "doc_id long, text string"
 @pytest.fixture(scope="module")
 def lm(spark):
     return LM.train_bigram_lm(
-        spark.createDataFrame(CORPUS, SCHEMA), k=0.5).cache()
+        spark.createDataFrame(CORPUS, SCHEMA)).cache()
 
 
 def test_trained_logp_values_exact(spark, lm):
@@ -65,7 +65,7 @@ def test_quality_bands_head_tail(spark, lm):
         [(10, "a b a b"), (11, "a q"), (12, "m n"), (13, "x")], SCHEMA)
     scores = LM.lm_quality(docs, lm)
     bands = {r.doc_id: r.band
-             for r in LM.lm_quality_bands(scores, n_bands=3).collect()}
+             for r in LM.lm_quality_bands(scores).collect()}
     # most fluent = band 1; least = band 3 (doc 11's context-'a' floor
     # ln(0.5/5.5) ≈ -2.40 sits BELOW doc 12's uniform unseen-context
     # floor -ln(5) ≈ -1.61 — a context with much observed mass leaves

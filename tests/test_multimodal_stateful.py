@@ -80,7 +80,7 @@ def test_stateful_sessionize_matches_batch(spark, tmp_path):
         .select("ts", "user_id", F.col("value").cast("double").alias("value"))
     )
     q = (
-        sessionize_stateful(stream, gap_seconds=1800, watermark="0 seconds")
+        sessionize_stateful(stream, watermark="0 seconds")
         .writeStream.outputMode("append")
         .format("memory").queryName("stateful_sessions").start()
     )
@@ -128,7 +128,7 @@ def test_audio_chunks_edges(spark):
          (0, "c" * 9999)],     # image -> filtered out
         "doc_id long, text string",
     )
-    out = MM.audio_chunks(MM.attach_media(docs), window=2048, hop=1024)
+    out = MM.audio_chunks(MM.attach_media(docs))
     rows = {(r.media_id, r.chunk_idx): (r.start_byte, r.chunk_size)
             for r in out.collect()}
     assert rows == {
@@ -188,7 +188,7 @@ def test_frame_run_spans_matches_bruteforce(spark):
     frames = spark.createDataFrame(
         rows, "media_id long, frame_idx int, frame_bytes binary, "
               "frame_size int")
-    got = {tuple(r) for r in frame_run_spans(frames, k=3, min_count=2)
+    got = {tuple(r) for r in frame_run_spans(frames)
            .collect()}
     assert got == _brute_frame_runs(seqs, 3, 2)
     # spot-check the interesting shapes: media 3's loop is one maximal
@@ -206,7 +206,7 @@ def test_frame_run_spans_no_false_positives(spark):
     frames = spark.createDataFrame(
         rows, "media_id long, frame_idx int, frame_bytes binary, "
               "frame_size int")
-    assert frame_run_spans(frames, k=3, min_count=2).count() == 0
+    assert frame_run_spans(frames).count() == 0
 
 
 def test_documents_corpus_is_ascii():

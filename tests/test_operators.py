@@ -162,7 +162,7 @@ def test_sorted_neighborhood_finds_adjacent_neardups(spark):
          (4, "omega beta gamma delta epsilon")],  # near text, other block
         "doc_id long, text string",
     )
-    rows = D.sorted_neighborhood_pairs(docs, window=2, threshold=0.3).collect()
+    rows = D.sorted_neighborhood_pairs(docs, threshold=0.3).collect()
     pairs = {tuple(sorted((r.id_a, r.id_b))) for r in rows}
     assert (1, 2) in pairs
     assert all(4 not in p for p in pairs)
@@ -253,15 +253,15 @@ def test_lsh_multi_table_recall_dominates_single(spark):
     exact = {(r.query_id, r.item_id)
              for r in SIM.cosine_topk(emb, queries, k=5).collect()}
     single = {(r.query_id, r.item_id)
-              for r in SIM.lsh_ann(emb, queries, k=5, n_planes=6).collect()}
+              for r in SIM.lsh_ann(emb, queries).collect()}
     multi = {(r.query_id, r.item_id)
-             for r in SIM.lsh_ann_multi(emb, queries, k=5, n_planes=6,
+             for r in SIM.lsh_ann_multi(emb, queries,
                                         n_tables=48).collect()}
     assert len(multi & exact) >= len(single & exact)
     assert len(multi & exact) / len(exact) >= 0.6
 
     one = {(r.query_id, r.item_id)
-           for r in SIM.lsh_ann_multi(emb, queries, k=5, n_planes=6,
+           for r in SIM.lsh_ann_multi(emb, queries,
                                       n_tables=1).collect()}
     assert one == single
 
@@ -276,7 +276,7 @@ def test_topk_recall_gate_boolean(spark):
     exact = SIM.cosine_topk(emb, queries, k=5)
     ok = SIM.topk_recall_gate(exact, exact, 8, 5, 1.0).collect()[0]
     assert ok.recall_ok and ok.n_queries == 8 and ok.k == 5
-    approx = SIM.lsh_ann_multi(emb, queries, k=5, n_planes=6, n_tables=2)
+    approx = SIM.lsh_ann_multi(emb, queries, n_tables=2)
     bad = SIM.topk_recall_gate(approx, exact, 8, 5, 1.01).collect()[0]
     assert not bad.recall_ok
 
@@ -327,8 +327,8 @@ def test_default_paths_use_s_curve_banding(spark):
     from wde_spark.core.catalog import load_table
     from wde_spark.operators.incremental import _resolve_bands
 
-    assert _resolve_bands("auto", 16, 0.7) == 4
-    assert _resolve_bands(8, 16, 0.7) == 8  # explicit ints pass through
+    assert _resolve_bands("auto", 16) == 4
+    assert _resolve_bands(8, 16) == 8  # explicit ints pass through
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents",
                       spread=True)
@@ -348,13 +348,12 @@ def test_dedup_recall_audit(spark):
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents",
                       spread=True)
-    good = D.neardup_lsh_verified(docs, shingle_k=2, threshold=0.2)
+    good = D.neardup_lsh_verified(docs)
     row = D.dedup_recall_audit(docs, good, sample=150).collect()[0]
     assert row.true_pairs > 0, "sample must contain true near-dup pairs"
     assert row.recall is not None and row.recall >= 0.5
 
-    crippled = D.neardup_lsh_verified(docs, shingle_k=2, threshold=0.2,
-                                      num_hashes=16, bands=1)
+    crippled = D.neardup_lsh_verified(docs, bands=1)
     row_bad = D.dedup_recall_audit(docs, crippled, sample=150).collect()[0]
     assert row_bad.recall <= row.recall
 
@@ -537,7 +536,7 @@ def test_ann_null_and_missized_vectors_degrade_not_crash(spark):
     (NULL bucket/cell → dropped by the equi-join), never kill the job."""
     rows = [(0, [1.0] * 64), (1, None), (2, [1.0, 2.0]), (3, [0.5] * 64)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = SIM.lsh_ann(df, df.filter(F.col("vec_id") == 0), k=5).collect()
+    got = SIM.lsh_ann(df, df.filter(F.col("vec_id") == 0)).collect()
     # item 3 is collinear with the query: it MUST be found (an empty result
     # would mean the bad rows poisoned the whole path, not just themselves)
     assert {r.item_id for r in got} == {3}
@@ -595,9 +594,9 @@ def test_connected_components_auto_early_escalation(spark, monkeypatch):
     seen = {}
     real = G._connected_components_label
 
-    def spy(edges, id_a, id_b, max_iter):
+    def spy(edges, max_iter):
         seen["budget"] = max_iter
-        return real(edges, id_a, id_b, max_iter)
+        return real(edges, max_iter)
 
     monkeypatch.setattr(G, "_connected_components_label", spy)
     out = {(r.node, r.component)
@@ -633,9 +632,9 @@ def test_connected_components_escalation_contracts_through_labels(spark,
     seen = {}
     real_star = G.connected_components_star
 
-    def spy(e, id_a="id_a", id_b="id_b", max_iter=64):
+    def spy(e):
         seen["star_edges"] = e.count()
-        return real_star(e, id_a, id_b, max_iter)
+        return real_star(e)
 
     monkeypatch.setattr(G, "connected_components_star", spy)
     out = {(r.node, r.component)

@@ -36,7 +36,7 @@ def test_pca_scores_match_numpy_replay(spark):
         v = w / math.sqrt(float(w @ w))
     want = dict(zip(ids.tolist(), (C @ v).tolist()))
 
-    mu_s, v_s = P.power_iteration_pc1(emb, dim=64, iters=3)
+    mu_s, v_s = P.power_iteration_pc1(emb)
     got = {r.vec_id: r.pc1_score
            for r in P.pca_project(emb, mu_s, v_s).collect()}
     assert set(got) == set(want)
@@ -48,7 +48,7 @@ def test_pca_empty_corpus_returns_init(spark):
     from wde_spark.operators import pca as P
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    mu, v = P.power_iteration_pc1(empty, dim=64, iters=3)
+    mu, v = P.power_iteration_pc1(empty)
     assert mu == [0.0] * 64
     assert abs(sum(c * c for c in v) - 1.0) < 1e-12
     assert P.pca_project(empty, mu, v).count() == 0
@@ -70,7 +70,7 @@ def test_doremi_weights_invariants(spark):
         [(1, "a"), (2, "a"), (3, "b"), (4, "b"), (5, "c")],
         "doc_id long, source string")
     out = {r.source: r for r in
-           doremi_weights(ratios, docs, eta=1.0).collect()}
+           doremi_weights(ratios, docs).collect()}
     assert set(out) == {"a", "b", "c"}
     assert abs(sum(r.weight for r in out.values()) - 1.0) < 2e-6
     # a and b have equal token mass (20 bigrams each) but a has excess
@@ -121,8 +121,7 @@ def test_pca2_matches_numpy_deflated_replay(spark):
         want[f"pc{j}_score"] = dict(zip(ids, t.tolist()))
         C = C - np.outer(t, v)
 
-    mu_s, comps = P.power_iteration_components(emb, n_components=2,
-                                               dim=64, iters=3)
+    mu_s, comps = P.power_iteration_components(emb)
     got = P.pca_project_components(emb, mu_s, comps).collect()
     for r in got:
         for j in (1, 2):
@@ -151,7 +150,7 @@ def test_moment_merge_equals_single_pass(spark):
     np.testing.assert_allclose(np.array(m).reshape(64, 64), X.T @ X,
                                rtol=1e-9, atol=1e-9)
 
-    mu, v = P.pc1_from_moments(n, s, m, iters=3)
+    mu, v = P.pc1_from_moments(n, s, m)
     C = (X.T @ X) / n - np.outer(X.mean(axis=0), X.mean(axis=0))
     vr = np.array(hyperplanes(64, 1, "pcacov")[0])
     vr = vr / math.sqrt(float(vr @ vr))

@@ -28,7 +28,7 @@ def test_substr_leakage_matrix_invariants(spark):
     rows += [(1000 + i, "s3", t) for (i, g, t) in rows if g == "s0"]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
 
-    out = substr_leakage_matrix(docs, group_col="source", k=8).collect()
+    out = substr_leakage_matrix(docs, k=8).collect()
     assert len(out) == 4 * 3 // 2
     for r in out:
         assert 0 <= r.n_inter <= min(r.n_a, r.n_b)

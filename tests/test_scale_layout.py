@@ -80,7 +80,7 @@ def test_zorder_clustering_enables_file_skipping(spark, tmp_path):
     )
     nat, zord = str(tmp_path / "nat"), str(tmp_path / "zord")
     o.repartitionByRange(16, "o_orderkey").write.mode("overwrite").parquet(nat)
-    write_zordered(o, zord, "o_custkey", "o_day", n_files=16)
+    write_zordered(o, zord, "o_custkey", "o_day")
 
     # a two-column range predicate: one customer band, one date band
     ck_lo, ck_hi, day_lo, day_hi = 100, 200, 1000, 1100
@@ -302,8 +302,7 @@ def test_curriculum_order_interleaves_stages(spark):
         [(i, "x" * (i % 37)) for i in range(90)],
         "doc_id long, text string")
     out = curriculum_order(
-        docs, F.coalesce(F.octet_length("text"), F.lit(-1)),
-        n_stages=3).collect()
+        docs, F.coalesce(F.octet_length("text"), F.lit(-1))).collect()
     assert len(out) == 90
     by_stage = {}
     pos = set()

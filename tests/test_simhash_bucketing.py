@@ -16,7 +16,7 @@ def test_simhash_pairs_complete_vs_bruteforce(spark):
 
     docs = load_table(spark, SF_SMOKE, "documents").limit(120).cache()
     got = {(r.id_a, r.id_b, r.hamming)
-           for r in simhash_pairs(docs, max_hamming=3).collect()}
+           for r in simhash_pairs(docs).collect()}
 
     sigs = [(r.doc_id, r.simhash) for r in simhash(docs).collect()]
     brute = set()

@@ -40,8 +40,8 @@ def test_jaccard_verify_with_and_without_candidates_agree(spark):
     every = spark.createDataFrame(
         [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long")
     for t in (0.0, 0.2):
-        free = sorted(D._jaccard_verify(sh, "doc_id", t).collect())
-        cand = sorted(D._jaccard_verify(sh, "doc_id", t, every).collect())
+        free = sorted(D._jaccard_verify(sh, t).collect())
+        cand = sorted(D._jaccard_verify(sh, t, every).collect())
         assert free == cand
     got = {(r.id_a, r.id_b): r.jaccard for r in free}
     # shingles {ab, bc, cd, de} vs {ab, bc, cd, df}: 3 shared of 5

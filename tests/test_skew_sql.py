@@ -29,7 +29,7 @@ def test_salted_join_equals_plain_join(spark):
              F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("q"))
     )
     salted = (
-        salted_join(skewed, orders, "l_orderkey", n_salts=8)
+        salted_join(skewed, orders, "l_orderkey")
         .groupBy("l_orderkey")
         .agg(F.count("*").alias("n"),
              F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("q"))

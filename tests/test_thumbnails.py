@@ -128,7 +128,7 @@ def test_audio_energy_windows_reference(spark):
         [(9, bytearray(encode_wav(s, 16000)))],
         "media_id long, payload binary")
     got = {r["win_idx"]: (r["n_frames"], r["abs_sum"])
-           for r in MM.audio_energy_windows(media, window=256).collect()}
+           for r in MM.audio_energy_windows(media).collect()}
     a = np.abs(s.astype(np.int64))
     expect = {wi: (len(a[wi * 256:(wi + 1) * 256]),
                    int(a[wi * 256:(wi + 1) * 256].sum()))

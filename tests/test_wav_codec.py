@@ -135,7 +135,7 @@ def test_energy_windows_center_8bit_and_sum_stereo(spark):
          (3, bytearray(stereo))],
         "media_id long, payload binary")
     rows = {(r["media_id"], r["win_idx"]): (r["n_frames"], r["abs_sum"])
-            for r in MM.audio_energy_windows(media, window=256).collect()}
+            for r in MM.audio_energy_windows(media).collect()}
     assert rows[(1, 0)] == (256, 0) and rows[(1, 1)] == (44, 0)
     assert rows[(2, 0)] == (10, 100)          # |138 - 128| * 10
     assert rows[(3, 0)] == (5, 15000)         # (1000 + 2000) * 5
@@ -230,7 +230,7 @@ def test_attach_audio_g711_energy_matches_tables(spark):
         "doc_id long, text string")
     rows = {(r["media_id"], r["win_idx"]): r for r in
             MM.audio_energy_windows(
-                MM.attach_audio_g711(docs), window=256).collect()}
+                MM.attach_audio_g711(docs)).collect()}
     b = np.frombuffer(b"hi", np.uint8)
     assert rows[(0, 0)]["abs_sum"] == int(np.abs(ulaw[b]).sum())
     assert rows[(1, 0)]["abs_sum"] == int(np.abs(alaw[b]).sum())
@@ -271,7 +271,7 @@ def test_adpcm_multi_block_roundtrip():
             dat = bytes(rng.randint(0, 256, dlen).astype(np.uint8))
             blocks.append((pred, idx, dat))
             want += _ref_adpcm(pred, idx, dat)
-        rate, ch, bits, s = decode_wav(encode_wav_adpcm(blocks, 8000))
+        rate, ch, bits, s = decode_wav(encode_wav_adpcm(blocks))
         assert (rate, ch, bits) == (8000, 1, 16)
         assert s[:, 0].tolist() == want, trial
 

@@ -48,7 +48,7 @@ def main() -> None:
         bucket = F.floor(F.col("_len") / 64)
         bucket_domain = docs.select(bucket.alias("b")).distinct().count()
         t0 = time.time()
-        out = curriculum_order(docs, bucket, n_stages=3)
+        out = curriculum_order(docs, bucket)
         stage_sizes = sorted(
             r["c"] for r in
             out.groupBy("stage").agg(F.count("*").alias("c")).collect())
@@ -60,8 +60,7 @@ def main() -> None:
         guard_raised = None
         if raw_domain > 10_000:
             try:
-                curriculum_order(docs, F.col("_len"), n_stages=3,
-                                 max_domain=10_000)
+                curriculum_order(docs, F.col("_len"), max_domain=10_000)
                 guard_raised = False
             except ValueError:
                 guard_raised = True

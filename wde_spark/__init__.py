@@ -13,7 +13,7 @@ Layout:
     operators/  generic relational + text + dedup + similarity operators
     sources/    TSV / JSON-KV / text-list / TEI-XML source & sink adapters
     plans/      domain pipelines (nametable, entity resolution, enrichment)
-    streaming/  event-time windows (tumbling/sliding/session), watermarks
+    streaming/  event-time windows (tumbling/session), watermarks
 """
 
 __version__ = "0.1.0"

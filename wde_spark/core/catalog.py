@@ -29,8 +29,6 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:
     try:

@@ -9,10 +9,7 @@ Reference parity (citations into /root/reference):
 `namebuild` is a pure function of (string, two small lookup maps). It is
 regex-backtracking + ordered-dict-scan heavy, so the engine keeps it as
 plain Python invoked from Arrow-batched pandas UDFs (row-local — no shuffle,
-scales linearly with executors; see functions/classify.py). The *extraction*
-regexes F6-F8 are additionally exposed as Column expressions
-(`abvcomp_col`/`abvsimp_col`/`complnm_col`) so the generic surface can run
-them JVM-side.
+scales linearly with executors; see functions/classify.py).
 """
 
 from __future__ import annotations
@@ -147,20 +144,3 @@ def namebuild(nstr: str) -> tuple[str, str, bool]:
 # generic operator surface; `regexp_extract` returns '' on no-match).
 # ---------------------------------------------------------------------------
 
-def abvcomp_col(c):
-    from pyspark.sql import functions as F
-
-    combined = "|".join(f"({p})" for p in ABVCOMP_PATTERNS)
-    return F.regexp_extract(c, combined, 0)
-
-
-def abvsimp_col(c):
-    from pyspark.sql import functions as F
-
-    return F.regexp_extract(c, ABVSIMP_PATTERN, 0)
-
-
-def complnm_col(c):
-    from pyspark.sql import functions as F
-
-    return F.regexp_extract(c, COMPLNM_PATTERN, 0)

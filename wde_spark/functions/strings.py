@@ -14,7 +14,6 @@ Reference parity (citations into /root/reference):
   F14 extract years         script/utils/itemtoid_prep.py:292-303
   F16 roman numeral         script/tables/matching.py:184
   F17 qid / catalogue id    script/wd2tei.py:51,98,110
-  F19 build_query_string    script/itemtoid.py:250-251
 """
 
 from __future__ import annotations
@@ -53,9 +52,9 @@ def norm_compare(c: Column) -> Column:
     return norm_ws(F.regexp_replace(F.lower(c), PUNCT_CLASS, " "))
 
 
-def dedup_tokens(c: Column, sep: str = " ") -> Column:
+def dedup_tokens(c: Column) -> Column:
     """A3 — order-preserving token dedup (`sorted(set(s), key=s.index)`)."""
-    return F.array_join(F.array_distinct(F.split(c, sep)), sep)
+    return F.array_join(F.array_distinct(F.split(c, " ")), " ")
 
 
 def clean_query_string(c: Column) -> Column:
@@ -65,11 +64,6 @@ def clean_query_string(c: Column) -> Column:
     c = dedup_tokens(c)
     c = F.regexp_replace(c, QSTR_PUNCT_CLASS, "")
     return norm_ws(c)
-
-
-def build_query_string(*cols: Column) -> Column:
-    """F19 — concat qdict fields into one lowercased query string."""
-    return F.lower(norm_ws(F.concat_ws(" ", *cols)))
 
 
 def paren_extract(c: Column) -> Column:

@@ -342,13 +342,14 @@ def _encode_rle8_row(row: bytes) -> bytes:
     return bytes(out)
 
 
-def encode_avi_rle8(frames: np.ndarray, fps: int = 10) -> bytes:
+def encode_avi_rle8(frames: np.ndarray) -> bytes:
     """Encode an (n, h, w) uint8 array as a BI_RLE8-compressed
     grayscale-palette AVI ('00dc' chunks, bottom-up rows, end-of-line
     escapes between rows, end-of-bitmap terminator). The compressed
     twin of `encode_avi`'s 8-bit tier: decode_avi returns identical RGB
     for both, so the RLE path is hash-checkable against the same
     pixel-predicting oracle."""
+    fps = 10
     arr = np.asarray(frames, dtype=np.uint8)
     if arr.ndim != 3:
         raise ValueError("encode_avi_rle8 expects (n,h,w) gray frames")

@@ -35,15 +35,15 @@ def _probe(key: Column, seed: int, m: int) -> Column:
     return F.pmod(F.xxhash64(key, F.lit(seed)), F.lit(m))
 
 
-def bloom_build(keys: DataFrame, key_col: str, m: int = 1 << 20,
-                h: int = 3) -> list[DataFrame]:
-    """The filter: h position tables (column `pos`), each ≤ m rows —
+def bloom_build(keys: DataFrame, key_col: str,
+                m: int = 1 << 20) -> list[DataFrame]:
+    """The filter: 3 position tables (column `pos`), each ≤ m rows —
     corpus-size-free once the key set saturates m. Persist them as the
     reusable snapshot form; at 1<<20 positions a table is ≤ 8 MB."""
     k = F.col(key_col)
     return [
         keys.select(_probe(k, i, m).alias("pos")).distinct()
-        for i in range(h)
+        for i in range(3)
     ]
 
 
@@ -63,15 +63,14 @@ def bloom_prefilter(big: DataFrame, bits: list[DataFrame], key_col: str,
 
 
 def bloom_semi_join(big: DataFrame, small: DataFrame, big_key: str,
-                    small_key: str | None = None, m: int = 1 << 20,
-                    h: int = 3) -> DataFrame:
+                    small_key: str | None = None,
+                    m: int = 1 << 20) -> DataFrame:
     """Exact semi-join of `big` against `small`'s keys, with the bloom
-    pre-filter in front: big → h broadcast probes → exact semi-join over
+    pre-filter in front: big → 3 broadcast probes → exact semi-join over
     candidates only. Result is IDENTICAL to a plain left-semi join (the
     registry oracle states exactly that); the pre-filter only changes
     how many rows reach the shuffle."""
     small_key = small_key or big_key
     keys = small.select(F.col(small_key).alias(big_key)).distinct()
-    cand = bloom_prefilter(big, bloom_build(keys, big_key, m, h),
-                           big_key, m)
+    cand = bloom_prefilter(big, bloom_build(keys, big_key, m), big_key, m)
     return cand.join(keys, big_key, "left_semi")

@@ -93,9 +93,8 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return parts
 
 
-def bpe_token_counts(docs: DataFrame, merges: Sequence[tuple[str, str]],
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def bpe_token_counts(docs: DataFrame,
+                     merges: Sequence[tuple[str, str]]) -> DataFrame:
     """(id, bpe_tokens) with EXACT merge-list token counts. See module
     docstring for the distinct-word plan shape."""
     ranks = {tuple(p): i for i, p in enumerate(merges)}
@@ -113,12 +112,12 @@ def bpe_token_counts(docs: DataFrame, merges: Sequence[tuple[str, str]],
         return words.map(n)
 
     words = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(PRETOKEN_RE), 0)
+            F.regexp_extract_all(F.col("text"), F.lit(PRETOKEN_RE), 0)
         ).alias("w"),
     )
-    per_doc_word = words.groupBy(id_col, "w").agg(F.count("*").alias("n_w"))
+    per_doc_word = words.groupBy("doc_id", "w").agg(F.count("*").alias("n_w"))
     vocab = per_doc_word.select("w").distinct() \
         .withColumn("n_tok", n_bpe("w"))
     # join strategy stays AQE's call: the vocab side is usually broadcast-
@@ -126,7 +125,7 @@ def bpe_token_counts(docs: DataFrame, merges: Sequence[tuple[str, str]],
     # broadcast threshold, and a shuffle-hash join on `w` is still right.
     counted = (
         per_doc_word.join(vocab, "w")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum(F.col("n_w") * F.col("n_tok")).cast("long")
              .alias("bpe_tokens"))
     )
@@ -136,9 +135,9 @@ def bpe_token_counts(docs: DataFrame, merges: Sequence[tuple[str, str]],
     # `bpe_tokens < n` curation filter must drop/keep the same rows
     # whichever counting mode is active.
     return (
-        docs.select(id_col, F.col(text_col).isNull().alias("__null_text"))
-        .join(counted, id_col, "left")
-        .select(id_col,
+        docs.select("doc_id", F.col("text").isNull().alias("__null_text"))
+        .join(counted, "doc_id", "left")
+        .select("doc_id",
                 F.when(F.col("__null_text"), F.lit(None))
                 .otherwise(F.coalesce("bpe_tokens", F.lit(0)))
                 .cast("long").alias("bpe_tokens"))
@@ -194,9 +193,7 @@ def train_bpe_merges(word_freqs: dict[str, int],
 
 
 def learn_bpe_merges(docs: DataFrame, num_merges: int,
-                     text_col: str = "text",
-                     local_vocab_max: int = 1 << 17
-                     ) -> list[tuple[str, str]]:
+                     local_vocab_max: int = 1 << 17) -> list[tuple[str, str]]:
     """DISTRIBUTED BPE training — the same algorithm as
     `train_bpe_merges` with the corpus-scale halves kept in Spark: the
     word-frequency aggregation AND the per-iteration pair counting and
@@ -228,7 +225,7 @@ def learn_bpe_merges(docs: DataFrame, num_merges: int,
     either way (the differential contract above covers both arms)."""
     wf = (
         docs.select(F.explode(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("w"))
+            F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w").agg(F.count("*").alias("freq"))
     )

@@ -33,16 +33,15 @@ from pyspark.sql import functions as F
 from ..functions.strings import tokens
 
 
-def train_naive_bayes(docs: DataFrame, label_col: str = "lang",
-                      text_col: str = "text", id_col: str = "doc_id",
-                      k: float = 0.5) -> tuple[DataFrame, DataFrame]:
+def train_naive_bayes(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(model, priors) trained on labeled docs. Smoothing mirrors
     `lm_score.train_bigram_lm`: logP(t|l) = ln((c_lt + k) / (c_l +
     k·(V+1))) over the GLOBAL training vocabulary V, one extra slot for
     unseen tokens; floor(l) = ln(k / (c_l + k·(V+1)))."""
+    k = 0.5
     tok = (
-        docs.select(F.col(label_col).alias("label"),
-                    F.explode(tokens(F.col(text_col))).alias("token"))
+        docs.select(F.col("lang").alias("label"),
+                    F.explode(tokens(F.col("text"))).alias("token"))
         .filter(F.col("token") != "")
     )
     c_lt = tok.groupBy("label", "token").agg(F.count("*").alias("c_lt"))
@@ -57,7 +56,7 @@ def train_naive_bayes(docs: DataFrame, label_col: str = "lang",
             .alias("logp"),
         )
     )
-    n_docs = docs.groupBy(F.col(label_col).alias("label")) \
+    n_docs = docs.groupBy(F.col("lang").alias("label")) \
         .agg(F.count("*").alias("n_l"))
     total = n_docs.agg(F.sum("n_l").alias("n"))
     priors = (
@@ -73,36 +72,35 @@ def train_naive_bayes(docs: DataFrame, label_col: str = "lang",
     return seen, priors
 
 
-def nb_classify(docs: DataFrame, model: DataFrame, priors: DataFrame,
-                text_col: str = "text", id_col: str = "doc_id",
-                broadcast_model: bool = True) -> DataFrame:
+def nb_classify(docs: DataFrame, model: DataFrame,
+                priors: DataFrame) -> DataFrame:
     """(id, pred_label, score, margin): per-document argmax class, its
     rounded total log-probability, and the gap to the runner-up (the
     filter threshold the GPT-3-style pipelines cut on). Ties break on
     label order. Documents with no tokens in the model's vocabulary are
     still scored (all-floor) — every doc gets a prediction."""
     tok = (
-        docs.select(F.col(id_col),
-                    F.explode(tokens(F.col(text_col))).alias("token"))
+        docs.select(F.col("doc_id"),
+                    F.explode(tokens(F.col("text"))).alias("token"))
         .filter(F.col("token") != "")
     )
-    m = F.broadcast(model) if broadcast_model else model
-    p = F.broadcast(priors) if broadcast_model else priors
+    m = F.broadcast(model)
+    p = F.broadcast(priors)
     seen_agg = (
         tok.join(m, "token")
-        .groupBy(id_col, "label")
+        .groupBy("doc_id", "label")
         .agg(F.sum("logp").alias("s_seen"), F.count("*").alias("n_seen"))
     )
-    n_tok = tok.groupBy(id_col).agg(F.count("*").alias("n_tok"))
+    n_tok = tok.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
     grid = (
-        docs.select(id_col).join(n_tok, id_col, "left")
-        .select(id_col, F.coalesce("n_tok", F.lit(0)).alias("n_tok"))
+        docs.select("doc_id").join(n_tok, "doc_id", "left")
+        .select("doc_id", F.coalesce("n_tok", F.lit(0)).alias("n_tok"))
         .crossJoin(p)
     )
     scored = (
-        grid.join(seen_agg, [id_col, "label"], "left")
+        grid.join(seen_agg, ["doc_id", "label"], "left")
         .select(
-            F.col(id_col), "label",
+            F.col("doc_id"), "label",
             F.round(
                 F.col("logprior")
                 + F.coalesce(F.col("s_seen"), F.lit(0.0))
@@ -110,27 +108,25 @@ def nb_classify(docs: DataFrame, model: DataFrame, priors: DataFrame,
                 * F.col("lp_floor"), 6).alias("score"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("label"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("label"))
     return (
         scored.withColumn("_rnk", F.row_number().over(w))
         .withColumn("_next", F.lead("score").over(w))
         .filter(F.col("_rnk") == 1)
         .select(
-            F.col(id_col), F.col("label").alias("pred_label"), "score",
+            F.col("doc_id"), F.col("label").alias("pred_label"), "score",
             F.round(F.col("score") - F.coalesce("_next", F.col("score")), 6)
             .alias("margin"),
         )
     )
 
 
-def nb_accuracy(predictions: DataFrame, truth: DataFrame,
-                label_col: str = "lang",
-                id_col: str = "doc_id") -> DataFrame:
+def nb_accuracy(predictions: DataFrame, truth: DataFrame) -> DataFrame:
     """One-row accuracy summary of `nb_classify` output against labeled
     truth — the held-out gate a production classifier ships with."""
     joined = predictions.join(
-        truth.select(F.col(id_col), F.col(label_col).alias("_truth")),
-        id_col)
+        truth.select(F.col("doc_id"), F.col("lang").alias("_truth")),
+        "doc_id")
     return joined.agg(
         F.count("*").alias("n_docs"),
         F.sum(F.when(F.col("pred_label") == F.col("_truth"), 1)

@@ -35,6 +35,9 @@ from pyspark.sql import functions as F
 from ..functions.strings import tokens
 from .dedup import distinct_shingle_table, shingles
 
+#: Shingle width of both decontamination paths.
+_SHINGLE_K = 3
+
 
 def bloom_bit(sh: Column, seed: int, m_bits: int) -> Column:
     """Bloom bit position of a shingle under one salted hash — the
@@ -56,12 +59,11 @@ def _dup_fraction(arr: Column) -> Column:
                      F.size(arr)), 4)
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition ratios, all row-local: duplicate-line
     fraction and duplicate word-2/3-gram fractions, plus a pass flag at the
     Gopher-ish thresholds (0.30 lines / 0.20 2-grams / 0.18 3-grams)."""
-    t = F.col(text_col)
+    t = F.col("text")
     lines = F.filter(F.split(t, "\n"), lambda x: F.trim(x) != "")
     tok = tokens(t)
     dl = _dup_fraction(lines)
@@ -73,7 +75,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
         & (F.coalesce(d3, F.lit(0.0)) <= 0.18)
     )
     return docs.select(
-        id_col,
+        "doc_id",
         dl.alias("dup_line_frac"),
         d2.alias("dup_2gram_frac"),
         d3.alias("dup_3gram_frac"),
@@ -95,19 +97,18 @@ PII_PATTERNS = {
 }
 
 
-def pii_redact(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def pii_redact(docs: DataFrame) -> DataFrame:
     """Redact PII-shaped spans and count them per type. Redaction replaces
     each span with `[TYPE]`; counting happens BEFORE redaction on the raw
     text (so overlapping classes each report their own raw count —
     digit_run counts phone digits too; consumers filter on the redacted
     text, not the counts). Row-local; one regexp pass per class."""
-    t = F.col(text_col)
+    t = F.col("text")
     red = t
     for name, pat in PII_PATTERNS.items():
         red = F.regexp_replace(red, pat, f"[{name.upper()}]")
     return docs.select(
-        id_col,
+        "doc_id",
         *[
             F.size(F.regexp_extract_all(t, F.lit(pat), 0)).alias(f"n_{name}")
             for name, pat in PII_PATTERNS.items()
@@ -116,9 +117,7 @@ def pii_redact(docs: DataFrame, text_col: str = "text",
     )
 
 
-def decontaminate(docs: DataFrame, benchmark: DataFrame,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  shingle_k: int = 3) -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: per document, the number of distinct
     k-token shingles it shares with the benchmark set and a `contaminated`
     flag (>=1 shared shingle). Production pipelines drop or split flagged
@@ -128,21 +127,22 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     Shape: distinct-shingle tables both sides; the benchmark side collapses
     to DISTINCT shingles (small → broadcast); one join + count + left join
     back to ids. The corpus never shuffles payloads, only (id, shingle)."""
-    doc_sh = distinct_shingle_table(docs, text_col, id_col, shingle_k)
+
+    doc_sh = distinct_shingle_table(docs, _SHINGLE_K)
     bench_sh = (
-        distinct_shingle_table(benchmark, text_col, id_col, shingle_k)
+        distinct_shingle_table(benchmark, _SHINGLE_K)
         .select("sh").distinct()
     )
     hits = (
         doc_sh.join(F.broadcast(bench_sh), "sh")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared_shingles"))
     )
     return (
-        docs.select(id_col)
-        .join(hits, id_col, "left")
+        docs.select("doc_id")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_shared_shingles", F.lit(0)).alias("n_shared_shingles"),
             (F.coalesce("n_shared_shingles", F.lit(0)) > 0).alias("contaminated"),
         )
@@ -150,9 +150,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
 
 
 def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        shingle_k: int = 3, m_bits: int = 1 << 20,
-                        n_seeds: int = 4) -> DataFrame:
+                        m_bits: int = 1 << 20) -> DataFrame:
     """Bloom-prefiltered decontamination — the 100 TB form of
     `decontaminate`: instead of broadcasting the benchmark's full distinct
     SHINGLE STRINGS (megabytes of text), broadcast its Bloom BIT SET —
@@ -172,14 +170,16 @@ def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame,
     rows, one broadcast join + a per-shingle counting HAVING recovers
     the all-bits-present test, and the exact verify join runs only over
     the surviving candidates."""
-    doc_sh = distinct_shingle_table(docs, text_col, id_col, shingle_k)
+
+    n_seeds = 4
+    doc_sh = distinct_shingle_table(docs, _SHINGLE_K)
     # bench_sh feeds BOTH the bit-set build and the exact verify, and
     # cand feeds BOTH rollups; Catalyst does not share common subplans
     # across joins, so each is localCheckpoint-ed (benchmark-sized /
     # candidate-sized — small by contract) to keep the corpus-side
     # shingle explode single-pass.
     bench_sh = (
-        distinct_shingle_table(benchmark, text_col, id_col, shingle_k)
+        distinct_shingle_table(benchmark, _SHINGLE_K)
         .select("sh").distinct().localCheckpoint()
     )
 
@@ -190,31 +190,31 @@ def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame,
         F.explode(F.array(*[bit(i) for i in range(n_seeds)])).alias("bit")
     ).distinct()
     sh_bits = doc_sh.select(
-        id_col, "sh",
+        "doc_id", "sh",
         F.posexplode(F.array(*[bit(i) for i in range(n_seeds)]))
         .alias("i", "bit"),
     )
     cand = (
         sh_bits.join(F.broadcast(bench_bits), "bit")
-        .groupBy(id_col, "sh")
+        .groupBy("doc_id", "sh")
         .agg(F.countDistinct("i").alias("_nb"))
         .filter(F.col("_nb") == n_seeds)
-        .select(id_col, "sh")
+        .select("doc_id", "sh")
         .localCheckpoint()
     )
-    bloom_hits = cand.groupBy(id_col).agg(
+    bloom_hits = cand.groupBy("doc_id").agg(
         F.count("*").alias("n_bloom_candidates"))
     exact_hits = (
         cand.join(F.broadcast(bench_sh), "sh")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared_shingles"))
     )
     return (
-        docs.select(id_col)
-        .join(bloom_hits, id_col, "left")
-        .join(exact_hits, id_col, "left")
+        docs.select("doc_id")
+        .join(bloom_hits, "doc_id", "left")
+        .join(exact_hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bloom_candidates", F.lit(0))
             .alias("n_bloom_candidates"),
             F.coalesce("n_shared_shingles", F.lit(0))
@@ -228,8 +228,8 @@ def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame,
     )
 
 
-def chunk_documents(docs: DataFrame, max_tokens: int = 64, overlap: int = 8,
-                    text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def chunk_documents(docs: DataFrame, max_tokens: int = 64,
+                    overlap: int = 8) -> DataFrame:
     """Context-window chunking: split each document's token stream into
     windows of `max_tokens` with `overlap` tokens carried between
     consecutive windows (stride = max_tokens - overlap). Returns
@@ -239,7 +239,7 @@ def chunk_documents(docs: DataFrame, max_tokens: int = 64, overlap: int = 8,
     them with the quality tier, not here)."""
     assert 0 <= overlap < max_tokens
     stride = max_tokens - overlap
-    tok = tokens(F.col(text_col))
+    tok = tokens(F.col("text"))
     n = F.size(tok)
     # chunk starts: 0, stride, 2*stride, ... < max(n, 1) — then drop any
     # non-first start whose chunk would hold ONLY carried-over tokens
@@ -252,9 +252,10 @@ def chunk_documents(docs: DataFrame, max_tokens: int = 64, overlap: int = 8,
     chunks = F.transform(
         starts, lambda s: F.slice(tok, s + 1, max_tokens))
     return (
-        docs.select(F.col(id_col), F.posexplode(chunks).alias("chunk_idx", "ck"))
+        docs.select(F.col("doc_id"),
+                    F.posexplode(chunks).alias("chunk_idx", "ck"))
         .select(
-            id_col,
+            "doc_id",
             "chunk_idx",
             F.size("ck").alias("n_tokens"),
             F.array_join("ck", " ").alias("chunk_text"),

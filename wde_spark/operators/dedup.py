@@ -39,27 +39,25 @@ def shingles(tok: Column, k: int = 3) -> Column:
     ).otherwise(F.array(F.array_join(tok, " ")))
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Tier 1 — exact dedup on the canonical text form; keeps the lowest id
     per duplicate class (deterministic winner). One shuffle on the hash."""
     return (
-        docs.select(F.col(id_col), F.md5(norm_compare(F.col(text_col))).alias("fp"))
+        docs.select(F.col("doc_id"),
+                    F.md5(norm_compare(F.col("text"))).alias("fp"))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("dup_count"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_count"))
     )
 
 
-def distinct_shingle_table(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           shingle_k: int = 3) -> DataFrame:
+def distinct_shingle_table(docs: DataFrame, shingle_k: int = 3) -> DataFrame:
     """(id, shingle) with per-document distinct shingles — the shared input
     of signature computation, candidate verification, and size counting.
     Build it ONCE per pipeline and reuse (persist if it fits): recomputing
     it is the dominant cost of a naive near-dup plan."""
     return docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingles(tokens(F.col(text_col)), shingle_k))
+        F.col("doc_id"),
+        F.explode(F.array_distinct(shingles(tokens(F.col("text")), shingle_k))
                   ).alias("sh"),
     )
 
@@ -88,8 +86,7 @@ def shingle_hash32(sh: Column) -> Column:
     return F.conv(F.substring(F.md5(sh), 1, 8), 16, 10).cast("bigint")
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_hashes: int = 16,
+def minhash_signatures(docs: DataFrame, num_hashes: int = 16,
                        shingle_k: int = 3,
                        shingle_table: DataFrame | None = None) -> DataFrame:
     """Tier 3 — K-permutation minhash signature per document.
@@ -116,9 +113,9 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
             f"({len(_MH_PERM)}); extend _MH_PERM (and the oracle generators) "
             f"to go wider")
     sh = shingle_table if shingle_table is not None else \
-        distinct_shingle_table(docs, text_col, id_col, shingle_k)
-    hashed = sh.select(F.col(id_col), shingle_hash32(F.col("sh")).alias("h"))
-    return hashed.groupBy(id_col).agg(
+        distinct_shingle_table(docs, shingle_k)
+    hashed = sh.select(F.col("doc_id"), shingle_hash32(F.col("sh")).alias("h"))
+    return hashed.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MH_P)
                   ).alias(f"mh_{j}")
@@ -127,9 +124,8 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     )
 
 
-def lsh_band_table(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", num_hashes: int = 16,
-                   bands: int = 4, shingle_k: int = 3,
+def lsh_band_table(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
+                   shingle_k: int = 3,
                    shingle_table: DataFrame | None = None) -> DataFrame:
     """(id, band_idx, band_hash) — one row per document per band, the
     stacked LSH bucket table that `minhash_lsh_pairs` self-joins and that
@@ -138,24 +134,22 @@ def lsh_band_table(docs: DataFrame, text_col: str = "text",
     across runs, engines, and cluster sizes."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_k,
-                             shingle_table)
+    sig = minhash_signatures(docs, num_hashes, shingle_k, shingle_table)
     band_cols = [
         F.md5(F.concat_ws("|", *[F.col(f"mh_{b * rows_per_band + r}")
                                  for r in range(rows_per_band)])).alias(f"band_{b}")
         for b in range(bands)
     ]
-    banded = sig.select(F.col(id_col), *band_cols)
+    banded = sig.select(F.col("doc_id"), *band_cols)
     return banded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.array(*[F.col(f"band_{b}") for b in range(bands)]))
         .alias("band_idx", "band_hash"),
     )
 
 
-def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", num_hashes: int = 16,
-                      bands: int = 4, shingle_k: int = 3,
+def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
+                      shingle_k: int = 3,
                       shingle_table: DataFrame | None = None,
                       max_bucket: int | None = 64) -> DataFrame:
     """Tier 3 — LSH banding: split the K minhashes into B bands, hash each
@@ -171,8 +165,8 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     Observed bucket sizes on the synthetic corpus are <= 5, so the default
     cap of 64 changes nothing at test scale — it exists for the 100-TB run.
     Pass None to disable."""
-    stacked = lsh_band_table(docs, text_col, id_col, num_hashes, bands,
-                             shingle_k, shingle_table)
+    stacked = lsh_band_table(docs, num_hashes, bands, shingle_k,
+                             shingle_table)
     if max_bucket is not None:
         # One extra hash-agg-shaped pass on the SAME key the join shuffles
         # on; AQE reuses the exchange. Never a window over the raw pairs.
@@ -195,17 +189,17 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
         )
         .distinct()
     )
 
 
-def _jaccard_verify(sh: DataFrame, id_col: str, threshold: float,
+def _jaccard_verify(sh: DataFrame, threshold: float,
                     cand: DataFrame | None = None) -> DataFrame:
     """The exact-Jaccard verification step of every near-dup tier, over a
     distinct (id, sh) shingle table: (id_a, id_b, jaccard) for the pairs
@@ -213,20 +207,22 @@ def _jaccard_verify(sh: DataFrame, id_col: str, threshold: float,
     (id_a, id_b) only the candidate pairs are verified; without it every
     pair sharing a shingle is, as a shingle self-join with id_a < id_b.
     The caller decides whether `sh` is persisted."""
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     if cand is None:
         a, b = sh.alias("a"), sh.alias("b")
         pairs = a.join(b, (F.col("a.sh") == F.col("b.sh"))
-                       & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))) \
-            .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"))
+                       & (F.col("a.doc_id") < F.col("b.doc_id"))) \
+            .groupBy(F.col("a.doc_id").alias("id_a"),
+                     F.col("b.doc_id").alias("id_b"))
     else:
-        a = sh.select(F.col(id_col).alias("id_a"), "sh")
-        b = sh.select(F.col(id_col).alias("id_b"), "sh")
+        a = sh.select(F.col("doc_id").alias("id_a"), "sh")
+        b = sh.select(F.col("doc_id").alias("id_b"), "sh")
         pairs = cand.join(a, "id_a").join(b, ["id_b", "sh"]) \
             .groupBy("id_a", "id_b")
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"),
+                      F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"),
+                      F.col("n_sh").alias("n_b"))
     return (
         pairs.agg(F.count("*").alias("n_inter"))
         .join(sa, "id_a").join(sb, "id_b")
@@ -240,12 +236,8 @@ def _jaccard_verify(sh: DataFrame, id_col: str, threshold: float,
     )
 
 
-def neardup_lsh_verified(docs: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", num_hashes: int = 16,
-                         bands: int | str = 4, shingle_k: int = 2,
-                         threshold: float = 0.2,
-                         max_bucket: int | None = 64,
-                         target_similarity: float = 0.7) -> DataFrame:
+def neardup_lsh_verified(docs: DataFrame, bands: int | str = 4,
+                         max_bucket: int | None = 64) -> DataFrame:
     """Tier 3+4 — the 100-TB near-dup pipeline: LSH banding proposes
     candidate pairs (shuffle on band hash — no all-pairs product, no hot
     shingle blow-up), then exact n-gram Jaccard verifies ONLY the candidates.
@@ -260,55 +252,54 @@ def neardup_lsh_verified(docs: DataFrame, text_col: str = "text",
     between a bounded and an unbounded verification stage at 100 TB.
 
     `bands="auto"` derives the banding from the S-curve instead
-    (`lsh_params_for(target_similarity, num_hashes)`): the cheapest
-    banding that still catches a `target_similarity` pair with >=50%
-    probability. `target_similarity` is the similarity regime the corpus's
-    true duplicates live at (default 0.7 — which yields the production
-    16/4 setting), NOT the verification `threshold`: banding tuned to the
-    low verification threshold would shatter into tiny bands and flood
+    (`lsh_params_for(0.7, 16)`): the cheapest banding that still catches
+    a 0.7-similar pair with >=50% probability. 0.7 is the similarity
+    regime the corpus's true duplicates live at (it yields the production
+    16/4 setting), NOT the 0.2 verification threshold: banding tuned to
+    the low verification threshold would shatter into tiny bands and flood
     verification with sub-threshold candidates."""
+    num_hashes = 16
+    shingle_k = 2
     if bands == "auto":
-        bands, _ = lsh_params_for(target_similarity, num_hashes)
+        bands, _ = lsh_params_for(0.7, num_hashes)
 
     # ONE shingle table feeds signatures, sizes, and verification — computed
     # once, spilled to disk if it outgrows memory. Without this the plan
     # recomputes tokenize+shingle 3× (measured ~5× slower end-to-end).
-    sh = distinct_shingle_table(docs, text_col, id_col, shingle_k)
+    sh = distinct_shingle_table(docs, shingle_k)
     sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    cand = minhash_lsh_pairs(docs, text_col, id_col, num_hashes, bands,
+    cand = minhash_lsh_pairs(docs, num_hashes, bands,
                              shingle_k, shingle_table=sh,
                              max_bucket=max_bucket)
-    return _jaccard_verify(sh, id_col, threshold, cand)
+    return _jaccard_verify(sh, 0.2, cand)
 
 
-def sorted_neighborhood_pairs(docs: DataFrame, text_col: str = "text",
-                              id_col: str = "doc_id", window: int = 2,
-                              shingle_k: int = 2,
+def sorted_neighborhood_pairs(docs: DataFrame,
                               threshold: float = 0.2) -> DataFrame:
     """Tier 3-alternative — blocked sorted-neighborhood method (SNM): block
     on the first token of the normalized text, sort each block, and compare
-    every row only with its next `window` neighbors in sort order; exact
+    every row only with its next 2 neighbors in sort order; exact
     n-gram Jaccard verifies the candidates. The classic entity-resolution
     counterpart to LSH banding: recall comes from sort locality instead of
-    hash collisions, candidate count is ≤ window·n by construction (LSH's
+    hash collisions, candidate count is ≤ 2·n by construction (LSH's
     depends on band-collision rates).
 
     Scale shape: the sort is PER BLOCK (window partitioned by the blocking
     key — never a global single-task sort); neighbor pairing is an
-    equi-join on (block, rank+k) for k = 1..window, so it shuffles on the
+    equi-join on (block, rank+k) for k = 1..2, so it shuffles on the
     same key the window already partitioned by; verification joins only
     candidate shingles. 100 TB caveat a user must know: a hot block (many
     rows sharing the first token) serializes its block's sort into one
     task — pick a blocking key with bounded block size, or compose keys."""
-    norm = F.trim(F.lower(F.col(text_col)))
+    norm = F.trim(F.lower(F.col("text")))
     ranked = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.split_part(norm, F.lit(" "), F.lit(1)).alias("blk"),
         norm.alias("norm_text"),
     ).withColumn(
         "rn",
         F.row_number().over(
-            Window.partitionBy("blk").orderBy("norm_text", id_col)),
+            Window.partitionBy("blk").orderBy("norm_text", "doc_id")),
     ).drop("norm_text")
     # Persist the (id, blk, rn) rank table before the neighbor equi-join
     # (r12, guide §1.2): the join's broadcast side defeats exchange
@@ -316,23 +307,22 @@ def sorted_neighborhood_pairs(docs: DataFrame, text_col: str = "text",
     # scan + two exchanges feeding it) executed once per join side.
     ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
     a = ranked.select(
-        F.col(id_col).alias("id_a"), "blk", "rn",
-        F.explode(F.array(*[F.lit(k) for k in range(1, window + 1)]))
+        F.col("doc_id").alias("id_a"), "blk", "rn",
+        F.explode(F.array(*[F.lit(k) for k in range(1, 3)]))
         .alias("k"),
     ).withColumn("rn_b", F.col("rn") + F.col("k"))
-    b = ranked.select(F.col(id_col).alias("id_b"), "blk",
+    b = ranked.select(F.col("doc_id").alias("id_b"), "blk",
                       F.col("rn").alias("rn_b"))
     cand = a.join(b, ["blk", "rn_b"]).select("id_a", "id_b")
 
     # consumed 3x (verification both sides + size counts) — persist, same
     # hygiene as neardup_lsh_verified
-    sh = distinct_shingle_table(docs, text_col, id_col, shingle_k) \
+    sh = distinct_shingle_table(docs, 2) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    return _jaccard_verify(sh, id_col, threshold, cand)
+    return _jaccard_verify(sh, threshold, cand)
 
 
-def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id", bits: int = 64) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """Tier 2 — simhash: per token, a 64-bit hash votes +1/-1 on each bit
     position weighted by occurrence; sign of the per-position sum is the
     signature bit. Implemented as explode → groupBy(id, bit) is avoided:
@@ -341,13 +331,12 @@ def simhash(docs: DataFrame, text_col: str = "text",
     Returns (id, simhash BIGINT). Expressed in SQL because the SQL
     shiftright/shiftleft accept column shift amounts (the Python wrappers
     require literals)."""
-    assert bits == 64
     sig = F.expr(
-        f"""
+        """
         aggregate(
           zip_with(
             aggregate(
-              split(trim(lower({text_col})), '\\\\s+'),
+              split(trim(lower(text)), '\\\\s+'),
               array_repeat(0L, 64),
               (acc, t) -> zip_with(
                 acc,
@@ -359,11 +348,10 @@ def simhash(docs: DataFrame, text_col: str = "text",
           0L, (acc, x) -> acc | x)
         """
     )
-    return docs.select(F.col(id_col), sig.alias("simhash"))
+    return docs.select(F.col("doc_id"), sig.alias("simhash"))
 
 
-def simhash_md5(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", bits: int = 60) -> DataFrame:
+def simhash_md5(docs: DataFrame) -> DataFrame:
     """Tier 2, engine-portable form — a 60-bit simhash whose per-token hash
     is the first 15 hex chars of md5 (60 bits fits a signed 64-bit int, and
     md5 is byte-identical in every engine, unlike xxhash64). Same row-local
@@ -376,13 +364,12 @@ def simhash_md5(docs: DataFrame, text_col: str = "text",
     token, not inside the per-bit lambda — measured ~2.5× faster warm at
     sf0.1 (for the cheap xxhash64 in `simhash` the same hoist measures
     slower, so each form keeps its empirically faster shape)."""
-    assert bits == 60
     sig = F.expr(
-        f"""
+        """
         aggregate(
           zip_with(
             aggregate(
-              transform(split(trim(lower({text_col})), '\\\\s+'),
+              transform(split(trim(lower(text)), '\\\\s+'),
                         t -> cast(conv(substr(md5(t), 1, 15), 16, 10)
                                   as bigint)),
               array_repeat(0L, 60),
@@ -396,11 +383,10 @@ def simhash_md5(docs: DataFrame, text_col: str = "text",
           0L, (acc, x) -> acc | x)
         """
     )
-    return docs.select(F.col(id_col), sig.alias("simhash"))
+    return docs.select(F.col("doc_id"), sig.alias("simhash"))
 
 
-def simhash_agg(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def simhash_agg(docs: DataFrame) -> DataFrame:
     """Tier 2, aggregation form — identical signatures to `simhash` but
     computed as explode(tokens) → 64 conditional-sum aggregates → one
     row-local bit-pack. Trades the row-local higher-order-function fold
@@ -416,10 +402,10 @@ def simhash_agg(docs: DataFrame, text_col: str = "text",
     `simhash`. (Difference: a NULL text yields no output row here vs a NULL
     signature in the fold form — explode drops the row.)"""
     toks = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("t"),
+        F.col("doc_id"),
+        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("t"),
     ).withColumn("h", F.xxhash64("t"))
-    votes = toks.groupBy(id_col).agg(*[
+    votes = toks.groupBy("doc_id").agg(*[
         F.sum(
             (F.shiftright("h", i).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
         ).alias(f"v{i}")
@@ -431,12 +417,10 @@ def simhash_agg(docs: DataFrame, text_col: str = "text",
         bit = F.when(F.col(f"v{i}") > 0, F.lit(mask).cast("long")) \
             .otherwise(F.lit(0).cast("long"))
         sig = bit if sig is None else sig.bitwiseOR(bit)
-    return votes.select(F.col(id_col), sig.alias("simhash"))
+    return votes.select(F.col("doc_id"), sig.alias("simhash"))
 
 
-def simhash_pairs(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", max_hamming: int = 3,
-                  n_bands: int = 4) -> DataFrame:
+def simhash_pairs(docs: DataFrame) -> DataFrame:
     """Tier 2 pairing — near-duplicate candidates by simhash hamming
     distance. Pigeonhole: two 64-bit signatures within hamming distance
     d < n_bands must agree exactly on at least one of n_bands contiguous
@@ -444,11 +428,12 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text",
     all-pairs), then verify popcount(xor) <= max_hamming exactly.
 
     Requires max_hamming < n_bands for completeness (3 < 4 holds)."""
-    assert max_hamming < n_bands
-    sig = simhash(docs, text_col, id_col)
+    max_hamming = 3
+    n_bands = 4
+    sig = simhash(docs)
     width = 64 // n_bands
     banded = sig.select(
-        F.col(id_col), F.col("simhash"),
+        F.col("doc_id"), F.col("simhash"),
         F.posexplode(F.array(*[
             (F.shiftright("simhash", b * width)
              .bitwiseAND(F.lit((1 << width) - 1))).alias(f"b{b}")
@@ -459,9 +444,9 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text",
     cand = (
         a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
                & (F.col("a.band_val") == F.col("b.band_val"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("id_a"),
+                F.col("b.doc_id").alias("id_b"),
                 F.col("a.simhash").alias("sig_a"),
                 F.col("b.simhash").alias("sig_b"))
         .distinct()
@@ -474,8 +459,7 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text",
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", shingle_k: int = 3,
+def ngram_jaccard_pairs(docs: DataFrame, shingle_k: int = 3,
                         threshold: float = 0.8) -> DataFrame:
     """Tier 4 — exact n-gram Jaccard similarity join.
 
@@ -487,17 +471,13 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     # persist so tokenize+shingle runs once, same hygiene as
     # neardup_lsh_verified (the join sides alone get ReusedExchange, the
     # size agg's different shuffle shape would otherwise rescan)
-    sh = distinct_shingle_table(docs, text_col, id_col, shingle_k) \
+    sh = distinct_shingle_table(docs, shingle_k) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    return _jaccard_verify(sh, id_col, threshold)
+    return _jaccard_verify(sh, threshold)
 
 
-def dedup_corpus(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", threshold: float = 0.2,
-                 shingle_k: int = 2,
-                 max_bucket: int | None = 64, num_hashes: int = 16,
-                 bands: int | str = "auto",
-                 target_similarity: float = 0.7) -> DataFrame:
+def dedup_corpus(docs: DataFrame, max_bucket: int | None = 64,
+                 bands: int | str = "auto") -> DataFrame:
     """The end-to-end corpus cleaner — the tier composition a training-data
     pipeline actually runs (and `tools/stress_dedup.py` measures at 100×):
 
@@ -515,40 +495,36 @@ def dedup_corpus(docs: DataFrame, text_col: str = "text",
     different cluster sizes produce the identical corpus.
 
     Banding defaults to the S-curve chooser (`bands="auto"` →
-    `lsh_params_for(target_similarity, num_hashes)`), so the declared
-    similarity regime drives the LSH parameters rather than a hand-tuned
-    constant; at the defaults (0.7, 16 hashes) the chooser lands on the
+    `lsh_params_for(0.7, 16)`), so the declared similarity regime drives
+    the LSH parameters rather than a hand-tuned constant; at 0.7 and 16
+    hashes the chooser lands on the
     production 16/4 setting, so the default output is unchanged vs the
     historical constant (pinned by tests). The bucket-cap equivalence
     caveat (see `dedup_increment`) is parameterized on the RESOLVED
     banding and holds identically under chosen params."""
-    reps = exact_dedup(docs, text_col, id_col)
+    reps = exact_dedup(docs)
     # survivors feeds the whole near-dup pipeline AND the final
     # anti-join base; without the persist the input pipeline (often a
     # gated/joined composition upstream) re-runs once per consumer
     # (r12 §2, the broadcast-defeats-reuse shape)
     survivors = docs.join(
-        reps.select(F.col("keep_id").alias(id_col)), id_col, "left_semi") \
+        reps.select(F.col("keep_id").alias("doc_id")), "doc_id", "left_semi") \
         .persist(StorageLevel.MEMORY_AND_DISK)
 
     pairs = neardup_lsh_verified(
-        survivors, text_col, id_col, num_hashes=num_hashes, bands=bands,
-        shingle_k=shingle_k, threshold=threshold, max_bucket=max_bucket,
-        target_similarity=target_similarity,
+        survivors, bands=bands, max_bucket=max_bucket,
     ).select("id_a", "id_b")
 
     comps = G.connected_components(pairs)
     # drop every clustered doc that is not its class representative
     losers = comps.filter(F.col("node") != F.col("component")) \
-        .select(F.col("node").alias(id_col))
-    return survivors.join(losers, id_col, "left_anti")
+        .select(F.col("node").alias("doc_id"))
+    return survivors.join(losers, "doc_id", "left_anti")
 
 
 def semantic_dedup(items: DataFrame, threshold: float = 0.95,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   n_planes: int | str = "auto", dim: int = 64,
-                   n_tables: int | None = None,
-                   max_bucket: int | None = 64) -> DataFrame:
+                   id_col: str = "vec_id", n_planes: int | str = "auto",
+                   n_tables: int | None = None) -> DataFrame:
     """Tier-5 composition — SemDeDup-shaped semantic deduplication (Abbas
     et al., "SemDeDup: Data-efficient learning at web-scale through
     semantic deduplication", 2023): documents whose EMBEDDINGS are
@@ -569,9 +545,9 @@ def semantic_dedup(items: DataFrame, threshold: float = 0.95,
     `dedup_corpus`, so the two compose: run exact/text-LSH dedup first
     (cheaper, catches verbatim), then this over the survivors'
     embeddings. Deterministic (min-id winners, fixed hyperplanes)."""
-    pairs = embedding_neardup(items, threshold, id_col, vec_col,
-                              n_planes, dim, n_tables,
-                              max_bucket).select("id_a", "id_b")
+    pairs = embedding_neardup(items, threshold, id_col,
+                              n_planes, n_tables,
+                              64).select("id_a", "id_b")
     comps = G.connected_components(pairs)
     losers = comps.filter(F.col("node") != F.col("component")) \
         .select(F.col("node").alias(id_col))
@@ -609,9 +585,7 @@ def lsh_params_for(threshold: float, num_hashes: int = 16,
 
 
 def dedup_recall_audit(docs: DataFrame, pipeline_pairs: DataFrame,
-                       sample: int = 200, threshold: float = 0.2,
-                       shingle_k: int = 2, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+                       sample: int = 200) -> DataFrame:
     """Measured recall of a near-dup pipeline, from ground truth on a
     deterministic sample — the audit a production dedup run ships with
     its output, because LSH recall is a *parameter promise*, not a
@@ -622,18 +596,18 @@ def dedup_recall_audit(docs: DataFrame, pipeline_pairs: DataFrame,
     Method: md5-order-sample `sample` docs (deterministic — reruns audit
     the same docs), compute EXACT all-pairs Jaccard within the sample
     (bounded: sample² pairs, the only all-pairs product here, by declared
-    design), take pairs >= threshold as ground truth, and compare with
+    design), take pairs >= 0.2 as ground truth, and compare with
     `pipeline_pairs` restricted to the sample. Returns one row:
     (sample_docs, true_pairs, found_pairs, recall) — recall is NULL when
     the sample holds no true pair (nothing to measure, not recall 1.0)."""
     ids = (
-        docs.select(F.col(id_col))
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        docs.select(F.col("doc_id"))
+        .orderBy(F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
         .limit(sample)
     )
-    sub = docs.join(F.broadcast(ids), id_col, "left_semi")
-    sh = distinct_shingle_table(sub, text_col, id_col, shingle_k)
-    truth = _jaccard_verify(sh, id_col, threshold).select("id_a", "id_b")
+    sub = docs.join(F.broadcast(ids), "doc_id", "left_semi")
+    sh = distinct_shingle_table(sub, 2)
+    truth = _jaccard_verify(sh, 0.2).select("id_a", "id_b")
     found = truth.join(
         pipeline_pairs.select("id_a", "id_b").distinct(), ["id_a", "id_b"],
         "left_semi")
@@ -664,22 +638,21 @@ def dedup_recall_audit(docs: DataFrame, pipeline_pairs: DataFrame,
 # ---------------------------------------------------------------------------
 
 
-def _window_hashes(docs: DataFrame, k: int, text_col: str,
-                   id_col: str) -> DataFrame:
+def _window_hashes(docs: DataFrame, k: int) -> DataFrame:
     """(id, p, wh): md5 of the k-token window starting at 1-based token
     position p, one row per window. Positions EXPLODE to rows so each
     window is hashed exactly once inside whole-stage codegen (same lesson
     as `winnowing_fingerprints`: explode beats nested array expressions
     for anything super-linear per row). Docs shorter than k tokens emit
     no windows."""
-    tok = tokens(F.col(text_col))
+    tok = tokens(F.col("text"))
     base = docs.select(
-        F.col(id_col), tok.alias("t"),
+        F.col("doc_id"), tok.alias("t"),
         (F.size(tok) - (k - 1)).alias("nw"),
     )
     return (
         base.select(
-            id_col, "nw", "t",
+            "doc_id", "nw", "t",
             # sequence(1, max(nw,1)): Spark sequence DESCENDS when start >
             # stop, so clamp then filter (winnowing does the same).
             F.posexplode(
@@ -688,16 +661,15 @@ def _window_hashes(docs: DataFrame, k: int, text_col: str,
         )
         .filter(F.col("p") <= F.col("nw"))
         .select(
-            id_col, "p",
+            "doc_id", "p",
             F.md5(F.array_join(F.slice("t", F.col("p"), F.lit(k)), " "))
             .alias("wh"),
         )
     )
 
 
-def duplicate_spans(docs: DataFrame, k: int = 16, min_count: int = 2,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def duplicate_spans(docs: DataFrame, k: int = 16,
+                    min_count: int = 2) -> DataFrame:
     """Maximal duplicated token spans per document: every k-token window
     whose hash occurs >= min_count times corpus-wide (within-doc repeats
     count, as in ExactSubstr) marks tokens [p, p+k-1]; overlapping or
@@ -713,13 +685,13 @@ def duplicate_spans(docs: DataFrame, k: int = 16, min_count: int = 2,
     boilerplate window shared by millions of docs costs one counter, not
     a candidate-pair explosion — and the island merge is a per-document
     SQL window (one shuffle on the doc id)."""
-    win = _window_hashes(docs, k, text_col, id_col)
+    win = _window_hashes(docs, k)
     dup = (
         win.groupBy("wh").agg(F.count("*").alias("c"))
         .filter(F.col("c") >= min_count).select("wh")
     )
-    dwin = win.join(dup, "wh").select(id_col, "p")
-    return _merge_islands(dwin, k, id_col)
+    dwin = win.join(dup, "wh").select("doc_id", "p")
+    return _merge_islands(dwin, k, "doc_id")
 
 
 def _merge_islands(dwin: DataFrame, k: int, id_col: str) -> DataFrame:
@@ -750,8 +722,7 @@ def _merge_islands(dwin: DataFrame, k: int, id_col: str) -> DataFrame:
     )
 
 
-def substr_state(corpus: DataFrame, k: int = 16, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def substr_state(corpus: DataFrame, k: int = 16) -> DataFrame:
     """Window-hash frequency state (wh, c) of a corpus — the compact
     representation `substr_increment` dedups new batches against without
     rescanning corpus text (same state-vs-text separation as
@@ -759,14 +730,13 @@ def substr_state(corpus: DataFrame, k: int = 16, text_col: str = "text",
     distinct windows — and partitionable by the hash). Build once at
     bootstrap; `substr_increment` returns the merged state."""
     return (
-        _window_hashes(corpus, k, text_col, id_col)
+        _window_hashes(corpus, k)
         .groupBy("wh").agg(F.count("*").alias("c"))
     )
 
 
-def substr_increment(state: DataFrame, batch: DataFrame, k: int = 16,
-                     min_count: int = 2, text_col: str = "text",
-                     id_col: str = "doc_id") -> tuple[DataFrame, DataFrame]:
+def substr_increment(state: DataFrame, batch: DataFrame,
+                     k: int = 16) -> tuple[DataFrame, DataFrame]:
     """Incremental ExactSubstr: duplicated spans of a NEW batch against
     corpus-so-far ∪ batch, touching only the batch's text and the state
     counts — never prior corpus text. Returns (spans_of_batch, state').
@@ -775,7 +745,7 @@ def substr_increment(state: DataFrame, batch: DataFrame, k: int = 16,
     oracle): when `state = substr_state(corpus)`, the returned spans
     equal `duplicate_spans(corpus ∪ batch)` restricted to batch docs —
     a batch window is duplicated iff its corpus-wide count (state +
-    batch occurrences) reaches min_count. The asymmetry is declared:
+    batch occurrences) reaches 2. The asymmetry is declared:
     spans of PRIOR docs whose windows only now became duplicated are not
     re-emitted (the production shape — admitted history is immutable;
     re-running the batch query over any later state recovers them).
@@ -784,16 +754,16 @@ def substr_increment(state: DataFrame, batch: DataFrame, k: int = 16,
     ONCE on the window hash restricted to the batch's hash set (semi
     side broadcast when the batch is small); the merge is one
     full-outer-shaped aggregation on the hash key."""
-    bwin = _window_hashes(batch, k, text_col, id_col)
+    bwin = _window_hashes(batch, k)
     bc = bwin.groupBy("wh").agg(F.count("*").alias("bc"))
     s_hits = state.join(F.broadcast(bc.select("wh")), "wh", "left_semi")
     dup = (
         bc.join(s_hits, "wh", "left")
-        .filter(F.col("bc") + F.coalesce("c", F.lit(0)) >= min_count)
+        .filter(F.col("bc") + F.coalesce("c", F.lit(0)) >= 2)
         .select("wh")
     )
     spans = _merge_islands(
-        bwin.join(dup, "wh").select(id_col, "p"), k, id_col)
+        bwin.join(dup, "wh").select("doc_id", "p"), k, "doc_id")
     new_state = (
         state.withColumnRenamed("c", "n").unionByName(
             bc.withColumnRenamed("bc", "n"))
@@ -802,9 +772,7 @@ def substr_increment(state: DataFrame, batch: DataFrame, k: int = 16,
     return spans, new_state
 
 
-def strip_duplicate_spans(docs: DataFrame, k: int = 16, min_count: int = 2,
-                          text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+def strip_duplicate_spans(docs: DataFrame, k: int = 16) -> DataFrame:
     """ExactSubstr's removal step: drop every token covered by a
     duplicated span and rebuild the text. Returns
     (id, n_tokens, n_kept, text_clean) — ExactSubstr likewise cuts the
@@ -814,11 +782,11 @@ def strip_duplicate_spans(docs: DataFrame, k: int = 16, min_count: int = 2,
     n_tokens/k maximal spans), the rebuild is row-local higher-order
     functions over the token array — no second explode, no join back per
     token."""
-    spans = duplicate_spans(docs, k, min_count, text_col, id_col)
-    span_arr = spans.groupBy(id_col).agg(
+    spans = duplicate_spans(docs, k, 2)
+    span_arr = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans"))
-    tok = tokens(F.col(text_col))
-    joined = docs.join(span_arr, id_col, "left")
+    tok = tokens(F.col("text"))
+    joined = docs.join(span_arr, "doc_id", "left")
     pos = F.transform(tok, lambda x, i: F.struct(x.alias("w"),
                                                  (i + 1).alias("p")))
     kept = F.when(F.col("_spans").isNull(), tok).otherwise(
@@ -835,16 +803,14 @@ def strip_duplicate_spans(docs: DataFrame, k: int = 16, min_count: int = 2,
         )
     )
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(tok).cast("long").alias("n_tokens"),
         F.size(kept).cast("long").alias("n_kept"),
         F.array_join(kept, " ").alias("text_clean"),
     )
 
 
-def corpus_overlap(docs: DataFrame, group_col: str = "source",
-                   shingle_k: int = 3, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def corpus_overlap(docs: DataFrame) -> DataFrame:
     """Cross-slice content overlap matrix — the corpus-analytics query a
     100-TB ingest answers before mixing sources ("how much of source B is
     already inside source A?"): for every pair of corpus slices, the
@@ -863,8 +829,8 @@ def corpus_overlap(docs: DataFrame, group_col: str = "source",
     result is L²/2 rows however large the corpus."""
     sh = (
         docs.select(
-            F.col(group_col).alias("grp"),
-            F.explode(shingles(tokens(F.col(text_col)), shingle_k))
+            F.col("source").alias("grp"),
+            F.explode(shingles(tokens(F.col("text")), 3))
             .alias("sh"),
         )
         .distinct()
@@ -909,9 +875,7 @@ def _slice_overlap_matrix(sh: DataFrame) -> DataFrame:
     )
 
 
-def substr_leakage_matrix(docs: DataFrame, group_col: str = "source",
-                          k: int = 16, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+def substr_leakage_matrix(docs: DataFrame, k: int = 16) -> DataFrame:
     """Cross-slice EXACT-SUBSTRING leakage matrix — `corpus_overlap` at
     ExactSubstr granularity: for every slice pair, the Jaccard and
     directional containments of their distinct k-token WINDOW-HASH sets
@@ -928,16 +892,15 @@ def substr_leakage_matrix(docs: DataFrame, group_col: str = "source",
     fans out by slices-containing-the-hash (≤ L²), never by document
     count. Output is L²/2 rows however large the corpus."""
     sh = (
-        _window_hashes(docs, k, text_col, id_col)
-        .join(docs.select(id_col, F.col(group_col).alias("grp")), id_col)
+        _window_hashes(docs, k)
+        .join(docs.select("doc_id", F.col("source").alias("grp")), "doc_id")
         .select("grp", F.col("wh").alias("sh"))
         .distinct()
     )
     return _slice_overlap_matrix(sh)
 
 
-def dedup_weights(docs: DataFrame, edges: DataFrame,
-                  id_col: str = "doc_id") -> DataFrame:
+def dedup_weights(docs: DataFrame, edges: DataFrame) -> DataFrame:
     """Soft deduplication — the keep-but-downweight alternative to hard
     removal (the SoftDeDup idea: duplicates carry signal about data
     distribution; dropping them shifts the mixture, so train on all of
@@ -950,15 +913,15 @@ def dedup_weights(docs: DataFrame, edges: DataFrame,
     Cost beyond the components fixpoint: one cluster-size aggregation
     and two left joins on the doc id."""
     comps = G.connected_components(edges) \
-        .withColumnRenamed("node", id_col)
+        .withColumnRenamed("node", "doc_id")
     sizes = comps.groupBy("component").agg(F.count("*").alias("_cs"))
     return (
-        docs.select(id_col)
-        .join(comps, id_col, "left")
+        docs.select("doc_id")
+        .join(comps, "doc_id", "left")
         .join(sizes, "component", "left")
         .select(
-            F.col(id_col),
-            F.coalesce("component", F.col(id_col)).alias("component"),
+            F.col("doc_id"),
+            F.coalesce("component", F.col("doc_id")).alias("component"),
             F.coalesce("_cs", F.lit(1)).cast("long").alias("cluster_size"),
             F.round(F.lit(1.0) / F.coalesce("_cs", F.lit(1)), 6)
             .alias("weight"),

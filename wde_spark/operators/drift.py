@@ -31,11 +31,11 @@ from pyspark.sql import functions as F
 from ..functions.strings import tokens
 
 
-def term_distribution(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def term_distribution(docs: DataFrame) -> DataFrame:
     """(term, cnt, p) over whitespace tokens of the lowercased text —
     one explode + one hash agg + one scalar total."""
     t = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("term"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term").agg(F.count("*").alias("cnt"))
     )
@@ -96,24 +96,19 @@ def corpus_divergence(dist_a: DataFrame, dist_b: DataFrame) -> DataFrame:
     )
 
 
-def version_drift(spark, target_dir: str, n_a: int, n_b: int,
-                  subdir: str = "corpus",
-                  text_col: str = "text") -> DataFrame:
+def version_drift(spark, target_dir: str, n_a: int, n_b: int) -> DataFrame:
     """Drift between two ledger versions of a maintained corpus — the
     composition a quality dashboard queries after each admission batch:
     `version_drift(spark, dir, n-1, n)`."""
     from ..streaming.versions import read_version
 
     return corpus_divergence(
-        term_distribution(read_version(spark, target_dir, n_a, subdir),
-                          text_col),
-        term_distribution(read_version(spark, target_dir, n_b, subdir),
-                          text_col),
+        term_distribution(read_version(spark, target_dir, n_a, "corpus")),
+        term_distribution(read_version(spark, target_dir, n_b, "corpus")),
     )
 
 
-def drift_history(spark, target_dir: str, subdir: str = "corpus",
-                  text_col: str = "text") -> DataFrame:
+def drift_history(spark, target_dir: str) -> DataFrame:
     """One row per version TRANSITION of a maintained corpus ledger:
     (from_version, to_version, jsd, l1, n_terms_a, n_terms_b,
     n_terms_common) for v0→v1, v1→v2, … — the full drift trajectory a
@@ -136,7 +131,7 @@ def drift_history(spark, target_dir: str, subdir: str = "corpus",
     rows = []
     for a, b in zip(hist, hist[1:]):
         rows.append(
-            version_drift(spark, target_dir, a, b, subdir, text_col)
+            version_drift(spark, target_dir, a, b)
             .select(F.lit(a).cast("long").alias("from_version"),
                     F.lit(b).cast("long").alias("to_version"),
                     "jsd", "l1", "n_terms_a", "n_terms_b", "n_terms_common"))

@@ -37,9 +37,7 @@ from pyspark.sql import functions as F
 from .lm_score import _bigram_table, lm_vocab_size
 
 
-def shared_vocab(target_docs: DataFrame, raw_docs: DataFrame,
-                 text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def shared_vocab(target_docs: DataFrame, raw_docs: DataFrame) -> DataFrame:
     """The union bigram-word vocabulary of both training sets as a 1-row
     (v) DataFrame — the event space BOTH models must be smoothed over
     for their scores to be comparable (DSIR's equal-dimension hashed
@@ -51,7 +49,7 @@ def shared_vocab(target_docs: DataFrame, raw_docs: DataFrame,
     it to `dsir_logratio(..., vocab=...)` so the unseen-context floors
     cancel too."""
     def words(docs: DataFrame) -> DataFrame:
-        bg = _bigram_table(docs, text_col, id_col)
+        bg = _bigram_table(docs)
         return bg.select(F.col("w1").alias("w")) \
             .union(bg.select(F.col("w2").alias("w")))
 
@@ -59,8 +57,8 @@ def shared_vocab(target_docs: DataFrame, raw_docs: DataFrame,
         .agg(F.count("*").alias("v"))
 
 
-def _lm_sides(lm: DataFrame, tag: str,
-              broadcast_lm: bool) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _lm_sides(lm: DataFrame,
+              tag: str) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(seen, floor, vocab) join sides of a trained LM, tagged to keep the
     two models' columns apart in one plan."""
     seen = lm.filter(F.col("w2").isNotNull()) \
@@ -68,14 +66,11 @@ def _lm_sides(lm: DataFrame, tag: str,
     floor = lm.filter(F.col("w2").isNull()) \
         .select("w1", F.col("logp").alias(f"fl_{tag}"))
     vdf = lm_vocab_size(lm).select(F.col("v").alias(f"v_{tag}"))
-    if broadcast_lm:
-        seen, floor = F.broadcast(seen), F.broadcast(floor)
+    seen, floor = F.broadcast(seen), F.broadcast(floor)
     return seen, floor, vdf
 
 
 def dsir_logratio(docs: DataFrame, target_lm: DataFrame, raw_lm: DataFrame,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  broadcast_lm: bool = True,
                   vocab: DataFrame | None = None) -> DataFrame:
     """(id, n_bigrams, log_ratio): log_ratio = Σ_bigrams [ln p_target −
     ln p_raw] with each model's two-step back-off (observed bigram →
@@ -91,9 +86,9 @@ def dsir_logratio(docs: DataFrame, target_lm: DataFrame, raw_lm: DataFrame,
     vocabulary size and a smaller target model biases the ratio upward
     per token (see `shared_vocab`); the production composition always
     passes it."""
-    bg = _bigram_table(docs, text_col, id_col)
-    seen_t, floor_t, v_t = _lm_sides(target_lm, "t", broadcast_lm)
-    seen_r, floor_r, v_r = _lm_sides(raw_lm, "r", broadcast_lm)
+    bg = _bigram_table(docs)
+    seen_t, floor_t, v_t = _lm_sides(target_lm, "t")
+    seen_r, floor_r, v_r = _lm_sides(raw_lm, "r")
     if vocab is not None:
         v_t = vocab.select(F.col("v").alias("v_t"))
         v_r = vocab.select(F.col("v").alias("v_r"))
@@ -105,7 +100,7 @@ def dsir_logratio(docs: DataFrame, target_lm: DataFrame, raw_lm: DataFrame,
         .crossJoin(F.broadcast(v_t))
         .crossJoin(F.broadcast(v_r))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             (F.coalesce(F.col("lp_t"), F.col("fl_t"),
                         -F.log(F.col("v_t") + 1))
              - F.coalesce(F.col("lp_r"), F.col("fl_r"),
@@ -113,15 +108,15 @@ def dsir_logratio(docs: DataFrame, target_lm: DataFrame, raw_lm: DataFrame,
         )
     )
     return (
-        docs.select(id_col)
+        docs.select("doc_id")
         .join(
-            scored.groupBy(id_col).agg(
+            scored.groupBy("doc_id").agg(
                 F.count("*").alias("n_bigrams"),
                 F.round(F.sum("d"), 6).alias("log_ratio"),
             ),
-            id_col, "left")
+            "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             "log_ratio",
         )
@@ -142,8 +137,8 @@ def gumbel_noise(id_expr: Column, salt: str = "dsir") -> Column:
     return -F.log(-F.log(u))
 
 
-def dsir_sample(ratios: DataFrame, k: int = 100, temperature: float = 1.0,
-                salt: str = "dsir", id_col: str = "doc_id") -> DataFrame:
+def dsir_sample(ratios: DataFrame, k: int = 100,
+                temperature: float = 1.0) -> DataFrame:
     """Gumbel top-k selection over `dsir_logratio` output: keep the k
     docs maximizing sel_key = log_ratio + temperature·G_id. temperature
     scales exploration (0 → hard top-k by ratio; 1 → exact importance
@@ -153,8 +148,8 @@ def dsir_sample(ratios: DataFrame, k: int = 100, temperature: float = 1.0,
     to a length filter, not a preference judgment."""
     key = F.round(
         F.col("log_ratio")
-        + F.lit(temperature) * gumbel_noise(F.col(id_col), salt), 6)
-    w = Window.orderBy(F.desc("sel_key"), F.asc(id_col))
+        + F.lit(temperature) * gumbel_noise(F.col("doc_id"), "dsir"), 6)
+    w = Window.orderBy(F.desc("sel_key"), F.asc("doc_id"))
     return (
         ratios.filter(F.col("log_ratio").isNotNull())
         .withColumn("sel_key", key)
@@ -164,9 +159,7 @@ def dsir_sample(ratios: DataFrame, k: int = 100, temperature: float = 1.0,
     )
 
 
-def _doremi_domain_stats(ratios: DataFrame, docs: DataFrame,
-                         id_col: str = "doc_id",
-                         domain_col: str = "source"):
+def _doremi_domain_stats(ratios: DataFrame, docs: DataFrame):
     """(per, tot): per-domain doc/bigram counts + mean clipped per-bigram
     excess (rounded 6 dp so both engines exp the same double), and the
     one-row bigram grand total. One corpus join + one per-domain agg —
@@ -177,8 +170,8 @@ def _doremi_domain_stats(ratios: DataFrame, docs: DataFrame,
     joins, so without the checkpoint every normalizer would re-run the
     corpus-sized ratio join (1 + steps corpus passes instead of one)."""
     scored = ratios.filter(F.col("n_bigrams") > 0).join(
-        docs.select(id_col, domain_col), id_col)
-    per = scored.groupBy(domain_col).agg(
+        docs.select("doc_id", "source"), "doc_id")
+    per = scored.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_bigrams").alias("nb_dom"),
         F.round(F.avg(F.greatest(
@@ -189,9 +182,7 @@ def _doremi_domain_stats(ratios: DataFrame, docs: DataFrame,
     return per, tot
 
 
-def doremi_schedule(ratios: DataFrame, docs: DataFrame, eta: float = 1.0,
-                    steps: int = 3, id_col: str = "doc_id",
-                    domain_col: str = "source") -> DataFrame:
+def doremi_schedule(ratios: DataFrame, docs: DataFrame) -> DataFrame:
     """DoReMi's FULL exponentiated-gradient schedule (Xie et al. NeurIPS
     2023, Algorithm 1), pinned to `steps` unrolled updates — the same
     pinned-iteration discipline as the k-means / PCA / BPE trainers. The
@@ -208,7 +199,8 @@ def doremi_schedule(ratios: DataFrame, docs: DataFrame, eta: float = 1.0,
     per-domain agg, then `steps` one-row normalizer broadcasts over a
     domain-count-sized frame (single digits); the unroll costs no extra
     corpus passes."""
-    per, tot = _doremi_domain_stats(ratios, docs, id_col, domain_col)
+    steps = 3
+    per, tot = _doremi_domain_stats(ratios, docs)
     # per/tot are domain-count-sized (single-digit rows) but their plans
     # embed the whole corpus join + LM-ratio scoring; every unrolled
     # step references them on BOTH sides of a broadcast normalizer, so
@@ -225,7 +217,7 @@ def doremi_schedule(ratios: DataFrame, docs: DataFrame, eta: float = 1.0,
     )
     for t in range(1, steps + 1):
         u = cur.withColumn(
-            "_u", F.col(f"w{t - 1}") * F.exp(F.lit(eta)
+            "_u", F.col(f"w{t - 1}") * F.exp(F.lit(1.0)
                                              * F.col("avg_excess")))
         z = u.agg(F.sum("_u").alias("_z"))
         cur = (
@@ -236,7 +228,7 @@ def doremi_schedule(ratios: DataFrame, docs: DataFrame, eta: float = 1.0,
     step_cols = [F.col(f"w{t}") for t in range(1, steps + 1)]
     avg = sum(step_cols[1:], step_cols[0]) / float(steps)
     return cur.select(
-        domain_col,
+        "source",
         F.col("n_docs").cast("long").alias("n_docs"),
         "avg_excess",
         F.col("w0").alias("baseline_share"),
@@ -245,9 +237,7 @@ def doremi_schedule(ratios: DataFrame, docs: DataFrame, eta: float = 1.0,
     )
 
 
-def doremi_weights(ratios: DataFrame, docs: DataFrame, eta: float = 1.0,
-                   id_col: str = "doc_id",
-                   domain_col: str = "source") -> DataFrame:
+def doremi_weights(ratios: DataFrame, docs: DataFrame) -> DataFrame:
     """DoReMi-style domain reweighting (Xie et al., "DoReMi: Optimizing
     Data Mixtures Speeds Up Language Model Pretraining", NeurIPS 2023),
     relationalized to ONE exponentiated-gradient step over the DSIR
@@ -266,20 +256,20 @@ def doremi_weights(ratios: DataFrame, docs: DataFrame, eta: float = 1.0,
     everything after the first agg is bounded model state. The excess is
     rounded to 6 dp BEFORE the exp so the weights are engine-replayable
     (both engines exp the same double)."""
-    per, tot = _doremi_domain_stats(ratios, docs, id_col, domain_col)
+    per, tot = _doremi_domain_stats(ratios, docs)
     u = (
         per.crossJoin(F.broadcast(tot))
         .withColumn("share",
                     F.col("nb_dom").cast("double") / F.col("nb_tot"))
         .withColumn("u",
-                    F.col("share") * F.exp(F.lit(eta)
+                    F.col("share") * F.exp(F.lit(1.0)
                                            * F.col("avg_excess")))
     )
     z = u.agg(F.sum("u").alias("z"))
     return (
         u.crossJoin(F.broadcast(z))
         .select(
-            domain_col,
+            "source",
             F.col("n_docs").cast("long").alias("n_docs"),
             "avg_excess",
             F.round("share", 6).alias("baseline_share"),

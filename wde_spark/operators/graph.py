@@ -32,10 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(edges: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iter: int = 20,
-                         algorithm: str = "auto",
-                         escalate_after: int = 6) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20,
+                         algorithm: str = "auto") -> DataFrame:
     """(node, component) for every node in `edges`; component = min node id
     reachable. Deterministic for any input order.
 
@@ -45,7 +43,7 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
       "star"  — large-star/small-star, O(log n) rounds, diameter-proof.
       "auto"  — label propagation first (cheapest for the dedup-clique
                 graphs this operator exists for: diameter 1-2), escalating
-                to the star algorithm after `escalate_after` rounds
+                to the star algorithm after 6 rounds
                 without convergence. A clique graph certifies its seed in
                 1 round; a graph still moving after 6 is chain-shaped and
                 every further label round is a shuffle the star algorithm
@@ -65,11 +63,11 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
     # whole upstream runs twice before the first round starts.
     edges = edges.localCheckpoint(eager=True)
     if algorithm == "star":
-        return connected_components_star(edges, id_a, id_b)
+        return connected_components_star(edges)
     try:
         budget = max_iter if algorithm == "label" \
-            else min(max_iter, escalate_after)
-        return _connected_components_label(edges, id_a, id_b, budget)
+            else min(max_iter, 6)
+        return _connected_components_label(edges, budget)
     except _NonConvergence as nc:
         if algorithm == "label":
             raise RuntimeError(
@@ -77,8 +75,8 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
                 f"rounds (component diameter exceeds max_iter); raise "
                 f"max_iter or use algorithm='star'") from None
         if nc.labels is None:
-            return connected_components_star(edges, id_a, id_b)
-        # Label-seeded contraction (r12): the escalate_after label rounds
+            return connected_components_star(edges)
+        # Label-seeded contraction (r12): the 6 label rounds
         # already computed, for every node, the min id within its k-hop
         # neighborhood.  The invariant that makes contraction sound is
         # NOT that label classes are connected (propagation shifts labels
@@ -96,10 +94,11 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
         la = lab.select(F.col("node").alias("__n"), F.col("label").alias("__la"))
         lb = lab.select(F.col("node").alias("__m"), F.col("label").alias("__lb"))
         contracted = (
-            edges.select(F.col(id_a).alias("__n"), F.col(id_b).alias("__m"))
+            edges.select(F.col("id_a").alias("__n"),
+                         F.col("id_b").alias("__m"))
             .join(la, "__n").join(lb, "__m")
             .filter(F.col("__la") != F.col("__lb"))
-            .select(F.col("__la").alias(id_a), F.col("__lb").alias(id_b))
+            .select(F.col("__la").alias("id_a"), F.col("__lb").alias("id_b"))
             .distinct()
         )
         # Materialize once: star eagerly evaluates its input twice (both
@@ -107,7 +106,7 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
         # two label joins + distinct above — the module's own
         # materialize-once discipline applies to the contraction too.
         contracted = contracted.localCheckpoint(eager=True)
-        comp = connected_components_star(contracted, id_a, id_b)
+        comp = connected_components_star(contracted)
         # Expand: component(node) = star_component(label(node)); label
         # classes whose whole component collapsed within the label rounds
         # have no contracted edges and keep their label as the component.
@@ -130,13 +129,12 @@ class _NonConvergence(Exception):
         self.labels = labels
 
 
-def _connected_components_label(edges: DataFrame, id_a: str, id_b: str,
-                                max_iter: int) -> DataFrame:
+def _connected_components_label(edges: DataFrame, max_iter: int) -> DataFrame:
     # checkpoint the symmetrized edge table ONCE — every round joins it
     sym = edges.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(
-        edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+        edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     ).distinct().localCheckpoint(eager=True)
     # seed label = min(self, neighborhood) — one groupBy on the edge table
     # we already shuffle anyway.  For the clique-shaped graphs near-dup
@@ -183,9 +181,7 @@ def _connected_components_label(edges: DataFrame, id_a: str, id_b: str,
     return labels.select("node", F.col("label").alias("component"))
 
 
-def connected_components_star(edges: DataFrame, id_a: str = "id_a",
-                              id_b: str = "id_b",
-                              max_iter: int = 64) -> DataFrame:
+def connected_components_star(edges: DataFrame) -> DataFrame:
     """Two-phase large-star/small-star connected components (Kiveris et
     al., SOCC'14 §3). Converges in O(log n) alternations for ANY graph
     shape — a 1,000-node path closes in ~10 rounds where min-label
@@ -201,14 +197,15 @@ def connected_components_star(edges: DataFrame, id_a: str = "id_a",
     points to a single root, no root is a child), which two cheap scalar
     aggregates certify per round — no hash digests, no anti-joins.
     """
+    max_iter = 64
     nodes = (
-        edges.select(F.col(id_a).alias("node"))
-        .unionByName(edges.select(F.col(id_b).alias("node")))
+        edges.select(F.col("id_a").alias("node"))
+        .unionByName(edges.select(F.col("id_b").alias("node")))
         .distinct().localCheckpoint(eager=True)
     )
     # canonical (hi → lo) edges, hi > lo; self-loops carry no connectivity
     e = (
-        edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+        edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.greatest("a", "b").alias("hi"),
                 F.least("a", "b").alias("lo"))

@@ -83,7 +83,7 @@ class IncrementResult(NamedTuple):
     batch_bands: DataFrame | None = None
 
 
-def _fingerprints(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _fingerprints(docs: DataFrame) -> DataFrame:
     # NULL text → sentinel, not NULL: `exact_dedup`'s groupBy(fp) puts all
     # NULL-text docs in ONE group, but an equi-join on fp can never match
     # NULL to NULL — without the sentinel a batch NULL-text doc would miss
@@ -91,45 +91,39 @@ def _fingerprints(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # on exactly that row. The sentinel is used consistently on both sides
     # of the increment (state build + batch), never by `exact_dedup` itself.
     return docs.select(
-        F.col(id_col),
-        F.coalesce(F.md5(norm_compare(F.col(text_col))),
+        F.col("doc_id"),
+        F.coalesce(F.md5(norm_compare(F.col("text"))),
                    F.lit("__wde_null_text__")).alias("fp"))
 
 
-def _resolve_bands(bands: int | str, num_hashes: int,
-                   target_similarity: float) -> int:
+def _resolve_bands(bands: int | str, num_hashes: int) -> int:
     """`bands="auto"` → the S-curve chooser (`dedup.lsh_params_for`), the
     same default resolution `dedup_corpus` uses — state built here and a
     corpus deduped there agree on banding by construction."""
     if bands == "auto":
-        bands, _ = lsh_params_for(target_similarity, num_hashes)
+        bands, _ = lsh_params_for(0.7, num_hashes)
     return bands
 
 
-def dedup_state(kept: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", num_hashes: int = 16,
-                bands: int | str = "auto", shingle_k: int = 2,
-                target_similarity: float = 0.7) -> DedupState:
+def dedup_state(kept: DataFrame, num_hashes: int = 16,
+                bands: int | str = "auto", shingle_k: int = 2) -> DedupState:
     """Build dedup state from an already-KEPT corpus (one full scan — run
     once at bootstrap; afterwards `dedup_increment` maintains it without
     touching corpus text). Parameters must match the `dedup_corpus` run
     that produced `kept` — both default banding to the S-curve chooser,
     so the defaults agree by construction."""
-    bands = _resolve_bands(bands, num_hashes, target_similarity)
+    bands = _resolve_bands(bands, num_hashes)
     return DedupState(
-        fingerprints=_fingerprints(kept, text_col, id_col),
-        bands=lsh_band_table(kept, text_col, id_col, num_hashes, bands,
-                             shingle_k),
+        fingerprints=_fingerprints(kept),
+        bands=lsh_band_table(kept, num_hashes, bands, shingle_k),
     )
 
 
 def dedup_increment(corpus: DataFrame, batch: DataFrame,
-                    state: DedupState | None = None,
-                    text_col: str = "text", id_col: str = "doc_id",
-                    num_hashes: int = 16, bands: int | str = "auto",
-                    shingle_k: int = 2, threshold: float = 0.2,
-                    max_bucket: int | None = 64,
-                    target_similarity: float = 0.7) -> IncrementResult:
+                    state: DedupState | None = None, num_hashes: int = 16,
+                    bands: int | str = "auto", shingle_k: int = 2,
+                    threshold: float = 0.2,
+                    max_bucket: int | None = 64) -> IncrementResult:
     """Admit `batch` into the deduplicated `corpus`.
 
     `corpus` is the current KEPT document table (text is consulted only
@@ -143,10 +137,9 @@ def dedup_increment(corpus: DataFrame, batch: DataFrame,
     corpus (min-id winner selection is undefined under collisions), and
     `corpus`/`state` were produced with the same parameters.
     """
-    bands = _resolve_bands(bands, num_hashes, target_similarity)
+    bands = _resolve_bands(bands, num_hashes)
     if state is None:
-        state = dedup_state(corpus, text_col, id_col, num_hashes, bands,
-                            shingle_k)
+        state = dedup_state(corpus, num_hashes, bands, shingle_k)
 
     # ---- tier 1: exact. One semi-join pass over state fingerprints against
     # the batch's fp set; winners are global min-ids, exactly as the full
@@ -157,19 +150,20 @@ def dedup_increment(corpus: DataFrame, batch: DataFrame,
     # without lineage truncation every reference would re-expand the whole
     # upstream subtree and driver-side ANALYSIS, not execution, would
     # dominate an increment (measured 10×+ on tools/stress_incremental.py).
-    b_fp = _fingerprints(batch, text_col, id_col).localCheckpoint()
+    b_fp = _fingerprints(batch).localCheckpoint()
     s_hits = state.fingerprints.join(
         F.broadcast(b_fp.select("fp").distinct()), "fp", "left_semi")
     all_fp = b_fp.withColumn("__src", F.lit("b")).unionByName(
         s_hits.withColumn("__src", F.lit("s")))
     fp_groups = all_fp.groupBy("fp").agg(
-        F.min(id_col).alias("win_id"),
-        F.min_by("__src", F.struct(F.col(id_col), F.col("__src"))).alias("win_src"),
+        F.min("doc_id").alias("win_id"),
+        F.min_by("__src", F.struct(F.col("doc_id"), F.col("__src")))
+        .alias("win_src"),
     )
     # corpus docs whose fp group is won by a smaller-id batch doc
     exact_revoked = (
         s_hits.join(fp_groups.filter(F.col("win_src") == "b"), "fp", "inner")
-        .select(F.col(id_col))
+        .select(F.col("doc_id"))
         .localCheckpoint()  # reused 3×
     )
     # batch docs that win their fp group (vs both corpus twins and
@@ -177,23 +171,23 @@ def dedup_increment(corpus: DataFrame, batch: DataFrame,
     b_surv_ids = (
         b_fp.join(fp_groups.filter(F.col("win_src") == "b")
                   .select("fp", "win_id"), "fp")
-        .filter(F.col(id_col) == F.col("win_id"))
-        .select(F.col(id_col))
+        .filter(F.col("doc_id") == F.col("win_id"))
+        .select(F.col("doc_id"))
     )
-    survivors = batch.join(b_surv_ids, id_col, "left_semi").localCheckpoint()
+    survivors = batch.join(b_surv_ids, "doc_id", "left_semi").localCheckpoint()
 
     # ---- tier 2: LSH candidates. Batch bands are computed fresh; the state
     # band table is reduced FIRST to buckets the batch touches (broadcast
     # semi-join on band keys — the state side never shuffles), minus docs
     # the exact tier just revoked.
-    sh_b = distinct_shingle_table(survivors, text_col, id_col, shingle_k) \
+    sh_b = distinct_shingle_table(survivors, shingle_k) \
         .localCheckpoint()
-    bands_b = lsh_band_table(survivors, text_col, id_col, num_hashes, bands,
+    bands_b = lsh_band_table(survivors, num_hashes, bands,
                              shingle_k, shingle_table=sh_b) \
         .localCheckpoint()
     s_bands_hit = (
         state.bands
-        .join(exact_revoked, id_col, "left_anti")
+        .join(exact_revoked, "doc_id", "left_anti")
         .join(F.broadcast(bands_b.select("band_idx", "band_hash").distinct()),
               ["band_idx", "band_hash"], "left_semi")
     )
@@ -216,24 +210,24 @@ def dedup_increment(corpus: DataFrame, batch: DataFrame,
     cand = (
         a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
                & (F.col("a.band_hash") == F.col("b.band_hash"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+               & (F.col("a.doc_id") < F.col("b.doc_id"))
                # at least one batch side: corpus-corpus pairs were already
                # adjudicated when the corpus was deduplicated
                & ((F.col("a.__src") == "b") | (F.col("b.__src") == "b")))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"))
+        .select(F.col("a.doc_id").alias("id_a"),
+                F.col("b.doc_id").alias("id_b"))
         .distinct()
         .localCheckpoint()  # feeds ids, inter, edges
     )
 
     # ---- tier 3: exact-Jaccard verification. Corpus text is consulted only
     # for docs that actually appear in a candidate pair.
-    cand_ids = cand.select(F.col("id_a").alias(id_col)).unionByName(
-        cand.select(F.col("id_b").alias(id_col))).distinct()
-    s_cand_docs = corpus.join(F.broadcast(cand_ids), id_col, "left_semi")
+    cand_ids = cand.select(F.col("id_a").alias("doc_id")).unionByName(
+        cand.select(F.col("id_b").alias("doc_id"))).distinct()
+    s_cand_docs = corpus.join(F.broadcast(cand_ids), "doc_id", "left_semi")
     sh_all = sh_b.unionByName(
-        distinct_shingle_table(s_cand_docs, text_col, id_col, shingle_k))
-    edges = _jaccard_verify(sh_all, id_col, threshold, cand) \
+        distinct_shingle_table(s_cand_docs, shingle_k))
+    edges = _jaccard_verify(sh_all, threshold, cand) \
         .select("id_a", "id_b")
 
     # ---- tier 4: components over the verified edges. A batch doc adjacent
@@ -241,25 +235,25 @@ def dedup_increment(corpus: DataFrame, batch: DataFrame,
     # across the whole component, as in the full pipeline.
     comps = G.connected_components(edges)
     losers = comps.filter(F.col("node") != F.col("component")) \
-        .select(F.col("node").alias(id_col)) \
+        .select(F.col("node").alias("doc_id")) \
         .localCheckpoint()  # reused by revoke + keep
     near_revoked = losers.join(
-        corpus.select(id_col), id_col, "left_semi")
-    kept = survivors.join(losers, id_col, "left_anti")
+        corpus.select("doc_id"), "doc_id", "left_semi")
+    kept = survivors.join(losers, "doc_id", "left_anti")
 
     revoked = exact_revoked.unionByName(near_revoked).distinct()
 
     # ---- state': drop revoked corpus rows, append the admitted batch rows
     # (their fp/band rows are already computed — reuse, don't re-derive).
-    kept_ids = kept.select(id_col)
+    kept_ids = kept.select("doc_id")
     new_state = DedupState(
         fingerprints=state.fingerprints
-        .join(revoked, id_col, "left_anti")
-        .unionByName(b_fp.select(id_col, "fp")
-                     .join(kept_ids, id_col, "left_semi")),
+        .join(revoked, "doc_id", "left_anti")
+        .unionByName(b_fp.select("doc_id", "fp")
+                     .join(kept_ids, "doc_id", "left_semi")),
         bands=state.bands
-        .join(revoked, id_col, "left_anti")
-        .unionByName(bands_b.join(kept_ids, id_col, "left_semi")),
+        .join(revoked, "doc_id", "left_anti")
+        .unionByName(bands_b.join(kept_ids, "doc_id", "left_semi")),
     )
     return IncrementResult(kept=kept, revoked=revoked, state=new_state,
                            batch_fp=b_fp, batch_bands=bands_b)

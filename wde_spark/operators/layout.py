@@ -24,11 +24,11 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
-def zorder_value(a: str, b: str, bits: int = 16) -> Column:
+def zorder_value(a: str, b: str) -> Column:
     """Morton/Z-curve value interleaving the low `bits` bits of two
     non-negative integer column expressions (SQL strings). Row-local — a
     pure expression, no shuffle; 2×`bits` output bits must fit a long."""
-    assert 1 <= bits <= 31
+    bits = 16
     return F.expr(
         f"""
         aggregate(
@@ -40,34 +40,30 @@ def zorder_value(a: str, b: str, bits: int = 16) -> Column:
     )
 
 
-def write_zordered(
-    df: DataFrame, out: str, a: str, b: str,
-    n_files: int = 16, bits: int = 16,
-) -> None:
-    """Cluster `df` on the Z-curve of (a, b) and write `n_files` parquet
+def write_zordered(df: DataFrame, out: str, a: str, b: str) -> None:
+    """Cluster `df` on the Z-curve of (a, b) and write 16 parquet
     files: range-partition on the z-value (each file owns a contiguous
     curve segment → tight min/max on BOTH source columns), sort within each
     file (tight row-group stats too), then drop the helper column — the
     projection is narrow, so the clustering survives the write."""
     (
-        df.withColumn("_z", zorder_value(a, b, bits))
-        .repartitionByRange(n_files, "_z")
+        df.withColumn("_z", zorder_value(a, b))
+        .repartitionByRange(16, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
         .write.mode("overwrite").parquet(out)
     )
 
 
-def global_prefix_sum(df: DataFrame, weight_col, id_col: str = "doc_id",
-                      salt: str = "wde", n_buckets: int = 256,
+def global_prefix_sum(df: DataFrame, weight_col, salt: str = "wde",
                       share_pass: bool = False) -> DataFrame:
     """Distributed EXCLUSIVE prefix sum of `weight_col` under the total
-    order of a salted md5 of `id_col` — the primitive behind global
+    order of a salted md5 of `doc_id` — the primitive behind global
     ranking (`export_shards`, weight 1) and token-stream packing
     (`pack_stream`, weight = token count). Scale-safe two-phase form:
 
       1. bucket = hash prefix (one scan);
-      2. per-bucket weight totals -> driver (n_buckets rows) ->
+      2. per-bucket weight totals -> driver (256 rows) ->
          exclusive bucket offsets rejoined broadcast;
       3. running sum INSIDE each bucket (window PARTITIONED BY bucket);
       4. start = bucket offset + in-bucket running sum − own weight.
@@ -75,8 +71,7 @@ def global_prefix_sum(df: DataFrame, weight_col, id_col: str = "doc_id",
     Equivalent to SUM(w) OVER (ORDER BY hash) − w because bucket order
     is the hash's own prefix order. Adds columns `start` (long,
     exclusive prefix sum) and `_w` is consumed; `weight_col` may be any
-    Column expression. At 100 TB raise `n_buckets` so buckets stay
-    executor-sized; the driver still sees only n_buckets rows.
+    Column expression. The driver sees only the 256 bucket rows.
 
     `share_pass=True` persists the keyed frame so df's upstream pipeline
     (and the weight expression) evaluates ONCE, serving both the eager
@@ -87,9 +82,9 @@ def global_prefix_sum(df: DataFrame, weight_col, id_col: str = "doc_id",
     scan — re-reading one parquet column is cheaper than building the
     cache (measured; same trade as the curriculum staging cache)."""
     hx = F.md5(F.concat(F.lit(salt + "|"),
-                        F.col(id_col).cast("string")))
+                        F.col("doc_id").cast("string")))
     plen = 1
-    while 16 ** plen < n_buckets:
+    while 16 ** plen < 256:
         plen += 1
     wcol = weight_col if not isinstance(weight_col, str) \
         else F.col(weight_col)
@@ -108,7 +103,7 @@ def global_prefix_sum(df: DataFrame, weight_col, id_col: str = "doc_id",
         acc += t
     spark = df.sparkSession
     off_df = spark.createDataFrame(offs, "_bkt string, _off long")
-    w = Window.partitionBy("_bkt").orderBy("_hx", id_col) \
+    w = Window.partitionBy("_bkt").orderBy("_hx", "doc_id") \
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
         keyed.join(F.broadcast(off_df), "_bkt")
@@ -119,9 +114,7 @@ def global_prefix_sum(df: DataFrame, weight_col, id_col: str = "doc_id",
     )
 
 
-def export_shards(df: DataFrame, docs_per_shard: int,
-                  id_col: str = "doc_id", salt: str = "wde",
-                  n_buckets: int = 256) -> DataFrame:
+def export_shards(df: DataFrame, docs_per_shard: int) -> DataFrame:
     """Deterministic GLOBAL SHUFFLE + fixed-size shard assignment — the
     last stage of a training-data pipeline (docs leave the engine as
     uniformly shuffled, reproducible shards; a model's data order must
@@ -134,7 +127,7 @@ def export_shards(df: DataFrame, docs_per_shard: int,
     (the scale-safe two-phase form, never a single-partition window):
     rank = exclusive prefix count + 1."""
     assert docs_per_shard > 0
-    ranked = global_prefix_sum(df, F.lit(1), id_col, salt, n_buckets) \
+    ranked = global_prefix_sum(df, F.lit(1), "wde") \
         .withColumn("global_rank", (F.col("start") + 1).cast("long")) \
         .drop("start")
     return (
@@ -148,10 +141,10 @@ def export_shards(df: DataFrame, docs_per_shard: int,
     )
 
 
-def rendezvous_shard(id_col, n_shards: int, salt: str = "hrw"):
+def rendezvous_shard(id_col, n_shards: int):
     """Highest-random-weight (rendezvous) shard assignment as a pure
     Column: shard = argmax over s in [0, n_shards) of
-    md5(salt|id|s). Stateless routing with the HRW minimal-movement
+    md5('hrw'|id|s). Stateless routing with the HRW minimal-movement
     guarantee — growing to n+1 shards moves exactly the keys whose new
     top scorer is the added shard (an expected 1/(n+1) fraction), and
     nothing moves between surviving shards. At 100 TB that is the
@@ -166,7 +159,7 @@ def rendezvous_shard(id_col, n_shards: int, salt: str = "hrw"):
     assert 2 <= n_shards <= 64
     scores = [
         F.concat(
-            F.md5(F.concat(F.lit(f"{salt}|"), F.col(id_col).cast("string"),
+            F.md5(F.concat(F.lit("hrw|"), F.col(id_col).cast("string"),
                            F.lit(f"|{s}"))),
             F.lit(f"{s:02d}"))
         for s in range(n_shards)
@@ -174,9 +167,7 @@ def rendezvous_shard(id_col, n_shards: int, salt: str = "hrw"):
     return F.substring(F.array_max(F.array(*scores)), 33, 2).cast("int")
 
 
-def pack_stream(docs: DataFrame, seq_len: int, weight_col: str = "n_tok",
-                id_col: str = "doc_id", salt: str = "pack",
-                n_buckets: int = 256) -> DataFrame:
+def pack_stream(docs: DataFrame, seq_len: int) -> DataFrame:
     """Concat-and-chunk sequence packing — THE pre-training batch layout
     (GPT-2/3 style): all documents concatenate into one deterministic
     token stream (salted-hash order, engine/cluster-size independent)
@@ -196,11 +187,10 @@ def pack_stream(docs: DataFrame, seq_len: int, weight_col: str = "n_tok",
     verifiable against a naive SQL running sum. Zero-token docs carry no
     stream mass and are dropped (no position to assign)."""
     assert seq_len > 0
-    ps = global_prefix_sum(docs, weight_col, id_col, salt, n_buckets,
-                           share_pass=True)
+    ps = global_prefix_sum(docs, "n_tok", "pack", share_pass=True)
     e = (
-        ps.filter(F.col(weight_col) > 0)
-        .withColumn("_end", F.col("start") + F.col(weight_col))
+        ps.filter(F.col("n_tok") > 0)
+        .withColumn("_end", F.col("start") + F.col("n_tok"))
         .withColumn("_w0", F.floor(F.col("start") / seq_len).cast("long"))
         .withColumn("_w1",
                     F.floor((F.col("_end") - 1) / seq_len).cast("long"))
@@ -209,10 +199,10 @@ def pack_stream(docs: DataFrame, seq_len: int, weight_col: str = "n_tok",
     lo = F.greatest(F.col("start"), F.col("seq_id") * seq_len)
     hi = F.least(F.col("_end"), (F.col("seq_id") + 1) * seq_len)
     return (
-        e.select(F.col(id_col), "start", "_end", seq)
+        e.select(F.col("doc_id"), "start", "_end", seq)
         .select(
             F.col("seq_id").cast("long"),
-            F.col(id_col),
+            F.col("doc_id"),
             (lo - F.col("seq_id") * seq_len).cast("long")
             .alias("start_in_seq"),
             (hi - lo).cast("long").alias("n_tokens"),
@@ -221,9 +211,7 @@ def pack_stream(docs: DataFrame, seq_len: int, weight_col: str = "n_tok",
 
 
 def shard_manifest_increment(n_so_far: int, batch: DataFrame,
-                             docs_per_shard: int,
-                             id_col: str = "doc_id",
-                             salt: str = "wde") -> DataFrame:
+                             docs_per_shard: int) -> DataFrame:
     """APPEND-ONLY shard assignment for a new batch: rows rank
     deterministically WITHIN the batch (the same salted-hash two-phase
     ranking as `export_shards`) and take global ranks after the
@@ -239,7 +227,7 @@ def shard_manifest_increment(n_so_far: int, batch: DataFrame,
     shipped to trainers must never be rewritten. Re-sharding the world
     is the batch operator's job."""
     assert n_so_far >= 0
-    shifted = export_shards(batch, docs_per_shard, id_col, salt) \
+    shifted = export_shards(batch, docs_per_shard) \
         .withColumn("global_rank",
                     (F.col("global_rank") + n_so_far).cast("long"))
     return (

@@ -38,25 +38,24 @@ from pyspark.sql import functions as F
 from ..functions.strings import tokens
 
 
-def _bigram_table(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _bigram_table(docs: DataFrame) -> DataFrame:
     """(id, w1, w2) — one row per bigram occurrence, row-local build:
     zip the token array with itself shifted by one (slice(2..)), explode.
     Documents with <2 tokens contribute no rows (and score NULL)."""
-    tok = tokens(F.col(text_col))
+    tok = tokens(F.col("text"))
     pairs = F.arrays_zip(
         F.slice(tok, 1, F.greatest(F.size(tok) - 1, F.lit(0))).alias("w1"),
         F.slice(tok, 2, F.greatest(F.size(tok) - 1, F.lit(0))).alias("w2"),
     )
     return (
-        docs.select(F.col(id_col), F.explode(pairs).alias("bg"))
-        .select(F.col(id_col), F.col("bg.w1").alias("w1"),
+        docs.select(F.col("doc_id"), F.explode(pairs).alias("bg"))
+        .select(F.col("doc_id"), F.col("bg.w1").alias("w1"),
                 F.col("bg.w2").alias("w2"))
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
     )
 
 
-def train_bigram_lm(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", k: float = 0.5,
+def train_bigram_lm(docs: DataFrame,
                     vocab: DataFrame | None = None) -> DataFrame:
     """Train the LM: returns (w1, w2, logp) for every OBSERVED bigram,
     plus the per-context floor as (w1, NULL, logp_floor) rows so scoring
@@ -71,7 +70,8 @@ def train_bigram_lm(docs: DataFrame, text_col: str = "text",
     requirement: same feature-space dimension for both models; a
     smaller-V model otherwise assigns higher probability to EVERYTHING
     and the ratio picks up a per-token bias — see `operators/dsir.py`)."""
-    bg = _bigram_table(docs, text_col, id_col)
+    k = 0.5
+    bg = _bigram_table(docs)
     c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vdf = vocab if vocab is not None else \
@@ -104,8 +104,7 @@ def lm_vocab_size(lm: DataFrame) -> Column:
         .distinct().agg(F.count("*").alias("v"))
 
 
-def lm_quality(docs: DataFrame, lm: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id", broadcast_lm: bool = True) -> DataFrame:
+def lm_quality(docs: DataFrame, lm: DataFrame) -> DataFrame:
     """Score every document: (id, n_bigrams, avg_logp) where avg_logp is
     the mean ln P(w2|w1) under the trained LM — higher (less negative) is
     more fluent/typical of the training slice; CCNet keeps the head band
@@ -113,43 +112,41 @@ def lm_quality(docs: DataFrame, lm: DataFrame, text_col: str = "text",
     evidence ≠ fluent). Back-off ladder per bigram: observed (w1,w2) →
     per-context smoothed floor (w1, NULL) → uniform unseen-context floor
     -ln(V+1)."""
-    bg = _bigram_table(docs, text_col, id_col)
+    bg = _bigram_table(docs)
     seen = lm.filter(F.col("w2").isNotNull()) \
         .select("w1", "w2", F.col("logp").alias("lp_seen"))
     floor = lm.filter(F.col("w2").isNull()) \
         .select("w1", F.col("logp").alias("lp_floor"))
     vdf = lm_vocab_size(lm)
-    if broadcast_lm:
-        seen, floor = F.broadcast(seen), F.broadcast(floor)
+    seen, floor = F.broadcast(seen), F.broadcast(floor)
     scored = (
         bg.join(seen, ["w1", "w2"], "left")
         .join(floor, ["w1"], "left")
         .crossJoin(F.broadcast(vdf))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(
                 F.col("lp_seen"), F.col("lp_floor"),
                 -F.log(F.col("v") + 1)).alias("lp"),
         )
     )
     return (
-        docs.select(id_col)
+        docs.select("doc_id")
         .join(
-            scored.groupBy(id_col).agg(
+            scored.groupBy("doc_id").agg(
                 F.count("*").alias("n_bigrams"),
                 F.avg("lp").alias("avg_logp"),
             ),
-            id_col, "left")
+            "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             F.round("avg_logp", 6).alias("avg_logp"),
         )
     )
 
 
-def lm_quality_bands(scores: DataFrame, n_bands: int = 3,
-                     id_col: str = "doc_id") -> DataFrame:
+def lm_quality_bands(scores: DataFrame) -> DataFrame:
     """CCNet-style head/middle/tail banding by avg_logp: band 1 = most
     fluent. NULL scores (too-short docs) get band NULL — route them to a
     length filter, not a fluency judgment. ntile over a global order is a
@@ -157,9 +154,9 @@ def lm_quality_bands(scores: DataFrame, n_bands: int = 3,
     per doc, no text), the usual CCNet corpus-stats shape."""
     from pyspark.sql import Window
 
-    w = Window.orderBy(F.desc("avg_logp"), F.asc(id_col))
+    w = Window.orderBy(F.desc("avg_logp"), F.asc("doc_id"))
     scored = scores.filter(F.col("avg_logp").isNotNull()) \
-        .withColumn("band", F.ntile(n_bands).over(w).cast("int"))
+        .withColumn("band", F.ntile(3).over(w).cast("int"))
     unscored = scores.filter(F.col("avg_logp").isNull()) \
         .withColumn("band", F.lit(None).cast("int"))
     return scored.unionByName(unscored)

@@ -114,7 +114,7 @@ MEDIA_SCHEMA = T.StructType([
 ])
 
 
-def _attach(docs: DataFrame, id_col: str, text_col: str, synth) -> DataFrame:
+def _attach(docs: DataFrame, synth) -> DataFrame:
     """(media_id, payload) per doc, payload = `synth(doc_id, utf8)` over
     the utf-8 bytes of the text (b"" when NULL). A NULL doc_id (NaN in
     the Arrow batch) gets the synth variant of id 0 and a NULL
@@ -125,7 +125,7 @@ def _attach(docs: DataFrame, id_col: str, text_col: str, synth) -> DataFrame:
             return [(None, synth(0, data))]
         return [(mid, synth(mid, data))]
 
-    return _map_rows(docs, [id_col, text_col], MEDIA_SCHEMA, row)
+    return _map_rows(docs, ["doc_id", "text"], MEDIA_SCHEMA, row)
 
 
 def _tile(data: bytes, idx, shape) -> np.ndarray:
@@ -145,13 +145,6 @@ def _palette16(j) -> np.ndarray:
                       np.where(j == 0, 0, 255)]).astype(np.uint8)
 
 
-MEDIA_META_TYPE = T.StructType([
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("sample_rate", T.IntegerType()),
-    T.StructField("codec", T.StringType()),
-])
-
 FRAME_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("kind", T.StringType()),
@@ -169,20 +162,19 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def attach_media(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def attach_media(docs: DataFrame) -> DataFrame:
     """Deterministic media table for tests/bench: payload = utf-8 bytes of
     the text (a stand-in for real image/audio/video bytes), kind cycling by
     id, metadata derived from payload size. In production this column comes
     straight from the lake (parquet/avro binary)."""
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col(id_col) % 3 + 1).cast("int"),
+        (F.col("doc_id") % 3 + 1).cast("int"),
     )
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     n = F.octet_length(payload)
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         kind.alias("kind"),
         payload.alias("payload"),
         F.struct(
@@ -220,7 +212,7 @@ def frame_sample(media: DataFrame, every: int = 4,
                      row)
 
 
-def extract_features(media: DataFrame, n_buckets: int = 8,
+def extract_features(media: DataFrame,
                      decode_images: bool = True) -> DataFrame:
     """Per-payload feature vector: normalized byte histogram over
     `n_buckets` buckets (stand-in for an embedding model), plus size and
@@ -235,6 +227,7 @@ def extract_features(media: DataFrame, n_buckets: int = 8,
     unchanged, so the byte-histogram oracle over the text corpora is
     untouched. n_bytes stays the TRANSPORT size either way (the dedup /
     layout planners key on bytes stored, not bytes decoded)."""
+    n_buckets = 8
     shift = 8 - n_buckets.bit_length() + 1
 
     def row(mid, kind, payload):
@@ -255,13 +248,13 @@ def extract_features(media: DataFrame, n_buckets: int = 8,
                      row)
 
 
-def resize_meta(media: DataFrame, max_w: int = 256, max_h: int = 256) -> DataFrame:
+def resize_meta(media: DataFrame) -> DataFrame:
     """Resize planning as a pure column expression: clamp dimensions
     preserving aspect ratio (the byte-level resample belongs to the stubbed
     codec). Demonstrates typed-metadata transforms without touching
     payloads."""
     w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(F.lit(max_w) / w, F.lit(max_h) / h, F.lit(1.0))
+    scale = F.least(F.lit(256) / w, F.lit(256) / h, F.lit(1.0))
     return media.withColumn(
         "meta",
         F.struct(
@@ -282,15 +275,15 @@ CHUNK_SCHEMA = T.StructType([
 ])
 
 
-def audio_chunks(media: DataFrame, window: int = 2048,
-                 hop: int = 1024) -> DataFrame:
+def audio_chunks(media: DataFrame) -> DataFrame:
     """Overlapping windowed segmentation of audio payloads (the speech
     analogue of video frame sampling): chunks of `window` bytes every `hop`
     bytes, last partial chunk kept. Non-audio rows are filtered BEFORE the
     Python stage so only audio payloads cross the Arrow boundary. Row-local,
     emits incrementally per batch — a long recording never materializes all
     its chunks at once."""
-    assert hop > 0 and window >= hop
+    window = 2048
+    hop = 1024
 
     def row(mid, payload):
         payload = bytes(payload)
@@ -305,12 +298,11 @@ def audio_chunks(media: DataFrame, window: int = 2048,
                      ["media_id", "payload"], CHUNK_SCHEMA, row)
 
 
-def frame_run_spans(frames: DataFrame, k: int = 3,
-                    min_count: int = 2) -> DataFrame:
+def frame_run_spans(frames: DataFrame) -> DataFrame:
     """Repeated FRAME-RUN detection — the embedding/media-side analogue of
     `dedup.duplicate_spans` (ExactSubstr over frame sequences instead of
     token sequences): every run of `k` consecutive frames whose signature
-    sequence occurs >= `min_count` times corpus-wide (across OR within
+    sequence occurs >= 2 times corpus-wide (across OR within
     media) marks positions [p, p+k-1] of that media's frame sequence;
     overlapping/adjacent marked runs (gap <= k) merge into maximal spans.
     This is the shape video-corpus curation needs for shared intros /
@@ -335,6 +327,7 @@ def frame_run_spans(frames: DataFrame, k: int = 3,
 
     from .dedup import _merge_islands
 
+    k = 3
     w = Window.partitionBy("media_id").orderBy("frame_idx")
     fwd = w.rowsBetween(Window.currentRow, k - 1)
     runs = (
@@ -351,7 +344,7 @@ def frame_run_spans(frames: DataFrame, k: int = 3,
     )
     dup = (
         runs.groupBy("runsig").agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= min_count).select("runsig")
+        .filter(F.col("c") >= 2).select("runsig")
     )
     marked = runs.join(dup, "runsig").select("media_id", "p")
     return _merge_islands(marked, k, "media_id")
@@ -399,9 +392,7 @@ def _png_gray(data: bytes, filter_type: int) -> bytes:
                       filter_type=filter_type)
 
 
-def attach_images(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  vary_filters: bool = False) -> DataFrame:
+def attach_images(docs: DataFrame, vary_filters: bool = False) -> DataFrame:
     """Deterministic REAL-PNG media table for tests/bench: each doc's text
     bytes tile a (h, w) grayscale image (pixel i = byte i mod L; all-zero
     when the text is empty), dims derived from the byte length
@@ -415,7 +406,7 @@ def attach_images(docs: DataFrame, id_col: str = "doc_id",
     unchanged, but byte-identical texts now yield byte-DIFFERENT payloads
     across filter choices, the re-encoded-duplicate situation
     pixel-fingerprint dedup exists to catch."""
-    return _attach(docs, id_col, text_col, lambda mid, data: _png_gray(
+    return _attach(docs, lambda mid, data: _png_gray(
         data, int(mid) % 5 if vary_filters else 0))
 
 
@@ -441,14 +432,14 @@ def image_pixel_fingerprints(media: DataFrame) -> DataFrame:
     return _map_rows(media, ["media_id", "payload"], PIXEL_FP_SCHEMA, row)
 
 
-def audio_energy_windows(media: DataFrame, window: int = 256) -> DataFrame:
+def audio_energy_windows(media: DataFrame) -> DataFrame:
     """Energy profile over DECODED samples (`wav_codec.decode_wav`) —
     the first real-DSP consumer of the audio codec: non-overlapping
     `window`-frame segments, per segment the frame count and the summed
     absolute amplitude across channels (the VAD/silence-trim primitive).
     Undecodable payloads drop. Row-local; emits ceil(n/window) rows per
     recording incrementally per Arrow batch."""
-    assert window > 0
+    window = 256
 
     def row(mid, payload):
         decoded = decode_wav(bytes(payload))
@@ -468,12 +459,11 @@ def audio_energy_windows(media: DataFrame, window: int = 256) -> DataFrame:
     return _map_rows(media, ["media_id", "payload"], ENERGY_SCHEMA, row)
 
 
-def resize_images(media: DataFrame, max_w: int = 8,
-                  max_h: int = 8) -> DataFrame:
+def resize_images(media: DataFrame) -> DataFrame:
     """REAL thumbnailing — decode → nearest-neighbor downsample → PNG
     re-encode, all inside one Arrow batch kernel (`png_codec`, no
     image libraries): target dims use `resize_meta`'s aspect-preserving
-    arithmetic (floor(dim·min(max_w/w, max_h/h, 1))), the resample takes
+    arithmetic (floor(dim·min(8/w, 8/h, 1))), the resample takes
     source pixel (y·src_h//th, x·src_w//tw) — integer arithmetic a SQL
     oracle replays exactly. Payloads this codec cannot decode null-route
     (thumb NULL, dims -1) rather than crash — the `decode_png` contract.
@@ -485,7 +475,7 @@ def resize_images(media: DataFrame, max_w: int = 8,
         if decoded is None:
             return [(mid, -1, -1, -1, -1, None)]
         w, h, _ch, px = decoded
-        scale = min(max_w / w, max_h / h, 1.0)
+        scale = min(8 / w, 8 / h, 1.0)
         # floor can hit 0 on extreme aspect ratios — a thumbnail
         # is never smaller than 1px (the oracle mirrors this)
         tw = max(1, int(w * scale))
@@ -539,14 +529,13 @@ def _wav_pcm16(mid, data: bytes) -> bytes:
     return encode_wav(np.zeros(64, dtype=np.int16), 16000)
 
 
-def attach_audio(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def attach_audio(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-WAV media table: each doc's text bytes become a
     mono 16 kHz PCM16 recording (sample i = (byte i − 128)·256; 64 zero
     samples when the text is empty), containerized by
     `wav_codec.encode_wav`. Decodable audio whose every sample a SQL
     oracle predicts from the text — the audio twin of `attach_images`."""
-    return _attach(docs, id_col, text_col, _wav_pcm16)
+    return _attach(docs, _wav_pcm16)
 
 
 def audio_sample_stats(media: DataFrame) -> DataFrame:
@@ -587,8 +576,7 @@ def _png_palette(mid, data: bytes) -> bytes:
                               filter_type=int(mid) % 5)
 
 
-def attach_palette_images(docs: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+def attach_palette_images(docs: DataFrame) -> DataFrame:
     """Deterministic INDEXED-COLOR (palette + tRNS) PNG media table: each
     doc's text bytes pick one of 16 colors per pixel (j = byte % 16 →
     color ((19j)%256, (37j)%256, (53j)%256) — 16 distinct RGB triples),
@@ -599,7 +587,7 @@ def attach_palette_images(docs: DataFrame, id_col: str = "doc_id",
     Every decoded RGBA value is a pure function of the text, so the SQL
     oracle predicts the whole image — the palette tier's encode AND the
     tRNS alpha expansion become hash-checked surface."""
-    return _attach(docs, id_col, text_col, _png_palette)
+    return _attach(docs, _png_palette)
 
 
 def _wav_adpcm(mid, data: bytes) -> bytes:
@@ -607,11 +595,10 @@ def _wav_adpcm(mid, data: bytes) -> bytes:
     pred = (data[0] - 128) * 256 if n >= 1 else 0
     index = data[1] % 89 if n >= 2 else 0
     dat = _tile(data, np.arange(64), 64).tobytes()
-    return encode_wav_adpcm([(pred, index, dat)], 8000)
+    return encode_wav_adpcm([(pred, index, dat)])
 
 
-def attach_audio_adpcm(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def attach_audio_adpcm(docs: DataFrame) -> DataFrame:
     """Deterministic IMA ADPCM media table — the PREDICTIVE-codec tier:
     one 68-byte mono block per doc (predictor = (byte0 − 128)·256,
     step index = byte1 mod 89, both 0 when the text is too short; the
@@ -620,7 +607,7 @@ def attach_audio_adpcm(docs: DataFrame, id_col: str = "doc_id",
     step-table state machine. Every decoded sample is a pure function
     of the text that a recursive-CTE SQL oracle replays nibble by
     nibble."""
-    return _attach(docs, id_col, text_col, _wav_adpcm)
+    return _attach(docs, _wav_adpcm)
 
 
 def _bmp(mid, data: bytes) -> bytes:
@@ -638,8 +625,7 @@ def _bmp(mid, data: bytes) -> bytes:
     return encode_bmp(rgb, top_down=bool(int(mid) % 2))
 
 
-def attach_bmps(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def attach_bmps(docs: DataFrame) -> DataFrame:
     """Deterministic BMP media table — the DIB container with three
     tiers by doc_id % 3 over a (w = L%18+5) x (h = L%13+5) image with
     pixel v = byte (3p mod L) (0 when empty):
@@ -653,7 +639,7 @@ def attach_bmps(docs: DataFrame, id_col: str = "doc_id",
     Every decoded RGB value is a pure function of the text the SQL
     oracle predicts — header parsing, palette expansion, BGR order,
     both row orders, stride padding, and RLE all hash-checked."""
-    return _attach(docs, id_col, text_col, _bmp)
+    return _attach(docs, _bmp)
 
 
 def _tiff(mid, data: bytes) -> bytes:
@@ -669,8 +655,7 @@ def _tiff(mid, data: bytes) -> bytes:
     return encode_tiff(rgb, big=big)
 
 
-def attach_tiffs(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def attach_tiffs(docs: DataFrame) -> DataFrame:
     """Deterministic TIFF media table — the PackBits container with two
     tiers by doc_id % 2 over a (w = L%17+4) x (h = L%11+4) image with
     base pixel v = byte (5p mod L) (0 when empty):
@@ -689,7 +674,7 @@ def attach_tiffs(docs: DataFrame, id_col: str = "doc_id",
     PackBits is lossless, so every decoded RGB value is a pure function
     of the text the SQL oracle predicts — IFD parsing, per-row coder
     restarts, repeat and literal packets all hash-checked."""
-    return _attach(docs, id_col, text_col, _tiff)
+    return _attach(docs, _tiff)
 
 
 def _jpeg_gray(mid, data: bytes) -> bytes:
@@ -700,8 +685,7 @@ def _jpeg_gray(mid, data: bytes) -> bytes:
                             quality=50)
 
 
-def attach_jpegs(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def attach_jpegs(docs: DataFrame) -> DataFrame:
     """Deterministic baseline-JPEG media table on the codec's
     integer-exact tier: a ((L%4+2)*8) x ((L%6+2)*8) grayscale image of
     constant 8x8 tiles, tile t (row-major over blocks) = byte (t mod L)
@@ -712,7 +696,7 @@ def attach_jpegs(docs: DataFrame, id_col: str = "doc_id",
     canonical Huffman, DC DPCM across tiles, byte stuffing — runs on
     production data. General-content (AC) behavior is property-tested
     with bounded error in tests/test_formats.py."""
-    return _attach(docs, id_col, text_col, _jpeg_gray)
+    return _attach(docs, _jpeg_gray)
 
 
 def _jpeg_rgb(mid, data: bytes) -> bytes:
@@ -724,8 +708,7 @@ def _jpeg_rgb(mid, data: bytes) -> bytes:
                            quality=50)
 
 
-def attach_jpegs_color(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def attach_jpegs_color(docs: DataFrame) -> DataFrame:
     """Deterministic COLOR baseline-JPEG media table on the
     integer-exact tier: constant 8x8 tiles over a ((L%3+2)*8) x
     ((L%5+2)*8) canvas, tile t's RGB = bytes (t, t+1, t+2 mod L)
@@ -734,7 +717,7 @@ def attach_jpegs_color(docs: DataFrame, id_col: str = "doc_id",
     predictors. Every decoded RGB value is the composition
     ycbcr_to_rgb(dequant(quant(rgb_to_ycbcr(v)))) of pure integer
     formulas the SQL oracle replays exactly."""
-    return _attach(docs, id_col, text_col, _jpeg_rgb)
+    return _attach(docs, _jpeg_rgb)
 
 
 def _jpeg_420(data: bytes, restart: int) -> bytes:
@@ -746,8 +729,7 @@ def _jpeg_420(data: bytes, restart: int) -> bytes:
                            quality=50, restart=restart)
 
 
-def attach_jpegs_420(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def attach_jpegs_420(docs: DataFrame) -> DataFrame:
     """Deterministic 4:2:0 baseline-JPEG media table with RESTART
     INTERVALS: constant 16x16 macro-tiles over a ((L%3+1)*16) x
     ((L%4+1)*16) canvas, macro-tile t's RGB = bytes (t, t+3, t+6 mod
@@ -757,8 +739,7 @@ def attach_jpegs_420(docs: DataFrame, id_col: str = "doc_id",
     unchanged through the 2x2 chroma subsample, so the decoded pixels
     follow the same integer formula chain as the 4:4:4 tier and the
     SQL oracle predicts every value."""
-    return _attach(docs, id_col, text_col,
-                   lambda mid, data: _jpeg_420(data, int(mid) % 3))
+    return _attach(docs, lambda mid, data: _jpeg_420(data, int(mid) % 3))
 
 
 def _qoi(mid, data: bytes) -> bytes:
@@ -776,8 +757,7 @@ def _qoi(mid, data: bytes) -> bytes:
         np.uint8).reshape(h, w, 4))
 
 
-def attach_qoi(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def attach_qoi(docs: DataFrame) -> DataFrame:
     """Deterministic QOI media table — content shaped to exercise every
     op family of the format on production data: over a (w = L%21+4) x
     (h = L%15+4) image, pixel p has r = byte(p//4 mod L) (horizontal
@@ -787,7 +767,7 @@ def attach_qoi(docs: DataFrame, id_col: str = "doc_id",
     (RGBA literals + index recalls). Every decoded RGBA value is a pure
     function of the text the SQL oracle predicts — whatever op sequence
     the greedy encoder chose."""
-    return _attach(docs, id_col, text_col, _qoi)
+    return _attach(docs, _qoi)
 
 
 def _gif(mid, data: bytes) -> bytes:
@@ -797,8 +777,7 @@ def _gif(mid, data: bytes) -> bytes:
     return encode_gif(_palette16(j), interlace=bool(int(mid) % 2))
 
 
-def attach_gifs(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def attach_gifs(docs: DataFrame) -> DataFrame:
     """Deterministic GIF media table — the LZW container twin of
     `attach_palette_images` with its own geometry (w = L%20+6,
     h = L%14+6) and the SAME 16-color/transparent-0 pixel semantics
@@ -808,7 +787,7 @@ def attach_gifs(docs: DataFrame, id_col: str = "doc_id",
     LZW compressor (`gif_codec.encode_gif`) means the decoder's
     dictionary-growth path runs on every row. Every decoded RGBA value
     is a pure function of the text the SQL oracle predicts."""
-    return _attach(docs, id_col, text_col, _gif)
+    return _attach(docs, _gif)
 
 
 def _gif_animated(mid, data: bytes) -> bytes:
@@ -824,8 +803,7 @@ def _gif_animated(mid, data: bytes) -> bytes:
     return encode_gif_animated(patches, W, H, interlace_odd=True)
 
 
-def attach_animated_gifs(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def attach_animated_gifs(docs: DataFrame) -> DataFrame:
     """Deterministic ANIMATED GIF media table: each doc becomes an
     L%3+2-frame GIF89a over a (W = L%16+10) x (H = L%12+10) canvas.
     Frame g patches the rect (left = 3g mod (W-3), top = 2g mod (H-3),
@@ -836,7 +814,7 @@ def attach_animated_gifs(docs: DataFrame, id_col: str = "doc_id",
     disposal 1 (leave) — the compositing the SQL oracle replays as
     "latest covering non-transparent patch wins"; disposal 2/3 are
     pinned by unit tests. Odd frames are stored interlaced."""
-    return _attach(docs, id_col, text_col, _gif_animated)
+    return _attach(docs, _gif_animated)
 
 
 ANIM_STATS_SCHEMA = T.StructType([
@@ -944,8 +922,7 @@ def _wav_mixed(mid, data: bytes) -> bytes:
     return encode_wav(s, 8000, bits=8)
 
 
-def attach_audio_mixed(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def attach_audio_mixed(docs: DataFrame) -> DataFrame:
     """Deterministic MIXED-FORMAT WAV media table — the fixture that makes
     the codec's full declared surface (stereo, 8-bit) production
     correctness surface instead of unit-test-only. Format by doc_id % 3:
@@ -958,7 +935,7 @@ def attach_audio_mixed(docs: DataFrame, id_col: str = "doc_id",
     Empty text yields 64 silent frames in the row's format (0 for 16-bit,
     128 for 8-bit). Every decoded sample is a pure function of the text,
     so SQL oracles predict energy profiles across all three formats."""
-    return _attach(docs, id_col, text_col, _wav_mixed)
+    return _attach(docs, _wav_mixed)
 
 
 def _wav_g711(mid, data: bytes) -> bytes:
@@ -970,8 +947,7 @@ def _wav_g711(mid, data: bytes) -> bytes:
     return encode_wav_g711(codes, 8000, law)
 
 
-def attach_audio_g711(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def attach_audio_g711(docs: DataFrame) -> DataFrame:
     """Deterministic G.711 COMPANDED media table — telephony-codec
     recordings by doc_id % 2 (0: mu-law format tag 7, 1: A-law tag 6,
     `wav_codec.encode_wav_g711`): the text bytes ARE the companded code
@@ -980,7 +956,7 @@ def attach_audio_g711(docs: DataFrame, id_col: str = "doc_id",
     formulas exactly. Empty text yields 64 frames of the code that
     expands to the quietest level (0xFF -> 0 for mu-law, 0xD5 -> +8
     for A-law, which has no zero code)."""
-    return _attach(docs, id_col, text_col, _wav_g711)
+    return _attach(docs, _wav_g711)
 
 
 VIDEO_STATS_SCHEMA = T.StructType([
@@ -1007,8 +983,7 @@ def _avi(mid, data: bytes) -> bytes:
     return encode_avi(rgb, fps=10)
 
 
-def attach_video(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def attach_video(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-AVI media table — the video twin of
     `attach_images`/`attach_audio`: each doc's text bytes become
     L%3+2 uncompressed DIB frames of (h = L%8+4, w = L%12+4), frame f's
@@ -1019,18 +994,17 @@ def attach_video(docs: DataFrame, id_col: str = "doc_id",
     is a pure function of the text, so SQL oracles predict the whole
     clip — container geometry, palette expansion, BGR ordering,
     bottom-up row flip, and stride padding all become hash-checked."""
-    return _attach(docs, id_col, text_col, _avi)
+    return _attach(docs, _avi)
 
 
 def _avi_rle8(mid, data: bytes) -> bytes:
     n = len(data)
     nf, w, h = n % 3 + 2, n % 11 + 4, n % 7 + 4
     idx = np.arange(w * h) // 3 + 5 * np.arange(nf)[:, None]
-    return encode_avi_rle8(_tile(data, idx, (nf, h, w)), fps=10)
+    return encode_avi_rle8(_tile(data, idx, (nf, h, w)))
 
 
-def attach_video_rle(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def attach_video_rle(docs: DataFrame) -> DataFrame:
     """Deterministic COMPRESSED-video media table — the BI_RLE8 twin of
     `attach_video`: each doc's text bytes become L%3+2 RLE8-compressed
     grayscale-palette frames of (h = L%7+4, w = L%11+4), frame f's
@@ -1040,7 +1014,7 @@ def attach_video_rle(docs: DataFrame, id_col: str = "doc_id",
     absolute/literal packets — both halves of the RLE grammar are
     exercised by production data, and every decoded RGB value is still
     a pure function of the text the SQL oracle predicts."""
-    return _attach(docs, id_col, text_col, _avi_rle8)
+    return _attach(docs, _avi_rle8)
 
 
 def video_frame_stats(media: DataFrame) -> DataFrame:
@@ -1153,15 +1127,14 @@ def decode_jpeg_restart_distributed(spark, payload: bytes,
     return w, h, len(specs), planes
 
 
-def attach_jpegs_420_dri(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def attach_jpegs_420_dri(docs: DataFrame) -> DataFrame:
     """`attach_jpegs_420` with a restart interval on EVERY file
     (restart = doc_id % 2 + 1) — the fixture for the segment-parallel
     decode surface, where splittability is the point. Same macro-tile
     pixel formula, so the same SQL oracle predicts every value (the
     interval changes the transport framing, never the pixels)."""
-    return _attach(docs, id_col, text_col,
-                   lambda mid, data: _jpeg_420(data, int(mid) % 2 + 1))
+    return _attach(
+        docs, lambda mid, data: _jpeg_420(data, int(mid) % 2 + 1))
 
 
 def segment_parallel_rgba_stats(media: DataFrame) -> DataFrame:

@@ -36,12 +36,10 @@ from pyspark.sql import functions as F
 
 from .similarity import hyperplanes
 
+#: Width of the `embeddings` vectors every entry point here reads.
+_DIM = 64
 
-def _dims(vec: Column, dim: int) -> list[Column]:
-    return [vec.getItem(i).cast("double") for i in range(dim)]
-
-
-# SQL-string twins of the Column construction above. The power-iteration
+# SQL-string twins of per-dimension Column expressions. The power-iteration
 # loops issue hundreds of Column API calls per pass (each one a driver
 # round trip, ~1 ms — the measured cost of a pass was expression BUILD,
 # not data); one selectExpr call with pre-rendered strings is ~10x
@@ -54,24 +52,21 @@ def _d(val: float) -> str:
     return f"CAST('{val!r}' AS DOUBLE)"
 
 
-def _x_sql(vec_col: str, i: int) -> str:
-    return f"CAST(`{vec_col}`[{i}] AS DOUBLE)"
+def _x_sql(i: int) -> str:
+    return f"CAST(`embedding`[{i}] AS DOUBLE)"
 
 
-def power_iteration_pc1(emb: DataFrame, dim: int = 64, iters: int = 3,
-                        vec_col: str = "embedding",
-                        seed: str = "pca") -> tuple[list[float],
-                                                    list[float]]:
+def power_iteration_pc1(emb: DataFrame) -> tuple[list[float], list[float]]:
     """(mu, v): the per-dimension mean and the unit leading-eigenvector
-    estimate of the centered covariance after `iters` power iterations.
+    estimate of the centered covariance after 3 power iterations.
     Driver traffic: one dim-wide row per iteration plus one for the mean
     — bounded model state, never rows."""
     mu_row = emb.selectExpr(
         "COUNT(1) AS _n",
-        *[f"AVG({_x_sql(vec_col, i)}) AS m{i}" for i in range(dim)]
+        *[f"AVG({_x_sql(i)}) AS m{i}" for i in range(_DIM)]
     ).first()
 
-    v = hyperplanes(dim, 1, seed)[0]
+    v = hyperplanes(_DIM, 1, "pca")[0]
     nrm = math.sqrt(sum(c * c for c in v))
     v = [c / nrm for c in v]
 
@@ -81,12 +76,12 @@ def power_iteration_pc1(emb: DataFrame, dim: int = 64, iters: int = 3,
         # Emptiness is a ROW COUNT, not m0-is-NULL — a corpus whose
         # dimension 0 happens to be all NULL still gets fitted on the
         # remaining dimensions (NULL means coalesce to 0.0).
-        return [0.0] * dim, v
+        return [0.0] * _DIM, v
     mu = [float(mu_row[f"m{i}"]) if mu_row[f"m{i}"] is not None else 0.0
-          for i in range(dim)]
+          for i in range(_DIM)]
 
-    cs = [f"({_x_sql(vec_col, i)} - {_d(mu[i])})" for i in range(dim)]
-    for _ in range(iters):
+    cs = [f"({_x_sql(i)} - {_d(mu[i])})" for i in range(_DIM)]
+    for _ in range(3):
         # project the per-row dot ONCE, then aggregate c_i * t over the
         # projection: same values in the same per-partition order (the
         # projection adds no exchange), so the sums are bit-identical to
@@ -94,17 +89,17 @@ def power_iteration_pc1(emb: DataFrame, dim: int = 64, iters: int = 3,
         # dim small products instead of O(dim²), which is what the
         # build/analysis/codegen cost of each pass actually was.
         # SQL `+` is left-associative, matching the Column-fold order.
-        t_sql = " + ".join(f"{cs[i]} * {_d(v[i])}" for i in range(dim))
+        t_sql = " + ".join(f"{cs[i]} * {_d(v[i])}" for i in range(_DIM))
         w_row = (
             emb.selectExpr(f"({t_sql}) AS _t",
-                           *[f"{cs[i]} AS c{i}" for i in range(dim)])
-            .selectExpr(*[f"SUM(c{i} * _t) AS w{i}" for i in range(dim)])
+                           *[f"{cs[i]} AS c{i}" for i in range(_DIM)])
+            .selectExpr(*[f"SUM(c{i} * _t) AS w{i}" for i in range(_DIM)])
             .first()
         )
         if w_row is None:
             break
         w = [float(w_row[f"w{i}"]) if w_row[f"w{i}"] is not None else 0.0
-             for i in range(dim)]
+             for i in range(_DIM)]
         nrm = math.sqrt(sum(c_ * c_ for c_ in w))
         if nrm == 0.0:  # degenerate corpus (all rows identical)
             break
@@ -113,7 +108,6 @@ def power_iteration_pc1(emb: DataFrame, dim: int = 64, iters: int = 3,
 
 
 def pca_project(emb: DataFrame, mu: list[float], v: list[float],
-                vec_col: str = "embedding", id_col: str = "vec_id",
                 score_col: str = "pc1_score") -> DataFrame:
     """(id, score): each vector's coordinate along the component —
     centered dot product, pure column arithmetic (whole-stage codegen),
@@ -123,17 +117,14 @@ def pca_project(emb: DataFrame, mu: list[float], v: list[float],
     variance-balanced sharding."""
     dim = len(v)
     t_sql = " + ".join(
-        f"({_x_sql(vec_col, i)} - {_d(mu[i])}) * {_d(v[i])}"
+        f"({_x_sql(i)} - {_d(mu[i])}) * {_d(v[i])}"
         for i in range(dim))
-    return emb.selectExpr(f"`{id_col}`",
-                          f"ROUND(({t_sql}), 6) AS {score_col}")
+    return emb.selectExpr("`vec_id`", f"ROUND(({t_sql}), 6) AS {score_col}")
 
 
-def power_iteration_components(emb: DataFrame, n_components: int = 2,
-                               dim: int = 64, iters: int = 3,
-                               vec_col: str = "embedding",
-                               seed: str = "pca") -> tuple[list[float],
-                                                           list[list[float]]]:
+def power_iteration_components(
+    emb: DataFrame,
+) -> tuple[list[float], list[list[float]]]:
     """(mu, [v1, v2, ...]): the top `n_components` principal directions
     by DEFLATED power iteration — component j runs the same two-pass
     iteration on the residual x − μ − Σ_{l<j} ((x−μ)·v_l) v_l, with the
@@ -141,20 +132,21 @@ def power_iteration_components(emb: DataFrame, n_components: int = 2,
     arithmetic, no extra data pass for the deflation itself). Init for
     component j is md5 hyperplane j of the seed family. Driver state:
     (n_components+1) dim-wide rows total per iteration sweep."""
+    n_components = 2
     mu_row = emb.selectExpr(
         "COUNT(1) AS _n",
-        *[f"AVG({_x_sql(vec_col, i)}) AS m{i}" for i in range(dim)]
+        *[f"AVG({_x_sql(i)}) AS m{i}" for i in range(_DIM)]
     ).first()
-    inits = hyperplanes(dim, n_components, seed)
+    inits = hyperplanes(_DIM, n_components, "pca")
     comps: list[list[float]] = []
     if mu_row is None or mu_row["_n"] == 0:
         # row-count emptiness (not m0-is-NULL) — see power_iteration_pc1
         for v in inits:
             nrm = math.sqrt(sum(c * c for c in v))
             comps.append([c / nrm for c in v])
-        return [0.0] * dim, comps
+        return [0.0] * _DIM, comps
     mu = [float(mu_row[f"m{i}"]) if mu_row[f"m{i}"] is not None else 0.0
-          for i in range(dim)]
+          for i in range(_DIM)]
 
     # The residual lives as NAMED columns and each deflation is
     # localCheckpoint-ed (the BPE-trainer lineage discipline): building
@@ -162,32 +154,32 @@ def power_iteration_components(emb: DataFrame, n_components: int = 2,
     # into every one of the dim deflation columns — an O(dim²·dim)
     # expression tree Catalyst chokes on. Cost: one O(n·dim) residual
     # materialization per EXTRA component, same order as one data pass.
-    cn = [f"c{i}" for i in range(dim)]
+    cn = [f"c{i}" for i in range(_DIM)]
     work = emb.selectExpr(
-        *[f"({_x_sql(vec_col, i)} - {_d(mu[i])}) AS c{i}"
-          for i in range(dim)]).localCheckpoint()
+        *[f"({_x_sql(i)} - {_d(mu[i])}) AS c{i}"
+          for i in range(_DIM)]).localCheckpoint()
 
     def _t_sql(v: list[float]) -> str:
         # SQL `+` is left-associative, matching the old Column fold
-        return " + ".join(f"{cn[i]} * {_d(v[i])}" for i in range(dim))
+        return " + ".join(f"{cn[i]} * {_d(v[i])}" for i in range(_DIM))
 
     for j in range(n_components):
         v = inits[j]
         nrm = math.sqrt(sum(cv * cv for cv in v))
         v = [cv / nrm for cv in v]
-        for _ in range(iters):
+        for _ in range(3):
             # same projected-dot restructure as power_iteration_pc1:
             # bit-identical sums, O(dim) tree instead of O(dim²)
             w_row = (
                 work.selectExpr(f"({_t_sql(v)}) AS _t", *cn)
                 .selectExpr(*[f"SUM(c{i} * _t) AS w{i}"
-                              for i in range(dim)])
+                              for i in range(_DIM)])
                 .first()
             )
             if w_row is None:
                 break
             w = [float(w_row[f"w{i}"]) if w_row[f"w{i}"] is not None
-                 else 0.0 for i in range(dim)]
+                 else 0.0 for i in range(_DIM)]
             nrm = math.sqrt(sum(c_ * c_ for c_ in w))
             if nrm == 0.0:
                 break
@@ -197,16 +189,14 @@ def power_iteration_components(emb: DataFrame, n_components: int = 2,
             work = (
                 work.selectExpr(f"({_t_sql(v)}) AS _t", *cn)
                 .selectExpr(*[f"(c{i} - (_t * {_d(v[i])})) AS c{i}"
-                              for i in range(dim)])
+                              for i in range(_DIM)])
                 .localCheckpoint()
             )
     return mu, comps
 
 
 def pca_project_components(emb: DataFrame, mu: list[float],
-                           comps: list[list[float]],
-                           vec_col: str = "embedding",
-                           id_col: str = "vec_id") -> DataFrame:
+                           comps: list[list[float]]) -> DataFrame:
     """(id, pc1_score, pc2_score, ...): coordinates along each deflated
     component — score j is the residual-after-j-1-deflations dotted with
     v_j, exactly the quantity the trainer iterated on. Staged through
@@ -218,27 +208,25 @@ def pca_project_components(emb: DataFrame, mu: list[float],
     dim = len(mu)
     cn = [f"c{i}" for i in range(dim)]
     cur = emb.selectExpr(
-        f"`{id_col}`",
-        *[f"({_x_sql(vec_col, i)} - {_d(mu[i])}) AS c{i}"
+        "`vec_id`",
+        *[f"({_x_sql(i)} - {_d(mu[i])}) AS c{i}"
           for i in range(dim)])
     n = len(comps)
     for j, vl in enumerate(comps, start=1):
         t_sql = " + ".join(f"{cn[i]} * {_d(vl[i])}" for i in range(dim))
         prev = [f"t{l}" for l in range(1, j)]
-        cur = cur.selectExpr(f"`{id_col}`", *prev,
-                             f"({t_sql}) AS t{j}", *cn)
+        cur = cur.selectExpr("`vec_id`", *prev, f"({t_sql}) AS t{j}", *cn)
         if j < n:
             cur = cur.selectExpr(
-                f"`{id_col}`", *prev, f"t{j}",
+                "`vec_id`", *prev, f"t{j}",
                 *[f"(c{i} - (t{j} * {_d(vl[i])})) AS c{i}"
                   for i in range(dim)])
     return cur.selectExpr(
-        f"`{id_col}`",
+        "`vec_id`",
         *[f"ROUND(t{j}, 6) AS pc{j}_score" for j in range(1, n + 1)])
 
 
-def second_moments(emb: DataFrame, dim: int = 64,
-                   vec_col: str = "embedding") -> DataFrame:
+def second_moments(emb: DataFrame) -> DataFrame:
     """MERGEABLE moment state of an embedding batch — the streaming-PCA
     representation: one (n, s[dim], m[dim²]) row per Arrow partition,
     where s = Σx and m = ΣxxT (flattened row-major). Moments are
@@ -256,11 +244,11 @@ def second_moments(emb: DataFrame, dim: int = 64,
 
     def _mom(batches):
         n = 0
-        s = np.zeros(dim)
-        m = np.zeros((dim, dim))
+        s = np.zeros(_DIM)
+        m = np.zeros((_DIM, _DIM))
         for pdf in batches:
-            vals = [v for v in pdf[vec_col]
-                    if v is not None and len(v) == dim]
+            vals = [v for v in pdf["embedding"]
+                    if v is not None and len(v) == _DIM]
             if not vals:
                 continue
             X = np.array(vals, dtype=np.float64)
@@ -272,12 +260,13 @@ def second_moments(emb: DataFrame, dim: int = 64,
         yield pd.DataFrame({"n": [n], "s": [s.tolist()],
                             "m": [m.flatten().tolist()]})
 
-    return emb.select(vec_col).mapInPandas(
+    return emb.select("embedding").mapInPandas(
         _mom, "n long, s array<double>, m array<double>")
 
 
-def merge_moments(*moment_dfs: DataFrame,
-                  dim: int = 64) -> tuple[int, list[float], list[float]]:
+def merge_moments(
+    *moment_dfs: DataFrame,
+) -> tuple[int, list[float], list[float]]:
     """Sum the per-partition moment rows of any number of batches into
     ONE (n, s, m) state — the merge is plain addition (associative +
     commutative), which is what makes the moments maintainable across
@@ -287,8 +276,8 @@ def merge_moments(*moment_dfs: DataFrame,
     import numpy as np
 
     n = 0
-    s = np.zeros(dim)
-    m = np.zeros(dim * dim)
+    s = np.zeros(_DIM)
+    m = np.zeros(_DIM * _DIM)
     for df in moment_dfs:
         for row in df.collect():  # one row per partition: bounded state
             n += row["n"]
@@ -298,27 +287,25 @@ def merge_moments(*moment_dfs: DataFrame,
     return int(n), s.tolist(), m.tolist()
 
 
-def pc1_from_moments(n: int, s: list[float], m: list[float],
-                     iters: int = 3,
-                     seed: str = "pcacov") -> tuple[list[float],
-                                                    list[float]]:
+def pc1_from_moments(n: int, s: list[float],
+                     m: list[float]) -> tuple[list[float], list[float]]:
     """(mu, v) from merged moment state: covariance
-    C = ΣxxT/n − mu muT (dim×dim — model-sized), then `iters` power
+    C = ΣxxT/n − mu muT (dim×dim — model-sized), then 3 power
     iterations of the MATRIX on the driver (a dim² matvec — micro-work
     once the state exists; no data pass at all). Same md5 init family
     and pinned-iteration discipline as the data-pass trainer."""
     dim = len(s)
     if n == 0:
-        v = hyperplanes(dim, 1, seed)[0]
+        v = hyperplanes(dim, 1, "pcacov")[0]
         nrm = math.sqrt(sum(c * c for c in v))
         return [0.0] * dim, [c / nrm for c in v]
     mu = [s[i] / n for i in range(dim)]
     C = [[m[i * dim + j] / n - mu[i] * mu[j] for j in range(dim)]
          for i in range(dim)]
-    v = hyperplanes(dim, 1, seed)[0]
+    v = hyperplanes(dim, 1, "pcacov")[0]
     nrm = math.sqrt(sum(c * c for c in v))
     v = [c / nrm for c in v]
-    for _ in range(iters):
+    for _ in range(3):
         w = [sum(C[i][j] * v[j] for j in range(dim)) for i in range(dim)]
         nrm = math.sqrt(sum(c * c for c in w))
         if nrm == 0.0:

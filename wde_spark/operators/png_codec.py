@@ -340,7 +340,7 @@ def encode_png_palette(pixels: np.ndarray, alpha: np.ndarray | None = None,
     return out + idat_iend
 
 
-def encode_png_auto(pixels: np.ndarray, filter_type: int = 0) -> bytes:
+def encode_png_auto(pixels: np.ndarray) -> bytes:
     """Tier-selecting encode: route through the indexed-color tier when
     the image is EXACTLY representable there — RGB(A) with <= 256
     distinct colors and, for RGBA, a single alpha per color (the tRNS
@@ -349,6 +349,7 @@ def encode_png_auto(pixels: np.ndarray, filter_type: int = 0) -> bytes:
     so callers that fingerprint decoded pixels are tier-agnostic; the
     indexed tier is the transport-size win for low-cardinality images
     (thumbnails after NN resampling, charts, UI captures)."""
+    filter_type = 0
     px = np.asarray(pixels, dtype=np.uint8)
     if px.ndim == 3 and px.shape[2] in (3, 4):
         rgb = px[:, :, :3]

@@ -33,10 +33,6 @@ def is_qoi(payload: bytes) -> bool:
     return payload[:4] == b"qoif"
 
 
-def _hash(r: int, g: int, b: int, a: int) -> int:
-    return (r * 3 + g * 5 + b * 7 + a * 11) % 64
-
-
 def decode_qoi(payload: bytes):
     """Decode a QOI byte string to (width, height, rgba) with rgba an
     (h, w, 4) uint8 array, or None outside the declared support."""

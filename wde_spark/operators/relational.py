@@ -44,13 +44,12 @@ def top_k_per_group(
     group_cols: Sequence[str],
     order_cols: Sequence[Column],
     k: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
     """W2 generalized — top-k rows per group by explicit ordering."""
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
     )
 
 
@@ -101,7 +100,6 @@ def top_k_per_group_salted(
     order_cols: Sequence[Column],
     k: int,
     n_salts: int = 16,
-    rank_col: str = "rn",
 ) -> DataFrame:
     """`top_k_per_group` for hot keys: phase 1 takes a LOCAL top-k within
     (group, salt) — bounded partitions regardless of key skew, salt =
@@ -127,7 +125,7 @@ def top_k_per_group_salted(
         .filter(F.col("__lrn") <= k)
         .drop("__salt", "__lrn")
     )
-    return top_k_per_group(survivors, group_cols, order_cols, k, rank_col)
+    return top_k_per_group(survivors, group_cols, order_cols, k)
 
 
 def carry_forward(
@@ -135,7 +133,6 @@ def carry_forward(
     partition_cols: Sequence[str],
     order_col: str,
     value_col: str,
-    out_col: str | None = None,
 ) -> DataFrame:
     """W1 — propagate the last non-null value down each partition in order
     (the reference's "le même" previous-row reuse)."""
@@ -145,7 +142,7 @@ def carry_forward(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return df.withColumn(
-        out_col or value_col, F.last(value_col, ignorenulls=True).over(w)
+        value_col, F.last(value_col, ignorenulls=True).over(w)
     )
 
 
@@ -159,7 +156,6 @@ def sessionize(
     user_col: str,
     ts_col: str,
     gap_seconds: int,
-    session_col: str = "session_id",
 ) -> DataFrame:
     """Gaps-and-islands sessionization: a new session starts when the gap
     from the previous event of the same user exceeds `gap_seconds`.
@@ -170,7 +166,7 @@ def sessionize(
     gap = us - F.lag(us).over(w)
     is_new = F.when(gap.isNull() | (gap > gap_seconds * 1_000_000), 1).otherwise(0)
     return df.withColumn("__new", is_new).withColumn(
-        session_col,
+        "session_id",
         F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     ).drop("__new")
 
@@ -181,7 +177,6 @@ def sessionize_bucketed(
     ts_col: str,
     gap_seconds: int,
     bucket_seconds: int = 86400,
-    session_col: str = "session_id",
 ) -> DataFrame:
     """Skew-proof sessionization — identical output to `sessionize`, built
     for the 100-TB failure mode that plain sessionization cannot survive: a
@@ -254,7 +249,7 @@ def sessionize_bucketed(
     return (
         local.join(merged, [user_col, "__b"])
         .withColumn(
-            session_col,
+            "session_id",
             (F.col("__cum_before") + F.col("__s_local")
              - F.col("__merge_prev")).cast("long"),
         )
@@ -270,7 +265,6 @@ def asof_join(
     ts_col: str,
     payload_cols: Sequence[str],
     tie_col: str | None = None,
-    out_col: str = "asof",
 ) -> DataFrame:
     """As-of (backward) join: attach to each left row the payload of the
     most recent right row with `right.ts <= left.ts`, matched on `on`.
@@ -324,7 +318,7 @@ def asof_join(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
-        u.withColumn(out_col, F.last("__asof_p", ignorenulls=True).over(w))
+        u.withColumn("asof", F.last("__asof_p", ignorenulls=True).over(w))
         .filter(F.col("__side") == 1)
         .drop("__side", "__asof_p")
     )
@@ -337,7 +331,6 @@ def nearest_join(
     ts_col: str,
     payload_cols: Sequence[str],
     tie_col: str | None = None,
-    out_col: str = "nearest",
 ) -> DataFrame:
     """Nearest-event join: attach to each left row the right row (matched
     on `on`) whose timestamp is CLOSEST in either direction — the
@@ -386,7 +379,7 @@ def nearest_join(
         .otherwise(fwd)
     )
     return (
-        u.withColumn(out_col, chosen)
+        u.withColumn("nearest", chosen)
         .filter(F.col("__side") == 1)
         .drop("__side", "__np")
     )
@@ -427,14 +420,13 @@ def merge_changeset(
     snapshot: DataFrame,
     changes: DataFrame,
     key: str,
-    op_col: str = "op",
 ) -> DataFrame:
     """MERGE — apply an insert/update/delete changeset to a snapshot (the
     warehouse upsert the reference performs dict-wise on its JSON cache,
     script/itemtoid.py:159 overwrite + script/utils/classes.py:39-55 resume
     sets, generalized to three verbs).
 
-    `changes` carries `key`, `op_col` ('I' | 'U' | 'D'), and every non-key
+    `changes` carries `key`, `op` ('I' | 'U' | 'D'), and every non-key
     column of the snapshot (schema-aligned; cells the change does not touch
     are NULL). Per key: 'D' removes the row, 'U' overwrites the non-NULL
     cells (NULL cells keep the old value), 'I' appends the row. Keys must
@@ -452,7 +444,7 @@ def merge_changeset(
     new rows. Never a read-modify-write of the whole table per change (the
     reference's JSON rewrite) and never N per-row lookups."""
     other = [c for c in snapshot.columns if c != key]
-    op = F.col(f"c.{op_col}")
+    op = F.col("c.op")
     survivors = (
         snapshot.alias("s").join(changes.alias("c"), key, "left")
         .filter(op.isNull() | (op != "D"))
@@ -467,7 +459,7 @@ def merge_changeset(
             ],
         )
     )
-    inserts = changes.filter(F.col(op_col) == "I").select(key, *other)
+    inserts = changes.filter(F.col("op") == "I").select(key, *other)
     return survivors.unionByName(inserts)
 
 

@@ -31,7 +31,6 @@ def resolve_ladder(
     candidates_col: Column,
     lookup: DataFrame,
     row_key: str,
-    lookup_key: str = "qstr",
 ) -> DataFrame:
     """Resolve each row to the first candidate (by ladder rank) that has a
     match in `lookup`. Returns one row per input row that matched:
@@ -41,7 +40,7 @@ def resolve_ladder(
         F.posexplode(candidates_col).alias("rank", "candidate"),
     ).filter(F.col("candidate").isNotNull() & (F.col("candidate") != ""))
     hits = cand.join(
-        lookup.withColumnRenamed(lookup_key, "candidate"), "candidate"
+        lookup.withColumnRenamed("qstr", "candidate"), "candidate"
     )
     w = Window.partitionBy(row_key).orderBy("rank")
     return (

@@ -1,31 +1,15 @@
-"""Deterministic corpus sampling operators.
+"""Deterministic curriculum ordering of a corpus.
 
-Two primitives the inline registry samplers (stratified / mixture /
+Three operators the inline registry samplers (stratified / mixture /
 train-val split in `queries_ext.py`) don't cover:
 
-- `weighted_sample`: weighted sampling WITHOUT replacement
-  (Efraimidis–Spirakis A-ES, "Weighted random sampling with a reservoir",
-  IPL 2006): draw k items with inclusion probability proportional to a
-  weight column — the primitive behind token-weighted corpus draws
-  ("sample 1M documents proportional to token count"). The classic
-  streaming form keeps a size-k heap of u^(1/w) keys; the distributed
-  form is rank-by-key: key_i = ln(u_i)/w_i with u_i uniform, take the
-  global top-k — a TakeOrdered (per-partition top-k + driver merge of
-  k-row heads), never a full sort. u_i is md5-derived, so the draw is
-  reproducible across engines, runs, and cluster sizes, and every key is
-  ROUND()ed before ranking so the order is libm-independent (house rule,
-  cf. tfidf_topk).
-
-- `quantile_gate`: per-group relative filtering — keep the top
-  num/den quantile of each group by a score column (the FineWeb /
-  CCNet-head shape: "keep the most fluent quartile PER LANGUAGE", so
-  high-resource languages don't eat low-resource ones' budget). The
-  exact form ranks inside each group (one shuffle on the group key;
-  partitions are group-sized); the quantile test is pure integer
-  arithmetic (rn * den <= n * num), no float thresholds to disagree on.
-  `quantile_gate_approx` is the 100 TB path: a per-group
-  `percentile_approx` threshold (one agg, broadcast back, one scan) —
-  no per-group sort at all; the exact form is its oracle.
+- `curriculum_order`: stage every document by difficulty (exact NTILE
+  over a bounded-domain two-phase global rank), then a salted,
+  reproducible schedule inside each stage.
+- `curriculum_pacing`: the same staging with a running per-stage token
+  sum, so a trainer can admit each stage by token quota.
+- `curriculum_order_approx`: the 100 TB staging path — stage cuts from
+  one `percentile_approx` agg, with the exact form as its oracle.
 
 Reference scope note: the reference pipeline (katabase/3_WikidataEnrichment)
 has no sampling stage — these extend the engine's training-data surface
@@ -37,92 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# md5 first-12-hex-chars value space: 16^12 buckets.
-_U_DEN = float(16 ** 12) + 1.0
+#: Curriculum stages every registry schedule uses.
+_N_STAGES = 3
 
 
-def es_key(id_col: str, weight_col: str, salt: str = "es",
-           ndigits: int = 6):
-    """The Efraimidis–Spirakis rank key ln(u)/w as a Column: u uniform in
-    (0,1) from the first 12 md5 hex chars of the salted id (exact in a
-    double: 16^12 < 2^53). Larger key (closer to 0) = more likely kept;
-    E-S proves top-k by this key IS weighted sampling without
-    replacement. Rounded so Spark and any SQL twin rank identically."""
-    v = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt + "|"), F.col(id_col).cast("string"))),
-            1, 12),
-        16, 10,
-    ).cast("double")
-    u = (v + F.lit(1.0)) / F.lit(_U_DEN)
-    return F.round(F.log(u) / F.col(weight_col).cast("double"), ndigits)
-
-
-def weighted_sample(df: DataFrame, k: int, weight_col: str,
-                    id_col: str = "doc_id", salt: str = "es") -> DataFrame:
-    """Draw k rows with probability proportional to `weight_col`, without
-    replacement, deterministically. Rows with weight <= 0 are excluded
-    (E-S requires positive weights). Adds `es_key`; ties on the rounded
-    key break by id, so the kept set is a total-order prefix.
-
-    Scale shape: one row-local key computation + TakeOrderedAndProject —
-    each task keeps its local top-k, the driver merges k-row heads; no
-    global sort, no shuffle of the data itself."""
-    keyed = (
-        df.filter(F.col(weight_col).cast("double") > 0)
-        .withColumn("es_key", es_key(id_col, weight_col, salt))
-    )
-    return keyed.orderBy(F.col("es_key").desc(), F.col(id_col)).limit(k)
-
-
-def quantile_gate(scored: DataFrame, score_col: str, group_col: str,
-                  keep_num: int = 1, keep_den: int = 4,
-                  id_col: str = "doc_id") -> DataFrame:
-    """Keep the top keep_num/keep_den fraction of each group by score
-    (score desc, id asc — rank the score ROUNDED upstream per house
-    determinism rules). NULL scores never pass (ranked last, and the
-    integer test already excludes them only if the group quota is hit —
-    so they are filtered explicitly). Adds `grp_rank` and `grp_n`.
-
-    The quantile test `rn * den <= n * num` is integer-exact: both
-    engines agree on ceil/floor behavior without any float threshold.
-    One shuffle on the group key; each window partition is one group."""
-    w = Window.partitionBy(group_col).orderBy(
-        F.col(score_col).desc(), F.col(id_col))
-    ranked = (
-        scored.filter(F.col(score_col).isNotNull())
-        .withColumn("grp_rank", F.row_number().over(w))
-        .withColumn("grp_n", F.count("*").over(Window.partitionBy(group_col)))
-    )
-    return ranked.filter(
-        F.col("grp_rank") * keep_den <= F.col("grp_n") * keep_num)
-
-
-def quantile_gate_approx(scored: DataFrame, score_col: str, group_col: str,
-                         keep_frac: float = 0.25,
-                         accuracy: int = 10000) -> DataFrame:
-    """Scale path for `quantile_gate`: per-group approx threshold
-    (Greenwald-Khanna via percentile_approx) broadcast back, then one
-    filter scan — no per-group sort, so a 10-billion-doc language costs
-    an agg + a scan. Admits slightly more/fewer rows than the exact gate
-    near the threshold (bounded by the sketch accuracy); the exact form
-    is the correctness oracle."""
-    thr = (
-        scored.filter(F.col(score_col).isNotNull())
-        .groupBy(group_col)
-        .agg(F.percentile_approx(
-            F.col(score_col), F.lit(1.0 - keep_frac), F.lit(accuracy)
-        ).alias("_thr"))
-    )
-    return (
-        scored.join(F.broadcast(thr), group_col)
-        .filter(F.col(score_col) >= F.col("_thr"))
-        .drop("_thr")
-    )
-
-
-def _staged(docs: DataFrame, difficulty_col, n_stages: int,
-            id_col: str, max_domain: int,
+def _staged(docs: DataFrame, difficulty_col, n_stages: int, max_domain: int,
             keep_cols: tuple = ()) -> DataFrame | None:
     """Shared STAGING core of `curriculum_order` / `curriculum_pacing`
     (phases 1-2): the bounded-domain two-phase global (difficulty, id)
@@ -161,7 +64,7 @@ def _staged(docs: DataFrame, difficulty_col, n_stages: int,
     # silently drop the row
     dn = difficulty_col.cast("long")
     d = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         dn.isNull().cast("int").alias("_dnull"),
         F.coalesce(dn, F.lit(0)).alias("_diff"),
         *[c if not isinstance(c, str) else F.col(c) for c in keep_cols],
@@ -194,7 +97,7 @@ def _staged(docs: DataFrame, difficulty_col, n_stages: int,
         acc += c
     off_df = spark.createDataFrame(
         offs, "_dnull int, _diff long, _off long")
-    w = (Window.partitionBy("_dnull", "_diff").orderBy(id_col)
+    w = (Window.partitionBy("_dnull", "_diff").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     ranked = (
         d.join(F.broadcast(off_df), ["_dnull", "_diff"])
@@ -214,18 +117,16 @@ def _staged(docs: DataFrame, difficulty_col, n_stages: int,
             .drop("_rank", "_dnull", "_diff"))
 
 
-def curriculum_order(docs: DataFrame, difficulty_col, n_stages: int = 3,
-                     id_col: str = "doc_id",
-                     salt: str = "cur",
+def curriculum_order(docs: DataFrame, difficulty_col,
                      max_domain: int = 200_000,
                      keep_cols: tuple | None = None) -> DataFrame:
-    """Curriculum schedule: split the corpus into `n_stages` difficulty
-    stages (exact NTILE terciles under (difficulty, id) order), shuffle
-    WITHIN each stage (salted md5), and interleave the stages round-robin
-    — training round r sees one doc from every stage, easy to hard, so
-    the model never starves of either. Output adds `stage` (1-based) and
-    `sched_pos` (the deterministic total order: (in-stage rank − 1) ·
-    n_stages + stage − 1).
+    """Curriculum schedule: split the corpus into `_N_STAGES` (3)
+    difficulty stages (exact NTILE terciles under (difficulty, id) order),
+    shuffle WITHIN each stage (salted md5), and interleave the stages
+    round-robin — training round r sees one doc from every stage, easy to
+    hard, so the model never starves of either. Output adds `stage`
+    (1-based) and `sched_pos` (the deterministic total order: (in-stage
+    rank − 1) · 3 + stage − 1).
 
     `keep_cols` — which non-id input columns survive into the output
     (default None = all of them, the historical contract). Callers that
@@ -247,11 +148,11 @@ def curriculum_order(docs: DataFrame, difficulty_col, n_stages: int = 3,
         one evaluation of an expensive projection across the eager
         collects and the final execution (r12, guide §1.2/§2.3).
     """
-    assert 2 <= n_stages <= 16
+
     spark = docs.sparkSession
     if keep_cols is None:
-        keep_cols = tuple(c for c in docs.columns if c != id_col)
-    staged = _staged(docs, difficulty_col, n_stages, id_col, max_domain,
+        keep_cols = tuple(c for c in docs.columns if c != "doc_id")
+    staged = _staged(docs, difficulty_col, _N_STAGES, max_domain,
                      keep_cols=keep_cols)
     if staged is not None:
         # one evaluation of (scan -> phase-1 rank -> stage) serves both
@@ -259,15 +160,15 @@ def curriculum_order(docs: DataFrame, difficulty_col, n_stages: int = 3,
         from pyspark import StorageLevel
         staged = staged.persist(StorageLevel.MEMORY_AND_DISK)
     if staged is None:  # empty input — historical empty shape
-        return (docs.select(id_col, *keep_cols)
+        return (docs.select("doc_id", *keep_cols)
                 .withColumn("stage", F.lit(0))
                 .withColumn("sched_pos", F.lit(0).cast("long")))
     # phase 3: shuffle within each stage, interleave round-robin — ONE
     # job for all stages: the prefix-sum buckets are (stage, md5 prefix),
     # so the per-bucket totals collect is n_stages·256 rows and the only
     # window partitions by (stage, bucket)
-    hx = F.md5(F.concat(F.lit(salt), F.col("stage").cast("string"),
-                        F.lit("|"), F.col(id_col).cast("string")))
+    hx = F.md5(F.concat(F.lit("cur"), F.col("stage").cast("string"),
+                        F.lit("|"), F.col("doc_id").cast("string")))
     keyed = (staged.withColumn("_hx", hx)
              .withColumn("_bkt", F.substring("_hx", 1, 2)))
     totals = sorted(
@@ -282,7 +183,7 @@ def curriculum_order(docs: DataFrame, difficulty_col, n_stages: int = 3,
         acc2 += c
     off2_df = spark.createDataFrame(
         offs2, "stage int, _bkt string, _soff long")
-    w2 = (Window.partitionBy("stage", "_bkt").orderBy("_hx", id_col)
+    w2 = (Window.partitionBy("stage", "_bkt").orderBy("_hx", "doc_id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (
         keyed.join(F.broadcast(off2_df), ["stage", "_bkt"])
@@ -290,17 +191,13 @@ def curriculum_order(docs: DataFrame, difficulty_col, n_stages: int = 3,
                     .cast("long"))
         .withColumn(
             "sched_pos",
-            ((F.col("_srk") - 1) * n_stages + F.col("stage") - 1)
+            ((F.col("_srk") - 1) * _N_STAGES + F.col("stage") - 1)
             .cast("long"))
         .drop("_hx", "_bkt", "_soff", "_srk")
     )
 
 
-def curriculum_pacing(docs: DataFrame, difficulty_col, tok_col,
-                      quotas, n_stages: int = 3,
-                      id_col: str = "doc_id", salt: str = "cur",
-                      n_buckets: int = 256,
-                      max_domain: int = 200_000,
+def curriculum_pacing(docs: DataFrame, difficulty_col, tok_col, quotas,
                       extra_cols: tuple = ()) -> DataFrame:
     """Per-stage curriculum PACING: compose `curriculum_order`'s staging
     with `token_budget_mixture`'s token-budget admission — each stage's
@@ -316,14 +213,15 @@ def curriculum_pacing(docs: DataFrame, difficulty_col, tok_col,
     Scale shape: staging is `curriculum_order`'s bounded-domain
     two-phase rank; the per-stage running TOKEN sum is the same
     two-phase prefix-sum primitive keyed by (stage, md5-prefix bucket)
-    — the driver sees n_stages x n_buckets count rows, never the
-    corpus, and no window partition exceeds ~stage/n_buckets rows.
+    — the driver sees n_stages x 256 count rows, never the corpus,
+    and no window partition exceeds ~stage/256 rows.
     The oracle states the same admission with one plain
     SUM() OVER (PARTITION BY stage ORDER BY md5) window.
 
     Output: id, stage, n_tok, cum_tok (inclusive, in-stage), phase.
     """
-    assert len(quotas) == n_stages and all(len(q) == len(quotas[0])
+
+    assert len(quotas) == _N_STAGES and all(len(q) == len(quotas[0])
                                            for q in quotas)
     spark = docs.sparkSession
     # Staging WITHOUT the schedule rank (r12, guide §1.2): pacing never
@@ -334,7 +232,7 @@ def curriculum_pacing(docs: DataFrame, difficulty_col, tok_col,
     # column never reaches an exchange.
     tok_expr = (tok_col if not isinstance(tok_col, str)
                 else F.col(tok_col)).cast("long").alias("_tok")
-    staged = _staged(docs, difficulty_col, n_stages, id_col, max_domain,
+    staged = _staged(docs, difficulty_col, _N_STAGES, 200_000,
                      keep_cols=(tok_expr,
                                 *[F.col(c) for c in extra_cols]))
     if staged is not None:
@@ -343,9 +241,9 @@ def curriculum_pacing(docs: DataFrame, difficulty_col, tok_col,
         from pyspark import StorageLevel
         staged = staged.persist(StorageLevel.MEMORY_AND_DISK)
     if staged is None:  # empty input — match the historical empty shape
-        id_t = dict(docs.dtypes)[id_col]
+        id_t = dict(docs.dtypes)["doc_id"]
         return docs.sparkSession.createDataFrame(
-            [], f"{id_col} {id_t}, stage int, n_tok long, cum_tok long, "
+            [], f"doc_id {id_t}, stage int, n_tok long, cum_tok long, "
                 f"phase int" + "".join(
                     f", {c} {t}" for c, t in
                     (docs.select(*extra_cols).dtypes if extra_cols
@@ -353,10 +251,10 @@ def curriculum_pacing(docs: DataFrame, difficulty_col, tok_col,
     # two-phase exclusive prefix sum of tokens per (stage, hash bucket),
     # under the SAME in-stage order the curriculum schedule uses
     plen = 1
-    while 16 ** plen < n_buckets:
+    while 16 ** plen < 256:
         plen += 1
-    hx = F.md5(F.concat(F.lit(salt), F.col("stage").cast("string"),
-                        F.lit("|"), F.col(id_col).cast("string")))
+    hx = F.md5(F.concat(F.lit("cur"), F.col("stage").cast("string"),
+                        F.lit("|"), F.col("doc_id").cast("string")))
     keyed = (staged.withColumn("_hx", hx)
              .withColumn("_bkt", F.substring("_hx", 1, plen)))
     totals = sorted(
@@ -371,7 +269,7 @@ def curriculum_pacing(docs: DataFrame, difficulty_col, tok_col,
         acc += t
     off_df = spark.createDataFrame(
         offs, "stage int, _bkt string, _toff long")
-    w = (Window.partitionBy("stage", "_bkt").orderBy("_hx", id_col)
+    w = (Window.partitionBy("stage", "_bkt").orderBy("_hx", "doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cum = (F.col("_toff") + F.sum("_tok").over(w)).cast("long")
     with_cum = (keyed.join(F.broadcast(off_df), ["stage", "_bkt"])
@@ -382,57 +280,53 @@ def curriculum_pacing(docs: DataFrame, difficulty_col, tok_col,
     phase = F.lit(None).cast("int")
     for p in range(n_phases - 1, -1, -1):
         b = F.lit(bounds[0][p])
-        for s in range(1, n_stages):
+        for s in range(1, _N_STAGES):
             b = F.when(F.col("stage") == s + 1,
                        F.lit(bounds[s][p])).otherwise(b)
         phase = F.when(F.col("cum_tok") <= b,
                        F.lit(p + 1)).otherwise(phase)
     return (with_cum.withColumn("phase", phase)
             .filter(F.col("phase").isNotNull())
-            .select(id_col, "stage",
+            .select("doc_id", "stage",
                     F.col("_tok").alias("n_tok"), "cum_tok", "phase",
                     *extra_cols))
 
 
-def curriculum_order_approx(docs: DataFrame, difficulty_col,
-                            n_stages: int = 3, id_col: str = "doc_id",
-                            salt: str = "cur",
-                            accuracy: int = 10000) -> DataFrame:
+def curriculum_order_approx(docs: DataFrame, difficulty_col) -> DataFrame:
     """Scale path for `curriculum_order`'s STAGING: stage boundaries
     from one `percentile_approx` agg (Greenwald-Khanna sketch, O(1)
     driver rows) instead of the exact per-value offset table — the form
     for difficulty domains too wide even for bucketing. Stages may
     differ from exact NTILE near the quantile boundaries (bounded by
-    the sketch accuracy); the exact form is the correctness oracle
-    (`quantile_gate` / `quantile_gate_approx` pairing discipline).
+    the sketch accuracy); the exact form is the correctness oracle.
 
     The in-stage shuffle + round-robin interleave are the same salted
     md5 schedule as the exact form, so downstream pacing composes
     unchanged. NULL difficulty = hardest (stage n_stages), matching the
     exact form's NULLs-last rule."""
-    assert 2 <= n_stages <= 16
+
     dn = difficulty_col.cast("double")
-    probs = [i / n_stages for i in range(1, n_stages)]
+    probs = [i / _N_STAGES for i in range(1, _N_STAGES)]
     cuts = docs.select(
         F.percentile_approx(dn, F.array(*[F.lit(p) for p in probs]),
-                            F.lit(accuracy)).alias("c")).first()["c"]
+                            F.lit(10000)).alias("c")).first()["c"]
     # Empty input or all-NULL difficulty: percentile_approx yields NULL
     # cuts. No finite boundaries exist, so every row falls through to
     # the hardest stage (the NULLs-last rule), and on a truly empty
     # frame the two-phase rank below degenerates to an empty result —
     # mirroring the exact form's n_total == 0 early return instead of
     # raising TypeError on float(None).
-    stage = F.lit(n_stages)
+    stage = F.lit(_N_STAGES)
     if cuts is not None:
-        for i in range(n_stages - 2, -1, -1):
+        for i in range(_N_STAGES - 2, -1, -1):
             stage = F.when(dn <= F.lit(float(cuts[i])),
                            F.lit(i + 1)).otherwise(stage)
-    stage = F.when(dn.isNull(), F.lit(n_stages)).otherwise(stage)
+    stage = F.when(dn.isNull(), F.lit(_N_STAGES)).otherwise(stage)
     staged = docs.withColumn("stage", stage.cast("int"))
     # same two-phase in-stage shuffle rank as the exact form
     spark = docs.sparkSession
-    hx = F.md5(F.concat(F.lit(salt), F.col("stage").cast("string"),
-                        F.lit("|"), F.col(id_col).cast("string")))
+    hx = F.md5(F.concat(F.lit("cur"), F.col("stage").cast("string"),
+                        F.lit("|"), F.col("doc_id").cast("string")))
     keyed = (staged.withColumn("_hx", hx)
              .withColumn("_bkt", F.substring("_hx", 1, 2)))
     totals = sorted(
@@ -447,7 +341,7 @@ def curriculum_order_approx(docs: DataFrame, difficulty_col,
         acc += c
     off_df = spark.createDataFrame(
         offs, "stage int, _bkt string, _soff long")
-    w = (Window.partitionBy("stage", "_bkt").orderBy("_hx", id_col)
+    w = (Window.partitionBy("stage", "_bkt").orderBy("_hx", "doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (
         keyed.join(F.broadcast(off_df), ["stage", "_bkt"])
@@ -455,7 +349,7 @@ def curriculum_order_approx(docs: DataFrame, difficulty_col,
                     .cast("long"))
         .withColumn(
             "sched_pos",
-            ((F.col("_srk") - 1) * n_stages + F.col("stage") - 1)
+            ((F.col("_srk") - 1) * _N_STAGES + F.col("stage") - 1)
             .cast("long"))
         .drop("_hx", "_bkt", "_soff", "_srk")
     )

@@ -132,10 +132,12 @@ def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
 _Q = ("query_id", "qv", "qn")
 _I = ("item_id", "iv", "inorm")
 
+#: Width of the `embeddings` vectors the fixed-width LSH paths hash.
+_DIM = 64
 
-def _vec_side(df: DataFrame, id_col: str, vec_col: str,
-              names: tuple[str, str, str], dim: int | None,
-              *extra: Column, **derived) -> DataFrame:
+
+def _vec_side(df: DataFrame, id_col: str, names: tuple[str, str, str],
+              dim: int | None, *extra: Column, **derived) -> DataFrame:
     """One side of a cosine pair join: `names` = (id, vector, norm) —
     the id aliased (kept as is when the name is unchanged), `extra`
     columns after it, the vector cast to double, then one column per
@@ -144,7 +146,7 @@ def _vec_side(df: DataFrame, id_col: str, vec_col: str,
     computed once, not once per pair it meets."""
     i, v, n = names
     idc = F.col(id_col) if i == id_col else F.col(id_col).alias(i)
-    side = df.select(idc, *extra, _as_double(F.col(vec_col)).alias(v))
+    side = df.select(idc, *extra, _as_double(F.col("embedding")).alias(v))
     for name, fn in derived.items():
         side = side.withColumn(name, fn(F.col(v)))
     return side.withColumn(n, l2norm(F.col(v), dim))
@@ -184,7 +186,6 @@ def _rerank_topk(scored: DataFrame, k: int,
 
 
 def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
                 dim: int | None = None) -> DataFrame:
     """Exact brute-force top-k neighbors for each query vector.
 
@@ -198,8 +199,8 @@ def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 5,
     # cosine expression is 3× the tree Catalyst has to carry around).
     # Bit-identical to the fused form: same l2norm subexpression, same
     # (q_norm * i_norm) multiplication order, same try_divide.
-    q = _vec_side(queries, id_col, vec_col, _Q, dim)
-    it = _vec_side(items, id_col, vec_col, _I, dim)
+    q = _vec_side(queries, "vec_id", _Q, dim)
+    it = _vec_side(items, "vec_id", _I, dim)
     scored = (
         it.join(F.broadcast(q), F.col("item_id") != F.col("query_id"))
         .select("query_id", "item_id", _cos_sim("qv", "iv", "qn", "inorm", dim))
@@ -276,21 +277,21 @@ def _lsh_bucket_udf(spark, planes: list[list[float]]):
     return _model_udf(spark, "string", bucket, P.shape[1], P)
 
 
-def lsh_ann(items: DataFrame, queries: DataFrame, k: int = 5,
-            n_planes: int = 6, dim: int = 64,
-            id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def lsh_ann(items: DataFrame, queries: DataFrame) -> DataFrame:
     """Approximate top-k: candidates = items in the query's LSH bucket,
     re-ranked exactly. Recall < 1.0 by design; the candidate join shuffles
     on the bucket signature instead of forming the full cross product."""
-    bucket = _lsh_bucket_udf(items.sparkSession, hyperplanes(dim, n_planes))
-    it = _vec_side(items, id_col, vec_col, _I, dim, bucket=bucket)
-    q = _vec_side(queries, id_col, vec_col, _Q, dim, bucket=bucket)
+
+    bucket = _lsh_bucket_udf(items.sparkSession, hyperplanes(_DIM, 6))
+    it = _vec_side(items, "vec_id", _I, _DIM, bucket=bucket)
+    q = _vec_side(queries, "vec_id", _Q, _DIM, bucket=bucket)
     scored = (
         it.join(F.broadcast(q), "bucket")
         .filter(F.col("item_id") != F.col("query_id"))
-        .select("query_id", "item_id", _cos_sim("qv", "iv", "qn", "inorm", dim))
+        .select("query_id", "item_id",
+                _cos_sim("qv", "iv", "qn", "inorm", _DIM))
     )
-    return _rerank_topk(scored, k)
+    return _rerank_topk(scored, 5)
 
 
 def _lsh_multi_sig_udf(spark, planes: list[list[float]], n_tables: int,
@@ -310,9 +311,8 @@ def _lsh_multi_sig_udf(spark, planes: list[list[float]], n_tables: int,
     return _model_udf(spark, "array<string>", sigs, P.shape[1], P)
 
 
-def lsh_ann_multi(items: DataFrame, queries: DataFrame, k: int = 5,
-                  n_planes: int = 6, n_tables: int = 48, dim: int = 64,
-                  id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def lsh_ann_multi(items: DataFrame, queries: DataFrame,
+                  n_tables: int = 48) -> DataFrame:
     """Multi-table random-hyperplane LSH — the standard recall-tunable ANN
     structure: L independent tables of b planes each; candidates = items
     sharing the query's signature in ANY table; exact cosine re-rank over
@@ -323,11 +323,13 @@ def lsh_ann_multi(items: DataFrame, queries: DataFrame, k: int = 5,
     of an equi-join + distinct, and vectors are fetched back by id for the
     re-rank. Miss probability per true neighbor is (1 - p^b)^L with
     p = 1 - θ/π, so recall is tuned by (b, L) without touching the plan."""
+    n_planes = 6
+
     spark = items.sparkSession
     sig = _lsh_multi_sig_udf(
-        spark, hyperplanes(dim, n_planes * n_tables), n_tables, n_planes)
-    it = _vec_side(items, id_col, vec_col, _I, dim)
-    q = _vec_side(queries, id_col, vec_col, _Q, dim)
+        spark, hyperplanes(_DIM, n_planes * n_tables), n_tables, n_planes)
+    it = _vec_side(items, "vec_id", _I, _DIM)
+    q = _vec_side(queries, "vec_id", _Q, _DIM)
     it_sig = it.select("item_id", F.explode(sig(F.col("iv"))).alias("tb"))
     q_sig = q.select("query_id", F.explode(sig(F.col("qv"))).alias("tb"))
     cand = (
@@ -337,9 +339,10 @@ def lsh_ann_multi(items: DataFrame, queries: DataFrame, k: int = 5,
     )
     scored = (
         cand.join(it, "item_id").join(F.broadcast(q), "query_id")
-        .select("query_id", "item_id", _cos_sim("qv", "iv", "qn", "inorm", dim))
+        .select("query_id", "item_id",
+                _cos_sim("qv", "iv", "qn", "inorm", _DIM))
     )
-    return _rerank_topk(scored, k)
+    return _rerank_topk(scored, 5)
 
 
 def topk_recall_gate(approx: DataFrame, exact: DataFrame, n_queries: int,
@@ -395,9 +398,8 @@ def _probe_cells_udf(spark, centroids: list[list[float]], nprobe: int,
                       (C, (C * C).sum(axis=1)), bc)
 
 
-def train_ivf_centroids(items: DataFrame, n_cells: int = 16, iters: int = 2,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> list[list[float]]:
+def train_ivf_centroids(items: DataFrame, n_cells: int = 16,
+                        iters: int = 2) -> list[list[float]]:
     """Deterministic Lloyd's k-means over L2-normalized vectors, expressed
     as DataFrame plans (assignment = Arrow-vectorized argmin against the
     broadcast centroid matrix, row-local; update = posexplode + (cell,dim)
@@ -413,7 +415,8 @@ def train_ivf_centroids(items: DataFrame, n_cells: int = 16, iters: int = 2,
     dimension vote, the seed scan, and every Lloyd iteration."""
     spark = items.sparkSession
     v = items.select(
-        F.col(id_col).alias("vid"), _normalize(_as_double(F.col(vec_col))).alias("v")
+        F.col("vec_id").alias("vid"),
+        _normalize(_as_double(F.col("embedding"))).alias("v"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # seed only from vectors of the table's dominant dimension, with every
     # element finite — one NULL/zero-norm/mis-sized row must not poison the
@@ -466,8 +469,7 @@ def train_ivf_centroids(items: DataFrame, n_cells: int = 16, iters: int = 2,
 
 
 def ivf_ann(items: DataFrame, queries: DataFrame, k: int = 5,
-            n_cells: int = 16, nprobe: int = 4, iters: int = 2,
-            id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+            n_cells: int = 16, nprobe: int = 4) -> DataFrame:
     """IVF approximate top-k — the second scale path next to `lsh_ann`.
 
     Items are partitioned into `n_cells` Voronoi cells of a deterministic
@@ -479,16 +481,16 @@ def ivf_ann(items: DataFrame, queries: DataFrame, k: int = 5,
     Assignment is Arrow-vectorized against the broadcast quantizer (see
     `_probe_cells_udf`); the exact re-rank stays a JVM column fold."""
     spark = items.sparkSession
-    centroids = train_ivf_centroids(items, n_cells, iters, id_col, vec_col)
+    centroids = train_ivf_centroids(items, n_cells)
     if not centroids:
-        return _empty_topk(spark, queries, items, id_col)
+        return _empty_topk(spark, queries, items)
     # one model broadcast shared by both assignment UDFs (query lifetime)
     assign1 = _probe_cells_udf(spark, centroids, nprobe=1)
     probe_n = _probe_cells_udf(spark, centroids, nprobe=nprobe, bc=assign1.bc)
     dim = len(centroids[0])
-    it = _vec_side(items, id_col, vec_col, _I, dim,
+    it = _vec_side(items, "vec_id", _I, dim,
                    cell=lambda v: assign1(_normalize(v))[0])
-    q = _vec_side(queries, id_col, vec_col, _Q, dim,
+    q = _vec_side(queries, "vec_id", _Q, dim,
                   cell=lambda v: F.explode(probe_n(_normalize(v))))
     scored = (
         it.join(F.broadcast(q), "cell")
@@ -498,41 +500,37 @@ def ivf_ann(items: DataFrame, queries: DataFrame, k: int = 5,
     return _rerank_topk(scored, k)
 
 
-def cosine_lsh_params(threshold: float, n: int, target_recall: float = 0.9,
-                      target_bucket: int = 32, min_bits: int = 4,
-                      max_bits: int = 24,
-                      max_tables: int = 64) -> tuple[int, int]:
+def cosine_lsh_params(threshold: float, n: int) -> tuple[int, int]:
     """(bits_per_table, n_tables) for hyperplane LSH over an n-vector
     corpus, the cosine twin of `dedup.lsh_params_for`: bits come from
-    CORPUS SIZE (2^bits buckets per table, targeting ~`target_bucket`
+    CORPUS SIZE (2^bits buckets per table, targeting ~32
     vectors per bucket so the per-bucket pair product stays constant as n
     grows — the fix for the 64-buckets-forever default the r5 audit
     flagged as quadratic), then enough tables that a true pair at cosine
-    `threshold` collides somewhere with probability >= `target_recall`:
+    `threshold` collides somewhere with probability >= 0.9:
     P(bit agrees) = 1 - θ/π (Charikar, "Similarity estimation techniques
     from rounding algorithms", STOC 2002), so
     P(miss everywhere) = (1 - p^bits)^tables. `max_tables` bounds the
     signature-table row multiplication; if the cap binds, recall degrades
     gracefully and `embedding_recall_audit` is the instrument that sees
     it."""
+    min_bits = 4
+    max_tables = 64
     if n <= 1:
         return min_bits, 1
-    bits = max(min_bits, min(max_bits,
-                             math.ceil(math.log2(max(2.0, n / target_bucket)))))
+    bits = max(min_bits, min(24, math.ceil(math.log2(max(2.0, n / 32)))))
     p_bit = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
     p_tbl = p_bit ** bits
     if p_tbl >= 1.0 - 1e-12:
         return bits, 1
     if p_tbl <= 0.0:
         return bits, max_tables
-    tables = math.ceil(math.log(1.0 - target_recall)
-                       / math.log(1.0 - p_tbl))
+    tables = math.ceil(math.log(1.0 - 0.9) / math.log(1.0 - p_tbl))
     return bits, max(1, min(max_tables, tables))
 
 
 def embedding_neardup(items: DataFrame, threshold: float = 0.95,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
-                      n_planes: int | str = "auto", dim: int = 64,
+                      id_col: str = "vec_id", n_planes: int | str = "auto",
                       n_tables: int | None = None,
                       max_bucket: int | None = 64) -> DataFrame:
     """Dedup tier 5 — (id_a, id_b, cos_sim) pairs with cosine >=
@@ -546,7 +544,7 @@ def embedding_neardup(items: DataFrame, threshold: float = 0.95,
     whose fixed 2^6 = 64 buckets made the bucket self-join ~n²/128 pairs
     at ANY corpus size):
     - `n_planes="auto"` derives bits-per-table from the corpus COUNT
-      (2^bits buckets/table, ~`target_bucket` vectors each) and the table
+      (2^bits buckets/table, ~32 vectors each) and the table
       count from the collision S-curve at `threshold` — see
       `cosine_lsh_params`. Pass ints to pin (n_planes[, n_tables]) for
       oracle-replayable registry forms.
@@ -566,6 +564,7 @@ def embedding_neardup(items: DataFrame, threshold: float = 0.95,
     explode → cap-window) pipeline, the same broadcast-defeats-reuse
     shape fixed for minhash/SNM/tfidf this round (r12 §2).
     """
+
     spark = items.sparkSession
     if n_planes == "auto":
         bits, tables = cosine_lsh_params(
@@ -575,10 +574,10 @@ def embedding_neardup(items: DataFrame, threshold: float = 0.95,
     else:
         bits, tables = int(n_planes), (1 if n_tables is None else n_tables)
     sig = _lsh_multi_sig_udf(
-        spark, hyperplanes(dim, bits * tables), tables, bits)
+        spark, hyperplanes(_DIM, bits * tables), tables, bits)
     # per-row norm precomputed before the pair join (bit-identical to the
     # fused cosine: same subexpression, same a·b multiplication order)
-    v = _vec_side(items, id_col, vec_col, (id_col, "v", "nrm"), dim) \
+    v = _vec_side(items, id_col, (id_col, "v", "nrm"), _DIM) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     sg = v.select(F.col(id_col),
                   F.explode(sig(F.col("v"))).alias("sig"))
@@ -602,16 +601,14 @@ def embedding_neardup(items: DataFrame, threshold: float = 0.95,
                   F.col("nrm").alias("bnrm"))
     return (
         cand.join(va, "id_a").join(vb, "id_b")
-        .select("id_a", "id_b", _cos_sim("av", "bv", "anrm", "bnrm", dim))
+        .select("id_a", "id_b", _cos_sim("av", "bv", "anrm", "bnrm", _DIM))
         .filter(~F.isnan("cos_sim") & (F.col("cos_sim") >= threshold))
     )
 
 
 def embedding_recall_audit(items: DataFrame, pipeline_pairs: DataFrame,
-                           sample: int = 200, threshold: float = 0.95,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           dim: int = 64) -> DataFrame:
+                           sample: int = 200,
+                           threshold: float = 0.95) -> DataFrame:
     """Measured recall of the SEMANTIC near-dup tier, mirror of
     `dedup.dedup_recall_audit` for the embedding side — hyperplane-LSH
     recall at a cosine threshold is a parameter promise, and silent
@@ -625,20 +622,21 @@ def embedding_recall_audit(items: DataFrame, pipeline_pairs: DataFrame,
     with `pipeline_pairs` restricted to the sample. One row:
     (sample_vecs, true_pairs, found_pairs, recall); recall is NULL when
     the sample holds no true pair (nothing to measure, not recall 1.0)."""
+
     ids = (
-        items.select(F.col(id_col))
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        items.select(F.col("vec_id"))
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(sample)
     )
-    sub = items.join(F.broadcast(ids), id_col, "left_semi")
-    v = _vec_side(sub, id_col, vec_col, (id_col, "v", "nrm"), dim)
+    sub = items.join(F.broadcast(ids), "vec_id", "left_semi")
+    v = _vec_side(sub, "vec_id", ("vec_id", "v", "nrm"), _DIM)
     a, b = v.alias("a"), v.alias("b")
     truth = (
-        a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            _cos_sim("a.v", "b.v", "a.nrm", "b.nrm", dim),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+            _cos_sim("a.v", "b.v", "a.nrm", "b.nrm", _DIM),
         )
         .filter(~F.isnan("cos_sim") & (F.col("cos_sim") >= threshold))
         .select("id_a", "id_b")
@@ -676,7 +674,7 @@ def embedding_recall_audit(items: DataFrame, pipeline_pairs: DataFrame,
 # end-to-end.
 
 
-def _pq_assign_udf(spark, codebooks: list[list[list[float]]], bc=None):
+def _pq_assign_udf(spark, codebooks: list[list[list[float]]]):
     """codes(vector) -> array<int> of length M: per sub-space nearest
     centroid id against the BROADCAST codebook tensor (M × K × d_sub).
     Per Arrow batch, all M sub-space distance matrices come from one
@@ -695,12 +693,11 @@ def _pq_assign_udf(spark, codebooks: list[list[list[float]]], bc=None):
         return list(np.argmin(d, axis=2).astype(np.int32))  # stable: first min
 
     return _model_udf(spark, "array<int>", assign, m_ * ds,
-                      (C, (C * C).sum(axis=2)), bc)
+                      (C, (C * C).sum(axis=2)), None)
 
 
 def train_pq_codebooks(items: DataFrame, m: int = 8, k_codes: int = 16,
-                       iters: int = 2, id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> list[list[list[float]]]:
+                       iters: int = 2) -> list[list[list[float]]]:
     """Deterministic per-sub-space Lloyd's k-means over L2-normalized
     vectors → codebook tensor (m × k_codes × dim/m). Seeding is md5-ordered
     vector ids (the SAME first k_codes vectors seed every sub-space — no
@@ -708,8 +705,8 @@ def train_pq_codebooks(items: DataFrame, m: int = 8, k_codes: int = 16,
     (sub-space, code, dim) hash agg. The codebook (m·k_codes·dim doubles)
     is driver-side model state, like the IVF centroids."""
     v = items.select(
-        F.col(id_col).alias("vid"),
-        _normalize(_as_double(F.col(vec_col))).alias("v"),
+        F.col("vec_id").alias("vid"),
+        _normalize(_as_double(F.col("embedding"))).alias("v"),
     )
     return _train_pq_vdf(items.sparkSession, v, m, k_codes, iters)
 
@@ -778,9 +775,7 @@ def _train_pq_vdf_inner(v: DataFrame, m: int, k_codes: int,
     return books
 
 
-def pq_encode(items: DataFrame, books: list[list[list[float]]],
-              id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
+def pq_encode(items: DataFrame, books: list[list[list[float]]]) -> DataFrame:
     """(id, codes) — the persistable compressed index: M small ints per
     vector (one row-local Arrow pass, no shuffle). This is the table a
     production pipeline stores and appends to; all future ADC scans read
@@ -790,11 +785,11 @@ def pq_encode(items: DataFrame, books: list[list[list[float]]],
         # NULL codes (the mis-sized-vector convention), no numpy shape
         # crash in the broadcast setup
         return items.select(
-            F.col(id_col), F.lit(None).cast("array<int>").alias("codes"))
+            F.col("vec_id"), F.lit(None).cast("array<int>").alias("codes"))
     assign = _pq_assign_udf(items.sparkSession, books)
     return items.select(
-        F.col(id_col),
-        assign(_normalize(_as_double(F.col(vec_col)))).alias("codes"),
+        F.col("vec_id"),
+        assign(_normalize(_as_double(F.col("embedding")))).alias("codes"),
     )
 
 
@@ -807,8 +802,8 @@ def pq_encode(items: DataFrame, books: list[list[list[float]]],
 PQ_MAX_QUERIES = 100_000
 
 
-def _pq_query_luts(spark, queries: DataFrame, books, id_col: str,
-                   vec_col: str, max_queries: int = PQ_MAX_QUERIES):
+def _pq_query_luts(spark, queries: DataFrame, books,
+                   max_queries: int = PQ_MAX_QUERIES):
     """Collect the (bounded) query set and build each query's M×K ADC
     lookup table of sub-space inner products driver-side. Returns
     (collected query rows incl. raw vectors for exact re-rank, LUT
@@ -820,11 +815,11 @@ def _pq_query_luts(spark, queries: DataFrame, books, id_col: str,
     silently becoming a driver-side bottleneck."""
     C = np.asarray(books, dtype=np.float64)          # (M, K, ds)
     m_, _, ds = C.shape
-    idt = queries.schema[id_col].dataType
+    idt = queries.schema["vec_id"].dataType
     qrows = queries.select(
-        F.col(id_col).alias("query_id"),
-        _normalize(_as_double(F.col(vec_col))).alias("qv"),
-        _as_double(F.col(vec_col)).alias("rv"),
+        F.col("vec_id").alias("query_id"),
+        _normalize(_as_double(F.col("embedding"))).alias("qv"),
+        _as_double(F.col("embedding")).alias("rv"),
     ).filter(F.col("qv").isNotNull()
              & (F.size("qv") == m_ * ds)
              & ~F.exists("qv", lambda x: x.isNull() | F.isnan(x))
@@ -885,14 +880,14 @@ def _adc_score(codes_col: Column, lut_col: Column, m: int) -> Column:
     return F.round(_adc_sum(codes_col, lut_col, m), 6)
 
 
-def _empty_topk(spark, queries: DataFrame, items: DataFrame, id_col: str,
+def _empty_topk(spark, queries: DataFrame, items: DataFrame,
                 score: str = "cos_sim") -> DataFrame:
     """The typed empty result of an ANN path with no model or no usable
     query: (query_id, item_id, `score`, rnk), each id typed from its own
     side's schema, exactly as the non-empty path types it."""
     return spark.createDataFrame([], T.StructType([
-        T.StructField("query_id", queries.schema[id_col].dataType),
-        T.StructField("item_id", items.schema[id_col].dataType),
+        T.StructField("query_id", queries.schema["vec_id"].dataType),
+        T.StructField("item_id", items.schema["vec_id"].dataType),
         T.StructField(score, T.DoubleType()),
         T.StructField("rnk", T.LongType()),
     ]))
@@ -925,9 +920,7 @@ def _pq_rerank(spark, cand: DataFrame, it: DataFrame, qrows, idt,
 
 
 def pq_adc_topk(codes: DataFrame, queries: DataFrame,
-                books: list[list[list[float]]], k: int = 5,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+                books: list[list[list[float]]], k: int = 5) -> DataFrame:
     """ADC-only top-k against a stored codes table — the query path of a
     maintained PQ index (`streaming/embedding_admission.py`): ranks purely
     on code lookups, touching NO float vectors (at scale the float column
@@ -939,10 +932,10 @@ def pq_adc_topk(codes: DataFrame, queries: DataFrame,
     # partition) mean there is nothing to score: empty result, not a
     # driver-side shape crash
     qrows, q_lut = (None, None) if not books else _pq_query_luts(
-        spark, queries, books, id_col, vec_col)
+        spark, queries, books)
     if q_lut is None:
-        return _empty_topk(spark, queries, codes, id_col, "approx_sim")
-    it = codes.select(F.col(id_col).alias("item_id"), "codes") \
+        return _empty_topk(spark, queries, codes, "approx_sim")
+    it = codes.select(F.col("vec_id").alias("item_id"), "codes") \
         .filter(F.col("codes").isNotNull())
     approx = (
         it.join(F.broadcast(q_lut))
@@ -957,8 +950,7 @@ def pq_adc_topk(codes: DataFrame, queries: DataFrame,
 
 
 def pq_ann(items: DataFrame, queries: DataFrame, k: int = 5, m: int = 8,
-           k_codes: int = 16, iters: int = 2, refine: int = 4,
-           id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+           k_codes: int = 16, refine: int = 4) -> DataFrame:
     """Approximate top-k via PQ codes + ADC scan + exact re-rank.
 
     Plan shape (what survives a 100× scale-up):
@@ -978,19 +970,20 @@ def pq_ann(items: DataFrame, queries: DataFrame, k: int = 5, m: int = 8,
     Returns (query_id, item_id, cos_sim, rnk) like every ANN path here —
     cos_sim is EXACT on the surviving candidates."""
     spark = items.sparkSession
-    books = train_pq_codebooks(items, m, k_codes, iters, id_col, vec_col)
+    books = train_pq_codebooks(items, m, k_codes)
     if not books:
-        return _empty_topk(spark, queries, items, id_col)
+        return _empty_topk(spark, queries, items)
     assign = _pq_assign_udf(spark, books)
     it = items.select(
-        F.col(id_col).alias("item_id"), _as_double(F.col(vec_col)).alias("iv")
+        F.col("vec_id").alias("item_id"),
+        _as_double(F.col("embedding")).alias("iv"),
     ).withColumn("codes", assign(_normalize(F.col("iv"))))
 
     # per-query ADC lookup tables, built driver-side from the (bounded)
     # query set: lut[s][j] = <q_norm sub-space s, codebook[s][j]>
-    qrows, q_lut = _pq_query_luts(spark, queries, books, id_col, vec_col)
+    qrows, q_lut = _pq_query_luts(spark, queries, books)
     if q_lut is None:
-        return _empty_topk(spark, queries, items, id_col)
+        return _empty_topk(spark, queries, items)
 
     approx = (
         it.join(F.broadcast(q_lut))
@@ -1004,13 +997,12 @@ def pq_ann(items: DataFrame, queries: DataFrame, k: int = 5, m: int = 8,
         .select("query_id", "item_id")
     )
     return _pq_rerank(spark, cand, it, qrows,
-                      queries.schema[id_col].dataType, books, k)
+                      queries.schema["vec_id"].dataType, books, k)
 
 
 def ivfpq_ann(items: DataFrame, queries: DataFrame, k: int = 5,
               n_cells: int = 16, nprobe: int = 4, m: int = 8,
-              k_codes: int = 16, iters: int = 2, refine: int = 4,
-              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+              k_codes: int = 16, refine: int = 4) -> DataFrame:
     """IVF + PQ composed (the FAISS IVFADC shape, Jégou et al. TPAMI'11):
     IVF prunes WHICH vectors a query touches (each query ADC-scans only
     its `nprobe` of `n_cells` Voronoi cells — the candidate join shuffles
@@ -1027,25 +1019,26 @@ def ivfpq_ann(items: DataFrame, queries: DataFrame, k: int = 5,
     synthetic tables exercise); the contract stays a recall-gated
     approximation, like every ANN path here."""
     spark = items.sparkSession
-    centroids = train_ivf_centroids(items, n_cells, iters, id_col, vec_col)
-    books = train_pq_codebooks(items, m, k_codes, iters, id_col, vec_col)
+    centroids = train_ivf_centroids(items, n_cells)
+    books = train_pq_codebooks(items, m, k_codes)
     if not centroids or not books:
-        return _empty_topk(spark, queries, items, id_col)
+        return _empty_topk(spark, queries, items)
     assign1 = _probe_cells_udf(spark, centroids, nprobe=1)
     probe_n = _probe_cells_udf(spark, centroids, nprobe=nprobe, bc=assign1.bc)
     encode = _pq_assign_udf(spark, books)
     it = items.select(
-        F.col(id_col).alias("item_id"), _as_double(F.col(vec_col)).alias("iv")
+        F.col("vec_id").alias("item_id"),
+        _as_double(F.col("embedding")).alias("iv"),
     ).withColumn("nv", _normalize(F.col("iv"))) \
         .withColumn("cell", assign1(F.col("nv"))[0]) \
         .withColumn("codes", encode(F.col("nv"))) \
         .drop("nv")
 
-    qrows, q_lut = _pq_query_luts(spark, queries, books, id_col, vec_col)
+    qrows, q_lut = _pq_query_luts(spark, queries, books)
     if q_lut is None:
-        return _empty_topk(spark, queries, items, id_col)
+        return _empty_topk(spark, queries, items)
     # per-query probed cells, from the SAME collected bounded query set
-    idt = queries.schema[id_col].dataType
+    idt = queries.schema["vec_id"].dataType
     qn = _qvec_df(spark, qrows, idt, "qv")
     q_cells = qn.withColumn("cell", F.explode(probe_n(F.col("qv")))) \
         .select("query_id", "cell").join(F.broadcast(q_lut), "query_id")
@@ -1061,11 +1054,8 @@ def ivfpq_ann(items: DataFrame, queries: DataFrame, k: int = 5,
     return _pq_rerank(spark, cand, it, qrows, idt, books, k)
 
 
-def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, k: int = 5,
-                       n_cells: int = 16, nprobe: int = 4, m: int = 8,
-                       k_codes: int = 16, iters: int = 2, refine: int = 4,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
+def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, nprobe: int = 4,
+                       m: int = 8, refine: int = 4) -> DataFrame:
     """IVFADC with RESIDUAL encoding — the actual FAISS IVFPQ (Jégou et
     al. TPAMI'11 §IV.B), lifting `ivfpq_ann`'s one declared
     simplification: PQ codes quantize r = x_norm − centroid(cell(x))
@@ -1081,16 +1071,17 @@ def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, k: int = 5,
     <q, centroid_cell> + Σ_s lut[s][code_s] — the per-cell part is a
     SCALAR added per (query, probed cell), not a per-cell LUT rebuild.
     Plan shape is `ivfpq_ann` plus one broadcast join against the
-    (n_cells × dim) centroid table for the residual subtraction
+    (16 × dim) centroid table for the residual subtraction
     (row-local zip_with) and one fold dot for the per-probe constant.
 
     Index = (id, cell, codes): same 100 TB posture as `ivfpq_ann` — the
     float column is only touched by the final exact re-rank of k·refine
     candidates per query."""
+    k = 5
     spark = items.sparkSession
-    centroids = train_ivf_centroids(items, n_cells, iters, id_col, vec_col)
+    centroids = train_ivf_centroids(items, 16)
     if not centroids:
-        return _empty_topk(spark, queries, items, id_col)
+        return _empty_topk(spark, queries, items)
     assign1 = _probe_cells_udf(spark, centroids, nprobe=1)
     probe_n = _probe_cells_udf(spark, centroids, nprobe=nprobe,
                                bc=assign1.bc)
@@ -1101,8 +1092,8 @@ def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, k: int = 5,
             T.StructField("cvec", T.ArrayType(T.DoubleType())),
         ]))
     it_res = (
-        items.select(F.col(id_col).alias("item_id"),
-                     _as_double(F.col(vec_col)).alias("iv"))
+        items.select(F.col("vec_id").alias("item_id"),
+                     _as_double(F.col("embedding")).alias("iv"))
         .withColumn("nv", _normalize(F.col("iv")))
         .withColumn("cell", assign1(F.col("nv"))[0])
         .join(F.broadcast(cdf), "cell")  # NULL cell (bad vector) drops out
@@ -1112,17 +1103,17 @@ def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, k: int = 5,
         spark,
         it_res.select(F.col("item_id").alias("vid"),
                       F.col("rvres").alias("v")),
-        m, k_codes, iters)
+        m, 16, 2)
     if not books:
-        return _empty_topk(spark, queries, items, id_col)
+        return _empty_topk(spark, queries, items)
     encode = _pq_assign_udf(spark, books)
     it = it_res.withColumn("codes", encode(F.col("rvres"))) \
         .select("item_id", "iv", "cell", "codes")
 
-    qrows, q_lut = _pq_query_luts(spark, queries, books, id_col, vec_col)
+    qrows, q_lut = _pq_query_luts(spark, queries, books)
     if q_lut is None:
-        return _empty_topk(spark, queries, items, id_col)
-    idt = queries.schema[id_col].dataType
+        return _empty_topk(spark, queries, items)
+    idt = queries.schema["vec_id"].dataType
     qn = _qvec_df(spark, qrows, idt, "qv")
     dim = len(books) * len(books[0][0])
     q_cells = (
@@ -1147,10 +1138,7 @@ def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, k: int = 5,
     return _pq_rerank(spark, cand, it, qrows, idt, books, k)
 
 
-def knn_label_propagation(labeled: DataFrame, unlabeled: DataFrame,
-                          k: int = 5, id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          label_col: str = "label",
+def knn_label_propagation(labeled: DataFrame, unlabeled: DataFrame, k: int = 5,
                           dim: int | None = None) -> DataFrame:
     """Semi-supervised kNN LABEL PROPAGATION — auto-label a huge corpus
     from a small labeled seed (weak supervision's nearest-neighbor
@@ -1165,9 +1153,8 @@ def knn_label_propagation(labeled: DataFrame, unlabeled: DataFrame,
     vote rollup. At seed sizes past broadcast range, the candidate tier
     swaps to the banded-LSH / ADC paths (same pattern as every ANN
     operator here); the vote tail is unchanged."""
-    q = _vec_side(unlabeled, id_col, vec_col, _Q, dim)
-    it = _vec_side(labeled, id_col, vec_col, _I, dim,
-                   F.col(label_col).alias("_lbl"))
+    q = _vec_side(unlabeled, "vec_id", _Q, dim)
+    it = _vec_side(labeled, "vec_id", _I, dim, F.col("label").alias("_lbl"))
     scored = (
         q.join(F.broadcast(it), F.col("item_id") != F.col("query_id"))
         .select("query_id", "item_id", "_lbl",
@@ -1181,7 +1168,7 @@ def knn_label_propagation(labeled: DataFrame, unlabeled: DataFrame,
     return (
         votes.withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") == 1)
-        .select(F.col("query_id").alias(id_col),
+        .select(F.col("query_id").alias("vec_id"),
                 F.col("_lbl").alias("pred_label"),
                 F.col("votes").cast("long").alias("votes"))
     )

@@ -28,56 +28,53 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def distinct_sketches(df: DataFrame, group_cols: list[str], value_col: str,
-                      lg_k: int = 12) -> DataFrame:
+def distinct_sketches(df: DataFrame, group_cols: list[str],
+                      value_col: str) -> DataFrame:
     """One HLL sketch per group over `value_col` — the shard-level
     pre-aggregate to persist. lg_k=12 ≈ 1.6% relative standard error at
     ~2 KB per sketch; raise it for tighter bands."""
     return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("distinct_sketch"))
+        F.hll_sketch_agg(F.col(value_col), F.lit(12)).alias("distinct_sketch"))
 
 
-def merge_sketches(sketches: DataFrame, group_cols: list[str],
-                   sketch_col: str = "distinct_sketch") -> DataFrame:
+def merge_sketches(sketches: DataFrame, group_cols: list[str]) -> DataFrame:
     """Merge stored sketches down to `group_cols` (e.g. day-level shards →
     one sketch per tenant) and estimate. Input rows are a few KB each, so
     this runs in seconds over arbitrarily large base data."""
     merged = sketches.groupBy(*group_cols).agg(
-        F.hll_union_agg(F.col(sketch_col)).alias("merged_sketch"))
+        F.hll_union_agg(F.col("distinct_sketch")).alias("merged_sketch"))
     return merged.select(
         *group_cols,
         F.hll_sketch_estimate("merged_sketch").alias("distinct_estimate"))
 
 
-def global_estimate(sketches: DataFrame,
-                    sketch_col: str = "distinct_sketch") -> Column:
+def global_estimate(sketches: DataFrame) -> Column:
     """Single global distinct estimate from a sketch table (scalar
     DataFrame: one row, one BIGINT column)."""
     return (
-        sketches.agg(F.hll_union_agg(F.col(sketch_col)).alias("s"))
+        sketches.agg(F.hll_union_agg(F.col("distinct_sketch")).alias("s"))
         .select(F.hll_sketch_estimate("s").alias("distinct_estimate"))
     )
 
 
-def quantile_sketches(df: DataFrame, group_cols: list[str], value_col: str,
-                      k: int = 200) -> DataFrame:
+def quantile_sketches(df: DataFrame, group_cols: list[str],
+                      value_col: str) -> DataFrame:
     """One KLL quantile sketch per group over a DOUBLE `value_col` — the
     mergeable counterpart of approx_percentile: store per shard, answer
     any-quantile questions later without rescanning. k=200 ≈ 1.65% rank
     error (DataSketches KLL default)."""
     return df.groupBy(*group_cols).agg(
-        F.kll_sketch_agg_double(F.col(value_col).cast("double"), F.lit(k))
+        F.kll_sketch_agg_double(F.col(value_col).cast("double"), F.lit(200))
         .alias("quantile_sketch"))
 
 
 def merge_quantiles(sketches: DataFrame, group_cols: list[str],
-                    quantiles: list[float],
-                    sketch_col: str = "quantile_sketch") -> DataFrame:
+                    quantiles: list[float]) -> DataFrame:
     """Merge stored KLL sketches down to `group_cols` and read the
     requested quantiles out of the merged sketch — one qN column per
     requested fraction."""
     merged = sketches.groupBy(*group_cols).agg(
-        F.kll_merge_agg_double(F.col(sketch_col)).alias("s"))
+        F.kll_merge_agg_double(F.col("quantile_sketch")).alias("s"))
     return merged.select(
         *group_cols,
         *[F.kll_sketch_get_quantile_double("s", F.lit(q))
@@ -95,15 +92,14 @@ def audience_sketches(df: DataFrame, group_cols: list[str],
         F.theta_sketch_agg(F.col(value_col)).alias("theta_sketch"))
 
 
-def audience_overlap(sketches: DataFrame, group_col: str,
-                     group_a: str, group_b: str,
-                     sketch_col: str = "theta_sketch") -> DataFrame:
+def audience_overlap(sketches: DataFrame, group_col: str, group_a: str,
+                     group_b: str) -> DataFrame:
     """|A|, |B|, |A ∪ B|, |A ∩ B| estimated purely from the two groups'
     stored sketches (one row out). The base table is never touched."""
     a = sketches.filter(F.col(group_col) == group_a) \
-        .select(F.col(sketch_col).alias("sa"))
+        .select(F.col("theta_sketch").alias("sa"))
     b = sketches.filter(F.col(group_col) == group_b) \
-        .select(F.col(sketch_col).alias("sb"))
+        .select(F.col("theta_sketch").alias("sb"))
     return a.crossJoin(b).select(
         F.theta_sketch_estimate("sa").alias("n_a"),
         F.theta_sketch_estimate("sb").alias("n_b"),
@@ -122,15 +118,14 @@ def audience_overlap(sketches: DataFrame, group_col: str,
 # the invariant, not just the numbers).
 # ---------------------------------------------------------------------------
 
-def _cms_bucket(value: Column, seed: int, width: int) -> Column:
+def _cms_bucket(value: Column, seed: int) -> Column:
     """md5-salted bucket index — the engine's parity hash kernel (first 8
     hex chars → BIGINT), replayable in DuckDB via the '0x' cast idiom."""
     h = F.md5(F.concat(F.lit(f"cms{seed}|"), value))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % width
+    return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % 16
 
 
-def cms_counters(values: DataFrame, value_col: str, depth: int = 4,
-                 width: int = 16) -> DataFrame:
+def cms_counters(values: DataFrame, value_col: str) -> DataFrame:
     """(seed, bucket, c): the count-min counter table of a value stream —
     depth×width rows TOTAL whatever the stream size (each partition's
     partial aggregate is already ≤ depth·width rows, so the shuffle moves
@@ -140,7 +135,7 @@ def cms_counters(values: DataFrame, value_col: str, depth: int = 4,
     v = F.col(value_col)
     return (
         values.select(F.posexplode(F.array(
-            *[_cms_bucket(v, i, width) for i in range(depth)]
+            *[_cms_bucket(v, i) for i in range(4)]
         )).alias("seed", "bucket"))
         .groupBy("seed", "bucket")
         .agg(F.count("*").alias("c"))
@@ -148,8 +143,7 @@ def cms_counters(values: DataFrame, value_col: str, depth: int = 4,
 
 
 def cms_estimate(candidates: DataFrame, counters: DataFrame,
-                 value_col: str, depth: int = 4,
-                 width: int = 16) -> DataFrame:
+                 value_col: str) -> DataFrame:
     """candidates + `n_cms`: each candidate value's count-min estimate —
     the MINIMUM of its depth counter cells. The counter table is
     sketch-sized (depth×width rows) and broadcasts; candidates never
@@ -163,7 +157,7 @@ def cms_estimate(candidates: DataFrame, counters: DataFrame,
     v = F.col(value_col)
     exploded = candidates.select(
         "*", F.posexplode(F.array(
-            *[_cms_bucket(v, i, width) for i in range(depth)]
+            *[_cms_bucket(v, i) for i in range(4)]
         )).alias("_cms_seed", "_cms_bucket"))
     ctr = counters.select(
         F.col("seed").alias("_cms_seed"),

@@ -19,13 +19,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_join(big: DataFrame, small: DataFrame, on: str,
-                n_salts: int = 8, how: str = "inner") -> DataFrame:
+def salted_join(big: DataFrame, small: DataFrame, on: str) -> DataFrame:
     """Equi-join `big ⋈ small` on column `on`, de-skewed by salting.
 
     big:   arbitrarily skewed on `on` (e.g. 90% of rows share one key);
     small: duplicated n_salts× (must be the small side).
     """
+    n_salts = 8
     salted_big = big.withColumn(
         "__salt", (F.xxhash64(F.monotonically_increasing_id()) % n_salts
                    + n_salts) % n_salts)
@@ -34,6 +34,6 @@ def salted_join(big: DataFrame, small: DataFrame, on: str,
         F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<bigint>")),
     )
     return (
-        salted_big.join(salted_small, [on, "__salt"], how)
+        salted_big.join(salted_small, [on, "__salt"], "inner")
         .drop("__salt")
     )

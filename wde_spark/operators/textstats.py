@@ -31,9 +31,8 @@ STOPWORDS = {
 }
 
 
-def word_count(docs: DataFrame, text_col: str = "text",
-               stopwords: list[str] | None = None,
-               drop_pattern: str = r"^(\d+|[A-Z]+)$") -> DataFrame:
+def word_count(docs: DataFrame,
+               stopwords: list[str] | None = None) -> DataFrame:
     """A1 + P3 + P4 + W3 — token frequency, stop-words and pattern-matched
     tokens removed, sorted descending.
 
@@ -42,12 +41,11 @@ def word_count(docs: DataFrame, text_col: str = "text",
     shuffle carries one row per distinct word per partition, not per token —
     this is what makes it viable at 100 TB of text.
     """
-    words = docs.select(F.explode(tokens(F.col(text_col))).alias("word"))
+    words = docs.select(F.explode(tokens(F.col("text"))).alias("word"))
     words = words.filter(F.col("word") != "")
     if stopwords:
         words = words.filter(~F.col("word").isin(stopwords))
-    if drop_pattern:
-        words = words.filter(~F.col("word").rlike(drop_pattern))
+    words = words.filter(~F.col("word").rlike(r"^(\d+|[A-Z]+)$"))
     return words.groupBy("word").count().orderBy(F.desc("count"), "word")
 
 
@@ -57,30 +55,28 @@ def _lang_score(tok: Column, lang: str) -> Column:
     return F.size(F.filter(tok, lambda x: F.array_contains(wordset, x)))
 
 
-def lang_id(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Language ID via stopword-profile scoring: the language whose stopword
     list overlaps the token stream most wins; 'und' when nothing matches.
     Purely row-local (no shuffle); ties broken by fixed language order."""
-    tok = tokens(F.col(text_col))
+    tok = tokens(F.col("text"))
     df = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[_lang_score(tok, lg).alias(f"score_{lg}") for lg in STOPWORDS],
     )
     best = F.greatest(*[F.col(f"score_{lg}") for lg in STOPWORDS])
     pred = F.when(best <= 0, F.lit("und"))
     for lg in STOPWORDS:  # first language reaching the max wins
         pred = pred.when(F.col(f"score_{lg}") == best, F.lit(lg))
-    return df.select(id_col, pred.alias("pred_lang"),
+    return df.select("doc_id", pred.alias("pred_lang"),
                      best.cast("int").alias("best_score"))
 
 
-def quality_score(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic document quality: length, mean word length, punctuation
     ratio, stopword ratio, alpha ratio — the standard pre-training filters.
     All row-local column math."""
-    t = F.col(text_col)
+    t = F.col("text")
     tok = tokens(t)
     n_chars = F.length(t)
     n_tokens = F.size(tok)
@@ -90,7 +86,7 @@ def quality_score(docs: DataFrame, text_col: str = "text",
     n_alpha = F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
     mean_wlen = (F.length(F.regexp_replace(t, r"\s+", "")) / n_tokens)
     return docs.select(
-        id_col,
+        "doc_id",
         n_chars.alias("n_chars_q"),
         n_tokens.alias("n_tokens"),
         F.round(mean_wlen, 4).alias("mean_word_len"),
@@ -107,8 +103,7 @@ def quality_score(docs: DataFrame, text_col: str = "text",
     )
 
 
-def token_stats(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id",
+def token_stats(docs: DataFrame,
                 merges: "list[tuple[str, str]] | None" = None) -> DataFrame:
     """Token counting two ways: whitespace tokens and a BPE token count.
 
@@ -118,18 +113,18 @@ def token_stats(docs: DataFrame, text_col: str = "text",
     merges list, see `operators.bpe.load_merges`) the count is EXACT
     byte-pair encoding under that vocabulary, computed once per distinct
     word and joined back (see `operators/bpe.py` for the plan shape)."""
-    t = F.col(text_col)
+    t = F.col("text")
     ws = F.size(tokens(t))
     if merges is not None:
         from . import bpe as B
 
-        exact = B.bpe_token_counts(docs, merges, text_col, id_col)
+        exact = B.bpe_token_counts(docs, merges)
         return (
-            docs.select(F.col(id_col), ws.cast("long").alias("ws_tokens"),
+            docs.select(F.col("doc_id"), ws.cast("long").alias("ws_tokens"),
                         F.length(t).alias("_n_chars"))
-            .join(exact, id_col)
+            .join(exact, "doc_id")
             .select(
-                id_col, "ws_tokens", "bpe_tokens",
+                "doc_id", "ws_tokens", "bpe_tokens",
                 F.round(F.col("_n_chars")
                         / F.greatest("bpe_tokens", F.lit(1)), 4)
                 .alias("chars_per_token"),
@@ -137,16 +132,14 @@ def token_stats(docs: DataFrame, text_col: str = "text",
         )
     bpe = F.size(F.regexp_extract_all(t, F.lit(r"[A-Za-z]+|\d+|[^\w\s]"), 0))
     return docs.select(
-        id_col,
+        "doc_id",
         ws.cast("long").alias("ws_tokens"),
         bpe.cast("long").alias("bpe_tokens"),
         F.round(F.length(t) / F.greatest(bpe, F.lit(1)), 4).alias("chars_per_token"),
     )
 
 
-def winnowing_fingerprints(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", k: int = 8, w: int = 16,
-                           prefix: int = 256) -> DataFrame:
+def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03): hash
     every k-char gram of the text, slide a w-gram window, keep each
     window's minimum hash — the guarantee is that any match of length
@@ -155,7 +148,7 @@ def winnowing_fingerprints(docs: DataFrame, text_col: str = "text",
     Engine-portable form: the gram hash is md5 of the substring (the
     rolling-polynomial hash is an optimization of the same function family;
     md5 keeps the DuckDB oracle byte-identical). Fingerprinting is capped
-    to the first `prefix` chars — the standard head-window practice.
+    to the first 256 chars — the standard head-window practice.
 
     Shape: positions EXPLODE to rows first, so each gram is hashed exactly
     once inside whole-stage codegen, and the per-window minimum is a SQL
@@ -167,32 +160,33 @@ def winnowing_fingerprints(docs: DataFrame, text_col: str = "text",
     array expressions for anything super-linear per row.
 
     Returns (id, fp) — one row per distinct selected fingerprint."""
-    t = F.substring(F.trim(F.lower(F.col(text_col))), 1, prefix)
+    k = 8
+    w = 16
+    t = F.substring(F.trim(F.lower(F.col("text"))), 1, 256)
     n = F.length(t) - (k - 1)  # number of k-grams (<=0 for short texts)
-    base = docs.select(F.col(id_col), t.alias("tl"), n.alias("n"))
+    base = docs.select(F.col("doc_id"), t.alias("tl"), n.alias("n"))
     grams = base.select(
-        id_col, "n",
+        "doc_id", "n",
         F.posexplode(F.sequence(F.lit(1), F.greatest(F.col("n"), F.lit(1))))
         .alias("_i", "pos"),
         "tl",
     ).select(
-        id_col, "n", "pos",
+        "doc_id", "n", "pos",
         F.md5(F.col("tl").substr(F.col("pos"), F.lit(k))).alias("gh"),
     )
     win = (
-        Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
+        Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
     )
     return (
         grams.withColumn("fp", F.min("gh").over(win))
         # window start positions: 1..n-w+1 (a single window when n < w;
         # rowsBetween clamps at the partition end so its min spans all)
         .filter(F.col("pos") <= F.greatest(F.col("n") - (w - 1), F.lit(1)))
-        .select(id_col, "fp").distinct()
+        .select("doc_id", "fp").distinct()
     )
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprints: md5 of the canonical (norm_compare) form for
     exact-dup detection, plus the min/max md5 over 3-token shingles — a
     1-permutation minhash usable as a cheap near-dup prefilter.
@@ -201,20 +195,19 @@ def fingerprint(docs: DataFrame, text_col: str = "text",
     materialized once, tiny partial-min/max shuffle)."""
     from .dedup import shingles
 
-    canon_fp = F.md5(norm_compare(F.col(text_col)))
+    canon_fp = F.md5(norm_compare(F.col("text")))
     sh = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         canon_fp.alias("exact_fp"),
-        F.explode(shingles(tokens(F.col(text_col)), 3)).alias("sh"),
+        F.explode(shingles(tokens(F.col("text")), 3)).alias("sh"),
     )
-    return sh.groupBy(id_col, "exact_fp").agg(
+    return sh.groupBy("doc_id", "exact_fp").agg(
         F.min(F.md5(F.col("sh"))).alias("min_shingle_fp"),
         F.max(F.md5(F.col("sh"))).alias("max_shingle_fp"),
-    ).select(id_col, "exact_fp", "min_shingle_fp", "max_shingle_fp")
+    ).select("doc_id", "exact_fp", "min_shingle_fp", "max_shingle_fp")
 
 
-def tfidf_topk(docs: DataFrame, k: int = 3, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def tfidf_topk(docs: DataFrame) -> DataFrame:
     """Top-k terms per document by smoothed tf-idf.
 
     Plan: ONE tokenize+explode feeds both the per-(doc,term) tf aggregate
@@ -230,18 +223,18 @@ def tfidf_topk(docs: DataFrame, k: int = 3, text_col: str = "text",
     from pyspark import StorageLevel
 
     tok = docs.select(
-        F.col(id_col),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     ).filter(F.col("term") != "")
     # Persist the (doc, term, tf) aggregate (r12, guide §1.2): it feeds
     # both the df aggregate (a broadcast side) and the scored join, and
     # exchange reuse does not fire across that broadcast — without the
     # persist the tokenize+explode+agg pipeline executed twice (observed
     # in the sf0.1 plan: two full scan->Generate->HashAggregate subtrees).
-    tf = tok.groupBy(id_col, "term").agg(F.count("*").alias("tf")) \
+    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
-    n_docs = docs.select(F.countDistinct(id_col).alias("n_docs"))
+    n_docs = docs.select(F.countDistinct("doc_id").alias("n_docs"))
     scored = (
         tf.join(df_, "term")
         .join(F.broadcast(n_docs))
@@ -252,10 +245,10 @@ def tfidf_topk(docs: DataFrame, k: int = 3, text_col: str = "text",
                 * (F.log((F.col("n_docs") + 1) / (F.col("df") + 1)) + 1), 6),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select(id_col, "term", F.col("tf").cast("long").alias("tf"),
+        .filter(F.col("rnk") <= 3)
+        .select("doc_id", "term", F.col("tf").cast("long").alias("tf"),
                 "score", "rnk")
     )

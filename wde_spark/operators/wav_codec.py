@@ -234,12 +234,13 @@ def encode_wav(samples: np.ndarray, sample_rate: int,
             + chunks)
 
 
-def encode_wav_adpcm(blocks: list, sample_rate: int = 8000) -> bytes:
+def encode_wav_adpcm(blocks: list) -> bytes:
     """Wrap mono IMA ADPCM blocks — each a (predictor int16, step_index
     0..88, data bytes) triple; all data the same length — in a
     RIFF/WAVE container (format tag 0x11, bits 4, extended fmt with
     samples_per_block). The payload builder for the predictive tier;
     decode_wav replays the nibble state machine."""
+    sample_rate = 8000
     assert blocks
     dlen = len(blocks[0][2])
     body = bytearray()

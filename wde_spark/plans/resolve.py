@@ -39,9 +39,6 @@ QDICT_SPARK_TYPE = T.StructType(
        T.StructField("is_same", T.BooleanType())]
 )
 
-RESOLVED_COLS = ["tei_xml_id", "wd_id", "tei_name", "wd_name", "wd_snippet",
-                 "tei_trait", "wd_certitude"]
-
 
 def _qdict_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: (name, trait, passthrough...) → + qdict columns."""

@@ -776,12 +776,12 @@ def fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TS.fingerprint(load_table(spark, sf_dir, "documents", spread=True))
 
 
-def _minhash_oracle(num_hashes: int = 8) -> str:
+def _minhash_oracle() -> str:
     from .operators.dedup import _MH_P, _MH_PERM
 
     mh_cols = ",\n           ".join(
         f"MIN(({a} * h + {b}) % {_MH_P}) AS mh_{j}"
-        for j, (a, b) in enumerate(_MH_PERM[:num_hashes])
+        for j, (a, b) in enumerate(_MH_PERM[:8])
     )
     return f"""
     WITH tok AS (
@@ -807,7 +807,7 @@ def _minhash_oracle(num_hashes: int = 8) -> str:
     """
 
 
-@query("minhash_signatures_documents", _minhash_oracle(8))
+@query("minhash_signatures_documents", _minhash_oracle())
 def minhash_signatures_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup tier 3 (signature step) — 8-permutation affine minhash over
     32-bit shingle digests; engine-portable so the oracle reproduces it
@@ -902,21 +902,18 @@ def snm_neardup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-locality candidates (first-token blocks, window 2) + exact Jaccard
     verification. Complements LSH: candidate count bounded by window·n."""
     return D.sorted_neighborhood_pairs(
-        load_table(spark, sf_dir, "documents", spread=True),
-        window=2, shingle_k=2, threshold=0.2,
+        load_table(spark, sf_dir, "documents", spread=True), threshold=0.2,
     )
 
 
-def _lsh_verified_oracle(num_hashes: int = 16, bands: int = 4,
-                         threshold: float = 0.2,
-                         max_bucket: int | None = 64,
-                         src: str = "documents") -> str:
+def _lsh_verified_oracle() -> str:
     from .operators.dedup import _MH_P, _MH_PERM
 
-    rpb = num_hashes // bands
+    bands = 4
+    rpb = 16 // bands
     mh_cols = ",\n             ".join(
         f"MIN(({a} * h + {b}) % {_MH_P}) AS mh_{j}"
-        for j, (a, b) in enumerate(_MH_PERM[:num_hashes])
+        for j, (a, b) in enumerate(_MH_PERM[:16])
     )
     band_rows = "\n      UNION ALL\n".join(
         "      SELECT doc_id, {b} AS band_idx, md5({expr}) AS band_hash FROM sigs".format(
@@ -926,16 +923,15 @@ def _lsh_verified_oracle(num_hashes: int = 16, bands: int = 4,
         )
         for b in range(bands)
     )
-    capped = ("""
+    capped = """
     capped AS (
       SELECT * FROM banded
-      QUALIFY COUNT(*) OVER (PARTITION BY band_idx, band_hash) <= %d
-    ),""" % max_bucket) if max_bucket is not None else """
-    capped AS (SELECT * FROM banded),"""
+      QUALIFY COUNT(*) OVER (PARTITION BY band_idx, band_hash) <= 64
+    ),"""
     return f"""
     WITH tok AS (
       SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-      FROM {src}
+      FROM documents
     ),
     shing AS (
       SELECT doc_id, unnest(list_distinct(
@@ -974,7 +970,7 @@ def _lsh_verified_oracle(num_hashes: int = 16, bands: int = 4,
            ROUND(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
     FROM inter JOIN sizes sa ON sa.doc_id = id_a
                JOIN sizes sb ON sb.doc_id = id_b
-    WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) >= {threshold}
+    WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) >= 0.2
     """
 
 
@@ -1058,11 +1054,6 @@ def simhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # similarity search (embeddings)
 # ---------------------------------------------------------------------------
-
-_DOT_SQL = """
-list_aggregate(list_transform(generate_series(1, len(a)), i -> a[i] * b[i]), 'sum')
-"""
-
 
 @query(
     "cosine_topk_embeddings",
@@ -1167,8 +1158,7 @@ def lsh_ann_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked, not just its shape."""
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
     q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 8)
-    return SIM.lsh_ann_multi(emb, q, k=5,
-                             n_planes=6, n_tables=48)
+    return SIM.lsh_ann_multi(emb, q, n_tables=48)
 
 
 @query(
@@ -1191,7 +1181,7 @@ def lsh_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
     q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 8)
     return SIM.topk_recall_gate(
-        SIM.lsh_ann_multi(emb, q, k=5, n_planes=6, n_tables=48),
+        SIM.lsh_ann_multi(emb, q, n_tables=48),
         SIM.cosine_topk(emb, q, k=5, dim=64),
         n_queries=8, k=5, min_recall=0.6,
     )
@@ -1560,7 +1550,7 @@ def embedding_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor for it."""
     emb = load_table(spark, sf_dir, "embeddings", spread=True).filter(
         F.col("vec_id") % 4 == 0)
-    v = SIM._vec_side(emb, "vec_id", "embedding", ("vec_id", "v", "nrm"), 64)
+    v = SIM._vec_side(emb, "vec_id", ("vec_id", "v", "nrm"), 64)
     a, b = v.alias("a"), v.alias("b")
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
@@ -1630,7 +1620,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed-metadata transform: aspect-preserving resize planning as pure
     column arithmetic over the media meta struct."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    resized = MM.resize_meta(MM.attach_media(docs), 256, 256)
+    resized = MM.resize_meta(MM.attach_media(docs))
     return resized.select(
         "media_id",
         F.col("meta.width").alias("width"),
@@ -1686,7 +1676,7 @@ def multimodal_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong encoder, decoder, or resample breaks the md5 fingerprint — the
     encode path is correctness surface, not plumbing."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    thumbs = MM.resize_images(MM.attach_images(docs), 8, 8)
+    thumbs = MM.resize_images(MM.attach_images(docs))
     return MM.thumbnail_stats(thumbs)
 
 
@@ -1817,7 +1807,7 @@ def audio_energy_windows_documents(spark: SparkSession,
     bytes ((byte−128)·256 through ABS/SUM), so the decode → window →
     reduce chain is hash-checked end-to-end."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    return MM.audio_energy_windows(MM.attach_audio(docs), window=256)
+    return MM.audio_energy_windows(MM.attach_audio(docs))
 
 
 @query(
@@ -1942,7 +1932,7 @@ def sliding_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def session_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (30-min inactivity gap) — gaps-and-islands, one shuffle."""
     ev = load_table(spark, sf_dir, "events")
-    return SW.session_agg(ev, gap_seconds=1800)
+    return SW.session_agg(ev)
 
 
 @query(
@@ -1977,7 +1967,7 @@ def session_events_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline needs when one hot key would serialize the plain per-user
     window into a single task."""
     ev = load_table(spark, sf_dir, "events")
-    return SW.session_agg(ev, gap_seconds=1800, bucketed=True)
+    return SW.session_agg(ev, bucketed=True)
 
 
 # ---------------------------------------------------------------------------

@@ -1109,7 +1109,7 @@ def multimodal_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    ch = MM.audio_chunks(MM.attach_media(docs), window=2048, hop=1024)
+    ch = MM.audio_chunks(MM.attach_media(docs))
     return ch.select("media_id", "chunk_idx", "start_byte", "chunk_size")
 
 
@@ -1129,7 +1129,7 @@ def skew_salted_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     dim = ev.groupBy("event_type").agg(F.count("*").alias("type_total"))
     return SK.salted_join(
-        ev.select("event_id", "event_type"), dim, "event_type", n_salts=8
+        ev.select("event_id", "event_type"), dim, "event_type"
     ).select("event_id", "event_type", "type_total")
 
 
@@ -1231,8 +1231,7 @@ def bloom_semi_join_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders") \
         .filter(F.col("o_totalprice") > 150000)
-    hits = B.bloom_semi_join(li, orders, "l_orderkey", "o_orderkey",
-                             m=1 << 17, h=3)
+    hits = B.bloom_semi_join(li, orders, "l_orderkey", "o_orderkey", m=1 << 17)
     return hits.groupBy("l_returnflag").agg(
         F.count("*").alias("n_items"),
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -1354,7 +1353,7 @@ def tfidf_top_terms_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     libm-independent."""
     from .operators import textstats as TS
 
-    return TS.tfidf_topk(load_table(spark, sf_dir, "documents", spread=True), k=3)
+    return TS.tfidf_topk(load_table(spark, sf_dir, "documents", spread=True))
 
 
 @query(
@@ -2538,13 +2537,13 @@ def cms_heavy_hitters_documents(spark: SparkSession,
     docs = load_table(spark, sf_dir, "documents", spread=True)
     tok = docs.select(F.explode(_tokens(F.col("text"))).alias("w")) \
         .filter(F.col("w") != "")
-    counters = SK.cms_counters(tok, "w", depth=4, width=16)
+    counters = SK.cms_counters(tok, "w")
     top = (
         tok.groupBy("w").agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("w")).limit(50)
     )
     return (
-        SK.cms_estimate(top, counters, "w", depth=4, width=16)
+        SK.cms_estimate(top, counters, "w")
         .select(
             F.col("w").alias("word"),
             F.col("n").cast("long").alias("n_exact"),
@@ -3067,7 +3066,7 @@ def _lm_counts_cte(train_src: str, t: str) -> str:
       SELECT w2 AS w FROM c12_{t} UNION ALL SELECT w1 FROM c12_{t}))"""
 
 
-def _lm_model_cte(t: str, k: float = 0.5, voc: str | None = None) -> str:
+def _lm_model_cte(t: str, voc: str | None = None) -> str:
     """`seen_{t}` / `flr_{t}` from the counts, smoothed over the `voc`
     CTE (defaults to the model's own `voc_{t}`) — pass a shared vocab
     CTE to smooth two models over the same event space (the DSIR
@@ -3075,16 +3074,16 @@ def _lm_model_cte(t: str, k: float = 0.5, voc: str | None = None) -> str:
     voc = voc or f"voc_{t}"
     return f"""
     seen_{t} AS (
-      SELECT w1, w2, ln((c12 + {k}) / (c1 + {k} * (v + 1))) AS lp_seen
+      SELECT w1, w2, ln((c12 + 0.5) / (c1 + 0.5 * (v + 1))) AS lp_seen
       FROM c12_{t} JOIN c1_{t} USING (w1) CROSS JOIN {voc}
     ),
     flr_{t} AS (
-      SELECT w1, ln({k} / (c1 + {k} * (v + 1))) AS lp_floor
+      SELECT w1, ln(0.5 / (c1 + 0.5 * (v + 1))) AS lp_floor
       FROM c1_{t} CROSS JOIN {voc}
     )"""
 
 
-def _lm_tables_cte(train_src: str, t: str, k: float = 0.5) -> str:
+def _lm_tables_cte(train_src: str, t: str) -> str:
     """CTE chain for ONE trained add-k bigram LM over `train_src`:
     `seen_{t}` = (w1, w2, lp_seen), `flr_{t}` = (w1, lp_floor),
     `voc_{t}` = (v) — SQL twin of `lm_score.train_bigram_lm`. Shared by
@@ -3092,16 +3091,15 @@ def _lm_tables_cte(train_src: str, t: str, k: float = 0.5) -> str:
     return f"""
     {_lm_counts_cte(train_src, t)},
     voc_{t} AS (SELECT COUNT(*) AS v FROM words_{t}),
-    {_lm_model_cte(t, k)}"""
+    {_lm_model_cte(t)}"""
 
 
-def _lm_score_cte_block(train_src: str, score_src: str, t: str,
-                        k: float = 0.5) -> str:
+def _lm_score_cte_block(train_src: str, score_src: str, t: str) -> str:
     """CTE chain `agg_{t}` = (doc_id, nb, al): add-k bigram LM trained on
     `train_src`, every `score_src` doc scored by mean bigram log-prob with
     the two-step back-off — SQL twin of train_bigram_lm + lm_quality."""
     return f"""
-    {_lm_tables_cte(train_src, t, k)},
+    {_lm_tables_cte(train_src, t)},
     sbg_{t} AS MATERIALIZED ({_lm_bigrams_sql(score_src)}),
     scored_{t} AS (
       SELECT b.doc_id,
@@ -3283,7 +3281,7 @@ def doremi_mixture_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     target_lm = LM.train_bigram_lm(target, vocab=vocab)
     raw_lm = LM.train_bigram_lm(docs, vocab=vocab)
     ratios = DS.dsir_logratio(docs, target_lm, raw_lm, vocab=vocab)
-    return DS.doremi_weights(ratios, docs, eta=1.0)
+    return DS.doremi_weights(ratios, docs)
 
 
 @query(
@@ -3358,7 +3356,7 @@ def doremi_schedule_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     target_lm = LM.train_bigram_lm(target, vocab=vocab)
     raw_lm = LM.train_bigram_lm(docs, vocab=vocab)
     ratios = DS.dsir_logratio(docs, target_lm, raw_lm, vocab=vocab)
-    return DS.doremi_schedule(ratios, docs, eta=1.0, steps=3)
+    return DS.doremi_schedule(ratios, docs)
 
 
 @query(
@@ -3441,8 +3439,7 @@ def nb_classify_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.nb_classify(docs, model, priors)
 
 
-def _nb_pred_cte_block(train_src: str, score_src: str, t: str,
-                       k: float = 0.5) -> str:
+def _nb_pred_cte_block(train_src: str, score_src: str, t: str) -> str:
     """CTE chain `pred_{t}` = (doc_id, pred_label, score, margin): add-k
     multinomial NB trained on `train_src` (label, text), every `score_src`
     doc argmax-classified — SQL twin of classifier.train_naive_bayes +
@@ -3460,7 +3457,7 @@ def _nb_pred_cte_block(train_src: str, score_src: str, t: str,
     cl_{t} AS (SELECT label, SUM(c_lt) AS c_l FROM clt_{t} GROUP BY label),
     nvoc_{t} AS (SELECT COUNT(DISTINCT token) AS v FROM clt_{t}),
     nbmodel_{t} AS (
-      SELECT label, token, ln((c_lt + {k}) / (c_l + {k} * (v + 1))) AS logp
+      SELECT label, token, ln((c_lt + 0.5) / (c_l + 0.5 * (v + 1))) AS logp
       FROM clt_{t} JOIN cl_{t} USING (label) CROSS JOIN nvoc_{t}
     ),
     nbnd_{t} AS (SELECT label, COUNT(*) AS n_l FROM tr_{t} GROUP BY label),
@@ -3468,7 +3465,7 @@ def _nb_pred_cte_block(train_src: str, score_src: str, t: str,
       SELECT label,
              ln(CAST(n_l AS DOUBLE) / (SELECT SUM(n_l) FROM nbnd_{t}))
                AS logprior,
-             ln({k} / (c_l + {k} * (v + 1))) AS lp_floor
+             ln(0.5 / (c_l + 0.5 * (v + 1))) AS lp_floor
       FROM nbnd_{t} JOIN cl_{t} USING (label) CROSS JOIN nvoc_{t}
     ),
     stok_{t} AS (
@@ -3557,7 +3554,7 @@ def source_overlap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import dedup as D
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    return D.corpus_overlap(docs, group_col="source", shingle_k=3)
+    return D.corpus_overlap(docs)
 
 
 _LEAK_K = 16
@@ -3612,7 +3609,7 @@ def substr_leakage_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import dedup as D
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    return D.substr_leakage_matrix(docs, group_col="source", k=_LEAK_K)
+    return D.substr_leakage_matrix(docs, k=_LEAK_K)
 
 
 def _dup_win_sql(k: int, min_count: int) -> str:
@@ -3690,7 +3687,7 @@ def substr_increment_documents(spark: SparkSession,
     docs = load_table(spark, sf_dir, "documents", spread=True)
     state = D.substr_state(docs.filter(F.col("doc_id") % 2 == 0), k=16)
     spans, _ = D.substr_increment(
-        state, docs.filter(F.col("doc_id") % 2 == 1), k=16, min_count=2)
+        state, docs.filter(F.col("doc_id") % 2 == 1), k=16)
     return spans
 
 
@@ -3726,7 +3723,7 @@ def strip_duplicate_spans_documents(spark: SparkSession,
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
     return (
-        D.strip_duplicate_spans(docs, k=16, min_count=2)
+        D.strip_duplicate_spans(docs, k=16)
         .filter(F.col("n_kept") > 0)
         .select("doc_id", "n_tokens", "n_kept",
                 F.md5("text_clean").alias("clean_fp"))
@@ -3938,8 +3935,7 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import dedup as D
 
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
-    kept = D.semantic_dedup(emb, threshold=0.35, n_planes=6, n_tables=8,
-                            max_bucket=64)
+    kept = D.semantic_dedup(emb, threshold=0.35, n_planes=6, n_tables=8)
     return kept.select("vec_id", "label")
 
 
@@ -4062,8 +4058,7 @@ def dedup_corpus_semantic_documents(spark: SparkSession,
         .persist(StorageLevel.MEMORY_AND_DISK)
     kept_text = D.dedup_corpus(joined, max_bucket=None)
     kept = D.semantic_dedup(kept_text, threshold=0.35, id_col="doc_id",
-                            vec_col="embedding", n_planes=6, n_tables=8,
-                            max_bucket=64)
+                            n_planes=6, n_tables=8)
     return kept.select("doc_id")
 
 
@@ -4359,8 +4354,7 @@ def ivfpq_residual_recall_gate(spark: SparkSession,
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
     q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 8)
     return SIM2.topk_recall_gate(
-        SIM2.ivfpq_residual_ann(emb, q, k=5, n_cells=16, nprobe=6, m=16,
-                                k_codes=16, refine=8),
+        SIM2.ivfpq_residual_ann(emb, q, nprobe=6, m=16, refine=8),
         SIM2.cosine_topk(emb, q, k=5, dim=64),
         n_queries=8, k=5, min_recall=0.55,
     )
@@ -4519,7 +4513,7 @@ def frame_runs_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames = MM2.frame_sample(
         MM2.attach_media(docs).filter(F.col("kind") == "video"),
         every=1, frame_bytes=64)
-    return MM2.frame_run_spans(frames, k=3, min_count=2)
+    return MM2.frame_run_spans(frames)
 
 
 # ---------------------------------------------------------------------------
@@ -5426,16 +5420,16 @@ _PCA_BASE_CTES = """x AS (SELECT vec_id,
     )"""
 
 
-def _pca_oracle(iters: int = 3, dim: int = 64, seed: str = "pca") -> str:
+def _pca_oracle() -> str:
     """SQL twin of `pca.power_iteration_pc1` + `pca_project`, the power
-    iteration UNROLLED to `iters` stages (the k-means/BPE pinned-loop
+    iteration UNROLLED to 3 stages (the k-means/BPE pinned-loop
     discipline): md5-derived init direction, per-dimension mean, then
     per stage one per-vector dot and one per-dimension weighted sum,
     normalized. cd (the centered long form) is MATERIALIZED because
     every stage reads it twice."""
-    chain, vfin = _pca_chain_sql("cd", "", "v0", iters)
+    chain, vfin = _pca_chain_sql("cd", "", "v0", 3)
     return f"""
-    WITH {_pca_init_sql(seed, 0, "v0", dim)},
+    WITH {_pca_init_sql("pca", 0, "v0", 64)},
     {_PCA_BASE_CTES},
     {chain}
     SELECT c.vec_id, ROUND(SUM(c.e * {vfin}.w), 6) AS pc1_score
@@ -5443,16 +5437,16 @@ def _pca_oracle(iters: int = 3, dim: int = 64, seed: str = "pca") -> str:
     """
 
 
-def _pca2_oracle(iters: int = 3, dim: int = 64, seed: str = "pca") -> str:
-    """SQL twin of `pca.power_iteration_components(n_components=2)` +
+def _pca2_oracle() -> str:
+    """SQL twin of `pca.power_iteration_components` (2 components) +
     `pca_project_components`: the PC1 chain, then DEFLATION (cd2 = cd −
     t1·v1, one join on the final PC1 scores), then the same unrolled
     chain again from md5 hyperplane 1 of the seed family."""
-    chain_a, va = _pca_chain_sql("cd", "a", "v0a", iters)
-    chain_b, vb = _pca_chain_sql("cd2", "b", "v0b", iters)
+    chain_a, va = _pca_chain_sql("cd", "a", "v0a", 3)
+    chain_b, vb = _pca_chain_sql("cd2", "b", "v0b", 3)
     return f"""
-    WITH {_pca_init_sql(seed, 0, "v0a", dim)},
-    {_pca_init_sql(seed, 1, "v0b", dim)},
+    WITH {_pca_init_sql("pca", 0, "v0a", 64)},
+    {_pca_init_sql("pca", 1, "v0b", 64)},
     {_PCA_BASE_CTES},
     {chain_a},
     t1 AS MATERIALIZED (
@@ -5492,7 +5486,7 @@ def pca_scores_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import pca as P
 
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
-    mu, v = P.power_iteration_pc1(emb, dim=64, iters=3)
+    mu, v = P.power_iteration_pc1(emb)
     return P.pca_project(emb, mu, v)
 
 
@@ -5527,7 +5521,7 @@ def pca_balanced_shards_embeddings(spark: SparkSession,
     from .operators import pca as P
 
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
-    mu, v = P.power_iteration_pc1(emb, dim=64, iters=3)
+    mu, v = P.power_iteration_pc1(emb)
     w = Window.orderBy("pc1_score", "vec_id")
     return (
         P.pca_project(emb, mu, v)
@@ -5602,8 +5596,7 @@ def knn_label_propagation_embeddings(spark: SparkSession,
         emb.filter(F.col("vec_id") % 7 != 0), k=5, dim=64)
 
 
-def _pca_moments_oracle(iters: int = 3, dim: int = 64,
-                        seed: str = "pcacov") -> str:
+def _pca_moments_oracle() -> str:
     """SQL twin of the MOMENT-STATE path (`pca.second_moments` →
     `merge_moments` → `pc1_from_moments` → `pca_project`): raw second
     moments from one pass (the self-join long form — what the Arrow
@@ -5615,7 +5608,7 @@ def _pca_moments_oracle(iters: int = 3, dim: int = 64,
     hash check proves."""
     stages = []
     prev = "v0c"
-    for i in range(1, iters + 1):
+    for i in range(1, 4):
         stages.append(f"""mvc{i} AS (
       SELECT cv.i AS d, SUM(cv.m * {prev}.w) AS w
       FROM cv JOIN {prev} ON {prev}.d = cv.j GROUP BY 1
@@ -5625,17 +5618,17 @@ def _pca_moments_oracle(iters: int = 3, dim: int = 64,
         prev = f"vc{i}"
     chain = ",\n    ".join(stages)
     return f"""
-    WITH {_pca_init_sql(seed, 0, "v0c", dim)},
+    WITH {_pca_init_sql("pcacov", 0, "v0c", 64)},
     x AS (SELECT vec_id,
                  list_transform(embedding, e -> CAST(e AS DOUBLE)) AS v
           FROM embeddings
-          WHERE embedding IS NOT NULL AND len(embedding) = {dim}
+          WHERE embedding IS NOT NULL AND len(embedding) = 64
             AND len(list_filter(embedding,
                     e -> e IS NULL
                          OR NOT isfinite(CAST(e AS DOUBLE)))) = 0),
     xd AS MATERIALIZED (
       SELECT vec_id, CAST(d AS INT) AS d, v[CAST(d AS INT)+1] AS e
-      FROM x, unnest(range(0, {dim})) t(d)),
+      FROM x, unnest(range(0, 64)) t(d)),
     nn AS (SELECT COUNT(*) AS n FROM x),
     mu AS (SELECT d, SUM(e) / (SELECT n FROM nn) AS m FROM xd GROUP BY d),
     rm AS MATERIALIZED (
@@ -5685,7 +5678,7 @@ def pca_incremental_moments_embeddings(spark: SparkSession,
     n, s, m = P.merge_moments(
         P.second_moments(valid.filter(F.col("vec_id") % 2 == 0)),
         P.second_moments(valid.filter(F.col("vec_id") % 2 != 0)))
-    mu, v = P.pc1_from_moments(n, s, m, iters=3)
+    mu, v = P.pc1_from_moments(n, s, m)
     return P.pca_project(valid, mu, v, score_col="pc1_cov_score")
 
 
@@ -5704,8 +5697,7 @@ def pca2_scores_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import pca as P
 
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
-    mu, comps = P.power_iteration_components(emb, n_components=2,
-                                             dim=64, iters=3)
+    mu, comps = P.power_iteration_components(emb)
     return P.pca_project_components(emb, mu, comps)
 
 
@@ -5952,8 +5944,7 @@ def _streaming_sessions_dir(spark: SparkSession, sf_dir: str) -> str:
         stream = _feed_stream(spark, stage, [
             ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)])
         q = (
-            sessionize_stateful(stream, gap_seconds=1800,
-                                watermark="0 seconds")
+            sessionize_stateful(stream, watermark="0 seconds")
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", os.path.join(stage, "sessions_stream"))
@@ -6977,7 +6968,7 @@ def curriculum_order_documents(spark: SparkSession,
     out = curriculum_order(
         docs,
         F.coalesce(F.floor(F.octet_length("text") / 64), F.lit(-1)),
-        n_stages=3, salt="cur", keep_cols=())
+        keep_cols=())
     return out.select("doc_id", "stage", "sched_pos")
 
 
@@ -7051,7 +7042,7 @@ def curriculum_pacing_documents(spark: SparkSession,
         docs,
         F.coalesce(F.floor(F.octet_length("text") / 64), F.lit(-1)),
         F.size(_tokens(F.col("text"))),
-        quotas, n_stages=3, salt="cur")
+        quotas)
 
 
 def _streaming_curriculum_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -7509,7 +7500,7 @@ def audio_energy_mixed_documents(spark: SparkSession,
     from .operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    return MM.audio_energy_windows(MM.attach_audio_mixed(docs), window=256)
+    return MM.audio_energy_windows(MM.attach_audio_mixed(docs))
 
 
 @query(
@@ -7570,7 +7561,7 @@ def audio_energy_g711_documents(spark: SparkSession,
     from .operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    return MM.audio_energy_windows(MM.attach_audio_g711(docs), window=256)
+    return MM.audio_energy_windows(MM.attach_audio_g711(docs))
 
 
 @query(
@@ -7854,7 +7845,7 @@ def _streaming_pq_delta_dir(spark: SparkSession, sf_dir: str) -> str:
         streaming_pq_index_maintain_delta(
             stream, emb.filter(F.col("vec_id") % 3 == 0),
             os.path.join(stage, "index"),
-            os.path.join(stage, "ckpt"), m=16, k_codes=16, iters=2)
+            os.path.join(stage, "ckpt"), m=16, k_codes=16)
         compact(spark, os.path.join(stage, "index", "codes"), ["vec_id"])
 
     return os.path.join(
@@ -7969,7 +7960,7 @@ def palette_thumbnails_documents(spark: SparkSession,
     from .operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    thumbs = MM.resize_images(MM.attach_palette_images(docs), 8, 8)
+    thumbs = MM.resize_images(MM.attach_palette_images(docs))
     return MM.thumbnail_stats(thumbs)
 
 

@@ -10,17 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-NAMETABLE_IN_SCHEMA = T.StructType([
-    T.StructField("xml_id", T.StringType()),
-    T.StructField("wd_id", T.StringType()),
-    T.StructField("name", T.StringType()),
-    T.StructField("trait", T.StringType()),
-])
-
-NAMETABLE_OUT_COLS = ["tei_xml_id", "wd_id", "tei_name", "wd_name",
-                      "wd_snippet", "tei_trait", "wd_certitude"]
 
 
 def read_tsv(spark: SparkSession, path: str) -> DataFrame:

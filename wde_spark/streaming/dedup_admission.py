@@ -92,7 +92,7 @@ def _admit_batch(batch: DataFrame, batch_id: int, target_dir: str,
             fingerprints=spark.read.parquet(os.path.join(prev, "fp")),
             bands=spark.read.parquet(os.path.join(prev, "bands")),
         )
-        res = dedup_increment(corpus, docs, state, "text", "doc_id",
+        res = dedup_increment(corpus, docs, state,
                               _NUM_HASHES, _BANDS, _SHINGLE_K, _THRESHOLD,
                               max_bucket)
         corpus.join(res.revoked, "doc_id", "left_anti") \
@@ -132,8 +132,7 @@ def bootstrap_v0(init_corpus: DataFrame, target_dir: str) -> None:
     def write_v0(out: str) -> None:
         init_corpus.write.mode("overwrite").parquet(
             os.path.join(out, "corpus"))
-        st = dedup_state(init_corpus, "text", "doc_id", _NUM_HASHES, _BANDS,
-                         _SHINGLE_K)
+        st = dedup_state(init_corpus, _NUM_HASHES, _BANDS, _SHINGLE_K)
         st.fingerprints.write.mode("overwrite").parquet(
             os.path.join(out, "fp"))
         st.bands.write.mode("overwrite").parquet(os.path.join(out, "bands"))
@@ -188,12 +187,11 @@ def bootstrap_delta(init_corpus: DataFrame, target_dir: str) -> None:
     # b0 away, so "b0 exists" is NOT the bootstrapped test
     if ledger_entries(os.path.join(target_dir, "corpus")):
         return
-    st = dedup_state(init_corpus, "text", "doc_id", _NUM_HASHES, _BANDS,
-                     _SHINGLE_K)
+    st = dedup_state(init_corpus, _NUM_HASHES, _BANDS, _SHINGLE_K)
     os.makedirs(target_dir, exist_ok=True)
     with open(_params_path(target_dir), "w") as fh:
         json.dump({"num_hashes": _NUM_HASHES,
-                   "n_bands": _resolve_bands(_BANDS, _NUM_HASHES, 0.7),
+                   "n_bands": _resolve_bands(_BANDS, _NUM_HASHES),
                    "shingle_k": _SHINGLE_K}, fh)
     write_base(init_corpus, os.path.join(target_dir, "corpus"), 0,
                stats_col="doc_id", key_cols=["doc_id"])
@@ -274,7 +272,7 @@ def _admit_batch_delta(batch: DataFrame, batch_id: int, target_dir: str,
     from .compaction import read_merged, write_delta
 
     sp = batch.sparkSession
-    n_bands = _resolve_bands(_BANDS, _NUM_HASHES, 0.7)
+    n_bands = _resolve_bands(_BANDS, _NUM_HASHES)
     _check_params(target_dir, _NUM_HASHES, n_bands, _SHINGLE_K)
     corpus = read_merged(sp, os.path.join(target_dir, "corpus"),
                          ["doc_id"], as_of=batch_id)
@@ -284,7 +282,7 @@ def _admit_batch_delta(batch: DataFrame, batch_id: int, target_dir: str,
         bands=read_merged(sp, os.path.join(target_dir, "bands"),
                           ["doc_id", "band_idx"], as_of=batch_id),
     )
-    res = dedup_increment(corpus, batch, state, "text", "doc_id",
+    res = dedup_increment(corpus, batch, state,
                           _NUM_HASHES, n_bands, _SHINGLE_K, _THRESHOLD,
                           max_bucket)
     kept = res.kept.localCheckpoint()  # reused by all three deltas

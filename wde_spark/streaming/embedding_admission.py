@@ -75,7 +75,6 @@ def streaming_pq_index_maintain_delta(
     checkpoint_dir: str,
     m: int = 8,
     k_codes: int = 16,
-    iters: int = 2,
 ) -> None:
     """DELTA-LEDGER twin of `streaming_pq_index_maintain` — the
     remaining corpus-sized COW family moved to the table-format write
@@ -98,7 +97,7 @@ def streaming_pq_index_maintain_delta(
     complete = (os.path.exists(_codebook_path(target_dir))
                 and bool(ledger_entries(ledger)))
     if not complete:
-        books = train_pq_codebooks(init_items, m, k_codes, iters)
+        books = train_pq_codebooks(init_items, m, k_codes)
         with open(_codebook_path(target_dir), "w") as f:
             json.dump(books, f)
         write_base(pq_encode(init_items, books), ledger, 0,

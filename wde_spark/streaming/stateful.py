@@ -44,7 +44,8 @@ STATE_SCHEMA = T.StructType([
 ])
 
 
-def _session_fn(gap_seconds: int):
+def _session_fn():
+    gap_seconds = 1800
     gap_us = gap_seconds * 1_000_000
 
     def fn(key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
@@ -92,7 +93,7 @@ def _session_fn(gap_seconds: int):
     return fn
 
 
-def sessionize_stateful(events: DataFrame, gap_seconds: int = 1800,
+def sessionize_stateful(events: DataFrame,
                         watermark: str = "2 hours") -> DataFrame:
     """events(ts timestamp, user_id long, value double) stream → closed
     sessions via explicit per-key state. Batch-equivalence with
@@ -108,7 +109,7 @@ def sessionize_stateful(events: DataFrame, gap_seconds: int = 1800,
         events.withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _session_fn(gap_seconds),
+            _session_fn(),
             outputStructType=SESSION_OUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",

@@ -138,13 +138,13 @@ def read_version(spark, target_dir: str, n: int, subdir: str = ""):
         _join(version_dir(target_dir, n, spark), subdir))
 
 
-def compact_versions(target_dir: str, keep_last: int = 2,
-                     spark=None) -> list[int]:
+def compact_versions(target_dir: str, spark=None) -> list[int]:
     """Delete all but the newest `keep_last` versions; returns the dropped
     version numbers. Safe at any time: versions are immutable and
     self-contained, and the maintainers only ever read `v{batch_id}` (the
     newest completed version) — so `keep_last >= 2` tolerates a crash
     between a batch's read and its write."""
+    keep_last = 2
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     hist = version_history(target_dir, spark)

@@ -57,24 +57,13 @@ def tumbling(events: DataFrame) -> DataFrame:
     )
 
 
-def sliding(events: DataFrame) -> DataFrame:
-    """Sliding 1-hour event-time window every 30 minutes (each event lands
-    in two windows)."""
-    g = events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"),
-                       "event_type")
-    return _agg(g).select(
-        F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
-        "event_type", "n_events", "sum_value", "n_users",
-    )
-
-
-def session_agg(events: DataFrame, gap_seconds: int = 1800,
-                bucketed: bool = False) -> DataFrame:
+def session_agg(events: DataFrame, bucketed: bool = False) -> DataFrame:
     """Batch sessionization: per-user sessions split on inactivity gaps,
     aggregated. Same semantics as streaming `session_window` for a static
     input. `bucketed=True` uses the skew-proof (user, 1-day bucket) form
     (`relational.sessionize_bucketed`) — identical output, bounded window
     partitions for hot keys."""
+    gap_seconds = 1800
     if bucketed:
         from ..operators.relational import sessionize_bucketed
 
