@@ -1,7 +1,7 @@
 """Query-cache files whose names carry ':' are read through symlinks in a
 shadow directory (`sources/cache._hadoop_safe_paths`). Equal basenames in
 two directories must resolve to their own files, not to whichever was read
-first; the no-':' path is passed through untouched."""
+first; a no-':' file is listed as it is."""
 
 import os
 import tempfile
@@ -30,4 +30,4 @@ def test_colon_names_resolve_per_directory(tmp_path, monkeypatch):
 def test_plain_names_pass_the_glob_through(tmp_path):
     (tmp_path / "idqueried_a.json").write_text("{}")
     glob = str(tmp_path / "idqueried_*.json")
-    assert _hadoop_safe_paths(glob) == [glob]
+    assert _hadoop_safe_paths(glob) == [str(tmp_path / "idqueried_a.json")]

@@ -2,7 +2,7 @@
 the maintained codes table must be bit-identical to a one-shot batch
 encode of every vector (frozen codebook ⇒ order- and batching-invariant),
 ADC queries against it must equal the batch ADC path, and replay must
-rewrite identical versions.
+write nothing new.
 """
 
 from __future__ import annotations
@@ -59,7 +59,7 @@ def test_streaming_pq_index_matches_batch_encode(spark, tmp_path):
                   for r in SIM.pq_adc_topk(batch_codes, q, books, k=3).collect()}
     assert from_index == from_batch and len(from_index) == 6
 
-    # replay: same versions, same content
+    # replay: same ledger, same content
     versions = sorted(os.listdir(target))
     streaming_pq_index_maintain(stream, init, target, ckpt, m=4, k_codes=8)
     assert sorted(os.listdir(target)) == versions
@@ -103,14 +103,13 @@ def test_pq_query_luts_raises_on_oversized_query_side(spark):
 
 def test_delta_ledger_pq_index_matches_cow_and_compacts(spark, tmp_path):
     """The delta-ledger PQ maintainer (pure O(batch) code appends, no
-    ledger read) lands on exactly the COW maintainer's codes; ADC
-    queries agree before and after compaction; replay appends nothing."""
+    ledger read) lands on exactly a one-shot encode of every vector with
+    its frozen books; ADC queries agree with the batch ADC path before
+    and after compaction; replay appends nothing."""
     import time
 
     from wde_spark.streaming.compaction import compact, ledger_entries
-    from wde_spark.streaming.embedding_admission import (
-        ann_query_merged, read_codes_merged,
-        streaming_pq_index_maintain_delta)
+    from wde_spark.streaming.embedding_admission import read_codebooks
 
     init = spark.createDataFrame(_vecs(range(40)), SCHEMA)
     b0, b1 = _vecs(range(100, 110)), _vecs(range(200, 212))
@@ -128,31 +127,30 @@ def test_delta_ledger_pq_index_matches_cow_and_compacts(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*.parquet"))
     )
-    cow_t, cow_c = str(tmp_path / "cow"), str(tmp_path / "cowck")
-    streaming_pq_index_maintain(stream, init, cow_t, cow_c,
-                                m=4, k_codes=8)
     dl_t, dl_c = str(tmp_path / "dl"), str(tmp_path / "dlck")
-    streaming_pq_index_maintain_delta(stream, init, dl_t, dl_c,
-                                      m=4, k_codes=8)
+    streaming_pq_index_maintain(stream, init, dl_t, dl_c,
+                                m=4, k_codes=8)
 
-    want = read_codes(spark, cow_t)
-    got = read_codes_merged(spark, dl_t)
+    books = read_codebooks(dl_t)
+    want = SIM.pq_encode(
+        spark.createDataFrame(_vecs(range(40)) + b0 + b1, SCHEMA), books)
+    got = read_codes(spark, dl_t)
     assert got.exceptAll(want).unionAll(want.exceptAll(got)).count() == 0
     ledger = os.path.join(dl_t, "codes")
     assert ledger_entries(ledger) == [(0, "b"), (1, "d"), (2, "d")]
 
     q = spark.createDataFrame(_vecs([0, 5]), SCHEMA)
     pre = {(r.query_id, r.item_id, r.approx_sim, r.rnk)
-           for r in ann_query_merged(spark, dl_t, q, k=3).collect()}
+           for r in ann_query(spark, dl_t, q, k=3).collect()}
     compact(spark, ledger, ["vec_id"])
     assert ledger_entries(ledger) == [(2, "b")]
     post = {(r.query_id, r.item_id, r.approx_sim, r.rnk)
-            for r in ann_query_merged(spark, dl_t, q, k=3).collect()}
-    cow = {(r.query_id, r.item_id, r.approx_sim, r.rnk)
-           for r in ann_query(spark, cow_t, q, k=3).collect()}
-    assert pre == post == cow and len(post) == 6
+            for r in ann_query(spark, dl_t, q, k=3).collect()}
+    flat = {(r.query_id, r.item_id, r.approx_sim, r.rnk)
+            for r in SIM.pq_adc_topk(want, q, books, k=3).collect()}
+    assert pre == post == flat and len(post) == 6
 
     # replay: the compacted ledger gains nothing (checkpoint committed)
-    streaming_pq_index_maintain_delta(stream, init, dl_t, dl_c,
-                                      m=4, k_codes=8)
+    streaming_pq_index_maintain(stream, init, dl_t, dl_c,
+                                m=4, k_codes=8)
     assert ledger_entries(ledger) == [(2, "b")]

@@ -192,10 +192,9 @@ def test_increment_randomized_differential(spark):
 
 def test_streaming_admission_matches_full_rerun(spark, tmp_path):
     """Document batches admitted through the streaming foreachBatch path
-    (corpus + state rolling forward as copy-on-write versions) end in
-    exactly the corpus a full dedup_corpus re-run over everything keeps,
-    and replaying the stream rewrites identical versions (exactly-once
-    effect)."""
+    (corpus + state rolling forward as delta ledgers) end in exactly the
+    corpus a full dedup_corpus re-run over everything keeps, and
+    replaying the stream writes nothing new (exactly-once effect)."""
     import os
 
     from wde_spark.streaming.dedup_admission import (
@@ -217,7 +216,7 @@ def test_streaming_admission_matches_full_rerun(spark, tmp_path):
     got = _kept_ids(read_corpus(spark, target))
     assert got == _full(spark, CORPUS + BATCH)
 
-    # replay from the same checkpoint: no new versions, same corpus
+    # replay from the same checkpoint: no new entries, same corpus
     versions = sorted(os.listdir(target))
     streaming_dedup_admission(stream, corpus0, target, ckpt)
     assert sorted(os.listdir(target)) == versions
@@ -225,13 +224,15 @@ def test_streaming_admission_matches_full_rerun(spark, tmp_path):
 
 
 def test_version_ledger_time_travel_and_compaction(spark, tmp_path):
-    """The copy-on-write ledger gives time travel (any past corpus
-    version readable), history, and compaction (old versions dropped by
-    directory delete; the latest state is untouched)."""
+    """The admission's delta ledger gives time travel (any past corpus
+    readable `as_of` its sequence), history, and compaction (absorbed
+    entries folded and vacuumed; the latest state is untouched)."""
+    import os
+
+    from wde_spark.streaming.compaction import (compact, ledger_entries,
+                                                read_merged)
     from wde_spark.streaming.dedup_admission import (
         read_corpus, streaming_dedup_admission)
-    from wde_spark.streaming.versions import (
-        compact_versions, read_version, version_history)
 
     corpus0 = D.dedup_corpus(spark.createDataFrame(CORPUS, SCHEMA))
     src = tmp_path / "docs"
@@ -246,21 +247,22 @@ def test_version_ledger_time_travel_and_compaction(spark, tmp_path):
     target, ckpt = str(tmp_path / "corpus"), str(tmp_path / "ckpt")
     streaming_dedup_admission(stream, corpus0, target, ckpt)
 
-    assert version_history(target) == [0, 1, 2]
-    # time travel: v0 is the bootstrap corpus
+    ledger = os.path.join(target, "corpus")
+    assert ledger_entries(ledger) == [(0, "b"), (1, "d"), (2, "d")]
+    # time travel: as of 0 is the bootstrap corpus
     v0_ids = {r.doc_id for r in
-              read_version(spark, target, 0, "corpus").collect()}
+              read_merged(spark, ledger, ["doc_id"], as_of=0).collect()}
     assert v0_ids == _kept_ids(corpus0)
     final_before = _kept_ids(read_corpus(spark, target))
 
-    dropped = compact_versions(target)
-    assert dropped == [0]
-    assert version_history(target) == [1, 2]
+    assert compact(spark, ledger, ["doc_id"])["removed"] == [
+        "b0", "d1", "d2"]
+    assert ledger_entries(ledger) == [(2, "b")]
     assert _kept_ids(read_corpus(spark, target)) == final_before
 
     import pytest as _pytest
     with _pytest.raises(FileNotFoundError):
-        read_version(spark, target, 0, "corpus")
+        read_merged(spark, ledger, ["doc_id"], as_of=0)
 
 
 def test_version_ledger_on_non_local_scheme(spark, tmp_path):
@@ -315,12 +317,14 @@ def test_increment_chain_of_batches(spark):
 
 def test_streaming_drift_maintainer_matches_drift_history(spark, tmp_path):
     """The drift maintainer attached to streaming admission appends one
-    JSD row per batch; the finished ledger's rows equal `drift_history`
-    recomputed over the same COW versions (same from/to, same values) —
-    and replay rewrites the same ledger (idempotent)."""
+    JSD row per batch; the finished ledger's rows equal the divergence
+    recomputed between the merged corpus as of each pair of ledger
+    sequences (same from/to, same values) — and replay leaves the drift
+    ledger as it is (idempotent)."""
     import os
 
-    from wde_spark.operators.drift import drift_history
+    from wde_spark.operators.drift import corpus_divergence, term_distribution
+    from wde_spark.streaming.compaction import read_merged
     from wde_spark.streaming.dedup_admission import (
         read_drift, streaming_dedup_admission)
 
@@ -343,16 +347,21 @@ def test_streaming_drift_maintainer_matches_drift_history(spark, tmp_path):
     got = {key(r): (r.jsd, r.l1, r.n_terms_a, r.n_terms_b,
                     r.n_terms_common)
            for r in read_drift(spark, drift).collect()}
-    want = {key(r): (r.jsd, r.l1, r.n_terms_a, r.n_terms_b,
-                     r.n_terms_common)
-            for r in drift_history(spark, target).collect()}
+    want = {}
+    for a in (0, 1):
+        dist = [term_distribution(read_merged(
+            spark, os.path.join(target, "corpus"), ["doc_id"], as_of=n))
+            for n in (a, a + 1)]
+        r = corpus_divergence(*dist).first()
+        want[(a, a + 1)] = (r.jsd, r.l1, r.n_terms_a, r.n_terms_b,
+                            r.n_terms_common)
     assert got == want and len(got) == 2
 
-    # replay: same ledger directories, same rows
-    dirs = sorted(os.listdir(drift))
+    # replay: same ledger files, same rows
+    dirs = sorted(f for _, _, fs in os.walk(drift) for f in fs)
     streaming_dedup_admission(stream, corpus0, target, ckpt,
                               drift_dir=drift)
-    assert sorted(os.listdir(drift)) == dirs
+    assert sorted(f for _, _, fs in os.walk(drift) for f in fs) == dirs
     got2 = {key(r): (r.jsd, r.l1) for r in
             read_drift(spark, drift).collect()}
     assert got2 == {k: v[:2] for k, v in got.items()}
@@ -366,7 +375,7 @@ def test_streaming_lm_gated_admission(spark, tmp_path):
     shape: docs scoring below the frozen-LM cutoff land in the quarantine
     ledger with their scores, survivors are dedup-admitted; the final
     corpus equals a flat dedup_corpus re-run over init ∪ {docs scoring >=
-    cutoff}; replay rewrites the same versions + ledgers."""
+    cutoff}; replay writes no new ledger entries."""
     import os
 
     from wde_spark.operators.lm_score import lm_quality, train_bigram_lm
@@ -415,7 +424,7 @@ def test_streaming_lm_gated_admission(spark, tmp_path):
     assert set(q) == bad
     assert all(q[i] == scores[i] for i in bad)
 
-    # replay: same version dirs, same ledger, same corpus
+    # replay: same ledger dirs, same quarantine, same corpus
     versions = sorted(os.listdir(target))
     streaming_lm_dedup_admission(stream, corpus0, target, ckpt, quar,
                                  cutoff)
@@ -430,7 +439,7 @@ def test_streaming_nb_gated_admission(spark, tmp_path):
     predictions land in the per-batch prediction ledger, docs predicted
     outside keep_labels are quarantined, survivors dedup-admitted; the
     final corpus equals a flat dedup_corpus re-run over init ∪ {docs
-    predicted in keep_labels}; replay rewrites the same ledgers."""
+    predicted in keep_labels}; replay leaves the ledgers as they are."""
     import os
 
     from wde_spark.operators.classifier import nb_classify, train_naive_bayes
@@ -485,7 +494,7 @@ def test_streaming_nb_gated_admission(spark, tmp_path):
         os.path.join(quar, "b*")).collect()}
     assert q == rej
 
-    # replay: same version dirs, same ledgers, same corpus
+    # replay: same ledger dirs, same side ledgers, same corpus
     versions = sorted(os.listdir(target))
     streaming_nb_dedup_admission(stream, corpus0, train, target, ckpt,
                                  quar, keep_labels=["tech"])
@@ -496,17 +505,16 @@ def test_streaming_nb_gated_admission(spark, tmp_path):
 
 
 def test_delta_ledger_admission_matches_cow_and_compaction(spark, tmp_path):
-    """The delta-ledger admission twin (O(batch) upsert/tombstone appends
-    for corpus, fingerprints, AND bands) lands on exactly the corpus the
-    COW maintainer and the full re-run keep; compacting all three
-    ledgers changes read amplification, never a row; replay rewrites
-    the same deltas."""
+    """The delta-ledger admission (O(batch) upsert/tombstone appends for
+    corpus, fingerprints, AND bands) lands on exactly the corpus the
+    full re-run keeps; compacting all three ledgers changes read
+    amplification, never a row; replay writes nothing."""
     import os
 
     from wde_spark.streaming.compaction import (compact, ledger_entries,
                                                 read_merged)
     from wde_spark.streaming.dedup_admission import (
-        read_corpus_merged, streaming_dedup_admission_delta)
+        read_corpus, streaming_dedup_admission)
 
     corpus0 = D.dedup_corpus(spark.createDataFrame(CORPUS, SCHEMA))
     src = tmp_path / "docs"
@@ -524,9 +532,9 @@ def test_delta_ledger_admission_matches_cow_and_compaction(spark, tmp_path):
         .parquet(str(src / "*.parquet"))
     )
     target, ckpt = str(tmp_path / "ledgers"), str(tmp_path / "ckptd")
-    streaming_dedup_admission_delta(stream, corpus0, target, ckpt)
+    streaming_dedup_admission(stream, corpus0, target, ckpt)
 
-    got = _kept_ids(read_corpus_merged(spark, target))
+    got = _kept_ids(read_corpus(spark, target))
     assert got == _full(spark, CORPUS + BATCH)
 
     # ledger shape: base + one delta per micro-batch, all three tables
@@ -547,16 +555,16 @@ def test_delta_ledger_admission_matches_cow_and_compaction(spark, tmp_path):
                       ("bands", ["doc_id", "band_idx"])):
         compact(spark, os.path.join(target, sub), keys)
         assert ledger_entries(os.path.join(target, sub)) == [(2, "b")]
-    assert _kept_ids(read_corpus_merged(spark, target)) == got
+    assert _kept_ids(read_corpus(spark, target)) == got
 
     # replay from the same checkpoint: no new ledger entries
-    streaming_dedup_admission_delta(stream, corpus0, target, ckpt)
+    streaming_dedup_admission(stream, corpus0, target, ckpt)
     for sub in ("corpus", "fp", "bands"):
         assert ledger_entries(os.path.join(target, sub)) == [(2, "b")]
 
 
 def test_delta_admission_banding_params_frozen(spark, tmp_path):
-    """Banding parameters are persisted at bootstrap_delta time and
+    """Banding parameters are persisted at bootstrap time and
     asserted on every admission: band-tombstone enumeration depends on
     them, so driving a ledger bootstrapped with a different
     num_hashes/bands must fail loudly instead of silently missing (or
@@ -566,12 +574,11 @@ def test_delta_admission_banding_params_frozen(spark, tmp_path):
 
     import pytest
 
-    from wde_spark.streaming.dedup_admission import (_admit_batch_delta,
-                                                     bootstrap_delta)
+    from wde_spark.streaming.dedup_admission import _admit_batch, bootstrap
 
     corpus0 = D.dedup_corpus(spark.createDataFrame(CORPUS, SCHEMA))
     target = str(tmp_path / "bandguard")
-    bootstrap_delta(corpus0, target)
+    bootstrap(corpus0, target)
     params = os.path.join(target, "_dedup_params.json")
     with open(params) as fh:
         frozen = fh.read()
@@ -580,22 +587,22 @@ def test_delta_admission_banding_params_frozen(spark, tmp_path):
         json.dump({"num_hashes": 8, "n_bands": 4, "shingle_k": 2}, fh)
     batch = spark.createDataFrame(BATCH[:2], SCHEMA)
     with pytest.raises(ValueError, match="bootstrapped"):
-        _admit_batch_delta(batch, 0, target, max_bucket=None)
+        _admit_batch(batch, 0, target, max_bucket=None)
     # matching parameters admit cleanly
     with open(params, "w") as fh:
         fh.write(frozen)
-    _admit_batch_delta(batch, 0, target, max_bucket=None)
+    _admit_batch(batch, 0, target, max_bucket=None)
 
 
 def test_auto_compact_admission_equals_plain(spark, tmp_path):
-    """The auto-compacting delta admission (in-stream OPTIMIZE on all
-    three ledgers, deferred vacuum) admits exactly the same corpus as
-    the plain delta maintainer, with the live read plan bounded."""
+    """The auto-compacting admission (in-stream OPTIMIZE on all three
+    ledgers, deferred vacuum) admits exactly the same corpus as the
+    plain maintainer, with the live read plan bounded."""
     import os
 
     from wde_spark.streaming.compaction import plan_entries
     from wde_spark.streaming.dedup_admission import (
-        read_corpus_merged, streaming_dedup_admission_delta)
+        read_corpus, streaming_dedup_admission)
 
     corpus0 = D.dedup_corpus(spark.createDataFrame(CORPUS, SCHEMA))
     results = {}
@@ -615,12 +622,12 @@ def test_auto_compact_admission_equals_plain(spark, tmp_path):
             .parquet(str(src / "*.parquet"))
         )
         target = str(tmp_path / f"ledac_{tag}")
-        streaming_dedup_admission_delta(
+        streaming_dedup_admission(
             stream, corpus0, target, str(tmp_path / f"ckac_{tag}"),
             auto_compact=auto)
         results[tag] = target
-    got_auto = _kept_ids(read_corpus_merged(spark, results["auto"]))
-    got_plain = _kept_ids(read_corpus_merged(spark, results["plain"]))
+    got_auto = _kept_ids(read_corpus(spark, results["auto"]))
+    got_plain = _kept_ids(read_corpus(spark, results["plain"]))
     assert got_auto == got_plain == _full(spark, CORPUS + BATCH)
     for sub in ("corpus", "fp", "bands"):
         assert len(plan_entries(

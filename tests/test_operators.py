@@ -421,8 +421,8 @@ def test_pq_codebooks_deterministic_and_shaped(spark):
          for i in range(40)],
         "vec_id long, embedding array<float>",
     )
-    b1 = SIM.train_pq_codebooks(vecs, m=4, k_codes=8, iters=2)
-    b2 = SIM.train_pq_codebooks(vecs, m=4, k_codes=8, iters=2)
+    b1 = SIM.train_pq_codebooks(vecs, m=4, k_codes=8)
+    b2 = SIM.train_pq_codebooks(vecs, m=4, k_codes=8)
     assert b1 == b2
     assert len(b1) == 4                      # m sub-spaces
     assert all(len(s) == 8 for s in b1)      # k codes each
@@ -454,8 +454,8 @@ def test_ivf_centroids_deterministic(spark):
          for i in range(40)],
         "vec_id long, embedding array<float>",
     )
-    c1 = SIM.train_ivf_centroids(vecs, n_cells=4, iters=2)
-    c2 = SIM.train_ivf_centroids(vecs, n_cells=4, iters=2)
+    c1 = SIM.train_ivf_centroids(vecs, n_cells=4)
+    c2 = SIM.train_ivf_centroids(vecs, n_cells=4)
     assert c1 == c2
     assert len(c1) == 4 and all(len(c) == 4 for c in c1)
 

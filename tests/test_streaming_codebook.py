@@ -6,8 +6,13 @@ Pinned contracts:
   bootstrap + per-batch `_batch_cell_sums` folds sequentially.
 - FROZEN ASSIGNMENTS: member counts only ever grow, and the total count
   equals init + all batch vectors (nothing re-assigns or drops).
-- REPLAY: re-applying batch 0 against state v0 rewrites the same rows.
+- REPLAY: re-applying batch 0 against state as of 0 rederives the same
+  rows.
 - FALLBACK: a cell no vector has joined reports its bootstrap coordinate.
+
+The state is a delta ledger (`streaming/compaction.py`), whose generic
+semantics (LWW, tombstones, manifest commits, compaction cadence, change
+feed) are pinned here too.
 """
 
 from __future__ import annotations
@@ -27,10 +32,10 @@ def _emb(spark):
 
 def _run_stream(spark, emb, tmp_path, tag: str):
     from wde_spark.streaming.codebook_maintenance import (
-        bootstrap_codebook_v0, streaming_codebook_maintain)
+        bootstrap_codebook, streaming_codebook_maintain)
 
     target = str(tmp_path / f"cbk_{tag}")
-    bootstrap_codebook_v0(emb.filter(F.col("vec_id") % 5 != 0), target)
+    bootstrap_codebook(emb.filter(F.col("vec_id") % 5 != 0), target)
     feed = str(tmp_path / f"feed_{tag}")
     now = time.time()
     for i, pred in ((0, F.col("vec_id") % 10 == 0),
@@ -50,9 +55,16 @@ def _run_stream(spark, emb, tmp_path, tag: str):
     return target
 
 
+def _state(spark, target, version):
+    """The maintained state as of ledger sequence `version`."""
+    from wde_spark.streaming.compaction import read_merged
+
+    return read_merged(spark, os.path.join(target, "state"), ["cell", "d"],
+                       as_of=version)
+
+
 def _state_rows(spark, target, version):
-    df = spark.read.parquet(
-        os.path.join(target, "state", f"v{version}"))
+    df = _state(spark, target, version)
     return sorted(
         (r["cell"], r["d"], r["n"], round(r["s"], 9), round(r["boot"], 9))
         for r in df.collect())
@@ -68,7 +80,7 @@ def test_composition_equals_manual_folds(spark, tmp_path):
     got1 = _state_rows(spark, target, 1)
     got2 = _state_rows(spark, target, 2)
 
-    st0 = spark.read.parquet(os.path.join(target, "state", "v0"))
+    st0 = _state(spark, target, 0)
     cents0 = _centroids_from_state(st0)
     s1 = _batch_cell_sums(emb.filter(F.col("vec_id") % 10 == 0), cents0)
     want1 = sorted(
@@ -77,7 +89,7 @@ def test_composition_equals_manual_folds(spark, tmp_path):
         for r in st0.join(s1, ["cell", "d"], "left").collect())
     assert got1 == want1
 
-    st1 = spark.read.parquet(os.path.join(target, "state", "v1"))
+    st1 = _state(spark, target, 1)
     cents1 = _centroids_from_state(st1)
     s2 = _batch_cell_sums(emb.filter(F.col("vec_id") % 10 == 5), cents1)
     want2 = sorted(
@@ -96,17 +108,15 @@ def test_counts_conserve_and_grow(spark, tmp_path):
     totals = []
     for v, want in ((0, n_init), (1, n_init + n_b0),
                     (2, n_init + n_b0 + n_b1)):
-        st = spark.read.parquet(os.path.join(target, "state", f"v{v}"))
+        st = _state(spark, target, v)
         tot = st.filter(F.col("d") == 0).agg(F.sum("n")).first()[0]
         totals.append((v, tot))
         assert tot == want, (v, tot, want)
     # monotone per cell
-    st0 = {(r["cell"]): r["n"] for r in spark.read.parquet(
-        os.path.join(target, "state", "v0"))
-        .filter(F.col("d") == 0).collect()}
-    st2 = {(r["cell"]): r["n"] for r in spark.read.parquet(
-        os.path.join(target, "state", "v2"))
-        .filter(F.col("d") == 0).collect()}
+    st0 = {(r["cell"]): r["n"] for r in _state(spark, target, 0)
+           .filter(F.col("d") == 0).collect()}
+    st2 = {(r["cell"]): r["n"] for r in _state(spark, target, 2)
+           .filter(F.col("d") == 0).collect()}
     assert all(st2[c] >= st0[c] for c in st0)
 
 
@@ -117,8 +127,8 @@ def test_replay_idempotent(spark, tmp_path):
     emb = _emb(spark)
     target = _run_stream(spark, emb, tmp_path, "replay")
     got1 = _state_rows(spark, target, 1)
-    # re-derive v1 from v0 exactly as a foreachBatch replay would
-    st0 = spark.read.parquet(os.path.join(target, "state", "v0"))
+    # re-derive state 1 from state 0 exactly as a foreachBatch replay would
+    st0 = _state(spark, target, 0)
     cents0 = _centroids_from_state(st0)
     s1 = _batch_cell_sums(emb.filter(F.col("vec_id") % 10 == 0), cents0)
     redo = sorted(
@@ -136,7 +146,7 @@ def test_empty_cell_reports_bootstrap(spark, tmp_path):
     emb = _emb(spark)
     target = _run_stream(spark, emb, tmp_path, "fb")
     cb = read_codebook(spark, target)
-    st = spark.read.parquet(os.path.join(target, "state", "v2"))
+    st = _state(spark, target, 2)
     empty = [r["cell"] for r in st.filter(
         (F.col("d") == 0) & (F.col("n") == 0)).collect()]
     if not empty:  # dataset-dependent; the invariant still holds vacuously
@@ -147,31 +157,6 @@ def test_empty_cell_reports_bootstrap(spark, tmp_path):
         assert r["m"] == boots[(r["cell"], r["d"])]
 
 
-def _run_stream_delta(spark, emb, tmp_path, tag: str):
-    from wde_spark.streaming.codebook_maintenance import (
-        bootstrap_codebook_delta, streaming_codebook_maintain_delta)
-
-    target = str(tmp_path / f"cbkd_{tag}")
-    bootstrap_codebook_delta(emb.filter(F.col("vec_id") % 5 != 0), target)
-    feed = str(tmp_path / f"feedd_{tag}")
-    now = time.time()
-    for i, pred in ((0, F.col("vec_id") % 10 == 0),
-                    (1, F.col("vec_id") % 10 == 5)):
-        fdir = os.path.join(feed, f"b{i}.parquet")
-        emb.filter(pred).coalesce(1).write.mode("overwrite").parquet(fdir)
-        for name in os.listdir(fdir):
-            os.utime(os.path.join(fdir, name),
-                     (now - 600 + i * 60, now - 600 + i * 60))
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(feed, "*.parquet"))
-    )
-    streaming_codebook_maintain_delta(stream, target,
-                                      str(tmp_path / f"ckptd_{tag}"))
-    return target
-
-
 def _codebook_rows(df):
     return sorted((int(r["cell"]), int(r["d"]), int(r["n"]),
                    round(float(r["m"]), 9)) for r in df.collect())
@@ -179,18 +164,27 @@ def _codebook_rows(df):
 
 def test_delta_ledger_equals_cow_and_compaction_preserves(spark, tmp_path):
     """The delta-ledger maintainer lands on the SAME final codebook as
-    the COW-snapshot one; compaction changes read amplification, never
-    a row."""
+    the flat rerun (the bootstrap state folded batch by batch by hand);
+    compaction changes read amplification, never a row."""
     from wde_spark.streaming.codebook_maintenance import (
-        read_codebook, read_codebook_merged)
+        _batch_cell_sums, _centroids_from_state, read_codebook)
     from wde_spark.streaming.compaction import (compact, ledger_entries,
                                                 read_amplification)
 
     emb = _emb(spark)
-    cow = _run_stream(spark, emb, tmp_path, "eq")
-    dl = _run_stream_delta(spark, emb, tmp_path, "eq")
-    want = _codebook_rows(read_codebook(spark, cow))
-    pre_rows = _codebook_rows(read_codebook_merged(spark, dl))
+    dl = _run_stream(spark, emb, tmp_path, "eq")
+    st = _state(spark, dl, 0)
+    for pred in (F.col("vec_id") % 10 == 0, F.col("vec_id") % 10 == 5):
+        sums = _batch_cell_sums(emb.filter(pred), _centroids_from_state(st))
+        st = st.join(sums, ["cell", "d"], "left").select(
+            "cell", "d",
+            (F.col("n") + F.coalesce("n_add", F.lit(0))).alias("n"),
+            (F.col("s") + F.coalesce("s_add", F.lit(0.0))).alias("s"),
+            "boot")
+    want = _codebook_rows(st.select(
+        "cell", "d", "n", F.when(F.col("n") > 0, F.col("s") / F.col("n"))
+        .otherwise(F.col("boot")).alias("m")))
+    pre_rows = _codebook_rows(read_codebook(spark, dl))
     assert pre_rows == want
     ledger = os.path.join(dl, "state")
     pre = read_amplification(ledger)
@@ -200,7 +194,7 @@ def test_delta_ledger_equals_cow_and_compaction_preserves(spark, tmp_path):
     post = read_amplification(ledger)
     assert post["entries"] == 1  # one folded base
     assert ledger_entries(ledger) == [(2, "b")]
-    assert _codebook_rows(read_codebook_merged(spark, dl)) == want
+    assert _codebook_rows(read_codebook(spark, dl)) == want
     # compacting an already-compact ledger is a no-op
     assert compact(spark, ledger, ["cell", "d"])["removed"] == []
 
@@ -459,34 +453,58 @@ def test_manifest_atomic_commit_hides_partial_writes(spark, tmp_path):
         1: "a", 2: "b", 3: "c"}
 
 
-def test_manifest_adopts_legacy_listdir_ledger(spark, tmp_path):
-    """A pre-manifest ledger (entry directories, no `_manifest/`) keeps
-    reading via the listdir fallback, and the first write through the
-    current API adopts it into the manifest without changing what a
-    merged read returns."""
+def test_crash_before_first_commit_leaves_empty_ledger(spark, tmp_path,
+                                                       monkeypatch):
+    """A ledger has no entries until its first manifest commit: a base
+    written completely but killed before its commit leaves an empty
+    ledger (a merged read raises instead of reading the uncommitted
+    directory), and the retried write commits it."""
     import os
-    import shutil
+
+    import pytest
+
+    from wde_spark.streaming import compaction as C
+
+    ledger = str(tmp_path / "first")
+    df = spark.createDataFrame([(1, "a")], "k int, v string")
+
+    def crash(target_dir, payload):
+        raise OSError("injected crash before the first commit")
+
+    monkeypatch.setattr(C, "_append_commit", crash)
+    with pytest.raises(OSError, match="injected"):
+        C.write_base(df, ledger, 0)
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(ledger, "b0"))
+    assert C.ledger_entries(ledger) == []
+    with pytest.raises(FileNotFoundError):
+        C.read_merged(spark, ledger, ["k"])
+    C.write_base(df, ledger, 0)
+    assert C.ledger_entries(ledger) == [(0, "b")]
+
+
+def test_replayed_write_keeps_committed_entry(spark, tmp_path):
+    """A replayed write of an entry that is already committed runs
+    nothing: a frame planned over the entry before the replay still
+    reads, and the entry's files are the ones first written."""
+    import os
 
     from wde_spark.streaming.compaction import (ledger_entries,
                                                 read_merged, write_base,
                                                 write_delta)
 
-    ledger = str(tmp_path / "legacy")
+    ledger = str(tmp_path / "replay")
     write_base(spark.createDataFrame([(1, "a")], "k int, v string"),
                ledger, 0)
-    write_delta(spark.createDataFrame([(2, "b", "U")],
-                                      "k int, v string, _op string"),
-                ledger, 1)
-    shutil.rmtree(os.path.join(ledger, "_manifest"))  # pre-manifest disk
-    assert ledger_entries(ledger) == [(0, "b"), (1, "d")]  # fallback
-    write_delta(spark.createDataFrame([(3, "c", "U")],
-                                      "k int, v string, _op string"),
-                ledger, 2)  # adopts + commits atomically
-    assert os.path.isdir(os.path.join(ledger, "_manifest"))
-    assert ledger_entries(ledger) == [(0, "b"), (1, "d"), (2, "d")]
-    assert {r["k"]: r["v"] for r in
-            read_merged(spark, ledger, ["k"]).collect()} == {
-        1: "a", 2: "b", 3: "c"}
+    delta = spark.createDataFrame([(2, "b", "U")],
+                                  "k int, v string, _op string")
+    write_delta(delta, ledger, 1, key_cols=["k"])
+    files = sorted(os.listdir(os.path.join(ledger, "d1")))
+    planned = read_merged(spark, ledger, ["k"])
+    write_delta(delta, ledger, 1, key_cols=["k"])  # the replay
+    assert sorted(os.listdir(os.path.join(ledger, "d1"))) == files
+    assert ledger_entries(ledger) == [(0, "b"), (1, "d")]
+    assert {r["k"]: r["v"] for r in planned.collect()} == {1: "a", 2: "b"}
 
 
 def test_write_delta_key_contract_assertion(spark, tmp_path):
@@ -513,20 +531,18 @@ def test_write_delta_key_contract_assertion(spark, tmp_path):
 def test_auto_compact_maintainer_equals_manual(spark, tmp_path):
     """`auto_compact` (the in-stream OPTIMIZE cadence) bounds ledger
     length DURING the stream without changing a row: the auto-compacted
-    delta maintainer lands on exactly the codebook the plain delta
-    maintainer (no folds) produces, and its ledger stays within the
-    entry budget plus the one-fold retention tail."""
+    maintainer lands on exactly the codebook the plain maintainer (no
+    folds) produces, and its ledger stays within the entry budget plus
+    the one-fold retention tail."""
     from wde_spark.streaming.codebook_maintenance import (
-        bootstrap_codebook_delta, read_codebook_merged,
-        streaming_codebook_maintain_delta)
+        bootstrap_codebook, read_codebook, streaming_codebook_maintain)
     from wde_spark.streaming.compaction import plan_entries
 
     emb = _emb(spark)
     targets = {}
     for tag, auto in (("plain", None), ("auto", 1)):
         target = str(tmp_path / f"cbkac_{tag}")
-        bootstrap_codebook_delta(emb.filter(F.col("vec_id") % 5 != 0),
-                                 target)
+        bootstrap_codebook(emb.filter(F.col("vec_id") % 5 != 0), target)
         feed = str(tmp_path / f"feedac_{tag}")
         now = time.time()
         for i, pred in ((0, F.col("vec_id") % 10 == 0),
@@ -542,13 +558,13 @@ def test_auto_compact_maintainer_equals_manual(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(os.path.join(feed, "*.parquet"))
         )
-        streaming_codebook_maintain_delta(
+        streaming_codebook_maintain(
             stream, target, str(tmp_path / f"ckptac_{tag}"),
             auto_compact=auto)
         targets[tag] = target
-    got_auto = _codebook_rows(read_codebook_merged(spark, targets["auto"]))
+    got_auto = _codebook_rows(read_codebook(spark, targets["auto"]))
     got_plain = _codebook_rows(
-        read_codebook_merged(spark, targets["plain"]))
+        read_codebook(spark, targets["plain"]))
     assert got_auto == got_plain
     # budget=1 folded after each over-budget append: the live plan is
     # back to one base (+ at most the deltas since the last fold)

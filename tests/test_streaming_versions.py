@@ -1,24 +1,31 @@
-"""Fault injection over every copy-on-write streaming sink
-(`streaming/versions.py`): versions are committed by
-`versioned_step` / `bootstrap` (stage, then one rename), so
+"""Fault injection over every streaming sink. The copy-on-write sinks
+(`streaming/versions.py`) commit a version by `versioned_step` /
+`bootstrap` (stage, then one rename); the delta-ledger maintainers
+(`streaming/compaction.py`: the dedup admission, the LM gate in front of
+it, the PQ index and the codebook) commit each entry by one manifest
+commit, where the crash is injected. For both:
 
-- REPLAY AFTER COMMIT: a batch re-run after its version landed (the
-  checkpoint's commit-log entry lost — foreachBatch's at-least-once case)
-  completes with unchanged versions and unchanged reads;
-- CRASH BEFORE COMMIT: a failure at the rename fails the query, readers
-  still see the previous version, and the restart recomputes the batch
-  to the uninterrupted result;
-- BOOTSTRAP CRASH: a failure at v0's rename leaves no v0, and the restart
-  redoes the whole bootstrap to the uninterrupted run's v0.
+- REPLAY AFTER COMMIT: a batch re-run after it landed (the checkpoint's
+  commit-log entry lost — foreachBatch's at-least-once case) completes
+  with unchanged files and unchanged reads — no version, entry, gate
+  ledger or drift row is rewritten;
+- CRASH BEFORE COMMIT: a failure at the commit fails the query, readers
+  still see the previous batch, and the restart recomputes the batch to
+  the uninterrupted result;
+- BOOTSTRAP CRASH: a failure at v0's rename leaves no v0, and a failure
+  at any of a ledger maintainer's base commits leaves that base
+  uncommitted; the restart redoes the bootstrap to the uninterrupted
+  run's v0 or bases.
 
-Each of the 13 step sites runs two one-file micro-batches over tiny
-inline inputs. One uninterrupted reference run per sink is shared by its
-three cases.
+Each of the 14 sites runs two one-file micro-batches over tiny inline
+inputs. One uninterrupted reference run per sink is shared by its three
+cases.
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import time
@@ -26,7 +33,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from wde_spark.streaming import versions
+from wde_spark.streaming import compaction, versions
 
 DOCS = "doc_id long, text string"
 VECS = "vec_id long, embedding array<float>"
@@ -55,7 +62,7 @@ def _latest(spark, target):
     return _rows(spark.read.parquet(versions.latest_version_dir(target)))
 
 
-# -- the 13 step sites: (schema, batches, run, read, version subdir, v0?) --
+# -- the 14 sites: (schema, batches, run, read, version subdir, v0?) --
 
 def _cdc(spark, stream, t, ckpt):
     from wde_spark.streaming.cdc import streaming_cdc_apply
@@ -155,13 +162,33 @@ def _dedup_init(spark):
 def _dedup(spark, stream, t, ckpt):
     from wde_spark.streaming.dedup_admission import streaming_dedup_admission
 
-    streaming_dedup_admission(stream, _dedup_init(spark), t, ckpt)
+    streaming_dedup_admission(stream, _dedup_init(spark), t, ckpt,
+                              drift_dir=os.path.join(t, "drift"))
 
 
 def _dedup_read(spark, t):
+    # the drift row of a crashed batch lands after its corpus commit, so
+    # it is not part of what "reads stay at the previous batch" covers
     from wde_spark.streaming.dedup_admission import read_corpus
 
     return _rows(read_corpus(spark, t))
+
+
+LM_CUTOFF = -3.0  # splits both batches of BATCH under CORPUS[:4]'s LM
+
+
+def _lm(spark, stream, t, ckpt):
+    from wde_spark.streaming.lm_admission import streaming_lm_dedup_admission
+
+    streaming_lm_dedup_admission(stream, _dedup_init(spark), t, ckpt,
+                                 os.path.join(t, "quarantine"), LM_CUTOFF)
+
+
+def _lm_read(spark, t):
+    from wde_spark.streaming.lm_admission import read_quarantine
+
+    return (_dedup_read(spark, t),
+            _rows(read_quarantine(spark, os.path.join(t, "quarantine"))))
 
 
 def _pq(spark, stream, t, ckpt):
@@ -170,7 +197,7 @@ def _pq(spark, stream, t, ckpt):
 
     streaming_pq_index_maintain(
         stream, spark.createDataFrame(_vecs(range(24)), VECS), t, ckpt,
-        m=2, k_codes=4, iters=1)
+        m=2, k_codes=4)
 
 
 def _pq_read(spark, t):
@@ -223,10 +250,10 @@ def _pack_read(spark, t):
 
 def _codebook(spark, stream, t, ckpt):
     from wde_spark.streaming.codebook_maintenance import (
-        DIM, bootstrap_codebook_v0, streaming_codebook_maintain)
+        DIM, bootstrap_codebook, streaming_codebook_maintain)
 
     init = spark.createDataFrame(_vecs(range(24), DIM), VECS)
-    bootstrap_codebook_v0(init, t, n_cells=4, iters=1)
+    bootstrap_codebook(init, t)
     streaming_codebook_maintain(stream, t, ckpt)
 
 
@@ -262,6 +289,7 @@ SITES = {
                    _curriculum, _curriculum_read, "", False),
     "shard": ("doc_id long", _IDS, _shard, _shard_read, "", False),
     "dedup": (DOCS, None, _dedup, _dedup_read, "", True),
+    "lm": (DOCS, None, _lm, _lm_read, "", True),
     "pq": (VECS, (_vecs(range(100, 106)), _vecs(range(200, 207))),
            _pq, _pq_read, "", True),
     "substr": (DOCS, ([(10, "a b c x y"), (11, "n1 n2 n3 n4")],
@@ -274,13 +302,18 @@ SITES = {
              _pack, _pack_read, "meta", True),
     "codebook": (VECS,
                  (_vecs(range(100, 106), 64), _vecs(range(200, 207), 64)),
-                 _codebook, _codebook_read, "state", True),
+                 _codebook, _codebook_read, "", True),
 }
 BOOTSTRAPPED = [n for n, s in SITES.items() if s[5]]
+# the delta-ledger sites and their ledgers under the target, in the
+# order a batch (and the bootstrap) commits them
+LEDGERS = {"dedup": ("corpus", "fp", "bands"),
+           "lm": ("corpus", "fp", "bands"),
+           "pq": ("codes",), "codebook": ("state",)}
 
 
 def _batches(name):
-    if name == "dedup":
+    if name in ("dedup", "lm"):
         from test_incremental_dedup import BATCH
 
         return BATCH[:4], BATCH[4:]
@@ -325,11 +358,56 @@ def _vdir(name, root) -> str:
     return os.path.join(root, "t", SITES[name][4])
 
 
+def _ledgers(name, root) -> list:
+    return [os.path.join(root, "t", sub) for sub in LEDGERS[name]]
+
+
+def _listing(name, root) -> list:
+    """What a replay must leave untouched: the version directories of a
+    copy-on-write sink; every file under a ledger site's target (entry
+    part-files carry a per-write unique name, so a rewrite shows)."""
+    if name not in LEDGERS:
+        return sorted(os.listdir(_vdir(name, root)))
+    t = os.path.join(root, "t")
+    return sorted(os.path.relpath(os.path.join(d, f), t)
+                  for d, _, files in os.walk(t) for f in files)
+
+
+def _head(name, root) -> int:
+    """The newest committed version / ledger sequence."""
+    if name not in LEDGERS:
+        return versions.version_history(_vdir(name, root))[-1]
+    return max(s for led in _ledgers(name, root)
+               for s, _k in compaction.ledger_entries(led))
+
+
 def _version_tables(spark, name, root, n: int) -> dict:
-    """Rows of every parquet table inside version `v{n}`."""
+    """Rows of every parquet table inside version `v{n}`, or of every
+    ledger's entry at sequence `n` (the base for n = 0)."""
+    if name in LEDGERS:
+        kind = "b" if n == 0 else "d"
+        return {sub: _rows(spark.read.parquet(
+                    os.path.join(root, "t", sub, f"{kind}{n}")))
+                for sub in LEDGERS[name]}
     base = os.path.join(_vdir(name, root), f"v{n}")
     return {os.path.relpath(d, base): _rows(spark.read.parquet(d))
             for d, _, files in os.walk(base) if "_SUCCESS" in files}
+
+
+def _drop_batch(name, root, n: int) -> None:
+    """Remove version `v{n}`, or every ledger's delta `d{n}` together
+    with the manifest commit that adds it (the last one)."""
+    if name not in LEDGERS:
+        shutil.rmtree(os.path.join(_vdir(name, root), f"v{n}"))
+        return
+    for led in _ledgers(name, root):
+        shutil.rmtree(os.path.join(led, f"d{n}"))
+        mdir = os.path.join(led, "_manifest")
+        for f in os.listdir(mdir):
+            with open(os.path.join(mdir, f)) as fh:
+                adds = json.load(fh).get("add", [])
+            if ["d", n] in adds:
+                os.remove(os.path.join(mdir, f))
 
 
 def _reference(spark, name, factory):
@@ -338,20 +416,34 @@ def _reference(spark, name, factory):
         root = str(factory.mktemp(f"ref_{name}"))
         _run(spark, name, factory, root)
         final = _read(spark, name, root)
-        v2 = os.path.join(_vdir(name, root), "v2")
-        os.rename(v2, v2 + ".hidden")
-        try:
-            at_v1 = _read(spark, name, root)
-        finally:
-            os.rename(v2 + ".hidden", v2)
-        _REFS[name] = (root, final, at_v1)
+        at_v1_root = str(factory.mktemp(f"ref_{name}_v1"))
+        shutil.rmtree(at_v1_root)
+        shutil.copytree(root, at_v1_root)
+        _drop_batch(name, at_v1_root, 2)
+        _REFS[name] = (root, final, _read(spark, name, at_v1_root))
     return _REFS[name]
 
 
-def _crash_commit_of(monkeypatch, n: int) -> None:
-    """Make the next commit of a version `v{n}` raise, once."""
-    real = versions._commit
+def _crash_commit_of(monkeypatch, name, n: int, skip: int = 0) -> None:
+    """Make the commit of version `v{n}` raise once — for a ledger site,
+    the `skip`-th manifest commit of an entry at sequence `n` (the bases
+    for n = 0, else the deltas)."""
     fired = []
+    if name in LEDGERS:
+        real_append = compaction._append_commit
+        entry = ["b" if n == 0 else "d", n]
+
+        def append(target_dir, payload):
+            if entry in payload.get("add", []):
+                fired.append(target_dir)
+                if len(fired) == skip + 1:
+                    raise OSError(f"injected crash before the commit of "
+                                  f"{target_dir}/{entry[0]}{n}")
+            return real_append(target_dir, payload)
+
+        monkeypatch.setattr(compaction, "_append_commit", append)
+        return
+    real = versions._commit
 
     def commit(stage, target_dir, m):
         if m == n and not fired:
@@ -371,8 +463,17 @@ def _drop_commit(root, batch_id: int) -> None:
         os.remove(crc)
 
 
-def _stages(name, root, n: int) -> list:
-    return glob.glob(os.path.join(_vdir(name, root), f"_v{n}.stage-*"))
+def _pending(name, root, n: int) -> bool:
+    """Whether a crashed write of `v{n}` is on disk uncommitted: a staging
+    directory, or an entry directory at sequence `n` the manifest does
+    not list."""
+    if name not in LEDGERS:
+        return bool(glob.glob(
+            os.path.join(_vdir(name, root), f"_v{n}.stage-*")))
+    kind = "b" if n == 0 else "d"
+    return any(os.path.isdir(os.path.join(led, f"{kind}{n}"))
+               and (n, kind) not in compaction.ledger_entries(led)
+               for led in _ledgers(name, root))
 
 
 @pytest.mark.parametrize("name", SITES)
@@ -381,12 +482,12 @@ def test_replay_after_commit_is_noop(spark, tmp_path_factory, tmp_path,
     ref_root, final, _ = _reference(spark, name, tmp_path_factory)
     root = str(tmp_path / "run")
     shutil.copytree(ref_root, root)
-    before = sorted(os.listdir(_vdir(name, root)))
+    before = _listing(name, root)
     _drop_commit(root, 1)
 
     _run(spark, name, tmp_path_factory, root)
     assert os.path.exists(os.path.join(root, "ckpt", "commits", "1"))
-    assert sorted(os.listdir(_vdir(name, root))) == before
+    assert _listing(name, root) == before
     assert _read(spark, name, root) == final
 
 
@@ -397,42 +498,50 @@ def test_crash_before_commit_recomputes(spark, tmp_path_factory, tmp_path,
     # batch 0 committed, batch 1 planned but not yet applied
     root = str(tmp_path / "run")
     shutil.copytree(ref_root, root)
-    shutil.rmtree(os.path.join(_vdir(name, root), "v2"))
+    _drop_batch(name, root, 2)
     _drop_commit(root, 1)
-    _crash_commit_of(monkeypatch, 2)
+    _crash_commit_of(monkeypatch, name, 2)
     with pytest.raises(Exception):
         _run(spark, name, tmp_path_factory, root)
     monkeypatch.undo()
 
-    # the crashed batch left only its staging directory behind
-    assert _stages(name, root, 2)
-    assert versions.version_history(_vdir(name, root))[-1] == 1
+    # the crashed batch left only an uncommitted write behind
+    assert _pending(name, root, 2)
+    assert _head(name, root) == 1
     assert _read(spark, name, root) == at_v1
 
     _run(spark, name, tmp_path_factory, root)
     assert _read(spark, name, root) == final
-    assert not _stages(name, root, 2)
+    assert not _pending(name, root, 2)
 
 
 @pytest.mark.parametrize("name", BOOTSTRAPPED)
 def test_bootstrap_crash_redo(spark, tmp_path_factory, tmp_path,
                               monkeypatch, name):
     ref_root, _, _ = _reference(spark, name, tmp_path_factory)
-    root = str(tmp_path / "run")
-    _crash_commit_of(monkeypatch, 0)
-    with pytest.raises(OSError, match="injected"):
+    want = _version_tables(spark, name, ref_root, 0)
+    # a copy-on-write sink commits v0 once; a ledger maintainer commits
+    # one base per ledger, and a crash at any of them must be redone
+    for k in range(len(LEDGERS.get(name, ("v0",)))):
+        root = str(tmp_path / f"run{k}")
+        _crash_commit_of(monkeypatch, name, 0, skip=k)
+        with pytest.raises(OSError, match="injected"):
+            _run(spark, name, tmp_path_factory, root, n_batches=0)
+        monkeypatch.undo()
+
+        assert _pending(name, root, 0)
+        if name in LEDGERS:  # the bases before the crash are committed
+            assert [bool(compaction.ledger_entries(led))
+                    for led in _ledgers(name, root)] == \
+                [i < k for i in range(len(LEDGERS[name]))]
+        else:
+            assert versions.version_history(_vdir(name, root)) == []
+
+        # the restart redoes the bootstrap to the uninterrupted run's v0
         _run(spark, name, tmp_path_factory, root, n_batches=0)
-    monkeypatch.undo()
-
-    assert _stages(name, root, 0)
-    assert versions.version_history(_vdir(name, root)) == []
-
-    # the restart redoes the bootstrap to the uninterrupted run's v0
-    _run(spark, name, tmp_path_factory, root, n_batches=0)
-    assert versions.version_history(_vdir(name, root)) == [0]
-    assert _version_tables(spark, name, root, 0) == \
-        _version_tables(spark, name, ref_root, 0)
-    assert not _stages(name, root, 0)
+        assert _version_tables(spark, name, root, 0) == want
+        assert _head(name, root) == 0
+        assert not _pending(name, root, 0)
 
 
 def test_versioned_step_prev_rules(tmp_path):

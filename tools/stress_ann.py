@@ -73,8 +73,7 @@ def main() -> None:
     else:
         t0 = time.time()
         books = SIM.train_pq_codebooks(
-            items.filter(F.col("vec_id") % 50 == 0), m=16, k_codes=16,
-            iters=2)
+            items.filter(F.col("vec_id") % 50 == 0), m=16, k_codes=16)
         SIM.pq_encode(items, books).write.mode("overwrite") \
             .parquet(codes_path)
         with open(books_path, "w") as fh:

@@ -13,18 +13,16 @@ growing under it, against the full rebuild at each step.
 
 Per batch it records:
 
-  * admit_sec — read version v{i}, `dedup_increment`, write v{i+1}
-    (corpus + fp + bands): the COW maintainer's true per-batch cost,
-    including its full-snapshot state/corpus write;
-  * admit_delta_sec — the same admission through the DELTA-LEDGER twin
-    (`_admit_batch_delta`): identical `dedup_increment` work, but the
-    write is O(batch) upserts + tombstones (`streaming/compaction.py`)
-    instead of the snapshot rewrite — the gap between the two IS the
-    snapshot write;
+  * admit_sec — read every ledger as of sequence i-1, `dedup_increment`,
+    append the O(batch) upsert + tombstone deltas at sequence i (corpus +
+    fp + bands, `streaming/compaction.py`): the maintainer's true
+    per-batch cost;
+  * compact_sec / folded — the `maybe_compact` cadence between batches
+    (entry budget 3), charged separately;
   * rebuild_sec — `dedup_corpus` over ALL raw docs arrived so far
     (read back from parquet, as a re-run would), counted;
   * corpus_rows — admitted corpus size after the batch (asserted equal
-    across COW, delta-ledger, and the rebuild).
+    to the rebuild).
 
 Batches are 30% exact clones of existing corpus texts (dropped or
 dethroning) and 70% novel md5-salad texts (admitted), so both dedup
@@ -55,11 +53,8 @@ from pyspark.sql import functions as F
 from wde_spark.core.session import get_session
 from wde_spark.operators.dedup import dedup_corpus
 from wde_spark.streaming.compaction import maybe_compact
-from wde_spark.streaming.dedup_admission import (_admit_batch,
-                                                 _admit_batch_delta,
-                                                 bootstrap_delta,
-                                                 bootstrap_v0, read_corpus,
-                                                 read_corpus_merged)
+from wde_spark.streaming.dedup_admission import (_admit_batch, bootstrap,
+                                                 read_corpus)
 
 
 def _salad(key, tag: str, words: int = 40):
@@ -87,9 +82,7 @@ def main() -> None:
         init.write.mode("overwrite").parquet(
             os.path.join(raw_dir, "b0.parquet"))
         init = spark.read.parquet(os.path.join(raw_dir, "b0.parquet"))
-        bootstrap_v0(init, target)
-        target_d = os.path.join(work, "corpus_delta")
-        bootstrap_delta(init, target_d)
+        bootstrap(init, target)
 
         rows = []
         for i in range(1, n_batches + 1):
@@ -115,11 +108,6 @@ def main() -> None:
             t0 = time.time()
             _admit_batch(batch, i - 1, target, 64)
             admit_sec = time.time() - t0
-            corpus_rows = read_corpus(spark, target).count()
-
-            t0 = time.time()
-            _admit_batch_delta(batch, i - 1, target_d, 64)
-            admit_delta_sec = time.time() - t0
             # compaction cadence between committed batches: bounds the
             # ledger length every merged read (incl. the NEXT batch's
             # as_of read) must union — amortized O(table) folds, charged
@@ -129,12 +117,11 @@ def main() -> None:
                       (("corpus", ["doc_id"]), ("fp", ["doc_id"]),
                        ("bands", ["doc_id", "band_idx"]))
                       if maybe_compact(
-                          spark, os.path.join(target_d, sub), keys,
+                          spark, os.path.join(target, sub), keys,
                           max_entries=3) is not None]
             compact_sec = time.time() - t0
-            delta_rows = read_corpus_merged(spark, target_d).count()
+            corpus_rows = read_corpus(spark, target).count()
 
-            assert corpus_rows == delta_rows, (corpus_rows, delta_rows)
             rebuild_sec = None
             rebuilt_rows = None
             if i % rebuild_every == 0:
@@ -149,7 +136,6 @@ def main() -> None:
                 "batch": i, "corpus_rows": corpus_rows,
                 "rebuilt_rows": rebuilt_rows,
                 "admit_sec": round(admit_sec, 3),
-                "admit_delta_sec": round(admit_delta_sec, 3),
                 "compact_sec": round(compact_sec, 3),
                 "folded": folded,
                 "rebuild_sec": (round(rebuild_sec, 3)

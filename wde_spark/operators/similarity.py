@@ -398,12 +398,13 @@ def _probe_cells_udf(spark, centroids: list[list[float]], nprobe: int,
                       (C, (C * C).sum(axis=1)), bc)
 
 
-def train_ivf_centroids(items: DataFrame, n_cells: int = 16,
-                        iters: int = 2) -> list[list[float]]:
-    """Deterministic Lloyd's k-means over L2-normalized vectors, expressed
-    as DataFrame plans (assignment = Arrow-vectorized argmin against the
-    broadcast centroid matrix, row-local; update = posexplode + (cell,dim)
-    hash agg — one shuffle of n_cells×dim groups per iteration). Seeding is
+def train_ivf_centroids(items: DataFrame,
+                        n_cells: int = 16) -> list[list[float]]:
+    """Deterministic Lloyd's k-means (2 rounds, as the oracles unroll it)
+    over L2-normalized vectors, expressed as DataFrame plans (assignment =
+    Arrow-vectorized argmin against the broadcast centroid matrix,
+    row-local; update = posexplode + (cell,dim) hash agg — one shuffle of
+    n_cells×dim groups per iteration). Seeding is
     md5-ordered vector ids: no RNG state, identical on every run.
 
     Centroids (n_cells × dim doubles) are driver-side between iterations —
@@ -445,7 +446,7 @@ def train_ivf_centroids(items: DataFrame, n_cells: int = 16,
         if n_cells == 0:
             return []
         centroids = centroids[:n_cells]
-        for _ in range(iters):
+        for _ in range(2):
             probe = _probe_cells_udf(spark, centroids, nprobe=1)
             assigned = v.withColumn("cell", probe(F.col("v"))[0])
             means = (
@@ -696,10 +697,10 @@ def _pq_assign_udf(spark, codebooks: list[list[list[float]]]):
                       (C, (C * C).sum(axis=2)), None)
 
 
-def train_pq_codebooks(items: DataFrame, m: int = 8, k_codes: int = 16,
-                       iters: int = 2) -> list[list[list[float]]]:
-    """Deterministic per-sub-space Lloyd's k-means over L2-normalized
-    vectors → codebook tensor (m × k_codes × dim/m). Seeding is md5-ordered
+def train_pq_codebooks(items: DataFrame, m: int = 8,
+                       k_codes: int = 16) -> list[list[list[float]]]:
+    """Deterministic per-sub-space Lloyd's k-means (2 rounds) over
+    L2-normalized vectors → codebook tensor (m × k_codes × dim/m). Seeding is md5-ordered
     vector ids (the SAME first k_codes vectors seed every sub-space — no
     RNG); each iteration is one row-local Arrow assignment pass + one
     (sub-space, code, dim) hash agg. The codebook (m·k_codes·dim doubles)
@@ -708,11 +709,11 @@ def train_pq_codebooks(items: DataFrame, m: int = 8, k_codes: int = 16,
         F.col("vec_id").alias("vid"),
         _normalize(_as_double(F.col("embedding"))).alias("v"),
     )
-    return _train_pq_vdf(items.sparkSession, v, m, k_codes, iters)
+    return _train_pq_vdf(items.sparkSession, v, m, k_codes)
 
 
-def _train_pq_vdf(spark, v: DataFrame, m: int, k_codes: int,
-                  iters: int) -> list[list[list[float]]]:
+def _train_pq_vdf(spark, v: DataFrame, m: int,
+                  k_codes: int) -> list[list[list[float]]]:
     """Codebook trainer over a prepared (vid, v) frame — shared by
     `train_pq_codebooks` (v = normalized vectors) and the residual-IVFPQ
     trainer (v = vector − assigned coarse centroid). Deterministic:
@@ -723,13 +724,13 @@ def _train_pq_vdf(spark, v: DataFrame, m: int, k_codes: int,
     and released before returning."""
     v = v.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        return _train_pq_vdf_inner(v, m, k_codes, iters, spark)
+        return _train_pq_vdf_inner(v, m, k_codes, spark)
     finally:
         v.unpersist()
 
 
 def _train_pq_vdf_inner(v: DataFrame, m: int, k_codes: int,
-                        iters: int, spark) -> list[list[list[float]]]:
+                        spark) -> list[list[list[float]]]:
     dim_row = (
         v.filter(F.col("v").isNotNull())
         .groupBy(F.size("v").alias("d")).count()
@@ -754,7 +755,7 @@ def _train_pq_vdf_inner(v: DataFrame, m: int, k_codes: int,
     k_codes = min(k_codes, len(seed_rows))
     books = [[list(r.v[s * ds:(s + 1) * ds]) for r in seed_rows[:k_codes]]
              for s in range(m)]
-    for _ in range(iters):
+    for _ in range(2):  # the Lloyd rounds the PQ oracles unroll
         assign = _pq_assign_udf(spark, books)
         assigned = clean.withColumn("codes", assign(F.col("v")))
         means = (
@@ -1103,7 +1104,7 @@ def ivfpq_residual_ann(items: DataFrame, queries: DataFrame, nprobe: int = 4,
         spark,
         it_res.select(F.col("item_id").alias("vid"),
                       F.col("rvres").alias("v")),
-        m, 16, 2)
+        m, 16)
     if not books:
         return _empty_topk(spark, queries, items)
     encode = _pq_assign_udf(spark, books)

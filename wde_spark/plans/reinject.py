@@ -25,6 +25,7 @@ import xml.etree.ElementTree as ET
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.cache import _hadoop_safe_paths
 from ..sources.tei import TEI_NS
 
 _PI_LOCAL = (
@@ -148,7 +149,7 @@ def reinject(spark: SparkSession, nametable_out: DataFrame,
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.xml")
-        .load(catalogues_glob)
+        .load(_hadoop_safe_paths(catalogues_glob))
         .select("path", "content")
     )
 

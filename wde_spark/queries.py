@@ -1429,30 +1429,34 @@ def pq_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _streaming_pq_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per parquet snapshot) a streaming-maintained PQ index
-    over the embeddings table and return its directory: init vectors
-    (vec_id % 3 = 0) bootstrap the frozen codebook + v0 codes, the rest
-    arrive as two file-source micro-batches appended as copy-on-write
-    versions (`streaming/embedding_admission.py`). Deterministic — a
-    frozen codebook makes encoding order/batching-invariant — so the
-    built index can be cached per snapshot
-    (`queries_ext._snapshot_dir`)."""
-    from .queries_ext import _feed_stream, _snapshot_dir
+def _build_pq_index(spark: SparkSession, sf_dir: str, stage: str) -> None:
+    """Stream a maintained PQ index over the embeddings table into
+    `stage/index`: init vectors (vec_id % 3 = 0) bootstrap the frozen
+    codebook + base codes, the rest arrive as two file-source
+    micro-batches appended as ledger deltas
+    (`streaming/embedding_admission.py`). Deterministic — a frozen
+    codebook makes encoding order/batching-invariant."""
+    from .queries_ext import _feed_stream
     from .streaming.embedding_admission import streaming_pq_index_maintain
 
-    def build(stage: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding")
-        stream = _feed_stream(spark, stage, [
-            emb.filter(F.col("vec_id") % 3 == i) for i in (1, 2)])
-        streaming_pq_index_maintain(
-            stream, emb.filter(F.col("vec_id") % 3 == 0),
-            os.path.join(stage, "index"),
-            os.path.join(stage, "ckpt"), m=16, k_codes=16, iters=2)
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding")
+    stream = _feed_stream(spark, stage, [
+        emb.filter(F.col("vec_id") % 3 == i) for i in (1, 2)])
+    streaming_pq_index_maintain(
+        stream, emb.filter(F.col("vec_id") % 3 == 0),
+        os.path.join(stage, "index"),
+        os.path.join(stage, "ckpt"), m=16, k_codes=16)
 
-    return os.path.join(
-        _snapshot_dir(sf_dir, "embeddings", "wde_pq_stream", build), "index")
+
+def _streaming_pq_index_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The maintained PQ index (`_build_pq_index`), built once per parquet
+    snapshot (`queries_ext._snapshot_dir`) and left uncompacted."""
+    from .queries_ext import _snapshot_dir
+
+    return os.path.join(_snapshot_dir(
+        sf_dir, "embeddings", "wde_pq_stream2",
+        lambda stage: _build_pq_index(spark, sf_dir, stage)), "index")
 
 
 @query(
@@ -1507,10 +1511,10 @@ def _streaming_pq_index_dir(spark: SparkSession, sf_dir: str) -> str:
 def streaming_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end query path of the STREAMING-MAINTAINED PQ index
     (`streaming/embedding_admission.py`): the init split (vec_id%3=0)
-    bootstraps a frozen codebook + v0 codes, the remaining vectors stream
-    in as micro-batches appended as copy-on-write versions, and the query
-    ADC-scans the latest maintained codes version — it ranks purely on
-    code lookups and NEVER touches float vectors (at 100 TB the float
+    bootstraps a frozen codebook + base codes, the remaining vectors
+    stream in as micro-batches appended as ledger deltas, and the query
+    ADC-scans the merged, uncompacted codes ledger (base + two deltas) —
+    it ranks purely on code lookups and NEVER touches float vectors (at 100 TB the float
     column is cold storage; a 10-billion-vector index is ~160 GB of
     16-byte codes). Because encoding under a frozen codebook is
     deterministic and batching-invariant, the maintained index equals a
@@ -1518,7 +1522,8 @@ def streaming_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled in SQL over the INIT split only, every vector encoded with
     the frozen books, ADC scoring, top-5. Distinct from `pq_ann_embeddings`
     in both surface (ADC-only scores, no exact re-rank) and index
-    lifecycle (streamed COW versions vs one-shot)."""
+    lifecycle (streamed ledger deltas vs one-shot);
+    `pq_codes_compaction_ann` reads the same index after compaction."""
     from .streaming.embedding_admission import ann_query
 
     index_dir = _streaming_pq_index_dir(spark, sf_dir)

@@ -2830,12 +2830,12 @@ def _streaming_dedup_delta_dir(spark: SparkSession, sf_dir: str) -> str:
     admission and COMPACT it: the %5!=0 slice bootstraps a dedup'd init
     corpus (ledger bases for corpus/fp/bands), the %5==0 slice arrives
     as two micro-batches (%10==0 then %10==5, mtime-pinned) through
-    `streaming_dedup_admission_delta` — each batch an O(batch) delta
-    append (admitted upserts + revoked tombstones) instead of the COW
-    snapshot rewrite — then all three ledgers compact to single bases."""
+    `streaming_dedup_admission` — each batch an O(batch) delta append
+    (admitted upserts + revoked tombstones) — then all three ledgers
+    compact to single bases."""
     from .operators import dedup as D
     from .streaming.compaction import compact
-    from .streaming.dedup_admission import streaming_dedup_admission_delta
+    from .streaming.dedup_admission import streaming_dedup_admission
 
     def build(stage: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2844,7 +2844,7 @@ def _streaming_dedup_delta_dir(spark: SparkSession, sf_dir: str) -> str:
         stream = _feed_stream(spark, stage, [
             docs.filter(F.col("doc_id") % 10 == r) for r in (0, 5)])
         corpus = os.path.join(stage, "corpus")
-        streaming_dedup_admission_delta(
+        streaming_dedup_admission(
             stream, corpus0, corpus, os.path.join(stage, "ckpt"),
             max_bucket=None)
         for sub, keys in (("corpus", ["doc_id"]), ("fp", ["doc_id"]),
@@ -2860,22 +2860,22 @@ def _streaming_dedup_delta_dir(spark: SparkSession, sf_dir: str) -> str:
 def dedup_admission_compaction_documents(spark: SparkSession,
                                          sf_dir: str) -> DataFrame:
     """DELTA-LEDGER streamed dedup admission, read AFTER COMPACTION
-    (`streaming/dedup_admission.streaming_dedup_admission_delta` +
+    (`streaming/dedup_admission.streaming_dedup_admission` +
     `streaming/compaction.py`): the admission family's corpus AND its
     fingerprint/band state maintained as merge-on-read ledgers — each
     micro-batch appends admitted upserts + revoked tombstones (O(batch)
-    write; tombstoned band keys are enumerable as revoked x band_idx),
-    where the COW form rewrites corpus-sized snapshots per batch
-    (measured: the snapshot write dominates `_admit_batch` at test
-    scale, measurements/stress_dedup_admission_r11.json). The oracle is
+    write; tombstoned band keys are enumerable as revoked x band_idx)
+    instead of rewriting corpus-sized snapshots per batch. The gated
+    admissions (`lm_`/`dsir_`/`nb_gated_admission_documents`) read the
+    same ledgers uncompacted. The oracle is
     the increment family's unconditional full-rerun equivalence —
     dedup(dedup(init) ∪ batches) replayed in SQL — so a hash match
     proves compacted merged read ≡ sequential streamed admission ≡ flat
     batch dedup, all three."""
-    from .streaming.dedup_admission import read_corpus_merged
+    from .streaming.dedup_admission import read_corpus
 
     corpus_dir = _streaming_dedup_delta_dir(spark, sf_dir)
-    return read_corpus_merged(spark, corpus_dir).select("doc_id")
+    return read_corpus(spark, corpus_dir).select("doc_id")
 
 
 def _recall_audit_oracle() -> str:
@@ -3021,10 +3021,9 @@ def _term_dist_sql(pred: str) -> str:
 def corpus_drift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus drift (`operators/drift.corpus_divergence`): Jensen-Shannon
     + L1 divergence between the term distributions of two deterministic
-    corpus slices (doc_id parity stands in for two ledger versions — the
-    ledger-reading form `version_drift`/`drift_history` is the same
-    composition over `streaming/versions.py` COW snapshots, pinned
-    streaming ≡ batch in tests). Two counting scans, one vocabulary-sized
+    corpus slices (doc_id parity stands in for two ledger snapshots — the
+    dedup admission's drift maintainer runs the same composition over
+    the merged corpus `as_of=b` and `as_of=b+1`, pinned in tests). Two counting scans, one vocabulary-sized
     full-outer join, one scalar aggregate; the oracle recomputes JSD
     term-by-term in SQL so the divergence VALUE is hash-checked."""
     from .operators import drift as DR
@@ -4167,7 +4166,7 @@ def _streaming_lm_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     slice bootstraps the dedup'd init corpus + frozen bigram LM, the
     %5==0 slice arrives as two file-source micro-batches through
     `streaming/lm_admission.streaming_lm_dedup_admission` (below-cutoff
-    docs quarantined, survivors dedup-admitted as COW versions)."""
+    docs quarantined, survivors dedup-admitted as ledger deltas)."""
     from .operators import dedup as D
     from .streaming.lm_admission import streaming_lm_dedup_admission
 
@@ -4183,7 +4182,7 @@ def _streaming_lm_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
             cutoff=_LM_GATE_CUTOFF, max_bucket=None)
 
     return os.path.join(
-        _snapshot_dir(sf_dir, "documents", "wde_lm_adm", build), "corpus")
+        _snapshot_dir(sf_dir, "documents", "wde_lm_adm2", build), "corpus")
 
 
 def _lm_gated_admission_oracle() -> str:
@@ -4214,15 +4213,15 @@ def lm_gated_admission_documents(spark: SparkSession,
     composition: the %5!=0 slice bootstraps a dedup'd init corpus and a
     FROZEN bigram LM; the %5==0 slice streams in as two micro-batches;
     each batch is scored by the frozen LM, below-cutoff docs are
-    quarantined, survivors flow through `dedup_increment` as COW
-    versions. Because the frozen-LM gate is per-document (batching-
+    quarantined, survivors flow through `dedup_increment` as ledger
+    deltas. Because the frozen-LM gate is per-document (batching-
     invariant) and increment ≡ full-rerun (max_bucket=None, the
-    `dedup_increment_documents` discipline), the final streamed version
+    `dedup_increment_documents` discipline), the final streamed corpus
     equals dedup(dedup(init) ∪ {{batch docs scoring >= cutoff}}) — which
     is exactly what the oracle computes in SQL (text-dedup CTE block +
     the shared LM-scoring CTE block, nested twice). The query returns
-    the LATEST ADMITTED CORPUS VERSION's ids — the driver hash-checks
-    the maintained ledger itself."""
+    the ids of the merged, uncompacted corpus ledger — the oracle
+    hash-checks the maintained ledger itself."""
     from .streaming.dedup_admission import read_corpus
 
     corpus_dir = _streaming_lm_corpus_dir(spark, sf_dir)
@@ -4240,7 +4239,7 @@ def _streaming_dsir_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     slice arrives as two file-source micro-batches through
     `streaming/dsir_admission.streaming_dsir_dedup_admission`
     (below-cutoff importance ratios quarantined, survivors
-    dedup-admitted as COW versions)."""
+    dedup-admitted as ledger deltas)."""
     from .operators import dedup as D
     from .streaming.dsir_admission import streaming_dsir_dedup_admission
 
@@ -4261,7 +4260,7 @@ def _streaming_dsir_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
             cutoff=_DSIR_GATE_CUTOFF, max_bucket=None)
 
     return os.path.join(
-        _snapshot_dir(sf_dir, "documents", "wde_dsir_adm", build), "corpus")
+        _snapshot_dir(sf_dir, "documents", "wde_dsir_adm2", build), "corpus")
 
 
 def _dsir_gated_admission_oracle() -> str:
@@ -4314,13 +4313,14 @@ def dsir_gated_admission_documents(spark: SparkSession,
     freezes on the dedup'd init corpus); the %5==0 slice streams in as
     two micro-batches, each scored by the per-doc log importance ratio
     (`dsir_logratio`), below-cutoff docs quarantined, survivors through
-    `dedup_increment` as COW versions. The frozen-LM ratio gate is
+    `dedup_increment` as ledger deltas. The frozen-LM ratio gate is
     per-document (batching-invariant) and increment ≡ full-rerun
-    (max_bucket=None), so the final streamed version equals
+    (max_bucket=None), so the final streamed corpus equals
     dedup(dedup(init) ∪ {{batch docs with ratio >= cutoff}}) — which the
     oracle computes flat (text-dedup CTE block + two `_lm_tables_cte`
-    models + one scored join, nested). Returns the latest admitted
-    corpus version's ids — the driver hash-checks the ledger itself."""
+    models + one scored join, nested). Returns the ids of the merged,
+    uncompacted corpus ledger — the oracle hash-checks the ledger
+    itself."""
     from .streaming.dedup_admission import read_corpus
 
     corpus_dir = _streaming_dsir_corpus_dir(spark, sf_dir)
@@ -4531,7 +4531,7 @@ def _streaming_nb_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     two file-source micro-batches through
     `streaming/nb_admission.streaming_nb_dedup_admission` (docs
     predicted outside keep_labels quarantined, every prediction in the
-    per-batch ledger, survivors dedup-admitted as COW versions)."""
+    per-batch ledger, survivors dedup-admitted as ledger deltas)."""
     from .operators import dedup as D
     from .streaming.nb_admission import streaming_nb_dedup_admission
 
@@ -4550,7 +4550,7 @@ def _streaming_nb_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
             keep_labels=_NB_KEEP_LABELS, max_bucket=None)
 
     return os.path.join(
-        _snapshot_dir(sf_dir, "documents", "wde_nb_adm", build), "corpus")
+        _snapshot_dir(sf_dir, "documents", "wde_nb_adm2", build), "corpus")
 
 
 def _nb_gated_admission_oracle() -> str:
@@ -4587,13 +4587,13 @@ def nb_gated_admission_documents(spark: SparkSession,
     frozen NB model; the %5==0 slice streams in as two micro-batches,
     every document is argmax-classified into the per-batch prediction
     ledger, docs predicted outside {{'en'}} are quarantined, survivors
-    flow through `dedup_increment` as COW versions. The frozen-model
+    flow through `dedup_increment` as ledger deltas. The frozen-model
     gate is per-document (batching-invariant) and increment ≡ full-rerun
-    (max_bucket=None), so the final streamed version equals
+    (max_bucket=None), so the final streamed corpus equals
     dedup(dedup(init) ∪ {{batch docs predicted 'en'}}) — which the
     oracle computes flat (text-dedup CTE block + the NB prediction CTE
-    block, nested). Returns the latest admitted corpus version's ids —
-    the driver hash-checks the maintained ledger itself."""
+    block, nested). Returns the ids of the merged, uncompacted corpus
+    ledger — the oracle hash-checks the maintained ledger itself."""
     from .streaming.dedup_admission import read_corpus
 
     corpus_dir = _streaming_nb_corpus_dir(spark, sf_dir)
@@ -4615,7 +4615,7 @@ def _kmeans_assigned(spark, emb):
     from .operators.similarity import (_as_double, _normalize,
                                        _probe_cells_udf)
 
-    cents = SIM2.train_ivf_centroids(emb, n_cells=16, iters=2)
+    cents = SIM2.train_ivf_centroids(emb, n_cells=16)
     if not cents:
         return spark.createDataFrame([], "vec_id long, cluster int"), []
     assign1 = _probe_cells_udf(spark, cents, nprobe=1)
@@ -7676,26 +7676,31 @@ def video_rle_frames_documents(spark: SparkSession,
 # streaming maintained k-means codebook — streaming/codebook_maintenance.py
 # ---------------------------------------------------------------------------
 
-def _streaming_codebook_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per parquet snapshot) the maintained mini-batch k-means
-    codebook: the vec_id%5!=0 slice bootstraps (Lloyd x2 + state v0), the
-    %5==0 slice arrives as two file-source micro-batches (%10==0 then
-    %10==5, mtime-pinned arrival order)."""
-    from .streaming.codebook_maintenance import (bootstrap_codebook_v0,
+def _build_codebook(spark: SparkSession, sf_dir: str, stage: str) -> None:
+    """Stream the maintained mini-batch k-means codebook into
+    `stage/cbk`: the vec_id%5!=0 slice bootstraps (Lloyd x2 + state
+    base), the %5==0 slice arrives as two file-source micro-batches
+    (%10==0 then %10==5, mtime-pinned arrival order), each appended as a
+    ledger delta."""
+    from .streaming.codebook_maintenance import (bootstrap_codebook,
                                                  streaming_codebook_maintain)
 
-    def build(stage: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings") \
-            .select("vec_id", "embedding")
-        bootstrap_codebook_v0(emb.filter(F.col("vec_id") % 5 != 0),
-                              os.path.join(stage, "cbk"))
-        stream = _feed_stream(spark, stage, [
-            emb.filter(F.col("vec_id") % 10 == r) for r in (0, 5)])
-        streaming_codebook_maintain(
-            stream, os.path.join(stage, "cbk"), os.path.join(stage, "ckpt"))
+    emb = load_table(spark, sf_dir, "embeddings") \
+        .select("vec_id", "embedding")
+    bootstrap_codebook(emb.filter(F.col("vec_id") % 5 != 0),
+                       os.path.join(stage, "cbk"))
+    stream = _feed_stream(spark, stage, [
+        emb.filter(F.col("vec_id") % 10 == r) for r in (0, 5)])
+    streaming_codebook_maintain(
+        stream, os.path.join(stage, "cbk"), os.path.join(stage, "ckpt"))
 
-    return os.path.join(
-        _snapshot_dir(sf_dir, "embeddings", "wde_cbk_adm", build), "cbk")
+
+def _streaming_codebook_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The maintained codebook (`_build_codebook`), built once per parquet
+    snapshot and left uncompacted."""
+    return os.path.join(_snapshot_dir(
+        sf_dir, "embeddings", "wde_cbk_adm2",
+        lambda stage: _build_codebook(spark, sf_dir, stage)), "cbk")
 
 
 def _streaming_codebook_oracle() -> str:
@@ -7781,9 +7786,9 @@ def _streaming_codebook_oracle() -> str:
 def streaming_kmeans_codebook_embeddings(spark: SparkSession,
                                          sf_dir: str) -> DataFrame:
     """STREAMING-MAINTAINED k-means codebook
-    (`streaming/codebook_maintenance.py` — mini-batch k-means over COW
-    versions, the admission-family treatment for the clustering/ANN
-    model itself): the vec_id%5!=0 slice bootstraps the codebook (the
+    (`streaming/codebook_maintenance.py` — mini-batch k-means on a
+    delta ledger, read merged and uncompacted, the admission-family
+    treatment for the clustering/ANN model itself): the vec_id%5!=0 slice bootstraps the codebook (the
     IVF family's md5-seeded 2-round Lloyd) and freezes its members into
     per-(cell, dim) (count, sum) state; two embedding micro-batches then
     assign under the centroids CURRENT AT ARRIVAL and fold pure (n, s)
@@ -7801,25 +7806,13 @@ def streaming_kmeans_codebook_embeddings(spark: SparkSession,
 
 
 def _streaming_codebook_delta_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per parquet snapshot) the DELTA-LEDGER maintained
-    codebook and COMPACT it: same slices and arrival order as
-    `_streaming_codebook_dir` (bootstrap %5!=0; micro-batches %10==0
-    then %10==5), but each batch appends only its touched (cell, d)
-    rows as ledger deltas; after the stream drains, `compaction.compact`
+    """The maintained codebook (`_build_codebook`), built once per parquet
+    snapshot and COMPACTED: after the stream drains, `compaction.compact`
     folds b0+d1+d2 into one base."""
-    from .streaming.codebook_maintenance import (
-        bootstrap_codebook_delta, streaming_codebook_maintain_delta)
     from .streaming.compaction import compact
 
     def build(stage: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings") \
-            .select("vec_id", "embedding")
-        bootstrap_codebook_delta(emb.filter(F.col("vec_id") % 5 != 0),
-                                 os.path.join(stage, "cbk"))
-        stream = _feed_stream(spark, stage, [
-            emb.filter(F.col("vec_id") % 10 == r) for r in (0, 5)])
-        streaming_codebook_maintain_delta(
-            stream, os.path.join(stage, "cbk"), os.path.join(stage, "ckpt"))
+        _build_codebook(spark, sf_dir, stage)
         compact(spark, os.path.join(stage, "cbk", "state"), ["cell", "d"])
 
     return os.path.join(
@@ -7827,25 +7820,14 @@ def _streaming_codebook_delta_dir(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _streaming_pq_delta_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per parquet snapshot) the DELTA-LEDGER maintained PQ
-    index and COMPACT it: same slices and arrival order as
-    `queries._streaming_pq_index_dir` (init vec_id%3==0 trains the
-    frozen codebook + base codes; %3==1 then %3==2 stream in), but each
-    batch is a PURE code append — no ledger read — and the ledger folds
-    to one base after the stream."""
+    """The maintained PQ index (`queries._build_pq_index`), built once per
+    parquet snapshot and COMPACTED: the ledger folds to one base after
+    the stream."""
+    from .queries import _build_pq_index
     from .streaming.compaction import compact
-    from .streaming.embedding_admission import (
-        streaming_pq_index_maintain_delta)
 
     def build(stage: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings") \
-            .select("vec_id", "embedding")
-        stream = _feed_stream(spark, stage, [
-            emb.filter(F.col("vec_id") % 3 == i) for i in (1, 2)])
-        streaming_pq_index_maintain_delta(
-            stream, emb.filter(F.col("vec_id") % 3 == 0),
-            os.path.join(stage, "index"),
-            os.path.join(stage, "ckpt"), m=16, k_codes=16)
+        _build_pq_index(spark, sf_dir, stage)
         compact(spark, os.path.join(stage, "index", "codes"), ["vec_id"])
 
     return os.path.join(
@@ -7860,43 +7842,42 @@ from .queries import ORACLE as _CORE_ORACLE  # noqa: E402  (fully built:
 def pq_codes_compaction_ann(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """DELTA-LEDGER maintained PQ index, ADC-queried AFTER COMPACTION
-    (`embedding_admission.streaming_pq_index_maintain_delta` +
-    `streaming/compaction.py`): the third and last corpus-sized COW
-    family on the table-format write path, and the idiom's best case —
-    codes are append-only under a frozen codebook, so a micro-batch
-    writes O(batch) encoded rows with NO ledger read at all (the COW
-    form rewrites the whole codes table per batch; at 10B vectors that
-    is ~640 GB per micro-batch vs ~64 B x batch here). The query scans
-    the folded base (one FileScan). The oracle is IDENTICAL to
-    `streaming_pq_adc_ann`'s full SQL replay (frozen-codebook encoding
-    is batching-invariant), so a hash match proves compacted merged
-    read ≡ streamed COW index ≡ one-shot batch encode."""
-    from .streaming.embedding_admission import ann_query_merged
+    (`embedding_admission.streaming_pq_index_maintain` +
+    `streaming/compaction.py`): the idiom's best case — codes are
+    append-only under a frozen codebook, so a micro-batch writes
+    O(batch) encoded rows with NO ledger read at all (~64 B x batch,
+    where a full snapshot per batch would rewrite ~640 GB at 10B
+    vectors). The query scans the folded base (one FileScan). The
+    oracle is IDENTICAL to `streaming_pq_adc_ann`'s full SQL replay
+    (frozen-codebook encoding is batching-invariant), so a hash match
+    proves compacted read ≡ uncompacted merged read ≡ one-shot batch
+    encode."""
+    from .streaming.embedding_admission import ann_query
 
     index_dir = _streaming_pq_delta_dir(spark, sf_dir)
     queries_df = load_table(spark, sf_dir, "embeddings") \
         .filter(F.col("vec_id") < 8)
-    return ann_query_merged(spark, index_dir, queries_df, k=5)
+    return ann_query(spark, index_dir, queries_df, k=5)
 
 
 @query("codebook_compaction_embeddings", _streaming_codebook_oracle())
 def codebook_compaction_embeddings(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     """DELTA-LEDGER maintained codebook, read AFTER COMPACTION
-    (`streaming/compaction.py` + `codebook_maintenance.py`'s delta
-    twin): per-batch writes are O(batch) delta appends instead of
-    full-state snapshots — the table-format (Delta/Iceberg MOR) write
-    path every corpus-sized maintained family needs at 100 TB — reads
-    are last-writer-wins merge-on-read, and `compact` folds base +
-    deltas back into one base (post-compaction read amplification: 1
-    entry). The oracle is the SAME full-history replay that checks the
-    COW-snapshot maintainer (`streaming_kmeans_codebook_embeddings`),
-    so a hash match here proves compacted read ≡ replayed history ≡
-    uncompacted read — every centroid coordinate and member count."""
-    from .streaming.codebook_maintenance import read_codebook_merged
+    (`streaming/compaction.py` + `codebook_maintenance.py`): per-batch
+    writes are O(batch) delta appends instead of full-state snapshots —
+    the table-format (Delta/Iceberg MOR) write path every corpus-sized
+    maintained family needs at 100 TB — reads are last-writer-wins
+    merge-on-read, and `compact` folds base + deltas back into one base
+    (post-compaction read amplification: 1 entry). The oracle is the
+    SAME full-history replay that checks the uncompacted ledger
+    (`streaming_kmeans_codebook_embeddings`), so a hash match here
+    proves compacted read ≡ replayed history ≡ uncompacted read — every
+    centroid coordinate and member count."""
+    from .streaming.codebook_maintenance import read_codebook
 
     cbk_dir = _streaming_codebook_delta_dir(spark, sf_dir)
-    return read_codebook_merged(spark, cbk_dir).select(
+    return read_codebook(spark, cbk_dir).select(
         "cell", "d", "n", F.round("m", 6).alias("m"))
 
 

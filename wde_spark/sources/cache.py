@@ -33,7 +33,12 @@ CACHE_SCHEMA = T.StructType([
 
 
 def _hadoop_safe_paths(path_glob: str) -> list[str]:
-    """Hadoop `Path` rejects ':' in file names (URI scheme separator). Files
+    """The files `path_glob` matches, sorted, as the explicit path list every
+    input reader hands Spark: given a glob, Spark probes it for a streaming
+    sink's `_spark_metadata` directory and logs a `FileNotFoundException`
+    stack trace. A glob that matches nothing raises `FileNotFoundError`.
+
+    Hadoop `Path` rejects ':' in file names (URI scheme separator). Files
     whose basename carries unsafe characters are exposed through same-content
     symlinks with percent-encoded names in a shadow directory, one per source
     directory, so equal basenames in two directories never share a link. A
@@ -44,8 +49,8 @@ def _hadoop_safe_paths(path_glob: str) -> list[str]:
     import tempfile
 
     paths = sorted(pyglob.glob(path_glob))
-    if not any(":" in os.path.basename(p) for p in paths):
-        return [path_glob]
+    if not paths:
+        raise FileNotFoundError(f"no input files match {path_glob}")
     out = []
     for p in paths:
         base = os.path.basename(p)

@@ -27,6 +27,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
+from .cache import _hadoop_safe_paths
+
 TEI_NS = "http://www.tei-c.org/ns/1.0"
 XML_ID = "{http://www.w3.org/XML/1998/namespace}id"
 
@@ -83,14 +85,15 @@ def parse_items(content: bytes, file_path: str) -> Iterator[Row]:
 def read_tei_items(spark: SparkSession, path_glob: str) -> DataFrame:
     """S1/S2 — distributed TEI catalogue scan → item DataFrame.
 
-    `binaryFile` gives (path, content) rows with Spark-managed file listing,
-    partitioning, and locality; parsing runs in executors. At cluster scale
-    the XML decode parallelizes per file with zero shuffle.
+    `binaryFile` over the matched files (listed by `_hadoop_safe_paths`)
+    gives (path, content) rows with Spark-managed partitioning and
+    locality; parsing runs in executors. At cluster scale the XML decode
+    parallelizes per file with zero shuffle.
     """
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.xml")
-        .load(path_glob)
+        .load(_hadoop_safe_paths(path_glob))
         .select("path", "content")
     )
 

@@ -1,15 +1,17 @@
 """Delta-ledger maintained tables: merge-on-read + compaction — the
-table-format idiom (Delta/Iceberg MOR) the full-snapshot COW sinks
-deliberately skip.
+table-format idiom (Delta/Iceberg MOR), and the one commit path of the
+CORPUS-sized maintainers: the dedup admission (`dedup_admission.py`)
+with the LM/DSIR/NB gates in front of it, the PQ index
+(`embedding_admission.py`) and the k-means codebook
+(`codebook_maintenance.py`).
 
-The existing maintainers (`cdc.py`, `codebook_maintenance.py`,
-`embedding_admission.py`, ...) write a SELF-CONTAINED `v{n}` snapshot per
-micro-batch: reads touch one version, compaction is a directory delete.
-That is the right trade for MODEL-sized state (a 16x64 codebook, a Bloom
-bitmap). For CORPUS-sized maintained tables — PQ codes over billions of
-vectors, per-doc admission ledgers — a full snapshot per batch rewrites
-the world every batch: O(corpus) write amplification for an O(batch)
-change. The delta ledger flips it:
+The copy-on-write sinks of `versions.py` write a SELF-CONTAINED `v{n}`
+snapshot per micro-batch: reads touch one version, compaction is a
+directory delete. That is the right trade for MODEL-sized state (a Bloom
+bitmap, a sketch). For corpus-sized maintained tables — PQ codes over
+billions of vectors, per-doc admission ledgers — a full snapshot per
+batch rewrites the world every batch: O(corpus) write amplification for
+an O(batch) change. The delta ledger flips it:
 
   * each batch appends `d{n}` — ONLY the rows it changed (upserts, plus
     tombstones for deletes): O(batch) write;
@@ -30,10 +32,17 @@ becomes visible only when a commit file naming it lands in the
 manifest, and each commit file is published by an atomic single-file
 rename: readers plan from the manifest, so a writer killed mid-write
 (half a parquet directory on disk, no commit) leaves the ledger exactly
-as consistent as before the write began. Writers never mutate an
-existing entry and re-committing an already-committed entry is a no-op
-(replaying a crashed batch rewrites the same `d{n}` with the same
-bytes — deterministic content in, idempotent ledger out).
+as consistent as before the write began, and a ledger has no entries
+until its first commit. Writers never mutate an existing entry: writing
+an entry that is already committed runs nothing, so a replayed batch
+never rewrites what a reader may have planned over.
+
+REPLAY CONTRACT (the maintainers'): batch `b` reads each of its ledgers
+`as_of=b` and writes sequence `b+1` with deterministic content. A batch
+that every one of its ledgers already holds (`landed`) has landed and
+its replay runs nothing — no gate ledger, no side row, no write; a batch
+killed between its ledgers' commits recomputes from the same `as_of=b`
+reads and writes only the entries that are missing.
 
 Tombstones: a delta row with `_op = 'D'` deletes its key; `_op = 'U'`
 upserts. `read_merged` drops tombstoned keys after the LWW pick;
@@ -81,7 +90,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-_ENTRY_RE = re.compile(r"^([bd])(\d+)$")
 _MANIFEST_DIR = "_manifest"
 _COMMIT_RE = re.compile(r"^c(\d{10})\.json$")
 _ZORDER_BITS = 16
@@ -96,11 +104,11 @@ def _manifest_path(target_dir: str) -> str:
 
 
 def _list_commits(target_dir: str) -> list:
-    """Sorted (commit_seq, payload) pairs from the manifest, or None when
-    the ledger predates the manifest (legacy listdir discovery)."""
+    """Sorted (commit_seq, payload) pairs from the manifest; none before
+    the ledger's first commit."""
     mdir = _manifest_path(target_dir)
     if not os.path.isdir(mdir):
-        return None
+        return []
     out = []
     for name in os.listdir(mdir):
         m = _COMMIT_RE.match(name)
@@ -127,47 +135,28 @@ def _append_commit(target_dir: str, payload: dict) -> int:
     return nxt
 
 
-def _scan_dirs(target_dir: str) -> list:
-    """Physical (seq, kind) entry directories on disk, sorted."""
-    if not os.path.isdir(target_dir):
-        return []
-    out = []
-    for name in os.listdir(target_dir):
-        m = _ENTRY_RE.match(name)
-        if m:
-            out.append((int(m.group(2)), m.group(1)))
-    return sorted(out)
-
-
-def _adopt_legacy(target_dir: str) -> None:
-    """Retro-fit a manifest onto a pre-manifest ledger (one commit
-    naming every entry already on disk) so subsequent writes commit
-    atomically. No-op when a manifest already exists."""
-    if _list_commits(target_dir) is not None:
-        return
-    found = _scan_dirs(target_dir)
-    if found:
-        _append_commit(target_dir,
-                       {"add": [[k, s] for s, k in found],
-                        "note": "adopted legacy listdir ledger"})
-
-
 def ledger_entries(target_dir: str) -> list:
     """Sorted (seq, kind) entries COMMITTED and not yet vacuumed (kind
     'b' base / 'd' delta) — the manifest's view; a half-written,
-    uncommitted entry directory is invisible. Superseded entries stay
-    listed until `vacuum` removes them (they serve `as_of` history).
-    Ledgers that predate the manifest fall back to directory listing."""
-    commits = _list_commits(target_dir)
-    if commits is None:
-        return _scan_dirs(target_dir)
+    uncommitted entry directory is invisible, and a ledger has no
+    entries until its first commit. Superseded entries stay listed
+    until `vacuum` removes them (they serve `as_of` history)."""
     live: set = set()
-    for _seq, payload in commits:
+    for _seq, payload in _list_commits(target_dir):
         for kind, seq in payload.get("add", ()):
             live.add((int(seq), kind))
         for kind, seq in payload.get("remove", ()):
             live.discard((int(seq), kind))
     return sorted(live)
+
+
+def landed(target_dir: str, seq: int) -> bool:
+    """Whether the ledger holds sequence `seq`: a committed entry at
+    `seq` or later (a fold may have absorbed the entry itself). A
+    maintainer batch `b` writes sequence b+1 to each of its ledgers,
+    and once every one of them holds it the batch has landed — a replay
+    runs nothing."""
+    return any(s >= seq for s, _k in ledger_entries(target_dir))
 
 
 def _entry_dir(target_dir: str, kind: str, seq: int) -> str:
@@ -198,16 +187,6 @@ def entry_stats(target_dir: str, kind: str, seq: int) -> dict | None:
         return json.load(fh)
 
 
-def _commit_entry(target_dir: str, kind: str, seq: int) -> None:
-    """Make a fully-written entry visible. Idempotent: replaying a
-    crashed batch rewrites the same bytes and finds its entry already
-    committed — no duplicate commit is appended."""
-    _adopt_legacy(target_dir)
-    if (seq, kind) in ledger_entries(target_dir):
-        return
-    _append_commit(target_dir, {"add": [[kind, seq]]})
-
-
 def _assert_unique_keys(df: DataFrame, key_cols: list, what: str) -> None:
     row = df.agg(
         F.count("*").alias("n"),
@@ -220,6 +199,24 @@ def _assert_unique_keys(df: DataFrame, key_cols: list, what: str) -> None:
             f"nondeterministic within this entry")
 
 
+def _write_entry(df: DataFrame, target_dir: str, kind: str, seq: int,
+                 stats_col: str | None, key_cols) -> None:
+    """Write entry `{kind}{seq}` and commit it to the manifest. Returns
+    without running anything when the entry is already committed: a
+    replayed step never rewrites a committed entry, so a reader that
+    planned over its files keeps them. An uncommitted directory (a
+    writer killed before the commit) is overwritten."""
+    if (seq, kind) in ledger_entries(target_dir):
+        return
+    if key_cols:
+        _assert_unique_keys(df, list(key_cols), f"{kind}{seq}")
+    entry = _entry_dir(target_dir, kind, seq)
+    df.write.mode("overwrite").parquet(entry)
+    if stats_col is not None:
+        _write_stats(df, entry, stats_col)
+    _append_commit(target_dir, {"add": [[kind, seq]]})
+
+
 def write_base(df: DataFrame, target_dir: str, seq: int,
                stats_col: str | None = None,
                key_cols=None) -> None:
@@ -229,15 +226,9 @@ def write_base(df: DataFrame, target_dir: str, seq: int,
     next to the data (one extra O(batch) agg) so range reads can skip
     the entry; `key_cols` additionally asserts key uniqueness (one
     agg). The entry becomes visible only at the manifest commit — a
-    writer killed mid-write leaves the ledger unchanged."""
-    os.makedirs(target_dir, exist_ok=True)
-    if key_cols:
-        _assert_unique_keys(df, list(key_cols), f"base b{seq}")
-    entry = _entry_dir(target_dir, "b", seq)
-    df.write.mode("overwrite").parquet(entry)
-    if stats_col is not None:
-        _write_stats(df, entry, stats_col)
-    _commit_entry(target_dir, "b", seq)
+    writer killed mid-write leaves the ledger unchanged — and an entry
+    already committed is never rewritten."""
+    _write_entry(df, target_dir, "b", seq, stats_col, key_cols)
 
 
 def write_delta(df: DataFrame, target_dir: str, seq: int,
@@ -253,18 +244,11 @@ def write_delta(df: DataFrame, target_dir: str, seq: int,
     write time (one O(batch) agg; the in-tree maintainers do).
 
     `stats_col`: see `write_base` — tombstone rows count toward the
-    range too (a delete for key k lives wherever k does). Visibility is
-    manifest-commit atomic, as for `write_base`."""
-    os.makedirs(target_dir, exist_ok=True)
+    range too (a delete for key k lives wherever k does). Visibility and
+    replay are as for `write_base`."""
     if "_op" not in df.columns:
         df = df.withColumn("_op", F.lit("U"))
-    if key_cols:
-        _assert_unique_keys(df, list(key_cols), f"delta d{seq}")
-    entry = _entry_dir(target_dir, "d", seq)
-    df.write.mode("overwrite").parquet(entry)
-    if stats_col is not None:
-        _write_stats(df, entry, stats_col)
-    _commit_entry(target_dir, "d", seq)
+    _write_entry(df, target_dir, "d", seq, stats_col, key_cols)
 
 
 def plan_entries(target_dir: str, as_of: int | None = None,
@@ -512,7 +496,6 @@ def compact(spark, target_dir: str, key_cols,
         raise FileNotFoundError(f"no ledger entries under {target_dir}")
     if len(live) == 1 and live[0][1] == "b":
         return {"new_base": live[0][0], "removed": []}  # already compact
-    _adopt_legacy(target_dir)
     top = max(s for s, _k in live)
     snapshot = read_merged(spark, target_dir, key_cols).cache()
     snapshot.count()  # materialize BEFORE touching the ledger
@@ -546,7 +529,7 @@ def compact(spark, target_dir: str, key_cols,
     if stats_col is not None:
         _write_stats(snapshot, entry, stats_col)
     snapshot.unpersist()
-    _commit_entry(target_dir, "b", top)
+    _append_commit(target_dir, {"add": [["b", top]]})
     removed = vacuum(target_dir) if vacuum_absorbed else []
     return {"new_base": top, "removed": removed}
 
@@ -574,7 +557,7 @@ def vacuum(target_dir: str, retain=None) -> list:
                           ignore_errors=True)
             removed.append(f"{kind}{seq}")
             removed_pairs.append([kind, seq])
-    if removed_pairs and _list_commits(target_dir) is not None:
+    if removed_pairs:
         _append_commit(target_dir, {"remove": removed_pairs})
     return removed
 

@@ -7,17 +7,18 @@ log importance ratio ln p_target − ln p_raw. Documents whose ratio is
 NULL (<2 tokens: no evidence) or below the cutoff are QUARANTINED to an
 append-only ledger WITH their scores (audit/reprocessing, never a silent
 drop); survivors flow into the standard deduplicating admission
-(`dedup_admission._admit_batch` — same COW version ledger, same
+(`dedup_admission._admit_batch` — same delta ledgers, same
 `dedup_increment` semantics).
 
 The batch query form (`queries_ext.dsir_sample_documents`) does Gumbel
 TOP-K — a global budget, which does not compose over unbounded streams;
 the streaming form gates on the RATIO THRESHOLD instead (keep what is at
 least `cutoff` nats more target-like than raw), which is per-document
-and therefore batching-invariant: the gate runs inside the admission's
-versioned step, so the composition keeps the admission path's replay
-contract, and streaming ≡ batch is pinnable — the final corpus equals a
-flat dedup over init ∪ {docs with ratio >= cutoff}.
+and therefore batching-invariant: the gate runs inside the admission
+step, before its first delta commit, so the composition keeps the
+admission path's replay contract, and streaming ≡ batch is pinnable —
+the final corpus equals a flat dedup over init ∪ {docs with ratio >=
+cutoff}.
 
 At 100 TB: scoring is one bigram explode + four broadcast LM joins per
 batch (`dsir_logratio`), strictly cheaper than the dedup verification it
@@ -33,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dsir import dsir_logratio, shared_vocab
 from ..operators.lm_score import train_bigram_lm
-from .dedup_admission import _admit_batch, bootstrap_v0
+from .dedup_admission import _admit_batch, bootstrap
 from .versions import read_batch_ledger, run_foreach_batch
 
 
@@ -53,7 +54,7 @@ def streaming_dsir_dedup_admission(
     (what you want MORE of); `init_corpus` doubles as the raw model's
     training set. Rejected docs land in `quarantine_dir/b{batch_id}` as
     (id, n_bigrams, log_ratio) rows."""
-    bootstrap_v0(init_corpus, target_dir)
+    bootstrap(init_corpus, target_dir)
     t_dir = os.path.join(target_dir, "lm_target")
     r_dir = os.path.join(target_dir, "lm_raw")
     v_dir = os.path.join(target_dir, "lm_vocab")

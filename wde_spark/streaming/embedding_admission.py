@@ -4,17 +4,23 @@ ANN index over an embedding stream.
 The embeddings twin of `streaming/dedup_admission.py`: new vectors are
 ENCODED on arrival against a FROZEN codebook (the production pattern —
 quantizers are retrained offline on a schedule, never per batch, so codes
-stay mutually comparable) and appended to the stored codes table as
-copy-on-write versions. Queries run ADC-only against the maintained codes
+stay mutually comparable) and appended to the codes table, a
+merge-on-read delta ledger (`streaming/compaction.py`) under
+`target_dir/codes`. Queries run ADC-only against the maintained codes
 (`operators/similarity.pq_adc_topk`) — they never touch float vectors, so
 the float column can be cold storage.
 
-Encoding with a frozen codebook is deterministic and row-local; each
-batch is a `versions.versioned_step` (`v{batch_id}` -> `v{batch_id+1}`).
+The codes table is APPEND-ONLY (vectors admitted under a frozen codebook
+are never revoked), so a micro-batch is the ledger's best case: encode
+the batch and append it as delta `d{batch_id+1}` — NO ledger read at
+all, so per-batch cost is independent of index size. Encoding with a
+frozen codebook is deterministic and row-local, so a replayed batch
+finds its delta committed and writes nothing.
 
 Index size arithmetic at scale: 1024-dim float32 = 4 KB/vector; PQ-64
 codes = 64 B/vector — a 10-billion-vector index is ~640 GB of codes, a
-table one rack scans in seconds, vs 40 TB of floats.
+table one rack scans in seconds, vs 40 TB of floats, and a micro-batch
+appends ~64 B x batch instead of rewriting it.
 """
 
 from __future__ import annotations
@@ -25,8 +31,8 @@ import os
 from pyspark.sql import DataFrame
 
 from ..operators.similarity import pq_adc_topk, pq_encode, train_pq_codebooks
-from .versions import (bootstrap, latest_version_dir, run_foreach_batch,
-                       versioned_step)
+from .compaction import ledger_entries, read_merged, write_base, write_delta
+from .versions import run_foreach_batch
 
 
 def _codebook_path(target_dir: str) -> str:
@@ -39,9 +45,10 @@ def read_codebooks(target_dir: str) -> list[list[list[float]]]:
 
 
 def read_codes(spark, target_dir: str) -> DataFrame:
-    """Current PQ codes table (latest version)."""
-    return spark.read.parquet(
-        os.path.join(latest_version_dir(target_dir), "codes"))
+    """Current PQ codes (merge-on-read; a plain base scan once
+    compacted)."""
+    return read_merged(spark, os.path.join(target_dir, "codes"),
+                       ["vec_id"])
 
 
 def ann_query(spark, target_dir: str, queries: DataFrame,
@@ -51,67 +58,6 @@ def ann_query(spark, target_dir: str, queries: DataFrame,
                        read_codebooks(target_dir), k)
 
 
-def read_codes_merged(spark, target_dir: str) -> DataFrame:
-    """Current PQ codes out of the DELTA ledger (merge-on-read; a plain
-    base scan once compacted)."""
-    from .compaction import read_merged
-
-    return read_merged(spark, os.path.join(target_dir, "codes"),
-                       ["vec_id"])
-
-
-def ann_query_merged(spark, target_dir: str, queries: DataFrame,
-                     k: int = 5) -> DataFrame:
-    """ADC top-k against the delta-ledger index — same scoring as
-    `ann_query`, codes via merge-on-read."""
-    return pq_adc_topk(read_codes_merged(spark, target_dir), queries,
-                       read_codebooks(target_dir), k)
-
-
-def streaming_pq_index_maintain_delta(
-    vec_stream: DataFrame,
-    init_items: DataFrame,
-    target_dir: str,
-    checkpoint_dir: str,
-    m: int = 8,
-    k_codes: int = 16,
-) -> None:
-    """DELTA-LEDGER twin of `streaming_pq_index_maintain` — the
-    remaining corpus-sized COW family moved to the table-format write
-    path (`streaming/compaction.py`). The codes table is APPEND-ONLY
-    (vectors admitted under a frozen codebook are never revoked), so a
-    micro-batch is the idiom's best case: encode the batch and append
-    it as ledger delta `d{batch_id+1}` — NO ledger read at all, so
-    per-batch cost is independent of index size, where the COW form
-    rewrites the whole codes table (10-billion-vector index = ~640 GB
-    rewritten per batch). Queries merge-on-read (a plain base scan once
-    compacted); encoding determinism gives the same replay contract as
-    the COW twin, and the same batch-invariance the ADC oracle
-    replays."""
-    from .compaction import ledger_entries, write_base, write_delta
-
-    os.makedirs(target_dir, exist_ok=True)
-    ledger = os.path.join(target_dir, "codes")
-    # bootstrap idempotent-by-redo; "any ledger entry" is the completed
-    # test (compaction may fold b0)
-    complete = (os.path.exists(_codebook_path(target_dir))
-                and bool(ledger_entries(ledger)))
-    if not complete:
-        books = train_pq_codebooks(init_items, m, k_codes)
-        with open(_codebook_path(target_dir), "w") as f:
-            json.dump(books, f)
-        write_base(pq_encode(init_items, books), ledger, 0,
-                   stats_col="vec_id")
-
-    books = read_codebooks(target_dir)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        write_delta(pq_encode(batch, books), ledger, batch_id + 1,
-                    stats_col="vec_id", key_cols=["vec_id"])
-
-    run_foreach_batch(vec_stream, _apply, checkpoint_dir)
-
-
 def streaming_pq_index_maintain(
     vec_stream: DataFrame,
     init_items: DataFrame,
@@ -119,32 +65,28 @@ def streaming_pq_index_maintain(
     checkpoint_dir: str,
     m: int = 8,
     k_codes: int = 16,
-    iters: int = 2,
 ) -> None:
     """Run the vector stream to completion (availableNow — static test
-    input), maintaining the PQ codes table under `target_dir`. Bootstrap
-    trains the codebook tensor on `init_items` once (deterministic
-    per-sub-space k-means) and encodes them as v0; every micro-batch is
-    encoded with that frozen codebook and appended. The codebook file
-    is written before `v0` commits, so a committed `v0` implies it."""
-
-    def write_v0(out: str) -> None:
-        books = train_pq_codebooks(init_items, m, k_codes, iters)
+    input), maintaining the PQ codes ledger under `target_dir`. The
+    bootstrap trains the codebook tensor on `init_items` once
+    (deterministic per-sub-space k-means) and writes their codes as base
+    `b0`; every micro-batch is encoded with that frozen codebook and
+    appended as a delta. The codebook file is written before `b0`
+    commits, so a committed entry implies it; a bootstrap that crashed
+    before that commit is redone whole."""
+    ledger = os.path.join(target_dir, "codes")
+    # any entry means the ledger is live (compaction may fold b0)
+    if not ledger_entries(ledger):
+        books = train_pq_codebooks(init_items, m, k_codes)
+        os.makedirs(target_dir, exist_ok=True)
         with open(_codebook_path(target_dir), "w") as f:
             json.dump(books, f)
-        pq_encode(init_items, books) \
-            .write.mode("overwrite").parquet(os.path.join(out, "codes"))
-
-    bootstrap(target_dir, write_v0)
+        write_base(pq_encode(init_items, books), ledger, 0,
+                   stats_col="vec_id")
     books = read_codebooks(target_dir)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        def step(prev: str, out: str) -> None:
-            cur = batch.sparkSession.read.parquet(
-                os.path.join(prev, "codes"))
-            cur.unionByName(pq_encode(batch, books)) \
-                .write.mode("overwrite").parquet(os.path.join(out, "codes"))
-
-        versioned_step(target_dir, batch_id, step)
+        write_delta(pq_encode(batch, books), ledger, batch_id + 1,
+                    stats_col="vec_id", key_cols=["vec_id"])
 
     run_foreach_batch(vec_stream, _apply, checkpoint_dir)

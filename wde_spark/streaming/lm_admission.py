@@ -4,10 +4,10 @@ slice scores every incoming micro-batch, documents below the fluency
 cutoff are QUARANTINED at admission (written to an append-only ledger
 with their scores, for audit/reprocessing — never silently dropped), and
 the survivors flow into the standard deduplicating corpus admission
-(`dedup_admission._admit_batch`: same COW version ledger, same
-`dedup_increment` semantics, optional drift maintainer). The gate runs
-inside the admission's versioned step, so a batch's quarantine ledger is
-complete whenever its corpus version is.
+(`dedup_admission._admit_batch`: same delta ledgers, same
+`dedup_increment` semantics). The gate runs only for a batch that has
+not landed and before its first delta commit, so a batch's quarantine
+ledger is complete whenever its corpus delta is.
 
 The LM is FROZEN at bootstrap (trained once on the init corpus and
 persisted as a parquet table) — scoring is then a pure per-document
@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.lm_score import lm_quality, train_bigram_lm
-from .dedup_admission import _admit_batch, bootstrap_v0
+from .dedup_admission import _admit_batch, bootstrap
 from .versions import read_batch_ledger, run_foreach_batch
 
 
@@ -50,7 +50,7 @@ def streaming_lm_dedup_admission(
     NULL (<2 tokens: no evidence) or < `cutoff` land in
     `quarantine_dir/b{batch_id}` as (id, n_bigrams, avg_logp) rows; the
     rest are admitted through `dedup_increment`."""
-    bootstrap_v0(init_corpus, target_dir)
+    bootstrap(init_corpus, target_dir)
     lm_dir = os.path.join(target_dir, "lm")
     if not os.path.exists(os.path.join(lm_dir, "_SUCCESS")):
         train_bigram_lm(init_corpus) \

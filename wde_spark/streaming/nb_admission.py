@@ -8,14 +8,14 @@ ALL batch documents are appended to an immutable per-batch PREDICTION
 LEDGER (audit/threshold-retuning without re-scoring), documents whose
 predicted label is outside the keep-set are QUARANTINED, and the
 survivors flow into the standard deduplicating corpus admission
-(`dedup_admission._admit_batch`: same COW version ledger, same
+(`dedup_admission._admit_batch`: same delta ledgers, same
 `dedup_increment` semantics).
 
 Because the model is frozen, classification is a pure per-document
 function — the gate is batching-invariant; it runs inside the
-admission's versioned step, so the composition keeps the admission
-path's replay contract, and streaming ≡ batch is pinnable: the
-final corpus equals a flat `dedup_corpus` re-run over
+admission step, before its first delta commit, so the composition keeps
+the admission path's replay contract, and streaming ≡ batch is
+pinnable: the final corpus equals a flat `dedup_corpus` re-run over
 init ∪ {batch docs predicted in keep_labels}.
 
 At 100 TB: scoring a batch is one token explode + one equi-join against
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.classifier import nb_classify, train_naive_bayes
-from .dedup_admission import _admit_batch, bootstrap_v0
+from .dedup_admission import _admit_batch, bootstrap
 from .versions import read_batch_ledger, run_foreach_batch
 
 
@@ -58,7 +58,7 @@ def streaming_nb_dedup_admission(
     margin); documents predicted OUTSIDE `keep_labels` additionally land
     in `quarantine_dir/b{batch_id}`; the rest are admitted through
     `dedup_increment`."""
-    bootstrap_v0(init_corpus, target_dir)
+    bootstrap(init_corpus, target_dir)
     m_dir = os.path.join(target_dir, "nb_model")
     p_dir = os.path.join(target_dir, "nb_priors")
     if not os.path.exists(os.path.join(p_dir, "_SUCCESS")):

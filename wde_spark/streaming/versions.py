@@ -3,11 +3,9 @@ and read.
 
 Every copy-on-write sink (`cdc`, `sketch_maintenance` HLL and KLL,
 `bloom_admission`, `budget_admission`, `curriculum`, `shard_migration`,
-`dedup_admission` and the `lm_`/`dsir_`/`nb_admission` gates in front of
-it, `embedding_admission`, `substr_admission`, `export_admission`,
-`pack_admission` and `codebook_maintenance`) rolls its state forward as
-immutable `v{n}` directories through `versioned_step`, and bootstraps
-`v0` through `bootstrap`. A version is written into a staging directory
+`substr_admission`, `export_admission` and `pack_admission`) rolls its
+state forward as immutable `v{n}` directories through `versioned_step`,
+and bootstraps `v0` through `bootstrap`. A version is written into a staging directory
 `_v{n}.stage-<unique>` and published by one `os.rename`, so a `v{n}`
 directory only ever appears complete:
 
@@ -17,11 +15,10 @@ directory only ever appears complete:
   * a crash before the rename leaves only a staging directory, which
     `version_history` and Spark's readers both ignore (leading `_`), and
     the restart recomputes the batch from the same `v{batch_id}`;
-  * the side ledgers a step writes (`manifest/b{n}`, `spans/b{n}`,
-    quarantine, predictions, drift) are written before the rename, so
-    "`v{n}` exists" implies they are complete. An uncommitted batch's
-    side ledger entry may be visible until the restart rewrites it with
-    the same bytes.
+  * the side ledgers a step writes (`manifest/b{n}`, `spans/b{n}`) are
+    written before the rename, so "`v{n}` exists" implies they are
+    complete. An uncommitted batch's side ledger entry may be visible
+    until the restart rewrites it with the same bytes.
 
 Every side ledger is read by `read_batch_ledger`, which lists the `b{n}`
 directories and hands Spark that explicit path list. A `b*` glob would
@@ -34,8 +31,10 @@ is published only once it is complete. The ledger gives what a table
 format gives: time travel (read any past version), history, and
 compaction (each version is self-contained, so dropping old versions is
 a directory delete, never a rewrite). Version writes are local-filesystem
-renames; the merge-on-read delta ledgers (`compaction.py`) have their own
-commit protocol.
+renames. The corpus-sized maintainers (the dedup admission and its gates,
+the PQ index, the k-means codebook) are merge-on-read delta ledgers with
+their own commit protocol (`compaction.py`); they use only
+`run_foreach_batch` and `read_batch_ledger` from here.
 
 Filesystem abstraction for the readers: plain local paths use
 `os`/`shutil` directly (no JVM round-trip); any path with a URI scheme
