@@ -216,8 +216,6 @@ def test_attach_video_rle_frames_predictable_from_text(spark):
 def test_rle8_aggregate_decode_cap():
     """A tiny RLE payload cannot demand an unbounded decode: frames x
     frame-size beyond the byte cap null-routes instead of OOMing."""
-    import struct as _st
-
     from wde_spark.operators.avi_codec import (_assemble_avi,
                                                _gray_palette)
 

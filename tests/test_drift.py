@@ -1,5 +1,6 @@
-"""Corpus drift monitoring (`operators/drift.py`): hand-computed JSD,
-the identical/disjoint bounds, and the ledger composition."""
+"""Corpus drift monitoring (`operators/drift.py`): hand-computed JSD and
+the identical/disjoint bounds. The ledger composition is the drift
+maintainer's (`tests/test_incremental_dedup.py`)."""
 
 from __future__ import annotations
 
@@ -42,44 +43,3 @@ def test_jsd_hand_computed(spark):
     assert row.jsd == pytest.approx(round((kl_p + kl_q) / 2, 6), abs=1e-6)
     assert row.l1 == pytest.approx(0.5, abs=1e-9)
 
-
-def test_version_drift_over_ledger(spark, tmp_path):
-    """The ledger composition: drift between two COW corpus versions —
-    v0→v1 (one admitted doc with half-new vocabulary) is small but
-    non-zero; v0→v0 is zero."""
-    base = [(1, "the quick brown fox"), (2, "jumps over the lazy dog")]
-    spark.createDataFrame(base, SCHEMA).write.parquet(
-        str(tmp_path / "v0" / "corpus"))
-    spark.createDataFrame(base + [(3, "the nimble quantum ferret")],
-                          SCHEMA).write.parquet(
-        str(tmp_path / "v1" / "corpus"))
-    zero = DR.version_drift(spark, str(tmp_path), 0, 0).first()
-    assert zero.jsd == 0.0
-    moved = DR.version_drift(spark, str(tmp_path), 0, 1).first()
-    assert 0 < moved.jsd < math.log(2)
-    assert moved.n_terms_common == 8  # the v0 vocabulary survives
-
-
-def test_drift_history_trajectory(spark, tmp_path):
-    """drift_history walks every v(n-1)->v(n) transition of a COW ledger:
-    a no-change transition scores 0, a vocabulary-shifting one scores >0,
-    and a <2-version ledger yields an empty typed frame."""
-    base = [(1, "alpha beta gamma"), (2, "delta epsilon zeta")]
-    grown = base + [(3, "eta theta iota")]
-    shifted = grown + [(4, "qqq zzz xxx qqq zzz xxx qqq zzz")]
-    for n, rows in ((0, base), (1, grown), (2, grown), (3, shifted)):
-        spark.createDataFrame(rows, SCHEMA).write.parquet(
-            str(tmp_path / f"v{n}" / "corpus"))
-    hist = {(r.from_version, r.to_version): r.jsd
-            for r in DR.drift_history(spark, str(tmp_path)).collect()}
-    assert set(hist) == {(0, 1), (1, 2), (2, 3)}
-    assert hist[(1, 2)] == 0.0          # identical versions: no drift
-    assert hist[(0, 1)] > 0 and hist[(2, 3)] > 0
-    assert hist[(2, 3)] > hist[(0, 1)]  # repeated alien vocab drifts more
-
-    single = tmp_path / "single"
-    spark.createDataFrame(base, SCHEMA).write.parquet(
-        str(single / "v0" / "corpus"))
-    empty = DR.drift_history(spark, str(single))
-    assert empty.count() == 0
-    assert empty.columns[:3] == ["from_version", "to_version", "jsd"]

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
 
 from wde_spark.operators import similarity as SIM
 from wde_spark.streaming.embedding_admission import (

@@ -3,7 +3,6 @@ compressed parquet all preserve the orders table exactly."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
 

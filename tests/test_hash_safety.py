@@ -13,7 +13,6 @@ hashes.
 
 from __future__ import annotations
 
-import pytest
 
 from tools.check_hash_safety import (
     duck_findings,

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import functions as F
 
 from wde_spark.operators import dedup as D
 from wde_spark.operators import incremental as I
@@ -263,41 +262,6 @@ def test_version_ledger_time_travel_and_compaction(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(FileNotFoundError):
         read_merged(spark, ledger, ["doc_id"], as_of=0)
-
-
-def test_version_ledger_on_non_local_scheme(spark, tmp_path):
-    """The ledger must work against Hadoop FileSystem paths, not just the
-    local os module: bind a mock URI scheme (`mockfs:`) to Hadoop's
-    RawLocalFileSystem and drive history / time travel / latest-version /
-    compaction entirely through scheme'd paths — every list, existence
-    check, and recursive delete goes through the FileSystem API, the same
-    code path an hdfs:// or s3a:// deployment exercises."""
-    import pytest as _pytest
-
-    from wde_spark.streaming.versions import (
-        compact_versions, latest_version_dir, read_version,
-        version_history)
-
-    spark.sparkContext._jsc.hadoopConfiguration().set(
-        "fs.viewfs.mounttable.wdetest.link./ledger",
-        f"file://{tmp_path}/backing")
-    target = "viewfs://wdetest/ledger"
-    for n, hi in ((0, 2), (1, 4), (2, 6)):
-        spark.createDataFrame(CORPUS[:hi], SCHEMA).coalesce(1) \
-            .write.mode("overwrite").parquet(f"{target}/v{n}/corpus")
-
-    assert version_history(target, spark) == [0, 1, 2]
-    assert latest_version_dir(target, spark).endswith("/v2")
-    v0 = {r.doc_id for r in read_version(spark, target, 0, "corpus").collect()}
-    assert v0 == {r[0] for r in CORPUS[:2]}
-
-    dropped = compact_versions(target, spark=spark)
-    assert dropped == [0]
-    assert version_history(target, spark) == [1, 2]
-    with _pytest.raises(FileNotFoundError):
-        read_version(spark, target, 0, "corpus")
-    # and the surviving versions still read fine through the scheme
-    assert read_version(spark, target, 2, "corpus").count() == 6
 
 
 def test_increment_chain_of_batches(spark):

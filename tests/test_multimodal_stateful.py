@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
@@ -56,7 +55,6 @@ def test_stateful_sessionize_matches_batch(spark, tmp_path):
     from wde_spark.core.catalog import load_table
     from wde_spark.operators.relational import sessionize
     from wde_spark.streaming.stateful import sessionize_stateful
-    from wde_spark.streaming.windows import EVENTS_SCHEMA
 
     ev = (
         load_table(spark, SF_SMOKE, "events")
@@ -118,7 +116,6 @@ def test_stateful_sessionize_matches_batch(spark, tmp_path):
 def test_audio_chunks_edges(spark):
     """Empty payload -> one zero-size chunk; exact-window payload -> one
     chunk; window+1 -> two overlapping chunks; non-audio rows never emit."""
-    from pyspark.sql import functions as F
     from wde_spark.operators import multimodal as MM
 
     docs = spark.createDataFrame(

@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 
 from wde_spark.operators import dedup as D
 from wde_spark.operators import relational as R

@@ -29,6 +29,11 @@ parameter of that function (or the function takes `**kwargs`). The
 function is found through a `wde_spark` import (a module alias or an
 imported name) or, for a plain call, by a name defined once in the package.
 
+A fifth rule covers imports: every name an import in `wde_spark/`,
+`tools/` or `tests/` binds is used in the scope of the import (the
+module, or the function the import sits in), or listed in `__all__`. An
+import kept for its side effect is marked `# noqa: F401`.
+
 AST only, no import of the package.
 """
 
@@ -38,6 +43,7 @@ import ast
 import functools
 import gc
 import pathlib
+import re
 
 import pytest
 
@@ -277,3 +283,42 @@ def test_callers_pass_only_existing_keywords():
     assert not stale, (f"{len(stale)} keyword arguments name no parameter "
                        f"of the called wde_spark function:\n"
                        + "\n".join(stale))
+
+
+def _imports(tree: ast.Module):
+    """(import node, its scope: the module or the innermost function)."""
+    out = []
+
+    def walk(node, scope):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, (ast.Import, ast.ImportFrom)):
+                out.append((ch, scope))
+            walk(ch, ch if isinstance(
+                ch, (ast.FunctionDef, ast.AsyncFunctionDef)) else scope)
+
+    walk(tree, tree)
+    return out
+
+
+def test_every_import_is_used():
+    unused = []
+    for path, tree in _trees(["wde_spark", "tools", "tests"]):
+        lines = path.read_text().splitlines()
+        exported = {ast.literal_eval(e) for n in tree.body
+                    if isinstance(n, ast.Assign)
+                    and any(isinstance(t, ast.Name) and t.id == "__all__"
+                            for t in n.targets)
+                    for e in n.value.elts}
+        for imp, scope in _imports(tree):
+            if (isinstance(imp, ast.ImportFrom)
+                    and imp.module == "__future__") or any(
+                    re.search(r"# noqa:.*F401", ln)
+                    for ln in lines[imp.lineno - 1:imp.end_lineno]):
+                continue
+            used = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+            unused += [f"{path.relative_to(ROOT)}:{imp.lineno} {bound}"
+                       for bound in (a.asname or a.name.split(".")[0]
+                                     for a in imp.names)
+                       if bound not in used and bound not in exported]
+    assert not unused, (f"{len(unused)} imported names nothing uses:\n"
+                        + "\n".join(unused))

@@ -5,7 +5,6 @@ inside whole-stage codegen (no Python evaluation nodes)."""
 
 from __future__ import annotations
 
-import pytest
 
 from conftest import SF_CORRECT
 

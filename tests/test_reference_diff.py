@@ -15,7 +15,6 @@ import csv
 import io
 import os
 import sys
-import types
 
 import pytest
 

@@ -10,7 +10,6 @@ import os
 import xml.etree.ElementTree as ET
 
 import pytest
-from pyspark.sql import functions as F
 
 REF = "/root/reference"
 CATS = os.path.join(REF, "Catalogues", "1-100")

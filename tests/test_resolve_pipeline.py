@@ -5,13 +5,10 @@ nametable plan against the reference's own csvbuilder logic.
 
 from __future__ import annotations
 
-import contextlib
 import csv
-import io
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 REF = "/root/reference"
 GOLDEN_WITHID = os.path.join(REF, "script", "tables", "nametable_test_withid.tsv")
@@ -47,8 +44,7 @@ def cache_df(spark):
 def test_resolve_offline_golden(spark, golden_df, cache_df):
     """Pipeline result must equal the reference algorithm run in-process
     (same cache, same ladder) on every one of the 200 golden rows."""
-    from wde_spark.functions.classify import (QDict, clean_query_string,
-                                              ladder_candidates, prep_query)
+    from wde_spark.functions.classify import ladder_candidates, prep_query
     from wde_spark.plans.resolve import resolve_offline
 
     resolved = resolve_offline(golden_df, cache_df).orderBy("row_pos")

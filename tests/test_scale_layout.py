@@ -217,7 +217,6 @@ def test_pack_stream_conservation_and_density(spark):
     sequence except the last is exactly full (zero padding waste),
     in-sequence offsets tile each window without gaps, and the layout is
     reproducible across input partitionings."""
-    from pyspark.sql import functions as F
 
     from wde_spark.operators.layout import pack_stream
 
@@ -273,7 +272,6 @@ def test_global_prefix_sum_share_pass_identical_and_cached(spark):
 def test_rendezvous_shard_minimal_movement(spark):
     """HRW property: growing 8 -> 9 shards moves keys ONLY to the new
     shard, and roughly 1/9 of them; survivors keep their assignment."""
-    from pyspark.sql import functions as F
 
     from wde_spark.operators.layout import rendezvous_shard
 

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
 

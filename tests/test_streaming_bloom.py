@@ -41,6 +41,7 @@ def _run_maintain(spark, docs, tmp_path, n_files: int):
 def test_maintained_bits_equal_one_shot(spark, tmp_path):
     from wde_spark.streaming.bloom_admission import (batch_bloom_bits,
                                                      read_bloom_bits)
+    from wde_spark.streaming.compaction import ledger_entries
 
     docs = _docs(spark)
     bits_dir = _run_maintain(spark, docs, tmp_path, n_files=4)
@@ -51,9 +52,9 @@ def test_maintained_bits_equal_one_shot(spark, tmp_path):
         for r in batch_bloom_bits(
             docs.filter(F.col("doc_id") % 17 == 0)).collect())
     assert maintained == one_shot
-    # the stream really ran incrementally: several COW versions exist
-    versions = [p for p in os.listdir(bits_dir) if p.startswith("v")]
-    assert len(versions) >= 2, versions
+    # the stream really ran incrementally: one base per batch
+    entries = ledger_entries(bits_dir)
+    assert len(entries) >= 2, entries
 
 
 def test_admission_matches_decontaminate_bloom(spark, tmp_path):

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
 
 BUDGETS = {"a": 100, "b": 40}
 DEFAULT = 60

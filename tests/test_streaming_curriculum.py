@@ -58,10 +58,11 @@ def test_maintained_equals_one_shot_after_each_batch(spark, tmp_path):
     final = {(r["doc_id"], r["stage"], r["sched_pos"])
              for r in read_curriculum(spark, target).collect()}
     assert final == one_shot(b0 + b1)
-    # mid-stream version v1 (only batch 0 arrived): identical to the
-    # one-shot over batch 0 — the schedule was always rebuild-exact
+    # the ledger as of sequence 1 (only batch 0 arrived): identical to
+    # the one-shot over batch 0 — the schedule was always rebuild-exact
     from wde_spark.operators.sampling import curriculum_order as co
-    v1 = spark.read.parquet(os.path.join(target, "v1"))
+    from wde_spark.streaming.compaction import read_merged
+    v1 = read_merged(spark, target, ["doc_id", "arrived_batch"], as_of=1)
     mid = {(r["doc_id"], r["stage"], r["sched_pos"])
            for r in co(v1, F.col("bucket")).collect()}
     assert mid == one_shot(b0)
@@ -92,8 +93,10 @@ def test_replay_idempotent(spark, tmp_path):
 
 def test_ledger_is_text_free(spark, tmp_path):
     """The state never stores document bytes — the 100 TB property."""
+    from wde_spark.streaming.compaction import read_merged
+
     target = _run_stream(spark, tmp_path, [_mkrows(range(10))])
-    v1 = spark.read.parquet(os.path.join(target, "v1"))
+    v1 = read_merged(spark, target, ["doc_id", "arrived_batch"])
     assert set(v1.columns) == {"doc_id", "bucket", "arrived_batch"}
 
 

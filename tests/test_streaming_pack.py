@@ -115,15 +115,17 @@ def test_sealing_prefix_stable_and_no_backfill(spark, tmp_path):
 
 
 def test_replay_idempotent(spark, tmp_path):
-    """Re-applying batch 0 against metadata v0 rewrites identical rows."""
-    from wde_spark.streaming.pack_admission import (ffd_pack_increment,
-                                                    read_pack_manifest)
+    """Re-applying batch 0 against metadata base 0 rewrites identical
+    rows."""
+    from wde_spark.streaming.compaction import read_merged
+    from wde_spark.streaming.pack_admission import ffd_pack_increment
 
     t = _weights(spark)
     target = _run_stream(spark, t, tmp_path, 2, "replay")
     b0 = _rows(spark.read.parquet(
         os.path.join(target, "manifest", "b0")).drop("batch_no"))
-    off0 = spark.read.parquet(os.path.join(target, "meta", "v0"))
+    off0 = read_merged(spark, os.path.join(target, "meta"), ["bucket"],
+                       as_of=0)
     redo = _rows(ffd_pack_increment(
         off0, t.filter(F.col("doc_id") % 2 == 0), SEQ_LEN,
         n_buckets=N_BUCKETS))
@@ -131,6 +133,7 @@ def test_replay_idempotent(spark, tmp_path):
 
 
 def test_bins_respect_seq_len(spark, tmp_path):
+    from wde_spark.streaming.compaction import read_merged
     from wde_spark.streaming.pack_admission import read_pack_manifest
 
     t = _weights(spark)
@@ -141,10 +144,7 @@ def test_bins_respect_seq_len(spark, tmp_path):
     over = fills.filter((F.col("fill") > SEQ_LEN) & (F.col("n") > 1))
     assert over.count() == 0
     # metadata ledger agrees with the manifest's bin counts
-    hist = sorted(
-        int(p[1:]) for p in os.listdir(os.path.join(target, "meta")))
-    last = spark.read.parquet(
-        os.path.join(target, "meta", f"v{hist[-1]}"))
+    last = read_merged(spark, os.path.join(target, "meta"), ["bucket"])
     led = {r["bucket"]: r["bins_so_far"] for r in last.collect()}
     tops = {r["bucket"]: r["top"]
             for r in m.groupBy("bucket")

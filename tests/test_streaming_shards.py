@@ -9,7 +9,6 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _run_stream(spark, tmp_path, ids_batches, base_shards=6):

@@ -1,30 +1,27 @@
-"""Fault injection over every streaming sink. The copy-on-write sinks
-(`streaming/versions.py`) commit a version by `versioned_step` /
-`bootstrap` (stage, then one rename); the delta-ledger maintainers
-(`streaming/compaction.py`: the dedup admission, the LM gate in front of
-it, the PQ index and the codebook) commit each entry by one manifest
-commit, where the crash is injected. For both:
+"""Fault injection over every streaming sink. Every sink commits each
+ledger entry by one manifest commit (`streaming/compaction.py`), where
+the crash is injected, and every step replays through
+`compaction.ledger_step`:
 
 - REPLAY AFTER COMMIT: a batch re-run after it landed (the checkpoint's
   commit-log entry lost — foreachBatch's at-least-once case) completes
-  with unchanged files and unchanged reads — no version, entry, gate
-  ledger or drift row is rewritten;
+  with unchanged files and unchanged reads — no entry, side-ledger
+  entry, gate ledger or drift row is rewritten;
 - CRASH BEFORE COMMIT: a failure at the commit fails the query, readers
-  still see the previous batch, and the restart recomputes the batch to
-  the uninterrupted result;
-- BOOTSTRAP CRASH: a failure at v0's rename leaves no v0, and a failure
-  at any of a ledger maintainer's base commits leaves that base
-  uncommitted; the restart redoes the bootstrap to the uninterrupted
-  run's v0 or bases.
+  still see the previous batch — a side ledger (`spans/`, `manifest/`)
+  included, though the crashed batch wrote its entry — and the restart
+  recomputes the batch to the uninterrupted result;
+- BOOTSTRAP CRASH: a failure at any base-0 commit (a ledger's bootstrap
+  or a gate's frozen model) leaves that base uncommitted; the restart
+  redoes the bootstrap to the uninterrupted run's bases.
 
 Each of the 14 sites runs two one-file micro-batches over tiny inline
-inputs. One uninterrupted reference run per sink is shared by its three
+inputs. One uninterrupted reference run per sink is shared by its
 cases.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -58,11 +55,7 @@ def _rows(df):
                   key=repr)
 
 
-def _latest(spark, target):
-    return _rows(spark.read.parquet(versions.latest_version_dir(target)))
-
-
-# -- the 14 sites: (schema, batches, run, read, version subdir, v0?) --
+# -- the 14 sites: (schema, batches, run, read, ledgers) --
 
 def _cdc(spark, stream, t, ckpt):
     from wde_spark.streaming.cdc import streaming_cdc_apply
@@ -137,8 +130,9 @@ def _curriculum(spark, stream, t, ckpt):
 
 
 def _curriculum_read(spark, t):
-    # the versioned ledger; `read_curriculum` is a pure function of it
-    return _latest(spark, t)
+    # the ledger itself; `read_curriculum` is a pure function of it
+    return _rows(compaction.read_merged(spark, t,
+                                        ["doc_id", "arrived_batch"]))
 
 
 def _shard(spark, stream, t, ckpt):
@@ -217,8 +211,8 @@ def _substr(spark, stream, t, ckpt):
 def _substr_read(spark, t):
     from wde_spark.streaming.substr_admission import read_spans, read_state
 
-    latest = versions.version_history(t)[-1]
-    return _rows(read_spans(spark, t)), _rows(read_state(spark, t, latest))
+    head = compaction.ledger_head(os.path.join(t, "state"))
+    return _rows(read_spans(spark, t)), _rows(read_state(spark, t, head))
 
 
 def _export(spark, stream, t, ckpt):
@@ -231,8 +225,8 @@ def _export(spark, stream, t, ckpt):
 def _export_read(spark, t):
     from wde_spark.streaming.export_admission import read_manifest
 
-    return (_rows(read_manifest(spark, t)),
-            _latest(spark, os.path.join(t, "meta")))
+    return (_rows(read_manifest(spark, t)), _rows(compaction.read_merged(
+        spark, os.path.join(t, "meta"), ["n_total"])))
 
 
 def _pack(spark, stream, t, ckpt):
@@ -244,8 +238,8 @@ def _pack(spark, stream, t, ckpt):
 def _pack_read(spark, t):
     from wde_spark.streaming.pack_admission import read_pack_manifest
 
-    return (_rows(read_pack_manifest(spark, t)),
-            _latest(spark, os.path.join(t, "meta")))
+    return (_rows(read_pack_manifest(spark, t)), _rows(
+        compaction.read_merged(spark, os.path.join(t, "meta"), ["bucket"])))
 
 
 def _codebook(spark, stream, t, ckpt):
@@ -271,45 +265,49 @@ SITES = {
     "cdc": ("k long, op string, name string, val double",
             ([(2, "U", None, 99.0), (4, "I", "d", 40.0)],
              [(1, "D", None, None), (4, "U", "dd", None)]),
-            _cdc, _cdc_read, "", True),
+            _cdc, _cdc_read, ("",)),
     "hll": ("g string, v long",
             ([("a", 1), ("a", 2), ("b", 3)], [("a", 2), ("b", 4), ("c", 5)]),
-            _hll, _hll_read, "", False),
+            _hll, _hll_read, ("",)),
     "kll": ("g string, v long",
             ([("a", 1), ("a", 2), ("b", 3)], [("a", 2), ("b", 4), ("c", 5)]),
-            _kll, _kll_read, "", False),
-    "bloom": (DOCS, _TEXT, _bloom, _bloom_read, "", False),
+            _kll, _kll_read, ("",)),
+    "bloom": (DOCS, _TEXT, _bloom, _bloom_read, ("",)),
     "budget": ("doc_id long, source string, n_tok long",
                ([(i, "ab"[i % 2], i + 3) for i in range(1, 12, 2)],
                 [(i, "ab"[i % 3 % 2], i + 3) for i in range(0, 12, 2)]),
-               _budget, _budget_read, "", False),
+               _budget, _budget_read, ("",)),
     "curriculum": ("doc_id long, bucket long",
                    ([(i, i % 3) for i in range(1, 12, 2)],
                     [(i, i % 3) for i in range(0, 12, 2)]),
-                   _curriculum, _curriculum_read, "", False),
-    "shard": ("doc_id long", _IDS, _shard, _shard_read, "", False),
-    "dedup": (DOCS, None, _dedup, _dedup_read, "", True),
-    "lm": (DOCS, None, _lm, _lm_read, "", True),
+                   _curriculum, _curriculum_read, ("",)),
+    "shard": ("doc_id long", _IDS, _shard, _shard_read, ("",)),
+    "dedup": (DOCS, None, _dedup, _dedup_read, ("corpus", "fp", "bands")),
+    "lm": (DOCS, None, _lm, _lm_read, ("corpus", "fp", "bands")),
     "pq": (VECS, (_vecs(range(100, 106)), _vecs(range(200, 207))),
-           _pq, _pq_read, "", True),
+           _pq, _pq_read, ("codes",)),
     "substr": (DOCS, ([(10, "a b c x y"), (11, "n1 n2 n3 n4")],
                       [(20, "n1 n2 n3 z"), (21, "p q r w w2")]),
-               _substr, _substr_read, "", True),
-    "export": ("doc_id long", _IDS, _export, _export_read, "meta", True),
+               _substr, _substr_read, ("state",)),
+    "export": ("doc_id long", _IDS, _export, _export_read, ("meta",)),
     "pack": ("doc_id long, n_tok long",
              ([(i, i % 7 + 2) for i in range(1, 12, 2)],
               [(i, i % 5 + 3) for i in range(0, 12, 2)]),
-             _pack, _pack_read, "meta", True),
+             _pack, _pack_read, ("meta",)),
     "codebook": (VECS,
                  (_vecs(range(100, 106), 64), _vecs(range(200, 207), 64)),
-                 _codebook, _codebook_read, "", True),
+                 _codebook, _codebook_read, ("state",)),
 }
-BOOTSTRAPPED = [n for n, s in SITES.items() if s[5]]
-# the delta-ledger sites and their ledgers under the target, in the
-# order a batch (and the bootstrap) commits them
-LEDGERS = {"dedup": ("corpus", "fp", "bands"),
-           "lm": ("corpus", "fp", "bands"),
-           "pq": ("codes",), "codebook": ("state",)}
+# the sites with a bootstrap, and the ledgers it writes a base 0 to, in
+# commit order (the LM gate's frozen model `lm/` after the admission's)
+BOOT = {"cdc": ("",), "dedup": ("corpus", "fp", "bands"),
+        "lm": ("corpus", "fp", "bands", "lm"), "pq": ("codes",),
+        "substr": ("state",), "export": ("meta",), "pack": ("meta",),
+        "codebook": ("state",)}
+# the per-batch side ledgers: (subdirectory, lag) — the side entry of
+# the batch writing ledger sequence n is `b{n - lag}`
+SIDE = {"substr": ("spans", 1), "export": ("manifest", 0),
+        "pack": ("manifest", 1)}
 
 
 def _batches(name):
@@ -354,64 +352,52 @@ def _read(spark, name, root):
     return SITES[name][3](spark, os.path.join(root, "t"))
 
 
-def _vdir(name, root) -> str:
-    return os.path.join(root, "t", SITES[name][4])
-
-
-def _ledgers(name, root) -> list:
-    return [os.path.join(root, "t", sub) for sub in LEDGERS[name]]
+def _ledgers(name, root, subs=None) -> list:
+    return [os.path.join(root, "t", sub) for sub in subs or SITES[name][4]]
 
 
 def _listing(name, root) -> list:
-    """What a replay must leave untouched: the version directories of a
-    copy-on-write sink; every file under a ledger site's target (entry
-    part-files carry a per-write unique name, so a rewrite shows)."""
-    if name not in LEDGERS:
-        return sorted(os.listdir(_vdir(name, root)))
+    """What a replay must leave untouched: every file under the target
+    (entry part-files carry a per-write unique name, so a rewrite
+    shows)."""
     t = os.path.join(root, "t")
     return sorted(os.path.relpath(os.path.join(d, f), t)
                   for d, _, files in os.walk(t) for f in files)
 
 
 def _head(name, root) -> int:
-    """The newest committed version / ledger sequence."""
-    if name not in LEDGERS:
-        return versions.version_history(_vdir(name, root))[-1]
-    return max(s for led in _ledgers(name, root)
-               for s, _k in compaction.ledger_entries(led))
+    """The newest committed ledger sequence."""
+    return max(compaction.ledger_head(led) for led in _ledgers(name, root))
 
 
-def _version_tables(spark, name, root, n: int) -> dict:
-    """Rows of every parquet table inside version `v{n}`, or of every
-    ledger's entry at sequence `n` (the base for n = 0)."""
-    if name in LEDGERS:
-        kind = "b" if n == 0 else "d"
-        return {sub: _rows(spark.read.parquet(
-                    os.path.join(root, "t", sub, f"{kind}{n}")))
-                for sub in LEDGERS[name]}
-    base = os.path.join(_vdir(name, root), f"v{n}")
-    return {os.path.relpath(d, base): _rows(spark.read.parquet(d))
-            for d, _, files in os.walk(base) if "_SUCCESS" in files}
+def _base_tables(spark, name, root) -> dict:
+    """Rows of every bootstrap ledger's base 0."""
+    return {led: _rows(spark.read.parquet(os.path.join(led, "b0")))
+            for led in _ledgers(name, root, BOOT[name])}
 
 
 def _drop_batch(name, root, n: int) -> None:
-    """Remove version `v{n}`, or every ledger's delta `d{n}` together
-    with the manifest commit that adds it (the last one)."""
-    if name not in LEDGERS:
-        shutil.rmtree(os.path.join(_vdir(name, root), f"v{n}"))
-        return
+    """Remove every ledger's entry at sequence `n` together with the
+    manifest commit that adds it (the last one), and the batch's
+    side-ledger entry."""
     for led in _ledgers(name, root):
-        shutil.rmtree(os.path.join(led, f"d{n}"))
+        for kind in "bd":
+            if os.path.isdir(os.path.join(led, f"{kind}{n}")):
+                shutil.rmtree(os.path.join(led, f"{kind}{n}"))
         mdir = os.path.join(led, "_manifest")
         for f in os.listdir(mdir):
             with open(os.path.join(mdir, f)) as fh:
                 adds = json.load(fh).get("add", [])
-            if ["d", n] in adds:
+            if any(seq == n for _kind, seq in adds):
                 os.remove(os.path.join(mdir, f))
+    if name in SIDE:
+        sub, lag = SIDE[name]
+        shutil.rmtree(os.path.join(root, "t", sub, f"b{n - lag}"))
 
 
 def _reference(spark, name, factory):
-    """(root, final reads, reads as of v1) of an uninterrupted run."""
+    """(root, final reads, reads as of sequence 1) of an uninterrupted
+    run."""
     if name not in _REFS:
         root = str(factory.mktemp(f"ref_{name}"))
         _run(spark, name, factory, root)
@@ -424,34 +410,21 @@ def _reference(spark, name, factory):
     return _REFS[name]
 
 
-def _crash_commit_of(monkeypatch, name, n: int, skip: int = 0) -> None:
-    """Make the commit of version `v{n}` raise once — for a ledger site,
-    the `skip`-th manifest commit of an entry at sequence `n` (the bases
-    for n = 0, else the deltas)."""
+def _crash_commit_of(monkeypatch, n: int, skip: int = 0) -> None:
+    """Make the `skip`-th manifest commit of an entry at ledger sequence
+    `n` raise once."""
     fired = []
-    if name in LEDGERS:
-        real_append = compaction._append_commit
-        entry = ["b" if n == 0 else "d", n]
+    real_append = compaction._append_commit
 
-        def append(target_dir, payload):
-            if entry in payload.get("add", []):
-                fired.append(target_dir)
-                if len(fired) == skip + 1:
-                    raise OSError(f"injected crash before the commit of "
-                                  f"{target_dir}/{entry[0]}{n}")
-            return real_append(target_dir, payload)
+    def append(target_dir, payload):
+        if any(seq == n for _kind, seq in payload.get("add", [])):
+            fired.append(target_dir)
+            if len(fired) == skip + 1:
+                raise OSError(f"injected crash before the commit of "
+                              f"sequence {n} under {target_dir}")
+        return real_append(target_dir, payload)
 
-        monkeypatch.setattr(compaction, "_append_commit", append)
-        return
-    real = versions._commit
-
-    def commit(stage, target_dir, m):
-        if m == n and not fired:
-            fired.append(m)
-            raise OSError(f"injected crash before the commit of v{n}")
-        real(stage, target_dir, m)
-
-    monkeypatch.setattr(versions, "_commit", commit)
+    monkeypatch.setattr(compaction, "_append_commit", append)
 
 
 def _drop_commit(root, batch_id: int) -> None:
@@ -463,17 +436,12 @@ def _drop_commit(root, batch_id: int) -> None:
         os.remove(crc)
 
 
-def _pending(name, root, n: int) -> bool:
-    """Whether a crashed write of `v{n}` is on disk uncommitted: a staging
-    directory, or an entry directory at sequence `n` the manifest does
-    not list."""
-    if name not in LEDGERS:
-        return bool(glob.glob(
-            os.path.join(_vdir(name, root), f"_v{n}.stage-*")))
-    kind = "b" if n == 0 else "d"
+def _pending(name, root, n: int, subs=None) -> bool:
+    """Whether a crashed write of sequence `n` is on disk uncommitted:
+    an entry directory the manifest does not list."""
     return any(os.path.isdir(os.path.join(led, f"{kind}{n}"))
                and (n, kind) not in compaction.ledger_entries(led)
-               for led in _ledgers(name, root))
+               for led in _ledgers(name, root, subs) for kind in "bd")
 
 
 @pytest.mark.parametrize("name", SITES)
@@ -491,19 +459,25 @@ def test_replay_after_commit_is_noop(spark, tmp_path_factory, tmp_path,
     assert _read(spark, name, root) == final
 
 
-@pytest.mark.parametrize("name", SITES)
-def test_crash_before_commit_recomputes(spark, tmp_path_factory, tmp_path,
-                                        monkeypatch, name):
-    ref_root, final, at_v1 = _reference(spark, name, tmp_path_factory)
-    # batch 0 committed, batch 1 planned but not yet applied
-    root = str(tmp_path / "run")
+def _crash_batch_1(spark, name, factory, root, monkeypatch) -> None:
+    """Batch 0 committed, batch 1 re-run and crashed at its first
+    manifest commit."""
+    ref_root, _, _ = _reference(spark, name, factory)
     shutil.copytree(ref_root, root)
     _drop_batch(name, root, 2)
     _drop_commit(root, 1)
-    _crash_commit_of(monkeypatch, name, 2)
+    _crash_commit_of(monkeypatch, 2)
     with pytest.raises(Exception):
-        _run(spark, name, tmp_path_factory, root)
+        _run(spark, name, factory, root)
     monkeypatch.undo()
+
+
+@pytest.mark.parametrize("name", SITES)
+def test_crash_before_commit_recomputes(spark, tmp_path_factory, tmp_path,
+                                        monkeypatch, name):
+    _, final, at_v1 = _reference(spark, name, tmp_path_factory)
+    root = str(tmp_path / "run")
+    _crash_batch_1(spark, name, tmp_path_factory, root, monkeypatch)
 
     # the crashed batch left only an uncommitted write behind
     assert _pending(name, root, 2)
@@ -515,60 +489,91 @@ def test_crash_before_commit_recomputes(spark, tmp_path_factory, tmp_path,
     assert not _pending(name, root, 2)
 
 
-@pytest.mark.parametrize("name", BOOTSTRAPPED)
+@pytest.mark.parametrize("name", SIDE)
+def test_crash_at_commit_hides_side_ledger(spark, tmp_path_factory,
+                                           tmp_path, monkeypatch, name):
+    """A batch writes its side-ledger entry before its ledger commit; a
+    crash at the commit leaves the entry on disk, and the side reader
+    still returns only the committed batches' entries."""
+    root = str(tmp_path / "run")
+    _crash_batch_1(spark, name, tmp_path_factory, root, monkeypatch)
+    sub, lag = SIDE[name]
+    side = os.path.join(root, "t", sub)
+    assert os.path.isdir(os.path.join(side, f"b{2 - lag}"))
+    want = _rows(spark.read.parquet(
+        *[os.path.join(side, f"b{i}") for i in range(2 - lag)]))
+    assert _read(spark, name, root)[0] == want
+
+
+@pytest.mark.parametrize("name", BOOT)
 def test_bootstrap_crash_redo(spark, tmp_path_factory, tmp_path,
                               monkeypatch, name):
     ref_root, _, _ = _reference(spark, name, tmp_path_factory)
-    want = _version_tables(spark, name, ref_root, 0)
-    # a copy-on-write sink commits v0 once; a ledger maintainer commits
-    # one base per ledger, and a crash at any of them must be redone
-    for k in range(len(LEDGERS.get(name, ("v0",)))):
+    want = list(_base_tables(spark, name, ref_root).values())
+    # one base 0 per bootstrap ledger, and a crash at any of them must
+    # be redone
+    for k in range(len(BOOT[name])):
         root = str(tmp_path / f"run{k}")
-        _crash_commit_of(monkeypatch, name, 0, skip=k)
+        _crash_commit_of(monkeypatch, 0, skip=k)
         with pytest.raises(OSError, match="injected"):
             _run(spark, name, tmp_path_factory, root, n_batches=0)
         monkeypatch.undo()
 
-        assert _pending(name, root, 0)
-        if name in LEDGERS:  # the bases before the crash are committed
-            assert [bool(compaction.ledger_entries(led))
-                    for led in _ledgers(name, root)] == \
-                [i < k for i in range(len(LEDGERS[name]))]
-        else:
-            assert versions.version_history(_vdir(name, root)) == []
+        assert _pending(name, root, 0, BOOT[name])
+        # the bases before the crash are committed
+        assert [compaction.ledger_head(led) for led in
+                _ledgers(name, root, BOOT[name])] == \
+            [0 if i < k else -1 for i in range(len(BOOT[name]))]
 
-        # the restart redoes the bootstrap to the uninterrupted run's v0
+        # the restart redoes the bootstrap to the uninterrupted run's bases
         _run(spark, name, tmp_path_factory, root, n_batches=0)
-        assert _version_tables(spark, name, root, 0) == want
+        assert list(_base_tables(spark, name, root).values()) == want
         assert _head(name, root) == 0
-        assert not _pending(name, root, 0)
+        assert not _pending(name, root, 0, BOOT[name])
 
 
-def test_versioned_step_prev_rules(tmp_path):
-    """Batch 0 without a bootstrap gets prev=None; a later batch whose
-    previous version is missing raises instead of reading empty state;
-    an existing next version makes the step a no-op."""
-    target = str(tmp_path)
-    seen = []
+def test_ledger_step_prev_rules(spark, tmp_path):
+    """Batch 0 runs into an empty ledger; a batch whose sequence every
+    ledger holds runs nothing; a later batch whose previous sequence is
+    missing raises instead of reading empty state; a batch that one of
+    its ledgers already holds runs, and its writes add only the missing
+    entry. A bootstrap runs only while a ledger is empty, and a base 0
+    is written only into an empty ledger."""
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    runs = []
 
-    def step(prev, out):
-        seen.append(prev)
-        os.makedirs(out)
+    def step(batch_id, dirs):
+        def run():
+            runs.append(batch_id)
+            for d in dirs:
+                if compaction.ledger_head(d) <= batch_id:
+                    compaction._append_commit(d, {"add": [["d", batch_id + 1]]})
+        return run
 
-    versions.versioned_step(target, 0, step)
-    assert seen == [None] and versions.version_history(target) == [1]
-    versions.versioned_step(target, 0, step)  # v1 landed: no-op
-    assert seen == [None]
-    with pytest.raises(FileNotFoundError, match="v2"):
-        versions.versioned_step(target, 2, step)
-    versions.versioned_step(target, 1, step)
-    assert seen == [None, os.path.join(target, "v1")]
-    assert sorted(os.listdir(target)) == ["v1", "v2"]
+    compaction.ledger_step([a, b], 0, step(0, [a, b]))
+    assert runs == [0]
+    compaction.ledger_step([a, b], 0, step(0, [a, b]))  # landed: no-op
+    assert runs == [0]
+    with pytest.raises(FileNotFoundError, match="sequence 2"):
+        compaction.ledger_step([a, b], 2, step(2, [a, b]))
+    compaction._append_commit(a, {"add": [["d", 2]]})  # a holds batch 1
+    compaction.ledger_step([a, b], 1, step(1, [b]))
+    assert runs == [0, 1]
+    assert [compaction.ledger_head(d) for d in (a, b)] == [2, 2]
+
+    c = str(tmp_path / "c")
+    compaction.ledger_step([c], -1, step(-1, [c]))
+    compaction.ledger_step([c], -1, step(-1, [c]))
+    assert runs == [0, 1, -1]
+    one = spark.createDataFrame([(1,)], "k long")
+    compaction.write_base(one, a, 0)  # a holds d1, d2: no bootstrap
+    assert compaction.ledger_entries(a) == [(1, "d"), (2, "d")]
+    assert not os.path.exists(os.path.join(a, "b0"))
 
 
 def test_read_batch_ledger_lists_entries(spark, tmp_path, monkeypatch):
     """A 12-entry ledger (b0..b11, so a lexicographic and a numeric order
-    differ) reads every row, local and through a `file://` URI, and Spark
+    differ) reads every row, or only the entries up to `last`, and Spark
     is never handed a glob: a `b*` path makes its streaming-sink metadata
     probe log a FileNotFoundException on every read. A missing or empty
     ledger reads as an empty frame of the given schema."""
@@ -587,11 +592,13 @@ def test_read_batch_ledger_lists_entries(spark, tmp_path, monkeypatch):
         return real(self, *paths, **kw)
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    want = [(n, n * 10) for n in range(12)]
-    for d in (ledger, "file://" + ledger):
-        got = versions.read_batch_ledger(spark, d, "b long, v long")
-        assert sorted(map(tuple, got.collect())) == want
-    assert len(given) == 24 and not any("*" in p for p in given)
-    for d in (str(tmp_path / "none"), str(tmp_path)):
-        empty = versions.read_batch_ledger(spark, d, "b long, v long")
+    for last, n in ((None, 12), (4, 5)):
+        got = versions.read_batch_ledger(spark, ledger, "b long, v long",
+                                         last)
+        assert sorted(map(tuple, got.collect())) == \
+            [(i, i * 10) for i in range(n)]
+    assert len(given) == 17 and not any("*" in p for p in given)
+    for d, last in ((str(tmp_path / "none"), None), (str(tmp_path), None),
+                    (ledger, -1)):
+        empty = versions.read_batch_ledger(spark, d, "b long, v long", last)
         assert empty.collect() == [] and empty.columns == ["b", "v"]

@@ -5,7 +5,6 @@ output file is empty."""
 
 import csv
 import io
-import os
 
 from wde_spark.sources.tabular import read_tsv, write_tsv_compat
 

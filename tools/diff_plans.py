@@ -25,6 +25,16 @@ counters are blanked:
   depends on how many lambdas the process built before. They are
   renumbered in order of first appearance in each plan, which keeps
   which variable is which.
+- the call site of an RDD a plan scans (`... at localCheckpoint at
+  <site>`): the JVM prints `NativeMethodAccessorImpl.java:0` in one
+  process and `<unknown>:0` in another for the same call;
+- the `== Final Plan ==` subtree AQE prints under a frame that was
+  persisted and materialized while the DataFrame was built: its stages,
+  statistics and join sides depend on what else the process ran first.
+  The `== Initial Plan ==` next to it is kept. The detail blocks only
+  the dropped subtrees refer to go with them, and the nodes left are
+  renumbered in order of first appearance, so a final plan of another
+  size does not shift every later node number.
 
 Prints `IDENTICAL <query>` or `DIFF <query>` per query (and `MISSING` when
 only one side has it), then a unified diff of each differing plan and a
@@ -42,6 +52,47 @@ _IDS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+|(?<=codegen id : )\d+")
 _STAGE = re.compile(r"^\(\d+\) \w*QueryStage\b")
 _LAMBDA = re.compile(r"\b([xyz])_(\d+)\b")
 _TMPDIR = re.compile(r"(?<=file:)[^\s,\]]*(?=/wde_)")
+_CALLSITE = re.compile(r"(\bat \w+ at )\S+:\d+")
+_FINAL = re.compile(r"^(\s*)\+- == Final Plan ==$")
+_NODE = re.compile(r"(?<= \()\d+(?=\)(?:,|$))")
+_DETAIL = re.compile(r"^\((\d+)\) ")
+
+
+def _drop_final_plans(lines: list[str]) -> list[str]:
+    kept, skip = [], None
+    for ln in lines:
+        if skip is not None:
+            if ln != skip + "+- == Initial Plan ==":
+                continue
+            skip = None
+        m = _FINAL.match(ln)
+        if m:
+            skip = m.group(1)
+            continue
+        kept.append(ln)
+    ids: dict[str, str] = {}
+    in_detail = False
+    for ln in kept:
+        in_detail = bool(_DETAIL.match(ln)) or (in_detail and ln != "")
+        if not in_detail:
+            for n in _NODE.findall(ln):
+                ids.setdefault(n, str(len(ids) + 1))
+    out, drop, in_detail = [], False, False
+    for ln in kept:
+        m = _DETAIL.match(ln)
+        if m:
+            drop = m.group(1) not in ids
+            if not drop:
+                ln = f"({ids[m.group(1)]}) " + ln[m.end():]
+        elif ln == "" and drop:  # the blank line closing a dropped block
+            drop = False
+            continue
+        elif not in_detail:
+            ln = _NODE.sub(lambda n: ids[n.group(0)], ln)
+        in_detail = bool(m) or (in_detail and ln != "")
+        if not drop:
+            out.append(ln)
+    return out
 
 
 def normalize(text: str) -> list[str]:
@@ -50,6 +101,8 @@ def normalize(text: str) -> list[str]:
         lines = lines[1:]
     if lines and lines[0].startswith("(DataFrame construction"):
         lines = lines[1:]
+    if any(_FINAL.match(ln) for ln in lines):
+        lines = _drop_final_plans(lines)
     seen: dict[str, str] = {}
 
     def lam(m: re.Match) -> str:
@@ -62,6 +115,7 @@ def normalize(text: str) -> list[str]:
         stage = bool(_STAGE.match(ln)) or (stage and not ln.startswith("Arguments"))
         if ln.startswith("Location: "):
             ln = _TMPDIR.sub("$TMPDIR", ln)
+        ln = _CALLSITE.sub(r"\1<site>", ln)
         out.append(_LAMBDA.sub(lam, _IDS.sub("#", ln)))
     return out
 

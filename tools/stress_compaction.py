@@ -22,7 +22,6 @@ Prints one JSON line (pipe to measurements/).
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil

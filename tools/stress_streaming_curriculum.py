@@ -39,6 +39,18 @@ from wde_spark.operators.sampling import curriculum_order
 from wde_spark.streaming.curriculum import (apply_curriculum_batch,
                                             read_curriculum)
 
+
+def _drop_entry(ledger: str, seq: int) -> None:
+    """Undo delta `d{seq}`: remove the manifest commit that adds it and
+    its directory (nothing when it was never written)."""
+    mdir = os.path.join(ledger, "_manifest")
+    for name in os.listdir(mdir) if os.path.isdir(mdir) else ():
+        with open(os.path.join(mdir, name)) as fh:
+            if ["d", seq] in json.load(fh).get("add", []):
+                os.remove(os.path.join(mdir, name))
+    shutil.rmtree(os.path.join(ledger, f"d{seq}"), ignore_errors=True)
+
+
 def main() -> None:
     batch_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 4
@@ -57,12 +69,12 @@ def main() -> None:
     runs = []
     for b in range(n_batches):
         # min over 2 reps per side: one-off GC/AQE jitter at these sizes
-        # is larger than the signal. A step whose version landed is a
-        # no-op, so each rep first drops v{b+1} to time a real step.
+        # is larger than the signal. A step whose delta landed is a
+        # no-op, so each rep first drops the ledger entry d{b+1} to time
+        # a real step.
         sec_maint, sec_rebuild, n_sched, n_rebuild = 1e9, 1e9, -1, -2
         for _ in range(2):
-            shutil.rmtree(os.path.join(target, f"v{b + 1}"),
-                          ignore_errors=True)
+            _drop_entry(target, b + 1)
             t0 = time.time()
             batch = (spark.read
                      .parquet(os.path.join(feed, f"b{b}.parquet"))

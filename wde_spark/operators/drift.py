@@ -3,12 +3,11 @@ snapshots, the dashboard number a continuously-admitted 100-TB corpus
 needs next to its quality metrics: "did yesterday's admissions shift what
 the corpus is made of?".
 
-Pairs with the version ledger (`streaming/versions.py`): read two COW
-versions, compare their term distributions. Everything is relational and
-deterministic — term counts are one hash agg each, the divergence is one
-full-outer join + one scalar aggregate — so a DuckDB oracle can
-hash-check the number end-to-end (intended next-round registry entry;
-tests-first now so registration adds no rotation debt).
+Pairs with the corpus ledger (`streaming/dedup_admission.py`'s drift
+maintainer compares the merged corpus `as_of=b` with `as_of=b+1`).
+Everything is relational and deterministic — term counts are one hash agg
+each, the divergence is one full-outer join + one scalar aggregate — so a
+DuckDB oracle can hash-check the number end-to-end.
 
 Measures reported (one row):
 - `jsd`      — Jensen-Shannon divergence, natural log (0 = identical,
@@ -95,44 +94,3 @@ def corpus_divergence(dist_a: DataFrame, dist_b: DataFrame) -> DataFrame:
               .otherwise(0)).alias("n_terms_common"),
     )
 
-
-def version_drift(spark, target_dir: str, n_a: int, n_b: int) -> DataFrame:
-    """Drift between two ledger versions of a maintained corpus — the
-    composition a quality dashboard queries after each admission batch:
-    `version_drift(spark, dir, n-1, n)`."""
-    from ..streaming.versions import read_version
-
-    return corpus_divergence(
-        term_distribution(read_version(spark, target_dir, n_a, "corpus")),
-        term_distribution(read_version(spark, target_dir, n_b, "corpus")),
-    )
-
-
-def drift_history(spark, target_dir: str) -> DataFrame:
-    """One row per version TRANSITION of a maintained corpus ledger:
-    (from_version, to_version, jsd, l1, n_terms_a, n_terms_b,
-    n_terms_common) for v0→v1, v1→v2, … — the full drift trajectory a
-    quality dashboard plots. Computed from the immutable COW versions, so
-    it is replayable by construction and needs no streaming machinery:
-    rerunning after more admissions just appends transitions. Each
-    transition is two counting scans + one vocabulary-sized join; the
-    number of versions is small by compaction policy
-    (`versions.compact_versions`), so the loop is a bounded driver-side
-    composition, not a per-row pattern."""
-    from functools import reduce
-
-    from ..streaming.versions import version_history
-
-    hist = version_history(target_dir, spark)
-    if len(hist) < 2:
-        return spark.createDataFrame(
-            [], "from_version long, to_version long, jsd double, l1 double, "
-                "n_terms_a long, n_terms_b long, n_terms_common long")
-    rows = []
-    for a, b in zip(hist, hist[1:]):
-        rows.append(
-            version_drift(spark, target_dir, a, b)
-            .select(F.lit(a).cast("long").alias("from_version"),
-                    F.lit(b).cast("long").alias("to_version"),
-                    "jsd", "l1", "n_terms_a", "n_terms_b", "n_terms_common"))
-    return reduce(lambda x, y: x.unionByName(y), rows)

@@ -31,8 +31,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from .similarity import hyperplanes
 

@@ -2243,7 +2243,7 @@ def _streaming_bloom_bits_dir(spark: SparkSession, sf_dir: str) -> str:
     Bloom bit set: the doc_id%17==0 benchmark slice arrives as two
     file-source micro-batches (split by doc_id%34) through
     `streaming/bloom_admission.streaming_bloom_maintain`, each merging
-    its bits into the stored set as COW versions."""
+    its bits into the stored set as one ledger base per batch."""
     from .streaming.bloom_admission import streaming_bloom_maintain
 
     def build(stage: str) -> None:
@@ -2255,7 +2255,7 @@ def _streaming_bloom_bits_dir(spark: SparkSession, sf_dir: str) -> str:
             stream, os.path.join(stage, "bits"), os.path.join(stage, "ckpt"))
 
     return os.path.join(
-        _snapshot_dir(sf_dir, "documents", "wde_bloom_adm", build), "bits")
+        _snapshot_dir(sf_dir, "documents", "wde_bloom_adm2", build), "bits")
 
 
 @query(
@@ -5236,7 +5236,7 @@ def _streaming_manifest_dir(spark: SparkSession, sf_dir: str) -> str:
             _MANIFEST_PER)
 
     return os.path.join(
-        _snapshot_dir(sf_dir, "documents", "wde_exp_adm", build), "exp")
+        _snapshot_dir(sf_dir, "documents", "wde_exp_adm2", build), "exp")
 
 
 @query(
@@ -6143,7 +6143,7 @@ def _streaming_ffd_dir(spark: SparkSession, sf_dir: str) -> str:
             seq_len=_PACK_SEQ_LEN, n_buckets=8)
 
     return os.path.join(
-        _snapshot_dir(sf_dir, "documents", "wde_ffd_adm", build), "pack")
+        _snapshot_dir(sf_dir, "documents", "wde_ffd_adm2", build), "pack")
 
 
 @query(
@@ -6222,7 +6222,7 @@ def streaming_ffd_manifest_documents(spark: SparkSession,
     (`streaming/pack_admission.py`): the documents table arrives as three
     micro-batches; each runs bucket-local first-fit-decreasing over its
     OWN docs and SEALS its bins — bin ids continue past the per-bucket
-    `bins_so_far` ledger (COW metadata versions), and bins already
+    `bins_so_far` ledger (one metadata base per batch), and bins already
     committed are never rewritten, the same append-only discipline as
     `streaming_export_manifest`'s shards. The oracle replays the fold
     EXACTLY: the recursive-CTE FFD per (bucket, batch), then a window
@@ -6688,7 +6688,7 @@ def _streaming_budget_dir(spark: SparkSession, sf_dir: str) -> str:
             _TOKEN_BUDGET_DEFAULT)
 
     return os.path.join(
-        _snapshot_dir(sf_dir, "documents", "wde_budget", build), "ledger")
+        _snapshot_dir(sf_dir, "documents", "wde_budget2", build), "ledger")
 
 
 _BUDGET_CASE_SQL = ("CASE source "
@@ -6744,7 +6744,7 @@ def streaming_token_budget_documents(spark: SparkSession,
     (odd doc_ids then even), each batch's docs are hash-ordered within
     their source and admitted while the source's carried spent plus the
     running sum fits the budget; rejected docs never consume budget.
-    The COW ledger (id, source, n_tok, cum_tokens, arrived_batch) is
+    The delta ledger (id, source, n_tok, cum_tokens, arrived_batch) is
     hash-checked against the oracle's unrolled recursion (batch-0
     prefix -> per-source spent -> batch-1 prefix offset by it). At
     100 TB the per-batch work is one batch-sized window plus a
@@ -6825,7 +6825,7 @@ def _streaming_shards_dir(spark: SparkSession, sf_dir: str) -> str:
             stream, os.path.join(stage, "route"), os.path.join(stage, "ckpt"))
 
     return os.path.join(
-        _snapshot_dir(sf_dir, "documents", "wde_shards", build), "route")
+        _snapshot_dir(sf_dir, "documents", "wde_shards2", build), "route")
 
 
 @query(
@@ -7069,7 +7069,7 @@ def _streaming_curriculum_dir(spark: SparkSession, sf_dir: str) -> str:
 
     # "2": the ledger schema gained n_tok (maintained pacing)
     return os.path.join(
-        _snapshot_dir(sf_dir, "documents", "wde_curric2", build), "ledger")
+        _snapshot_dir(sf_dir, "documents", "wde_curric3", build), "ledger")
 
 
 @query(
@@ -7101,7 +7101,7 @@ def streaming_curriculum_documents(spark: SparkSession,
     """STREAMING-MAINTAINED curriculum (`streaming/curriculum.py`) —
     the maintained form of `curriculum_order_documents`: documents
     arrive as micro-batches (odd doc_ids then even), the 64-byte length
-    bucket is computed ON the stream at arrival, and the COW ledger
+    bucket is computed ON the stream at arrival, and the delta ledger
     (doc_id, bucket, n_tok, arrived_batch) is the only state — document
     bytes are read exactly once, ever. The materialized schedule after
     the final batch is hash-checked against the same NTILE + ROW_NUMBER
@@ -7153,7 +7153,7 @@ def streaming_curriculum_documents(spark: SparkSession,
 def streaming_curriculum_pacing_documents(spark: SparkSession,
                                           sf_dir: str) -> DataFrame:
     """MAINTAINED curriculum pacing (`streaming/curriculum.read_paced`)
-    — the last ordering operator gains its maintained form: the COW
+    — the last ordering operator gains its maintained form: the delta
     ledger carries arrival-time buckets AND token counts (text read
     exactly once, at ingest), so a pacing refresh after every batch is
     pure ledger arithmetic — the same two-phase staging + per-stage

@@ -10,10 +10,10 @@ The Bloom bit set is a mergeable sketch in the same sense as the HLL
 registers (`streaming/sketch_maintenance.py`): the filter of a union is
 the bitwise OR of the filters, and in the relational encoding (one row per
 SET bit) that OR is `UNION ... DISTINCT` — associative, commutative, and
-IDEMPOTENT. Idempotence alone does not make the sink replay-safe: a
-replay that re-read the newest version would overwrite the directory it
-reads. Replay safety comes from `versions.versioned_step`, which makes a
-replayed batch whose version landed a no-op.
+IDEMPOTENT. The bit table is model-sized, so it is base per batch on its
+ledger (`compaction.py`): batch b ORs its bits onto base `b{b}` and writes
+base `b{b+1}`, and `compaction.ledger_step` makes a replayed batch whose
+base landed run nothing.
 
 Equivalence contract (pinned in `tests/test_streaming_bloom.py`): the
 maintained set after N micro-batches is row-identical to the one-shot set
@@ -40,7 +40,8 @@ from pyspark.sql import functions as F
 
 from ..operators.curation import bloom_bit
 from ..operators.dedup import distinct_shingle_table
-from .versions import latest_version_dir, run_foreach_batch, versioned_step
+from .compaction import ledger_step, read_merged, write_base
+from .versions import run_foreach_batch
 
 M_BITS_DEFAULT = 1 << 20
 N_SEEDS_DEFAULT = 4
@@ -66,26 +67,27 @@ def streaming_bloom_maintain(
     m_bits: int = M_BITS_DEFAULT,
 ) -> None:
     """Run the benchmark stream to completion (availableNow — static test
-    input), maintaining the Bloom bit-set table under `target_dir` as COW
-    versions. Merge = UNION DISTINCT of bit rows (the relational bitwise
-    OR)."""
+    input), maintaining the Bloom bit-set table under `target_dir` as one
+    ledger base per batch. Merge = UNION DISTINCT of bit rows (the
+    relational bitwise OR)."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        def step(prev, out: str) -> None:
+        def step() -> None:
             bits = batch_bloom_bits(batch, m_bits)
-            if prev is not None:
-                bits = batch.sparkSession.read.parquet(prev) \
+            if batch_id:
+                bits = read_merged(batch.sparkSession, target_dir, ["bit"],
+                                   as_of=batch_id) \
                     .unionByName(bits).distinct()
-            bits.write.mode("overwrite").parquet(out)
+            write_base(bits, target_dir, batch_id + 1)
 
-        versioned_step(target_dir, batch_id, step)
+        ledger_step([target_dir], batch_id, step)
 
     run_foreach_batch(bench_stream, _apply, checkpoint_dir)
 
 
 def read_bloom_bits(spark, target_dir: str) -> DataFrame:
-    """The maintained bit set's latest version — one `bit` column."""
-    return spark.read.parquet(latest_version_dir(target_dir))
+    """The maintained bit set's latest base — one `bit` column."""
+    return read_merged(spark, target_dir, ["bit"])
 
 
 def bloom_admission(docs: DataFrame, bits: DataFrame) -> DataFrame:

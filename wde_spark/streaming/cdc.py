@@ -7,27 +7,36 @@ with the broadcast MERGE (`operators/relational.py::merge_changeset`)
 through `foreachBatch` — Spark's idiom for sinks with merge semantics the
 built-in sinks don't cover.
 
-Snapshot layout is copy-on-write: batch b merges onto version `v{b}` and
-commits `v{b+1}` through `versions.versioned_step`, never mutating a
-version in place; a replayed batch whose version already landed is a
-no-op (see there for the commit rule).
+The snapshot is a delta ledger (`compaction.py`): the initial snapshot is
+base `b0`, and batch b writes delta `d{b+1}` — `merge_changeset` over the
+previous rows of the batch's keys only, plus a `'D'` tombstone per deleted
+key — so a batch writes what it changed, never the table. A replayed batch
+whose delta landed runs nothing (`compaction.ledger_step`).
 
-At 100 TB the merge inside each batch is the broadcast left join + union —
-the snapshot is scanned once per batch and never shuffled; compaction of
-old versions is a directory delete.
+At 100 TB the merge inside each batch is a semi-join of the snapshot
+against the batch keys plus the broadcast left join — the snapshot is
+never shuffled and never rewritten; `compaction.compact` folds the
+deltas back into one base.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..operators.relational import merge_changeset
-from .versions import (bootstrap, latest_version_dir, run_foreach_batch,
-                       versioned_step)
+from .compaction import ledger_step, read_merged, write_base, write_delta
+from .versions import run_foreach_batch
+
+_KEY_FILE = "_cdc_key"
 
 
 def read_snapshot(spark, target_dir: str) -> DataFrame:
-    return spark.read.parquet(latest_version_dir(target_dir))
+    with open(os.path.join(target_dir, _KEY_FILE)) as fh:
+        key = fh.read()
+    return read_merged(spark, target_dir, [key])
 
 
 def streaming_cdc_apply(
@@ -38,17 +47,32 @@ def streaming_cdc_apply(
     checkpoint_dir: str,
 ) -> None:
     """Run the change stream to completion (static test input), applying
-    each micro-batch onto the previous snapshot version. `changes_stream`
-    carries `key`, `op` ('I'|'U'|'D') and the snapshot's non-key columns."""
-    bootstrap(target_dir, init_snapshot.write.mode("overwrite").parquet)
+    each micro-batch onto the snapshot as of the previous batch.
+    `changes_stream` carries `key`, `op` ('I'|'U'|'D') and the snapshot's
+    non-key columns."""
+
+    def bootstrap() -> None:
+        os.makedirs(target_dir, exist_ok=True)
+        with open(os.path.join(target_dir, _KEY_FILE), "w") as fh:
+            fh.write(key)
+        write_base(init_snapshot, target_dir, 0)
+
+    ledger_step([target_dir], -1, bootstrap)
     cols = init_snapshot.columns
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        def step(prev: str, out: str) -> None:
-            cur = batch.sparkSession.read.parquet(prev)
-            merge_changeset(cur, batch, key).select(*cols) \
-                .write.mode("overwrite").parquet(out)
+        def step() -> None:
+            cur = read_merged(batch.sparkSession, target_dir, [key],
+                              as_of=batch_id)
+            touched = cur.join(batch.select(key), key, "left_semi")
+            tombs = batch.filter(F.col("op") == "D").select(
+                key, *[F.lit(None).cast(cur.schema[c].dataType).alias(c)
+                       for c in cols if c != key],
+                F.lit("D").alias("_op"))
+            delta = merge_changeset(touched, batch, key).select(*cols) \
+                .withColumn("_op", F.lit("U")).unionByName(tombs)
+            write_delta(delta, target_dir, batch_id + 1, key_cols=[key])
 
-        versioned_step(target_dir, batch_id, step)
+        ledger_step([target_dir], batch_id, step)
 
     run_foreach_batch(changes_stream, _apply, checkpoint_dir)

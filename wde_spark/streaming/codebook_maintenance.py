@@ -46,8 +46,8 @@ from pyspark.sql import functions as F
 from ..operators.similarity import (_as_double, _normalize,
                                     _probe_cells_udf,
                                     train_ivf_centroids)
-from .compaction import (landed, ledger_entries, maybe_compact,
-                         read_merged, write_base, write_delta)
+from .compaction import (ledger_step, maybe_compact, read_merged,
+                         write_base, write_delta)
 from .versions import run_foreach_batch
 
 DIM = 64
@@ -118,9 +118,8 @@ def bootstrap_codebook(init_emb: DataFrame, target_dir: str) -> None:
     alone; a crash before the commit leaves no entry, and the next start
     redoes the bootstrap."""
     ledger = os.path.join(target_dir, "state")
-    if ledger_entries(ledger):
-        return
-    write_base(_state0(init_emb).coalesce(1), ledger, 0)
+    ledger_step([ledger], -1, lambda: write_base(
+        _state0(init_emb).coalesce(1), ledger, 0))
 
 
 def streaming_codebook_maintain(emb_stream: DataFrame, target_dir: str,
@@ -135,8 +134,9 @@ def streaming_codebook_maintain(emb_stream: DataFrame, target_dir: str,
     Assignment uses the centroids current at the batch's arrival; the
     update is pure (n, s) addition.
 
-    Replay contract: batch `b` reads the ledger `as_of=b` (its own
-    delta at b+1 excluded); a batch whose delta has landed runs nothing.
+    Replay contract (`compaction.ledger_step`): batch `b` reads the
+    ledger `as_of=b` (its own delta at b+1 excluded); a batch whose
+    delta has landed runs nothing.
 
     `auto_compact` (an entry budget) runs `maybe_compact` after each
     append — the in-stream OPTIMIZE, so read amplification stays
@@ -149,30 +149,32 @@ def streaming_codebook_maintain(emb_stream: DataFrame, target_dir: str,
     ledger = os.path.join(target_dir, "state")
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        if landed(ledger, batch_id + 1):
-            return
-        sp = batch.sparkSession
-        cur = read_merged(sp, ledger, ["cell", "d"], as_of=batch_id)
-        cents = _centroids_from_state(cur)
-        if not cents:  # empty bootstrap: nothing to assign against;
-            # write an empty delta so the ledger records the batch
-            write_delta(sp.createDataFrame(
-                [], "cell int, d int, n long, s double, boot double"
-            ).coalesce(1), ledger, batch_id + 1)
-            return
-        sums = _batch_cell_sums(batch, cents)
-        delta = (
-            cur.join(sums, ["cell", "d"], "inner")  # touched rows only
-            .select("cell", "d",
-                    (F.col("n") + F.col("n_add")).cast("long").alias("n"),
-                    (F.col("s") + F.col("s_add")).alias("s"),
-                    "boot")
-        )
-        write_delta(delta.coalesce(1), ledger, batch_id + 1,
-                    key_cols=["cell", "d"])
-        if auto_compact is not None:
-            maybe_compact(sp, ledger, ["cell", "d"],
-                          max_entries=auto_compact)
+        def step() -> None:
+            sp = batch.sparkSession
+            cur = read_merged(sp, ledger, ["cell", "d"], as_of=batch_id)
+            cents = _centroids_from_state(cur)
+            if not cents:  # empty bootstrap: nothing to assign against;
+                # write an empty delta so the ledger records the batch
+                write_delta(sp.createDataFrame(
+                    [], "cell int, d int, n long, s double, boot double"
+                ).coalesce(1), ledger, batch_id + 1)
+                return
+            sums = _batch_cell_sums(batch, cents)
+            delta = (
+                cur.join(sums, ["cell", "d"], "inner")  # touched rows only
+                .select("cell", "d",
+                        (F.col("n") + F.col("n_add")).cast("long")
+                        .alias("n"),
+                        (F.col("s") + F.col("s_add")).alias("s"),
+                        "boot")
+            )
+            write_delta(delta.coalesce(1), ledger, batch_id + 1,
+                        key_cols=["cell", "d"])
+            if auto_compact is not None:
+                maybe_compact(sp, ledger, ["cell", "d"],
+                              max_entries=auto_compact)
+
+        ledger_step([ledger], batch_id, step)
 
     run_foreach_batch(emb_stream, _apply, checkpoint_dir)
 

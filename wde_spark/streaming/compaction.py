@@ -1,20 +1,19 @@
 """Delta-ledger maintained tables: merge-on-read + compaction — the
-table-format idiom (Delta/Iceberg MOR), and the one commit path of the
-CORPUS-sized maintainers: the dedup admission (`dedup_admission.py`)
-with the LM/DSIR/NB gates in front of it, the PQ index
-(`embedding_admission.py`) and the k-means codebook
-(`codebook_maintenance.py`).
+table-format idiom (Delta/Iceberg MOR), and the one commit path of every
+streaming sink in `streaming/`.
 
-The copy-on-write sinks of `versions.py` write a SELF-CONTAINED `v{n}`
-snapshot per micro-batch: reads touch one version, compaction is a
-directory delete. That is the right trade for MODEL-sized state (a Bloom
-bitmap, a sketch). For corpus-sized maintained tables — PQ codes over
-billions of vectors, per-doc admission ledgers — a full snapshot per
-batch rewrites the world every batch: O(corpus) write amplification for
-an O(batch) change. The delta ledger flips it:
+A sink picks, per table, base per batch or delta per batch on one
+ledger. Model-sized state (a Bloom bitmap, a sketch table, substring
+window counts, export/pack running totals) is rewritten whole by its
+merge algebra, so each batch writes one full base `b{n+1}` with
+`write_base`: the copy-on-write trade, committed by the manifest, and a
+read touches one base. A corpus-sized table (the dedup admission
+ledgers, PQ codes, the CDC snapshot, the curriculum, budget and shard
+ledgers) would rewrite the world every batch that way, O(table) write
+amplification for an O(batch) change, so the delta ledger flips it:
 
-  * each batch appends `d{n}` — ONLY the rows it changed (upserts, plus
-    tombstones for deletes): O(batch) write;
+  * each batch appends `d{n+1}` — ONLY the rows it changed (upserts,
+    plus tombstones for deletes): O(batch) write;
   * reads union the latest base `b{k}` with every delta `d{n}`, n > k,
     and keep the row from the HIGHEST ledger sequence per key
     (last-writer-wins merge-on-read);
@@ -37,12 +36,18 @@ until its first commit. Writers never mutate an existing entry: writing
 an entry that is already committed runs nothing, so a replayed batch
 never rewrites what a reader may have planned over.
 
-REPLAY CONTRACT (the maintainers'): batch `b` reads each of its ledgers
-`as_of=b` and writes sequence `b+1` with deterministic content. A batch
-that every one of its ledgers already holds (`landed`) has landed and
-its replay runs nothing — no gate ledger, no side row, no write; a batch
-killed between its ledgers' commits recomputes from the same `as_of=b`
-reads and writes only the entries that are missing.
+REPLAY CONTRACT (every maintainer's, through `ledger_step`): batch `b`
+reads each of its ledgers `as_of=b` and writes sequence `b+1` with
+deterministic content; the bootstrap writes each ledger's base 0, and a
+base 0 is written only into an empty ledger. A batch that every one of
+its ledgers already holds has landed and its replay runs nothing — no
+gate ledger, no side row, no write; a batch killed between its ledgers'
+commits recomputes from the same `as_of=b` reads and writes only the
+entries that are missing; and a batch `b > 0` whose ledgers do not hold
+`b` raises, so lost state is never read as empty. The per-batch side
+ledgers a step writes next to its ledger (`spans/b{n}`, `manifest/b{n}`)
+are written before the ledger's commit, and their readers list only the
+batches that commit covers.
 
 Tombstones: a delta row with `_op = 'D'` deletes its key; `_op = 'U'`
 upserts. `read_merged` drops tombstoned keys after the LWW pick;
@@ -121,8 +126,9 @@ def _list_commits(target_dir: str) -> list:
 
 def _append_commit(target_dir: str, payload: dict) -> int:
     """Publish the next commit file atomically (tmp write + single-FILE
-    rename — atomic on POSIX, unlike the directory renames the manifest
-    replaces). Single-writer per ledger by the maintainer contract."""
+    rename, atomic on POSIX): the one commit every streaming table in
+    this package goes through. Single-writer per ledger by the
+    maintainer contract."""
     mdir = _manifest_path(target_dir)
     os.makedirs(mdir, exist_ok=True)
     commits = _list_commits(target_dir)
@@ -150,13 +156,31 @@ def ledger_entries(target_dir: str) -> list:
     return sorted(live)
 
 
-def landed(target_dir: str, seq: int) -> bool:
-    """Whether the ledger holds sequence `seq`: a committed entry at
-    `seq` or later (a fold may have absorbed the entry itself). A
-    maintainer batch `b` writes sequence b+1 to each of its ledgers,
-    and once every one of them holds it the batch has landed — a replay
-    runs nothing."""
-    return any(s >= seq for s, _k in ledger_entries(target_dir))
+def ledger_head(target_dir: str) -> int:
+    """The ledger's newest committed sequence, -1 before its first
+    commit. A fold may have absorbed the entry at the head itself, but
+    never moves the head back."""
+    return max((s for s, _k in ledger_entries(target_dir)), default=-1)
+
+
+def ledger_step(dirs, batch_id: int, run) -> None:
+    """The replay rule of every maintainer step: batch `batch_id` writes
+    sequence batch_id+1 to each ledger in `dirs` (`batch_id = -1` is the
+    bootstrap, writing each ledger's base 0). Runs nothing once every
+    ledger holds that sequence — the batch has landed, so a replay is a
+    no-op. Otherwise calls `run()`, whose writes skip the entries a
+    crashed attempt already committed. A batch > 0 whose ledgers do not
+    all hold sequence `batch_id` raises, so lost state is never read as
+    empty."""
+    heads = [ledger_head(d) for d in dirs]
+    if min(heads) > batch_id:
+        return
+    if batch_id > 0 and min(heads) < batch_id:
+        lost = [d for d, h in zip(dirs, heads) if h < batch_id]
+        raise FileNotFoundError(
+            f"ledger sequence {batch_id} not found under {lost}; "
+            f"batch {batch_id} needs it as its previous state")
+    run()
 
 
 def _entry_dir(target_dir: str, kind: str, seq: int) -> str:
@@ -205,8 +229,11 @@ def _write_entry(df: DataFrame, target_dir: str, kind: str, seq: int,
     without running anything when the entry is already committed: a
     replayed step never rewrites a committed entry, so a reader that
     planned over its files keeps them. An uncommitted directory (a
-    writer killed before the commit) is overwritten."""
-    if (seq, kind) in ledger_entries(target_dir):
+    writer killed before the commit) is overwritten. A base 0 (a
+    bootstrap) is written only into an empty ledger: once the ledger
+    holds any entry, a fold may have absorbed b0 itself."""
+    entries = ledger_entries(target_dir)
+    if (seq, kind) in entries or (seq == 0 and entries):
         return
     if key_cols:
         _assert_unique_keys(df, list(key_cols), f"{kind}{seq}")

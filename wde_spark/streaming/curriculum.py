@@ -3,8 +3,9 @@
 The one-shot form (`operators/sampling.curriculum_order`) stages a FIXED
 corpus. At 100 TB the corpus is a feed: documents keep arriving, and the
 schedule must refresh per ingest batch WITHOUT rescanning text. The
-maintained state is a COW-versioned ledger (doc_id, bucket,
-arrived_batch): the difficulty bucket is computed ONCE, at arrival, on
+maintained state is an append-only delta ledger (`compaction.py`) of
+(doc_id, bucket, arrived_batch) keyed (doc_id, arrived_batch), so a
+re-arriving id stays once per arrival: the difficulty bucket is computed ONCE, at arrival, on
 the stream (the only pass that ever touches the document bytes); every
 schedule refresh afterwards is arithmetic on the tiny ledger — the
 two-phase prefix-sum staging of `curriculum_order`, whose driver-side
@@ -19,7 +20,9 @@ after ANY batch is row-identical to one-shot `curriculum_order` over
 the union of those batches — the schedule is always the one a full
 rebuild would produce, at ledger-append cost.
 
-Each step is a `versions.versioned_step` (v{batch_id} -> v{batch_id+1}).
+Each step appends the arriving rows as delta `d{batch_id+1}` — an O(batch)
+write that never reads the ledger — through `compaction.ledger_step`, so
+a replayed batch whose delta landed runs nothing.
 """
 
 from __future__ import annotations
@@ -27,13 +30,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .versions import latest_version_dir, run_foreach_batch, versioned_step
+from .compaction import ledger_step, read_merged, write_delta
+from .versions import run_foreach_batch
+
+_KEYS = ["doc_id", "arrived_batch"]
 
 
 def apply_curriculum_batch(batch: DataFrame, batch_id: int,
                            target_dir: str, extra_cols: tuple = ()) -> None:
     """One maintenance step: append the arriving (id, bucket[, extra])
-    rows to v{batch_id}'s ledger as v{batch_id + 1}. `extra_cols` carries
+    rows to the ledger as delta d{batch_id + 1}. `extra_cols` carries
     additional arrival-time columns (e.g. n_tok for maintained pacing)
     — still metadata-sized, never text."""
     fresh = batch.select(
@@ -43,12 +49,8 @@ def apply_curriculum_batch(batch: DataFrame, batch_id: int,
         F.lit(batch_id).cast("int").alias("arrived_batch"),
     )
 
-    def step(prev, out: str) -> None:
-        merged = fresh if prev is None else \
-            batch.sparkSession.read.parquet(prev).unionByName(fresh)
-        merged.write.mode("overwrite").parquet(out)
-
-    versioned_step(target_dir, batch_id, step)
+    ledger_step([target_dir], batch_id, lambda: write_delta(
+        fresh, target_dir, batch_id + 1, key_cols=_KEYS))
 
 
 def streaming_curriculum_maintain(
@@ -59,7 +61,7 @@ def streaming_curriculum_maintain(
 ) -> None:
     """Run the (id, bucket[, extra]) stream to completion (availableNow
     — static test input), maintaining the schedule ledger under
-    `target_dir` as COW versions. The caller computes the bucket (and
+    `target_dir` as one delta per batch. The caller computes the bucket (and
     any extra arrival-time columns, e.g. n_tok) ON the stream so
     document bytes are read exactly once, at arrival."""
 
@@ -70,14 +72,14 @@ def streaming_curriculum_maintain(
 
 
 def read_curriculum(spark, target_dir: str) -> DataFrame:
-    """Materialize the CURRENT schedule from the latest ledger version:
+    """Materialize the CURRENT schedule from the merged ledger:
     the exact `curriculum_order` staging (NTILE terciles over (bucket,
     id), salted in-stage shuffle, round-robin interleave) over the
     stored buckets — no document bytes touched. Columns: id, bucket,
     arrived_batch, stage, sched_pos."""
     from ..operators.sampling import curriculum_order
 
-    ledger = spark.read.parquet(latest_version_dir(target_dir))
+    ledger = read_merged(spark, target_dir, _KEYS)
     return curriculum_order(ledger, F.col("bucket"))
 
 
@@ -90,7 +92,7 @@ def read_paced(spark, target_dir: str, quotas) -> DataFrame:
     carries it alongside the schedule columns."""
     from ..operators.sampling import curriculum_pacing
 
-    ledger = spark.read.parquet(latest_version_dir(target_dir))
+    ledger = read_merged(spark, target_dir, _KEYS)
     # provenance rides through the pacing pipeline as a passthrough
     # column (r12) — the old per-id rejoin shuffled the paced output and
     # the ledger a second time for a column every row already carried

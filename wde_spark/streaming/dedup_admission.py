@@ -20,10 +20,11 @@ micro-batch writes O(batch) rows:
 
 Admission is not algebraically idempotent — re-admitting admitted docs
 would collide with their own ids — so replay safety rests on the
-ledger's replay contract: batch `b` reads every ledger `as_of=b` and
-writes sequence `b+1`; a batch all three ledgers hold has landed and its
-replay runs nothing, and a batch killed between two ledger commits
-recomputes from the same reads and writes only the missing deltas. The
+ledger's replay contract (`compaction.ledger_step`): batch `b` reads
+every ledger `as_of=b` and writes sequence `b+1`; a batch all three
+ledgers hold has landed and its replay runs nothing, and a batch killed
+between two ledger commits recomputes from the same reads and writes
+only the missing deltas. The
 LM/DSIR/NB gates (`lm_`, `dsir_`, `nb_admission.py`) compose in FRONT of
 `_admit_batch` through its `gate` hook.
 
@@ -43,8 +44,8 @@ from pyspark.sql import functions as F
 
 from ..operators.incremental import (DedupState, _resolve_bands,
                                      dedup_increment, dedup_state)
-from .compaction import (landed, ledger_entries, maybe_compact,
-                         read_merged, write_base, write_delta)
+from .compaction import (ledger_step, maybe_compact, read_merged,
+                         write_base, write_delta)
 from .versions import read_batch_ledger, run_foreach_batch
 
 # The one banding every admission ledger runs with (`dedup_corpus`'s
@@ -88,25 +89,29 @@ def read_corpus(spark, target_dir: str) -> DataFrame:
 def bootstrap(init_corpus: DataFrame, target_dir: str) -> None:
     """Land the (already-deduplicated) init corpus and its dedup state
     as ledger bases `{target_dir}/{corpus,fp,bands}/b0`, shared by all
-    admission entry points. Writes every base that is missing, so a
-    restart after a crash between two base commits finishes the
-    bootstrap; a ledger with any entry is live (compaction may have
-    folded b0 away) and is left alone. The resolved banding parameters
-    are persisted next to the ledgers and asserted on every admission —
-    tombstone enumeration depends on them (see `_check_params`)."""
-    missing = [(sub, keys) for sub, keys in _LEDGERS
-               if not ledger_entries(os.path.join(target_dir, sub))]
-    if not missing:
-        return
-    os.makedirs(target_dir, exist_ok=True)
-    with open(os.path.join(target_dir, _PARAMS_FILE), "w") as fh:
-        json.dump(_params(), fh)
-    st = dedup_state(init_corpus, _NUM_HASHES, _BANDS, _SHINGLE_K)
-    tables = {"corpus": init_corpus, "fp": st.fingerprints,
-              "bands": st.bands}
-    for sub, keys in missing:
-        write_base(tables[sub], os.path.join(target_dir, sub), 0,
-                   stats_col="doc_id", key_cols=keys)
+    admission entry points. A restart after a crash between two base
+    commits writes only the bases still missing; a ledger with any entry
+    is live (compaction may have folded b0 away) and is left alone. The
+    resolved banding parameters are persisted next to the ledgers and
+    asserted on every admission — tombstone enumeration depends on them
+    (see `_check_params`)."""
+
+    def run() -> None:
+        os.makedirs(target_dir, exist_ok=True)
+        with open(os.path.join(target_dir, _PARAMS_FILE), "w") as fh:
+            json.dump(_params(), fh)
+        st = dedup_state(init_corpus, _NUM_HASHES, _BANDS, _SHINGLE_K)
+        tables = {"corpus": init_corpus, "fp": st.fingerprints,
+                  "bands": st.bands}
+        for sub, keys in _LEDGERS:
+            write_base(tables[sub], os.path.join(target_dir, sub), 0,
+                       stats_col="doc_id", key_cols=keys)
+
+    ledger_step(_dirs(target_dir), -1, run)
+
+
+def _dirs(target_dir: str) -> list:
+    return [os.path.join(target_dir, sub) for sub, _keys in _LEDGERS]
 
 
 def streaming_dedup_admission(
@@ -164,10 +169,13 @@ def _admit_batch(batch: DataFrame, batch_id: int, target_dir: str,
     writes the gate's own ledgers and returns the documents to admit;
     it runs only for a batch that has not landed, before any delta is
     committed, so its ledgers are complete whenever the batch is."""
+    ledger_step(_dirs(target_dir), batch_id, lambda: _admit(
+        batch, batch_id, target_dir, max_bucket, drift_dir, gate))
+
+
+def _admit(batch: DataFrame, batch_id: int, target_dir: str,
+           max_bucket: int | None, drift_dir: str | None, gate) -> None:
     seq = batch_id + 1
-    if all(landed(os.path.join(target_dir, sub), seq)
-           for sub, _keys in _LEDGERS):
-        return
     _check_params(target_dir)
     sp = batch.sparkSession
     docs = batch if gate is None else gate(batch, batch_id)
@@ -236,4 +244,4 @@ def read_drift(spark, drift_dir: str) -> DataFrame:
     return read_batch_ledger(
         spark, drift_dir,
         "from_version long, to_version long, jsd double, l1 double, "
-        "n_terms_a long, n_terms_b long, n_terms_common long")
+        "n_terms_a long, n_terms_b long, n_terms_common long", None)

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dsir import dsir_logratio, shared_vocab
 from ..operators.lm_score import train_bigram_lm
+from .compaction import read_merged, write_base
 from .dedup_admission import _admit_batch, bootstrap
 from .versions import read_batch_ledger, run_foreach_batch
 
@@ -58,23 +59,20 @@ def streaming_dsir_dedup_admission(
     t_dir = os.path.join(target_dir, "lm_target")
     r_dir = os.path.join(target_dir, "lm_raw")
     v_dir = os.path.join(target_dir, "lm_vocab")
-    if not os.path.exists(os.path.join(v_dir, "_SUCCESS")):
-        # SHARED vocabulary (see dsir.shared_vocab): both frozen models
-        # smooth over the same event space, so the ratio measures
-        # distribution preference, not model-size bias
-        shared_vocab(target_slice, init_corpus) \
-            .write.mode("overwrite").parquet(v_dir)
-    vocab0 = target_slice.sparkSession.read.parquet(v_dir)
+    # each frozen model is base 0 of its own ledger. SHARED vocabulary
+    # (see dsir.shared_vocab): both frozen models smooth over the same
+    # event space, so the ratio measures distribution preference, not
+    # model-size bias
+    write_base(shared_vocab(target_slice, init_corpus), v_dir, 0)
+    spark = target_slice.sparkSession
     for lm_dir, corpus in ((t_dir, target_slice), (r_dir, init_corpus)):
-        if not os.path.exists(os.path.join(lm_dir, "_SUCCESS")):
-            train_bigram_lm(corpus, vocab=vocab0) \
-                .write.mode("overwrite").parquet(lm_dir)
+        write_base(train_bigram_lm(
+            corpus, vocab=read_merged(spark, v_dir, ["v"])), lm_dir, 0)
 
     def gate(batch: DataFrame, batch_id: int) -> DataFrame:
-        spark = batch.sparkSession
-        ratios = dsir_logratio(batch, spark.read.parquet(t_dir),
-                               spark.read.parquet(r_dir),
-                               vocab=spark.read.parquet(v_dir))
+        ratios = dsir_logratio(batch, read_merged(spark, t_dir, ["w1", "w2"]),
+                               read_merged(spark, r_dir, ["w1", "w2"]),
+                               vocab=read_merged(spark, v_dir, ["v"]))
         ok_ids = ratios.filter(F.col("log_ratio") >= cutoff).select("doc_id")
         ratios.join(ok_ids, "doc_id", "left_anti") \
             .write.mode("overwrite").parquet(
@@ -92,4 +90,4 @@ def read_quarantine(spark, quarantine_dir: str) -> DataFrame:
     document, one immutable directory per batch."""
     return read_batch_ledger(
         spark, quarantine_dir,
-        "doc_id long, n_bigrams long, log_ratio double")
+        "doc_id long, n_bigrams long, log_ratio double", None)

@@ -14,8 +14,9 @@ The codes table is APPEND-ONLY (vectors admitted under a frozen codebook
 are never revoked), so a micro-batch is the ledger's best case: encode
 the batch and append it as delta `d{batch_id+1}` — NO ledger read at
 all, so per-batch cost is independent of index size. Encoding with a
-frozen codebook is deterministic and row-local, so a replayed batch
-finds its delta committed and writes nothing.
+frozen codebook is deterministic and row-local, and
+`compaction.ledger_step` makes a replayed batch whose delta landed run
+nothing.
 
 Index size arithmetic at scale: 1024-dim float32 = 4 KB/vector; PQ-64
 codes = 64 B/vector — a 10-billion-vector index is ~640 GB of codes, a
@@ -31,7 +32,7 @@ import os
 from pyspark.sql import DataFrame
 
 from ..operators.similarity import pq_adc_topk, pq_encode, train_pq_codebooks
-from .compaction import ledger_entries, read_merged, write_base, write_delta
+from .compaction import ledger_step, read_merged, write_base, write_delta
 from .versions import run_foreach_batch
 
 
@@ -75,18 +76,21 @@ def streaming_pq_index_maintain(
     commits, so a committed entry implies it; a bootstrap that crashed
     before that commit is redone whole."""
     ledger = os.path.join(target_dir, "codes")
-    # any entry means the ledger is live (compaction may fold b0)
-    if not ledger_entries(ledger):
+
+    def bootstrap() -> None:
         books = train_pq_codebooks(init_items, m, k_codes)
         os.makedirs(target_dir, exist_ok=True)
         with open(_codebook_path(target_dir), "w") as f:
             json.dump(books, f)
         write_base(pq_encode(init_items, books), ledger, 0,
                    stats_col="vec_id")
+
+    ledger_step([ledger], -1, bootstrap)
     books = read_codebooks(target_dir)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        write_delta(pq_encode(batch, books), ledger, batch_id + 1,
-                    stats_col="vec_id", key_cols=["vec_id"])
+        ledger_step([ledger], batch_id, lambda: write_delta(
+            pq_encode(batch, books), ledger, batch_id + 1,
+            stats_col="vec_id", key_cols=["vec_id"]))
 
     run_foreach_batch(vec_stream, _apply, checkpoint_dir)

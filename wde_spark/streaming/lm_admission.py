@@ -10,7 +10,7 @@ not landed and before its first delta commit, so a batch's quarantine
 ledger is complete whenever its corpus delta is.
 
 The LM is FROZEN at bootstrap (trained once on the init corpus and
-persisted as a parquet table) — scoring is then a pure per-document
+persisted as base 0 of its own ledger, `lm/`) — scoring is then a pure per-document
 function, so the gate is batching-invariant and the whole composition
 keeps the admission path's replay contract. Streaming ≡ batch is pinned
 in tests: the final corpus equals a flat `dedup_corpus` re-run over
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.lm_score import lm_quality, train_bigram_lm
+from .compaction import read_merged, write_base
 from .dedup_admission import _admit_batch, bootstrap
 from .versions import read_batch_ledger, run_foreach_batch
 
@@ -52,12 +53,10 @@ def streaming_lm_dedup_admission(
     rest are admitted through `dedup_increment`."""
     bootstrap(init_corpus, target_dir)
     lm_dir = os.path.join(target_dir, "lm")
-    if not os.path.exists(os.path.join(lm_dir, "_SUCCESS")):
-        train_bigram_lm(init_corpus) \
-            .write.mode("overwrite").parquet(lm_dir)
+    write_base(train_bigram_lm(init_corpus), lm_dir, 0)
 
     def gate(batch: DataFrame, batch_id: int) -> DataFrame:
-        lm = batch.sparkSession.read.parquet(lm_dir)
+        lm = read_merged(batch.sparkSession, lm_dir, ["w1", "w2"])
         scores = lm_quality(batch, lm)
         ok_ids = scores.filter(F.col("avg_logp") >= cutoff).select("doc_id")
         scores.join(ok_ids, "doc_id", "left_anti") \
@@ -76,4 +75,4 @@ def read_quarantine(spark, quarantine_dir: str) -> DataFrame:
     document, one immutable directory per batch."""
     return read_batch_ledger(
         spark, quarantine_dir,
-        "doc_id long, n_bigrams long, avg_logp double")
+        "doc_id long, n_bigrams long, avg_logp double", None)

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.classifier import nb_classify, train_naive_bayes
+from .compaction import read_merged, write_base
 from .dedup_admission import _admit_batch, bootstrap
 from .versions import read_batch_ledger, run_foreach_batch
 
@@ -51,8 +52,8 @@ def streaming_nb_dedup_admission(
     """Run the document stream to completion (availableNow — static test
     input), maintaining the classifier-gated deduplicated corpus under
     `target_dir`. `train_docs` is the labeled trusted slice the NB model
-    freezes on (persisted as two parquet tables under `target_dir`, the
-    same frozen-model-state discipline as the LM/DSIR gates). Every
+    freezes on (persisted as base 0 of two ledgers under `target_dir`,
+    the same frozen-model-state discipline as the LM/DSIR gates). Every
     batch document's prediction lands in
     `target_dir/predictions/b{batch_id}` as (id, pred_label, score,
     margin); documents predicted OUTSIDE `keep_labels` additionally land
@@ -61,16 +62,16 @@ def streaming_nb_dedup_admission(
     bootstrap(init_corpus, target_dir)
     m_dir = os.path.join(target_dir, "nb_model")
     p_dir = os.path.join(target_dir, "nb_priors")
-    if not os.path.exists(os.path.join(p_dir, "_SUCCESS")):
-        model, priors = train_naive_bayes(train_docs)
-        model.write.mode("overwrite").parquet(m_dir)
-        priors.write.mode("overwrite").parquet(p_dir)
+    model, priors = train_naive_bayes(train_docs)
+    write_base(model, m_dir, 0)
+    write_base(priors, p_dir, 0)
     ledger_dir = os.path.join(target_dir, "predictions")
 
     def gate(batch: DataFrame, batch_id: int) -> DataFrame:
         spark = batch.sparkSession
-        preds = nb_classify(batch, spark.read.parquet(m_dir),
-                            spark.read.parquet(p_dir))
+        preds = nb_classify(batch, read_merged(spark, m_dir,
+                                               ["label", "token"]),
+                            read_merged(spark, p_dir, ["label"]))
         preds.write.mode("overwrite").parquet(
             os.path.join(ledger_dir, f"b{batch_id}"))
         ok_ids = preds.filter(F.col("pred_label").isin(keep_labels)) \
@@ -91,4 +92,5 @@ def read_predictions(spark, target_dir: str) -> DataFrame:
     document, one immutable directory per batch."""
     return read_batch_ledger(
         spark, os.path.join(target_dir, "predictions"),
-        "doc_id long, pred_label string, score double, margin double")
+        "doc_id long, pred_label string, score double, margin double",
+        None)

@@ -1,5 +1,5 @@
 """Streaming maintained FFD packing manifests — arrival-order bins over
-COW versions, the `shard_manifest_increment` discipline applied to
+a metadata ledger, the `shard_manifest_increment` discipline applied to
 whole-document bin packing.
 
 The batch operator (`operators/layout.ffd_pack`) may re-sort the whole
@@ -26,10 +26,12 @@ fold stays bit-replayable in SQL: the driver oracle runs the recursive-CTE
 FFD replay per (bucket, batch) and offsets bin ids by a window sum.
 
 Like `streaming/export_admission.py`, the offset comes from the PREVIOUS
-metadata version and the in-batch fold is deterministic (salted-md5
-buckets, weight-desc/id-asc order); each batch is a
-`versions.versioned_step` over `meta/`, with the manifest written inside
-the step.
+metadata base and the in-batch fold is deterministic (salted-md5
+buckets, weight-desc/id-asc order); the metadata is model-sized, so it
+is base per batch on its ledger (`compaction.py`, under `meta/`), and
+each batch is a `compaction.ledger_step` that writes manifest
+`manifest/b{b}` before base `meta/b{b+1}` commits. The manifest is read
+only for the batches the metadata ledger has committed.
 
 At 100 TB: per batch this is ONE shuffle of the batch on the bucket key
 into the grouped Arrow fold, plus an n_buckets-row broadcast join and an
@@ -45,8 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.layout import ffd_pack
-from .versions import (bootstrap, read_batch_ledger, run_foreach_batch,
-                       versioned_step)
+from .compaction import ledger_head, ledger_step, read_merged, write_base
+from .versions import read_batch_ledger, run_foreach_batch
 
 
 def _manifest_dir(target_dir: str, n: int) -> str:
@@ -73,14 +75,11 @@ def ffd_pack_increment(offsets: DataFrame, batch: DataFrame, seq_len: int,
 
 def bootstrap_pack_meta_v0(spark, target_dir: str,
                            n_buckets: int = 8) -> None:
-    """Write metadata v0: zero bins in every bucket."""
-
-    def write_v0(out: str) -> None:
-        spark.createDataFrame([(b, 0) for b in range(n_buckets)],
-                              "bucket long, bins_so_far long") \
-            .coalesce(1).write.mode("overwrite").parquet(out)
-
-    bootstrap(os.path.join(target_dir, "meta"), write_v0)
+    """Write metadata base 0: zero bins in every bucket."""
+    meta = os.path.join(target_dir, "meta")
+    ledger_step([meta], -1, lambda: write_base(spark.createDataFrame(
+        [(b, 0) for b in range(n_buckets)],
+        "bucket long, bins_so_far long").coalesce(1), meta, 0))
 
 
 def streaming_ffd_manifest(docs_stream: DataFrame, target_dir: str,
@@ -88,17 +87,18 @@ def streaming_ffd_manifest(docs_stream: DataFrame, target_dir: str,
                            n_buckets: int = 8) -> None:
     """Run the document stream to completion (availableNow — static test
     input), maintaining per-batch sealed-bin manifests `manifest/b{n}`
-    and COW per-bucket bin-count metadata `meta/v{n}` under
+    and per-bucket bin-count metadata bases `meta/b{n}` under
     `target_dir`. Each manifest row carries `batch_no` (the arrival
     batch), so the ledger records exactly which bins each batch sealed."""
     spark = docs_stream.sparkSession
     bootstrap_pack_meta_v0(spark, target_dir, n_buckets)
+    meta = os.path.join(target_dir, "meta")
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         sp = batch.sparkSession
 
-        def step(prev: str, out: str) -> None:
-            off = sp.read.parquet(prev)
+        def step() -> None:
+            off = read_merged(sp, meta, ["bucket"], as_of=batch_id)
             inc = ffd_pack_increment(off, batch, seq_len, n_buckets) \
                 .withColumn("batch_no", F.lit(batch_id).cast("long"))
             inc.write.mode("overwrite").parquet(
@@ -115,17 +115,19 @@ def streaming_ffd_manifest(docs_stream: DataFrame, target_dir: str,
                     .cast("long").alias("bins_so_far"),
                 )
             )
-            nxt.coalesce(1).write.mode("overwrite").parquet(out)
+            write_base(nxt.coalesce(1), meta, batch_id + 1)
 
-        versioned_step(os.path.join(target_dir, "meta"), batch_id, step)
+        ledger_step([meta], batch_id, step)
 
     run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def read_pack_manifest(spark, target_dir: str) -> DataFrame:
-    """The whole sealed-bin manifest (all batches): (id, bucket, weight,
-    bin_id, batch_no) — bin_id is absolute within its bucket and never
-    rewritten once its batch commits."""
+    """The sealed-bin manifest of every committed batch (batch b is
+    committed once the metadata ledger holds sequence b+1): (id, bucket,
+    weight, bin_id, batch_no) — bin_id is absolute within its bucket and
+    never rewritten once its batch commits."""
     return read_batch_ledger(
         spark, os.path.join(target_dir, "manifest"),
-        "doc_id long, bucket long, n_tok long, bin_id long, batch_no long")
+        "doc_id long, bucket long, n_tok long, bin_id long, batch_no long",
+        ledger_head(os.path.join(target_dir, "meta")) - 1)

@@ -34,7 +34,7 @@ def read_metrics(spark, target_dir: str) -> DataFrame:
     return read_batch_ledger(
         spark, target_dir,
         "batch_id long, check string, violations long, total long, "
-        "ok boolean")
+        "ok boolean", None)
 
 
 def streaming_quality_monitor(

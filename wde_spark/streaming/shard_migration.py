@@ -7,14 +7,18 @@ added as volume grows, and the question that matters operationally is
 corpus reshuffle.
 
 Maintained formulation: the routing table (doc_id, shard, arrived_batch,
-n_moves) is COW-versioned state; the map grows by ONE shard per
+n_moves) is a delta ledger (`compaction.py`) keyed (doc_id,
+arrived_batch); the map grows by ONE shard per
 micro-batch (size = base + batch_id + 1 when batch b lands). Each batch:
 
   1. MIGRATE the existing table to the new map size — re-evaluate the
      HRW argmax; changed rows bump n_moves. By the HRW minimal-movement
      guarantee every changed row moves TO the new shard, and an expected
      1/new_size fraction moves at all;
-  2. ASSIGN the arriving docs under the new size and append them.
+  2. ASSIGN the arriving docs under the new size.
+
+The batch writes only the moved rows and the arrivals, as delta
+`d{batch_id+1}`.
 
 Equivalence contract (pinned in `tests/test_streaming_shards.py` and
 under the driver hash by `streaming_shard_migration_documents`): because
@@ -24,13 +28,14 @@ to one-shot `rendezvous_shard` at the final size — and `n_moves` counts
 exactly the growth steps (after the doc's arrival) where consecutive
 map sizes disagree, which a SQL oracle replays per doc.
 
-Each step is a `versions.versioned_step` (v{batch_id} -> v{batch_id+1}).
+Each step is a `compaction.ledger_step`: a replayed batch whose delta
+landed runs nothing.
 
 At 100 TB: the state is one row per doc (the routing table IS the
-product), each growth step rewrites only rows + a per-row argmax — no
-data shuffle, no all-pairs anything; the per-step moved set
-(n ~ corpus/new_size) is exactly the minimal data movement a migration
-executor must perform.
+product), each growth step is one scan with a per-row argmax — no data
+shuffle, no all-pairs anything — and writes only the moved set
+(n ~ corpus/new_size), exactly the minimal data movement a migration
+executor must perform, plus the arrivals.
 """
 
 from __future__ import annotations
@@ -39,11 +44,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.layout import rendezvous_shard
-from .versions import latest_version_dir, run_foreach_batch, versioned_step
+from .compaction import ledger_step, read_merged, write_delta
+from .versions import run_foreach_batch
 
 BASE_SHARDS_DEFAULT = 6
 MAX_SHARDS = 64  # HRW plan-size limit: rendezvous_shard unrolls one
 # hash expression per candidate shard, so the map is capped at 64.
+_KEYS = ["doc_id", "arrived_batch"]
 
 
 def apply_shard_batch(
@@ -52,8 +59,8 @@ def apply_shard_batch(
     target_dir: str,
     base_shards: int = BASE_SHARDS_DEFAULT,
 ) -> None:
-    """One maintenance step: migrate v{batch_id} to the grown map and
-    append the arriving docs as v{batch_id + 1}."""
+    """One maintenance step: migrate the table to the grown map and
+    append the moved rows and the arriving docs as d{batch_id + 1}."""
     n_new = base_shards + batch_id + 1
     if n_new > MAX_SHARDS:
         raise ValueError(
@@ -69,22 +76,22 @@ def apply_shard_batch(
         F.lit(0).cast("int").alias("n_moves"),
     )
 
-    def step(prev, out: str) -> None:
-        merged = fresh
-        if prev is not None:
-            cur = batch.sparkSession.read.parquet(prev)
+    def step() -> None:
+        delta = fresh
+        if batch_id:
+            cur = read_merged(batch.sparkSession, target_dir, _KEYS,
+                              as_of=batch_id)
             resh = rendezvous_shard("doc_id", n_new)
-            migrated = cur.select(
+            moved = cur.filter(resh != F.col("shard")).select(
                 "doc_id",
                 resh.alias("shard"),
                 "arrived_batch",
-                (F.col("n_moves")
-                 + (resh != F.col("shard")).cast("int")).alias("n_moves"),
+                (F.col("n_moves") + 1).cast("int").alias("n_moves"),
             )
-            merged = migrated.unionByName(fresh)
-        merged.write.mode("overwrite").parquet(out)
+            delta = moved.unionByName(fresh)
+        write_delta(delta, target_dir, batch_id + 1, key_cols=_KEYS)
 
-    versioned_step(target_dir, batch_id, step)
+    ledger_step([target_dir], batch_id, step)
 
 
 def streaming_shard_maintain(
@@ -94,8 +101,8 @@ def streaming_shard_maintain(
     base_shards: int = BASE_SHARDS_DEFAULT,
 ) -> None:
     """Run the doc stream to completion (availableNow — static test
-    input), maintaining the routing table under `target_dir` as COW
-    versions; the map size when batch b lands is base_shards + b + 1."""
+    input), maintaining the routing table under `target_dir` as one
+    delta per batch; the map size when batch b lands is base_shards + b + 1."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_shard_batch(batch, batch_id, target_dir, base_shards)
@@ -104,5 +111,5 @@ def streaming_shard_maintain(
 
 
 def read_routing(spark, target_dir: str) -> DataFrame:
-    """The maintained routing table's latest version."""
-    return spark.read.parquet(latest_version_dir(target_dir))
+    """The maintained routing table (merge-on-read)."""
+    return read_merged(spark, target_dir, _KEYS)

@@ -13,8 +13,10 @@ table is NOT an approximation of the batch pipeline: it is bit-for-bit the
 same sketch state the one-shot batch aggregation would produce, proven in
 `tests/test_streaming_sketches.py`.
 
-Copy-on-write versions through `versions.versioned_step`: batch b merges
-onto `v{b}` and commits `v{b+1}`; a replayed batch is a no-op.
+The sketch table is model-sized, so it is base per batch on its ledger
+(`compaction.py`): batch b merges its sketches onto base `b{b}` and
+writes base `b{b+1}`; a replayed batch whose base landed runs nothing
+(`compaction.ledger_step`).
 """
 
 from __future__ import annotations
@@ -22,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .versions import latest_version_dir, run_foreach_batch, versioned_step
+from .compaction import ledger_step, read_merged, write_base
+from .versions import run_foreach_batch
 
 
 def _maintain(stream: DataFrame, group_cols: list[str], sketch: Column,
@@ -31,15 +34,16 @@ def _maintain(stream: DataFrame, group_cols: list[str], sketch: Column,
     `merge` aggregate (sketch column -> merged sketch column)."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        def step(prev, out: str) -> None:
+        def step() -> None:
             fresh = batch.groupBy(*group_cols).agg(sketch)
-            if prev is not None:
-                fresh = (batch.sparkSession.read.parquet(prev)
+            if batch_id:
+                fresh = (read_merged(batch.sparkSession, target_dir,
+                                     group_cols, as_of=batch_id)
                          .unionByName(fresh).groupBy(*group_cols)
                          .agg(merge))
-            fresh.write.mode("overwrite").parquet(out)
+            write_base(fresh, target_dir, batch_id + 1)
 
-        versioned_step(target_dir, batch_id, step)
+        ledger_step([target_dir], batch_id, step)
 
     run_foreach_batch(stream, _apply, checkpoint_dir)
 
@@ -63,7 +67,7 @@ def streaming_sketch_maintain(
 
 def read_estimates(spark, target_dir: str, group_cols: list[str]) -> DataFrame:
     """Current distinct estimates from the maintained sketch table."""
-    return spark.read.parquet(latest_version_dir(target_dir)).select(
+    return read_merged(spark, target_dir, group_cols).select(
         *group_cols,
         F.hll_sketch_estimate("distinct_sketch").alias("distinct_estimate"))
 
@@ -81,10 +85,9 @@ def streaming_quantile_maintain(
 
     One honesty caveat the HLL form does not have: KLL merge is exact in
     RANK GUARANTEE but not idempotent — re-merging the same batch inserts
-    its items twice, (slightly) re-weighting the compactors. The
-    copy-on-write step (`versions.versioned_step`: a replayed batch whose
-    version landed is a no-op) is what makes replay safe here, not the
-    algebra; `tests/test_streaming_sketches.py` covers the replay path."""
+    its items twice, (slightly) re-weighting the compactors. The ledger
+    step (`compaction.ledger_step`: a replayed batch whose base landed
+    runs nothing) is what makes replay safe here, not the algebra; `tests/test_streaming_sketches.py` covers the replay path."""
     _maintain(events_stream, group_cols,
               F.kll_sketch_agg_double(F.col(value_col).cast("double"),
                                       F.lit(200)).alias("quantile_sketch"),
@@ -96,7 +99,7 @@ def streaming_quantile_maintain(
 def read_quantiles(spark, target_dir: str, group_cols: list[str],
                    quantiles: list[float]) -> DataFrame:
     """Current quantile estimates from the maintained KLL table."""
-    return spark.read.parquet(latest_version_dir(target_dir)).select(
+    return read_merged(spark, target_dir, group_cols).select(
         *group_cols,
         *[F.kll_sketch_get_quantile_double("quantile_sketch", F.lit(q))
           .alias(f"q{int(q * 100)}") for q in quantiles])

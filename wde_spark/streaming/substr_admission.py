@@ -2,23 +2,25 @@
 (`operators/dedup.substr_increment`) run as the ingest path: each
 micro-batch of new documents gets its duplicated spans computed against
 corpus-so-far ∪ batch using only the window-count STATE (never prior
-corpus text), the merged state rolls forward as copy-on-write versions,
-and the batch's spans land in an append-only per-batch ledger — the live
+corpus text), the merged state rolls forward on its ledger, and the
+batch's spans land in an append-only per-batch ledger — the live
 "what boilerplate did today's crawl re-import?" feed a training-data
 pipeline tails, instead of re-running the corpus-wide job.
 
-Batch b is a `versions.versioned_step`: it reads state version v{b} and
-writes v{b+1} plus spans ledger `b{b}`. Spans of
-PRIOR documents are immutable by `substr_increment`'s declared
-asymmetry — history is never edited, which is exactly what makes the
-ledger append-only.
+The state is model-sized (distinct windows), so it is base per batch on
+its ledger (`compaction.py`, under `state/`): batch b reads base `b{b}`
+and writes base `b{b+1}`, plus spans ledger `spans/b{b}`, written before
+the base commits and read only for committed batches. Spans of PRIOR
+documents are immutable by `substr_increment`'s declared asymmetry —
+history is never edited, which is exactly what makes the ledger
+append-only.
 
 At 100 TB: per-batch work is one batch-text window explode + one state
 join restricted to the batch's hash set + the state merge (state is
 corpus-STATE-sized — distinct windows — and partitioned by hash); the
-full-snapshot state rewrite here is the test-scale COW simplification,
-production writes count deltas and compacts, as `dedup_admission`
-documents for its tables."""
+full-state base per batch is the test-scale simplification, production
+writes count deltas and compacts, as `dedup_admission` does for its
+tables."""
 
 from __future__ import annotations
 
@@ -27,55 +29,54 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.dedup import substr_increment, substr_state
-from .versions import (bootstrap, read_batch_ledger, read_version,
-                       run_foreach_batch, versioned_step)
+from .compaction import ledger_head, ledger_step, read_merged, write_base
+from .versions import read_batch_ledger, run_foreach_batch
 
 
 def bootstrap_substr_v0(init_corpus: DataFrame, target_dir: str,
                         k: int = 16) -> None:
-    """One full scan of the initial corpus → v0 window-count state."""
-
-    def write_v0(out: str) -> None:
-        substr_state(init_corpus, k) \
-            .write.mode("overwrite").parquet(os.path.join(out, "state"))
-
-    bootstrap(target_dir, write_v0)
+    """One full scan of the initial corpus → base-0 window-count state."""
+    state_dir = os.path.join(target_dir, "state")
+    ledger_step([state_dir], -1, lambda: write_base(
+        substr_state(init_corpus, k), state_dir, 0))
 
 
 def streaming_substr_maintain(docs_stream: DataFrame,
                               init_corpus: DataFrame, target_dir: str,
                               checkpoint_dir: str, k: int = 16) -> None:
     """Run the document stream to completion (availableNow — static test
-    input), maintaining state versions and the per-batch spans ledger
+    input), maintaining the state ledger and the per-batch spans ledger
     under `target_dir`."""
     bootstrap_substr_v0(init_corpus, target_dir, k)
+    state_dir = os.path.join(target_dir, "state")
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        def step(prev: str, out: str) -> None:
-            state = batch.sparkSession.read.parquet(
-                os.path.join(prev, "state"))
+        def step() -> None:
+            state = read_state(batch.sparkSession, target_dir, batch_id)
             spans, new_state = substr_increment(state, batch, k)
-            new_state.write.mode("overwrite").parquet(
-                os.path.join(out, "state"))
             spans.select(
                 F.lit(batch_id).cast("long").alias("batch_id"),
                 "doc_id", "span_start", "span_end", "n_windows",
             ).write.mode("overwrite").parquet(
                 os.path.join(target_dir, "spans", f"b{batch_id}"))
+            write_base(new_state, state_dir, batch_id + 1)
 
-        versioned_step(target_dir, batch_id, step)
+        ledger_step([state_dir], batch_id, step)
 
     run_foreach_batch(docs_stream, _apply, checkpoint_dir)
 
 
 def read_spans(spark, target_dir: str) -> DataFrame:
-    """The whole spans ledger (all batches)."""
+    """The spans ledger of every committed batch (batch b is committed
+    once the state ledger holds sequence b+1)."""
     return read_batch_ledger(
         spark, os.path.join(target_dir, "spans"),
         "batch_id long, doc_id long, span_start long, span_end long, "
-        "n_windows long")
+        "n_windows long",
+        ledger_head(os.path.join(target_dir, "state")) - 1)
 
 
 def read_state(spark, target_dir: str, version: int) -> DataFrame:
-    """Time-travel read of a state version."""
-    return read_version(spark, target_dir, version, "state")
+    """Time-travel read of the state as of ledger sequence `version`."""
+    return read_merged(spark, os.path.join(target_dir, "state"), ["wh"],
+                       as_of=version)
