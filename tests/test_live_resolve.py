@@ -208,6 +208,72 @@ def test_wave_loop_threads_keep_fetcher_state_whole():
     assert calls["n"] == len(out)
 
 
+def test_le_meme_carry_restarts_with_each_catalogue(spark):
+    """A `le même` row takes the previous row's qdict, in (item_pos,
+    row_pos) order whatever order the rows arrive in; one that opens a
+    catalogue has no previous row, there or across the catalogue
+    boundary, and resolves to nothing."""
+    from wde_spark.plans.resolve import attach_candidates, resolve_offline
+    from wde_spark.sources.cache import CACHE_SCHEMA
+
+    items = [
+        ("CAT_B", 0, "CAT_B_e1", ["le même."], ["pièce signée."]),
+        ("CAT_A", 2, "CAT_A_e3", ["le même."], []),
+        ("CAT_A", 1, "CAT_A_e2", ["ADANSON (Michel)"],
+         ["botaniste. N. 1727. M. 1806"]),
+        ("CAT_A", 0, "CAT_A_e1", ["le même."], ["poète."]),
+    ]
+    nt = _nametable(spark, items)
+    rows = {r.xml_id: r for r in attach_candidates(nt).collect()}
+    adanson = rows["CAT_A_e2"]
+    assert adanson.candidates and adanson.lname
+    assert rows["CAT_A_e3"].candidates == adanson.candidates
+    assert rows["CAT_A_e3"].cand_certs == adanson.cand_certs
+    for xml_id in ("CAT_A_e1", "CAT_B_e1"):
+        assert rows[xml_id].candidates == [], xml_id
+        assert rows[xml_id].lname is None, xml_id
+
+    cache = spark.createDataFrame(
+        [(c[:1], c, "Q1", "Adanson", "s", True) for c in adanson.candidates],
+        CACHE_SCHEMA)
+    got = {r.tei_xml_id: (r.wd_id, r.wd_certitude)
+           for r in resolve_offline(nt, cache).collect()}
+    assert got == {"CAT_A_e1": ("", False), "CAT_A_e2": ("Q1", True),
+                   "CAT_A_e3": ("Q1", True), "CAT_B_e1": ("", False)}
+
+
+def test_assign_skips_recorded_empty_rungs_and_scores_misses_false(spark):
+    """A recorded EMPTY answer at rank 0 does not stop the ladder: the hit
+    at rank 2 wins over rank 3, with its recorded or its computed
+    certitude. A row with no hit gets certitude False in both modes, even
+    where the Q3 certitude of its first rung is True."""
+    from wde_spark.plans.resolve import attach_candidates, resolve_offline
+    from wde_spark.sources.cache import CACHE_SCHEMA
+
+    items = [
+        ("CAT_1", 0, "CAT_1_e1", ["ADANSON (Michel)"],
+         ["botaniste. N. 1727. M. 1806"]),
+        ("CAT_1", 1, "CAT_1_e2", ["CONDÉ (Louis-Joseph prince de)"],
+         ["maréchal de camp, né en 1736, mort en 1818."]),
+    ]
+    nt = _nametable(spark, items)
+    rows = {r.xml_id: r for r in attach_candidates(nt).collect()}
+    hit, miss = rows["CAT_1_e1"], rows["CAT_1_e2"]
+    ladder = hit.candidates
+    assert len(ladder) >= 4 and miss.cand_certs[0]
+    assert not set(ladder) & set(miss.candidates)
+    cache = spark.createDataFrame(
+        [(ladder[0][:1], ladder[0], "", "", "", False),
+         (ladder[2][:1], ladder[2], "Q2", "rank two", "s2", False),
+         (ladder[3][:1], ladder[3], "Q3", "rank three", "s3", True)],
+        CACHE_SCHEMA)
+    for source, cert in (("cache", False), ("computed", hit.cand_certs[2])):
+        got = {r.tei_xml_id: (r.wd_id, r.wd_name, r.wd_certitude)
+               for r in resolve_offline(nt, cache, source).collect()}
+        assert got == {"CAT_1_e1": ("Q2", "rank two", cert),
+                       "CAT_1_e2": ("", "", False)}, source
+
+
 @needs_reference
 def test_resolve_live_matches_offline(spark):
     from wde_spark.sources.cache import read_query_cache
@@ -259,16 +325,8 @@ def test_resolve_live_matches_offline(spark):
     # economy: every query fetched at most once (dedup across rows+waves)
     assert len(seen) == len(set(seen))
     # economy: strictly fewer fetches than the total candidate universe
-    from wde_spark.plans.resolve import attach_qdicts, _candidates_batch
-    from pyspark.sql import types as T
-    qd = attach_qdicts(nt)
-    wc = qd.mapInPandas(
-        _candidates_batch,
-        schema=T.StructType(list(qd.schema.fields)
-                            + [T.StructField("candidates",
-                                             T.ArrayType(T.StringType())),
-                               T.StructField("cand_certs",
-                                             T.ArrayType(T.BooleanType()))]))
+    from wde_spark.plans.resolve import attach_candidates
+    wc = attach_candidates(nt)
     all_cands = set()
     n_first = 0
     for r in wc.select("candidates").collect():
@@ -287,9 +345,8 @@ def test_synthetic_cache_hit_rate_sweep(spark):
     import tempfile
 
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    from wde_spark.plans.resolve import _candidates_batch, attach_qdicts
+    from wde_spark.plans.resolve import attach_candidates
     from wde_spark.sources.cache import synthetic_cache
     from wde_spark.sources.http import resolve_live
 
@@ -302,15 +359,7 @@ def test_synthetic_cache_hit_rate_sweep(spark):
         "catalogue_id string, item_pos int, row_pos int, xml_id string,"
         "name string, trait string",
     )
-    qd = attach_qdicts(nt)
-    wc = qd.mapInPandas(
-        _candidates_batch,
-        schema=T.StructType(list(qd.schema.fields)
-                            + [T.StructField("candidates",
-                                             T.ArrayType(T.StringType())),
-                               T.StructField("cand_certs",
-                                             T.ArrayType(T.BooleanType()))]))
-    universe = wc.select(F.explode("candidates").alias("qstr"))
+    universe = attach_candidates(nt).select(F.explode("candidates").alias("qstr"))
 
     fetched_by_rate = {}
     for rate in (0.0, 0.5, 1.0):

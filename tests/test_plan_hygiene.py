@@ -452,12 +452,11 @@ def test_no_unbounded_driver_collect_in_package_source():
         f"allowlist with a justification): {offenders}")
 
 
-def test_resolve_offline_plan_two_kernels_broadcast_cache(spark):
-    """resolve_offline = assign(attach_candidates(nt), cache) keeps the plan
-    of the unsplit stage: exactly two Python kernels (qdict, ladder) and a
-    broadcast cache join on the query string. In the executed plan the
-    qdict kernel runs once (its window exchange is reused) and the ladder
-    kernel feeds both the probe branch and the join-back branch."""
+def test_resolve_offline_plan_one_kernel_broadcast_cache(spark):
+    """resolve_offline = assign(attach_candidates(nt), cache) runs one
+    Python node, the per-catalogue ladder kernel, once; the cache joins
+    as a broadcast on the query string, and no join brings the probe rows
+    back to their rows."""
     import re
 
     from wde_spark.plans.resolve import resolve_offline
@@ -473,11 +472,36 @@ def test_resolve_offline_plan_two_kernels_broadcast_cache(spark):
     df = resolve_offline(nt, cache)
     df.collect()  # finalize AQE
     plan = _plan(df).split("== Initial Plan ==")[0]
-    kernels = re.findall(r"MapInPandas (\w+)\(", plan)
-    assert sorted(set(kernels)) == ["_candidates_batch", "_qdict_batch"]
-    assert kernels.count("_qdict_batch") == 1
-    assert kernels.count("_candidates_batch") == 2
+    python_nodes = re.findall(r"\b\w*(?:Pandas|EvalPython|InArrow)\b", plan)
+    assert python_nodes == ["FlatMapGroupsInPandas"]
+    assert plan.count("_ladder_by_catalogue(") == 1
     assert re.search(r"BroadcastHashJoin \[qstr#\d+\], \[qstr#\d+\]", plan)
+    assert "SortMergeJoin" not in plan
+
+
+def test_enrich_offline_plan_one_exchange(spark):
+    """enrich_offline partitions the documents by qid once; its three
+    aggregations reuse that partitioning, so the plan has one shuffle, no
+    window and no join."""
+    import json
+
+    from wde_spark.plans.enrich import enrich_offline
+
+    doc = {"head": {"vars": ["occ", "never"]}, "results": {"bindings": [
+        {"occ": {"type": "literal", "value": "Writer"}},
+        {"occ": {"type": "literal", "value": "writer!"}}]}}
+    raw = spark.createDataFrame(
+        [("Q1", 0, json.dumps(doc)), ("Q2", 0, json.dumps(doc))],
+        "qid string, query_idx int, json string")
+    df = enrich_offline(raw)
+    assert {r.qid: dict(r.enrichment) for r in df.collect()} == {
+        q: {"occ": ["Writer"], "never": []} for q in ("Q1", "Q2")}
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    exchanges = [ln.strip() for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0].startswith("+- Exchange hashpartitioning(qid#")
+    assert "Window" not in plan and "Join" not in plan
+    assert plan.count("from_json") == 1
 
 
 def test_segment_parallel_split_decode_stays_narrow(spark):

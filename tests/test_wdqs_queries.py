@@ -91,3 +91,41 @@ def test_enrich_live_offline_replay(spark, tmp_path):
     want = [" ".join(q.split()) for qid in ("Q1", "Q2")
             for q in config_queries(qid)]
     assert sorted(sent) == sorted(want)
+
+
+def test_enrich_offline_edge_cases(spark):
+    """`result_tojson` per (qid, var): a document with zero bindings adds
+    no var (and a QID with only such documents no entry); a var bound
+    only to missing values gives []; case and punctuation variants keep
+    the first-seen cleaned form, in binding order; entity-URI prefixes
+    and the time of day are stripped."""
+    import json
+
+    from wde_spark.plans.enrich import enrich_offline
+
+    ent = "http://www.wikidata.org/entity/"
+
+    def doc(variables, bindings):
+        return json.dumps({"head": {"vars": variables}, "results": {
+            "bindings": [{k: {"type": "literal", "value": v}
+                          for k, v in b.items()} for b in bindings]}})
+
+    raw = spark.createDataFrame([
+        ("Q1", 0, doc(["unseen", "unseenL"], [])),
+        ("Q1", 1, doc(["occ", "occL", "never"], [
+            {"occ": f"{ent}Q36180", "occL": "paris"},
+            {"occ": f"{ent}Q36180", "occL": "Paris."},
+            {"occ": f"{ent}Q49757", "occL": "Lyon"},
+            {"occL": "PARIS"},
+        ])),
+        ("Q1", 2, doc(["birth"], [{"birth": "1802-07-24T00:00:00Z"},
+                                  {"birth": "1802-07-24"}])),
+        ("Q2", 0, doc(["occ"], [])),
+    ], "qid string, query_idx int, json string")
+    store = {r.qid: dict(r.enrichment) for r in enrich_offline(raw).collect()}
+    assert store == {"Q1": {
+        "occ": ["Q36180", "Q49757"],
+        "occL": ["paris", "Lyon"],
+        "never": [],
+        "birth": ["1802-07-24"],
+    }}

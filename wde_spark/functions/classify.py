@@ -14,10 +14,10 @@ Reference parity (citations into /root/reference):
 
 This is ordered, dictionary-driven, regex-backtracking logic — the kind of
 per-row compute that belongs in an Arrow-batched UDF, not a thousand-node
-`when()` tree: it is row-local (zero shuffle, scales linearly with
-executors) and dominated by Python regex work that Catalyst could not
-vectorize anyway. The surrounding *plan* (ordering, carry-forward, candidate
-explosion, cache join, top-1 selection) stays declarative — see
+`when()` tree: it is local to one catalogue (one Python group each, scales
+linearly with executors) and dominated by Python regex work that Catalyst
+could not vectorize anyway. The surrounding *plan* (candidate explosion,
+cache join, top-1 selection) stays declarative — see
 wde_spark/plans/resolve.py.
 
 Deliberately preserved reference behaviors (bug-compatible by default, so
@@ -72,7 +72,8 @@ class QDict:
 
 def is_same_as_previous(name: str) -> bool:
     """CASE 1 — `le même` / `la même`: reuse the previous row's qdict
-    (order-dependent W1 semantics; resolved by a window in the plan)."""
+    (order-dependent W1 semantics; carried by the per-catalogue kernel of
+    plans/resolve.py)."""
     return _RE_SAME.match(name.lower()) is not None
 
 
@@ -299,9 +300,9 @@ def prep_query(name: str, trait: str) -> QDict | None:
     """F10-F15 — build the qdict for one (tei:name, tei:trait) row.
 
     Returns None for `le même` rows: the caller propagates the previous
-    row's qdict with a catalogue-ordered window (SURVEY.md §2.5 W1), which
-    replaces the reference's sequential `prev` threading
-    (itemtoid_prep.py:57-62)."""
+    row's qdict in catalogue order (SURVEY.md §2.5 W1), as the reference's
+    sequential `prev` threading does (itemtoid_prep.py:57-62), restarted
+    with each catalogue."""
     q = QDict()
 
     parenth_mo = re.search(r"\(.+\)?", name)

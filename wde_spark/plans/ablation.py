@@ -17,12 +17,13 @@ Wikidata query per (name-variant × parameter-combo) cell:
 and tallies per-cell top-1 success against the golden wikidata id,
 publishing the grid as out/wikidata/itemtoid_test_out.json.
 
-Here the same grid is one DataFrame plan: qdict prep (attach_qdicts, the
-shared kernel) → a 2×5 variant/combo explode → ONE broadcast join against
-the recorded query cache (the offline stand-in for the live API — the
-cache key is the reference's own cleaned query-string form) → one hash
-aggregation. No driver-side loop; the 2×5×N cell matrix is rows, so the
-same plan runs the grid for 200 golden rows or 200 million.
+Here the same grid is one DataFrame plan: qdict prep (the qdict columns
+of attach_candidates, the shared kernel) → a 2×5 variant/combo explode →
+ONE broadcast join against the recorded query cache (the offline stand-in
+for the live API — the cache key is the reference's own cleaned
+query-string form) → one hash aggregation. No driver-side loop; the
+2×5×N cell matrix is rows, so the same plan runs the grid for 200 golden
+rows or 200 million.
 
 Because the replay is offline, not every ablation cell's query string was
 recorded by the original run (the production ladder probes subtractive
@@ -38,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.strings import clean_query_string
-from .resolve import attach_qdicts
+from .resolve import attach_candidates
 
 SPECS = ["nobname_sts", "status", "dates", "function"]
 
@@ -52,7 +53,7 @@ def ablation_grid(nametable: DataFrame, cache: DataFrame,
     query cache (qstr, qid, ...) — qid '' means a recorded empty result.
     """
     key = ["catalogue_id", "item_pos", "row_pos"]
-    qd = attach_qdicts(nametable)
+    qd = attach_candidates(nametable)
 
     name_base = F.concat_ws(" ", "fname", "lname")
     name_nr = F.when(F.col("rebuilt"), F.col("lname")).otherwise(name_base)

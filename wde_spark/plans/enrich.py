@@ -11,20 +11,21 @@ The network boundary (SPARQLWrapper → WDQS, S9) stays a `mapPartitions`
 client (sources side, live mode only); everything after it is declarative:
 
     raw SPARQL-JSON docs (qid, query_idx, json)
+      → repartition by qid                     [the ONE exchange]
       → from_json + posexplode bindings        [order column materialized]
       → clean (F2) + compare-normal form (F3)  [JVM column expressions]
-      → first-seen-per-normal-form window      [the A6 ordered dedup]
-      → collect_list ordered by binding index  [per (qid, var) value array]
-      → left join the var universe             [vars with no rows → []]
+      → min(bind_ord, cleaned) per normal form [the A6 first-seen dedup]
+      → sorted collect_list per (qid, var)     [vars with no value → []]
       → map_from_entries per qid               [the document store]
 
-At scale: one shuffle for the window+agg (same key), one broadcast-ish join
-with the tiny var universe. No Python in the hot path.
+Every aggregation groups by keys that start with qid, so each reuses the
+qid partitioning: one scan and one parse of the documents, one shuffle.
+No Python in the hot path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -62,7 +63,10 @@ def compare_norm(c):
 
 def parse_bindings(raw: DataFrame) -> DataFrame:
     """(qid, query_idx, json) → one row per (binding, var) with the binding's
-    position materialized (the dedup is order-dependent)."""
+    position materialized (the dedup is order-dependent). Both explodes are
+    outer: an inner explode lets the optimizer push a `size(...) > 0`
+    filter down to the scan, which parses every document a second time;
+    `normalized_values` drops the null rows instead."""
     parsed = raw.withColumn("__doc", F.from_json(F.col("json"), SPARQL_JSON_SCHEMA))
     return (
         parsed.select(
@@ -72,7 +76,7 @@ def parse_bindings(raw: DataFrame) -> DataFrame:
         )
         .select(
             "qid", "query_idx", "vars", "bind_ord",
-            F.explode("vars").alias("var"),
+            F.explode_outer("vars").alias("var"),
             F.col("bind"),
         )
         .withColumn("value", F.element_at(F.element_at("bind", F.col("var")), "value"))
@@ -83,33 +87,24 @@ def parse_bindings(raw: DataFrame) -> DataFrame:
 def normalized_values(bindings: DataFrame) -> DataFrame:
     """A6 — per (qid, var): ordered, compare-normalized dedup of the WDQS
     cartesian product; keeps the first-seen cleaned form of each normal
-    class. Returns (qid, var, values array<string>) including empty arrays
-    for vars that bound nothing."""
-    vals = (
-        bindings.filter(F.col("value").isNotNull())
-        .withColumn("cleaned", clean_value("value"))
-        .withColumn("norm", compare_norm("cleaned"))
+    class. Returns (qid, var, values array<string>), values [] for a var
+    whose bindings all lack a value. A doc with ZERO bindings contributes
+    no vars at all (result_tojson only materializes keys while scanning
+    bindings) — hence the filter. Both aggregations group by keys that
+    start with qid, so input partitioned by qid needs no other exchange."""
+    cleaned = clean_value("value")
+    first_seen = (
+        bindings.filter(F.col("bind_ord").isNotNull()
+                        & F.col("var").isNotNull())
+        .groupBy("qid", "var", compare_norm(cleaned).alias("norm"))
+        .agg(F.min(F.struct("bind_ord", cleaned.alias("cleaned"))).alias("s"))
     )
-    w = Window.partitionBy("qid", "var", "norm").orderBy("bind_ord")
-    first_seen = vals.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-    collected = (
-        first_seen.groupBy("qid", "var")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("bind_ord", "cleaned"))),
-                lambda s: s["cleaned"],
-            ).alias("values")
-        )
-    )
-    # a doc with ZERO bindings contributes no vars at all (result_tojson
-    # only materializes keys while scanning bindings) — hence the filter
-    universe = (
-        bindings.filter(F.col("bind_ord").isNotNull())
-        .select("qid", "var").distinct()
-    )
-    return (
-        universe.join(collected, ["qid", "var"], "left")
-        .withColumn("values", F.coalesce("values", F.array().cast("array<string>")))
+    return first_seen.groupBy("qid", "var").agg(
+        F.transform(
+            F.array_sort(F.collect_list(
+                F.when(F.col("norm").isNotNull(), F.col("s")))),
+            lambda s: s["cleaned"],
+        ).alias("values")
     )
 
 
@@ -125,8 +120,10 @@ def enrichment_store(values: DataFrame) -> DataFrame:
 
 
 def enrich_offline(raw_results: DataFrame) -> DataFrame:
-    """Full offline stage `-s` from recorded SPARQL-JSON documents."""
-    return enrichment_store(normalized_values(parse_bindings(raw_results)))
+    """Full offline stage `-s` from recorded SPARQL-JSON documents: one
+    exchange (the documents by qid), one parse, three aggregations."""
+    return enrichment_store(normalized_values(
+        parse_bindings(raw_results.repartition("qid"))))
 
 
 def sparql_xml_to_json(xml_text: str) -> dict:

@@ -7,8 +7,10 @@ script/sparql.py:19-92 (SPARQLWrapper against query.wikidata.org, JSON with
 XML fallback).
 
 Spark shape (SURVEY.md §2.10) of live resolution (`resolve_live`):
-- the ladders are computed once; one query annotates each distinct ladder
-  with the cache state of every rung (broadcast cache join);
+- the ladders are computed once, by `plans.resolve.attach_candidates`'s
+  per-catalogue kernel, and checkpointed; one query annotates each
+  distinct ladder with the cache state of every rung (broadcast cache
+  join);
 - ONE `mapInPandas` task runs the whole wave loop over those ladders. A
   wave's fetch set depends on what every ladder found in earlier waves, and
   fetching each query once needs dedup across the corpus, so the loop has
@@ -20,7 +22,9 @@ Spark shape (SURVEY.md §2.10) of live resolution (`resolve_live`):
   the rate limiter;
 - the task emits only the fetched rows, which are merged into the cache
   table (sources/cache.upsert) once, so a re-run touches the network only
-  for misses (the reference's resume semantics, P1, with no log files).
+  for misses (the reference's resume semantics, P1, with no log files);
+- `plans.resolve.assign` then picks each row's answer over the merged
+  cache in one pass over the checkpointed ladders, as offline `-i` does.
 
 Offline by default: tests and the driver environment have no network;
 `fetch_fn` is injectable, and `offline_fetcher` replays from a cache

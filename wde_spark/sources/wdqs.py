@@ -178,8 +178,8 @@ def enrich_live(qids: DataFrame, fetch_fn: FetchFn,
     todo = qids.select("qid").distinct()
     if done is not None:
         todo = todo.join(done.select("qid"), "qid", "left_anti")
-    # enrich_offline scans its input twice (values and var universe):
-    # materialize the fetched documents once so each query is sent once
+    # materialized, so a second action on the store (a count, then a
+    # write) reads the fetched documents instead of sending the queries again
     raw = fetch_enrichment(todo, fetch_fn, n_workers=n_workers) \
         .localCheckpoint(eager=True)
     return enrich_offline(raw)
